@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .shapes import shape_col
+
 # ---------------------------------------------------------------------------
 # shared derivations (valid in BOTH Spark SQL and DuckDB)
 # ---------------------------------------------------------------------------
@@ -264,13 +266,8 @@ def customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rect_shape_struct():
     """shape struct column for a rect (minx/maxx/miny/maxy columns)."""
-    return F.expr(
-        "named_struct('kind', cast(2 as tinyint),"
-        " 'x', cast(null as double), 'y', cast(null as double),"
-        " 'radius', cast(null as double),"
-        " 'minx', minx, 'maxx', maxx, 'miny', miny, 'maxy', maxy,"
-        " 'xs', cast(null as array<double>), 'ys', cast(null as array<double>),"
-        " 'ring_offsets', cast(null as array<int>), 'error', cast(null as string))")
+    return shape_col(kind=2, minx=F.col("minx"), maxx=F.col("maxx"),
+                     miny=F.col("miny"), maxy=F.col("maxy"))
 
 
 def nation_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -953,15 +950,6 @@ SELECT vec_id, CAST({_ddb_bucket(8)} AS INT) AS bucket FROM embeddings
 """
 
 
-_RECT_STRUCT_SQL = (
-    "named_struct('kind', cast(2 as tinyint), 'x', cast(null as double),"
-    " 'y', cast(null as double), 'radius', cast(null as double),"
-    " 'minx', minx, 'maxx', maxx, 'miny', miny, 'maxy', maxy,"
-    " 'xs', cast(null as array<double>), 'ys', cast(null as array<double>),"
-    " 'ring_offsets', cast(null as array<int>),"
-    " 'error', cast(null as string)) AS shape")
-
-
 def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster->vector zonal stats over the synthetic tile set (decode
     stub, real Spark plumbing). Tagged union of BOTH zone families —
@@ -974,9 +962,10 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     refs = spark.range(0, 64).selectExpr(
         "concat('raster://tile/', cast(id as string)) AS media_ref")
     pixels = decode_raster_tiles(refs)
-    rects = nation_plain_rects(spark, sf_dir).selectExpr(
-        "'rect' AS zone_kind", "cast(rect_id as bigint) AS zone_id",
-        _RECT_STRUCT_SQL)
+    rects = nation_plain_rects(spark, sf_dir).select(
+        F.lit("rect").alias("zone_kind"),
+        F.col("rect_id").cast("bigint").alias("zone_id"),
+        _rect_shape_struct().alias("shape"))
     polys = supplier_triangles(spark, sf_dir).selectExpr(
         "'poly' AS zone_kind", "cast(poly_id as bigint) AS zone_id",
         "shape")
@@ -1152,12 +1141,9 @@ def q_st_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = supplier_rects(spark, sf_dir)
     c = supplier_circles(spark, sf_dir)
     j = r.join(c, r["srect_id"] == c["circle_id"], "inner")
-    nul_d = F.lit(None).cast("double")
-    nul_a = F.lit(None).cast("array<double>")
-    ctr = SF.st_center(
-        F.lit(2).cast("tinyint"), nul_d, nul_d,
-        F.col("sminx"), F.col("smaxx"), F.col("sminy"), F.col("smaxy"),
-        nul_a, nul_a, F.lit(None).cast("array<int>"))
+    ctr = SF.st_center(shape_col(
+        kind=2, minx=F.col("sminx"), maxx=F.col("smaxx"),
+        miny=F.col("sminy"), maxy=F.col("smaxy")))
     return j.select(
         F.col("circle_id").alias("s_suppkey"),
         F.round(SF.st_rect_area_geo(F.col("sminx"), F.col("smaxx"),
@@ -1549,9 +1535,8 @@ def q_polygon_circle_relate(spark: SparkSession, sf_dir: str) -> DataFrame:
     polys = tri.withColumn("shape", SF.st_from_wkt(wkt))
     s = F.col("shape")
     rel = SF.st_relate_polygon_circle(
-        s["xs"], s["ys"], s["ring_offsets"],
-        s["minx"], s["maxx"], s["miny"], s["maxy"],
-        F.col("ccx"), F.col("ccy"), F.col("ccr"))
+        s, shape_col(kind=3, x=F.col("ccx"), y=F.col("ccy"),
+                     radius=F.col("ccr")))
     return polys.select("poly_id", rel.cast("int").alias("rel"))
 
 
@@ -1622,8 +1607,8 @@ def q_polygon_rect_relate(spark: SparkSession, sf_dir: str) -> DataFrame:
     polys = tri.withColumn("shape", SF.st_from_wkt(wkt))
     s = F.col("shape")
     rel = SF.st_relate_polygon_rect(
-        s["xs"], s["ys"], s["ring_offsets"],
-        F.col("rminx"), F.col("rmaxx"), F.col("rminy"), F.col("rmaxy"))
+        s, shape_col(kind=2, minx=F.col("rminx"), maxx=F.col("rmaxx"),
+                     miny=F.col("rminy"), maxy=F.col("rmaxy")))
     return polys.select("poly_id", rel.cast("int").alias("rel"))
 
 
@@ -1774,22 +1759,17 @@ def q_polygon_polygon_relate(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumn("sa", SF.st_from_wkt(F.expr(wkt_of("x1t", "y1t", "x2t", "y2t", "x3t", "y3t"))))
               .withColumn("sb", SF.st_from_wkt(F.expr(wkt_of("u1", "w1", "u2", "w2", "u3", "w3")))))
     a, b = F.col("sa"), F.col("sb")
-    rel = SF.st_relate_polygon_polygon(
-        a["xs"], a["ys"], a["ring_offsets"], b["xs"], b["ys"], b["ring_offsets"])
+    rel = SF.st_relate_polygon_polygon(a, b)
     # GetCenter on polygon A exercises st_center's area-centroid branch
     # (NtsGeometry.cs:200-210); for a triangle it equals the vertex
     # mean, which sits exactly on the k/200 coordinate grid — the
     # 6-decimal round is tie-free on both sides.
-    ctr = SF.st_center(a["kind"], a["x"], a["y"], a["minx"], a["maxx"],
-                       a["miny"], a["maxy"], a["xs"], a["ys"],
-                       a["ring_offsets"])
+    ctr = SF.st_center(a)
     # GetArea(geo ctx) on polygon A: euclid shoelace * filledRatio *
     # geo bbox area (NtsGeometry.cs:184-196). The parser preserves
     # vertex order, so the oracle's explicit 3-term shoelace is
     # bit-identical (the closing edge's cross term is exactly 0).
-    area = SF.st_area(a["kind"], a["radius"], a["minx"], a["maxx"],
-                      a["miny"], a["maxy"], a["xs"], a["ys"],
-                      a["ring_offsets"], geo=True)
+    area = SF.st_area(a, geo=True)
     return parsed.select("poly_id", "v", rel.cast("int").alias("rel"),
                          F.round(ctr.getField("x"), 6).alias("actr_x"),
                          F.round(ctr.getField("y"), 6).alias("actr_y"),
@@ -2156,10 +2136,7 @@ def q_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ', ', cast({_GLX} as string), ' ', cast({_GLY} as string), '))')
             END AS wkt""")
     parsed = src.withColumn("s1", SF.st_from_wkt(F.col("wkt")))
-    s1 = F.col("s1")
-    enc = SF.st_to_binary(s1["kind"], s1["x"], s1["y"], s1["radius"],
-                          s1["minx"], s1["maxx"], s1["miny"], s1["maxy"],
-                          s1["xs"], s1["ys"], s1["ring_offsets"])
+    enc = SF.st_to_binary(F.col("s1"))
     dec = parsed.withColumn("blob", enc).withColumn("s2", SF.st_from_binary(F.col("blob")))
     s2 = F.col("s2")
     return dec.select(
@@ -2701,10 +2678,7 @@ def q_buffer_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumn("sg", SF.st_from_wkt(gw)))
 
     def buf(col):
-        s = F.col(col)
-        return SF.st_buffer(s["kind"], s["x"], s["y"], s["radius"],
-                            s["minx"], s["maxx"], s["miny"], s["maxy"],
-                            s["xs"], s["ys"], s["ring_offsets"], F.col("d"))
+        return SF.st_buffer(F.col(col), F.col("d"))
     out = (sdf.withColumn("br", buf("sr"))
               .withColumn("bp", buf("sp"))
               .withColumn("bc", buf("sc"))
@@ -2737,12 +2711,8 @@ def q_buffer_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
         " 0 10, 0 0))')")
     combos = combos.withColumn("dl2", F.expr("0.4 + dv * 0.17")) \
                    .withColumn("sg2", SF.st_from_wkt(lwj))
-    s2c = F.col("sg2")
-    bg2 = SF.st_buffer(s2c["kind"], s2c["x"], s2c["y"], s2c["radius"],
-                       s2c["minx"], s2c["maxx"], s2c["miny"], s2c["maxy"],
-                       s2c["xs"], s2c["ys"], s2c["ring_offsets"],
-                       F.col("dl2"))
-    combos = combos.withColumn("bg2", bg2)
+    combos = combos.withColumn("bg2", SF.st_buffer(F.col("sg2"),
+                                                   F.col("dl2")))
     dl2, sq2 = F.col("dl2"), 0.7071067811865476
 
     def probe2(px, py):
@@ -2991,17 +2961,8 @@ def _dissolve_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(CASE WHEN n_nationkey % 7 = 0 THEN 40.0 ELSE 0.0 END) AS d")
 
     def rect_struct(x0, y0, x1, y1):
-        nul = lambda t: F.lit(None).cast(t)  # noqa: E731
-        return F.struct(
-            F.lit(2).cast("byte").alias("kind"),
-            nul("double").alias("x"), nul("double").alias("y"),
-            nul("double").alias("radius"),
-            F.expr(x0).alias("minx"), F.expr(x1).alias("maxx"),
-            F.expr(y0).alias("miny"), F.expr(y1).alias("maxy"),
-            nul("array<double>").alias("xs"),
-            nul("array<double>").alias("ys"),
-            nul("array<int>").alias("ring_offsets"),
-            nul("string").alias("error"))
+        return shape_col(kind=2, minx=F.expr(x0), maxx=F.expr(x1),
+                         miny=F.expr(y0), maxy=F.expr(y1))
 
     rects = base.select("rid", F.explode(F.array(
         rect_struct("bx", "by", "bx + 10.0 + j", "by + 8.0"),
@@ -3013,9 +2974,7 @@ def _dissolve_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = F.col("shape")
     return dis.select(
         "rid",
-        F.round(SF.st_area(s["kind"], s["radius"], s["minx"], s["maxx"],
-                           s["miny"], s["maxy"], s["xs"], s["ys"],
-                           s["ring_offsets"], geo=False), 6).alias("d_area"),
+        F.round(SF.st_area(s, geo=False), 6).alias("d_area"),
         # union output is always a multipolygon record (kind 8, the
         # MULTIPOLYGON merge convention); the structural check is the
         # RING count: 1 for the connected chain, 2 for the multipart
@@ -3159,21 +3118,14 @@ def _boolean_geometry_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         " '))')")
     df = base.withColumn("ba", SF.st_from_wkt(awkt)) \
              .withColumn("bb", SF.st_from_wkt(bwkt))
-    sa, sb = F.col("ba"), F.col("bb")
-    args = [sa["kind"], sa["minx"], sa["maxx"], sa["miny"], sa["maxy"],
-            sa["xs"], sa["ys"], sa["ring_offsets"],
-            sb["kind"], sb["minx"], sb["maxx"], sb["miny"], sb["maxy"],
-            sb["xs"], sb["ys"], sb["ring_offsets"]]
+    args = (F.col("ba"), F.col("bb"))
     df = (df.withColumn("gi", SF.st_intersection(*args))
             .withColumn("gd", SF.st_difference(*args))
             .withColumn("gu", SF.st_union(*args)))
 
     def fam(col, tag):
         s = F.col(col)
-        return [F.round(SF.st_area(s["kind"], s["radius"], s["minx"],
-                                   s["maxx"], s["miny"], s["maxy"],
-                                   s["xs"], s["ys"], s["ring_offsets"],
-                                   geo=False), 6).alias(f"{tag}_area"),
+        return [F.round(SF.st_area(s, geo=False), 6).alias(f"{tag}_area"),
                 (F.size(s["ring_offsets"]) - 1).cast("int")
                 .alias(f"{tag}_rings")]
     return df.select("c_nationkey", *fam("gi", "ig"), *fam("gd", "dg"),

@@ -1,24 +1,43 @@
-"""Columnar st_* surface: shape struct schema + Arrow-batched UDFs.
+"""Columnar st_* surface: Arrow-batched UDFs over the shape struct.
 
 Design rule (BASELINE north_star): geometry math runs in vectorized
-NumPy inside pandas UDFs (Arrow batch transfer), never per-row Python;
-everything relational stays in JVM whole-stage codegen via built-in
+NumPy inside Arrow-batched UDFs, never per-row Python; everything
+relational stays in JVM whole-stage codegen via built-in
 pyspark.sql.functions.
 
-The shape struct mirrors the reference's tagged binary union
-(Io/BinaryCodec.cs:40-57): a kind byte + doubles + vertex arrays, with
-the bbox materialized eagerly (the reference caches bboxes per shape —
-CircleImpl.cs:38-49, NtsGeometry.cs:79-87 — we persist them as columns
-so scans can prune on min/max statistics).
+Every function that reads or writes shapes takes and returns whole
+shape-struct columns (layout and Arrow codec: `spatial4n_spark.shapes`):
+
+    st_from_wkt(text), st_from_legacy(text), st_from_latlon(text),
+    st_from_binary(blob)                     -> shape
+    st_to_wkt(shape), st_to_binary(shape)    -> text / bytes
+    st_buffer(shape, d)                      -> shape
+    st_center(shape)                         -> struct<x, y>
+    st_area(shape, geo=True)                 -> double
+    st_simplify(shape, tolerance)            -> struct<xs, ys, ring_offsets>
+    st_relate_shape_point(shape, px, py)     -> relation code
+    st_relate_polygon_polygon(a, b), st_relate_polygon_rect(a, rect),
+    st_relate_polygon_circle(a, circle)      -> relation code
+    st_intersection(a, b), st_difference(a, b), st_union(a, b),
+    st_sym_difference(a, b)                  -> shape
+    st_shape_intersection_area(a, b), st_difference_area(a, b)
+                                             -> double
+    st_overlay_measure(a, b)                 -> struct<inter, a_area, b_area>
+
+Point, bbox and distance inputs stay plain double columns. Build a
+shape from such columns with `shapes.shape_col`. The same UDFs are
+callable from SQL text after `register_sql_functions(spark)`, e.g.
+`SELECT st_buffer(st_from_wkt(wkt), 2.5) FROM t`.
 """
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (ArrayType, ByteType, DoubleType, IntegerType,
-                               StringType, StructField, StructType)
+from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.types import (ArrayType, ByteType, DoubleType, StringType,
+                               StructField, StructType)
 
 from ..kernels import geohash as _gh
 from ..kernels import relation as _rel
@@ -28,30 +47,33 @@ from ..kernels.distance import geo_distance_deg as _geo_dist
 from ..kernels.relate_circle import relate_circle_rect as _relate_circle_rect
 from ..kernels.relate_rect import relate_rect_point as _relate_rect_point
 from ..kernels.relate_rect import relate_rect_rect as _relate_rect_rect
-
-SHAPE_FIELDS = [
-    StructField("kind", ByteType()),
-    StructField("x", DoubleType()),
-    StructField("y", DoubleType()),
-    StructField("radius", DoubleType()),
-    StructField("minx", DoubleType()),
-    StructField("maxx", DoubleType()),
-    StructField("miny", DoubleType()),
-    StructField("maxy", DoubleType()),
-    StructField("xs", ArrayType(DoubleType())),
-    StructField("ys", ArrayType(DoubleType())),
-    StructField("ring_offsets", ArrayType(IntegerType())),
-    StructField("error", StringType()),
-]
-SHAPE_SCHEMA = StructType(SHAPE_FIELDS)
-
-_EMPTY_ROW = dict(kind=0, x=None, y=None, radius=None, minx=None, maxx=None,
-                  miny=None, maxy=None, xs=None, ys=None, ring_offsets=None)
+from ..shapes import (SHAPE_SCHEMA, VERTEX_SCHEMA, closed_rings_record,
+                      decode, encode, encode_records, rect_pages)
 
 
-@pandas_udf(SHAPE_SCHEMA)
-def _st_from_wkt_default(texts: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame(_wkt.parse_wkt_columns(texts))
+def _f64(arr: pa.Array) -> np.ndarray:
+    """Numeric Arrow input -> float64 NumPy, null as NaN."""
+    return arr.cast(pa.float64()).to_numpy(zero_copy_only=False)
+
+
+def _doubles(v) -> pa.Array:
+    """float64 UDF result; NaN encodes as null (the pandas-UDF rule)."""
+    return pa.array(np.asarray(v, dtype=np.float64), from_pandas=True)
+
+
+def _double_struct(**cols) -> pa.StructArray:
+    return pa.StructArray.from_arrays([_doubles(v) for v in cols.values()],
+                                      names=list(cols))
+
+
+def _parsed(cols: dict) -> pa.StructArray:
+    """Columnar parser output (dict of field arrays) -> shape structs."""
+    return encode(len(cols["kind"]), **cols)
+
+
+@arrow_udf(SHAPE_SCHEMA)
+def _st_from_wkt_default(texts: pa.Array) -> pa.Array:
+    return _parsed(_wkt.parse_wkt_columns(texts.to_pandas()))
 
 
 _WKT_UDF_CACHE = {("width180", "error", True): _st_from_wkt_default}
@@ -74,7 +96,7 @@ def st_from_wkt(texts, dateline_rule: str = "width180",
     {none, error, repairConvexHull, repairBuffer0} mirror
     NtsSpatialContextFactory.datelineRule/validationRule (defaults
     Width180/Error, NtsSpatialContextFactory.cs:73-75); configured
-    variants are cached pandas UDFs with the rules bound in the closure.
+    variants are cached Arrow UDFs with the rules bound in the closure.
 
     parser="ntsReader" selects the alt reader
     (NtsWKTReaderShapeParser.cs — ISO-only grammar, per-vertex lon
@@ -108,16 +130,17 @@ def st_from_wkt(texts, dateline_rule: str = "width180",
         if parser == "ntsReader":
             nwl = norm_wrap_longitude
 
-            @pandas_udf(SHAPE_SCHEMA)
-            def _configured(t: pd.Series) -> pd.DataFrame:
-                return pd.DataFrame(_wkt.parse_ntsreader_columns(
-                    t, geo, dateline_rule, validation_rule, snap, amo,
-                    norm_wrap_longitude=nwl))
+            @arrow_udf(SHAPE_SCHEMA)
+            def _configured(t: pa.Array) -> pa.Array:
+                return _parsed(_wkt.parse_ntsreader_columns(
+                    t.to_pandas(), geo, dateline_rule, validation_rule,
+                    snap, amo, norm_wrap_longitude=nwl))
         else:
-            @pandas_udf(SHAPE_SCHEMA)
-            def _configured(t: pd.Series) -> pd.DataFrame:
-                return pd.DataFrame(_wkt.parse_wkt_columns(
-                    t, geo, dateline_rule, validation_rule, snap, amo))
+            @arrow_udf(SHAPE_SCHEMA)
+            def _configured(t: pa.Array) -> pa.Array:
+                return _parsed(_wkt.parse_wkt_columns(
+                    t.to_pandas(), geo, dateline_rule, validation_rule,
+                    snap, amo))
 
         udf = _WKT_UDF_CACHE[key] = _configured
     return udf(texts)
@@ -268,12 +291,9 @@ def st_relate_circle_rect(cx: pd.Series, cy: pd.Series, r: pd.Series,
         minx.to_numpy(), maxx.to_numpy(), miny.to_numpy(), maxy.to_numpy(), geo=True))
 
 
-@pandas_udf(ByteType())
-def _st_relate_shape_point_udf(kind: pd.Series, x: pd.Series, y: pd.Series,
-                               radius: pd.Series, minx: pd.Series, maxx: pd.Series,
-                               miny: pd.Series, maxy: pd.Series,
-                               xs: pd.Series, ys: pd.Series, ring_offsets: pd.Series,
-                               px: pd.Series, py: pd.Series) -> pd.Series:
+@arrow_udf(ByteType())
+def st_relate_shape_point(shape: pa.Array, px: pa.Array,
+                          py: pa.Array) -> pa.Array:
     """shape.Relate(point) dispatch by kind — the join refine kernel.
 
     Kernel selection happens per (kind-group), not per row: rows are
@@ -283,90 +303,60 @@ def _st_relate_shape_point_udf(kind: pd.Series, x: pd.Series, y: pd.Series,
     from ..kernels.relate_circle import relate_circle_point
     from ..kernels.relate_line import linestring_contains_point
 
-    n = len(kind)
-    out = np.full(n, _rel.DISJOINT, dtype=np.int8)
-    kd = kind.to_numpy()
-    pxv = px.to_numpy(dtype=np.float64)
-    pyv = py.to_numpy(dtype=np.float64)
+    s = decode(shape)
+    out = np.full(len(s), _rel.DISJOINT, dtype=np.int8)
+    kd = s.kind
+    pxv = _f64(px)
+    pyv = _f64(py)
 
     m = kd == _wkt.KIND_RECT
     if m.any():
-        out[m] = _relate_rect_point(minx.to_numpy()[m], maxx.to_numpy()[m],
-                                    miny.to_numpy()[m], maxy.to_numpy()[m],
-                                    pxv[m], pyv[m], geo=True)
+        out[m] = _relate_rect_point(s.minx[m], s.maxx[m], s.miny[m],
+                                    s.maxy[m], pxv[m], pyv[m], geo=True)
     m = kd == _wkt.KIND_CIRCLE
     if m.any():
-        out[m] = relate_circle_point(x.to_numpy()[m], y.to_numpy()[m],
-                                     radius.to_numpy()[m], pxv[m], pyv[m], geo=True)
+        out[m] = relate_circle_point(s.x[m], s.y[m], s.radius[m],
+                                     pxv[m], pyv[m], geo=True)
     m = kd == _wkt.KIND_POINT
     if m.any():
-        same = (x.to_numpy()[m] == pxv[m]) & (y.to_numpy()[m] == pyv[m])
+        same = (s.x[m] == pxv[m]) & (s.y[m] == pyv[m])
         out[m] = np.where(same, _rel.CONTAINS, _rel.DISJOINT)
     m = (kd == _wkt.KIND_POLYGON) | (kd == _wkt.KIND_MULTIPOLYGON)
     if m.any():
         # group rows sharing the same polygon (joins replicate one shape
         # to many candidate points) and PIP each group as one batch.
-        # Key building avoids per-row pandas .iloc (2-5us each — it was
-        # the refine hot spot at >100k pairs/batch): one to_numpy()
-        # materialization, then a plain-python pass over the object
-        # array.
-        idxs = np.nonzero(m)[0]
-        xs_np = xs.to_numpy()
-        ys_np = ys.to_numpy()
-        ro_np = ring_offsets.to_numpy()
-        groups: dict = {}
-        setd = groups.setdefault
-        for i in idxs:
-            # key on the FULL geometry bytes — a heuristic key like
-            # (len, x0, x-1, y0) collides for distinct rings sharing
-            # endpoints (closed rings always have x0 == x-1) and would
-            # silently relate a row against the wrong polygon. tobytes()
-            # is ~ns per vertex, negligible next to the PIP kernel.
-            setd((np.asarray(xs_np[i]).tobytes(),
-                  np.asarray(ys_np[i]).tobytes(),
-                  np.asarray(ro_np[i]).tobytes()), []).append(i)
-        for rows in groups.values():
-            i0 = rows[0]
-            vx = np.asarray(xs_np[i0], dtype=np.float64)
-            vy = np.asarray(ys_np[i0], dtype=np.float64)
-            ro = np.asarray(ro_np[i0], dtype=np.int64)
-            rows = np.asarray(rows)
+        # Key on the FULL geometry bytes — a heuristic key like
+        # (len, x0, x-1, y0) collides for distinct rings sharing
+        # endpoints (closed rings always have x0 == x-1) and would
+        # silently relate a row against the wrong polygon. tobytes()
+        # is ~ns per vertex, negligible next to the PIP kernel.
+        for rows in _group_by_geometry(s, np.nonzero(m)[0]):
+            vx, vy, ro = s.verts(rows[0])
             hit = points_in_polygon(pxv[rows], pyv[rows], vx, vy, ro)
             out[rows] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
     m = kd == _wkt.KIND_LINESTRING
     if m.any():
         # same per-shape grouping as the polygon branch: joins replicate
         # one line across many candidate points, so batch each line's
-        # points into ONE kernel call instead of a per-row loop.
-        idxs = np.nonzero(m)[0]
-        xs_np = xs.to_numpy()
-        ys_np = ys.to_numpy()
-        rad_np = radius.to_numpy(dtype=np.float64, na_value=0.0)
-        groups: dict = {}
-        setd = groups.setdefault
-        for i in idxs:
-            # full-geometry key (see polygon branch above): two distinct
-            # 2-vertex segments from one hub share (len, x0, x-1, y0) and
-            # a heuristic key would batch them under the first row's line.
-            setd((np.asarray(xs_np[i]).tobytes(),
-                  np.asarray(ys_np[i]).tobytes(), rad_np[i]), []).append(i)
-        for rows in groups.values():
+        # points into ONE kernel call instead of a per-row loop
+        rad = np.where(np.isnan(s.radius), 0.0, s.radius)
+        for rows in _group_by_geometry(s, np.nonzero(m)[0], rad):
             i0 = rows[0]
-            vx = np.asarray(xs_np[i0], dtype=np.float64)
-            vy = np.asarray(ys_np[i0], dtype=np.float64)
-            rows = np.asarray(rows)
-            hit = linestring_contains_point(vx, vy, rad_np[i0],
+            hit = linestring_contains_point(s.xs[i0], s.ys[i0], rad[i0],
                                             pxv[rows], pyv[rows])
             out[rows] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
-    return pd.Series(out)
+    return pa.array(out, type=pa.int8())
 
 
-def st_relate_shape_point(shape_col, px, py):
-    """shape.Relate(point) over a shape-struct column."""
-    s = shape_col
-    return _st_relate_shape_point_udf(
-        s["kind"], s["x"], s["y"], s["radius"], s["minx"], s["maxx"],
-        s["miny"], s["maxy"], s["xs"], s["ys"], s["ring_offsets"], px, py)
+def _group_by_geometry(s, idxs, extra=None) -> list:
+    """Row indices `idxs` grouped by identical vertex arrays (and
+    `extra[i]`), as int arrays in first-seen order."""
+    groups: dict = {}
+    setd = groups.setdefault
+    for i in idxs:
+        key = tuple(None if v is None else v.tobytes() for v in s.verts(i))
+        setd(key if extra is None else (key, extra[i]), []).append(i)
+    return [np.asarray(rows) for rows in groups.values()]
 
 
 def st_relation_name(rel_col):
@@ -378,11 +368,11 @@ def st_relation_name(rel_col):
              .otherwise("NONE"))
 
 
-@pandas_udf(SHAPE_SCHEMA)
-def st_from_legacy(texts: pd.Series) -> pd.DataFrame:
+@arrow_udf(SHAPE_SCHEMA)
+def st_from_legacy(texts: pa.Array) -> pa.Array:
     """Legacy text format -> shape struct ("X Y", "minX minY maxX maxY",
     "Circle(x y d=r)"; LegacyShapeReadWriterFormat.cs:46-96)."""
-    return pd.DataFrame(_wkt.parse_legacy_columns(texts))
+    return _parsed(_wkt.parse_legacy_columns(texts.to_pandas()))
 
 
 @pandas_udf(DoubleType())
@@ -748,70 +738,42 @@ def st_cell_codes_multilevel_col(lat, lon, min_level: int, max_level: int):
                                         range(min_level, max_level + 1))
 
 
-@pandas_udf(ByteType())
-def st_relate_polygon_circle(xs: pd.Series, ys: pd.Series,
-                             ring_offsets: pd.Series,
-                             minx: pd.Series, maxx: pd.Series,
-                             miny: pd.Series, maxy: pd.Series,
-                             cx: pd.Series, cy: pd.Series,
-                             r: pd.Series) -> pd.Series:
-    """Polygon.Relate(circle) vertex-counting (NtsGeometry.cs:248-275)."""
+@arrow_udf(ByteType())
+def st_relate_polygon_circle(polygon: pa.Array, circle: pa.Array) -> pa.Array:
+    """Polygon.Relate(circle) vertex-counting (NtsGeometry.cs:248-275);
+    the circle is read from its x, y and radius fields."""
     from ..kernels.pip import relate_polygon_circle
-    out = np.empty(len(xs), dtype=np.int8)
-    for i in range(len(xs)):
-        ro = ring_offsets.iloc[i]
+    a, c = decode(polygon), decode(circle)
+    out = np.empty(len(a), dtype=np.int8)
+    for i in range(len(a)):
         out[i] = relate_polygon_circle(
-            np.asarray(xs.iloc[i]), np.asarray(ys.iloc[i]),
-            np.asarray(ro) if ro is not None else None,
-            float(minx.iloc[i]), float(maxx.iloc[i]),
-            float(miny.iloc[i]), float(maxy.iloc[i]),
-            float(cx.iloc[i]), float(cy.iloc[i]), float(r.iloc[i]))
-    return pd.Series(out)
+            *a.verts(i), a.minx[i], a.maxx[i], a.miny[i], a.maxy[i],
+            c.x[i], c.y[i], c.radius[i])
+    return pa.array(out, type=pa.int8())
 
 
-@pandas_udf(ByteType())
-def st_relate_polygon_rect(xs: pd.Series, ys: pd.Series,
-                           ring_offsets: pd.Series,
-                           minx: pd.Series, maxx: pd.Series,
-                           miny: pd.Series, maxy: pd.Series) -> pd.Series:
+@arrow_udf(ByteType())
+def st_relate_polygon_rect(polygon: pa.Array, rect: pa.Array) -> pa.Array:
     """Polygon.Relate(rect), COVERS semantics (NtsGeometry.cs:303-314
-    via from-scratch primitives)."""
+    via from-scratch primitives); the rect is read from its bbox."""
     from ..kernels.pip import relate_polygon_rect
-    out = np.empty(len(xs), dtype=np.int8)
-    for i in range(len(xs)):
-        ro = ring_offsets.iloc[i]
-        out[i] = relate_polygon_rect(
-            np.asarray(xs.iloc[i]), np.asarray(ys.iloc[i]),
-            np.asarray(ro) if ro is not None else None,
-            float(minx.iloc[i]), float(maxx.iloc[i]),
-            float(miny.iloc[i]), float(maxy.iloc[i]))
-    return pd.Series(out)
+    a, r = decode(polygon), decode(rect)
+    out = np.empty(len(a), dtype=np.int8)
+    for i in range(len(a)):
+        out[i] = relate_polygon_rect(*a.verts(i), r.minx[i], r.maxx[i],
+                                     r.miny[i], r.maxy[i])
+    return pa.array(out, type=pa.int8())
 
 
-@pandas_udf(SHAPE_SCHEMA)
-def st_from_latlon(texts: pd.Series) -> pd.DataFrame:
+@arrow_udf(SHAPE_SCHEMA)
+def st_from_latlon(texts: pa.Array) -> pa.Array:
     """'lat, lon' string -> point shape struct (ParseUtils.cs:162-191);
     range-invalid rows get an error instead of a shape."""
-    recs, errs = _wkt.parse_latlon_batch(texts.tolist())
-    rows = []
-    for rec, err in zip(recs, errs):
-        if rec is None:
-            rows.append(dict(_EMPTY_ROW, error=err))
-        else:
-            rows.append({k: rec.get(k) for k in
-                         ("kind", "x", "y", "radius", "minx", "maxx",
-                          "miny", "maxy")}
-                        | {"xs": None, "ys": None, "ring_offsets": None,
-                           "error": None})
-    return pd.DataFrame(rows)
+    return encode_records(*_wkt.parse_latlon_batch(texts.to_pylist()))
 
 
-@pandas_udf(SHAPE_SCHEMA)
-def st_buffer(kind: pd.Series, x: pd.Series, y: pd.Series,
-              radius: pd.Series, minx: pd.Series, maxx: pd.Series,
-              miny: pd.Series, maxy: pd.Series,
-              xs: pd.Series, ys: pd.Series, ring_offsets: pd.Series,
-              dist: pd.Series) -> pd.DataFrame:
+@arrow_udf(SHAPE_SCHEMA)
+def st_buffer(shape: pa.Array, dist: pa.Array) -> pa.Array:
     """GetBuffered(distance) for point/circle/rect/line/polygon structs.
 
     Point -> circle(distance) (PointImpl.cs:67-70); circle -> radius
@@ -827,53 +789,47 @@ def st_buffer(kind: pd.Series, x: pd.Series, y: pd.Series,
     for convex rings, documented hull/erode approximations otherwise —
     see kernels.buffer.buffer_polygon. The struct bbox is set
     ANALYTICALLY (vertex bbox +- d, world-clamped), not from the
-    discretized arc vertices. Other kinds -> error row."""
+    discretized arc vertices. Shrinking a rect past collapse on either
+    axis, or a circle below radius 0, gives an error row (MakeRectangle
+    / MakeCircle throw). Other kinds -> error row."""
     from ..kernels.buffer import buffer_polygon, buffer_rect
     from ..kernels.circle_box import geo_circle_bbox, lon_degrees_at_lat
-    n = len(kind)
-    k = kind.to_numpy(dtype=np.int8, na_value=0)
-    d = dist.to_numpy(dtype=np.float64, na_value=np.nan)
-    out = {f.name: np.full(n, np.nan) for f in SHAPE_FIELDS
-           if f.name not in ("kind", "xs", "ys", "ring_offsets", "error")}
+    s = decode(shape)
+    n = len(s)
+    k = s.kind
+    d = _f64(dist)
+    out = {name: np.full(n, np.nan) for name in
+           ("x", "y", "radius", "minx", "maxx", "miny", "maxy")}
     okind = np.zeros(n, dtype=np.int8)
     err = np.full(n, None, dtype=object)
 
-    pt = k == 1
-    if pt.any():
-        cx = x.to_numpy(dtype=np.float64, na_value=np.nan)
-        cy = y.to_numpy(dtype=np.float64, na_value=np.nan)
-        r = np.minimum(d, 180.0)
-        bad_r = pt & (r < 0.0)  # MakeCircle throws on negative radius
-        pt = pt & ~bad_r
+    for m, r in ((k == 1, np.minimum(d, 180.0)),
+                 (k == 3, np.minimum(s.radius + d, 180.0))):
+        if not m.any():
+            continue
+        bad_r = m & (r < 0.0)  # MakeCircle throws on negative radius
+        m = m & ~bad_r
         err[bad_r] = "st_buffer: negative circle radius (InvalidShape)"
-        bminx, bmaxx, bminy, bmaxy = geo_circle_bbox(cx, cy, r)
-        for nm, v in (("x", cx), ("y", cy), ("radius", r), ("minx", bminx),
-                      ("maxx", bmaxx), ("miny", bminy), ("maxy", bmaxy)):
-            out[nm][pt] = v[pt]
-        okind[pt] = 3
-    ci = k == 3
-    if ci.any():
-        cx = x.to_numpy(dtype=np.float64, na_value=np.nan)
-        cy = y.to_numpy(dtype=np.float64, na_value=np.nan)
-        r = np.minimum(radius.to_numpy(dtype=np.float64, na_value=np.nan) + d, 180.0)
-        bad_r = ci & (r < 0.0)  # MakeCircle throws on negative radius
-        ci = ci & ~bad_r
-        err[bad_r] = "st_buffer: negative circle radius (InvalidShape)"
-        bminx, bmaxx, bminy, bmaxy = geo_circle_bbox(cx, cy, r)
-        for nm, v in (("x", cx), ("y", cy), ("radius", r), ("minx", bminx),
-                      ("maxx", bmaxx), ("miny", bminy), ("maxy", bmaxy)):
-            out[nm][ci] = v[ci]
-        okind[ci] = 3
+        bminx, bmaxx, bminy, bmaxy = geo_circle_bbox(s.x, s.y, r)
+        for nm, v in (("x", s.x), ("y", s.y), ("radius", r),
+                      ("minx", bminx), ("maxx", bmaxx),
+                      ("miny", bminy), ("maxy", bmaxy)):
+            out[nm][m] = v[m]
+        okind[m] = 3
     rc = k == 2
     if rc.any():
-        bminx, bmaxx, bminy, bmaxy = buffer_rect(
-            minx.to_numpy(dtype=np.float64, na_value=np.nan),
-            maxx.to_numpy(dtype=np.float64, na_value=np.nan),
-            miny.to_numpy(dtype=np.float64, na_value=np.nan),
-            maxy.to_numpy(dtype=np.float64, na_value=np.nan), d)
-        bad_y = rc & (bminy > bmaxy)  # MakeRectangle throws (shrink
-        rc = rc & ~bad_y              # past collapse, negative d)
+        bminx, bmaxx, bminy, bmaxy = buffer_rect(s.minx, s.maxx, s.miny,
+                                                 s.maxy, d)
+        # MakeRectangle throws when a shrink (d < 0) collapses an axis:
+        # Y directly; X when the dateline-aware width grows instead of
+        # shrinking (a collapsed plain rect reads as a near-world
+        # dateline-crossing one)
+        bad_y = rc & (bminy > bmaxy)
+        bad_x = rc & ~bad_y & (d < 0.0) & (
+            _lon_width(bminx, bmaxx) > _lon_width(s.minx, s.maxx))
         err[bad_y] = "st_buffer: maxY must be >= minY (InvalidShape)"
+        err[bad_x] = "st_buffer: rect width collapsed (InvalidShape)"
+        rc = rc & ~bad_y & ~bad_x
         for nm, v in (("minx", bminx), ("maxx", bmaxx),
                       ("miny", bminy), ("maxy", bmaxy)):
             out[nm][rc] = v[rc]
@@ -881,97 +837,75 @@ def st_buffer(kind: pd.Series, x: pd.Series, y: pd.Series,
     oxs: list = [None] * n
     oys: list = [None] * n
     ln = k == 4
-    if ln.any():
-        r0 = radius.to_numpy(dtype=np.float64, na_value=np.nan)
-        for i in np.nonzero(ln)[0]:
-            if xs.iloc[i] is None or ys.iloc[i] is None:
-                err[i] = "st_buffer: line without vertex arrays"
-                continue
-            vx = np.asarray(xs.iloc[i], dtype=np.float64)
-            vy = np.asarray(ys.iloc[i], dtype=np.float64)
-            if vx.size == 0:
-                err[i] = "st_buffer: empty linestring"
-                continue
-            nb = (0.0 if np.isnan(r0[i]) else r0[i]) + d[i]
-            dl = float(lon_degrees_at_lat(np.abs(vy).max(), nb))
-            out["radius"][i] = nb
-            out["minx"][i] = max(-180.0, vx.min() - dl)
-            out["maxx"][i] = min(180.0, vx.max() + dl)
-            out["miny"][i] = max(-90.0, vy.min() - nb)
-            out["maxy"][i] = min(90.0, vy.max() + nb)
-            oxs[i] = vx.tolist()
-            oys[i] = vy.tolist()
-            okind[i] = 4
+    for i in np.nonzero(ln)[0]:
+        vx, vy = s.xs[i], s.ys[i]
+        if vx is None or vy is None:
+            err[i] = "st_buffer: line without vertex arrays"
+            continue
+        if vx.size == 0:
+            err[i] = "st_buffer: empty linestring"
+            continue
+        nb = (0.0 if np.isnan(s.radius[i]) else s.radius[i]) + d[i]
+        dl = float(lon_degrees_at_lat(np.abs(vy).max(), nb))
+        out["radius"][i] = nb
+        out["minx"][i] = max(-180.0, vx.min() - dl)
+        out["maxx"][i] = min(180.0, vx.max() + dl)
+        out["miny"][i] = max(-90.0, vy.min() - nb)
+        out["maxy"][i] = min(90.0, vy.max() + nb)
+        oxs[i] = vx
+        oys[i] = vy
+        okind[i] = 4
     oro: list = [None] * n
     pg = (k == 7) | (k == 8)
-    if pg.any():
-        kk = k  # original kinds, for pass-through of 7 vs 8
-        for i in np.nonzero(pg)[0]:
-            if xs.iloc[i] is None or ys.iloc[i] is None:
-                err[i] = "st_buffer: polygon without vertex arrays"
-                continue
-            vx = np.asarray(xs.iloc[i], dtype=np.float64)
-            vy = np.asarray(ys.iloc[i], dtype=np.float64)
-            ro = (None if ring_offsets.iloc[i] is None
-                  else np.asarray(ring_offsets.iloc[i], dtype=np.int64))
-            try:
-                bx, by, boff, _ = buffer_polygon(vx, vy, ro, d[i])
-            except ValueError as e:
-                err[i] = f"st_buffer: {e}"
-                continue
-            if len(bx) == 0:
-                okind[i] = 0  # fully eroded -> EMPTY (NTS empty result)
-                continue
-            if d[i] >= 0.0:
-                # analytic: the buffer touches vertex bbox +- d exactly
-                out["minx"][i] = max(-180.0, vx.min() - d[i])
-                out["maxx"][i] = min(180.0, vx.max() + d[i])
-                out["miny"][i] = max(-90.0, vy.min() - d[i])
-                out["maxy"][i] = min(90.0, vy.max() + d[i])
-            else:
-                # erosion: extremes live on output vertices (offset
-                # segments; arcs are concave toward the region)
-                out["minx"][i] = bx.min()
-                out["maxx"][i] = bx.max()
-                out["miny"][i] = by.min()
-                out["maxy"][i] = by.max()
-            oxs[i] = bx.tolist()
-            oys[i] = by.tolist()
-            oro[i] = list(boff)
-            okind[i] = kk[i]
-    # original kind masks (pt/ci/rc exclude invalid-result rows that
-    # already carry their own error): unsupported = no known kind
-    bad = ~((k == 1) | (k == 3) | (k == 2) | ln | pg)
-    if bad.any():
-        err[bad] = "st_buffer: unsupported shape kind"
-    cols = {"kind": okind}
-    for f in SHAPE_FIELDS:
-        if f.name == "kind":
+    for i in np.nonzero(pg)[0]:
+        vx, vy, ro = s.verts(i)
+        if vx is None or vy is None:
+            err[i] = "st_buffer: polygon without vertex arrays"
             continue
-        if f.name == "xs":
-            cols[f.name] = oxs
-        elif f.name == "ys":
-            cols[f.name] = oys
-        elif f.name == "ring_offsets":
-            cols[f.name] = oro
-        elif f.name == "error":
-            cols[f.name] = err
+        try:
+            bx, by, boff, _ = buffer_polygon(vx, vy, ro, d[i])
+        except ValueError as e:
+            err[i] = f"st_buffer: {e}"
+            continue
+        if len(bx) == 0:
+            continue  # fully eroded -> EMPTY (NTS empty result)
+        if d[i] >= 0.0:
+            # analytic: the buffer touches vertex bbox +- d exactly
+            out["minx"][i] = max(-180.0, vx.min() - d[i])
+            out["maxx"][i] = min(180.0, vx.max() + d[i])
+            out["miny"][i] = max(-90.0, vy.min() - d[i])
+            out["maxy"][i] = min(90.0, vy.max() + d[i])
         else:
-            v = out[f.name]
-            cols[f.name] = np.where(np.isnan(v), None, v)
-    return pd.DataFrame(cols)
+            # erosion: extremes live on output vertices (offset
+            # segments; arcs are concave toward the region)
+            out["minx"][i] = bx.min()
+            out["maxx"][i] = bx.max()
+            out["miny"][i] = by.min()
+            out["maxy"][i] = by.max()
+        oxs[i] = bx
+        oys[i] = by
+        oro[i] = boff
+        okind[i] = k[i]
+    # original kind masks (invalid-result rows already carry their own
+    # error): unsupported = no known kind
+    bad = ~((k == 1) | (k == 3) | (k == 2) | ln | pg)
+    err[bad] = "st_buffer: unsupported shape kind"
+    return encode(n, kind=okind, xs=oxs, ys=oys, ring_offsets=oro,
+                  error=err, **out)
+
+
+def _lon_width(minx, maxx):
+    """Dateline-aware longitude extent of a rect (minx > maxx wraps)."""
+    w = maxx - minx
+    return np.where(w < 0.0, w + 360.0, w)
 
 
 _CENTER_SCHEMA = StructType([StructField("x", DoubleType()),
                              StructField("y", DoubleType())])
 
 
-@pandas_udf(_CENTER_SCHEMA)
-def st_center(kind: pd.Series, x: pd.Series, y: pd.Series,
-              minx: pd.Series, maxx: pd.Series,
-              miny: pd.Series, maxy: pd.Series,
-              xs: pd.Series, ys: pd.Series,
-              ring_offsets: pd.Series) -> pd.DataFrame:
+@arrow_udf(_CENTER_SCHEMA)
+def st_center(shape: pa.Array) -> pa.Array:
     """GetCenter for shape structs.
 
     point/circle -> the point itself (CircleImpl.cs:62); rect and the
@@ -982,51 +916,24 @@ def st_center(kind: pd.Series, x: pd.Series, y: pd.Series,
     puntal degenerate fallback (NtsGeometry.cs:200-210). Empty ->
     null/null (the reference's (nan, nan) point)."""
     from ..kernels.centroid import center_batch
-    cx, cy = center_batch(
-        kind.to_numpy(dtype=np.int8, na_value=0),
-        x.to_numpy(dtype=np.float64, na_value=np.nan),
-        y.to_numpy(dtype=np.float64, na_value=np.nan),
-        minx.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxx.to_numpy(dtype=np.float64, na_value=np.nan),
-        miny.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxy.to_numpy(dtype=np.float64, na_value=np.nan),
-        xs.tolist(), ys.tolist(), ring_offsets.tolist())
-    return pd.DataFrame({"x": np.where(np.isnan(cx), None, cx),
-                         "y": np.where(np.isnan(cy), None, cy)})
+    s = decode(shape)
+    cx, cy = center_batch(s.kind, s.x, s.y, s.minx, s.maxx, s.miny, s.maxy,
+                          s.xs, s.ys, s.ring_offsets)
+    return _double_struct(x=cx, y=cy)
 
 
-@pandas_udf(DoubleType())
-def _st_area_geo(kind: pd.Series, radius: pd.Series,
-                 minx: pd.Series, maxx: pd.Series,
-                 miny: pd.Series, maxy: pd.Series,
-                 xs: pd.Series, ys: pd.Series,
-                 ring_offsets: pd.Series) -> pd.Series:
-    from ..kernels.area import shape_area_batch
-    return pd.Series(shape_area_batch(
-        kind.to_numpy(dtype=np.int8, na_value=0),
-        radius.to_numpy(dtype=np.float64, na_value=np.nan),
-        minx.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxx.to_numpy(dtype=np.float64, na_value=np.nan),
-        miny.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxy.to_numpy(dtype=np.float64, na_value=np.nan),
-        xs.tolist(), ys.tolist(), ring_offsets.tolist(), True))
+def _make_area_udf(geo: bool):
+    @arrow_udf(DoubleType())
+    def _st_area(shape: pa.Array) -> pa.Array:
+        from ..kernels.area import shape_area_batch
+        s = decode(shape)
+        return _doubles(shape_area_batch(
+            s.kind, s.radius, s.minx, s.maxx, s.miny, s.maxy,
+            s.xs, s.ys, s.ring_offsets, geo))
+    return _st_area
 
 
-@pandas_udf(DoubleType())
-def _st_area_euclid(kind: pd.Series, radius: pd.Series,
-                    minx: pd.Series, maxx: pd.Series,
-                    miny: pd.Series, maxy: pd.Series,
-                    xs: pd.Series, ys: pd.Series,
-                    ring_offsets: pd.Series) -> pd.Series:
-    from ..kernels.area import shape_area_batch
-    return pd.Series(shape_area_batch(
-        kind.to_numpy(dtype=np.int8, na_value=0),
-        radius.to_numpy(dtype=np.float64, na_value=np.nan),
-        minx.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxx.to_numpy(dtype=np.float64, na_value=np.nan),
-        miny.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxy.to_numpy(dtype=np.float64, na_value=np.nan),
-        xs.tolist(), ys.tolist(), ring_offsets.tolist(), False))
+_AREA_UDFS = {geo: _make_area_udf(geo) for geo in (True, False)}
 
 
 def st_has_area_col(shape):
@@ -1056,8 +963,7 @@ def st_is_empty_col(shape):
     return shape["kind"] == 0
 
 
-def st_area(kind, radius, minx, maxx, miny, maxy, xs, ys, ring_offsets,
-            geo: bool = True):
+def st_area(shape, geo: bool = True):
     """GetArea(ctx) for shape structs — geo=True is the spherical
     context, geo=False the Euclidean (ctx=null) branch. Dispatch per
     kind: point 0, rect band/W*H, circle cap/pi r^2, buffered line
@@ -1065,8 +971,7 @@ def st_area(kind, radius, minx, maxx, miny, maxy, xs, ys, ring_offsets,
     scaled by filledRatio * geo bbox area (NtsGeometry.cs:184-196).
     Collection/empty -> null (flat records drop member structure; sum
     member areas with the ShapeCollection cap rule instead)."""
-    f = _st_area_geo if geo else _st_area_euclid
-    return f(kind, radius, minx, maxx, miny, maxy, xs, ys, ring_offsets)
+    return _AREA_UDFS[geo](shape)
 
 
 def rect_center_cols(minx, maxx, miny, maxy):
@@ -1089,108 +994,62 @@ def rect_center_cols(minx, maxx, miny, maxy):
     return cx, cy
 
 
-@pandas_udf(ByteType())
-def st_relate_polygon_polygon(axs: pd.Series, ays: pd.Series,
-                              aro: pd.Series,
-                              bxs: pd.Series, bys: pd.Series,
-                              bro: pd.Series) -> pd.Series:
+@arrow_udf(ByteType())
+def st_relate_polygon_polygon(a: pa.Array, b: pa.Array) -> pa.Array:
     """A.Relate(B) for two (multi)polygons, COVERS semantics
     (NtsGeometry.cs:283-314 DE-9IM -> SpatialRelation mapping,
     exact split-probe covers test in kernels.pip)."""
     from ..kernels.pip import relate_polygon_polygon
-    out = np.empty(len(axs), dtype=np.int8)
-    for i in range(len(axs)):
-        ar = aro.iloc[i]
-        br = bro.iloc[i]
-        out[i] = relate_polygon_polygon(
-            np.asarray(axs.iloc[i]), np.asarray(ays.iloc[i]),
-            np.asarray(ar) if ar is not None else None,
-            np.asarray(bxs.iloc[i]), np.asarray(bys.iloc[i]),
-            np.asarray(br) if br is not None else None)
-    return pd.Series(out)
+    sa, sb = decode(a), decode(b)
+    out = np.empty(len(sa), dtype=np.int8)
+    for i in range(len(sa)):
+        out[i] = relate_polygon_polygon(*sa.verts(i), *sb.verts(i))
+    return pa.array(out, type=pa.int8())
 
 
-@pandas_udf(DoubleType())
-def st_intersection_area(axs: pd.Series, ays: pd.Series, aro: pd.Series,
-                         bxs: pd.Series, bys: pd.Series,
-                         bro: pd.Series) -> pd.Series:
-    """Exact planar area (deg^2) of A ∩ B for even-odd (multi)polygon
-    pairs — the overlay-join refine (kernels/overlay.py: Green's
-    theorem over boundary sub-segments; robust to holes, multiparts,
-    shared edges and A == B, no degenerate bailout)."""
-    from ..kernels.overlay import intersection_area
-    out = np.empty(len(axs), dtype=np.float64)
-    for i in range(len(axs)):
-        ar = aro.iloc[i]
-        br = bro.iloc[i]
-        out[i] = intersection_area(
-            np.asarray(axs.iloc[i]), np.asarray(ays.iloc[i]),
-            np.asarray(ar) if ar is not None else None,
-            np.asarray(bxs.iloc[i]), np.asarray(bys.iloc[i]),
-            np.asarray(br) if br is not None else None)
-    return pd.Series(out)
-
-
-def _shape_area_pages(kind, minx, maxx, miny, maxy, xs, ys, ro):
-    """Shape -> list of planar (xs, ys, ring_offsets) pages for the
+def _area_pages(s, i):
+    """Row i -> list of planar (xs, ys, ring_offsets) pages for the
     overlay area kernel. Rects unwrap at the dateline into up to two
     pages; polygons arrive already page-split from the WKT parser.
     Returns None for kinds without a polygonal footprint the kernel
     can measure (circle/collection/empty); measure-zero kinds
     (point/line) return []."""
-    import numpy as _np
-    if kind == 2:
-        pages = ([((minx, 180.0), (miny, maxy)), ((-180.0, maxx), (miny, maxy))]
-                 if minx > maxx else [((minx, maxx), (miny, maxy))])
-        out = []
-        for (x0, x1), (y0, y1) in pages:
-            out.append((_np.asarray([x0, x1, x1, x0]),
-                        _np.asarray([y0, y0, y1, y1]), None))
-        return out
-    if kind in (7, 8):
-        return [(_np.asarray(xs), _np.asarray(ys),
-                 _np.asarray(ro) if ro is not None else None)]
-    if kind in (1, 4, 5, 6):
+    k = s.kind[i]
+    if k == 2:
+        return [(rx, ry, None) for rx, ry in
+                rect_pages(s.minx[i], s.maxx[i], s.miny[i], s.maxy[i])]
+    if k in (7, 8):
+        return [s.verts(i)]
+    if k in (1, 4, 5, 6):
         return []
     return None
 
 
-@pandas_udf(DoubleType())
-def st_shape_intersection_area(akind: pd.Series, aminx: pd.Series,
-                               amaxx: pd.Series, aminy: pd.Series,
-                               amaxy: pd.Series, axs: pd.Series,
-                               ays: pd.Series, aro: pd.Series,
-                               bkind: pd.Series, bminx: pd.Series,
-                               bmaxx: pd.Series, bminy: pd.Series,
-                               bmaxy: pd.Series, bxs: pd.Series,
-                               bys: pd.Series, bro: pd.Series) -> pd.Series:
+def _paged_intersection_area(pa_, pb):
+    from ..kernels.overlay import intersection_area
+    if pa_ is None or pb is None:
+        return np.nan
+    return sum(intersection_area(*p, *q)
+               for p in pa_ for q in pb) if pa_ and pb else 0.0
+
+
+@arrow_udf(DoubleType())
+def st_shape_intersection_area(a: pa.Array, b: pa.Array) -> pa.Array:
     """Kind-dispatching intersection area (deg^2) over shape structs:
     rect x rect / rect x polygon / polygon x polygon, dateline-crossing
-    rects paged. Measure-zero kinds (point/line) give 0.0; kinds
-    without a polygonal footprint (circle/collection/empty) give null."""
-    from ..kernels.overlay import intersection_area
-    out = np.full(len(akind), np.nan, dtype=np.float64)
-    for i in range(len(akind)):
-        pa = _shape_area_pages(akind.iloc[i], aminx.iloc[i], amaxx.iloc[i],
-                               aminy.iloc[i], amaxy.iloc[i],
-                               axs.iloc[i], ays.iloc[i], aro.iloc[i])
-        pb = _shape_area_pages(bkind.iloc[i], bminx.iloc[i], bmaxx.iloc[i],
-                               bminy.iloc[i], bmaxy.iloc[i],
-                               bxs.iloc[i], bys.iloc[i], bro.iloc[i])
-        if pa is None or pb is None:
-            continue
-        out[i] = sum(intersection_area(p[0], p[1], p[2], q[0], q[1], q[2])
-                     for p in pa for q in pb) if pa and pb else 0.0
-    return pd.Series(out)
+    rects paged. The kernel (kernels/overlay.py: Green's theorem over
+    boundary sub-segments) is robust to holes, multiparts, shared edges
+    and A == B, with no degenerate bailout. Measure-zero kinds
+    (point/line) give 0.0; kinds without a polygonal footprint
+    (circle/collection/empty) give null."""
+    sa, sb = decode(a), decode(b)
+    return _doubles([_paged_intersection_area(_area_pages(sa, i),
+                                              _area_pages(sb, i))
+                     for i in range(len(sa))])
 
 
-@pandas_udf(SHAPE_SCHEMA)
-def st_intersection(akind: pd.Series, aminx: pd.Series, amaxx: pd.Series,
-                    aminy: pd.Series, amaxy: pd.Series, axs: pd.Series,
-                    ays: pd.Series, aro: pd.Series,
-                    bkind: pd.Series, bminx: pd.Series, bmaxx: pd.Series,
-                    bminy: pd.Series, bmaxy: pd.Series, bxs: pd.Series,
-                    bys: pd.Series, bro: pd.Series) -> pd.DataFrame:
+@arrow_udf(SHAPE_SCHEMA)
+def st_intersection(a: pa.Array, b: pa.Array) -> pa.Array:
     """Intersection GEOMETRY of two polygons/rects as a shape struct —
     concave, HOLED, MULTIPART and dateline-paged inputs included
     (round 5: kernels/booleans.intersect_evenodd, the member-algebra
@@ -1203,43 +1062,25 @@ def st_intersection(akind: pd.Series, aminx: pd.Series, amaxx: pd.Series,
 
     Honest contract: degenerate boundary contact (shared vertices,
     collinear overlapping edges) still returns an error row — the
-    exact MEASURE for those inputs is `st_intersection_area` /
+    exact MEASURE for those inputs is `st_shape_intersection_area` /
     `st_overlay_measure`, which has no such bailout."""
     from ..kernels.booleans import intersect_evenodd
-    return _boolean_geometry_frame(
-        intersect_evenodd,
-        (akind, aminx, amaxx, aminy, amaxy, axs, ays, aro),
-        (bkind, bminx, bmaxx, bminy, bmaxy, bxs, bys, bro),
-        robust_op="and")
+    return _boolean_geometry(intersect_evenodd, a, b, robust_op="and")
 
 
-@pandas_udf(SHAPE_SCHEMA)
-def st_difference(akind: pd.Series, aminx: pd.Series, amaxx: pd.Series,
-                  aminy: pd.Series, amaxy: pd.Series, axs: pd.Series,
-                  ays: pd.Series, aro: pd.Series,
-                  bkind: pd.Series, bminx: pd.Series, bmaxx: pd.Series,
-                  bminy: pd.Series, bmaxy: pd.Series, bxs: pd.Series,
-                  bys: pd.Series, bro: pd.Series) -> pd.DataFrame:
+@arrow_udf(SHAPE_SCHEMA)
+def st_difference(a: pa.Array, b: pa.Array) -> pa.Array:
     """Difference GEOMETRY A \\ B as a shape struct (round 5 —
     completes the boolean set: union at parse/dissolve, intersection,
     difference). Same input coverage and error contract as
     `st_intersection`; kernels/booleans.difference_evenodd. The scalar
     twin `st_difference_area` remains the no-bailout MEASURE."""
     from ..kernels.booleans import difference_evenodd
-    return _boolean_geometry_frame(
-        difference_evenodd,
-        (akind, aminx, amaxx, aminy, amaxy, axs, ays, aro),
-        (bkind, bminx, bmaxx, bminy, bmaxy, bxs, bys, bro),
-        robust_op="sub")
+    return _boolean_geometry(difference_evenodd, a, b, robust_op="sub")
 
 
-@pandas_udf(SHAPE_SCHEMA)
-def st_union(akind: pd.Series, aminx: pd.Series, amaxx: pd.Series,
-             aminy: pd.Series, amaxy: pd.Series, axs: pd.Series,
-             ays: pd.Series, aro: pd.Series,
-             bkind: pd.Series, bminx: pd.Series, bmaxx: pd.Series,
-             bminy: pd.Series, bmaxy: pd.Series, bxs: pd.Series,
-             bys: pd.Series, bro: pd.Series) -> pd.DataFrame:
+@arrow_udf(SHAPE_SCHEMA)
+def st_union(a: pa.Array, b: pa.Array) -> pa.Array:
     """Union GEOMETRY A ∪ B as a shape struct (round 5). REGION-exact
     for concave/holed/multipart/paged pairs (even-odd parity == in-A
     or in-B); the boundary keeps seam arcs where B\\A pieces meet ∂A —
@@ -1248,34 +1089,23 @@ def st_union(akind: pd.Series, aminx: pd.Series, amaxx: pd.Series,
     multi-overlap union; same degenerate-contact error contract as
     st_intersection."""
     from ..kernels.booleans import union_evenodd
-    return _boolean_geometry_frame(
-        union_evenodd,
-        (akind, aminx, amaxx, aminy, amaxy, axs, ays, aro),
-        (bkind, bminx, bmaxx, bminy, bmaxy, bxs, bys, bro),
-        robust_op="or", robust_first=True)
+    return _boolean_geometry(union_evenodd, a, b, robust_op="or",
+                             robust_first=True)
 
 
-@pandas_udf(SHAPE_SCHEMA)
-def st_sym_difference(akind: pd.Series, aminx: pd.Series, amaxx: pd.Series,
-                      aminy: pd.Series, amaxy: pd.Series, axs: pd.Series,
-                      ays: pd.Series, aro: pd.Series,
-                      bkind: pd.Series, bminx: pd.Series, bmaxx: pd.Series,
-                      bminy: pd.Series, bmaxy: pd.Series, bxs: pd.Series,
-                      bys: pd.Series, bro: pd.Series) -> pd.DataFrame:
+@arrow_udf(SHAPE_SCHEMA)
+def st_sym_difference(a: pa.Array, b: pa.Array) -> pa.Array:
     """Symmetric difference GEOMETRY A △ B (round 5 — closes the
     boolean algebra: union, intersection, difference, symmetric
     difference). (A\\B) ⊔ (B\\A), disjoint member concat; same input
     coverage and error contract as st_intersection."""
     from ..kernels.booleans import sym_difference_evenodd
-    return _boolean_geometry_frame(
-        sym_difference_evenodd,
-        (akind, aminx, amaxx, aminy, amaxy, axs, ays, aro),
-        (bkind, bminx, bmaxx, bminy, bmaxy, bxs, bys, bro),
-        robust_op="xor", robust_first=True)
+    return _boolean_geometry(sym_difference_evenodd, a, b, robust_op="xor",
+                             robust_first=True)
 
 
-def _boolean_geometry_frame(op, a_cols, b_cols, robust_op=None,
-                            robust_first=False) -> pd.DataFrame:
+def _boolean_geometry(op, a, b, robust_op=None,
+                      robust_first=False) -> pa.StructArray:
     """Shared per-row driver for the boolean geometry UDFs: shape
     structs -> even-odd rings -> member op -> closed-ring struct.
 
@@ -1288,7 +1118,6 @@ def _boolean_geometry_frame(op, a_cols, b_cols, robust_op=None,
     leaves seam arcs, the boundary selection is canonical), with the
     member algebra as ITS fallback."""
     from ..kernels.booleans import members_of_robust, robust_boolean
-    akind = a_cols[0]
 
     def _run(rings_a, rings_b):
         def gh():
@@ -1302,59 +1131,40 @@ def _boolean_geometry_frame(op, a_cols, b_cols, robust_op=None,
         first, second = (robust, gh) if robust_first else (gh, robust)
         m = first()
         return m if m is not None else second()
-    rows = []
-    for i in range(len(akind)):
+    sa, sb = decode(a), decode(b)
+    recs: list = [None] * len(sa)
+    errs: list = [None] * len(sa)
+    for i in range(len(sa)):
         try:
-            rings_a = _evenodd_rings(*(c.iloc[i] for c in a_cols))
-            rings_b = _evenodd_rings(*(c.iloc[i] for c in b_cols))
+            rings_a, rings_b = _evenodd_rings(sa, i), _evenodd_rings(sb, i)
         except ValueError as e:
-            rows.append(dict(_EMPTY_ROW, error=str(e)))
+            errs[i] = str(e)
             continue
         members = _run(rings_a, rings_b)
         if members is None:
-            rows.append(dict(_EMPTY_ROW,
-                             error="degenerate boundary contact"))
-            continue
-        if not members:
-            rows.append(dict(_EMPTY_ROW, error=None))
-            continue
-        xs_out, ys_out, offs = [], [], [0]
-        for shell, holes in members:
-            for rx, ry in [shell] + holes:
-                # emit closed rings, matching the WKT parser convention
-                xs_out.extend(rx.tolist() + [float(rx[0])])
-                ys_out.extend(ry.tolist() + [float(ry[0])])
-                offs.append(len(xs_out))
-        rows.append(dict(
-            kind=8 if len(members) > 1 else 7, x=None, y=None, radius=None,
-            minx=min(xs_out), maxx=max(xs_out),
-            miny=min(ys_out), maxy=max(ys_out),
-            xs=xs_out, ys=ys_out, ring_offsets=offs, error=None))
-    return pd.DataFrame(rows)
+            errs[i] = "degenerate boundary contact"
+        elif members:
+            recs[i] = closed_rings_record(members)
+    return encode_records(recs, errs)
 
 
-def _evenodd_rings(kind, minx, maxx, miny, maxy, xs, ys, ro):
-    """Even-odd ring list [(xs, ys), ...] from a shape struct, or
-    ValueError for kinds without polygonal geometry. Dateline-crossing
-    rects page-split into two rings (the WKT parser's convention);
-    EMPTY (kind 0) is the empty ring set — the boolean member algebra
-    then gives NTS parity for free (A ∩ ∅ = ∅, A \\ ∅ = A ∪ ∅ = A)."""
+def _evenodd_rings(s, i):
+    """Even-odd ring list [(xs, ys), ...] of row i, or ValueError for
+    kinds without polygonal geometry. Dateline-crossing rects
+    page-split into two rings (the WKT parser's convention); EMPTY
+    (kind 0) is the empty ring set — the boolean member algebra then
+    gives NTS parity for free (A ∩ ∅ = ∅, A \\ ∅ = A ∪ ∅ = A)."""
+    kind = s.kind[i]
     if kind == 0:
         return []
     if kind == 2:
-        pages = ([((minx, 180.0), (miny, maxy)),
-                  ((-180.0, maxx), (miny, maxy))]
-                 if minx > maxx else [((minx, maxx), (miny, maxy))])
-        return [(np.asarray([x0, x1, x1, x0], dtype=np.float64),
-                 np.asarray([y0, y0, y1, y1], dtype=np.float64))
-                for (x0, x1), (y0, y1) in pages]
+        return rect_pages(s.minx[i], s.maxx[i], s.miny[i], s.maxy[i])
     if kind not in (7, 8):
         raise ValueError(f"st_intersection needs polygons/rects,"
                          f" got kind {int(kind)}")
-    rx = np.asarray(xs, dtype=np.float64)
-    ry = np.asarray(ys, dtype=np.float64)
-    offs = (np.asarray(ro, dtype=np.int64) if ro is not None
-            else np.asarray([0, len(rx)], dtype=np.int64))
+    rx, ry, offs = s.verts(i)
+    if offs is None:
+        offs = np.asarray([0, len(rx)], dtype=np.int64)
     out = []
     for k in range(len(offs) - 1):
         gx, gy = rx[offs[k]:offs[k + 1]], ry[offs[k]:offs[k + 1]]
@@ -1373,52 +1183,36 @@ _OVERLAY_MEASURE_SCHEMA = StructType([
 ])
 
 
-@pandas_udf(_OVERLAY_MEASURE_SCHEMA)
-def st_overlay_measure(akind: pd.Series, aminx: pd.Series,
-                       amaxx: pd.Series, aminy: pd.Series,
-                       amaxy: pd.Series, axs: pd.Series,
-                       ays: pd.Series, aro: pd.Series,
-                       bkind: pd.Series, bminx: pd.Series,
-                       bmaxx: pd.Series, bminy: pd.Series,
-                       bmaxy: pd.Series, bxs: pd.Series,
-                       bys: pd.Series, bro: pd.Series) -> pd.DataFrame:
+@arrow_udf(_OVERLAY_MEASURE_SCHEMA)
+def st_overlay_measure(a: pa.Array, b: pa.Array) -> pa.Array:
     """Fused overlay measure: intersection area + both own areas in ONE
     Arrow exchange (the with_fracs overlay path would otherwise ship
     the pair's vertex arrays through three separate UDF stages)."""
-    from ..kernels.overlay import intersection_area, polygon_area_evenodd
-    n = len(akind)
-    inter = np.full(n, np.nan, dtype=np.float64)
-    a_area = np.full(n, np.nan, dtype=np.float64)
-    b_area = np.full(n, np.nan, dtype=np.float64)
+    from ..kernels.overlay import polygon_area_evenodd
+    sa, sb = decode(a), decode(b)
+    n = len(sa)
+    inter = np.empty(n)
+    a_area = np.empty(n)
+    b_area = np.empty(n)
 
     def own(pages):
         if pages is None:
             return np.nan
-        return sum(polygon_area_evenodd(p[0], p[1], p[2]) for p in pages)
+        return sum(polygon_area_evenodd(*p) for p in pages)
 
     for i in range(n):
-        pa = _shape_area_pages(akind.iloc[i], aminx.iloc[i], amaxx.iloc[i],
-                               aminy.iloc[i], amaxy.iloc[i],
-                               axs.iloc[i], ays.iloc[i], aro.iloc[i])
-        pb = _shape_area_pages(bkind.iloc[i], bminx.iloc[i], bmaxx.iloc[i],
-                               bminy.iloc[i], bmaxy.iloc[i],
-                               bxs.iloc[i], bys.iloc[i], bro.iloc[i])
-        a_area[i] = own(pa)
+        pa_, pb = _area_pages(sa, i), _area_pages(sb, i)
+        a_area[i] = own(pa_)
         b_area[i] = own(pb)
-        if pa is None or pb is None:
-            continue
-        inter[i] = sum(intersection_area(p[0], p[1], p[2], q[0], q[1], q[2])
-                       for p in pa for q in pb) if pa and pb else 0.0
-    return pd.DataFrame({"inter": inter, "a_area": a_area, "b_area": b_area})
+        inter[i] = _paged_intersection_area(pa_, pb)
+    return _double_struct(inter=inter, a_area=a_area, b_area=b_area)
 
 
-def st_difference_area(akind, aminx, amaxx, aminy, amaxy, axs, ays, aro,
-                       bkind, bminx, bmaxx, bminy, bmaxy, bxs, bys, bro):
+def st_difference_area(a, b):
     """Planar area (deg^2) of A \\ B — pure composition, no new kernel:
     area(A) - area(A ∩ B), both terms from the fused overlay measure
     (ONE Arrow exchange). Exact wherever the measure is."""
-    m = st_overlay_measure(akind, aminx, amaxx, aminy, amaxy, axs, ays, aro,
-                           bkind, bminx, bmaxx, bminy, bmaxy, bxs, bys, bro)
+    m = st_overlay_measure(a, b)
     return m["a_area"] - m["inter"]
 
 
@@ -1460,26 +1254,18 @@ def rect_intersection_area_cols(aminx, amaxx, aminy, amaxy,
 
 def make_st_to_wkt(decimals: int | None = None):
     """WKT formatter UDF factory (shape struct -> text)."""
-    @pandas_udf(StringType())
-    def _to_wkt(kind: pd.Series, x: pd.Series, y: pd.Series,
-                radius: pd.Series, minx: pd.Series, maxx: pd.Series,
-                miny: pd.Series, maxy: pd.Series, xs: pd.Series,
-                ys: pd.Series, ring_offsets: pd.Series) -> pd.Series:
-        out = []
-        for i in range(len(kind)):
-            out.append(_wkt.format_wkt(
-                int(kind.iloc[i]), x.iloc[i], y.iloc[i], radius.iloc[i],
-                minx.iloc[i], maxx.iloc[i], miny.iloc[i], maxy.iloc[i],
-                xs.iloc[i], ys.iloc[i], ring_offsets.iloc[i], decimals))
-        return pd.Series(out)
+    @arrow_udf(StringType())
+    def _to_wkt(shape: pa.Array) -> pa.Array:
+        s = decode(shape)
+        return pa.array([_wkt.format_wkt(
+            int(s.kind[i]), s.x[i], s.y[i], s.radius[i], s.minx[i],
+            s.maxx[i], s.miny[i], s.maxy[i], *s.verts(i), decimals)
+            for i in range(len(s))], type=pa.string())
     return _to_wkt
 
 
-def st_to_wkt(shape_col, decimals: int | None = None):
-    s = shape_col
-    return make_st_to_wkt(decimals)(
-        s["kind"], s["x"], s["y"], s["radius"], s["minx"], s["maxx"],
-        s["miny"], s["maxy"], s["xs"], s["ys"], s["ring_offsets"])
+def st_to_wkt(shape, decimals: int | None = None):
+    return make_st_to_wkt(decimals)(shape)
 
 
 @pandas_udf(ByteType())
@@ -1613,80 +1399,55 @@ def st_hav_vin(x1: pd.Series, y1: pd.Series, x2: pd.Series,
 from pyspark.sql.types import BinaryType  # noqa: E402
 
 
-@pandas_udf(BinaryType())
-def st_to_binary(kind: pd.Series, x: pd.Series, y: pd.Series,
-                 radius: pd.Series, minx: pd.Series, maxx: pd.Series,
-                 miny: pd.Series, maxy: pd.Series,
-                 xs: pd.Series, ys: pd.Series,
-                 ring_offsets: pd.Series) -> pd.Series:
+@arrow_udf(BinaryType())
+def st_to_binary(shape: pa.Array) -> pa.Array:
     """Shape -> reference-layout bytes (Io/BinaryCodec.cs:158-234;
     geometry kinds via the WKB branch, Io/Nts/NtsBinaryCodec.cs)."""
     from ..kernels import binary as _bin
+    s = decode(shape)
     out = []
-    for i in range(len(kind)):
-        vx = xs.iloc[i]
-        ro = ring_offsets.iloc[i]
-        out.append(_bin.write_shape(dict(
-            kind=int(kind.iloc[i]), x=x.iloc[i], y=y.iloc[i],
-            radius=radius.iloc[i], minx=minx.iloc[i], maxx=maxx.iloc[i],
-            miny=miny.iloc[i], maxy=maxy.iloc[i],
-            xs=list(vx) if vx is not None else None,
-            ys=list(ys.iloc[i]) if vx is not None else None,
-            ring_offsets=list(ro) if ro is not None else None)))
-    return pd.Series(out)
+    for i in range(len(s)):
+        rec = s.record(i)
+        for name in ("xs", "ys", "ring_offsets"):
+            if rec[name] is not None:
+                rec[name] = list(rec[name])
+        out.append(_bin.write_shape(rec))
+    return pa.array(out, type=pa.binary())
 
 
-@pandas_udf(SHAPE_SCHEMA)
-def st_from_binary(blobs: pd.Series) -> pd.DataFrame:
+@arrow_udf(SHAPE_SCHEMA)
+def st_from_binary(blobs: pa.Array) -> pa.Array:
     """Reference-layout bytes -> shape struct."""
     from ..kernels import binary as _bin
-    rows = []
-    for b in blobs:
+    recs: list = []
+    errs: list = []
+    for b in blobs.to_pylist():
         try:
-            rec = _bin.read_shape(bytes(b))
-            rows.append({k: rec.get(k) for k in
-                         ("kind", "x", "y", "radius", "minx", "maxx",
-                          "miny", "maxy")}
-                        | {"xs": rec.get("xs") or None,
-                           "ys": rec.get("ys") or None,
-                           "ring_offsets": rec.get("ring_offsets") or None,
-                           "error": None})
+            recs.append(_bin.read_shape(bytes(b)))
+            errs.append(None)
         except Exception as e:  # noqa: BLE001
-            rows.append(dict(_EMPTY_ROW, error=str(e)[:200]))
-    return pd.DataFrame(rows)
+            recs.append(None)
+            errs.append(str(e)[:200])
+    return encode_records(recs, errs)
 
 
-_SIMPLIFY_SCHEMA = StructType([
-    StructField("xs", ArrayType(DoubleType())),
-    StructField("ys", ArrayType(DoubleType())),
-    StructField("ring_offsets", ArrayType(IntegerType())),
-])
-
-
-@pandas_udf(_SIMPLIFY_SCHEMA)
-def _st_simplify_udf(xs: pd.Series, ys: pd.Series, ring_offsets: pd.Series,
-                     tolerance: pd.Series) -> pd.DataFrame:
+@arrow_udf(VERTEX_SCHEMA)
+def _st_simplify_udf(shape: pa.Array, tolerance: pa.Array) -> pa.Array:
     from ..kernels import simplify as _simp
-    tol = float(tolerance.iloc[0])
-    out_x, out_y, out_o = [], [], []
-    for i in range(len(xs)):
-        vx = xs.iloc[i]
-        if vx is None or (hasattr(vx, "__len__") and len(vx) == 0):
-            out_x.append(vx)
-            out_y.append(ys.iloc[i])
-            out_o.append(ring_offsets.iloc[i])
-            continue
-        sx, sy, so = _simp.simplify_polygon(
-            np.asarray(vx, dtype=np.float64),
-            np.asarray(ys.iloc[i], dtype=np.float64),
-            np.asarray(ring_offsets.iloc[i], dtype=np.int64), tol)
-        out_x.append(sx.tolist())
-        out_y.append(sy.tolist())
-        out_o.append([int(v) for v in so])
-    return pd.DataFrame({"xs": out_x, "ys": out_y, "ring_offsets": out_o})
+    s = decode(shape)
+    tol = float(_f64(tolerance)[0])
+    out = {"xs": s.xs.tolist(), "ys": s.ys.tolist(),
+           "ring_offsets": s.ring_offsets.tolist()}
+    for i in range(len(s)):
+        vx, vy, ro = s.verts(i)
+        if vx is None or len(vx) == 0:
+            continue  # passes through unchanged
+        out["xs"][i], out["ys"][i], out["ring_offsets"][i] = \
+            _simp.simplify_polygon(vx, vy, ro, tol)
+    return encode(len(s), fields=VERTEX_SCHEMA.fields, **out)
 
 
-def st_simplify(xs, ys, ring_offsets, tolerance: float):
+def st_simplify(shape, tolerance: float):
     """Douglas-Peucker simplification of polygon vertex arrays
     (kernels/simplify.py): per-ring, part structure preserved, every
     dropped vertex within `tolerance` (degrees) of the simplified
@@ -1694,26 +1455,31 @@ def st_simplify(xs, ys, ring_offsets, tolerance: float):
     shape_shape_join when exact-to-tolerance semantics suffice: refine
     cost is O(vertices), and a coastline polygon at tolerance = one
     cell width keeps the same cover cells with 100x fewer vertices."""
-    return _st_simplify_udf(xs, ys, ring_offsets, F.lit(float(tolerance)))
+    return _st_simplify_udf(shape, F.lit(float(tolerance)))
 
 
 def register_sql_functions(spark, prefix: str = "") -> list:
     """Register the Arrow-batched st_* UDFs for Spark SQL text queries
     (`spark.udf.register` surface — the SURVEY §2.6 extensibility row).
-    Column-expression builders (st_cell_code_col, st_cover_codes_col)
-    are pure Catalyst expressions and need no registration. Returns the
-    registered names."""
+    Shape arguments and results are whole shape structs, e.g.
+    `st_buffer(st_from_wkt(wkt), 2.5)`. Column-expression builders
+    (st_cell_code_col, st_cover_codes_col) are pure Catalyst
+    expressions and need no registration. Returns the registered
+    names."""
     udfs = {
         "st_from_wkt": _st_from_wkt_default,
         "st_from_latlon": st_from_latlon,
+        "st_from_legacy": st_from_legacy,
         "st_from_binary": st_from_binary,
         "st_to_binary": st_to_binary,
+        "st_to_wkt": make_st_to_wkt(),
         "st_buffer": st_buffer,
         "st_center": st_center,
-        "st_area_geo": _st_area_geo,
-        "st_area_euclid": _st_area_euclid,
+        "st_area_geo": _AREA_UDFS[True],
+        "st_area_euclid": _AREA_UDFS[False],
+        "st_relate_shape_point": st_relate_shape_point,
         "st_relate_polygon_polygon": st_relate_polygon_polygon,
-        "st_intersection_area": st_intersection_area,
+        "st_intersection_area": st_shape_intersection_area,
         "st_intersection": st_intersection,
         "st_difference": st_difference,
         "st_union": st_union,

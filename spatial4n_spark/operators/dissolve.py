@@ -9,7 +9,7 @@ absorption, exact Greiner–Hormann union for transversal crossings,
 plain even-odd merge for touch-only contact, convex-hull degrade for
 degenerate contact when `allow_approx=True`.
 
-Scale shape: ONE shuffle on the dissolve keys (`applyInPandas`), each
+Scale shape: ONE shuffle on the dissolve keys (`applyInArrow`), each
 group's members resolved inside its task — dissolve is inherently a
 gather-per-key operation, so per-key vertex volume must fit a task
 (the same contract every GIS engine's dissolve carries). Hot keys are
@@ -19,7 +19,8 @@ key; beyond that, pre-dissolve per (key, cover-cell) and re-dissolve
 the per-cell results (documented pattern; exactness unchanged because
 union is associative — cell pieces of one key still meet in round 2).
 
-Output per group: the dissolved shape struct, `n_members`, `exact`
+Output per group: the dissolved shape struct (always kind 8,
+MULTIPOLYGON, whichever path settled it), `n_members`, `exact`
 (False when a degenerate overlap degraded to the hull), `error`
 (non-null instead of a task failure when the group is not exactly
 unionable and `allow_approx=False`).
@@ -27,32 +28,29 @@ unionable and `allow_approx=False`).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (BooleanType, IntegerType, StringType,
+                               StructField, StructType)
 
-_FLAT_FIELDS = ("kind byte, minx double, maxx double, miny double,"
-                " maxy double, xs array<double>, ys array<double>,"
-                " ring_offsets array<int>, n_members int,"
-                " exact boolean, error string")
+from ..shapes import (SHAPE_SCHEMA, closed_rings_record, decode,
+                      encode_records, rect_pages)
+from ..shapes import shape_col as shape_struct
 
 
-def _member_record(kind, minx, maxx, miny, maxy, xs, ys, ro):
-    """One input shape -> a parser-style polygon record. Rects become
-    their 4-corner closed ring (dateline-crossing rects: two pages)."""
-    recs = []
+def _member_records(s, i) -> list:
+    """Row i of a decoded shape batch -> parser-style polygon records.
+    Rects become their 4-corner closed ring (dateline-crossing rects:
+    two pages)."""
+    kind = s.kind[i]
     if kind == 2:
-        spans = ([(minx, 180.0), (-180.0, maxx)] if minx > maxx
-                 else [(minx, maxx)])
-        for x0, x1 in spans:
-            recs.append(dict(
-                kind=7, minx=x0, maxx=x1, miny=miny, maxy=maxy,
-                xs=[x0, x1, x1, x0, x0], ys=[miny, miny, maxy, maxy, miny],
-                ring_offsets=[0, 5]))
-        return recs
+        return [closed_rings_record([(page, [])]) for page in
+                rect_pages(s.minx[i], s.maxx[i], s.miny[i], s.maxy[i])]
     if kind in (7, 8):
-        return [dict(kind=int(kind), minx=minx, maxx=maxx, miny=miny,
-                     maxy=maxy, xs=list(xs), ys=list(ys),
+        xs, ys, ro = s.verts(i)
+        return [dict(kind=int(kind), minx=s.minx[i], maxx=s.maxx[i],
+                     miny=s.miny[i], maxy=s.maxy[i], xs=list(xs), ys=list(ys),
                      ring_offsets=(list(ro) if ro is not None
                                    else [0, len(xs)]))]
     raise ValueError(f"dissolve supports rect/polygon shapes, got kind "
@@ -105,61 +103,52 @@ def _robust_union_fold(members: list):
     if not acc:
         return None  # empty union of area members: unclassifiable
     mem = members_of_robust(acc)
-    if mem is None:
-        return None
-    xs_out, ys_out, offs = [], [], [0]
-    for shell, holes in mem:
-        for rx, ry in [shell] + holes:
-            xs_out.extend(rx.tolist() + [float(rx[0])])
-            ys_out.extend(ry.tolist() + [float(ry[0])])
-            offs.append(len(xs_out))
-    return dict(kind=8 if len(mem) > 1 else 7,
-                minx=min(xs_out), maxx=max(xs_out),
-                miny=min(ys_out), maxy=max(ys_out),
-                xs=xs_out, ys=ys_out, ring_offsets=offs)
+    return None if mem is None else closed_rings_record(mem)
 
 
 def dissolve(df: DataFrame, keys: list, shape_col: str = "shape",
              allow_approx: bool = False) -> DataFrame:
     """GroupBy `keys` and union each group's rect/polygon shapes into
-    one (multi)polygon shape struct. See module docstring."""
+    one multipolygon (kind 8) shape struct. See module docstring."""
+    schema = StructType([df.schema[k] for k in keys] + [
+        StructField(shape_col, SHAPE_SCHEMA),
+        StructField("n_members", IntegerType()),
+        StructField("exact", BooleanType()),
+        StructField("error", StringType())])
+    return (df.select(*keys, F.col(shape_col).alias("__s"))
+              .groupBy(*keys)
+              .applyInArrow(lambda t: _dissolve_table(t, keys, shape_col,
+                                                      allow_approx),
+                            schema=schema))
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        key_vals = {k: pdf[k].iloc[0] for k in keys}
-        members = []
-        err = None
-        for i in range(len(pdf)):
-            s = pdf["__s"].iloc[i]
-            try:
-                members.extend(_member_record(
-                    s["kind"], s["minx"], s["maxx"], s["miny"], s["maxy"],
-                    s["xs"], s["ys"], s["ring_offsets"]))
-            except ValueError as e:
-                err = str(e)
-                break
-        if err is None:
-            res = _dissolve_group(members, allow_approx)
-        else:
-            res = {"rec": None, "exact": False, "error": err}
-        rec = res["rec"]
-        row = dict(key_vals, n_members=len(pdf), exact=res["exact"],
-                   error=res["error"])
-        if rec is None:
-            row.update(kind=0, minx=None, maxx=None, miny=None, maxy=None,
-                       xs=None, ys=None, ring_offsets=None)
-        else:
-            row.update(kind=rec["kind"], minx=rec["minx"], maxx=rec["maxx"],
-                       miny=rec["miny"], maxy=rec["maxy"],
-                       xs=list(rec["xs"]), ys=list(rec["ys"]),
-                       ring_offsets=list(rec["ring_offsets"]))
-        return pd.DataFrame([row])
 
-    key_schema = ", ".join(
-        f"{k} {df.schema[k].dataType.simpleString()}" for k in keys)
-    out = (df.select(*keys, F.col(shape_col).alias("__s"))
-             .groupBy(*keys)
-             .applyInPandas(run, schema=f"{key_schema}, {_FLAT_FIELDS}"))
-    return _repack(out, keys, shape_col)
+def _dissolve_table(table: pa.Table, keys: list, shape_col: str,
+                    allow_approx: bool) -> pa.Table:
+    """One group's Arrow table -> its one-row dissolve result."""
+    s = decode(table.column("__s"))
+    members: list = []
+    err = None
+    for i in range(len(s)):
+        try:
+            members.extend(_member_records(s, i))
+        except ValueError as e:
+            err = str(e)
+            break
+    if err is None:
+        res = _dissolve_group(members, allow_approx)
+    else:
+        res = {"rec": None, "exact": False, "error": err}
+    rec = res["rec"]
+    if rec is not None:
+        # MULTIPOLYGON whichever path settled the group
+        rec = {k: rec[k] for k in ("minx", "maxx", "miny", "maxy", "xs",
+                                   "ys", "ring_offsets")} | {"kind": 8}
+    cols = {k: table.column(k).slice(0, 1) for k in keys}
+    cols[shape_col] = encode_records([rec], [res["error"]])
+    cols["n_members"] = pa.array([table.num_rows], type=pa.int32())
+    cols["exact"] = pa.array([res["exact"]], type=pa.bool_())
+    cols["error"] = pa.array([res["error"]], type=pa.string())
+    return pa.table(cols)
 
 
 def dissolve_two_level(df: DataFrame, keys: list, shape_col: str = "shape",
@@ -204,15 +193,7 @@ def dissolve_two_level(df: DataFrame, keys: list, shape_col: str = "shape",
                   .agg(F.first("error").alias("__err")))
     joined = (stage2.join(failed, keys, "full")
                     .join(totals, keys, "inner"))
-    nul = F.lit(None)
-    empty_shape = F.struct(
-        F.lit(0).cast("byte").alias("kind"),
-        *[nul.cast("double").alias(c) for c in
-          ("x", "y", "radius", "minx", "maxx", "miny", "maxy")],
-        nul.cast("array<double>").alias("xs"),
-        nul.cast("array<double>").alias("ys"),
-        nul.cast("array<int>").alias("ring_offsets"),
-        F.col("__err").alias("error"))
+    empty_shape = shape_struct(kind=0, error=F.col("__err"))
     has_err = F.col("__err").isNotNull()
     return (joined.select(
         *keys,
@@ -223,19 +204,3 @@ def dissolve_two_level(df: DataFrame, keys: list, shape_col: str = "shape",
         .alias("exact"),
         F.when(has_err, F.col("__err")).otherwise(F.col("error"))
          .alias("error")))
-
-
-def _repack(out: DataFrame, keys: list, shape_col: str) -> DataFrame:
-    nul = F.lit(None)
-    shape = F.struct(
-        F.col("kind").alias("kind"),
-        nul.cast("double").alias("x"), nul.cast("double").alias("y"),
-        nul.cast("double").alias("radius"),
-        F.col("minx").alias("minx"), F.col("maxx").alias("maxx"),
-        F.col("miny").alias("miny"), F.col("maxy").alias("maxy"),
-        F.col("xs").alias("xs"), F.col("ys").alias("ys"),
-        F.col("ring_offsets").alias("ring_offsets"),
-        F.col("error").alias("error"))
-    return out.select(*keys, shape.alias(shape_col),
-                      "n_members", "exact", "error")
-

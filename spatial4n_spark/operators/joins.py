@@ -179,8 +179,8 @@ def _point_in_shape_join_closure(points: DataFrame, shapes: DataFrame,
         rows = []
         for sid, rec in table.items():
             coeffs = hp[sid] + [(0.0, 0.0, 1.0)] * (k_max - len(hp[sid]))
-            rows.append((sid, float(rec[4]), float(rec[5]),
-                         float(rec[6]), float(rec[7]),
+            rows.append((sid, rec["minx"], rec["maxx"],
+                         rec["miny"], rec["maxy"],
                          *[v for abc in coeffs for v in abc]))
         cnames = [shape_id, "__minx", "__maxx", "__miny", "__maxy"] + \
                  [f"__{t}{k}" for k in range(k_max) for t in ("a", "b", "c")]
@@ -669,7 +669,7 @@ def _shape_shape_join_closure(left: DataFrame, right: DataFrame,
 
     if predicate == "bbox":
         return gated
-    rel = relate_udf(ls["xs"], ls["ys"], ls["ring_offsets"], F.col(right_id))
+    rel = relate_udf(ls, F.col(right_id))
     if predicate == "all":
         return gated.withColumn("relation", rel.cast("int"))
     if predicate == "intersects":
@@ -688,9 +688,7 @@ def _apply_shape_predicate(gated: DataFrame, ls, rs, predicate: str) -> DataFram
     fixed-level and adaptive two-layer joins."""
     if predicate == "bbox":
         return gated
-    rel = SF.st_relate_polygon_polygon(
-        ls["xs"], ls["ys"], ls["ring_offsets"],
-        rs["xs"], rs["ys"], rs["ring_offsets"])
+    rel = SF.st_relate_polygon_polygon(ls, rs)
     if predicate == "all":
         return gated.withColumn("relation", rel.cast("int"))
     if predicate == "intersects":
@@ -831,8 +829,7 @@ def shape_shape_join_adaptive(left: DataFrame, right: DataFrame,
     if closure_relate is not None:
         from ..kernels import relation as REL
         gated = gated.drop("__rminx", "__rmaxx", "__rminy", "__rmaxy")
-        rel = closure_relate(ls["xs"], ls["ys"], ls["ring_offsets"],
-                             F.col(right_id))
+        rel = closure_relate(ls, F.col(right_id))
         if predicate == "all":
             return gated.withColumn("relation", rel.cast("int"))
         keep = {"intersects": rel != REL.DISJOINT,

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..shapes import shape_col, with_fields
 from .joins import shape_shape_join
 
 
@@ -60,6 +61,8 @@ def overlay_intersection_join(left: DataFrame, right: DataFrame,
     intersecting pairs (bounded by output size, not candidates).
     Honest contract: pairs with degenerate boundary contact carry an
     error row in the geometry column while `area_col` stays exact.
+    Under `keep_zero`, zero-area (touch) pairs get EMPTY (kind 0)
+    geometry.
 
     salt / broadcast_right pass through to the candidate join.
     """
@@ -73,17 +76,15 @@ def overlay_intersection_join(left: DataFrame, right: DataFrame,
     # the candidate stage, silently vanishing from the result. Both
     # now raise at run time, before the join (guard is fused into the
     # consumed kind field, so Catalyst cannot prune it).
-    left = _validate_overlay_shapes(left, left_shape)
-    right = _validate_overlay_shapes(right, right_shape)
-    if shape_kinds != (2, 2):
-        # the candidate join's exact refine is the polygon-polygon
-        # kernel: give kind-2 rects their 4-corner ring arrays (pure
-        # Column, stays in codegen) so mixed rect/polygon layers flow
-        # through unchanged. Like every two-layer join input, bboxes
-        # are assumed page-split (non-dateline-crossing — enforced by
-        # the validation above).
-        left = _with_rect_rings(left, left_shape)
-        right = _with_rect_rings(right, right_shape)
+    # The candidate join's exact refine is the polygon-polygon kernel:
+    # unless both layers are declared all-rect, kind-2 rects also get
+    # their 4-corner ring arrays (pure Column, stays in codegen) so
+    # mixed rect/polygon layers flow through unchanged. Like every
+    # two-layer join input, bboxes are assumed page-split
+    # (non-dateline-crossing — enforced by the validation).
+    rect_rings = shape_kinds != (2, 2)
+    left = _prepare_overlay_shapes(left, left_shape, rect_rings)
+    right = _prepare_overlay_shapes(right, right_shape, rect_rings)
     # keep_zero=False: the area > 0 filter below subsumes the exact
     # relate (touch pairs measure 0 and drop anyway), so take bbox
     # candidates and skip the relate refine — ONE Python stage over
@@ -113,19 +114,17 @@ def overlay_intersection_join(left: DataFrame, right: DataFrame,
         if not keep_zero:
             out = out.where(F.col(area_col) > 0.0)
         if with_geometry:
-            out = out.withColumn(geometry_col, _rect_inter_struct(ls, rs))
+            out = out.withColumn(
+                geometry_col,
+                F.when(F.col(area_col) == 0.0, shape_col(kind=0))
+                 .otherwise(_rect_inter_struct(ls, rs)))
         return out
 
     if with_fracs:
         # ONE fused Arrow exchange for inter + both own areas; the
         # rect x rect rows still take the JVM formula for the area
         # (bit-identical to the paged kernel) and JVM own-areas.
-        m = SF.st_overlay_measure(
-            ls["kind"], ls["minx"], ls["maxx"], ls["miny"], ls["maxy"],
-            ls["xs"], ls["ys"], ls["ring_offsets"],
-            rs["kind"], rs["minx"], rs["maxx"], rs["miny"], rs["maxy"],
-            rs["xs"], rs["ys"], rs["ring_offsets"])
-        out = pairs.withColumn("__m", m)
+        out = pairs.withColumn("__m", SF.st_overlay_measure(ls, rs))
         mm = F.col("__m")
         area = F.when(both_rect, rect_jvm).otherwise(mm["inter"])
         la = F.when(ls["kind"] == 2, _rect_area(ls)).otherwise(mm["a_area"])
@@ -137,49 +136,33 @@ def overlay_intersection_join(left: DataFrame, right: DataFrame,
                               F.when(ra > 0.0, F.col(area_col) / ra))
                   .drop("__m"))
     else:
-        arrow = SF.st_shape_intersection_area(
-            ls["kind"], ls["minx"], ls["maxx"], ls["miny"], ls["maxy"],
-            ls["xs"], ls["ys"], ls["ring_offsets"],
-            rs["kind"], rs["minx"], rs["maxx"], rs["miny"], rs["maxy"],
-            rs["xs"], rs["ys"], rs["ring_offsets"])
+        arrow = SF.st_shape_intersection_area(ls, rs)
         out = pairs.withColumn(
             area_col, F.when(both_rect, rect_jvm).otherwise(arrow))
     if not keep_zero:
         out = out.where(F.col(area_col) > 0.0)
     if with_geometry:
-        geom = SF.st_intersection(
-            ls["kind"], ls["minx"], ls["maxx"], ls["miny"], ls["maxy"],
-            ls["xs"], ls["ys"], ls["ring_offsets"],
-            rs["kind"], rs["minx"], rs["maxx"], rs["miny"], rs["maxy"],
-            rs["xs"], rs["ys"], rs["ring_offsets"])
         # rect x rect rows take the pure-Column struct; note the CASE
         # does not spare them the Arrow pass (Python UDFs evaluate in
         # their own node) — it spares them the GH kernel and keeps the
-        # VALUES bit-identical to the JVM formula
+        # VALUES bit-identical to the JVM formula. Zero-area (touch)
+        # rows keep_zero retains are EMPTY, whichever kinds met.
         out = out.withColumn(
             geometry_col,
-            F.when((ls["kind"] == 2) & (rs["kind"] == 2),
-                   _rect_inter_struct(ls, rs)).otherwise(geom))
+            F.when(F.col(area_col) == 0.0, shape_col(kind=0))
+             .when(both_rect, _rect_inter_struct(ls, rs))
+             .otherwise(SF.st_intersection(ls, rs)))
     return out
 
 
 def _rect_inter_struct(ls, rs):
     """Intersection of two page-split (non-crossing) rects as a pure
-    Column shape struct — valid only under the area > 0 filter."""
-    def nul(t):
-        return F.lit(None).cast(t)
-    return F.struct(
-        F.lit(2).cast("byte").alias("kind"),
-        nul("double").alias("x"), nul("double").alias("y"),
-        nul("double").alias("radius"),
-        F.greatest(ls["minx"], rs["minx"]).alias("minx"),
-        F.least(ls["maxx"], rs["maxx"]).alias("maxx"),
-        F.greatest(ls["miny"], rs["miny"]).alias("miny"),
-        F.least(ls["maxy"], rs["maxy"]).alias("maxy"),
-        nul("array<double>").alias("xs"),
-        nul("array<double>").alias("ys"),
-        nul("array<int>").alias("ring_offsets"),
-        nul("string").alias("error"))
+    Column shape struct — valid only where the area is > 0."""
+    return shape_col(kind=2,
+                     minx=F.greatest(ls["minx"], rs["minx"]),
+                     maxx=F.least(ls["maxx"], rs["maxx"]),
+                     miny=F.greatest(ls["miny"], rs["miny"]),
+                     maxy=F.least(ls["maxy"], rs["maxy"]))
 
 
 def area_interpolate(source: DataFrame, target: DataFrame,
@@ -214,14 +197,18 @@ def area_interpolate(source: DataFrame, target: DataFrame,
     return pairs.groupBy(target_id).agg(*aggs)
 
 
-def _validate_overlay_shapes(df: DataFrame, col: str) -> DataFrame:
+def _prepare_overlay_shapes(df: DataFrame, col: str,
+                            rect_rings: bool) -> DataFrame:
     """Runtime input guard: raise on shape kinds the overlay measure
     cannot produce an area for (anything but rect/polygon/multipolygon)
     and on dateline-crossing rects (minx > maxx), which the cell-cover
     candidate stage would silently exclude. The guard is folded into
     the struct's `kind` field — a column every downstream stage
     consumes — so column pruning cannot elide it; rows that pass are
-    bit-identical to the input. Pure Column, no Python stage.
+    bit-identical to the input. With `rect_rings`, kind-2 rects also
+    get xs/ys/ring_offsets (their 4-corner ring) so the polygon
+    relate/area kernels can consume them. Pure Column, no Python
+    stage, one struct rebuild.
 
     Callers with crossing rects should page-split them into two
     ±180-bounded rows first (`kernels/wkt.py` page convention), which
@@ -229,7 +216,7 @@ def _validate_overlay_shapes(df: DataFrame, col: str) -> DataFrame:
     s = F.col(col)
     bad_kind = ~s["kind"].isin(2, 7, 8)
     crossing = (s["kind"] == 2) & (s["minx"] > s["maxx"])
-    guarded_kind = (
+    changes = {"kind": (
         F.when(bad_kind, F.raise_error(F.concat(
             F.lit("overlay supports rect/polygon shapes, got kind "),
             s["kind"].cast("string"))))
@@ -237,41 +224,16 @@ def _validate_overlay_shapes(df: DataFrame, col: str) -> DataFrame:
             F.lit("overlay requires page-split rects; got dateline-"
                   "crossing rect minx="), s["minx"].cast("string"),
             F.lit(" > maxx="), s["maxx"].cast("string"))))
-         .otherwise(s["kind"]).alias("kind"))
-    new = F.struct(
-        guarded_kind, s["x"].alias("x"), s["y"].alias("y"),
-        s["radius"].alias("radius"),
-        s["minx"].alias("minx"), s["maxx"].alias("maxx"),
-        s["miny"].alias("miny"), s["maxy"].alias("maxy"),
-        s["xs"].alias("xs"), s["ys"].alias("ys"),
-        s["ring_offsets"].alias("ring_offsets"),
-        s["error"].alias("error"))
-    return df.withColumn(col, new)
-
-
-def _with_rect_rings(df: DataFrame, col: str) -> DataFrame:
-    """Fill xs/ys/ring_offsets for kind-2 rects (4-corner ring) so the
-    polygon relate/area kernels can consume rect rows. Pure Column
-    rebuild of the shape struct — no Python stage. Dateline-crossing
-    rects never reach here (`_validate_overlay_shapes` raises first);
-    page-split pages are plain rects."""
-    s = F.col(col)
-    xs_plain = F.array(s["minx"], s["maxx"], s["maxx"], s["minx"])
-    ys_plain = F.array(s["miny"], s["miny"], s["maxy"], s["maxy"])
-    lit_i = lambda v: F.lit(v).cast("int")  # noqa: E731
-    ro_plain = F.array(lit_i(0), lit_i(4))
-    is_rect = s["kind"] == 2
-    new = F.struct(
-        s["kind"].alias("kind"), s["x"].alias("x"), s["y"].alias("y"),
-        s["radius"].alias("radius"),
-        s["minx"].alias("minx"), s["maxx"].alias("maxx"),
-        s["miny"].alias("miny"), s["maxy"].alias("maxy"),
-        F.when(is_rect, xs_plain).otherwise(s["xs"]).alias("xs"),
-        F.when(is_rect, ys_plain).otherwise(s["ys"]).alias("ys"),
-        F.when(is_rect, ro_plain).otherwise(s["ring_offsets"])
-         .alias("ring_offsets"),
-        s["error"].alias("error"))
-    return df.withColumn(col, new)
+         .otherwise(s["kind"]))}
+    if rect_rings:
+        is_rect = s["kind"] == 2
+        rings = {"xs": F.array(s["minx"], s["maxx"], s["maxx"], s["minx"]),
+                 "ys": F.array(s["miny"], s["miny"], s["maxy"], s["maxy"]),
+                 "ring_offsets": F.array(F.lit(0).cast("int"),
+                                         F.lit(4).cast("int"))}
+        changes.update({k: F.when(is_rect, v).otherwise(s[k])
+                        for k, v in rings.items()})
+    return df.withColumn(col, with_fields(s, **changes))
 
 
 def _rect_area(s):

@@ -1,7 +1,7 @@
 """Closure-captured relate refine for broadcast-size shape layers.
 
 The struct refine path (`functions.st_relate_shape_point`) ships every
-shape column — including the POLYGON VERTEX ARRAYS — through Arrow once
+shape field — including the POLYGON VERTEX ARRAYS — through Arrow once
 per candidate row. For a triangle that is noise; for an admin boundary
 with 10^4 vertices replicated across 10^6 candidate points it is the
 dominant Arrow payload of the whole join, paid per row, per batch.
@@ -15,20 +15,21 @@ table ships with the serialized task — the same bytes the broadcast
 was already paying — and each executor deserializes it once per task
 instead of once per candidate row.
 
-Dispatch inside the UDF mirrors `_st_relate_shape_point_udf`: rows
+Dispatch inside the UDF mirrors `st_relate_shape_point`: rows
 group by shape id, each group runs the vectorized kernel for that
 shape's kind in one NumPy call.
 """
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ByteType
 
 from ..kernels import relation as REL
 from ..kernels import wkt as _wkt
+from ..shapes import decode
 
 # guard: beyond this many total vertices the closure (shipped per task)
 # stops being "broadcast-small"; callers fall back to the struct path
@@ -38,47 +39,38 @@ MAX_CLOSURE_VERTICES = 2_000_000
 def collect_shape_table(shapes: DataFrame, shape_id: str,
                         shape_col: str = "shape"):
     """One driver-side pass over the (broadcast-small) shape layer ->
-    {id: (kind, x, y, radius, minx, maxx, miny, maxy, xs, ys, ro)}.
-    Returns None when the layer exceeds MAX_CLOSURE_VERTICES (caller
-    should use the struct refine instead)."""
-    rows = shapes.select(shape_id, shape_col).collect()
-    table = {}
-    total_verts = 0
-    for r in rows:
-        if r[0] is None or r[0] in table:
-            # shape_id must be a unique non-null key: a duplicate would
-            # silently collapse two shapes onto one table entry and
-            # diverge from the struct path — fall back instead.
-            return None
-        s = r[1]
-        xs = np.asarray(s["xs"], dtype=np.float64) if s["xs"] is not None else None
-        ys = np.asarray(s["ys"], dtype=np.float64) if s["ys"] is not None else None
-        ro = (np.asarray(s["ring_offsets"], dtype=np.int64)
-              if s["ring_offsets"] is not None else None)
-        if xs is not None:
-            total_verts += len(xs)
-            if total_verts > MAX_CLOSURE_VERTICES:
-                return None
-        table[r[0]] = (s["kind"], s["x"], s["y"], s["radius"],
-                       s["minx"], s["maxx"], s["miny"], s["maxy"],
-                       xs, ys, ro)
-    return table
+    {id: shape record} (`ShapeBatch.record` dicts: NaN for null
+    scalars, NumPy vertex arrays or None). Returns None when the layer
+    exceeds MAX_CLOSURE_VERTICES (caller should use the struct refine
+    instead)."""
+    t = shapes.select(shape_id, shape_col).toArrow()
+    ids = t.column(0).to_pylist()
+    s = decode(t.column(1))
+    if None in ids or len(set(ids)) != len(ids):
+        # shape_id must be a unique non-null key: a duplicate would
+        # silently collapse two shapes onto one table entry and
+        # diverge from the struct path — fall back instead.
+        return None
+    nverts = np.diff(s.xs.offsets)[s.xs.valid].sum()
+    if nverts > MAX_CLOSURE_VERTICES:
+        return None
+    return {sid: s.record(i) for i, sid in enumerate(ids)}
 
 
 def make_closure_refine(table: dict):
-    """Pandas UDF (shape_id, px, py) -> relation code, with the shape
+    """Arrow UDF (shape_id, px, py) -> relation code, with the shape
     table captured in the closure."""
     from ..kernels.pip import points_in_polygon
     from ..kernels.relate_circle import relate_circle_point
     from ..kernels.relate_line import linestring_contains_point
     from ..kernels.relate_rect import relate_rect_point
 
-    def refine(ids: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
+    def refine(ids: pa.Array, px: pa.Array, py: pa.Array) -> pa.Array:
         n = len(ids)
         out = np.full(n, REL.DISJOINT, dtype=np.int8)
-        idv = ids.to_numpy()
-        pxv = px.to_numpy(dtype=np.float64)
-        pyv = py.to_numpy(dtype=np.float64)
+        idv = ids.to_numpy(zero_copy_only=False)
+        pxv = px.to_numpy(zero_copy_only=False)
+        pyv = py.to_numpy(zero_copy_only=False)
         order = np.argsort(idv, kind="stable")
         sorted_ids = idv[order]
         bounds = np.nonzero(np.r_[True, sorted_ids[1:] != sorted_ids[:-1]])[0]
@@ -88,61 +80,52 @@ def make_closure_refine(table: dict):
             rec = table.get(sorted_ids[bounds[b]])
             if rec is None:
                 continue
-            (kind, sx, sy, rad, minx, maxx, miny, maxy, xs, ys, ro) = rec
+            kind = rec["kind"]
             gx, gy = pxv[rows], pyv[rows]
+            full = lambda v: np.full(len(rows), v)  # noqa: E731
             if kind == _wkt.KIND_RECT:
                 out[rows] = relate_rect_point(
-                    np.full(len(rows), minx), np.full(len(rows), maxx),
-                    np.full(len(rows), miny), np.full(len(rows), maxy),
-                    gx, gy, geo=True)
+                    full(rec["minx"]), full(rec["maxx"]),
+                    full(rec["miny"]), full(rec["maxy"]), gx, gy, geo=True)
             elif kind == _wkt.KIND_CIRCLE:
                 out[rows] = relate_circle_point(
-                    np.full(len(rows), sx), np.full(len(rows), sy),
-                    np.full(len(rows), rad), gx, gy, geo=True)
+                    full(rec["x"]), full(rec["y"]), full(rec["radius"]),
+                    gx, gy, geo=True)
             elif kind == _wkt.KIND_POINT:
-                hit = (gx == sx) & (gy == sy)
+                hit = (gx == rec["x"]) & (gy == rec["y"])
                 out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
             elif kind in (_wkt.KIND_POLYGON, _wkt.KIND_MULTIPOLYGON):
-                hit = points_in_polygon(gx, gy, xs, ys, ro)
+                hit = points_in_polygon(gx, gy, rec["xs"], rec["ys"],
+                                        rec["ring_offsets"])
                 out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
             elif kind == _wkt.KIND_LINESTRING:
-                hit = linestring_contains_point(xs, ys, float(rad or 0.0),
+                rad = 0.0 if np.isnan(rec["radius"]) else float(rec["radius"])
+                hit = linestring_contains_point(rec["xs"], rec["ys"], rad,
                                                 gx, gy)
                 out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
-        return pd.Series(out)
+        return pa.array(out, type=pa.int8())
 
-    return pandas_udf(refine, ByteType())
+    return arrow_udf(refine, ByteType())
 
 
 def make_closure_shape_relate(table: dict):
-    """Pandas UDF (left xs, ys, ring_offsets, right_id) -> relation
-    code, with the RIGHT layer's vertex arrays captured in the closure
-    (two-layer join, broadcast-small right side): per candidate pair
-    only the LEFT shape's arrays cross Arrow."""
+    """Arrow UDF (left shape, right_id) -> relation code, with the
+    RIGHT layer's vertex arrays captured in the closure (two-layer
+    join, broadcast-small right side): per candidate pair only the
+    LEFT shape crosses Arrow."""
     from ..kernels.pip import relate_polygon_polygon
 
-    def relate(axs: pd.Series, ays: pd.Series, aro: pd.Series,
-               rid: pd.Series) -> pd.Series:
-        n = len(axs)
-        out = np.full(n, REL.DISJOINT, dtype=np.int8)
-        axv = axs.to_numpy()
-        ayv = ays.to_numpy()
-        arv = aro.to_numpy()
-        ridv = rid.to_numpy()
-        for i in range(n):
-            rec = table.get(ridv[i])
-            if rec is None:
-                continue
-            bxs, bys, bro = rec[8], rec[9], rec[10]
-            ar = arv[i]
-            out[i] = relate_polygon_polygon(
-                np.asarray(axv[i], dtype=np.float64),
-                np.asarray(ayv[i], dtype=np.float64),
-                np.asarray(ar, dtype=np.int64) if ar is not None else None,
-                bxs, bys, bro)
-        return pd.Series(out)
+    def relate(left: pa.Array, rid: pa.Array) -> pa.Array:
+        a = decode(left)
+        out = np.full(len(a), REL.DISJOINT, dtype=np.int8)
+        for i, r in enumerate(rid.to_pylist()):
+            rec = table.get(r)
+            if rec is not None:
+                out[i] = relate_polygon_polygon(
+                    *a.verts(i), rec["xs"], rec["ys"], rec["ring_offsets"])
+        return pa.array(out, type=pa.int8())
 
-    return pandas_udf(relate, ByteType())
+    return arrow_udf(relate, ByteType())
 
 
 # convex fast path: above this edge count the unrolled JVM predicate
@@ -154,12 +137,13 @@ def _shape_halfplanes(rec, max_edges: int):
     """[(a, b, c), ...] for ONE convex shape, or None if it has no
     half-plane form (non-convex, holed, page-split, too many edges,
     dateline rect, non-areal kind)."""
-    kind, xs, ys, ro = rec[0], rec[8], rec[9], rec[10]
+    kind, xs, ys, ro = rec["kind"], rec["xs"], rec["ys"], rec["ring_offsets"]
     if kind == _wkt.KIND_RECT:
         # a non-crossing rect is 4 axis-aligned half-planes (the closed
         # plain-rect branch of RectangleImpl); a dateline rect needs
         # the x-shift and falls back
-        minx, maxx, miny, maxy = rec[4], rec[5], rec[6], rec[7]
+        minx, maxx, miny, maxy = (rec["minx"], rec["maxx"], rec["miny"],
+                                  rec["maxy"])
         if minx > maxx:
             return None
         return [(1.0, 0.0, -minx), (-1.0, 0.0, maxx),

@@ -103,11 +103,10 @@ def extract_geo_spans(docs: DataFrame) -> DataFrame:
     from typing import Iterator
 
     import pandas as pd
-    from pyspark.sql.types import (ArrayType, ByteType, DoubleType,
-                                   IntegerType, StringType,
-                                   StructField, StructType)
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     from ..kernels.wkt import parse_wkt_columns
+    from ..shapes import FIELD_NAMES, SHAPE_FIELDS, shape_col
 
     span = (docs.select("doc_id", F.posexplode("spans").alias("pos", "span"))
                 .where((F.col("span.kind") == "text")
@@ -117,19 +116,7 @@ def extract_geo_spans(docs: DataFrame) -> DataFrame:
     out_schema = StructType([
         StructField("doc_id", span.schema["doc_id"].dataType),
         StructField("pos", IntegerType()),
-        StructField("kind", ByteType()),
-        StructField("x", DoubleType()),
-        StructField("y", DoubleType()),
-        StructField("radius", DoubleType()),
-        StructField("minx", DoubleType()),
-        StructField("maxx", DoubleType()),
-        StructField("miny", DoubleType()),
-        StructField("maxy", DoubleType()),
-        StructField("xs", ArrayType(DoubleType())),
-        StructField("ys", ArrayType(DoubleType())),
-        StructField("ring_offsets", ArrayType(IntegerType())),
-        StructField("error", StringType()),
-    ])
+        *SHAPE_FIELDS])
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -139,10 +126,8 @@ def extract_geo_spans(docs: DataFrame) -> DataFrame:
             yield out[out["error"].isna()]
 
     flat = span.mapInPandas(gen, out_schema)
-    shape = F.struct(*[F.col(c).alias(c) for c in
-                       ("kind", "x", "y", "radius", "minx", "maxx", "miny",
-                        "maxy", "xs", "ys", "ring_offsets", "error")])
-    return flat.withColumn("shape", shape)
+    return flat.withColumn("shape",
+                           shape_col(**{c: F.col(c) for c in FIELD_NAMES}))
 
 
 def extract_point_spans(docs: DataFrame) -> DataFrame:

@@ -146,13 +146,10 @@ def read_shape(spark: SparkSession, path: str, wkt: str,
     from ..kernels.relation import CONTAINS
     from ..kernels.wkt import parse_shape
     from ..operators.refine import make_closure_refine
+    from ..shapes import decode, encode_records
 
-    rec = parse_shape(wkt)
-    table = {0: (rec["kind"], rec.get("x"), rec.get("y"), rec.get("radius"),
-                 rec["minx"], rec["maxx"], rec["miny"], rec["maxy"],
-                 _np_or_none(rec.get("xs")), _np_or_none(rec.get("ys")),
-                 _np_int_or_none(rec.get("ring_offsets")))}
-    refine = make_closure_refine(table)
+    rec = decode(encode_records([parse_shape(wkt)])).record(0)
+    refine = make_closure_refine({0: rec})
 
     df = spark.read.parquet(path)
     coarse = bbox_code_predicate(rec["minx"], rec["maxx"],
@@ -161,12 +158,3 @@ def read_shape(spark: SparkSession, path: str, wkt: str,
     return (df.where(coarse)
               .where(refine(F.lit(0), F.col(x), F.col(y)) == int(CONTAINS)))
 
-
-def _np_or_none(v):
-    import numpy as np
-    return np.asarray(v, dtype=np.float64) if v is not None else None
-
-
-def _np_int_or_none(v):
-    import numpy as np
-    return np.asarray(v, dtype=np.int64) if v is not None else None

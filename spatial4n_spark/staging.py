@@ -50,17 +50,26 @@ def resolve_stage_dir(spark: SparkSession, stage_dir: str | None) -> str | None:
 def stage(df: DataFrame, name: str, stage_dir: str | None = None) -> DataFrame:
     """Materialize ``df`` and truncate lineage.
 
-    Parquet round-trip under the effective staging directory (unique
-    ``name-N`` subdir per call so repeated stages never collide), else
-    an eager ``localCheckpoint``. Results are identical either way.
+    Parquet round-trip under the effective staging directory (a
+    `stage_path` subdir unique per call and per application, so
+    repeated stages never collide), else an eager ``localCheckpoint``.
+    Results are identical either way.
     """
     spark = df.sparkSession
     d = resolve_stage_dir(spark, stage_dir)
     if d is None:
         return df.localCheckpoint()
-    path = f"{d}/{name}-{next(_seq)}"
+    path = stage_path(d, name, spark.sparkContext.applicationId, next(_seq))
     df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
+
+
+def stage_path(stage_dir: str, name: str, app_id: str, seq: int) -> str:
+    """``{stage_dir}/{name}-{app_id}-{seq}``: `seq` counts per driver
+    process, so the application id is what keeps two concurrent
+    applications sharing one staging directory from overwriting each
+    other's stages."""
+    return f"{stage_dir}/{name}-{app_id}-{seq}"
 
 
 def drop_stage(spark: SparkSession, path: str) -> None:

@@ -211,10 +211,7 @@ def test_st_buffer_polygon_udf(spark):
         ["rid", "wkt", "d"])
     s = SF.st_from_wkt(F.col("wkt"))
     df = df.withColumn("s", s)
-    b = SF.st_buffer(
-        F.col("s.kind"), F.col("s.x"), F.col("s.y"), F.col("s.radius"),
-        F.col("s.minx"), F.col("s.maxx"), F.col("s.miny"), F.col("s.maxy"),
-        F.col("s.xs"), F.col("s.ys"), F.col("s.ring_offsets"), F.col("d"))
+    b = SF.st_buffer(F.col("s"), F.col("d"))
     rows = {r["rid"]: r for r in df.select("rid", b.alias("b")).collect()}
     assert rows[1]["b"]["kind"] == 7
     assert rows[1]["b"]["minx"] == -2.0 and rows[1]["b"]["maxy"] == 12.0
@@ -244,12 +241,8 @@ def test_buffered_polygon_join_end_to_end(spark):
     shapes = spark.createDataFrame(
         [(1, "POLYGON ((0 0, 20 0, 10 16, 0 0))", 2.0)],
         ["sid", "wkt", "d"]).withColumn("s", SF.st_from_wkt(F.col("wkt")))
-    s = F.col("s")
     buffered = shapes.select(
-        "sid",
-        SF.st_buffer(s["kind"], s["x"], s["y"], s["radius"], s["minx"],
-                     s["maxx"], s["miny"], s["maxy"], s["xs"], s["ys"],
-                     s["ring_offsets"], F.col("d")).alias("shape"))
+        "sid", SF.st_buffer(F.col("s"), F.col("d")).alias("shape"))
     # probes: inside original; within the 2-deg band (below the bottom
     # edge); outside the band; near a vertex inside 0.99d
     pts = spark.createDataFrame(
@@ -357,10 +350,7 @@ def test_st_buffer_negative_distances(spark):
     df = spark.createDataFrame(rows, "wkt string, d double")
     s = SF.st_from_wkt(F.col("wkt"))
     df = df.select("d", s.alias("s"))
-    sc = F.col("s")
-    b = SF.st_buffer(sc["kind"], sc["x"], sc["y"], sc["radius"],
-                     sc["minx"], sc["maxx"], sc["miny"], sc["maxy"],
-                     sc["xs"], sc["ys"], sc["ring_offsets"], F.col("d"))
+    b = SF.st_buffer(F.col("s"), F.col("d"))
     got = df.withColumn("b", b).select("b").collect()
     poly, gone, pt_neg, ci_neg, rc_neg = [r["b"] for r in got]
     assert poly["kind"] == 7 and poly["error"] is None
@@ -370,3 +360,25 @@ def test_st_buffer_negative_distances(spark):
     assert pt_neg["error"] and "negative circle radius" in pt_neg["error"]
     assert ci_neg["error"] and "negative circle radius" in ci_neg["error"]
     assert rc_neg["error"] and "maxY" in rc_neg["error"]
+
+
+def test_st_buffer_rect_x_collapse_is_error_row(spark):
+    """A plain rect shrunk past its width (minx=10, maxx=11, d=-2) is
+    an error row like the y-collapse, not a near-world dateline rect;
+    a shrink that keeps some width, and a dateline-crossing rect's
+    legal shrink, still buffer."""
+    from pyspark.sql import functions as F
+
+    from spatial4n_spark import functions as SF
+    rows = [("ENVELOPE(10, 11, 20, -20)", -2.0),
+            ("ENVELOPE(10, 20, 20, -20)", -2.0),
+            ("ENVELOPE(170, -170, 20, -20)", -2.0)]
+    df = spark.createDataFrame(rows, "wkt string, d double")
+    got = [r["b"] for r in df.select(SF.st_buffer(
+        SF.st_from_wkt(F.col("wkt")), F.col("d")).alias("b")).collect()]
+    gone, kept, crossing = got
+    assert gone["kind"] == 0 and "width collapsed" in gone["error"]
+    assert kept["kind"] == 2 and kept["error"] is None
+    assert 10.0 < kept["minx"] < kept["maxx"] < 20.0
+    assert crossing["kind"] == 2 and crossing["error"] is None
+    assert crossing["minx"] > crossing["maxx"]  # still crosses, narrower

@@ -230,11 +230,7 @@ def test_st_center_udf(spark):
     df = spark.createDataFrame([(i, w) for i, (w, _, _) in enumerate(WKT_CASES)],
                                "id int, wkt string")
     s = df.select("id", SF.st_from_wkt(F.col("wkt")).alias("s"))
-    out = (s.select("id", SF.st_center(
-               F.col("s.kind"), F.col("s.x"), F.col("s.y"),
-               F.col("s.minx"), F.col("s.maxx"), F.col("s.miny"),
-               F.col("s.maxy"), F.col("s.xs"), F.col("s.ys"),
-               F.col("s.ring_offsets")).alias("c"))
+    out = (s.select("id", SF.st_center(F.col("s")).alias("c"))
             .orderBy("id").collect())
     for row, (wkt, ex, ey) in zip(out, WKT_CASES):
         assert row["c"]["x"] == pytest.approx(ex, abs=1e-12), wkt

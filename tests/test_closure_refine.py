@@ -215,8 +215,9 @@ def test_convex_halfplanes_agree_with_evenodd_kernel():
         if len(xs) < 3 or len(xs) > 8:
             continue
         ro = np.array([0, len(xs)], dtype=np.int64)
-        table = {1: (KIND_POLYGON, None, None, None,
-                     xs.min(), xs.max(), ys.min(), ys.max(), xs, ys, ro)}
+        table = {1: dict(kind=KIND_POLYGON, minx=xs.min(), maxx=xs.max(),
+                         miny=ys.min(), maxy=ys.max(), xs=xs, ys=ys,
+                         ring_offsets=ro)}
         hp = convex_halfplanes(table)
         assert hp is not None, (trial, len(xs))
         px = rng.uniform(-60, 60, 500)

@@ -1,6 +1,7 @@
 """WKT parse fixtures. Source: Spatial4n.Tests/io/WktShapeParserTest.cs:60-182,
 NtsWktShapeParserTest, NtsGeometryTest.cs:110-133 polygon sanity."""
 import math
+import os
 
 import numpy as np
 import pytest
@@ -135,7 +136,8 @@ def test_dateline_polygon_width180_rule():
 def test_fiji_corpus():
     """Dateline-crossing Fiji multipolygon: smart bbox width < 5 deg and
     contains +-179.99,-16.9 (NtsGeometryTest.cs:227-250)."""
-    with open("/root/reference/Spatial4n.Tests/resources/fiji.wkt.txt") as f:
+    with open(os.path.join(os.path.dirname(__file__), "resources",
+                           "fiji.wkt.txt")) as f:
         txt = f.read().strip()
     d = wkt.parse_shape(txt)
     from spatial4n_spark.kernels.relate_rect import rect_width, relate_rect_point

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from spatial4n_spark import functions as SF
 from spatial4n_spark.kernels.overlay import intersection_area
 from spatial4n_spark.operators.overlay import overlay_intersection_join
+from spatial4n_spark.shapes import shape_col
 
 
 def _rect_wkt(minx, miny, maxx, maxy):
@@ -234,13 +235,11 @@ def test_crossing_rect_area_functions(spark):
             a("aminx"), a("amaxx"), a("aminy"), a("amaxy"),
             a("bminx"), a("bmaxx"), a("bminy"), a("bmaxy")).alias("jvm"),
         SF.st_shape_intersection_area(
-            F.lit(2).cast("byte"), a("aminx"), a("amaxx"), a("aminy"),
-            a("amaxy"), F.lit(None).cast("array<double>"),
-            F.lit(None).cast("array<double>"), F.lit(None).cast("array<int>"),
-            F.lit(2).cast("byte"), a("bminx"), a("bmaxx"), a("bminy"),
-            a("bmaxy"), F.lit(None).cast("array<double>"),
-            F.lit(None).cast("array<double>"),
-            F.lit(None).cast("array<int>")).alias("arrow")).collect()
+            shape_col(kind=2, minx=a("aminx"), maxx=a("amaxx"),
+                      miny=a("aminy"), maxy=a("amaxy")),
+            shape_col(kind=2, minx=a("bminx"), maxx=a("bmaxx"),
+                      miny=a("bminy"), maxy=a("bmaxy"))).alias("arrow")
+    ).collect()
     def arc_overlap(a0, a1raw, b0, b1raw):
         aw = a1raw - a0 + (360 if a1raw < a0 else 0)
         bw = b1raw - b0 + (360 if b1raw < b0 else 0)
@@ -297,12 +296,7 @@ def test_st_intersection_geometry(spark):
     b = SF.st_from_wkt(F.col("bwkt"))
     df = df.select("ekind", "earea", "eerr",
                    a.alias("a"), b.alias("b"))
-    sa, sb = F.col("a"), F.col("b")
-    inter = SF.st_intersection(
-        sa["kind"], sa["minx"], sa["maxx"], sa["miny"], sa["maxy"],
-        sa["xs"], sa["ys"], sa["ring_offsets"],
-        sb["kind"], sb["minx"], sb["maxx"], sb["miny"], sb["maxy"],
-        sb["xs"], sb["ys"], sb["ring_offsets"])
+    inter = SF.st_intersection(F.col("a"), F.col("b"))
     rows = df.withColumn("i", inter).select("ekind", "earea", "eerr", "i") \
              .collect()
     from spatial4n_spark.kernels.overlay import polygon_area_evenodd
@@ -331,6 +325,19 @@ def test_keep_zero_touch_pairs(spark):
     assert drop.count() == 0
     rows = keep.collect()
     assert len(rows) == 1 and rows[0]["inter_area_deg2"] == 0.0
+    # with_geometry: a zero-area pair's geometry is EMPTY (kind 0, no
+    # error) on the declared all-rect path, the mixed path and for
+    # polygons sharing an edge
+    tri_l = _layer(spark, [(0, "POLYGON((0 0, 10 0, 0 10, 0 0))")], "l")
+    tri_r = _layer(spark, [(0, "POLYGON((10 0, 10 10, 0 10, 10 0))")], "r")
+    for lay_l, lay_r, kinds in ((left, right, (2, 2)), (left, right, None),
+                                (tri_l, tri_r, None)):
+        got = overlay_intersection_join(lay_l, lay_r, precision=2,
+                                        keep_zero=True, with_geometry=True,
+                                        shape_kinds=kinds).collect()
+        assert len(got) == 1 and got[0]["inter_area_deg2"] == 0.0, kinds
+        g = got[0]["inter_shape"]
+        assert g["kind"] == 0 and g["error"] is None, (kinds, g)
 
 
 def test_st_difference_area(spark):
@@ -343,12 +350,8 @@ def test_st_difference_area(spark):
     df = spark.createDataFrame(rows, "awkt string, bwkt string, exp double")
     df = df.select("exp", SF.st_from_wkt(F.col("awkt")).alias("a"),
                    SF.st_from_wkt(F.col("bwkt")).alias("b"))
-    sa, sb = F.col("a"), F.col("b")
     out = df.withColumn("d", SF.st_difference_area(
-        sa["kind"], sa["minx"], sa["maxx"], sa["miny"], sa["maxy"],
-        sa["xs"], sa["ys"], sa["ring_offsets"],
-        sb["kind"], sb["minx"], sb["maxx"], sb["miny"], sb["maxy"],
-        sb["xs"], sb["ys"], sb["ring_offsets"])).collect()
+        F.col("a"), F.col("b"))).collect()
     for r in out:
         assert r["d"] == pytest.approx(r["exp"], abs=1e-9)
 
@@ -407,12 +410,7 @@ def test_st_difference_geometry(spark):
     df = df.select("ekind", "earea",
                    SF.st_from_wkt(F.col("awkt")).alias("a"),
                    SF.st_from_wkt(F.col("bwkt")).alias("b"))
-    sa, sb = F.col("a"), F.col("b")
-    args = [sa["kind"], sa["minx"], sa["maxx"], sa["miny"], sa["maxy"],
-            sa["xs"], sa["ys"], sa["ring_offsets"],
-            sb["kind"], sb["minx"], sb["maxx"], sb["miny"], sb["maxy"],
-            sb["xs"], sb["ys"], sb["ring_offsets"]]
-    rows = df.withColumn("d", SF.st_difference(*args)) \
+    rows = df.withColumn("d", SF.st_difference(F.col("a"), F.col("b"))) \
              .select("ekind", "earea", "d").collect()
     from spatial4n_spark.kernels.overlay import polygon_area_evenodd
     for r in rows:
@@ -446,12 +444,7 @@ def test_st_union_geometry(spark):
     df = df.select("earea",
                    SF.st_from_wkt(F.col("awkt")).alias("a"),
                    SF.st_from_wkt(F.col("bwkt")).alias("b"))
-    sa, sb = F.col("a"), F.col("b")
-    u = SF.st_union(
-        sa["kind"], sa["minx"], sa["maxx"], sa["miny"], sa["maxy"],
-        sa["xs"], sa["ys"], sa["ring_offsets"],
-        sb["kind"], sb["minx"], sb["maxx"], sb["miny"], sb["maxy"],
-        sb["xs"], sb["ys"], sb["ring_offsets"])
+    u = SF.st_union(F.col("a"), F.col("b"))
     rows = df.withColumn("u", u).select("earea", "u").collect()
     from spatial4n_spark.kernels.area import polygon_area_euclid
     for r in rows:

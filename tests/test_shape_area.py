@@ -96,11 +96,7 @@ def test_st_area_udf(spark):
     df = spark.createDataFrame([(i, w) for i, (w, _) in enumerate(cases)],
                                "id int, wkt string")
     s = df.select("id", SF.st_from_wkt(F.col("wkt")).alias("s"))
-    rows = (s.select("id", SF.st_area(
-                F.col("s.kind"), F.col("s.radius"), F.col("s.minx"),
-                F.col("s.maxx"), F.col("s.miny"), F.col("s.maxy"),
-                F.col("s.xs"), F.col("s.ys"), F.col("s.ring_offsets"),
-                geo=True).alias("a"))
+    rows = (s.select("id", SF.st_area(F.col("s"), geo=True).alias("a"))
             .orderBy("id").collect())
     for row, (wkt, exp) in zip(rows, cases):
         assert row["a"] == pytest.approx(exp, abs=1e-9), wkt

@@ -132,9 +132,11 @@ def test_st_simplify_spark(spark):
     from pyspark.sql import functions as F
 
     from spatial4n_spark import functions as SF
+    from spatial4n_spark.shapes import shape_col
     df = spark.createDataFrame(pdf)
-    out = df.select("id", SF.st_simplify(
-        F.col("xs"), F.col("ys"), F.col("ring_offsets"), 0.15).alias("s")) \
+    shape = shape_col(kind=7, xs=F.col("xs"), ys=F.col("ys"),
+                      ring_offsets=F.col("ring_offsets"))
+    out = df.select("id", SF.st_simplify(shape, 0.15).alias("s")) \
         .orderBy("id").collect()
     got = out[0]["s"]
     ex, ey = simp.simplify_ring(xs, ys, 0.15)

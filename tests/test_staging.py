@@ -6,7 +6,8 @@ import os
 
 import pytest
 
-from spatial4n_spark.staging import STAGE_CONF, resolve_stage_dir, stage
+from spatial4n_spark.staging import (STAGE_CONF, resolve_stage_dir, stage,
+                                     stage_path)
 
 
 @pytest.fixture
@@ -35,6 +36,23 @@ def test_stage_roundtrip_writes_parquet(spark, stage_conf):
     assert _rowset(out) == _rowset(df)
     stages = [p for p in os.listdir(stage_conf) if p.startswith("unit-")]
     assert len(stages) == 1
+
+
+def test_stage_paths_namespaced_by_application():
+    """Two applications sharing a staging directory, each at the same
+    per-process counter value, stage to different paths."""
+    a = stage_path("/shared/stage", "lsh_bands", "local-1700000000001", 0)
+    b = stage_path("/shared/stage", "lsh_bands", "local-1700000000002", 0)
+    assert a != b
+    for p, app in ((a, "local-1700000000001"), (b, "local-1700000000002")):
+        assert p.startswith("/shared/stage/lsh_bands-") and app in p
+
+
+def test_stage_writes_under_this_application(spark, stage_conf):
+    stage(spark.range(3), "appcheck")
+    app = spark.sparkContext.applicationId
+    assert any(p.startswith(f"appcheck-{app}-")
+               for p in os.listdir(stage_conf))
 
 
 def _docs(spark):
