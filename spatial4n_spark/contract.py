@@ -2949,7 +2949,7 @@ def _dissolve_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifts r3 away so the union goes multipart), dissolved per nation;
     the exact union area has a closed inclusion-exclusion form over
     axis-aligned rects, which is the DuckDB oracle. Verifies the full
-    path: rect members -> rings -> GH planarized union -> evenodd
+    path: rect members -> rings -> noded overlay union -> evenodd
     shoelace area, plus union bbox, part-kind (7 chain / 8 multipart),
     member count and the exact flag."""
     from . import functions as SF
@@ -3075,11 +3075,11 @@ def q_extent_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 5: + the boolean GEOMETRY family (st_intersection /
     st_difference / st_union over a holed polygon x crossing rect-
-    polygon, kernels/booleans member algebra). All rings are
+    polygon, kernels/booleans noded overlay). All rings are
     axis-aligned with strictly transversal contact, so every output
     area has a closed inclusion-exclusion form the DuckDB oracle
     states directly; ring counts pin the member structure (C-cut
-    core, single-ring difference, 4-ring three-member union)."""
+    core, single-ring difference, shell-plus-hole union)."""
     a = q_extent_agg(spark, sf_dir)
     b = q_collection_relate(spark, sf_dir) \
         .withColumnRenamed("nationkey", "c_nationkey")

@@ -1037,11 +1037,11 @@ def _paged_intersection_area(pa_, pb):
 def st_shape_intersection_area(a: pa.Array, b: pa.Array) -> pa.Array:
     """Kind-dispatching intersection area (deg^2) over shape structs:
     rect x rect / rect x polygon / polygon x polygon, dateline-crossing
-    rects paged. The kernel (kernels/overlay.py: Green's theorem over
-    boundary sub-segments) is robust to holes, multiparts, shared edges
-    and A == B, with no degenerate bailout. Measure-zero kinds
-    (point/line) give 0.0; kinds without a polygonal footprint
-    (circle/collection/empty) give null."""
+    rects paged. The kernel (the noded overlay of kernels/booleans.py,
+    Green's theorem over the kept boundary pieces) is robust to holes,
+    multiparts, shared edges and A == B, with no degenerate bailout.
+    Measure-zero kinds (point/line) give 0.0; kinds without a polygonal
+    footprint (circle/collection/empty) give null."""
     sa, sb = decode(a), decode(b)
     return _doubles([_paged_intersection_area(_area_pages(sa, i),
                                               _area_pages(sb, i))
@@ -1051,86 +1051,48 @@ def st_shape_intersection_area(a: pa.Array, b: pa.Array) -> pa.Array:
 @arrow_udf(SHAPE_SCHEMA)
 def st_intersection(a: pa.Array, b: pa.Array) -> pa.Array:
     """Intersection GEOMETRY of two polygons/rects as a shape struct —
-    concave, HOLED, MULTIPART and dateline-paged inputs included
-    (round 5: kernels/booleans.intersect_evenodd, the member-algebra
-    extension of the Greiner–Hormann kernels — the r4 version accepted
-    only simple single rings). kind 7 for one output member
-    (shell + holes), kind 8 for several (interlocking C-shapes,
-    multipart inputs, hole-pinched islands), kind 0 (EMPTY) for a
-    disjoint pair. Dateline-crossing rects page-split like the WKT
-    parser, so paged inputs meet paged outputs consistently.
-
-    Honest contract: degenerate boundary contact (shared vertices,
-    collinear overlapping edges) still returns an error row — the
-    exact MEASURE for those inputs is `st_shape_intersection_area` /
-    `st_overlay_measure`, which has no such bailout."""
-    from ..kernels.booleans import intersect_evenodd
-    return _boolean_geometry(intersect_evenodd, a, b, robust_op="and")
+    concave, HOLED, MULTIPART and dateline-paged inputs, shared edges
+    and vertex touches included (kernels/booleans, the noded overlay
+    kernel that also backs `st_shape_intersection_area`, so geometry
+    and measure agree). kind 7 for one output member (shell + holes),
+    kind 8 for several (interlocking C-shapes, multipart inputs,
+    hole-pinched islands, vertex-touching pieces), kind 0 (EMPTY) for
+    a pair whose interiors are disjoint. Dateline-crossing rects
+    page-split like the WKT parser, so paged inputs meet paged outputs
+    consistently. An error row is left only for kinds without
+    polygonal geometry and for a stitch the kernel cannot close."""
+    return _boolean_geometry("and", a, b)
 
 
 @arrow_udf(SHAPE_SCHEMA)
 def st_difference(a: pa.Array, b: pa.Array) -> pa.Array:
-    """Difference GEOMETRY A \\ B as a shape struct (round 5 —
-    completes the boolean set: union at parse/dissolve, intersection,
-    difference). Same input coverage and error contract as
-    `st_intersection`; kernels/booleans.difference_evenodd. The scalar
-    twin `st_difference_area` remains the no-bailout MEASURE."""
-    from ..kernels.booleans import difference_evenodd
-    return _boolean_geometry(difference_evenodd, a, b, robust_op="sub")
+    """Difference GEOMETRY A \\ B as a shape struct. Same kernel,
+    input coverage and error contract as `st_intersection`; the scalar
+    twin `st_difference_area` is the matching MEASURE."""
+    return _boolean_geometry("sub", a, b)
 
 
 @arrow_udf(SHAPE_SCHEMA)
 def st_union(a: pa.Array, b: pa.Array) -> pa.Array:
-    """Union GEOMETRY A ∪ B as a shape struct (round 5). REGION-exact
-    for concave/holed/multipart/paged pairs (even-odd parity == in-A
-    or in-B); the boundary keeps seam arcs where B\\A pieces meet ∂A —
-    see kernels/booleans.union_evenodd. For a clean dissolved boundary
-    on crossing single-ring members use `dissolve` / the parser's
-    multi-overlap union; same degenerate-contact error contract as
-    st_intersection."""
-    from ..kernels.booleans import union_evenodd
-    return _boolean_geometry(union_evenodd, a, b, robust_op="or",
-                             robust_first=True)
+    """Union GEOMETRY A ∪ B as a shape struct with a canonical
+    dissolved boundary: shared edges between A and B are removed, not
+    kept as seams. Same kernel, input coverage and error contract as
+    `st_intersection`."""
+    return _boolean_geometry("or", a, b)
 
 
 @arrow_udf(SHAPE_SCHEMA)
 def st_sym_difference(a: pa.Array, b: pa.Array) -> pa.Array:
-    """Symmetric difference GEOMETRY A △ B (round 5 — closes the
-    boolean algebra: union, intersection, difference, symmetric
-    difference). (A\\B) ⊔ (B\\A), disjoint member concat; same input
-    coverage and error contract as st_intersection."""
-    from ..kernels.booleans import sym_difference_evenodd
-    return _boolean_geometry(sym_difference_evenodd, a, b, robust_op="xor",
-                             robust_first=True)
+    """Symmetric difference GEOMETRY A △ B as a shape struct. Same
+    kernel, input coverage and error contract as `st_intersection`."""
+    return _boolean_geometry("xor", a, b)
 
 
-def _boolean_geometry(op, a, b, robust_op=None,
-                      robust_first=False) -> pa.StructArray:
+def _boolean_geometry(op, a, b) -> pa.StructArray:
     """Shared per-row driver for the boolean geometry UDFs: shape
-    structs -> even-odd rings -> member op -> closed-ring struct.
-
-    `robust_op` names the boundary-selection overlay op (round 5,
-    kernels/booleans.robust_boolean) used when the GH member algebra
-    hits degenerate boundary contact — shared vertices and collinear
-    overlapping edges (adjacent parcels!) now produce geometry instead
-    of error rows. `robust_first=True` makes it the PRIMARY path
-    (union / symmetric difference: the member-algebra composition
-    leaves seam arcs, the boundary selection is canonical), with the
-    member algebra as ITS fallback."""
+    structs -> even-odd rings -> noded overlay `op` -> members ->
+    closed-ring struct."""
     from ..kernels.booleans import members_of_robust, robust_boolean
-
-    def _run(rings_a, rings_b):
-        def gh():
-            return op(rings_a, rings_b)
-
-        def robust():
-            if robust_op is None:
-                return None
-            r = robust_boolean(rings_a, rings_b, robust_op)
-            return None if r is None else members_of_robust(r)
-        first, second = (robust, gh) if robust_first else (gh, robust)
-        m = first()
-        return m if m is not None else second()
     sa, sb = decode(a), decode(b)
     recs: list = [None] * len(sa)
     errs: list = [None] * len(sa)
@@ -1140,9 +1102,10 @@ def _boolean_geometry(op, a, b, robust_op=None,
         except ValueError as e:
             errs[i] = str(e)
             continue
-        members = _run(rings_a, rings_b)
+        rings = robust_boolean(rings_a, rings_b, op)
+        members = None if rings is None else members_of_robust(rings)
         if members is None:
-            errs[i] = "degenerate boundary contact"
+            errs[i] = "overlay: result rings did not stitch or nest"
         elif members:
             recs[i] = closed_rings_record(members)
     return encode_records(recs, errs)
@@ -1152,8 +1115,8 @@ def _evenodd_rings(s, i):
     """Even-odd ring list [(xs, ys), ...] of row i, or ValueError for
     kinds without polygonal geometry. Dateline-crossing rects
     page-split into two rings (the WKT parser's convention); EMPTY
-    (kind 0) is the empty ring set — the boolean member algebra then
-    gives NTS parity for free (A ∩ ∅ = ∅, A \\ ∅ = A ∪ ∅ = A)."""
+    (kind 0) is the empty ring set — the overlay kernel then gives NTS
+    parity for free (A ∩ ∅ = ∅, A \\ ∅ = A ∪ ∅ = A)."""
     kind = s.kind[i]
     if kind == 0:
         return []

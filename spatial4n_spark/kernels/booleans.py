@@ -1,485 +1,360 @@
-r"""Even-odd boolean geometry: exact intersection of two arbitrary
-even-odd ring sets (concave, holed, multipart, nested islands).
+r"""Noded overlay kernel: the AREA and the GEOMETRY of A ∩ B, A \ B,
+A ∪ B and A △ B for two even-odd ring sets (concave, holed, multipart,
+nested islands, shared edges, vertex touches) from one noding pass.
 
-Round-5 extension of the Greiner–Hormann kernels (kernels/union.py) —
-the geometry twin of the overlay AREA kernel (kernels/overlay.py),
-which reference users get from NTS `Geometry.Intersection`
-(Spatial4n.Core.NTS/Shapes/Nts/NtsGeometry.cs relate/op surface).
+Reference parity target: NTS `Geometry.Intersection` / `Difference` /
+`Union` / `SymDifference` (Spatial4n.Core.NTS/Shapes/Nts/NtsGeometry.cs
+op surface). The noder follows the snap-rounding design (Hobby 1999;
+Hershberger 2013): every contact is computed once and near-coincident
+points share one node, so degenerate contact is a structural fact
+instead of a float comparison.
 
-Method: decompose each even-odd ring set into MEMBERS (shell + its
-immediate holes; islands nested in holes are members of their own).
-Members of one set have disjoint interiors, so intersection
-distributes: A ∩ B = ⊔ (Ma ∩ Nb) — the member-pair results simply
-concatenate, no re-union needed. One member pair is
+1. Node. Every boundary edge of both operands is split in one
+   vectorized pass at every proper crossing with another edge and at
+   every vertex lying within the snap tolerance of it (vertex touches,
+   collinear overlaps, T-junctions). Candidate points closer than the
+   tolerance merge into one node; an input vertex wins over a computed
+   crossing, so output rings keep input coordinates. The tolerance is
+   the fixed fraction `_SNAP_REL` of the pair's bbox extent.
+2. Node ids. A sub-segment is an integer node-id pair. A piece of
+   boundary both operands share is ONE key with a coverage count per
+   operand; coverage parity (a ring running a piece twice cancels) is
+   the piece's membership in that operand's boundary.
+3. Classify. One batched ray cast against all other pieces gives the
+   even-odd parity of A and of B just beside every piece (an x-ray for
+   steep pieces, a y-ray for flat ones); the far side flips by the
+   coverage parity. A piece is kept iff the op's region lies on exactly
+   one side, directed so that region is on its LEFT.
+4. Serve. AREA is the Green's-theorem sum over the kept pieces (no
+   stitch). GEOMETRY stitches kept pieces by node id: around a node the
+   kept pieces alternate in/out, and an incoming piece continues with
+   the next outgoing piece clockwise (one np.lexsort on (node, angle)),
+   which closes each region sector and splits figure-eight touches into
+   separate rings. Shells come out CCW, holes CW.
 
-    (Sa \ Ha) ∩ (Sb \ Hb) = (Sa ∩ Sb) \ (Ha ∪ Hb)
-
-computed as: GH ring intersection for the cores, union_many for the
-combined hole set (holes of ONE member are disjoint, but Ha and Hb may
-overlap each other), then sequential GH ring DIFFERENCE of the
-disjoint hole-union primaries from each core. Pocket rings the hole
-union pinches off (two interlocking C-holes) are regions the holes do
-NOT cover: they are clipped to the core and re-added as island
-members. Any degenerate boundary contact anywhere returns None — the
-caller reports an honest error row; the exact AREA for such inputs is
-kernels/overlay.intersection_area, which has no bailout.
-
-Scale note: runs per candidate pair inside an Arrow batch; cost is
-O(|A|·|B|) crossing detection per ring pair on shapes that are tiny
-next to the row counts around them (same contract as union.py).
+Scale note: runs per candidate pair inside an Arrow batch. Contact
+candidates are bbox-culled over the (edges x edges) grid and the
+classification is one (pieces x pieces) pass, both blocked so large
+rings never materialize gigabyte grids.
 """
 from __future__ import annotations
 
 import numpy as np
 
-from .union import (_open_ccw, _point_in_ring_strict, difference_rings,
-                    intersect_rings, union_many)
-
-
-def _depths(rings):
-    """Containment depth of each ring's first vertex vs the others.
-    Valid even-odd input: rings never cross, so first-vertex parity is
-    the ring's nesting depth."""
-    out = []
-    for k, (rx, ry) in enumerate(rings):
-        d = 0
-        for j, (ox, oy) in enumerate(rings):
-            if j != k and _point_in_ring_strict(rx[0], ry[0], ox, oy):
-                d += 1
-        out.append(d)
-    return out
-
-
-def members_of(rings):
-    """Group an even-odd ring list into members [(shell, [holes])].
-    Even-depth rings are shells; each odd-depth ring attaches to its
-    deepest containing shell (its immediate parent)."""
-    opened = [_open_ccw(np.asarray(rx, dtype=np.float64),
-                        np.asarray(ry, dtype=np.float64))
-              for rx, ry in rings]
-    depth = _depths(opened)
-    members = []
-    shell_idx = []
-    for i, (r, d) in enumerate(zip(opened, depth)):
-        if d % 2 == 0:
-            members.append((r, []))
-            shell_idx.append(i)
-    for i, (r, d) in enumerate(zip(opened, depth)):
-        if d % 2 == 1:
-            parent, pdepth = None, -1
-            for m, si in enumerate(shell_idx):
-                sx, sy = opened[si]
-                if depth[si] == d - 1 and _point_in_ring_strict(
-                        r[0][0], r[1][0], sx, sy):
-                    if depth[si] > pdepth:
-                        parent, pdepth = m, depth[si]
-            if parent is None:
-                return None  # inconsistent nesting (invalid input)
-            members[parent][1].append(r)
-    return members
-
-
-def _split_shells_holes(pieces):
-    """Classify a GH output ring list into (shells, holes) by nesting
-    parity within the list."""
-    depth = _depths(pieces)
-    shells = [r for r, d in zip(pieces, depth) if d % 2 == 0]
-    holes = [r for r, d in zip(pieces, depth) if d % 2 == 1]
-    return shells, holes
-
-
-def _cores_minus_holes(cores, holes):
-    """Region (⊔ cores) \\ (⋃ holes) as a member list, or None on
-    degenerate contact. Cores must be disjoint simple rings; holes of
-    one origin set are disjoint, but the combined list may overlap —
-    it is unioned first so even-odd parity never double-flips."""
-    if not cores:
-        return []
-    prim, pock = [], []
-    if len(holes) == 1:
-        prim = [holes[0]]
-    elif holes:
-        u = union_many(holes)
-        if u is None:
-            return None
-        prim, pock = _split_shells_holes(u)
-    out_members = []
-    for cx, cy in cores:
-        state = [((cx, cy), [])]
-        for px, py in prim:
-            new_state = []
-            for (shx, shy), hl in state:
-                pieces = difference_rings(shx, shy, px, py)
-                if pieces is None:
-                    return None
-                if not pieces:
-                    continue  # this shell is consumed by the hole
-                shells, new_holes = _split_shells_holes(pieces)
-                for s2x, s2y in shells:
-                    hset = [h for h in hl + new_holes
-                            if _point_in_ring_strict(h[0][0], h[1][0],
-                                                     s2x, s2y)]
-                    new_state.append(((s2x, s2y), hset))
-            state = new_state
-        out_members.extend(state)
-    # pocket rings of the hole union are NOT hole-covered: the
-    # sequential disk subtraction above removed them with their
-    # enclosing primary, so re-add them clipped to each core as
-    # island members (a pocket contains no further holes — every
-    # input hole is inside the union region, pockets are outside it)
-    for pxr, pyr in pock:
-        for cx, cy in cores:
-            isl = intersect_rings(pxr, pyr, cx, cy)
-            if isl is None:
-                return None
-            for s2 in isl:
-                out_members.append((s2, []))
-    return out_members
-
-
-def _member_intersection(sa, ha, sb, hb):
-    """One member pair -> list of output members, or None on
-    degenerate contact: (Sa ∩ Sb) \\ (Ha ∪ Hb)."""
-    cores = intersect_rings(sa[0], sa[1], sb[0], sb[1])
-    if cores is None:
-        return None
-    return _cores_minus_holes(cores, ha + hb)
-
-
-def difference_evenodd(rings_a, rings_b):
-    """Exact difference geometry A \\ B of two even-odd ring sets.
-
-    Distributes over A's members; B's members subtract sequentially
-    (they are interior-disjoint). One step is
-
-        M \\ (T \\ Ht) = (M \\ T)  ⊔  ⊔_j (M ∩ Ht_j)
-
-    — the piece of M outside N's shell, plus the pieces of M inside
-    N's holes (disjoint by construction). M \\ T reuses the
-    cores-minus-holes machinery with T joined to M's own hole set;
-    M ∩ Ht_j is a member intersection with the hole as a plain disk.
-    Returns a member list like intersect_evenodd, [] when B covers A,
-    or None on degenerate boundary contact anywhere.
-    """
-    ma = members_of(rings_a)
-    mb = members_of(rings_b)
-    if ma is None or mb is None:
-        return None
-    work = ma
-    for tb, ht in mb:
-        new_work = []
-        for sh, hs in work:
-            outside = _cores_minus_holes([sh], hs + [tb])
-            if outside is None:
-                return None
-            new_work.extend(outside)
-            for hj in ht:
-                inside_hole = _member_intersection(sh, hs, hj, [])
-                if inside_hole is None:
-                    return None
-                new_work.extend(inside_hole)
-        work = new_work
-    return work
-
-
-def union_evenodd(rings_a, rings_b):
-    """Union geometry A ∪ B of two even-odd ring sets, as
-    A ⊔ (B \\ A) — members of A plus the pieces of B outside A.
-
-    REGION-exact: even-odd parity over the output rings equals
-    (in A) or (in B) everywhere off the boundaries. The boundary is
-    NOT canonical: where B \\ A pieces meet A, their rings run along
-    ∂A inside the union (seam arcs) instead of being dissolved away —
-    fine for PIP/area/parity consumers; use the parser's
-    `_resolve_multi_overlap` / `dissolve` when a clean dissolved
-    boundary is required (single-ring crossings get exact GH unions
-    there). Returns a member list, or None on degenerate contact.
-    """
-    ma = members_of(rings_a)
-    if ma is None:
-        return None
-    rest = difference_evenodd(rings_b, rings_a)
-    if rest is None:
-        return None
-    out = [(sh, list(hl)) for sh, hl in ma + rest]
-    # cancel coincident hole/shell pairs: a hole of A fully covered by
-    # B comes back as a B\A piece whose shell is the IDENTICAL ring —
-    # parity-correct but per-ring signs (area, orientation) become
-    # ill-defined on coincident curves. Fill the hole structurally:
-    # drop both rings, promote the piece's holes into the member.
-    changed = True
-    while changed:
-        changed = False
-        for mi, (sh, hl) in enumerate(out):
-            for hi, h in enumerate(hl):
-                key = _canon_cycle(*h)
-                hit = next((pj for pj, (psh, _) in enumerate(out)
-                            if pj != mi and _canon_cycle(*psh) == key),
-                           None)
-                if hit is not None:
-                    hl.pop(hi)
-                    hl.extend(out[hit][1])
-                    out.pop(hit)
-                    changed = True
-                    break
-            if changed:
-                break
-    return out
-
-
-def _canon_cycle(rx, ry):
-    """Orientation- and rotation-independent canonical form of a ring
-    (open vertex list) for exact-coincidence tests."""
-    pts = list(zip(rx.tolist(), ry.tolist()))
-    n = len(pts)
-    k = min(range(n), key=lambda i: pts[i])
-    fwd = tuple(pts[(k + i) % n] for i in range(n))
-    rev = tuple(pts[(k - i) % n] for i in range(n))
-    return min(fwd, rev)
-
-
-def sym_difference_evenodd(rings_a, rings_b):
-    """Symmetric difference geometry A △ B = (A \\ B) ⊔ (B \\ A) — the
-    two operands are disjoint regions, so their member lists simply
-    concatenate. Same seam-boundary caveat as union_evenodd where a
-    piece meets the other set's boundary. None on degenerate contact."""
-    ab = difference_evenodd(rings_a, rings_b)
-    if ab is None:
-        return None
-    ba = difference_evenodd(rings_b, rings_a)
-    if ba is None:
-        return None
-    return ab + ba
-
-
-def intersect_evenodd(rings_a, rings_b):
-    """Exact intersection geometry of two even-odd ring sets.
-
-    rings_a / rings_b: lists of (xs, ys) rings (open or closed, any
-    orientation). Returns a list of members [(shell, [holes])] whose
-    concatenated rings are the even-odd form of A ∩ B — [] when the
-    interiors are disjoint — or None on degenerate boundary contact
-    (shared vertices / collinear overlapping edges) anywhere.
-    """
-    ma = members_of(rings_a)
-    mb = members_of(rings_b)
-    if ma is None or mb is None:
-        return None
-    out = []
-    for sa, ha in ma:
-        for sb, hb in mb:
-            res = _member_intersection(sa, ha, sb, hb)
-            if res is None:
-                return None
-            out.extend(res)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Robust boundary-selection overlay (round 5, second half).
-#
-# The Greiner–Hormann member algebra above is exact but BAILS on
-# degenerate boundary contact (shared vertices, collinear overlapping
-# edges) — extremely common in real data (adjacent parcels, tiled
-# admin layers). This fallback computes the same four boolean ops by
-# BOUNDARY SELECTION instead of traversal, the technique the overlay
-# AREA kernel already uses for its no-bailout guarantee:
-#
-#   1. split every edge of A at every contact with ∂B and vice versa
-#      (pip._edge_split_ts: crossings, touch points, collinear-overlap
-#      endpoints — sub-segment region status is then constant);
-#   2. classify each sub-segment's two sides with distance-guarded
-#      offset probes (a tolerance ladder like _ring_contained_in);
-#      keep it iff exactly one side is in the result region, directed
-#      so the region lies on the LEFT;
-#   3. dedupe shared segments (a collinear-shared piece is emitted by
-#      both boundaries with the same verdict);
-#   4. stitch directed sub-segments into rings; at touch nodes with
-#      several continuations take the most counterclockwise turn,
-#      which keeps the left-side region consistent through
-#      figure-eight contacts.
-#
-# Unclassifiable probes or a broken stitch return None — callers keep
-# the honest error-row contract for anything this cannot settle.
-# ---------------------------------------------------------------------------
+# snap tolerance as a fraction of the pair's bbox extent
+_SNAP_REL = 1e-9
 
 _OPS = {
-    "and": lambda a, b: a and b,
-    "or": lambda a, b: a or b,
-    "sub": lambda a, b: a and not b,
-    "xor": lambda a, b: a != b,
+    "and": lambda a, b: a & b,
+    "or": lambda a, b: a | b,
+    "sub": lambda a, b: a & ~b,
+    "xor": lambda a, b: a ^ b,
 }
 
-
-def _soup_of(rings):
-    from .union import _roll1
-    if not rings:
-        z = np.empty(0, dtype=np.float64)
-        return z, z, z, z
-    xs = np.concatenate([r[0] for r in rings])
-    ys = np.concatenate([r[1] for r in rings])
-    x2 = np.concatenate([_roll1(r[0]) for r in rings])
-    y2 = np.concatenate([_roll1(r[1]) for r in rings])
-    return xs, ys, x2, y2
+_BLOCK = 1_000_000  # grid cells per vectorized block
 
 
-def _soup_parity(qx, qy, soup):
-    sx0, sy0, sx1, sy1 = soup
-    if len(sx0) == 0:
-        return False
-    active = (sy0 > qy) != (sy1 > qy)
-    if not active.any():
-        return False
-    xat = sx0[active] + (qy - sy0[active]) * (sx1[active] - sx0[active]) \
-        / (sy1[active] - sy0[active])
-    return bool((qx < xat).sum() & 1)
+def _vertices(rings_a, rings_b):
+    """Flat vertices of both operands: x, y, index of the next vertex
+    around the same ring, and the operand (0 = A, 1 = B) per vertex.
+    Closing duplicates and rings under three vertices are dropped."""
+    xs, ys, nxt, opnd = [], [], [], []
+    base = 0
+    for k, rings in enumerate((rings_a, rings_b)):
+        for rx, ry in rings:
+            rx = np.asarray(rx, dtype=np.float64)
+            ry = np.asarray(ry, dtype=np.float64)
+            if len(rx) >= 2 and rx[0] == rx[-1] and ry[0] == ry[-1]:
+                rx, ry = rx[:-1], ry[:-1]
+            n = len(rx)
+            if n < 3:
+                continue
+            nx = np.arange(base + 1, base + n + 1)
+            nx[-1] = base
+            xs.append(rx)
+            ys.append(ry)
+            nxt.append(nx)
+            opnd.append(np.full(n, k, dtype=np.int8))
+            base += n
+    if not xs:
+        return None
+    return (np.concatenate(xs), np.concatenate(ys), np.concatenate(nxt),
+            np.concatenate(opnd))
 
 
-def _soup_min_dist2(qx, qy, soup):
-    sx0, sy0, sx1, sy1 = soup
-    if len(sx0) == 0:
-        return np.inf
-    dx, dy = sx1 - sx0, sy1 - sy0
-    L2 = dx * dx + dy * dy
-    L2s = np.where(L2 == 0.0, 1.0, L2)
-    t = np.clip(((qx - sx0) * dx + (qy - sy0) * dy) / L2s, 0.0, 1.0)
-    d2 = (qx - (sx0 + t * dx)) ** 2 + (qy - (sy0 + t * dy)) ** 2
-    return float(d2.min())
+def _box_pairs(ax0, ax1, ay0, ay1, bx0, bx1, by0, by1):
+    """Index pairs (i, j) whose closed boxes a_i and b_j meet."""
+    out_i, out_j = [], []
+    step = max(1, _BLOCK // max(1, len(bx0)))
+    for s in range(0, len(ax0), step):
+        sl = slice(s, s + step)
+        hit = ((ax0[sl, None] <= bx1) & (bx0 <= ax1[sl, None])
+               & (ay0[sl, None] <= by1) & (by0 <= ay1[sl, None]))
+        i, j = np.nonzero(hit)
+        out_i.append(i + s)
+        out_j.append(j)
+    return np.concatenate(out_i), np.concatenate(out_j)
+
+
+def _cluster(cx, cy, tol):
+    """Label every candidate point with the smallest index of the
+    points it is chained to by distance <= tol."""
+    n = len(cx)
+    lab = np.arange(n)
+    # sort by (tol-wide x column, y): near pairs sit in one column or
+    # the next, within tol in y — found by lexicographic searchsorted
+    key = np.floor(cx / tol) + 1j * cy
+    order = np.argsort(key)
+    skey = key[order]
+    pa, pb = [], []
+    for dcol in (0.0, 1.0):
+        lo = np.searchsorted(skey, skey.real + dcol + 1j * (skey.imag - tol),
+                             side="left")
+        hi = np.searchsorted(skey, skey.real + dcol + 1j * (skey.imag + tol),
+                             side="right")
+        if dcol == 0.0:
+            lo = np.maximum(lo, np.arange(n) + 1)
+        cnt = np.maximum(hi - lo, 0)
+        tot = int(cnt.sum())
+        if tot:
+            a = np.repeat(np.arange(n), cnt)
+            b = np.repeat(lo, cnt) + (np.arange(tot)
+                                      - np.repeat(np.cumsum(cnt) - cnt, cnt))
+            pa.append(order[a])
+            pb.append(order[b])
+    if not pa:
+        return lab
+    pa, pb = np.concatenate(pa), np.concatenate(pb)
+    near = (cx[pa] - cx[pb]) ** 2 + (cy[pa] - cy[pb]) ** 2 <= tol * tol
+    pa, pb = pa[near], pb[near]
+    # min-label propagation with pointer jumping, to a fixpoint
+    while True:
+        m = np.minimum(lab[pa], lab[pb])
+        new = lab.copy()
+        np.minimum.at(new, pa, m)
+        np.minimum.at(new, pb, m)
+        new = new[new]
+        if np.array_equal(new, lab):
+            return lab
+        lab = new
+
+
+def _node(rings_a, rings_b):
+    """Noded arrangement of both operands' boundaries.
+
+    Returns (nx, ny, lo, hi, cover): node coordinates, the distinct
+    sub-segments as node-id pairs lo < hi, and each piece's coverage
+    parity per operand (pieces x 2 bool, uncovered pieces dropped) —
+    or None when the operands have no edge."""
+    v = _vertices(rings_a, rings_b)
+    if v is None:
+        return None
+    vx, vy, nxt, opnd = v
+    e = np.nonzero((vx != vx[nxt]) | (vy != vy[nxt]))[0]
+    if len(e) == 0:
+        return None
+    # floored at ~50 ulps of the coordinates' magnitude, so a pair far
+    # from the origin still snaps float noise together
+    span = max(vx.max() - vx.min(), vy.max() - vy.min())
+    tol = max(span * _SNAP_REL,
+              max(np.abs(vx).max(), np.abs(vy).max()) * 1e-14)
+    ea, eb = e, nxt[e]            # edge k runs vertex ea[k] -> eb[k]
+    x0, y0, x1, y1 = vx[ea], vy[ea], vx[eb], vy[eb]
+    dx, dy = x1 - x0, y1 - y0
+    bx0, bx1 = np.minimum(x0, x1) - tol, np.maximum(x0, x1) + tol
+    by0, by1 = np.minimum(y0, y1) - tol, np.maximum(y0, y1) + tol
+
+    # vertices within tol of an edge's interior split that edge
+    vi, ek = _box_pairs(vx, vx, vy, vy, bx0, bx1, by0, by1)
+    own = (vi == ea[ek]) | (vi == eb[ek])
+    vi, ek = vi[~own], ek[~own]
+    L2 = dx[ek] ** 2 + dy[ek] ** 2
+    tv = ((vx[vi] - x0[ek]) * dx[ek] + (vy[vi] - y0[ek]) * dy[ek]) / L2
+    d2 = ((vx[vi] - x0[ek] - tv * dx[ek]) ** 2
+          + (vy[vi] - y0[ek] - tv * dy[ek]) ** 2)
+    on = (tv > 0.0) & (tv < 1.0) & (d2 <= tol * tol)
+    vi, ek, tv = vi[on], ek[on], tv[on]
+
+    # proper crossings, each edge pair once; a crossing within tol/2 of
+    # an endpoint is that vertex's contact, found above
+    i, j = _box_pairs(bx0, bx1, by0, by1, bx0, bx1, by0, by1)
+    pair = ((i < j) & (ea[i] != ea[j]) & (ea[i] != eb[j])
+            & (eb[i] != ea[j]) & (eb[i] != eb[j]))
+    i, j = i[pair], j[pair]
+    qx, qy = x0[j] - x0[i], y0[j] - y0[i]
+    den = dx[i] * dy[j] - dy[i] * dx[j]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = (qx * dy[j] - qy * dx[j]) / den
+        u = (qx * dy[i] - qy * dx[i]) / den
+    hit = (den != 0.0) & (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)
+    i, j, t, u = i[hit], j[hit], t[hit], u[hit]
+    px, py = x0[i] + t * dx[i], y0[i] + t * dy[i]
+    lim = (0.5 * tol) ** 2
+    clear = np.ones(len(i), dtype=bool)
+    for ex, ey in ((x0[i], y0[i]), (x1[i], y1[i]),
+                   (x0[j], y0[j]), (x1[j], y1[j])):
+        clear &= (px - ex) ** 2 + (py - ey) ** 2 > lim
+    i, j, t, u, px, py = i[clear], j[clear], t[clear], u[clear], \
+        px[clear], py[clear]
+
+    # merge near-coincident candidates into nodes (vertices first, so
+    # a cluster holding a vertex takes that vertex's coordinates)
+    nv, nc = len(vx), len(px)
+    cx, cy = np.concatenate((vx, px)), np.concatenate((vy, py))
+    rep, node = np.unique(_cluster(cx, cy, tol), return_inverse=True)
+    nx, ny = cx[rep], cy[rep]
+
+    # split every edge at its contacts, in order along the edge
+    m = len(e)
+    cid = np.arange(nv, nv + nc)
+    ek_all = np.concatenate((np.arange(m), np.arange(m), ek, i, j))
+    t_all = np.concatenate((np.zeros(m), np.ones(m), tv, t, u))
+    p_all = np.concatenate((ea, eb, vi, cid, cid))
+    o = np.lexsort((t_all, ek_all))
+    ek_s, nd = ek_all[o], node[p_all[o]]
+    same = ek_s[1:] == ek_s[:-1]
+    a_, b_ = nd[:-1][same], nd[1:][same]
+    side = opnd[ea[ek_s[:-1][same]]]
+    real = a_ != b_
+    a_, b_, side = a_[real], b_[real], side[real]
+    if len(a_) == 0:
+        return None
+    nn = len(nx)
+    keys, inv = np.unique(np.minimum(a_, b_) * nn + np.maximum(a_, b_),
+                          return_inverse=True)
+    cover = np.stack([np.bincount(inv[side == k], minlength=len(keys)) & 1
+                      for k in (0, 1)], axis=1).astype(bool)
+    live = cover.any(axis=1)
+    return nx, ny, keys[live] // nn, keys[live] % nn, cover[live]
+
+
+def _ray_parity(qx, qy, sx0, sy0, sx1, sy1, w, own):
+    """Per query point: parity of the w-weighted count of segments the
+    ray from (qx, qy) toward +x crosses (half-open in y), skipping the
+    query's own segment own[k]. Returns (queries x w columns) bool."""
+    out = np.zeros((len(qx), w.shape[1]), dtype=np.int64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        slope = (sx1 - sx0) / (sy1 - sy0)
+        step = max(1, _BLOCK // max(1, len(sx0)))
+        for s in range(0, len(qx), step):
+            sl = slice(s, s + step)
+            yq = qy[sl, None]
+            hit = (((sy0 > yq) != (sy1 > yq))
+                   & (qx[sl, None] < sx0 + (yq - sy0) * slope))
+            hit[np.arange(hit.shape[0]), own[sl]] = False
+            out[sl] = hit @ w
+    return (out & 1).astype(bool)
+
+
+def _overlay(rings_a, rings_b, op):
+    """Kept directed pieces of `op`, region on the left.
+
+    Returns (nx, ny, start, end) — node coordinates and the kept pieces
+    as node-id pairs — or None when nothing is kept."""
+    noded = _node(rings_a, rings_b)
+    if noded is None:
+        return None
+    nx, ny, lo, hi, cover = noded
+    sx, sy = nx - nx.min(), ny - ny.min()   # shifted: smaller products
+    x0, y0, x1, y1 = sx[lo], sy[lo], sx[hi], sy[hi]
+    dx, dy = x1 - x0, y1 - y0
+    mx, my = (x0 + x1) * 0.5, (y0 + y1) * 0.5
+    w = cover.astype(np.int64)
+    steep = np.abs(dy) >= np.abs(dx)
+    probe = np.empty(cover.shape, dtype=bool)
+    for sel, swap in ((steep, False), (~steep, True)):
+        k = np.nonzero(sel)[0]
+        if len(k) == 0:
+            continue
+        if swap:   # y-ray: the same cast with the axes exchanged
+            probe[k] = _ray_parity(my[k], mx[k], y0, x0, y1, x1, w, k)
+        else:
+            probe[k] = _ray_parity(mx[k], my[k], x0, y0, x1, y1, w, k)
+    # the probed side is east of steep pieces, north of flat ones
+    probe_left = np.where(steep, dy < 0.0, dx > 0.0)[:, None]
+    left = np.where(probe_left, probe, probe ^ cover)
+    right = left ^ cover
+    want = _OPS[op]
+    in_l = want(left[:, 0], left[:, 1])
+    in_r = want(right[:, 0], right[:, 1])
+    keep = in_l != in_r
+    if not keep.any():
+        return None
+    lo, hi, in_l = lo[keep], hi[keep], in_l[keep]
+    return nx, ny, np.where(in_l, lo, hi), np.where(in_l, hi, lo)
+
+
+def boolean_area(rings_a, rings_b, op) -> float:
+    """Exact planar area of `op` over two even-odd ring sets: the
+    Green's-theorem sum over the kept pieces, no stitch."""
+    kept = _overlay(rings_a, rings_b, op)
+    if kept is None:
+        return 0.0
+    nx, ny, start, end = kept
+    nx, ny = nx - nx.min(), ny - ny.min()   # shifted: smaller products
+    xa, ya, xb, yb = nx[start], ny[start], nx[end], ny[end]
+    return 0.5 * float(np.sum(xa * yb - xb * ya))
 
 
 def robust_boolean(rings_a, rings_b, op):
-    """Boundary-selection boolean geometry — handles degenerate
-    boundary contact the GH member algebra bails on. Returns a ring
-    list (even-odd form) or None when a probe or the stitch cannot be
-    settled. `op` in {'and', 'or', 'sub', 'xor'}."""
-    from .pip import _edge_split_ts
-    from .union import _open_ccw, _roll1
-    want = _OPS[op]
-    A = [_open_ccw(np.asarray(rx, dtype=np.float64),
-                   np.asarray(ry, dtype=np.float64)) for rx, ry in rings_a]
-    B = [_open_ccw(np.asarray(rx, dtype=np.float64),
-                   np.asarray(ry, dtype=np.float64)) for rx, ry in rings_b]
-    soup_a, soup_b = _soup_of(A), _soup_of(B)
-
-    kept = []  # directed (x0, y0, x1, y1), region on the left
-    for own, own_soup, other_soup in ((A, soup_a, soup_b),
-                                      (B, soup_b, soup_a)):
-        for xs, ys in own:
-            x2s, y2s = _roll1(xs), _roll1(ys)
-            for k in range(len(xs)):
-                cx0, cy0, cx1, cy1 = xs[k], ys[k], x2s[k], y2s[k]
-                if cx0 == cx1 and cy0 == cy1:
-                    continue
-                ts = _edge_split_ts(cx0, cy0, cx1, cy1,
-                                    other_soup[0], other_soup[1],
-                                    other_soup[2], other_soup[3])
-                px = cx0 + ts * (cx1 - cx0)
-                py = cy0 + ts * (cy1 - cy0)
-                for i in range(len(ts) - 1):
-                    x0, y0, x1, y1 = px[i], py[i], px[i + 1], py[i + 1]
-                    if x0 == x1 and y0 == y1:
-                        continue
-                    mx, my = (x0 + x1) / 2.0, (y0 + y1) / 2.0
-                    seglen = float(np.hypot(x1 - x0, y1 - y0))
-                    lx, ly = -(y1 - y0) / seglen, (x1 - x0) / seglen
-                    verdict = None
-                    for eps in (seglen * 1e-7, seglen * 1e-4,
-                                seglen * 1e-2):
-                        qlx, qly = mx + eps * lx, my + eps * ly
-                        qrx, qry = mx - eps * lx, my - eps * ly
-                        lim = (eps * 0.45) ** 2
-                        if (_soup_min_dist2(qlx, qly, soup_a) < lim
-                                or _soup_min_dist2(qlx, qly, soup_b) < lim
-                                or _soup_min_dist2(qrx, qry, soup_a) < lim
-                                or _soup_min_dist2(qrx, qry, soup_b) < lim):
-                            continue
-                        in_l = want(_soup_parity(qlx, qly, soup_a),
-                                    _soup_parity(qlx, qly, soup_b))
-                        in_r = want(_soup_parity(qrx, qry, soup_a),
-                                    _soup_parity(qrx, qry, soup_b))
-                        verdict = (in_l, in_r)
-                        break
-                    if verdict is None:
-                        return None
-                    in_l, in_r = verdict
-                    if in_l == in_r:
-                        continue
-                    if in_l:
-                        kept.append((float(x0), float(y0),
-                                     float(x1), float(y1)))
-                    else:
-                        kept.append((float(x1), float(y1),
-                                     float(x0), float(y0)))
-
-    def _q(v):
-        return round(v, 9)
-
-    # dedupe shared boundary pieces (emitted by both A and B)
-    seen = set()
-    segs = []
-    for x0, y0, x1, y1 in kept:
-        key = (_q(x0), _q(y0), _q(x1), _q(y1))
-        if key in seen:
-            continue
-        seen.add(key)
-        segs.append((x0, y0, x1, y1))
-    if not segs:
+    """Boolean GEOMETRY of two even-odd ring sets. `op` in {'and',
+    'or', 'sub', 'xor'}. Returns a ring list in even-odd form (shells
+    CCW, holes CW; [] for an empty result), or None when the stitch
+    meets a node whose kept pieces do not alternate in/out (snapping
+    created a crossing) — callers report an error row."""
+    kept = _overlay(rings_a, rings_b, op)
+    if kept is None:
         return []
-
-    # stitch: adjacency by quantized start node; at multi-way touch
-    # nodes take the most counterclockwise continuation
-    out_at = {}
-    for idx, (x0, y0, x1, y1) in enumerate(segs):
-        out_at.setdefault((_q(x0), _q(y0)), []).append(idx)
-    used = [False] * len(segs)
+    nx, ny, start, end = kept
+    n = len(start)
+    ex, ey = nx[end] - nx[start], ny[end] - ny[start]
+    # rays around every node: each piece leaves its start (out-ray) and
+    # arrives at its end (in-ray, pointing back along the piece)
+    ray_node = np.concatenate((start, end))
+    ray_ang = np.concatenate((np.arctan2(ey, ex), np.arctan2(-ey, -ex)))
+    o = np.lexsort((ray_ang, ray_node))
+    sorted_node = ray_node[o]
+    first = np.ones(2 * n, dtype=bool)
+    first[1:] = sorted_node[1:] != sorted_node[:-1]
+    grp = np.cumsum(first) - 1
+    g_first = np.nonzero(first)[0]
+    g_last = np.append(g_first[1:], 2 * n) - 1
+    pos = np.arange(2 * n)
+    # next ray clockwise = previous in ascending angle, cyclic per node
+    prev = np.where(first, g_last[grp], pos - 1)
+    is_in = o >= n
+    partner = o[prev[is_in]]
+    if (partner >= n).any():
+        return None
+    nxt = np.empty(n, dtype=np.int64)
+    nxt[o[is_in] - n] = partner
     rings = []
-    for start in range(len(segs)):
-        if used[start]:
+    seen = bytearray(n)
+    nxt_l = nxt.tolist()
+    for s in range(n):
+        if seen[s]:
             continue
-        loop = []
-        cur = start
-        guard = 0
-        while True:
-            guard += 1
-            if guard > len(segs) + 2:
-                return None
-            used[cur] = True
-            x0, y0, x1, y1 = segs[cur]
-            loop.append((x0, y0))
-            node = (_q(x1), _q(y1))
-            if node == (_q(segs[start][0]), _q(segs[start][1])):
-                break
-            cands = [i for i in out_at.get(node, []) if not used[i]]
-            if not cands:
-                return None
-            if len(cands) == 1:
-                cur = cands[0]
-                continue
-            din = np.arctan2(y1 - y0, x1 - x0)
-            best, best_ang = None, None
-            for i in cands:
-                nx0, ny0, nx1, ny1 = segs[i]
-                dout = np.arctan2(ny1 - ny0, nx1 - nx0)
-                # CCW turn from din, in (0, 2*pi]: smallest = sharpest
-                # left turn, keeping the left-side region enclosed
-                ang = (np.pi - (dout - din)) % (2.0 * np.pi)
-                if best is None or ang < best_ang:
-                    best, best_ang = i, ang
-            cur = best
-        if len(loop) >= 3:
-            rings.append((np.asarray([p[0] for p in loop]),
-                          np.asarray([p[1] for p in loop])))
+        cyc = []
+        k = s
+        while not seen[k]:
+            seen[k] = 1
+            cyc.append(k)
+            k = nxt_l[k]
+        if k != s:
+            return None
+        ids = start[cyc]
+        rings.append((nx[ids], ny[ids]))
     return rings
 
 
 def members_of_robust(rings):
-    """Member grouping for robust_boolean output: rings may TOUCH at
-    points (figure-eight contacts), where first-vertex parity is
-    unreliable — nesting uses the distance-guarded containment probe
-    instead (overlay._ring_contained_in)."""
+    """Member grouping [(shell, [holes])] for robust_boolean output:
+    rings may TOUCH at points (figure-eight contacts), where
+    first-vertex parity is unreliable — nesting uses the
+    distance-guarded containment probe (overlay._ring_contained_in)."""
     from .overlay import _ring_contained_in
-    opened = [( np.asarray(rx, dtype=np.float64),
-                np.asarray(ry, dtype=np.float64)) for rx, ry in rings]
+    opened = [(np.asarray(rx, dtype=np.float64),
+               np.asarray(ry, dtype=np.float64)) for rx, ry in rings]
     depth = []
     for i, (rx, ry) in enumerate(opened):
         d = 0

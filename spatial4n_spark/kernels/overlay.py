@@ -1,6 +1,6 @@
-"""Exact polygon-overlay kernels: intersection AREA (Green's theorem
-over boundary sub-segments) and intersection GEOMETRY (Greiner-Hormann
-traversal shared with kernels/union.py).
+"""Polygon-overlay measures: the exact intersection AREA of two
+even-odd (multi)polygons per candidate pair, plus the even-odd own
+area and the ring-containment probe the measure's callers share.
 
 Engine-added scale operators (no reference analog — Spatial4n exposes
 Relate verdicts but no overlay): the classic GIS overlay join ("for
@@ -9,39 +9,22 @@ measure of A∩B per candidate pair, not just INTERSECTS. These kernels
 are the per-pair refine stage of operators/overlay.py; candidates come
 from the same cell-cover equi-join every other two-layer join uses.
 
-Area method (`intersection_area`): for even-odd polygons A, B
+`intersection_area` is the AREA output of the noded overlay kernel
+(kernels/booleans.py): both boundaries are noded once with a
+bbox-relative snap tolerance, every sub-segment is a node-id pair, the
+pieces bounding A ∩ B are selected by one batched parity pass, and the
+area is the Green's-theorem sum over them. A shared edge is one node
+pair whether the polygons overlap along it or merely touch, so
+area(A ∩ A) == area(A) and externally-touching polygons get exactly 0,
+both property-tested. The geometry (`st_intersection` and friends) is
+stitched from the same kept pieces, so measure and geometry agree.
 
-    area(A ∩ B) = ∮_{∂A+} χ_B · x dy  +  ∮_{∂B+} χ_A · x dy
-
-where ∂P+ is P's boundary oriented positively for its even-odd
-interior (shells CCW, depth-odd rings CW) and χ is the indicator of
-the OTHER polygon's interior. Each boundary edge is split at every
-contact with the other boundary (pip._edge_split_ts), making χ
-constant per sub-segment; the sub-segment midpoint is classified once:
-
-    strictly inside -> weight 1, outside -> 0, ON the boundary -> 1/2.
-
-The half weight makes shared-boundary geometry exact with no epsilon:
-a collinear shared edge is traversed once per polygon — same direction
-when the interiors lie on the same side (1/2 + 1/2 = 1), opposite
-directions when the polygons merely touch (the halves cancel). In
-particular area(A ∩ A) == area(A) and externally-touching polygons
-get exactly 0, both property-tested.
-
-Unlike the Greiner-Hormann path this never needs a degenerate-contact
-bailout: vertex-on-edge, collinear overlap and repeated vertices only
-ever move measure-zero pieces between the 0 / 1/2 / 1 classes.
-
-Complexity per pair: O(E_A·E_B) vectorized splits + one broadcast
-classify pass — the same budget as the exact covers test the relate
-kernel already runs on candidate pairs.
+Complexity per pair: bbox-culled O(E_A·E_B) contact detection plus one
+(pieces x pieces) classify pass, vectorized.
 """
 from __future__ import annotations
 
 import numpy as np
-
-from .pip import _edge_split_ts, _poly_edge_arrays
-from .union import intersect_rings  # noqa: F401  (re-export: geometry path)
 
 
 def _rings(xs, ys, ring_offsets):
@@ -95,13 +78,12 @@ def _ring_signs(rings):
         stored = np.sum(rx * np.roll(ry, -1) - np.roll(rx, -1) * ry)
         stored_sign = 1.0 if stored >= 0.0 else -1.0
         # depth: number of OTHER rings properly CONTAINING this ring.
-        # Vertex probes are unreliable — GH-output rings
-        # (st_intersection / union_evenodd) start at crossing points
-        # that sit on another boundary within float rounding, and
-        # seam-touching siblings (a nested piece hugging part of this
-        # ring) contaminate any single global probe. Decide each
-        # (ring, other) pair with its own distance-guarded interior
-        # probe instead (r5 fix; nesting-only inputs behave as before).
+        # Vertex probes are unreliable — overlay-output rings
+        # (st_intersection / st_union) touch each other at shared
+        # nodes, and seam-touching siblings (a nested piece hugging
+        # part of this ring) contaminate any single global probe.
+        # Decide each (ring, other) pair with its own distance-guarded
+        # interior probe instead.
         depth = 0
         for j, (ox, oy) in enumerate(rings):
             if j != i and _ring_contained_in(rx, ry, ox, oy):
@@ -114,11 +96,11 @@ def _ring_signs(rings):
 def _ring_contained_in(rx, ry, ox, oy) -> bool:
     """True iff ring (rx, ry) lies inside ring (ox, oy). Valid for
     even-odd arrangements: the rings never properly cross, but may
-    share seam arcs (union_evenodd output) or start-vertices on each
-    other's boundary (GH crossings). Probes are offset strictly inside
-    (rx, ry) and must clear the other ring's edges by half the offset
-    before their parity is trusted; falls back to the first-vertex
-    parity when every probe hugs the other boundary. A probe of R
+    touch at shared nodes (overlay output) or share seam arcs. Probes
+    are offset strictly inside (rx, ry) and must clear the other ring's
+    edges by half the offset before their parity is trusted; falls
+    back to the first-vertex parity when every probe hugs the other
+    boundary. A probe of R
     landing in O is necessary but not sufficient (a SMALLER O nested
     inside R can cover the probe strip along ∂R), so containment
     additionally requires |area(R)| < |area(O)| — for non-crossing
@@ -164,48 +146,6 @@ def _ring_contained_in(rx, ry, ox, oy) -> bool:
     return bool(par_o[0])
 
 
-def _half_contribution(rings_p, other_edges):
-    """∮ over ∂P+ of w(other) · x dy, edges split at every contact with
-    the other boundary, w = 1 / 0.5 / 0 by midpoint class."""
-    oax, oay, obx, oby = other_edges
-    if len(oax) == 0:
-        return 0.0
-    signs = _ring_signs(rings_p)
-    o_minx, o_maxx = oax.min(), oax.max()
-    o_miny, o_maxy = oay.min(), oay.max()
-    # gather sub-segments across all edges, classify midpoints ONCE
-    seg_dy_xsum = []   # (y1-y0)*(x0+x1)/2 per sub-segment (signed)
-    mids_x, mids_y = [], []
-    for (rx, ry), sgn in zip(rings_p, signs):
-        nx = np.roll(rx, -1)
-        ny = np.roll(ry, -1)
-        for k in range(len(rx)):
-            cx, cy, dx, dy = rx[k], ry[k], nx[k], ny[k]
-            if cy == dy and cx == dx:
-                continue
-            # edges outside the other's bbox can't cross it: single span
-            if (max(cx, dx) < o_minx or min(cx, dx) > o_maxx
-                    or max(cy, dy) < o_miny or min(cy, dy) > o_maxy):
-                ts = np.asarray([0.0, 1.0])
-            else:
-                ts = _edge_split_ts(cx, cy, dx, dy, oax, oay, obx, oby)
-            x0 = cx + ts[:-1] * (dx - cx)
-            y0 = cy + ts[:-1] * (dy - cy)
-            x1 = cx + ts[1:] * (dx - cx)
-            y1 = cy + ts[1:] * (dy - cy)
-            seg_dy_xsum.append(sgn * (y1 - y0) * (x0 + x1) * 0.5)
-            mids_x.append((x0 + x1) * 0.5)
-            mids_y.append((y0 + y1) * 0.5)
-    if not seg_dy_xsum:
-        return 0.0
-    terms = np.concatenate(seg_dy_xsum)
-    mx = np.concatenate(mids_x)
-    my = np.concatenate(mids_y)
-    parity, boundary = _parity_and_boundary(mx, my, oax, oay, obx, oby)
-    w = np.where(boundary, 0.5, parity.astype(np.float64))
-    return float(np.dot(terms, w))
-
-
 def polygon_area_evenodd(xs, ys, ring_offsets=None) -> float:
     """Planar even-odd area (deg^2) of a (multi)polygon — shells minus
     holes, orientation-insensitive."""
@@ -218,30 +158,19 @@ def polygon_area_evenodd(xs, ys, ring_offsets=None) -> float:
 
 
 def intersection_area(axs, ays, aro, bxs, bys, bro) -> float:
-    """Exact planar area (deg^2) of A ∩ B for even-odd (multi)polygons.
-
-    Robust to holes, multiparts, shared edges, vertex contact and
-    A == B; no degenerate bailout (see module docstring)."""
+    """Exact planar area (deg^2) of A ∩ B for even-odd (multi)polygons:
+    the noded overlay kernel's Green's-theorem sum (see module
+    docstring). Robust to holes, multiparts, shared edges, vertex
+    contact and A == B; no degenerate bailout."""
+    from .booleans import boolean_area
     a_rings = _rings(axs, ays, aro)
     b_rings = _rings(bxs, bys, bro)
     if not a_rings or not b_rings:
         return 0.0
-    ae = _poly_edge_arrays(np.concatenate([r[0] for r in a_rings]),
-                           np.concatenate([r[1] for r in a_rings]),
-                           _offsets_of(a_rings))
-    be = _poly_edge_arrays(np.concatenate([r[0] for r in b_rings]),
-                           np.concatenate([r[1] for r in b_rings]),
-                           _offsets_of(b_rings))
+    ax, ay = np.asarray(axs, dtype=float), np.asarray(ays, dtype=float)
+    bx, by = np.asarray(bxs, dtype=float), np.asarray(bys, dtype=float)
     # bbox fast reject
-    if (ae[0].min() > be[0].max() or ae[0].max() < be[0].min()
-            or ae[1].min() > be[1].max() or ae[1].max() < be[1].min()):
+    if (ax.min() > bx.max() or ax.max() < bx.min()
+            or ay.min() > by.max() or ay.max() < by.min()):
         return 0.0
-    return (_half_contribution(a_rings, be)
-            + _half_contribution(b_rings, ae))
-
-
-def _offsets_of(rings):
-    off = [0]
-    for rx, _ in rings:
-        off.append(off[-1] + len(rx))
-    return off
+    return boolean_area(a_rings, b_rings, "and")

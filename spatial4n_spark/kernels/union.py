@@ -291,7 +291,7 @@ def _edge_crossings(ax, ay, bx, by):
     # pair of large corpus rings never materializes gigabyte grids
     # (r5: the old per-edge-i loop paid ~40 numpy dispatches per edge —
     # 2 ms per call, the dominant cost of every strip-union buffer /
-    # multi-overlap union / boolean-geometry op)
+    # multi-overlap union)
     sx = (b2x - bx)[None, :]
     sy = (b2y - by)[None, :]
     blk = max(1, 4_000_000 // max(1, nb))
@@ -354,61 +354,18 @@ def union_rings(ax, ay, bx, by):
     """Union of two simple rings -> list of (xs, ys) rings in even-odd
     form (outer ring CCW; pocket holes come out CW — orientation is
     irrelevant to the engine's even-odd PIP). Returns None on
-    degenerate boundary contact."""
-    return _gh_clip(ax, ay, bx, by, want="union")
-
-
-def intersect_rings(ax, ay, bx, by):
-    """Intersection of two simple rings -> list of (xs, ys) rings (an
-    intersection can have several components — two interlocking
-    C-shapes). Same Greiner–Hormann machinery as union_rings with the
-    dual traversal rule: loops start at ENTRY crossings (the walk ahead
-    is inside the other ring) instead of exits. Returns None on
-    degenerate boundary contact — area callers use
-    kernels/overlay.intersection_area, which has no such bailout."""
-    return _gh_clip(ax, ay, bx, by, want="intersection")
-
-
-def difference_rings(ax, ay, bx, by):
-    """Difference A \\ B of two simple rings -> list of (xs, ys) rings.
-    A ring of the output enclosed by another output ring is a HOLE of
-    it (B strictly inside A, or a cut that pinches a pocket closed) —
-    callers classify by containment. Textbook Greiner–Hormann
-    difference: pieces of ∂A walked FORWARD where A is outside B,
-    stitched to pieces of ∂B walked BACKWARD where B is inside A (the
-    forward-only jump the union/intersection traversal uses is invalid
-    for a complement operand — validated by randomized brute-force
-    parity in test_union_property). Returns None on degenerate
-    contact."""
-    return _gh_clip(ax, ay, bx, by, want="difference")
-
-
-def _gh_clip(ax, ay, bx, by, want: str):
+    degenerate boundary contact. Greiner–Hormann traversal."""
     ax, ay = _open_ccw(ax, ay)
     bx, by = _open_ccw(bx, by)
     crossings, point_touch, line_touch = _edge_crossings(ax, ay, bx, by)
     if point_touch or line_touch:
         return None
     if not crossings:
-        a_in_b = _point_in_ring_strict(ax[0], ay[0], bx, by)
-        b_in_a = _point_in_ring_strict(bx[0], by[0], ax, ay)
-        if want == "union":
-            if a_in_b:
-                return [(bx, by)]
-            if b_in_a:
-                return [(ax, ay)]
-            return [(ax, ay), (bx, by)]
-        if want == "difference":
-            if a_in_b:
-                return []
-            if b_in_a:
-                return [(ax, ay), (bx, by)]  # B punches a hole in A
-            return [(ax, ay)]
-        if a_in_b:
-            return [(ax, ay)]
-        if b_in_a:
+        if _point_in_ring_strict(ax[0], ay[0], bx, by):
             return [(bx, by)]
-        return []
+        if _point_in_ring_strict(bx[0], by[0], ax, ay):
+            return [(ax, ay)]
+        return [(ax, ay), (bx, by)]
 
     a_edges: dict = {}
     b_edges: dict = {}
@@ -436,24 +393,17 @@ def _gh_clip(ax, ay, bx, by, want: str):
             if nd is head:
                 break
 
-    if want == "difference":
-        return _difference_traverse(ax, bx, crossings, a_inters)
-
-    # traversal: follow a list, jumping to the twin at every crossing.
-    # UNION starts at EXIT nodes (the piece of the list ahead is
-    # OUTSIDE the other ring); INTERSECTION starts at ENTRY nodes (the
-    # piece ahead is INSIDE) — at the next crossing the twin's forward
-    # piece continues the same status, so one forward-only loop body
-    # serves both. Starting from every unvisited start-class node
-    # extracts every output loop (union pocket holes / intersection
-    # components alike). A step guard bounds the walk; exceeding it
-    # means inconsistent links (possible only under near-degenerate
-    # float geometry) -> None.
-    start_at_entry = want == "intersection"
+    # traversal: follow a list, jumping to the twin at every crossing,
+    # starting at EXIT nodes (the piece of the list ahead is OUTSIDE
+    # the other ring) — at the next crossing the twin's forward piece
+    # continues the same status. Starting from every unvisited exit
+    # node extracts every output loop (pocket holes included). A step
+    # guard bounds the walk; exceeding it means inconsistent links
+    # (possible only under near-degenerate float geometry) -> None.
     max_steps = 4 * (len(ax) + len(bx) + 2 * len(crossings))
     rings = []
     for start in a_inters:
-        if start.visited or start.entry != start_at_entry:
+        if start.visited or start.entry:
             continue
         start.visited = True
         start.twin.visited = True
@@ -476,49 +426,6 @@ def _gh_clip(ax, ay, bx, by, want: str):
                 loop_x.append(nd.x)
                 loop_y.append(nd.y)
                 nd = nd.nxt
-        if len(loop_x) >= 3:
-            rings.append((np.asarray(loop_x), np.asarray(loop_y)))
-    return rings
-
-
-def _difference_traverse(ax, bx, crossings, a_inters):
-    """A \\ B loop extraction over marked node lists: ∂A pieces walked
-    FORWARD where the walk-ahead is outside B (entry == False), ∂B
-    pieces walked BACKWARD (so the removed region stays on the right),
-    switching lists at every crossing. Closes at the start node (either
-    incarnation). A foreign visited node or a step overrun means
-    near-degenerate float geometry -> None (caller reports degenerate
-    contact)."""
-    max_steps = 4 * (len(ax) + len(bx) + 2 * len(crossings))
-    rings = []
-    for start in a_inters:
-        if start.visited or start.entry:
-            continue
-        start.visited = True
-        start.twin.visited = True
-        loop_x, loop_y = [start.x], [start.y]
-        on_a = True
-        nd = start.nxt
-        steps = 0
-        while True:
-            steps += 1
-            if steps > max_steps:
-                return None
-            if nd.inter:
-                if nd is start or nd.twin is start:
-                    break
-                if nd.visited:
-                    return None
-                nd.visited = True
-                nd.twin.visited = True
-                loop_x.append(nd.x)
-                loop_y.append(nd.y)
-                on_a = not on_a
-                nd = nd.twin.nxt if on_a else nd.twin.prv
-            else:
-                loop_x.append(nd.x)
-                loop_y.append(nd.y)
-                nd = nd.nxt if on_a else nd.prv
         if len(loop_x) >= 3:
             rings.append((np.asarray(loop_x), np.asarray(loop_y)))
     return rings

@@ -27,8 +27,6 @@ memory, and each round's files survive executor loss.
 """
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -51,51 +49,25 @@ def connected_components(edges: DataFrame, src: str = "src",
     (staging.resolve_stage_dir), else in-memory localCheckpoint.
     Results are identical.
     """
-    from ..staging import resolve_stage_dir
+    from ..staging import drop_stage, resolve_stage_dir, staged
     spark = edges.sparkSession
     stage_dir = resolve_stage_dir(spark, stage_dir)
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        """Round barrier: triggers the plan (firing its Observation)
-        and truncates lineage — via block-manager checkpoint or a
-        parquet stage."""
-        if stage_dir is None:
-            return df.localCheckpoint()
-        path = f"{stage_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    def _drop_stage(name: str) -> None:
-        # Hadoop FS delete, not a driver-local rmtree: stage_dir is
-        # documented for shared filesystems (hdfs://, s3a://) where a
-        # local rmtree would silently no-op and leak every round's
-        # labels parquet (code-review r4).
-        if stage_dir is None:
-            return
-        path = f"{stage_dir}/{name}"
-        try:
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(
-                spark._jsc.hadoopConfiguration())
-            fs.delete(hpath, True)
-        except Exception:
-            shutil.rmtree(path, ignore_errors=True)
 
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # materialize the symmetrized edge list ONCE: it is re-joined every
     # round (and by the convergence probe), and the upstream edge
     # derivation can be an expensive pipeline (e.g. the MinHash-LSH
     # self-join feeding dedup_clusters)
-    sym = _materialize(und.union(und.select(F.col("b").alias("a"),
-                                            F.col("a").alias("b"))), "sym")
+    sym, _ = staged(und.union(und.select(F.col("b").alias("a"),
+                                         F.col("a").alias("b"))),
+                    "cc_sym", stage_dir)
     nodes = sym.select(F.col("a").alias("node")).distinct()
     if vertices is not None:
         vcol = vertices.columns[0]
         nodes = nodes.union(
             vertices.select(F.col(vcol).alias("node"))).distinct()
-    labels = _materialize(nodes.withColumn("label", F.col("node")),
-                          "labels_r0")
+    labels, labels_path = staged(nodes.withColumn("label", F.col("node")),
+                                 "cc_labels", stage_dir)
 
     converged = False
     for i in range(max_iter):
@@ -105,7 +77,9 @@ def connected_components(edges: DataFrame, src: str = "src",
         # (an Observation over the old-vs-new label join) — one pass
         # over the data per round instead of checkpoint + probe jobs
         obs = Observation(f"cc_round_{i}")
-        new_labels = _materialize(
+        # round barrier: triggers the plan (firing its Observation) and
+        # truncates lineage
+        labels, new_path = staged(
             labels.select("node", "label").union(msgs)
                   .groupBy("node").agg(F.min("label").alias("label"))
                   .join(labels.select(F.col("node"),
@@ -115,9 +89,11 @@ def connected_components(edges: DataFrame, src: str = "src",
                       (F.col("label") != F.col("__old")).cast("long"))
                       .alias("nchanged"))
                   .select("node", "label"),
-            f"labels_r{i + 1}")
-        labels = new_labels
-        _drop_stage(f"labels_r{i}")  # consumed by the write just done
+            "cc_labels", stage_dir)
+        if labels_path is not None:
+            # consumed by the write just done
+            drop_stage(spark, labels_path)
+        labels_path = new_path
         if not obs.get["nchanged"]:
             converged = True
             break

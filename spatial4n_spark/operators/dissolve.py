@@ -1,13 +1,14 @@
 """Dissolve: per-group geometry union (merge parcels by owner, tracts
 by county — the classic GIS dissolve) as a distributed aggregate.
 
-Engine-added operator. The geometry math is the SAME resolver the WKT
-parser runs on overlapping MULTIPOLYGON members
-(`kernels.wkt._resolve_multi_overlap`, the UnionGeometryCollection
-analog of NtsGeometry.cs:64-94): duplicate drop, containment
-absorption, exact Greiner–Hormann union for transversal crossings,
-plain even-odd merge for touch-only contact, convex-hull degrade for
-degenerate contact when `allow_approx=True`.
+Engine-added operator. The geometry math is the noded overlay union
+(`kernels.booleans.robust_boolean` op 'or', folded over the group's
+members): exact for every contact class, including the degenerate
+ones (adjacent parcels sharing edges, vertex-on-edge touches), and
+canonical — shared seams between touching members are dissolved away.
+When the fold cannot stitch and `allow_approx=True`, the group degrades
+to the convex hull of its overlapping members (the WKT parser's
+allowMultiOverlap hull, `kernels.wkt._resolve_multi_overlap`).
 
 Scale shape: ONE shuffle on the dissolve keys (`applyInArrow`), each
 group's members resolved inside its task — dissolve is inherently a
@@ -58,35 +59,25 @@ def _member_records(s, i) -> list:
 
 
 def _dissolve_group(members: list, allow_approx: bool) -> dict:
-    from ..kernels.wkt import WktParseError, _resolve_multi_overlap
-    # r5 PRIMARY: the boundary-selection union fold — exact for every
-    # contact class including the degenerate ones (adjacent parcels
-    # sharing edges, vertex-on-edge touch), and CANONICAL: touching
-    # members come out with the shared seams dissolved away, which is
-    # what a GIS dissolve means (the GH resolver keeps touch-only
-    # members as separate rings — reference ShapeCollection semantics,
-    # right for the parser, wrong for dissolve output)
-    if len(members) > 1:
-        rec = _robust_union_fold(members)
-        if rec is not None:
-            return {"rec": rec, "exact": True, "error": None}
-    try:
-        merged = _resolve_multi_overlap(members, True, "width180",
-                                        "error", False)
-        return {"rec": merged, "exact": True, "error": None}
-    except WktParseError as e:
-        if not allow_approx:
-            return {"rec": None, "exact": False, "error": str(e)[:200]}
+    if len(members) == 1:
+        return {"rec": members[0], "exact": True, "error": None}
+    rec = _robust_union_fold(members)
+    if rec is not None:
+        return {"rec": rec, "exact": True, "error": None}
+    if not allow_approx:
+        return {"rec": None, "exact": False,
+                "error": "dissolve: union pieces did not stitch into rings"}
+    from ..kernels.wkt import _resolve_multi_overlap
     merged = _resolve_multi_overlap(members, True, "width180",
                                     "error", True)
     return {"rec": merged, "exact": False, "error": None}
 
 
 def _robust_union_fold(members: list):
-    """Exact union of a member list via the boundary-selection overlay
+    """Exact union of a member list via the noded overlay
     (kernels/booleans.robust_boolean 'or'), folded pairwise. Returns a
-    merged polygon record or None when a probe/stitch cannot be
-    settled (the caller keeps the error/hull contract)."""
+    merged polygon record or None when the stitch cannot be closed
+    (the caller keeps the error/hull contract)."""
     from ..kernels.booleans import members_of_robust, robust_boolean
 
     def rings_of(rec):
@@ -164,14 +155,11 @@ def dissolve_two_level(df: DataFrame, keys: list, shape_col: str = "shape",
 
     Strict mode only (`allow_approx=False`): the hull degrade is not
     associative, so approximate groups must go through single-level
-    `dissolve(allow_approx=True)`. Non-unionable groups surface
-    `error` rather than raising — but the two-level error SET is a
-    superset of single-level's: stage-1 cell partials can be holed or
-    multipart unions whose stage-2 crossings are GH-infeasible, so
-    two-level may reject (fail-safe, never wrong) some groups that
-    single-level dissolves exactly. Callers wanting maximum coverage
-    should re-run keys that error here through single-level
-    `dissolve` (bounded by the per-key-gather contract)."""
+    `dissolve(allow_approx=True)`. A group whose union does not stitch
+    in either stage surfaces `error` rather than raising; stage-1
+    partials (holed or multipart unions) go through the same noded
+    overlay union as single members, so the stages settle the same
+    contact classes."""
     from .. import functions as SF
 
     cell = SF.st_cell_code_col(f"`{shape_col}`.`miny`",

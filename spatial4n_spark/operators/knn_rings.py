@@ -91,16 +91,7 @@ def knn_ring_join(points: DataFrame, queries: DataFrame, k: int,
     identical; None (default) defers to the session default
     `spark.spatial4n.stageDir`, else the in-memory path.
     """
-    from ..staging import resolve_stage_dir
-    spark = points.sparkSession
-    stage_dir = resolve_stage_dir(spark, stage_dir)
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        if stage_dir is None:
-            return df.localCheckpoint()
-        path = f"{stage_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+    from ..staging import stage
     h = HASH_LEN_TO_LAT_HEIGHT[precision]
     w = HASH_LEN_TO_LON_WIDTH[precision]
     nbits = precision * 5
@@ -134,7 +125,7 @@ def knn_ring_join(points: DataFrame, queries: DataFrame, k: int,
             # materialize ONCE (<= live x k rows): stats, the
             # solved-ids semi-join, and the final union otherwise each
             # re-execute this round's cell join + window
-            ranked = _materialize(ranked, f"ranked_r{r}")
+            ranked = stage(ranked, f"knn_ranked_r{r}", stage_dir)
 
         if full_grid:
             done_parts.append(ranked.drop("cell_id"))
@@ -164,7 +155,7 @@ def knn_ring_join(points: DataFrame, queries: DataFrame, k: int,
         # (in-memory path) releases the previous round's blocks via the
         # ContextCleaner once unreferenced (persist() would pin them
         # for the session).
-        live = _materialize(live, f"live_r{r}")
+        live = stage(live, f"knn_live_r{r}", stage_dir)
         if live.isEmpty():
             live = None
             break

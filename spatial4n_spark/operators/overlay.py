@@ -10,8 +10,9 @@ shape_shape_join). Composition:
      refine (`shape_shape_join`, predicate="intersects") — broadcast /
      shuffle / salted paths, reference-point dedup, all inherited;
   2. measure: one Arrow stage computes the exact planar intersection
-     area per surviving pair (kernels/overlay.py, Green's theorem —
-     holes, multiparts, shared edges, dateline-paged rects);
+     area per surviving pair (kernels/overlay.py over the noded overlay
+     kernel, Green's theorem — holes, multiparts, shared edges,
+     dateline-paged rects);
   3. rect x rect pairs short-circuit to a PURE Column arc-overlap
      formula — a two-rect-layer overlay runs with zero Python when
      `shape_kinds=(2, 2)` is declared.
@@ -55,14 +56,12 @@ def overlay_intersection_join(left: DataFrame, right: DataFrame,
 
     `with_geometry` (round 5) adds `geometry_col`: the intersection
     GEOMETRY per pair as a shape struct (the GIS clip/identity
-    operator) — kernels/booleans member algebra for polygon pairs,
-    a pure Column rect struct when `shape_kinds=(2, 2)`. Computed
-    AFTER the area filter, so the geometry stage sees only true
-    intersecting pairs (bounded by output size, not candidates).
-    Honest contract: pairs with degenerate boundary contact carry an
-    error row in the geometry column while `area_col` stays exact.
-    Under `keep_zero`, zero-area (touch) pairs get EMPTY (kind 0)
-    geometry.
+    operator) — the noded overlay kernel (kernels/booleans) for
+    polygon pairs, the same kernel that measures `area_col`, and a pure
+    Column rect struct when `shape_kinds=(2, 2)`. Computed AFTER the
+    area filter, so the geometry stage sees only true intersecting
+    pairs (bounded by output size, not candidates). Under `keep_zero`,
+    zero-area (touch) pairs get EMPTY (kind 0) geometry.
 
     salt / broadcast_right pass through to the candidate join.
     """
@@ -144,7 +143,7 @@ def overlay_intersection_join(left: DataFrame, right: DataFrame,
     if with_geometry:
         # rect x rect rows take the pure-Column struct; note the CASE
         # does not spare them the Arrow pass (Python UDFs evaluate in
-        # their own node) — it spares them the GH kernel and keeps the
+        # their own node) — it spares them the overlay kernel and keeps the
         # VALUES bit-identical to the JVM formula. Zero-area (touch)
         # rows keep_zero retains are EMPTY, whichever kinds met.
         out = out.withColumn(

@@ -55,13 +55,21 @@ def stage(df: DataFrame, name: str, stage_dir: str | None = None) -> DataFrame:
     repeated stages never collide), else an eager ``localCheckpoint``.
     Results are identical either way.
     """
+    return staged(df, name, stage_dir)[0]
+
+
+def staged(df: DataFrame, name: str,
+           stage_dir: str | None = None) -> tuple[DataFrame, str | None]:
+    """`stage`, also returning the parquet path it wrote (None on the
+    in-memory path) so an iterative operator can `drop_stage` a
+    retired round."""
     spark = df.sparkSession
     d = resolve_stage_dir(spark, stage_dir)
     if d is None:
-        return df.localCheckpoint()
+        return df.localCheckpoint(), None
     path = stage_path(d, name, spark.sparkContext.applicationId, next(_seq))
     df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return spark.read.parquet(path), path
 
 
 def stage_path(stage_dir: str, name: str, app_id: str, seq: int) -> str:

@@ -1,6 +1,6 @@
-"""Even-odd boolean kernels (round 5): GH ring difference and the
-member-algebra even-odd intersection — brute-force parity and
-area-vs-overlay-kernel equivalence.
+"""Even-odd boolean geometry from the noded overlay kernel
+(kernels/booleans.robust_boolean) for ∩ ∖ ∪ △ — brute-force parity and
+area-vs-overlay-measure equivalence.
 
 Reference parity target: NTS Geometry.Intersection semantics
 (Spatial4n.Core.NTS/Shapes/Nts/NtsGeometry.cs relate/op surface).
@@ -8,11 +8,11 @@ Reference parity target: NTS Geometry.Intersection semantics
 import numpy as np
 import pytest
 
-from spatial4n_spark.kernels.booleans import intersect_evenodd, members_of
+from spatial4n_spark.kernels.booleans import (members_of_robust,
+                                              robust_boolean)
 from spatial4n_spark.kernels.overlay import (intersection_area,
                                              polygon_area_evenodd)
-from spatial4n_spark.kernels.union import (_point_in_ring_strict,
-                                           difference_rings)
+from spatial4n_spark.kernels.union import _point_in_ring_strict
 
 
 def _parity(px, py, rings):
@@ -51,9 +51,8 @@ def test_difference_randomized_parity():
         ax, ay = _rand_ring(rng, 0, 0, int(rng.integers(4, 14)), 1.0, 5.0)
         bx, by = _rand_ring(rng, rng.uniform(-4, 4), rng.uniform(-4, 4),
                             int(rng.integers(4, 14)), 1.0, 5.0)
-        res = difference_rings(ax, ay, bx, by)
-        if res is None:
-            continue
+        res = robust_boolean([(ax, ay)], [(bx, by)], "sub")
+        assert res is not None
         for _ in range(30):
             px, py = rng.uniform(-8, 8), rng.uniform(-8, 8)
             if _near_any(px, py, [(ax, ay), (bx, by)]):
@@ -68,19 +67,20 @@ def test_difference_randomized_parity():
 def test_difference_hole_and_split():
     sq = (np.array([0.0, 10, 10, 0]), np.array([0.0, 0, 10, 10]))
     # B inside A -> A keeps B as a hole ring
-    res = difference_rings(*sq, np.array([4.0, 6, 6, 4]),
-                           np.array([4.0, 4, 6, 6]))
+    res = robust_boolean([sq], [(np.array([4.0, 6, 6, 4]),
+                                 np.array([4.0, 4, 6, 6]))], "sub")
     assert len(res) == 2
     assert _parity(5, 5, res) == 0 and _parity(1, 5, res) == 1
     # B a bar through the middle -> A splits into two components
-    res = difference_rings(*sq, np.array([-1.0, 11, 11, -1]),
-                           np.array([4.0, 4, 6, 6]))
+    res = robust_boolean([sq], [(np.array([-1.0, 11, 11, -1]),
+                                 np.array([4.0, 4, 6, 6]))], "sub")
     assert len(res) == 2
     assert _parity(5, 2, res) == 1 and _parity(5, 8, res) == 1
     assert _parity(5, 5, res) == 0
     # A inside B -> empty
-    assert difference_rings(*sq, np.array([-1.0, 11, 11, -1]),
-                            np.array([-1.0, -1, 11, 11])) == []
+    assert robust_boolean([sq], [(np.array([-1.0, 11, 11, -1]),
+                                  np.array([-1.0, -1, 11, 11]))],
+                          "sub") == []
 
 
 def _rand_shape(rng, cx, cy):
@@ -103,22 +103,25 @@ def _rand_shape(rng, cx, cy):
     return rings
 
 
+def _pack(rl):
+    xs = np.concatenate([r[0] for r in rl])
+    ys = np.concatenate([r[1] for r in rl])
+    off = np.cumsum([0] + [len(r[0]) for r in rl])
+    return xs, ys, off
+
+
 def test_intersect_evenodd_randomized_parity_and_area():
     """Holed x holed random pairs: probe parity matches (in A) and
     (in B); the output geometry's even-odd area equals the overlay
-    AREA kernel's intersection_area (two independent computations)."""
+    AREA measure intersection_area (stitched rings vs the Green's sum
+    over the kept pieces)."""
     rng = np.random.default_rng(7)
     checked = pairs = 0
     for _ in range(120):
         A = _rand_shape(rng, 0, 0)
         B = _rand_shape(rng, rng.uniform(-5, 5), rng.uniform(-5, 5))
-        res = intersect_evenodd(A, B)
-        if res is None:
-            continue
-        flat = []
-        for sh, hl in res:
-            flat.append(sh)
-            flat.extend(hl)
+        flat = robust_boolean(A, B, "and")
+        assert flat is not None
         pairs += 1
         for _ in range(30):
             px, py = rng.uniform(-11, 11), rng.uniform(-11, 11)
@@ -127,13 +130,6 @@ def test_intersect_evenodd_randomized_parity_and_area():
             want = _parity(px, py, A) == 1 and _parity(px, py, B) == 1
             assert (_parity(px, py, flat) == 1) == want, (px, py)
             checked += 1
-        # area equivalence vs the overlay measure kernel
-
-        def _pack(rl):
-            xs = np.concatenate([r[0] for r in rl])
-            ys = np.concatenate([r[1] for r in rl])
-            off = np.cumsum([0] + [len(r[0]) for r in rl])
-            return xs, ys, off
         area_geom = (polygon_area_evenodd(*_pack(flat)) if flat else 0.0)
         area_kernel = intersection_area(*_pack(A), *_pack(B))
         assert area_geom == pytest.approx(area_kernel, rel=1e-9, abs=1e-12)
@@ -149,7 +145,7 @@ def test_intersect_evenodd_pocket_island():
           np.array([5.0, 5, 7, 7, 13, 13, 15, 15]))
     c2 = (np.array([17.0, 10, 10, 15, 15, 10, 10, 17]),
           np.array([16.0, 16, 14, 14, 6, 6, 4, 4]))
-    res = intersect_evenodd([sq_a, c1], [sq_b, c2])
+    res = members_of_robust(robust_boolean([sq_a, c1], [sq_b, c2], "and"))
     assert res is not None and len(res) == 2  # main member + island
     flat = []
     for sh, hl in res:
@@ -166,36 +162,23 @@ def test_members_of_nesting():
     shell = (np.array([0.0, 20, 20, 0]), np.array([0.0, 0, 20, 20]))
     hole = (np.array([5.0, 15, 15, 5]), np.array([5.0, 5, 15, 15]))
     island = (np.array([8.0, 12, 12, 8]), np.array([8.0, 8, 12, 12]))
-    ms = members_of([shell, hole, island])
+    ms = members_of_robust([shell, hole, island])
     assert len(ms) == 2
     n_holes = sorted(len(h) for _, h in ms)
     assert n_holes == [0, 1]
 
 
-def test_intersect_evenodd_degenerate_bails():
-    """Shared-edge contact anywhere -> None (honest error path)."""
-    a = (np.array([0.0, 2, 2, 0]), np.array([0.0, 0, 2, 2]))
-    b = (np.array([2.0, 4, 4, 2]), np.array([0.0, 0, 2, 2]))
-    assert intersect_evenodd([a], [b]) is None
-
-
 def test_difference_evenodd_randomized_parity():
     """A \\ B over random holed shapes: probe parity matches
     (in A) and not (in B)."""
-    from spatial4n_spark.kernels.booleans import difference_evenodd
     rng = np.random.default_rng(11)
     checked = pairs = 0
     for _ in range(100):
         A = _rand_shape(rng, 0, 0)
         B = _rand_shape(rng, rng.uniform(-5, 5), rng.uniform(-5, 5))
-        res = difference_evenodd(A, B)
-        if res is None:
-            continue
+        flat = robust_boolean(A, B, "sub")
+        assert flat is not None
         pairs += 1
-        flat = []
-        for sh, hl in res:
-            flat.append(sh)
-            flat.extend(hl)
         for _ in range(30):
             px, py = rng.uniform(-11, 11), rng.uniform(-11, 11)
             if _near_any(px, py, A) or _near_any(px, py, B):
@@ -208,12 +191,11 @@ def test_difference_evenodd_randomized_parity():
 
 def test_difference_evenodd_hole_donation():
     """Subtracting a member whose HOLE overlaps A: the region of A
-    inside B's hole survives (M ∩ Ht piece)."""
-    from spatial4n_spark.kernels.booleans import difference_evenodd
+    inside B's hole survives as a member of its own."""
     A = [(np.array([2.0, 8, 8, 2]), np.array([2.0, 2, 8, 8]))]
     B = [(np.array([0.0, 10, 10, 0]), np.array([0.0, 0, 10, 10])),
          (np.array([4.0, 6, 6, 4]), np.array([4.0, 4, 6, 6]))]
-    res = difference_evenodd(A, B)
+    res = members_of_robust(robust_boolean(A, B, "sub"))
     assert res is not None and len(res) == 1
     flat = [res[0][0]] + res[0][1]
     assert _parity(5, 5, flat) == 1      # inside B's hole -> survives
@@ -223,21 +205,15 @@ def test_difference_evenodd_hole_donation():
 def test_union_evenodd_randomized_parity_and_area():
     """A ∪ B over random holed shapes: parity == (in A) or (in B);
     area(union) == aA + aB − intersection_area (inclusion-exclusion
-    against the independent overlay kernel)."""
-    from spatial4n_spark.kernels.booleans import union_evenodd
+    against the overlay measure)."""
     rng = np.random.default_rng(21)
     checked = pairs = 0
     for _ in range(100):
         A = _rand_shape(rng, 0, 0)
         B = _rand_shape(rng, rng.uniform(-5, 5), rng.uniform(-5, 5))
-        res = union_evenodd(A, B)
-        if res is None:
-            continue
+        flat = robust_boolean(A, B, "or")
+        assert flat is not None
         pairs += 1
-        flat = []
-        for sh, hl in res:
-            flat.append(sh)
-            flat.extend(hl)
         for _ in range(30):
             px, py = rng.uniform(-11, 11), rng.uniform(-11, 11)
             if _near_any(px, py, A) or _near_any(px, py, B):
@@ -245,12 +221,6 @@ def test_union_evenodd_randomized_parity_and_area():
             want = _parity(px, py, A) == 1 or _parity(px, py, B) == 1
             assert (_parity(px, py, flat) == 1) == want, (px, py)
             checked += 1
-
-        def _pack(rl):
-            xs = np.concatenate([r[0] for r in rl])
-            ys = np.concatenate([r[1] for r in rl])
-            off = np.cumsum([0] + [len(r[0]) for r in rl])
-            return xs, ys, off
         a_area = polygon_area_evenodd(*_pack(A))
         b_area = polygon_area_evenodd(*_pack(B))
         inter = intersection_area(*_pack(A), *_pack(B))
@@ -263,20 +233,14 @@ def test_union_evenodd_randomized_parity_and_area():
 def test_sym_difference_evenodd_randomized_parity():
     """A △ B over random holed shapes: parity == (in A) XOR (in B);
     area == aA + aB − 2·intersection."""
-    from spatial4n_spark.kernels.booleans import sym_difference_evenodd
     rng = np.random.default_rng(31)
     checked = pairs = 0
     for _ in range(80):
         A = _rand_shape(rng, 0, 0)
         B = _rand_shape(rng, rng.uniform(-5, 5), rng.uniform(-5, 5))
-        res = sym_difference_evenodd(A, B)
-        if res is None:
-            continue
+        flat = robust_boolean(A, B, "xor")
+        assert flat is not None
         pairs += 1
-        flat = []
-        for sh, hl in res:
-            flat.append(sh)
-            flat.extend(hl)
         for _ in range(25):
             px, py = rng.uniform(-11, 11), rng.uniform(-11, 11)
             if _near_any(px, py, A) or _near_any(px, py, B):
@@ -284,12 +248,6 @@ def test_sym_difference_evenodd_randomized_parity():
             want = (_parity(px, py, A) == 1) != (_parity(px, py, B) == 1)
             assert (_parity(px, py, flat) == 1) == want, (px, py)
             checked += 1
-
-        def _pack(rl):
-            xs = np.concatenate([r[0] for r in rl])
-            ys = np.concatenate([r[1] for r in rl])
-            off = np.cumsum([0] + [len(r[0]) for r in rl])
-            return xs, ys, off
         want_area = (polygon_area_evenodd(*_pack(A))
                      + polygon_area_evenodd(*_pack(B))
                      - 2.0 * intersection_area(*_pack(A), *_pack(B)))
@@ -299,33 +257,27 @@ def test_sym_difference_evenodd_randomized_parity():
 
 
 def test_empty_operand_member_algebra():
-    """Empty ring sets flow through the member algebra with NTS
-    parity: A ∩ ∅ = ∅, A \\ ∅ = A, ∅ \\ A = ∅, A ∪ ∅ = A."""
-    from spatial4n_spark.kernels.booleans import (difference_evenodd,
-                                                  union_evenodd)
+    """Empty ring sets flow through the kernel with NTS parity:
+    A ∩ ∅ = ∅, A \\ ∅ = A, ∅ \\ A = ∅, A ∪ ∅ = A."""
     A = [(np.array([0.0, 4, 4, 0]), np.array([0.0, 0, 4, 4]))]
-    assert intersect_evenodd(A, []) == []
-    assert intersect_evenodd([], A) == []
-    d = difference_evenodd(A, [])
-    assert len(d) == 1 and _parity(2, 2, [d[0][0]]) == 1
-    assert difference_evenodd([], A) == []
-    u = union_evenodd(A, [])
+    assert robust_boolean(A, [], "and") == []
+    assert robust_boolean([], A, "and") == []
+    d = robust_boolean(A, [], "sub")
+    assert len(d) == 1 and _parity(2, 2, [d[0]]) == 1
+    assert robust_boolean([], A, "sub") == []
+    u = robust_boolean(A, [], "or")
     assert len(u) == 1
-    u2 = union_evenodd([], A)
+    u2 = robust_boolean([], A, "or")
     assert len(u2) == 1
 
 
 def test_adversarial_snapped_soak():
     """Integer-snapped (degenerate-contact-heavy) random inputs: every
-    boolean op either returns a member list or None — never an
-    uncaught exception (the honest-error contract's crash guard)."""
-    from spatial4n_spark.kernels.booleans import (difference_evenodd,
-                                                  sym_difference_evenodd,
-                                                  union_evenodd)
+    boolean op either returns a ring list or None — never an uncaught
+    exception (the error-row contract's crash guard)."""
     rng = np.random.default_rng(777)
     outcomes = {"ok": 0, "none": 0}
-    ops = (intersect_evenodd, difference_evenodd, union_evenodd,
-           sym_difference_evenodd)
+    ops = ("and", "sub", "or", "xor")
     for trial in range(200):
         n1, n2 = int(rng.integers(3, 12)), int(rng.integers(3, 12))
         ax, ay = _rand_ring(rng, 0, 0, n1, 1, 6)
@@ -334,16 +286,15 @@ def test_adversarial_snapped_soak():
         if trial % 2 == 0:  # snap -> shared vertices/collinear edges
             ax, ay = np.round(ax), np.round(ay)
             bx, by = np.round(bx), np.round(by)
-        r = ops[trial % 4]([(ax, ay)], [(bx, by)])
+        r = robust_boolean([(ax, ay)], [(bx, by)], ops[trial % 4])
         outcomes["none" if r is None else "ok"] += 1
     assert outcomes["ok"] > 80  # snapped inputs may bail, most succeed
 
 
 def test_robust_boolean_degenerate_fixtures():
-    """Boundary-selection overlay settles the contact cases GH bails
-    on: shared edges dissolve, vertex touches keep both parts,
-    identical shapes behave like sets."""
-    from spatial4n_spark.kernels.booleans import robust_boolean
+    """The noded overlay settles degenerate contact: shared edges
+    dissolve, vertex touches keep both parts, identical shapes behave
+    like sets."""
     sq1 = [(np.array([0.0, 4, 4, 0]), np.array([0.0, 0, 4, 4]))]
     sq2 = [(np.array([4.0, 8, 8, 4]), np.array([0.0, 0, 4, 4]))]
     sq3 = [(np.array([4.0, 8, 8, 4]), np.array([4.0, 4, 8, 8]))]
@@ -365,12 +316,12 @@ def test_robust_boolean_degenerate_fixtures():
 
 def test_robust_boolean_randomized_snapped():
     """Integer-snapped random pairs (degenerate-contact-heavy): the
-    robust overlay must SETTLE them (no bail) and match brute force."""
-    from spatial4n_spark.kernels.booleans import robust_boolean
+    noded overlay must SETTLE every one (no bail) and match brute
+    force."""
     ops = {"and": lambda a, b: a and b, "or": lambda a, b: a or b,
            "sub": lambda a, b: a and not b, "xor": lambda a, b: a != b}
     rng = np.random.default_rng(1)
-    settled = probes = 0
+    settled = probes = attempted = 0
     for trial in range(150):
         ax, ay = _rand_ring(rng, 0, 0, int(rng.integers(3, 10)), 2, 7)
         bx, by = _rand_ring(rng, rng.uniform(-4, 4), rng.uniform(-4, 4),
@@ -381,9 +332,9 @@ def test_robust_boolean_randomized_snapped():
                 or len(set(zip(bx.tolist(), by.tolist()))) < 3):
             continue
         name = list(ops)[trial % 4]
+        attempted += 1
         res = robust_boolean([(ax, ay)], [(bx, by)], name)
-        if res is None:
-            continue
+        assert res is not None, (trial, name)
         settled += 1
         f = ops[name]
         for _ in range(30):
@@ -394,4 +345,4 @@ def test_robust_boolean_randomized_snapped():
                      bool(_point_in_ring_strict(px, py, bx, by)))
             assert (_parity(px, py, res) == 1) == want, (trial, name, px, py)
             probes += 1
-    assert settled > 120 and probes > 2500
+    assert settled == attempted and probes > 2500

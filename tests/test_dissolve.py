@@ -241,8 +241,9 @@ def test_dissolve_parcel_grid_exact(spark):
 
 
 def test_dissolve_kind_is_multipolygon_on_every_path(spark, monkeypatch):
-    """The union fold (several members) and the multi-overlap resolver
-    (one member, or a fold that cannot settle) both emit kind 8."""
+    """Every path emits kind 8: the overlay union fold (several
+    members), a single member, and the allow_approx hull degrade of a
+    fold that cannot stitch."""
     rows = [("fold", _sq(0, 0, 2)), ("fold", _sq(1, 1, 2)),
             ("single", _sq(10, 10, 3))]
     out = {r["owner"]: r["shape"] for r in dissolve(_df(spark, rows),
@@ -250,7 +251,7 @@ def test_dissolve_kind_is_multipolygon_on_every_path(spark, monkeypatch):
     assert out["fold"]["kind"] == 8 and len(out["fold"]["ring_offsets"]) == 2
     assert out["single"]["kind"] == 8
 
-    # the resolver fallback for a multi-member group, driven directly
+    # the hull degrade for a multi-member group, driven directly
     import pyarrow as pa
 
     from spatial4n_spark import shapes
@@ -260,9 +261,11 @@ def test_dissolve_kind_is_multipolygon_on_every_path(spark, monkeypatch):
             W.parse_shape("POLYGON((5 0, 7 0, 6 2, 5 0))")]
     table = pa.table({"owner": ["x", "x"],
                       "__s": shapes.encode_records(recs)})
-    for fold in (D._robust_union_fold, lambda members: None):
+    for fold, approx in ((D._robust_union_fold, False),
+                         (lambda members: None, True)):
         monkeypatch.setattr(D, "_robust_union_fold", fold)
-        res = D._dissolve_table(table, ["owner"], "shape", False)
+        res = D._dissolve_table(table, ["owner"], "shape", approx)
         s = res.column("shape").to_pylist()[0]
         assert s["kind"] == 8 and len(s["ring_offsets"]) == 3
         assert res.column("n_members").to_pylist() == [2]
+        assert res.column("exact").to_pylist() == [not approx]

@@ -1,5 +1,5 @@
-"""kernels/overlay + union.intersect_rings: exact intersection area and
-GH intersection geometry.
+"""kernels/overlay + the noded overlay kernel: exact intersection area
+and intersection geometry.
 
 Oracles: closed-form fixtures, the inclusion-exclusion metamorphic
 identity area(A) + area(B) == area(A∪B) + area(A∩B) (union from the
@@ -11,14 +11,15 @@ import pytest
 
 from spatial4n_spark.kernels.overlay import (intersection_area,
                                              polygon_area_evenodd)
-from spatial4n_spark.kernels.union import intersect_rings, union_rings
+from spatial4n_spark.kernels.booleans import robust_boolean
+from spatial4n_spark.kernels.union import union_rings
 
 SQ_A = (np.array([0., 2, 2, 0]), np.array([0., 0, 2, 2]))
 SQ_B = (np.array([1., 3, 3, 1]), np.array([1., 1, 3, 3]))
 
 
 def area_rings(rings):
-    """Even-odd area of a GH output ring list."""
+    """Even-odd area of a ring list of disjoint pieces."""
     tot = 0.0
     for rx, ry in rings:
         tot += abs(np.sum(rx * np.roll(ry, -1) - np.roll(rx, -1) * ry)) / 2.0
@@ -88,9 +89,16 @@ class TestFixtures:
         assert polygon_area_evenodd(*t, None) == pytest.approx(2.0)
 
 
+def _intersection(ax, ay, bx, by):
+    return robust_boolean([(ax, ay)], [(bx, by)], "and")
+
+
 class TestGHIntersection:
+    """Intersection GEOMETRY, now stitched by the noded overlay kernel
+    (the GH traversal serves unions only)."""
+
     def test_square_overlap_geometry(self):
-        rings = intersect_rings(*SQ_A, *SQ_B)
+        rings = _intersection(*SQ_A, *SQ_B)
         assert len(rings) == 1
         assert area_rings(rings) == pytest.approx(1.0)
         xs, ys = rings[0]
@@ -98,24 +106,24 @@ class TestGHIntersection:
 
     def test_containment_cases(self):
         d = (np.array([0.5, 1.5, 1.5, 0.5]), np.array([0.5, 0.5, 1.5, 1.5]))
-        rings = intersect_rings(*SQ_A, *d)
+        rings = _intersection(*SQ_A, *d)
         assert area_rings(rings) == pytest.approx(1.0)
-        assert intersect_rings(*SQ_A, SQ_A[0] + 10.0, SQ_A[1]) == []
+        assert _intersection(*SQ_A, SQ_A[0] + 10.0, SQ_A[1]) == []
 
     def test_two_components(self):
         # U-shape x bar: two disjoint intersection pieces
         ux = np.array([0., 1, 1, 2, 2, 3, 3, 0])
         uy = np.array([0., 0, 2, 2, 0, 0, 3, 3])
         bar = (np.array([-1., 4, 4, -1]), np.array([0.5, 0.5, 1.5, 1.5]))
-        rings = intersect_rings(ux, uy, *bar)
+        rings = _intersection(ux, uy, *bar)
         assert rings is not None and len(rings) == 2
         assert area_rings(rings) == pytest.approx(2.0)
-        # area kernel agrees without needing the GH path
+        # the area measure agrees
         assert intersection_area(ux, uy, None, *bar, None) == pytest.approx(2.0)
 
-    def test_degenerate_returns_none(self):
+    def test_shared_edge_touch_is_empty(self):
         touch = (SQ_A[0] + 2.0, SQ_A[1])
-        assert intersect_rings(*SQ_A, *touch) is None
+        assert _intersection(*SQ_A, *touch) == []
 
 
 class TestMetamorphic:
@@ -129,7 +137,7 @@ class TestMetamorphic:
                           rng.uniform(1, 3), rng.uniform(0.5, 0.9),
                           int(rng.integers(3, 8)), rng.uniform(0, 6))
             u = union_rings(ax, ay, bx, by)
-            g = intersect_rings(ax, ay, bx, by)
+            g = _intersection(ax, ay, bx, by)
             if u is None or g is None:
                 continue
             done += 1
@@ -142,7 +150,7 @@ class TestMetamorphic:
             u_area = polygon_area_evenodd(ux, uy, uo)
             i_area = intersection_area(ax, ay, None, bx, by, None)
             assert a_area + b_area == pytest.approx(u_area + i_area, abs=1e-9)
-            # GH geometry area == Green's-theorem area
+            # stitched geometry area == Green's-theorem area
             gh_area = area_rings(g)
             assert gh_area == pytest.approx(i_area, abs=1e-9)
 

@@ -254,8 +254,8 @@ def test_crossing_rect_area_functions(spark):
 
 
 def test_st_intersection_geometry(spark):
-    """GH geometry output: WKT roundtrip, component count, area match,
-    honest error rows for degenerate/holed inputs."""
+    """Intersection geometry output: WKT roundtrip, component count,
+    area match, geometry (not error rows) for degenerate/holed inputs."""
     cases = [
         # overlapping squares -> one quad of area 1
         ("POLYGON((0 0, 2 0, 2 2, 0 2, 0 0))",
@@ -266,8 +266,7 @@ def test_st_intersection_geometry(spark):
         # disjoint -> EMPTY
         ("POLYGON((0 0, 1 0, 1 1, 0 1, 0 0))",
          "POLYGON((5 5, 6 5, 6 6, 5 6, 5 5))", 0, None, None),
-        # shared edge (r5: the boundary-selection fallback settles what
-        # GH bails on) -> measure-zero intersection = EMPTY, no error
+        # shared edge -> measure-zero intersection = EMPTY, no error
         ("POLYGON((0 0, 2 0, 2 2, 0 2, 0 0))",
          "POLYGON((2 0, 4 0, 4 2, 2 2, 2 0))", 0, None, None),
         # partial shared edge with real overlap -> exact geometry
@@ -354,6 +353,39 @@ def test_st_difference_area(spark):
         F.col("a"), F.col("b"))).collect()
     for r in out:
         assert r["d"] == pytest.approx(r["exp"], abs=1e-9)
+
+
+def test_shared_slanted_edge_areas(spark):
+    """Triangles sharing the slanted edge (-2 5)-(-1 3) on an integer
+    grid scaled by 0.1 and 0.01 (decimals that are not binary-exact):
+    the float midpoints of the shared edge must not read as interior.
+    T1 ∩ T2 is the triangle (-2.8 3, -1 3, -2 5), 1.8 grid units; T1
+    and T3 only touch along the shared edge. area(T1) is 4.5."""
+    t1 = [(-2, 5), (-1, 3), (-4, 0)]
+    t2 = [(-2, 5), (-1, 3), (-3, 3)]
+    t3 = [(-2, 5), (-1, 3), (2, 6)]
+
+    def wkt(pts, s):
+        return _poly_wkt([round(x * s, 6) for x, _ in pts],
+                         [round(y * s, 6) for _, y in pts])
+    rows = [(wkt(t1, s), wkt(t, s), inter * s * s, (4.5 - inter) * s * s)
+            for s in (0.1, 0.01) for t, inter in ((t2, 1.8), (t3, 0.0))]
+    df = spark.createDataFrame(
+        rows, "awkt string, bwkt string, inter double, diff double")
+    df = df.select("inter", "diff",
+                   SF.st_from_wkt(F.col("awkt")).alias("a"),
+                   SF.st_from_wkt(F.col("bwkt")).alias("b"))
+    a, b = F.col("a"), F.col("b")
+    out = df.select(
+        "inter", "diff",
+        SF.st_shape_intersection_area(a, b).alias("got_inter"),
+        SF.st_difference_area(a, b).alias("got_diff"),
+        SF.st_overlay_measure(a, b)["inter"].alias("m_inter")).collect()
+    assert len(out) == 4
+    for r in out:
+        assert r["got_inter"] == pytest.approx(r["inter"], abs=1e-12), r
+        assert r["got_diff"] == pytest.approx(r["diff"], abs=1e-12), r
+        assert r["m_inter"] == r["got_inter"], r
 
 
 def test_unsupported_and_crossing_inputs_raise(spark):
@@ -457,9 +489,9 @@ def test_st_union_geometry(spark):
 
 def test_overlay_with_geometry(spark, layers):
     """with_geometry (round 5): each intersecting pair carries its clip
-    geometry; area(geometry) matches the exact area column wherever
-    the geometry path is non-degenerate (degenerate contact -> honest
-    error row, area still exact)."""
+    geometry, and area(geometry) matches the exact area column — both
+    come from the same noded overlay kernel, so no pair is an error
+    row."""
     from spatial4n_spark.kernels.overlay import polygon_area_evenodd
     lrows, rrows = layers
     left = _layer(spark, lrows, "l")
@@ -482,7 +514,7 @@ def test_overlay_with_geometry(spark, layers):
         assert area == pytest.approx(r["inter_area_deg2"],
                                      rel=1e-9, abs=1e-9), (r["l_id"], r["r_id"])
         checked += 1
-    assert checked > errs  # geometry succeeds for the bulk of pairs
+    assert errs == 0 and checked == len(out)
 
 
 def test_overlay_with_geometry_rect_declared_jvm(spark):

@@ -124,3 +124,40 @@ def test_components_session_default(spark, stage_conf):
     # session conf routed the rounds through parquet
     assert any(p.startswith("cc_") or "labels" in p
                for p in os.listdir(stage_conf))
+
+
+def test_operator_rounds_distinct_per_run(spark, stage_conf):
+    """Two runs of the round-staging operators in one application stage
+    to distinct paths: the first run's result still reads its own
+    rounds after the second run wrote its rounds."""
+    from spatial4n_spark.operators.components import connected_components
+    from spatial4n_spark.operators.knn_rings import knn_ring_join
+    g1 = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    g2 = spark.createDataFrame([(7, 8), (8, 9), (9, 10)],
+                               "src long, dst long")
+    cc1 = connected_components(g1)
+    before = set(os.listdir(stage_conf))
+    cc2 = connected_components(g2)
+    assert set(os.listdir(stage_conf)) - before
+    assert _rowset(cc1) == [(1, 1), (2, 1), (3, 1)]
+    assert _rowset(cc2) == [(7, 7), (8, 7), (9, 7), (10, 7)]
+
+    pts = spark.createDataFrame(
+        [(i, (i * 7) % 40 - 20.0, (i * 13) % 30 - 15.0) for i in range(200)],
+        "pid long, x double, y double")
+
+    def queries(offset):
+        return spark.createDataFrame(
+            [(q, q * 3.0 - 10.0 + offset, q * 2.0 - 5.0) for q in range(8)],
+            "query_id long, qx double, qy double")
+
+    def run(offset):
+        return knn_ring_join(pts, queries(offset), k=3,
+                             query_x="qx", query_y="qy")
+    k1 = run(0.0)
+    k1_rows = _rowset(k1)
+    before = set(os.listdir(stage_conf))
+    assert _rowset(run(5.0)) != k1_rows
+    assert any(p.startswith("knn_") for p in set(os.listdir(stage_conf))
+               - before)
+    assert _rowset(k1) == k1_rows
