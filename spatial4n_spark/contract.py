@@ -2369,11 +2369,14 @@ def q_wkt_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHEN 6 THEN 'POLYGON((0 5, 10 5, 10 20, 0 20, 0 5))'
             ELSE 'POLYGON((0 0, 10 0, 10 20))'
             END AS wkt""")
-    # multi-overlap resolution family (kernels/union.py), exercised on
-    # the case-5 rows: crossing MULTIPOLYGON members union exactly by
-    # default (collection-fold semantics, NtsWktShapeParser.cs:184-202);
-    # degenerate-contact overlap errors by default and hulls under
-    # allowMultiOverlap=true (NtsGeometry.cs:64-94 spirit)
+    # multi-overlap resolution family (kernels/wkt._resolve_multi_overlap
+    # over the noded overlay union), exercised on the case-5 rows:
+    # overlapping MULTIPOLYGON members union exactly by default
+    # (collection-fold semantics, NtsWktShapeParser.cs:184-202), also
+    # with degenerate contact (md: the members share the vertex 0 0),
+    # and allowMultiOverlap=true gives the same exact union — its hull
+    # is only the fallback for union rings that do not stitch
+    # (NtsGeometry.cs:64-94 spirit)
     mo_wkt = ("MULTIPOLYGON(((0 0, 10 0, 10 10, 0 10, 0 0)),"
               " ((5 5, 15 5, 15 15, 5 15, 5 5)))")
     md_wkt = ("MULTIPOLYGON(((0 0, 10 0, 10 10, 0 10, 0 0)),"
@@ -2415,7 +2418,11 @@ def q_wkt_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # constants for case 5 derive from the fixed bow-tie: hull = 5-vertex
-# pentagon (+closure), buffer0 = 3 planarized lobes of 4 coords each
+# pentagon (+closure), buffer0 = 3 planarized lobes of 4 coords each;
+# md/mh: the exact union of the square and the triangle is one ring of
+# 10 vertices (+closure): the square's 4 corners, the triangle's apexes
+# (14 5) and (5 14), and the 4 points where the triangle's edges cross
+# the square, (10 25/7), (10 9), (9 10) and (25/7 10)
 ORACLE_WKT_ERRORS = """
 SELECT o_orderkey,
        CASE o_orderkey % 8 WHEN 1 THEN false WHEN 2 THEN false
@@ -2432,10 +2439,10 @@ SELECT o_orderkey,
        CASE WHEN o_orderkey % 8 = 5 THEN 8 END AS mo_kind,
        CASE WHEN o_orderkey % 8 = 5 THEN 9 END AS mo_nv,
        CASE WHEN o_orderkey % 8 = 5 THEN CAST(15.0 AS DOUBLE) END AS mo_maxx,
-       CASE WHEN o_orderkey % 8 = 5 THEN false END AS md_ok,
+       CASE WHEN o_orderkey % 8 = 5 THEN true END AS md_ok,
        CASE WHEN o_orderkey % 8 = 5 THEN true END AS mh_ok,
        CASE WHEN o_orderkey % 8 = 5 THEN 8 END AS mh_kind,
-       CASE WHEN o_orderkey % 8 = 5 THEN 7 END AS mh_nv
+       CASE WHEN o_orderkey % 8 = 5 THEN 11 END AS mh_nv
 FROM orders
 """
 
@@ -2693,16 +2700,20 @@ def q_buffer_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2x, v2y = F.col("cx") + 24.000713, F.col("cy") - 10.000357
     d_ = F.col("d")
 
-    # --- round-5 family: EXACT concave (L-shape) buffer, driver-checked.
+    # --- EXACT concave (L-shape) buffer and erosion, driver-checked.
     # The L varies only with (jv, dv) modulo translation, so the
     # strip-union kernel runs once per combo (<= 35 rows, local frame at
     # the origin) and broadcast-joins back — buffers commute with
-    # translation exactly. Columns verify: analytic bbox, single output
-    # ring, notch coverage near the reflex corner (IN at 0.35d diagonal),
-    # the DEEP notch staying uncovered (the r4 hull superset covered it —
-    # this column is the driver-level proof of r5 exactness), and the
-    # convex-vertex arc at 0.99d/1.01d (inside the 32-gon inscription
-    # margin cos(pi/32) = 0.99518).
+    # translation exactly. cbf_* (buffer by d) verify: analytic bbox,
+    # single output ring, notch coverage near the reflex corner (IN at
+    # 0.35d diagonal), the DEEP notch staying uncovered (a hull superset
+    # would cover it), and the convex-vertex arc at 0.99d/1.01d (inside
+    # the 32-gon inscription margin cos(pi/32) = 0.99518). cer_*
+    # (erosion by d, the L's two arms each shrunk by d) verify: the
+    # eroded bbox, a single ring, the bottom wall probed at 1.01d (IN)
+    # and 0.99d (OUT), and the reflex corner (5, 4) probed the same way
+    # along the interior diagonal, where the eroded boundary is the
+    # corner's disc arc (an inscribed 32-gon, so 0.99d is still OUT).
     combos = sup.selectExpr("s_suppkey % 5 AS jv", "s_suppkey % 7 AS dv") \
                 .distinct()
     lwj = F.expr(
@@ -2711,12 +2722,14 @@ def q_buffer_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
         " 0 10, 0 0))')")
     combos = combos.withColumn("dl2", F.expr("0.4 + dv * 0.17")) \
                    .withColumn("sg2", SF.st_from_wkt(lwj))
-    combos = combos.withColumn("bg2", SF.st_buffer(F.col("sg2"),
-                                                   F.col("dl2")))
+    combos = (combos.withColumn("bg2", SF.st_buffer(F.col("sg2"),
+                                                    F.col("dl2")))
+                    .withColumn("eg2", SF.st_buffer(F.col("sg2"),
+                                                    -F.col("dl2"))))
     dl2, sq2 = F.col("dl2"), 0.7071067811865476
 
-    def probe2(px, py):
-        return SF.st_relate_shape_point(F.col("bg2"), px, py) == 2
+    def probe2(px, py, col="bg2"):
+        return SF.st_relate_shape_point(F.col(col), px, py) == 2
     wjc = F.expr("12.0 + jv * 0.26")
     combos = combos.select(
         "jv", "dv", "dl2",
@@ -2732,7 +2745,19 @@ def q_buffer_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe2(wjc + 0.99 * dl2 * sq2, -0.99 * dl2 * sq2)
         .alias("cbf_vtx_in"),
         probe2(wjc + 1.01 * dl2 * sq2, -1.01 * dl2 * sq2)
-        .alias("cbf_vtx_out"))
+        .alias("cbf_vtx_out"),
+        F.col("eg2.minx").alias("cer_lminx"),
+        F.col("eg2.maxx").alias("cer_lmaxx"),
+        F.col("eg2.miny").alias("cer_lminy"),
+        F.col("eg2.maxy").alias("cer_lmaxy"),
+        (F.size(F.col("eg2.ring_offsets")) - 1).cast("int")
+         .alias("cer_rings"),
+        probe2(F.lit(8.5), 1.01 * dl2, "eg2").alias("cer_wall_in"),
+        probe2(F.lit(8.5), 0.99 * dl2, "eg2").alias("cer_wall_out"),
+        probe2(F.lit(5.0) - 1.01 * dl2 * sq2, F.lit(4.0) - 1.01 * dl2 * sq2,
+               "eg2").alias("cer_rfx_in"),
+        probe2(F.lit(5.0) - 0.99 * dl2 * sq2, F.lit(4.0) - 0.99 * dl2 * sq2,
+               "eg2").alias("cer_rfx_out"))
     out = (out.withColumn("jv", F.expr("s_suppkey % 5"))
               .withColumn("dv", F.expr("s_suppkey % 7"))
               .join(F.broadcast(combos), ["jv", "dv"]))
@@ -2766,7 +2791,13 @@ def q_buffer_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("cy") + F.col("cbf_lminy"), 6).alias("cbf_miny"),
         F.round(F.col("cy") + F.col("cbf_lmaxy"), 6).alias("cbf_maxy"),
         F.col("cbf_rings"), F.col("cbf_notch_in"), F.col("cbf_notch_out"),
-        F.col("cbf_vtx_in"), F.col("cbf_vtx_out"))
+        F.col("cbf_vtx_in"), F.col("cbf_vtx_out"),
+        F.round(F.col("cx") + F.col("cer_lminx"), 6).alias("cer_minx"),
+        F.round(F.col("cx") + F.col("cer_lmaxx"), 6).alias("cer_maxx"),
+        F.round(F.col("cy") + F.col("cer_lminy"), 6).alias("cer_miny"),
+        F.round(F.col("cy") + F.col("cer_lmaxy"), 6).alias("cer_maxy"),
+        F.col("cer_rings"), F.col("cer_wall_in"), F.col("cer_wall_out"),
+        F.col("cer_rfx_in"), F.col("cer_rfx_out"))
 
 
 _BUF_DL = ("CASE WHEN d = 0 THEN 0.0 "
@@ -2835,7 +2866,17 @@ SELECT s_suppkey,
   true AS cbf_notch_in,
   false AS cbf_notch_out,
   true AS cbf_vtx_in,
-  false AS cbf_vtx_out
+  false AS cbf_vtx_out,
+  round(cx + (0.4 + (s_suppkey % 7) * 0.17), 6) AS cer_minx,
+  round(cx + ((12.0 + (s_suppkey % 5) * 0.26)
+              - (0.4 + (s_suppkey % 7) * 0.17)), 6) AS cer_maxx,
+  round(cy + (0.4 + (s_suppkey % 7) * 0.17), 6) AS cer_miny,
+  round(cy + (10.0 - (0.4 + (s_suppkey % 7) * 0.17)), 6) AS cer_maxy,
+  CAST(1 AS INT) AS cer_rings,
+  true AS cer_wall_in,
+  false AS cer_wall_out,
+  true AS cer_rfx_in,
+  false AS cer_rfx_out
 FROM br
 """
 

@@ -1,13 +1,14 @@
 r"""Noded overlay kernel: the AREA and the GEOMETRY of A ∩ B, A \ B,
-A ∪ B and A △ B for two even-odd ring sets (concave, holed, multipart,
-nested islands, shared edges, vertex touches) from one noding pass.
+A ∪ B and A △ B for two even-odd ring sets, and of the union of N
+overlapping members (concave, holed, multipart, nested islands, shared
+edges, vertex touches, duplicates) from one noding pass.
 
 Reference parity target: NTS `Geometry.Intersection` / `Difference` /
-`Union` / `SymDifference` (Spatial4n.Core.NTS/Shapes/Nts/NtsGeometry.cs
-op surface). The noder follows the snap-rounding design (Hobby 1999;
-Hershberger 2013): every contact is computed once and near-coincident
-points share one node, so degenerate contact is a structural fact
-instead of a float comparison.
+`Union` / `SymDifference` and `UnionGeometryCollection`
+(Spatial4n.Core.NTS/Shapes/Nts/NtsGeometry.cs op surface). The noder
+follows the snap-rounding design (Hobby 1999; Hershberger 2013): every
+contact is computed once and near-coincident points share one node, so
+degenerate contact is a structural fact instead of a float comparison.
 
 1. Node. Every boundary edge of both operands is split in one
    vectorized pass at every proper crossing with another edge and at
@@ -17,14 +18,20 @@ instead of a float comparison.
    crossing, so output rings keep input coordinates. The tolerance is
    the fixed fraction `_SNAP_REL` of the pair's bbox extent.
 2. Node ids. A sub-segment is an integer node-id pair. A piece of
-   boundary both operands share is ONE key with a coverage count per
-   operand; coverage parity (a ring running a piece twice cancels) is
-   the piece's membership in that operand's boundary.
-3. Classify. One batched ray cast against all other pieces gives the
-   even-odd parity of A and of B just beside every piece (an x-ray for
-   steep pieces, a y-ray for flat ones); the far side flips by the
-   coverage parity. A piece is kept iff the op's region lies on exactly
-   one side, directed so that region is on its LEFT.
+   boundary both operands share is ONE key with a signed coverage count
+   per operand: the sum of the directions the operand's rings run it
+   in (+1 along lo -> hi, -1 against).
+3. Classify. One batched ray cast against all other pieces gives each
+   operand's winding number just beside every piece (an x-ray for
+   steep pieces, a y-ray for flat ones); the far side differs by the
+   piece's coverage. For ∩ ∖ ∪ △ a point is in an operand when that
+   count is odd (even-odd rings; a ring running a piece twice cancels).
+   The N-member union (`union_members`) first orients every member so
+   its winding number is 1 inside and 0 outside (shells CCW, holes CW)
+   and puts all members in one operand: a point is in the union when
+   the count is nonzero, i.e. when any member covers it. A piece is
+   kept iff the op's region lies on exactly one side, directed so that
+   region is on its LEFT.
 4. Serve. AREA is the Green's-theorem sum over the kept pieces (no
    stitch). GEOMETRY stitches kept pieces by node id: around a node the
    kept pieces alternate in/out, and an incoming piece continues with
@@ -34,8 +41,12 @@ instead of a float comparison.
 
 Scale note: runs per candidate pair inside an Arrow batch. Contact
 candidates are bbox-culled over the (edges x edges) grid and the
-classification is one (pieces x pieces) pass, both blocked so large
-rings never materialize gigabyte grids.
+classification is one (pieces x pieces) ray cast. A grid of up to
+`_BLOCK` cells is one dense pass; a larger one (a buffer's boundary
+strip of a few hundred vertices has ~15k edges) runs in blocks of
+`_CULL` rows that each meet only the candidates reaching their span
+(sorted by x for boxes, by y for rays), with the pairs put back in
+dense order so node ids and output are the same either way.
 """
 from __future__ import annotations
 
@@ -52,6 +63,7 @@ _OPS = {
 }
 
 _BLOCK = 1_000_000  # grid cells per vectorized block
+_CULL = 64         # rows per block once candidates are culled
 
 
 def _vertices(rings_a, rings_b):
@@ -83,17 +95,38 @@ def _vertices(rings_a, rings_b):
 
 
 def _box_pairs(ax0, ax1, ay0, ay1, bx0, bx1, by0, by1):
-    """Index pairs (i, j) whose closed boxes a_i and b_j meet."""
+    """Index pairs (i, j) whose closed boxes a_i and b_j meet, in
+    (i, j) order."""
+    if len(ax0) * len(bx0) <= _BLOCK:
+        hit = ((ax0[:, None] <= bx1) & (bx0 <= ax1[:, None])
+               & (ay0[:, None] <= by1) & (by0 <= ay1[:, None]))
+        return np.nonzero(hit)
+    # several blocks: visit a in (x column, y) order so that a block
+    # spans little of either axis, and give each block only the b boxes
+    # that reach its span (b sorted by left edge: a box reaching x is
+    # one whose left edge lies within the widest b box of x)
+    ncol = int(np.sqrt(len(ax0) / _CULL)) + 1
+    col = np.floor((ax0 - ax0.min()) / max(np.ptp(ax0), 1e-300) * ncol)
+    oa = np.lexsort((ay0, col))
+    ob = np.argsort(bx0, kind="stable")
+    sbx0 = bx0[ob]
+    reach = (bx1 - bx0).max()
     out_i, out_j = [], []
-    step = max(1, _BLOCK // max(1, len(bx0)))
-    for s in range(0, len(ax0), step):
-        sl = slice(s, s + step)
-        hit = ((ax0[sl, None] <= bx1) & (bx0 <= ax1[sl, None])
-               & (ay0[sl, None] <= by1) & (by0 <= ay1[sl, None]))
+    for s in range(0, len(oa), _CULL):
+        ia = oa[s:s + _CULL]
+        x_lo, x_hi = ax0[ia].min(), ax1[ia].max()
+        jb = ob[np.searchsorted(sbx0, x_lo - reach):
+                np.searchsorted(sbx0, x_hi, side="right")]
+        jb = jb[(bx1[jb] >= x_lo) & (by0[jb] <= ay1[ia].max())
+                & (by1[jb] >= ay0[ia].min())]
+        hit = ((ax0[ia, None] <= bx1[jb]) & (bx0[jb] <= ax1[ia, None])
+               & (ay0[ia, None] <= by1[jb]) & (by0[jb] <= ay1[ia, None]))
         i, j = np.nonzero(hit)
-        out_i.append(i + s)
-        out_j.append(j)
-    return np.concatenate(out_i), np.concatenate(out_j)
+        out_i.append(ia[i])
+        out_j.append(jb[j])
+    i, j = np.concatenate(out_i), np.concatenate(out_j)
+    o = np.lexsort((j, i))
+    return i[o], j[o]
 
 
 def _cluster(cx, cy, tol):
@@ -222,32 +255,54 @@ def _node(rings_a, rings_b):
     nn = len(nx)
     keys, inv = np.unique(np.minimum(a_, b_) * nn + np.maximum(a_, b_),
                           return_inverse=True)
-    cover = np.stack([np.bincount(inv[side == k], minlength=len(keys)) & 1
-                      for k in (0, 1)], axis=1).astype(bool)
-    live = cover.any(axis=1)
+    # signed coverage: a sub-segment running lo -> hi counts +1
+    sgn = np.where(a_ < b_, 1.0, -1.0)
+    cover = np.stack([np.bincount(inv[side == k], weights=sgn[side == k],
+                                  minlength=len(keys))
+                      for k in (0, 1)], axis=1).astype(np.int64)
+    live = (cover != 0).any(axis=1)
     return nx, ny, keys[live] // nn, keys[live] % nn, cover[live]
 
 
-def _ray_parity(qx, qy, sx0, sy0, sx1, sy1, w, own):
-    """Per query point: parity of the w-weighted count of segments the
-    ray from (qx, qy) toward +x crosses (half-open in y), skipping the
-    query's own segment own[k]. Returns (queries x w columns) bool."""
-    out = np.zeros((len(qx), w.shape[1]), dtype=np.int64)
+def _ray_winding(qx, qy, sx0, sy0, sx1, sy1, w, own):
+    """Per query point: the w-weighted count of segments the ray from
+    (qx, qy) toward +x crosses (half-open in y), skipping the query's
+    own segment own[k]. Returns (queries x w columns) int64."""
     with np.errstate(divide="ignore", invalid="ignore"):
         slope = (sx1 - sx0) / (sy1 - sy0)
-        step = max(1, _BLOCK // max(1, len(sx0)))
-        for s in range(0, len(qx), step):
-            sl = slice(s, s + step)
-            yq = qy[sl, None]
+        if len(qx) * len(sx0) <= _BLOCK:
+            yq = qy[:, None]
             hit = (((sy0 > yq) != (sy1 > yq))
-                   & (qx[sl, None] < sx0 + (yq - sy0) * slope))
-            hit[np.arange(hit.shape[0]), own[sl]] = False
-            out[sl] = hit @ w
-    return (out & 1).astype(bool)
+                   & (qx[:, None] < sx0 + (yq - sy0) * slope))
+            hit[np.arange(len(qx)), own] = False
+            return hit @ w
+        # several blocks: visit queries in y order and give each block
+        # only the segments whose y span reaches its band (segments
+        # sorted by lower end, as in _box_pairs)
+        out = np.zeros((len(qx), w.shape[1]), dtype=np.int64)
+        oq = np.argsort(qy, kind="stable")
+        ylo, yhi = np.minimum(sy0, sy1), np.maximum(sy0, sy1)
+        os_ = np.argsort(ylo, kind="stable")
+        sylo = ylo[os_]
+        reach = (yhi - ylo).max()
+        for s in range(0, len(oq), _CULL):
+            iq = oq[s:s + _CULL]
+            y_lo, y_hi = qy[iq[0]], qy[iq[-1]]
+            js = os_[np.searchsorted(sylo, y_lo - reach):
+                     np.searchsorted(sylo, y_hi, side="right")]
+            js = js[yhi[js] > y_lo]
+            yq = qy[iq, None]
+            hit = (((sy0[js] > yq) != (sy1[js] > yq))
+                   & (qx[iq, None] < sx0[js] + (yq - sy0[js]) * slope[js])
+                   & (own[iq, None] != js))
+            out[iq] = hit @ w[js]
+    return out
 
 
-def _overlay(rings_a, rings_b, op):
-    """Kept directed pieces of `op`, region on the left.
+def _overlay(rings_a, rings_b, op, winding=False):
+    """Kept directed pieces of `op`, region on the left. A point is in
+    an operand when its coverage count there is odd (even-odd rings)
+    or, with `winding`, nonzero (rings oriented by `_oriented`).
 
     Returns (nx, ny, start, end) — node coordinates and the kept pieces
     as node-id pairs — or None when nothing is kept."""
@@ -259,21 +314,28 @@ def _overlay(rings_a, rings_b, op):
     x0, y0, x1, y1 = sx[lo], sy[lo], sx[hi], sy[hi]
     dx, dy = x1 - x0, y1 - y0
     mx, my = (x0 + x1) * 0.5, (y0 + y1) * 0.5
-    w = cover.astype(np.int64)
     steep = np.abs(dy) >= np.abs(dx)
-    probe = np.empty(cover.shape, dtype=bool)
+    probe = np.empty(cover.shape, dtype=np.int64)
     for sel, swap in ((steep, False), (~steep, True)):
         k = np.nonzero(sel)[0]
         if len(k) == 0:
             continue
-        if swap:   # y-ray: the same cast with the axes exchanged
-            probe[k] = _ray_parity(my[k], mx[k], y0, x0, y1, x1, w, k)
+        if swap:   # y-ray: the same cast with the axes exchanged,
+            # which mirrors the winding sign
+            w = cover * -np.sign(dx).astype(np.int64)[:, None]
+            probe[k] = _ray_winding(my[k], mx[k], y0, x0, y1, x1, w, k)
         else:
-            probe[k] = _ray_parity(mx[k], my[k], x0, y0, x1, y1, w, k)
-    # the probed side is east of steep pieces, north of flat ones
+            w = cover * np.sign(dy).astype(np.int64)[:, None]
+            probe[k] = _ray_winding(mx[k], my[k], x0, y0, x1, y1, w, k)
+    # the probed side is east of steep pieces, north of flat ones;
+    # crossing a piece from its right to its left adds its coverage
     probe_left = np.where(steep, dy < 0.0, dx > 0.0)[:, None]
-    left = np.where(probe_left, probe, probe ^ cover)
-    right = left ^ cover
+    left = np.where(probe_left, probe, probe + cover)
+    right = left - cover
+    if winding:
+        left, right = left != 0, right != 0
+    else:
+        left, right = (left & 1).astype(bool), (right & 1).astype(bool)
     want = _OPS[op]
     in_l = want(left[:, 0], left[:, 1])
     in_r = want(right[:, 0], right[:, 1])
@@ -287,7 +349,10 @@ def _overlay(rings_a, rings_b, op):
 def boolean_area(rings_a, rings_b, op) -> float:
     """Exact planar area of `op` over two even-odd ring sets: the
     Green's-theorem sum over the kept pieces, no stitch."""
-    kept = _overlay(rings_a, rings_b, op)
+    return _green_area(_overlay(rings_a, rings_b, op))
+
+
+def _green_area(kept) -> float:
     if kept is None:
         return 0.0
     nx, ny, start, end = kept
@@ -302,7 +367,61 @@ def robust_boolean(rings_a, rings_b, op):
     CCW, holes CW; [] for an empty result), or None when the stitch
     meets a node whose kept pieces do not alternate in/out (snapping
     created a crossing) — callers report an error row."""
-    kept = _overlay(rings_a, rings_b, op)
+    return _stitch(_overlay(rings_a, rings_b, op))
+
+
+def _oriented(members):
+    """The rings of every member, oriented so that the member's winding
+    number is 1 inside and 0 outside: shells CCW and holes CW by
+    even-odd depth within the member. Depth comes from the
+    distance-guarded containment probe, so rings touching at a vertex
+    still orient correctly."""
+    from .overlay import _ring_signs
+    from .union import _signed_area2
+    out = []
+    for member in members:
+        rings = []
+        for rx, ry in member:
+            rx = np.asarray(rx, dtype=np.float64)
+            ry = np.asarray(ry, dtype=np.float64)
+            if len(rx) >= 2 and rx[0] == rx[-1] and ry[0] == ry[-1]:
+                rx, ry = rx[:-1], ry[:-1]
+            if len(rx) >= 3:
+                rings.append((rx, ry))
+        if len(rings) == 1:   # one ring: its own orientation decides
+            signs = [_signed_area2(*rings[0])]
+        else:
+            signs = _ring_signs(rings)
+        for (rx, ry), sgn in zip(rings, signs):
+            out.append((rx, ry) if sgn >= 0 else (rx[::-1], ry[::-1]))
+    return out
+
+
+def union_members(members, minus=()):
+    """Union GEOMETRY of N members, minus the union of the `minus`
+    members. A member is an even-odd ring list (shells, holes, dateline
+    pages); members may overlap, repeat, share edges and touch. One
+    noding pass over all rings; a piece bounds the result where the
+    summed winding number of `members` is nonzero on exactly one side
+    (and that of `minus` zero). Returns rings in even-odd form (shells
+    CCW, holes CW; [] for an empty result), or None when the stitch
+    fails (see robust_boolean)."""
+    return _stitch(_union_overlay(members, minus))
+
+
+def union_area(members, minus=()) -> float:
+    """Exact planar area of union_members(members, minus): the Green's
+    sum over its kept pieces, no stitch."""
+    return _green_area(_union_overlay(members, minus))
+
+
+def _union_overlay(members, minus):
+    return _overlay(_oriented(members), _oriented(minus), "sub",
+                    winding=True)
+
+
+def _stitch(kept):
+    """Rings from kept directed pieces (see the module docstring)."""
     if kept is None:
         return []
     nx, ny, start, end = kept

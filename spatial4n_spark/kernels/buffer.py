@@ -56,28 +56,24 @@ def buffer_rect(minx, maxx, miny, maxy, dist, geo: bool = True):
 # Minkowski sum, built from scratch).
 #
 # Exactness contract (documented approximation levels):
-# - CONVEX exterior ring: exact Minkowski sum polygon ⊕ disc(d) with
-#   round joins; vertex arcs are discretized at <= ARC_STEP radians with
-#   the exact edge-normal angles as arc endpoints, so the result is a
-#   convex polygon INSCRIBED in the true buffer (max inward deviation =
-#   d * (1 - cos(ARC_STEP/2)) ~= 0.48% of d at the default step).
-# - CONCAVE exterior ring: buffered convex hull — a documented
-#   conservative SUPERSET (round-join offsets of concave rings
-#   self-intersect; resolving that union is the full polygon-clipping
-#   problem the reference outsources to NTS).
-# - Holes (odd even-odd nesting depth): eroded by d via half-plane
-#   clipping of the (hull of the) hole; a hole that collapses is
-#   dropped — exactly what the true buffer does.
-# - Shells whose buffers would overlap (bbox test) degrade to one
-#   buffered hull of all shells: even-odd parity would otherwise turn
-#   the overlap into a phantom hole where NTS unions.
+# - CONVEX rings whose buffers stay apart (fast path): exact Minkowski
+#   sum polygon ⊕ disc(d) with round joins; vertex arcs are discretized
+#   at <= ARC_STEP radians with the exact edge-normal angles as arc
+#   endpoints, so the result is a convex polygon INSCRIBED in the true
+#   buffer (max inward deviation = d * (1 - cos(ARC_STEP/2)) ~= 0.48% of
+#   d at the default step); convex holes erode by half-plane clipping,
+#   and a hole that collapses is dropped.
+# - Everything else (concave, holed, multipart with meeting buffers,
+#   and every erosion but a convex single shell): the exact strip union
+#   below, with the same inscribed-arc bound.
+# - Union rings that do not stitch: the buffered convex hull of the
+#   shells (a conservative SUPERSET, flagged approx); erosion raises.
 # ---------------------------------------------------------------------------
 
 ARC_STEP = np.pi / 16.0  # 8 segments per quadrant, JTS default fidelity
 
 
-# ring primitives shared with the union kernel — single source so a
-# robustness fix lands once (code-review r4)
+# ring primitives shared with kernels/union.py
 from .union import _ensure_ccw, _signed_area2  # noqa: E402
 
 
@@ -191,72 +187,33 @@ def _erode_convex_ring(xs, ys, d):
 
 
 # ---------------------------------------------------------------------------
-# EXACT general (concave / holed / multipart) buffer — round 5.
+# EXACT general (concave / holed / multipart) buffer and erosion.
 #
-# P (+) disc(d) == P  ∪  (boundary(P) (+) disc(d)).  The boundary strip
+# P (+) disc(d) == P  ∪  (boundary(P) (+) disc(d)) and
+# P (-) disc(d) == P  \  (boundary(P) (+) disc(d)).  The boundary strip
 # decomposes exactly into per-EDGE rectangles (edge swept +-d along its
-# normal) and per-VERTEX discs; those pieces are unioned by the same
-# Greiner–Hormann planarization the multi-overlap parser uses
-# (kernels/union.union_many).  The strip's ring set is then classified
-# against the INPUT's even-odd region: a strip ring survives iff the
-# side of it NOT covered by the strip is also not covered by P — that
-# side is genuinely outside the buffer (outer boundaries and true
-# pockets like a nearly-closed C's enclosed gap), while rings whose
-# empty side lies INSIDE P are interior seams P fills (dropped).  Holes
-# erode by d and collapse automatically; disjoint shells whose buffers
-# meet merge exactly (the r4 hull-superset degrade is gone for every
-# simple-ring input).  Arc discretization is the same inscribed-arc
-# contract as the convex path (<= ARC_STEP radians per segment, max
-# inward deviation d*(1-cos(ARC_STEP/2)) ~ 0.48%).
-#
-# Robustness: disc discretization phases are jittered per vertex
-# (golden-angle) and the (phase-seed, d-nudge) ladder retries when the
-# union hits degenerate contact (exactly-tangent pieces); the d-nudge
-# is 1e-9 relative — three orders below the arc-inscription error.
-# Inputs the ladder cannot planarize (spike vertices, self-touching
-# rings) fall back to the r3 hull-superset path with approx=True.
+# normal) and per-VERTEX discs, so both are ONE call of the noded
+# overlay union (kernels/booleans.union_members): buffer is the union
+# of P and every piece, erosion is P minus the union of the pieces.
+# Shared and tangent piece boundaries (d equal to a parallel-edge
+# distance, collinear edges, disc vertices on rect sides) are nodes of
+# the arrangement, not failures.  Holes erode by d and collapse, thin
+# necks seal into holes, disjoint shells whose buffers meet merge, and
+# erosion grows holes, severs thin necks and drops thin shells.  Arc
+# discretization is the same inscribed-arc contract as the convex path
+# (<= ARC_STEP radians per segment, max inward deviation
+# d*(1-cos(ARC_STEP/2)) ~ 0.48%); every disc starts at angle 0.
 # ---------------------------------------------------------------------------
-
-_GOLDEN_ANGLE = 2.399963229728653
-_PHASE_SEEDS = (0.437291, 1.113507, 1.771031, 2.531447)
-# the coarse rungs escape STRUCTURAL tangencies (d exactly matching a
-# parallel-edge distance lands offset sides within union._BOUNDARY_EPS
-# = 1e-6 of the opposite boundary, where the fine rungs can't move
-# them out); 2e-6 relative is still ~2500x below the arc sagitta
-_D_NUDGES = (1.0, 1.0 + 3e-9, 1.0 + 7.3e-9, 1.0 + 2.1e-6, 1.0 - 1.7e-6)
 
 
 def _clean_ring(rx, ry):
-    """Drop duplicate consecutive vertices and merge exactly-collinear
-    same-direction runs (they would make adjacent strip rects share a
-    boundary line -> unresolvable degenerate contact). Returns None if
-    fewer than 3 vertices survive."""
-    n = len(rx)
-    keep = np.ones(n, dtype=bool)
-    for i in range(n):
-        j = (i + 1) % n
-        if rx[i] == rx[j] and ry[i] == ry[j]:
-            keep[j] = False
-    rx, ry = rx[keep], ry[keep]
-    n = len(rx)
-    if n < 3:
-        return None
-    keep = np.ones(n, dtype=bool)
-    for i in range(n):
-        p, q = (i - 1) % n, (i + 1) % n
-        ux, uy = rx[i] - rx[p], ry[i] - ry[p]
-        vx, vy = rx[q] - rx[i], ry[q] - ry[i]
-        if ux * vy - uy * vx == 0.0 and ux * vx + uy * vy > 0.0:
-            keep[i] = False
+    """Drop duplicate consecutive vertices (a zero-length edge has no
+    strip rectangle). Returns None if fewer than 3 vertices survive."""
+    keep = (rx != np.roll(rx, -1)) | (ry != np.roll(ry, -1))
     rx, ry = rx[keep], ry[keep]
     if len(rx) < 3:
         return None
     return rx, ry
-
-
-def _disc_piece(cx, cy, r, phase, segs=32):
-    th = phase + np.arange(segs) * (2.0 * np.pi / segs)
-    return cx + r * np.cos(th), cy + r * np.sin(th)
 
 
 def _rect_piece(ax, ay, bx, by, r):
@@ -267,95 +224,25 @@ def _rect_piece(ax, ay, bx, by, r):
             np.array([ay + ny, by + ny, by - ny, ay - ny]))
 
 
-def _pt_parity(px, py, rings) -> int:
-    """Even-odd crossing count of one point over a ring list
-    (vectorized twin of union._point_in_ring_strict)."""
-    c = 0
-    for rx, ry in rings:
-        rx2, ry2 = np.roll(rx, -1), np.roll(ry, -1)
-        active = (ry > py) != (ry2 > py)
-        if not active.any():
-            continue
-        x_at = rx[active] + (py - ry[active]) * (rx2[active] - rx[active]) \
-            / (ry2[active] - ry[active])
-        if (px < x_at).sum() & 1:
-            c += 1
-    return c
-
-
-def _classify_strip_ring(ring, strip, in_rings, d):
-    """True = keep (bounds the buffer), False = drop (interior seam
-    P fills), None = no clean side sample found (caller retries)."""
-    rx, ry = ring
-    ex = np.roll(rx, -1) - rx
-    ey = np.roll(ry, -1) - ry
-    elen = np.hypot(ex, ey)
-    order = np.argsort(-elen)
-    for i in order[:8]:
-        if elen[i] == 0.0:
-            continue
-        mx = rx[i] + 0.5 * ex[i]
-        my = ry[i] + 0.5 * ey[i]
-        nx, ny = ey[i] / elen[i], -ex[i] / elen[i]
-        eps = max(d * 1e-6, (abs(mx) + abs(my) + 1.0) * 1e-11)
-        pa = _pt_parity(mx + eps * nx, my + eps * ny, strip)
-        pb = _pt_parity(mx - eps * nx, my - eps * ny, strip)
-        if (pa & 1) == (pb & 1):
-            continue  # sample straddled another ring — try a new edge
-        if pa & 1:
-            qx, qy = mx - eps * nx, my - eps * ny
-        else:
-            qx, qy = mx + eps * nx, my + eps * ny
-        return (_pt_parity(qx, qy, in_rings) & 1) == 0
-    return None
-
-
 def _buffer_exact(rings, d, arc_step, erode: bool = False):
-    """Exact strip-union buffer (or EROSION, `erode=True`) of an
-    even-odd ring set. Returns a ring list ([] = fully eroded) or None
-    when every ladder attempt hits degenerate contact. The two modes
-    share everything except the side a strip ring must bound:
-
-      buffer  P ⊕ D = P ∪ strip: keep rings whose strip-empty side is
-              OUTSIDE the input region (interior seams P fills drop);
-      erosion P ⊖ D = P \\ strip: keep rings whose strip-empty side is
-              INSIDE the input region (NTS Buffer(negative) parity —
-              holes grow, thin necks sever, thin shells vanish).
-    """
-    from .union import union_many
+    """Exact buffer (or EROSION, `erode=True`) of an even-odd ring set
+    by one noded union of the input and its boundary-strip pieces (see
+    the block above). Returns a ring list ([] = fully eroded) or None
+    when the union does not stitch."""
+    from .booleans import union_members
     segs = max(8, int(np.ceil(2.0 * np.pi / arc_step)))
-    vbase = 0
-    for mult in _D_NUDGES:
-        dd = d * mult
-        for seed in _PHASE_SEEDS:
-            pieces = []
-            vidx = vbase
-            for rx, ry in rings:
-                n = len(rx)
-                for i in range(n):
-                    j = (i + 1) % n
-                    if rx[i] != rx[j] or ry[i] != ry[j]:
-                        pieces.append(_rect_piece(rx[i], ry[i],
-                                                  rx[j], ry[j], dd))
-                    pieces.append(_disc_piece(
-                        rx[i], ry[i], dd,
-                        seed + _GOLDEN_ANGLE * vidx, segs))
-                    vidx += 1
-            strip = union_many(pieces)
-            if strip is None:
-                continue
-            kept = []
-            ok = True
-            for ring in strip:
-                cls = _classify_strip_ring(ring, strip, rings, dd)
-                if cls is None:
-                    ok = False
-                    break
-                if cls != erode:  # buffer: outside-P; erosion: inside-P
-                    kept.append(ring)
-            if ok and (kept or erode):
-                return kept
-    return None
+    th = np.arange(segs) * (2.0 * np.pi / segs)
+    ux, uy = d * np.cos(th), d * np.sin(th)
+    pieces = []
+    for rx, ry in rings:
+        n = len(rx)
+        for i in range(n):
+            j = (i + 1) % n
+            pieces.append([_rect_piece(rx[i], ry[i], rx[j], ry[j], d)])
+            pieces.append([(rx[i] + ux, ry[i] + uy)])
+    if erode:
+        return union_members([rings], minus=pieces)
+    return union_members([rings] + pieces)
 
 
 def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
@@ -363,16 +250,16 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
 
     Exact (within the inscribed-arc contract) for convex rings via
     direct Minkowski offset/erode, and for CONCAVE / HOLED / MULTIPART
-    inputs via the strip-union path (see the round-5 block above).
-    NEGATIVE d is EROSION (NTS ``geom.Buffer(negative)`` parity,
-    NtsGeometry.cs:175-180): holes grow, thin necks sever, fully-eroded
-    regions come back EMPTY (zero rings). Returns
-    (oxs, oys, oring_offsets, approx); approx is True only when the
-    strip union could not planarize a positive-buffer input (spikes,
-    self-touching rings) and the hull-superset fallback fired — the
-    erosion path has no fallback and raises instead.
-    Raises ValueError on a degenerate ring or an unplanarizable
-    erosion input.
+    inputs via one noded union of the input and its boundary-strip
+    pieces (see the block above). NEGATIVE d is EROSION (NTS
+    ``geom.Buffer(negative)`` parity, NtsGeometry.cs:175-180): holes
+    grow, thin necks sever, fully-eroded regions come back EMPTY (zero
+    rings). Returns (oxs, oys, oring_offsets, approx); approx is True
+    only when the union of a positive-buffer input did not stitch and
+    the hull-superset fallback fired — the erosion path has no
+    fallback and raises instead.
+    Raises ValueError on a degenerate ring or an erosion whose union
+    does not stitch.
     """
     from .pip import points_in_ring
 
@@ -408,8 +295,7 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
             out_rings = _buffer_exact(cleaned, ad, arc_step, erode=True)
             if out_rings is None:
                 raise ValueError(
-                    "buffer_polygon: erosion infeasible (degenerate "
-                    "boundary strip)")
+                    "buffer_polygon: erosion rings did not stitch")
         if not out_rings:
             return (np.empty(0), np.empty(0), [0], False)  # fully eroded
         off = [0]
@@ -461,14 +347,14 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
                 out_rings.append(eroded)
         return _pack(out_rings, False)
 
-    # general EXACT path: boundary-strip union + side classification
+    # general EXACT path: one union of the input and its strip pieces
     cleaned = [_clean_ring(rx, ry) for rx, ry in rings]
     if all(c is not None for c in cleaned):
         exact = _buffer_exact(cleaned, d, arc_step)
         if exact is not None:
             return _pack(exact, False)
 
-    # last resort (unplanarizable input): r3 hull-superset fallback
+    # last resort (the union did not stitch): hull-superset fallback
     conv_shells = [(rx, ry) if _is_convex_ccw(rx, ry) else
                    _convex_hull(rx, ry) for rx, ry in shells]
     if len(conv_shells) > 1 and shells_overlap:

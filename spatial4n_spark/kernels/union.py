@@ -1,19 +1,15 @@
-"""Polygon-union kernel for allowMultiOverlap (NtsGeometry.cs:64-94:
-``if (allowMultiOverlap) geom = UnionGeometryCollection(geom)`` —
-overlapping members of a MULTIPOLYGON are unioned at construction so
-downstream relate logic sees disjoint components).
-
-From-scratch Greiner–Hormann boundary traversal over two simple CCW
-rings with PROPER boundary crossings. Degenerate contact (shared
-vertices, vertex-on-edge, collinear overlapping edges) returns None —
-the caller falls back to the validation rule. Output is a ring LIST in
-even-odd form: one outer ring plus any pocket holes two interlocking
-C-shapes can enclose; the engine's global even-odd PIP consumes that
-directly.
+"""Member relation for MULTIPOLYGON overlap resolution
+(allowMultiOverlap, NtsGeometry.cs:64-94: ``if (allowMultiOverlap)
+geom = UnionGeometryCollection(geom)``): classifies two members as
+interior-disjoint, crossing, or one containing the other, so the WKT
+parser (`wkt._resolve_multi_overlap`) knows which members to merge as
+they are, which to drop, and which to send through the noded overlay
+union (`booleans.union_members`). Also the small ring primitives the
+buffer kernel shares.
 
 Scale note: this runs inside the Arrow parse batch, per shape — cost is
-O(|A|·|B|) per overlapping member pair, on shapes that are tiny next to
-the row counts around them.
+O(|A|·|B|) per member pair whose bboxes meet, on shapes that are tiny
+next to the row counts around them.
 """
 from __future__ import annotations
 
@@ -21,8 +17,7 @@ import numpy as np
 
 
 def _roll1(a):
-    """np.roll(a, -1) without np.roll's dispatch overhead (hot path:
-    hundreds of calls per GH op on small rings)."""
+    """np.roll(a, -1) without np.roll's dispatch overhead."""
     return np.concatenate((a[1:], a[:1]))
 
 
@@ -45,97 +40,6 @@ def _open_ccw(xs, ys):
     if len(xs) >= 2 and xs[0] == xs[-1] and ys[0] == ys[-1]:
         xs, ys = xs[:-1], ys[:-1]
     return _ensure_ccw(xs, ys)
-
-
-def _point_in_ring_strict(px, py, xs, ys) -> bool:
-    """Strict interior test (boundary excluded); callers guarantee the
-    point is not on the boundary (degenerate contact already bailed)."""
-    inside = False
-    n = len(xs)
-    for i in range(n):
-        ax, ay = xs[i], ys[i]
-        bx, by = xs[(i + 1) % n], ys[(i + 1) % n]
-        if (ay > py) != (by > py):
-            x_at = ax + (py - ay) * (bx - ax) / (by - ay)
-            if px < x_at:
-                inside = not inside
-    return inside
-
-
-class _Node:
-    __slots__ = ("x", "y", "nxt", "prv", "inter", "twin", "entry",
-                 "visited")
-
-    def __init__(self, x, y, inter=False):
-        self.x = x
-        self.y = y
-        self.nxt = None
-        self.prv = None
-        self.inter = inter
-        self.twin = None
-        self.entry = False
-        self.visited = False
-
-
-def _build_list(xs, ys, inters_per_edge):
-    """Circular doubly-linked list of ring vertices with intersection
-    nodes spliced in t-order along each edge. Returns (head,
-    intersection nodes)."""
-    nodes = []
-    inter_nodes = []
-    n = len(xs)
-    for i in range(n):
-        nodes.append(_Node(xs[i], ys[i]))
-        for _, node in sorted(inters_per_edge.get(i, []), key=lambda e: e[0]):
-            nodes.append(node)
-            inter_nodes.append(node)
-    for i, nd in enumerate(nodes):
-        nd.nxt = nodes[(i + 1) % len(nodes)]
-        nodes[(i + 1) % len(nodes)].prv = nd
-    return nodes[0], inter_nodes
-
-
-def rings_properly_overlap(ax, ay, bx, by):
-    """(overlap, degenerate).
-
-    overlap: INTERIORS intersect — proper boundary crossings, or a
-    vertex of one ring strictly inside the other (boundary-aware: a
-    vertex lying ON the other boundary is skipped, so dateline-cut
-    pages and touching real-world members don't false-positive).
-    Boundary contact alone (shared vertices/edges, common in corpus
-    multipolygons and at ±180 page cuts) keeps even-odd parity correct
-    and reports (False, False) — the reference's ShapeCollection
-    accepts such members untouched. degenerate: overlap accompanied by
-    point/line boundary contact, which the union traversal can't node.
-
-    Documented blind spot: rings whose EVERY vertex lies on the other
-    ring's boundary (e.g. bit-identical members) pass undetected."""
-    ax, ay = _open_ccw(ax, ay)
-    bx, by = _open_ccw(bx, by)
-    crossings, point_touch, line_touch = _edge_crossings(ax, ay, bx, by)
-    degen = point_touch or line_touch
-    # ANY surviving proper crossing means interior overlap: the
-    # endpoint-epsilon filter inside _edge_crossings already removed
-    # the near-tangent slivers dateline page cuts leave along ±180
-    # (verified 0 survivors across the fiji/russia corpora), and an
-    # odd count simply means the boundary pair closes through shared
-    # segments (the reference's TestParseMultiPolygon fixture).
-    if crossings:
-        return True, degen
-    from .pip import _ring_parity_and_boundary
-    in_a, bnd_a = _ring_parity_and_boundary(ax, ay, bx, by)
-    if _deep_inside(ax, ay, in_a & ~bnd_a, [(bx, by)]):
-        return True, degen
-    in_b, bnd_b = _ring_parity_and_boundary(bx, by, ax, ay)
-    if _deep_inside(bx, by, in_b & ~bnd_b, [(ax, ay)]):
-        return True, degen
-    # vertex probes can ALL land on the other boundary while the
-    # interiors still overlap (two squares sharing collinear edge
-    # segments with offset spans): under degenerate contact, fall back
-    # to sub-segment midpoint probes before declaring disjoint.
-    if degen and _degen_interior_overlap([(ax, ay)], [(bx, by)]):
-        return True, True
-    return False, False
 
 
 # boundary "thickness" for containment: cut-line noise leaves vertices
@@ -169,12 +73,14 @@ def _deep_inside(px, py, mask, rings) -> bool:
 
 
 def member_relation(rings_a, rings_b):
-    """(kind, degen) between two multipolygon MEMBERS, each a list of
+    """Relation kind between two multipolygon MEMBERS, each a list of
     (xs, ys) rings in even-odd form (shell + holes + dateline pages).
 
     kind: 'none' (interiors disjoint; boundary touching allowed),
-    'cross' (boundaries cross transversally), 'a_contains_b' /
-    'b_contains_a' (one member's interior swallows the other).
+    'cross' (interiors overlap otherwise: boundaries cross
+    transversally, one member fills the other's hole, or collinear
+    contact hides an overlap), 'a_contains_b' / 'b_contains_a' (one
+    member's interior swallows the other).
     Crossings use the endpoint-epsilon guard against dateline-cut
     float slivers; containment is MEMBER-level even-odd
     parity over ALL the other member's rings (so a member nested in
@@ -190,7 +96,7 @@ def member_relation(rings_a, rings_b):
             crossings, pt, lt = _edge_crossings(ax, ay, bx, by)
             degen |= pt or lt
             if crossings:
-                return "cross", degen
+                return "cross"
 
     def contained(mine, other):
         for xs, ys in mine:
@@ -210,23 +116,20 @@ def member_relation(rings_a, rings_b):
         # member covers the other's HOLE (annulus + hole-filling
         # square — the hole ring's vertices sit inside the filler,
         # the filler's vertices sit in the annulus interior). Neither
-        # union-by-drop is correct; classify as a degenerate cross so
-        # the resolver takes the infeasible-union path (error / hull)
-        # instead of silently keeping a phantom hole.
-        return "cross", True
+        # union-by-drop is correct, so the pair goes to the union.
+        return "cross"
     if b_in_a:
-        return "a_contains_b", degen
+        return "a_contains_b"
     if a_in_b:
-        return "b_contains_a", degen
+        return "b_contains_a"
     # degenerate contact with every vertex probe on the other boundary
     # can hide a real interior overlap (collinear shared edge segments
     # with offset spans) — probe sub-segment midpoints before calling
-    # the pair touch-only; a hit classifies as a degenerate cross so
-    # the resolver takes the infeasible-union path instead of an
+    # the pair touch-only; a hit goes to the union instead of an
     # even-odd merge that would XOR the overlap into a phantom hole.
     if degen and _degen_interior_overlap(opened_a, opened_b):
-        return "cross", True
-    return "none", degen
+        return "cross"
+    return "none"
 
 
 def _degen_interior_overlap(opened_a, opened_b) -> bool:
@@ -272,15 +175,7 @@ def _edge_crossings(ax, ay, bx, by):
 
     Returns (list[(i, t, j, u, x, y)], point_touch, line_touch):
     point_touch = finite endpoint/vertex contact (valid multipolygon
-    touching, but unsupported by the union traversal); line_touch =
-    collinear edges sharing positive length (invalid contact)."""
-    # one-slot memo: union_many's overlap test and the union traversal
-    # ask for the SAME pair back to back (both normalize via _open_ccw,
-    # so the arrays are value-identical) — reuse instead of recomputing
-    # the crossing grid. Single-threaded per task; one pair retained.
-    key = (ax.tobytes(), ay.tobytes(), bx.tobytes(), by.tobytes())
-    if _XC_MEMO.get("key") == key:
-        return _XC_MEMO["val"]
+    touching); line_touch = collinear edges sharing positive length."""
     na, nb = len(ax), len(bx)
     a2x, a2y = _roll1(ax), _roll1(ay)
     b2x, b2y = _roll1(bx), _roll1(by)
@@ -289,9 +184,6 @@ def _edge_crossings(ax, ay, bx, by):
     line_touch = False
     # fully vectorized over the (na x nb) edge-pair grid, blocked so a
     # pair of large corpus rings never materializes gigabyte grids
-    # (r5: the old per-edge-i loop paid ~40 numpy dispatches per edge —
-    # 2 ms per call, the dominant cost of every strip-union buffer /
-    # multi-overlap union)
     sx = (b2x - bx)[None, :]
     sy = (b2y - by)[None, :]
     blk = max(1, 4_000_000 // max(1, nb))
@@ -342,159 +234,4 @@ def _edge_crossings(ax, ay, bx, by):
                     point_touch = True
                     continue
                 out.append((int(i), tt, int(j), uu, ix, iy))
-    _XC_MEMO["key"] = key
-    _XC_MEMO["val"] = (out, point_touch, line_touch)
     return out, point_touch, line_touch
-
-
-_XC_MEMO: dict = {}
-
-
-def union_rings(ax, ay, bx, by):
-    """Union of two simple rings -> list of (xs, ys) rings in even-odd
-    form (outer ring CCW; pocket holes come out CW — orientation is
-    irrelevant to the engine's even-odd PIP). Returns None on
-    degenerate boundary contact. Greiner–Hormann traversal."""
-    ax, ay = _open_ccw(ax, ay)
-    bx, by = _open_ccw(bx, by)
-    crossings, point_touch, line_touch = _edge_crossings(ax, ay, bx, by)
-    if point_touch or line_touch:
-        return None
-    if not crossings:
-        if _point_in_ring_strict(ax[0], ay[0], bx, by):
-            return [(bx, by)]
-        if _point_in_ring_strict(bx[0], by[0], ax, ay):
-            return [(ax, ay)]
-        return [(ax, ay), (bx, by)]
-
-    a_edges: dict = {}
-    b_edges: dict = {}
-    for i, t, j, u, x, y in crossings:
-        na_ = _Node(x, y, inter=True)
-        nb_ = _Node(x, y, inter=True)
-        na_.twin = nb_
-        nb_.twin = na_
-        a_edges.setdefault(i, []).append((t, na_))
-        b_edges.setdefault(j, []).append((u, nb_))
-    a_head, a_inters = _build_list(ax, ay, a_edges)
-    b_head, _ = _build_list(bx, by, b_edges)
-
-    # entry/exit marking: walk each list; status flips at every proper
-    # crossing. node.entry == True means the walk ENTERS the other ring
-    # at this node.
-    for head, ox, oy in ((a_head, bx, by), (b_head, ax, ay)):
-        inside = _point_in_ring_strict(head.x, head.y, ox, oy)
-        nd = head
-        while True:
-            if nd.inter:
-                nd.entry = not inside
-                inside = not inside
-            nd = nd.nxt
-            if nd is head:
-                break
-
-    # traversal: follow a list, jumping to the twin at every crossing,
-    # starting at EXIT nodes (the piece of the list ahead is OUTSIDE
-    # the other ring) — at the next crossing the twin's forward piece
-    # continues the same status. Starting from every unvisited exit
-    # node extracts every output loop (pocket holes included). A step
-    # guard bounds the walk; exceeding it means inconsistent links
-    # (possible only under near-degenerate float geometry) -> None.
-    max_steps = 4 * (len(ax) + len(bx) + 2 * len(crossings))
-    rings = []
-    for start in a_inters:
-        if start.visited or start.entry:
-            continue
-        start.visited = True
-        start.twin.visited = True
-        loop_x, loop_y = [start.x], [start.y]
-        nd = start.nxt
-        steps = 0
-        while True:
-            steps += 1
-            if steps > max_steps:
-                return None
-            if nd.inter:
-                if nd.visited:
-                    break
-                nd.visited = True
-                nd.twin.visited = True
-                loop_x.append(nd.x)
-                loop_y.append(nd.y)
-                nd = nd.twin.nxt
-            else:
-                loop_x.append(nd.x)
-                loop_y.append(nd.y)
-                nd = nd.nxt
-        if len(loop_x) >= 3:
-            rings.append((np.asarray(loop_x), np.asarray(loop_y)))
-    return rings
-
-
-def union_many(rings):
-    """Union a list of simple rings [(xs, ys), ...] by pairwise
-    Greiner–Hormann passes until no two PRIMARY rings overlap.
-
-    Worklist to fixpoint: when an incoming ring merges with a primary,
-    the merged primary goes BACK on the worklist so it re-tests against
-    every remaining primary — a bridge ring spanning two previously
-    disjoint members must union with both, or the survivors' overlap
-    would XOR into a phantom even-odd hole. Each merge reduces the
-    primary count by one, so the loop terminates. Pocket-hole rings
-    produced by a pairwise union join the output passively (even-odd),
-    documented limitation: a later ring that overlaps a pocket hole is
-    not re-clipped against it. Returns None on degenerate contact
-    anywhere."""
-    out: list = []
-    holes: list = []
-    work = [(np.asarray(rx, dtype=np.float64),
-             np.asarray(ry, dtype=np.float64)) for rx, ry in rings]
-    while work:
-        rx, ry = work.pop(0)
-        bb = (rx.min(), rx.max(), ry.min(), ry.max())
-        merged = False
-        for k in range(len(out)):
-            ox, oy = out[k]
-            # bbox fast reject: STRICTLY disjoint boxes can neither
-            # overlap nor touch — skip the full crossing detection
-            # (touching boxes still take the full check)
-            if (bb[0] > ox.max() or ox.min() > bb[1]
-                    or bb[2] > oy.max() or oy.min() > bb[3]):
-                continue
-            overlap, degen = rings_properly_overlap(rx, ry, ox, oy)
-            if degen:
-                return None
-            if overlap:
-                # pocket shield (r5): "overlap" with no boundary
-                # crossings is pure ring containment — but a blob
-                # sitting inside one of the accumulated POCKET holes is
-                # REGION-disjoint from the primary (the pocket is not
-                # part of the union region) and must stay a separate
-                # primary, not be absorbed into the enclosing ring.
-                # (Erosion strips hit this: a hole's grown blob lives
-                # inside the shell strip's pocket.)
-                axo, ayo = _open_ccw(rx, ry)
-                bxo, byo = _open_ccw(ox, oy)
-                cr, _, _ = _edge_crossings(axo, ayo, bxo, byo)  # memoized
-                if not cr:
-                    if _point_in_ring_strict(axo[0], ayo[0], bxo, byo):
-                        inx, iny = axo, ayo
-                    else:
-                        inx, iny = bxo, byo
-                    if any(_point_in_ring_strict(inx[0], iny[0], hx, hy)
-                           for hx, hy in holes):
-                        continue
-                u = union_rings(rx, ry, ox, oy)
-                if u is None:
-                    return None
-                # largest-area ring is the merged primary -> re-queue;
-                # extras are pocket holes and join passively
-                u.sort(key=lambda r: -abs(_signed_area2(r[0], r[1])))
-                del out[k]
-                holes.extend(u[1:])
-                work.append(u[0])
-                merged = True
-                break
-        if not merged:
-            out.append((rx, ry))
-    return out + holes

@@ -628,19 +628,20 @@ def _resolve_multi_overlap(members, geo, dateline_rule, validation_rule,
     - interiors disjoint (boundary touching fine) -> plain merge;
     - one member swallows another -> contained member dropped
       (= its union);
-    - transversal crossings between single-ring members without
-      degenerate contact -> exact Greiner-Hormann union
-      (kernels.union, the UnionGeometryCollection analog of
-      NtsGeometry.cs:64-94);
-    - exact union INFEASIBLE (degenerate boundary contact, or
-      crossings on holed/paged members): allowMultiOverlap=true
-      (factory key, NtsSpatialContextFactory.cs:52) degrades to the
-      convex hull of the overlapping members — a documented
-      approximate union; otherwise the validationRule decides
-      (error | repairConvexHull -> hull | repairBuffer0 -> hull |
-      none -> merged as-is with the even-odd artifact).
+    - any other interior overlap (crossings, a member filling another's
+      hole, collinear or vertex contact, holed or dateline-paged
+      members) -> the exact union of the overlapping members from the
+      noded overlay kernel (booleans.union_members, the
+      UnionGeometryCollection analog of NtsGeometry.cs:64-94);
+    - union rings that do not stitch (snapping created a crossing):
+      allowMultiOverlap=true (factory key, NtsSpatialContextFactory.cs:52)
+      degrades to the convex hull of the overlapping members — a
+      documented approximate union; otherwise the validationRule
+      decides (error | repairConvexHull -> hull | repairBuffer0 ->
+      hull | none -> merged as-is with the even-odd artifact).
     """
-    from .union import member_relation, union_many
+    from .booleans import union_members
+    from .union import member_relation
 
     if validation_rule == "none":
         # merged as-is (even-odd artifact accepted) — hoisted above the
@@ -652,7 +653,7 @@ def _resolve_multi_overlap(members, geo, dateline_rule, validation_rule,
     n = len(members)
     dropped = [False] * n
     crossing = [False] * n
-    any_cross = degen = False
+    any_cross = False
     # duplicate members first (union of a member with itself is the
     # member): the pairwise relate below can't detect them, and the
     # even-odd merge would XOR them away entirely
@@ -677,8 +678,7 @@ def _resolve_multi_overlap(members, geo, dateline_rule, validation_rule,
                      or min(mi["maxy"], mj["maxy"])
                      < max(mi["miny"], mj["miny"]))):
                 continue
-            kind, dg = member_relation(rings_per[i], rings_per[j])
-            degen |= dg and kind != "none"
+            kind = member_relation(rings_per[i], rings_per[j])
             if kind == "a_contains_b":
                 dropped[j] = True
             elif kind == "b_contains_a":
@@ -693,27 +693,25 @@ def _resolve_multi_overlap(members, geo, dateline_rule, validation_rule,
         return _merge_polygon_members([members[k] for k in keep])
 
     cross_ids = [k for k in keep if crossing[k]]
-    if not degen and all(len(rings_per[k]) == 1 for k in cross_ids):
-        unioned = union_many([rings_per[k][0] for k in cross_ids])
-        if unioned is not None:
-            recs = [_mk_polygon([_rings_to_closed(rx, ry)], geo,
-                                dateline_rule, "none")
-                    for rx, ry in unioned]
-            recs += [members[k] for k in keep if not crossing[k]]
-            return _merge_polygon_members(recs)
-    # exact union infeasible
+    rest = [members[k] for k in keep if not crossing[k]]
+    unioned = union_members([rings_per[k] for k in cross_ids])
+    if unioned:
+        # the members are dateline-processed already: no second pass
+        recs = [_mk_polygon([_rings_to_closed(rx, ry)], False, "none",
+                            "none") for rx, ry in unioned]
+        return _merge_polygon_members(recs + rest)
+    # the union did not stitch
     if allow_multi_overlap or validation_rule == "repairConvexHull" \
             or validation_rule == "repairBuffer0":
         hull = _convex_hull_ring(
             [_rings_to_closed(rx, ry)
              for k in cross_ids for rx, ry in rings_per[k]])
-        recs = [_mk_polygon([hull], geo, dateline_rule, "none")]
-        recs += [members[k] for k in keep if not crossing[k]]
-        return _merge_polygon_members(recs)
+        return _merge_polygon_members(
+            [_mk_polygon([hull], geo, dateline_rule, "none")] + rest)
     raise WktParseError(
-        "invalid multipolygon: overlapping components not exactly "
-        "unionable (degenerate contact or holes/pages); set "
-        "allowMultiOverlap=true for an approximate hull union")
+        "invalid multipolygon: the union of overlapping components did "
+        "not stitch into rings; set allowMultiOverlap=true for an "
+        "approximate hull union")
 
 
 def _mk_multi_parts(parts, kind) -> dict:

@@ -1,14 +1,15 @@
 """Dissolve: per-group geometry union (merge parcels by owner, tracts
 by county — the classic GIS dissolve) as a distributed aggregate.
 
-Engine-added operator. The geometry math is the noded overlay union
-(`kernels.booleans.robust_boolean` op 'or', folded over the group's
-members): exact for every contact class, including the degenerate
-ones (adjacent parcels sharing edges, vertex-on-edge touches), and
-canonical — shared seams between touching members are dissolved away.
-When the fold cannot stitch and `allow_approx=True`, the group degrades
-to the convex hull of its overlapping members (the WKT parser's
-allowMultiOverlap hull, `kernels.wkt._resolve_multi_overlap`).
+Engine-added operator. The geometry math is one call of the noded
+overlay union per group (`kernels.booleans.union_members` over all of
+the group's members): exact for every contact class, including the
+degenerate ones (adjacent parcels sharing edges, vertex-on-edge
+touches, duplicates), and canonical — shared seams between touching
+members are dissolved away. When the union cannot stitch and
+`allow_approx=True`, the group degrades to the convex hull of its
+overlapping members (the WKT parser's allowMultiOverlap hull,
+`kernels.wkt._resolve_multi_overlap`).
 
 Scale shape: ONE shuffle on the dissolve keys (`applyInArrow`), each
 group's members resolved inside its task — dissolve is inherently a
@@ -61,7 +62,7 @@ def _member_records(s, i) -> list:
 def _dissolve_group(members: list, allow_approx: bool) -> dict:
     if len(members) == 1:
         return {"rec": members[0], "exact": True, "error": None}
-    rec = _robust_union_fold(members)
+    rec = _union_record(members)
     if rec is not None:
         return {"rec": rec, "exact": True, "error": None}
     if not allow_approx:
@@ -73,27 +74,22 @@ def _dissolve_group(members: list, allow_approx: bool) -> dict:
     return {"rec": merged, "exact": False, "error": None}
 
 
-def _robust_union_fold(members: list):
-    """Exact union of a member list via the noded overlay
-    (kernels/booleans.robust_boolean 'or'), folded pairwise. Returns a
-    merged polygon record or None when the stitch cannot be closed
-    (the caller keeps the error/hull contract)."""
-    from ..kernels.booleans import members_of_robust, robust_boolean
+def _union_record(members: list):
+    """Exact union of a member list in one call of the noded overlay
+    union (kernels/booleans.union_members). Returns a merged polygon
+    record or None when the stitch cannot be closed (the caller keeps
+    the error/hull contract)."""
+    from ..kernels.booleans import members_of_robust, union_members
 
     def rings_of(rec):
         xs = np.asarray(rec["xs"], dtype=np.float64)
         ys = np.asarray(rec["ys"], dtype=np.float64)
         ro = rec["ring_offsets"]
-        return [(xs[a:b], ys[a:b]) for a, b in zip(ro[:-1], ro[1:])
-                if b - a >= 3]
-    acc = rings_of(members[0])
-    for m in members[1:]:
-        acc = robust_boolean(acc, rings_of(m), "or")
-        if acc is None:
-            return None
-    if not acc:
+        return [(xs[a:b], ys[a:b]) for a, b in zip(ro[:-1], ro[1:])]
+    rings = union_members([rings_of(m) for m in members])
+    if not rings:
         return None  # empty union of area members: unclassifiable
-    mem = members_of_robust(acc)
+    mem = members_of_robust(rings)
     return None if mem is None else closed_rings_record(mem)
 
 

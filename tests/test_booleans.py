@@ -12,7 +12,21 @@ from spatial4n_spark.kernels.booleans import (members_of_robust,
                                               robust_boolean)
 from spatial4n_spark.kernels.overlay import (intersection_area,
                                              polygon_area_evenodd)
-from spatial4n_spark.kernels.union import _point_in_ring_strict
+
+
+def _point_in_ring_strict(px, py, xs, ys) -> bool:
+    """Crossing-parity point-in-ring oracle (callers keep the point off
+    the boundary)."""
+    inside = False
+    n = len(xs)
+    for i in range(n):
+        ax, ay = xs[i], ys[i]
+        bx, by = xs[(i + 1) % n], ys[(i + 1) % n]
+        if (ay > py) != (by > py):
+            x_at = ax + (py - ay) * (bx - ax) / (by - ay)
+            if px < x_at:
+                inside = not inside
+    return inside
 
 
 def _parity(px, py, rings):

@@ -85,10 +85,9 @@ def test_dissolve_duplicates_and_rects(spark):
 
 
 def test_dissolve_degenerate_contact_now_exact(spark):
-    # squares overlapping WITH collinear shared edge segments: the GH
-    # resolver bails, but the r5 boundary-selection fold settles it
-    # EXACTLY (adjacent-parcel dissolve) - no error, no hull, no
-    # approx flag
+    # squares overlapping WITH collinear shared edge segments: the
+    # noded overlay union settles them EXACTLY (adjacent-parcel
+    # dissolve) - no error, no hull, no approx flag
     rows = [("g", _sq(0, 0, 2)),
             ("g", "POLYGON((1 0, 3 0, 3 2, 1 2, 1 0))")]  # shares edge seg
     out = dissolve(_df(spark, rows), ["owner"]).collect()[0]
@@ -111,8 +110,7 @@ def test_dissolve_pure_edge_adjacency_exact(spark):
     got = polygon_area_evenodd(np.asarray(s["xs"]), np.asarray(s["ys"]),
                                s["ring_offsets"])
     assert got == pytest.approx(8.0)
-    # r5: the robust fold is dissolve's primary path — the shared
-    # seam is dissolved away into one canonical ring
+    # the shared seam is dissolved away into one canonical ring
     assert len(s["ring_offsets"]) - 1 == 1
 
 
@@ -152,7 +150,7 @@ def test_two_level_equals_single_level(spark):
 
 def test_two_level_degenerate_keys_now_exact(spark):
     """r5: collinear-contact members dissolve EXACTLY through the
-    two-level path too (robust-union fold inside stage-1 partials)."""
+    two-level path too (the overlay union inside stage-1 partials)."""
     from spatial4n_spark.operators.dissolve import dissolve_two_level
     rows = [("g", _sq(0, 0, 2)),
             ("g", "POLYGON((1 0, 3 0, 3 2, 1 2, 1 0))"),
@@ -170,8 +168,8 @@ def test_two_level_degenerate_keys_now_exact(spark):
 
 def test_two_level_all_failed_cells_key_not_dropped(spark):
     """Formerly the zero-ok-partials guard test (r4: a left join
-    silently dropped keys whose every stage-1 partial errored). The r5
-    robust-union fold now settles that fixture EXACTLY, so this checks
+    silently dropped keys whose every stage-1 partial errored). The
+    overlay union now settles that fixture EXACTLY, so this checks
     the degenerate-contact key comes through the two-level path with
     the same exact result single-level gives (the join-guard code
     remains as defense in depth for probe/stitch bailouts)."""
@@ -209,7 +207,7 @@ def test_dissolve_parcel_grid_exact(spark):
     """THE adjacent-parcel case at small scale: a 3x3 grid of unit
     squares sharing edges dissolves into ONE exact square; the same
     grid missing its center dissolves into a square WITH A HOLE —
-    both through the r5 robust-union fold (every pairwise contact is
+    both through the overlay union (every pairwise contact is
     degenerate collinear sharing)."""
     def cell(i, j):
         return (f"POLYGON(({i} {j}, {i+1} {j}, {i+1} {j+1}, "
@@ -241,9 +239,9 @@ def test_dissolve_parcel_grid_exact(spark):
 
 
 def test_dissolve_kind_is_multipolygon_on_every_path(spark, monkeypatch):
-    """Every path emits kind 8: the overlay union fold (several
-    members), a single member, and the allow_approx hull degrade of a
-    fold that cannot stitch."""
+    """Every path emits kind 8: the overlay union (several members), a
+    single member, and the allow_approx hull degrade of a union that
+    cannot stitch."""
     rows = [("fold", _sq(0, 0, 2)), ("fold", _sq(1, 1, 2)),
             ("single", _sq(10, 10, 3))]
     out = {r["owner"]: r["shape"] for r in dissolve(_df(spark, rows),
@@ -261,9 +259,9 @@ def test_dissolve_kind_is_multipolygon_on_every_path(spark, monkeypatch):
             W.parse_shape("POLYGON((5 0, 7 0, 6 2, 5 0))")]
     table = pa.table({"owner": ["x", "x"],
                       "__s": shapes.encode_records(recs)})
-    for fold, approx in ((D._robust_union_fold, False),
-                         (lambda members: None, True)):
-        monkeypatch.setattr(D, "_robust_union_fold", fold)
+    for union, approx in ((D._union_record, False),
+                          (lambda members: None, True)):
+        monkeypatch.setattr(D, "_union_record", union)
         res = D._dissolve_table(table, ["owner"], "shape", approx)
         s = res.column("shape").to_pylist()[0]
         assert s["kind"] == 8 and len(s["ring_offsets"]) == 3

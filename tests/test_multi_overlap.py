@@ -2,13 +2,18 @@
 into a ShapeCollection (NtsWktShapeParser.cs:184-202) whose relate is
 the member fold — union semantics, overlapping members accepted. The
 engine's even-odd ring form would XOR an overlap into a phantom hole,
-so overlap is resolved at parse time: containment drop, exact
-Greiner-Hormann union, or (allowMultiOverlap=true, factory key
-NtsSpatialContextFactory.cs:52 / NtsGeometry.cs:64-94) an approximate
-hull union when exact union is infeasible."""
+so overlap is resolved at parse time: containment drop, or the exact
+union of the overlapping members from the noded overlay kernel — also
+under degenerate contact, holes and dateline pages. Only when the union
+rings do not stitch does the parser error, or (allowMultiOverlap=true,
+factory key NtsSpatialContextFactory.cs:52 / NtsGeometry.cs:64-94)
+take an approximate hull union; those fallbacks are tested by forcing
+the union to return None."""
 import numpy as np
 import pytest
 
+from spatial4n_spark.kernels import booleans
+from spatial4n_spark.kernels.overlay import polygon_area_evenodd
 from spatial4n_spark.kernels.pip import points_in_polygon
 from spatial4n_spark.kernels.wkt import WktParseError, parse_shape
 
@@ -18,16 +23,28 @@ VTX_TOUCH = ("MULTIPOLYGON(((0 0, 10 0, 5 8, 0 0)),"
              " ((10 0, 20 0, 15 8, 10 0)))")   # shared vertex (10,0)
 EDGE_SHARE = ("MULTIPOLYGON(((0 0, 10 0, 5 8, 0 0)),"
               " ((0 0, 10 0, 5 -8, 0 0)))")    # shared full edge
-# interiors overlap AND boundaries share a vertex -> exact union
-# infeasible (GH can't node the touch)
+# interiors overlap AND boundaries share a vertex (0 0)
 DEGEN_OVERLAP = ("MULTIPOLYGON(((0 0, 10 0, 10 10, 0 10, 0 0)),"
                  " ((0 0, 14 5, 5 14, 0 0)))")
+# square + the two triangle tips outside it, each with base 38/7 on
+# x = 10 / y = 10 and height 4: 100 + 2 * 76/7
+DEGEN_OVERLAP_AREA = 852.0 / 7.0
 
 
 def _pip(rec, px, py):
     return points_in_polygon(np.array(px, float), np.array(py, float),
                              np.array(rec["xs"]), np.array(rec["ys"]),
                              rec["ring_offsets"])
+
+
+def _area(rec):
+    return polygon_area_evenodd(rec["xs"], rec["ys"], rec["ring_offsets"])
+
+
+@pytest.fixture
+def no_union(monkeypatch):
+    """The union of overlapping members does not stitch."""
+    monkeypatch.setattr(booleans, "union_members", lambda *a, **k: None)
 
 
 def test_crossing_members_union_by_default():
@@ -76,12 +93,24 @@ def test_containment_member_absorbed():
     assert len(rec["ring_offsets"]) == 2
 
 
-def test_degenerate_overlap_errors_by_default():
-    with pytest.raises(WktParseError, match="not exactly unionable"):
+def test_degenerate_overlap_unions_by_default():
+    """Overlap plus a shared vertex: the exact union, no error."""
+    rec = parse_shape(DEGEN_OVERLAP)
+    assert rec["kind"] == 8 and len(rec["ring_offsets"]) == 2
+    # overlap, both tips; (12, 4) lies in the hull but not the union
+    assert _pip(rec, [5, 12, 5, 12], [5, 5, 12, 4]).tolist() == \
+        [True, True, True, False]
+    assert _area(rec) == pytest.approx(DEGEN_OVERLAP_AREA, abs=1e-9)
+    assert parse_shape(DEGEN_OVERLAP, allow_multi_overlap=True)["xs"] == \
+        rec["xs"]
+
+
+def test_unstitched_union_errors_by_default(no_union):
+    with pytest.raises(WktParseError, match="did not stitch"):
         parse_shape(DEGEN_OVERLAP)
 
 
-def test_degenerate_overlap_hulls_under_allow():
+def test_degenerate_overlap_hulls_under_allow(no_union):
     rec = parse_shape(DEGEN_OVERLAP, allow_multi_overlap=True)
     assert rec["kind"] in (7, 8)
     # hull covers the overlap interior AND both members
@@ -93,7 +122,7 @@ def test_degenerate_overlap_hulls_under_allow():
     assert _pip(rec3, [5], [5])[0]
 
 
-def test_non_overlapping_member_kept_outside_hull():
+def test_non_overlapping_member_kept_outside_hull(no_union):
     wkt = DEGEN_OVERLAP[:-1] + ", ((100 0, 110 0, 105 8, 100 0)))"
     rec = parse_shape(wkt, allow_multi_overlap=True)
     assert _pip(rec, [105, 50], [2, 2]).tolist() == [True, False]
@@ -110,10 +139,16 @@ def test_interlocking_union_keeps_pocket_hole():
     assert got.tolist() == [False, True, False, True]
 
 
-def test_context_factory_key():
+def test_context_factory_key(monkeypatch):
     from spatial4n_spark.context import SpatialEngineContext
     ctx = SpatialEngineContext.from_args({"allowMultiOverlap": "true"})
     assert ctx.allow_multi_overlap
+    for c in (ctx, SpatialEngineContext()):
+        rec = c.parse_wkt(DEGEN_OVERLAP)
+        assert _pip(rec, [5], [5])[0]
+        assert _area(rec) == pytest.approx(DEGEN_OVERLAP_AREA, abs=1e-9)
+    # the key decides only when the union does not stitch
+    monkeypatch.setattr(booleans, "union_members", lambda *a, **k: None)
     assert _pip(ctx.parse_wkt(DEGEN_OVERLAP), [5], [5])[0]
     with pytest.raises(WktParseError):
         SpatialEngineContext().parse_wkt(DEGEN_OVERLAP)
@@ -138,10 +173,13 @@ def test_st_from_wkt_allow_multi_overlap(spark):
     from spatial4n_spark import functions as SF
     df = spark.createDataFrame([(DEGEN_OVERLAP,)], ["wkt"])
     default = df.select(SF.st_from_wkt(F.col("wkt")).alias("s")).first()
-    assert default["s"]["error"] is not None
+    assert default["s"]["error"] is None
+    assert _area(default["s"]) == pytest.approx(DEGEN_OVERLAP_AREA,
+                                                abs=1e-9)
     allowed = df.select(SF.st_from_wkt(
         F.col("wkt"), allow_multi_overlap=True).alias("s")).first()
     assert allowed["s"]["error"] is None
+    assert allowed["s"]["xs"] == default["s"]["xs"]
     rel = spark.createDataFrame([(OVERLAP, 7.0, 7.0)], ["wkt", "px", "py"]) \
         .select(SF.st_relate_shape_point(
             SF.st_from_wkt(F.col("wkt")),
@@ -151,28 +189,28 @@ def test_st_from_wkt_allow_multi_overlap(spark):
 
 def test_reference_parse_multipolygon_fixture():
     """NtsWktShapeParserTest.TestParseMultiPolygon's members overlap
-    WITH degenerate contact (shared edges + a proper crossing). The
-    reference accepts it because its MULTIPOLYGON is a ShapeCollection
-    of separately-validated members; this engine's even-odd form needs
-    a union, which the degenerate contact makes infeasible exactly —
-    documented divergence: default errors (clear message), and
-    allowMultiOverlap=true takes the hull-union superset."""
+    WITH degenerate contact (shared vertices, a shared edge, a proper
+    crossing). The reference accepts it because its MULTIPOLYGON is a
+    ShapeCollection of separately-validated members; this engine's
+    even-odd form needs their union, which the noded overlay gives
+    exactly: the second member (area 3) plus the first member's tip
+    above it, the triangle (100 1, 101 1.5, 101 2) of area 1/4."""
     wkt = ("MULTIPOLYGON("
            "((100 0, 101 0, 101 2, 100 1, 100 0)),"
            "((100 0, 102 0, 102 2, 100 1, 100 0)))")
-    with pytest.raises(WktParseError, match="allowMultiOverlap"):
-        parse_shape(wkt)
-    rec = parse_shape(wkt, allow_multi_overlap=True)
-    # hull covers both members' interiors (fold semantics superset)
-    assert _pip(rec, [100.5, 101.5], [0.5, 0.5]).tolist() == [True, True]
+    rec = parse_shape(wkt)
+    assert len(rec["ring_offsets"]) == 2
+    assert _pip(rec, [100.5, 101.5, 100.9, 101.5], [0.5, 0.5, 1.75, 1.9]
+                ).tolist() == [True, True, True, False]
+    assert _area(rec) == pytest.approx(3.25, abs=1e-9)
 
 
 def test_bridge_member_unions_transitively():
     """A bridge member crossing two previously-disjoint members must
-    union with BOTH: union_many re-queues a merged primary until no
-    two primaries overlap (a single pass left the merged A+C ring
-    overlapping B, which even-odd XORed into a phantom hole over
-    B∩bridge)."""
+    union with BOTH: the three members go through one union, so no
+    merged ring is left overlapping B (a pairwise pass once left the
+    merged A+C ring overlapping B, which even-odd XORed into a phantom
+    hole over B∩bridge)."""
     wkt = ("MULTIPOLYGON(((0 0,1 0,1 1,0 1,0 0)),"
            "((2 0,3 0,3 1,2 1,2 0)),"
            "((0.5 0.25,2.5 0.25,2.5 0.75,0.5 0.75,0.5 0.25)))")
@@ -213,17 +251,16 @@ def test_collinear_contact_interior_overlap_detected():
     """Round-4 resolver fix: two rects sharing collinear edge SEGMENTS
     while their interiors overlap ([1,2]x[0,2]) — every vertex of each
     lies on or outside the other's boundary, so the vertex probes are
-    blind; the sub-segment midpoint probe must classify this as a
-    degenerate cross (error by default, hull under allow), NEVER as a
-    touch-only merge whose even-odd XOR would punch a phantom hole."""
+    blind; the sub-segment midpoint probe must send the pair to the
+    union, NEVER to a touch-only merge whose even-odd XOR would punch
+    a phantom hole. The union is [0,3]x[0,2]."""
     wkt = ("MULTIPOLYGON(((0 0, 2 0, 2 2, 0 2, 0 0)),"
            " ((1 0, 3 0, 3 2, 1 2, 1 0)))")
-    with pytest.raises(WktParseError):
-        parse_shape(wkt)
-    rec = parse_shape(wkt, allow_multi_overlap=True)
-    # hull of the pair is [0,3]x[0,2]: overlap interior point must be IN
+    rec = parse_shape(wkt)
+    assert len(rec["ring_offsets"]) == 2
     assert _pip(rec, [1.5, 2.5, 0.5, 4.0], [1, 1, 1, 1]).tolist() == \
         [True, True, True, False]
+    assert _area(rec) == pytest.approx(6.0, abs=1e-12)
 
 
 def test_touch_only_members_still_plain_merge():
@@ -239,11 +276,11 @@ def test_hole_filling_member_not_dropped_as_contained():
     HOLE has all its vertices at even-odd parity 1 and no boundary
     crossings — the old containment probe dropped it, silently keeping
     a phantom hole (area 96, PIP(5,5) False). Mutual vertex containment
-    must classify as an infeasible union: error by default, hull under
-    allowMultiOverlap, and the overlap interior must be INSIDE."""
+    sends the pair to the union: the filled square [0,10]^2, one ring,
+    area 100, the old hole INSIDE."""
     wkt = ("MULTIPOLYGON(((0 0,10 0,10 10,0 10,0 0),"
            "(4 4,6 4,6 6,4 6,4 4)), ((3 3,7 3,7 7,3 7,3 3)))")
-    with pytest.raises(WktParseError):
-        parse_shape(wkt)
-    rec = parse_shape(wkt, allow_multi_overlap=True)
-    assert _pip(rec, [5.0], [5.0])[0]  # the filled hole is inside now
+    rec = parse_shape(wkt)
+    assert len(rec["ring_offsets"]) == 2
+    assert _pip(rec, [5.0, 3.5], [5.0, 5.0]).tolist() == [True, True]
+    assert _area(rec) == pytest.approx(100.0, abs=1e-12)

@@ -1,21 +1,22 @@
-"""Monte-Carlo property sweep for the Greiner-Hormann union kernel
-(kernels/union.py): for VALID simple rings, even-odd PIP over the
-union output must equal PIP(A) OR PIP(B) at every sample point — the
-reference's collection-fold semantics (NtsGeometry.cs:64-94
-UnionGeometryCollection) expressed as a point oracle.
+"""Monte-Carlo property sweep for the N-member union of the noded
+overlay kernel (kernels/booleans.union_members): for VALID simple
+rings, even-odd PIP over the union output must equal PIP(A) OR PIP(B)
+at every sample point — the reference's collection-fold semantics
+(NtsGeometry.cs:64-94 UnionGeometryCollection) expressed as a point
+oracle — and the union must settle every pair.
 
 Inputs are random star polygons REJECTED through the engine's own ring
-validator (`_ring_invalid_reason`) — the union kernel's contract is
-valid simple rings only (the WKT parser validates upstream); a
+validator (`_ring_invalid_reason`) — the members are valid simple
+rings (the WKT parser validates upstream); a
 sorted-angle star polygon is NOT automatically simple (an angular gap
 > pi sends that edge through other wedges), which is exactly the class
 of invalid input the validator exists to reject.
 """
 import numpy as np
 
+from spatial4n_spark.kernels.booleans import union_members
 from spatial4n_spark.kernels.pip import points_in_polygon
-from spatial4n_spark.kernels.union import (_open_ccw, rings_properly_overlap,
-                                           union_many, union_rings)
+from spatial4n_spark.kernels.union import _open_ccw
 from spatial4n_spark.kernels.wkt import _ring_invalid_reason
 
 
@@ -50,12 +51,8 @@ def test_union_rings_matches_pip_fold():
                   int(rng.integers(3, 12)))
         if not (_valid(*a) and _valid(*b)):
             continue
-        ov, dg = rings_properly_overlap(*a, *b)
-        if not ov or dg:
-            continue
-        u = union_rings(*a, *b)
-        if u is None:  # near-degenerate float geometry bail is allowed
-            continue
+        u = union_members([[a], [b]])
+        assert u is not None
         unioned += 1
         px = rng.uniform(-4, 4, 600)
         py = rng.uniform(-4, 4, 600)
@@ -81,9 +78,8 @@ def test_union_many_three_rings_matches_pip_fold():
                 rs.append(_open_ccw(*p))
         if len(rs) < 3:
             continue
-        out = union_many(rs)
-        if out is None:
-            continue
+        out = union_members([[r] for r in rs])
+        assert out is not None
         checked += 1
         px = rng.uniform(-5, 5, 600)
         py = rng.uniform(-5, 5, 600)
@@ -92,5 +88,5 @@ def test_union_many_three_rings_matches_pip_fold():
             | _pip([rs[2]], px, py)
         bad = np.nonzero(got != want)[0]
         assert bad.size == 0, \
-            f"union_many PIP mismatch at {[(px[i], py[i]) for i in bad[:5]]}"
+            f"three-member union PIP mismatch at {[(px[i], py[i]) for i in bad[:5]]}"
     assert checked >= 30
