@@ -14,10 +14,15 @@ Output is a flat dict per shape (the Spark shape-struct):
   aware); xs,ys vertex arrays; ring_offsets (polygon rings / multi parts).
 Collections return kind=KIND_COLLECTION with `members` (list of dicts).
 
-The batch entry point `parse_wkt_batch` is what the pandas UDF calls:
-a vectorized regex fast-path handles the dominant POINT case; the
-tokenizer handles the rest per string (errors -> None + reason, no
-exceptions, mirroring engine kernels' no-throw rule).
+Batch entry points: `parse_wkt_batch` (records + errors) and
+`parse_wkt_columns` (the shape-struct columns the Arrow stages emit).
+Both take the dominant POINT case with one vectorized regex extract;
+`parse_wkt_columns` also takes ENVELOPE and BUFFER(POINT) that way,
+and checks single-ring POLYGONs in one batched pass per vertex count
+(closure, range, rect demotion, simplicity). The tokenizer handles
+the rest per string, including every row a batched check turns away
+(errors -> None + reason, no exceptions, mirroring engine kernels'
+no-throw rule).
 """
 from __future__ import annotations
 
@@ -320,70 +325,127 @@ def _rect_from_poly(ring, geo: bool, dateline_rule: str) -> dict:
     return _mk_rect(minx, maxx, miny, maxy, geo)
 
 
+def _segment_pairs(ax, ay, bx, by, i):
+    """Segment i of m rings against its non-adjacent partners j > i + 1
+    (less the wrap pair (0, n - 1)): ax, ay, bx, by are (m, n) segment
+    start/end arrays. Returns (j0, t, u, proper, touch, overlap): the
+    partners are j0, j0 + 1, ...; the rest are (m, partners) arrays, t/u
+    the crossing parameters, `proper` interior crossings, `touch`
+    endpoint touches, `overlap` collinear segments whose 1-D extents on
+    segment i's dominant axis meet."""
+    n = ax.shape[1]
+    j0 = i + 2
+    j = slice(j0, n - 1 if i == 0 else n)
+    r_x = (bx[:, i] - ax[:, i])[:, None]
+    r_y = (by[:, i] - ay[:, i])[:, None]
+    s_x, s_y = bx[:, j] - ax[:, j], by[:, j] - ay[:, j]
+    qp_x, qp_y = ax[:, j] - ax[:, i, None], ay[:, j] - ay[:, i, None]
+    denom = r_x * s_y - r_y * s_x
+    t_num = qp_x * s_y - qp_y * s_x
+    u_num = qp_x * r_y - qp_y * r_x
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = t_num / denom
+        u = u_num / denom
+    proper = (denom != 0) & (t > 0) & (t < 1) & (u > 0) & (u < 1)
+    touch = (denom != 0) & (t >= 0) & (t <= 1) & (u >= 0) & (u <= 1) \
+        & ~proper
+    overlap = (denom == 0) & (t_num == 0)
+    if overlap.any():
+        use_x = r_x != 0
+        a0 = np.where(use_x, ax[:, i, None], ay[:, i, None])
+        a1 = np.where(use_x, bx[:, i, None], by[:, i, None])
+        b0 = np.where(use_x, ax[:, j], ay[:, j])
+        b1 = np.where(use_x, bx[:, j], by[:, j])
+        overlap &= (np.maximum(np.minimum(a0, a1), np.minimum(b0, b1))
+                    <= np.minimum(np.maximum(a0, a1), np.maximum(b0, b1)))
+    return j0, t, u, proper, touch, overlap
+
+
+def _ring_segments(vx, vy):
+    """(m, n) segment start/end arrays of m closed rings given as (m, n+1)
+    vertex arrays whose last column repeats the first."""
+    ax, ay = vx[:, :-1], vy[:, :-1]
+    return ax, ay, np.roll(ax, -1, axis=1), np.roll(ay, -1, axis=1)
+
+
 def _segment_intersections(ring):
     """All intersections between non-adjacent segments of one closed
     ring. Returns (invalid_reason | None, per_seg) where per_seg[i] is a
     list of (t, (ix, iy)) proper-interior intersection points on segment
     i (each point computed ONCE per pair, so both segments carry the
     bit-identical coordinates)."""
-    pts = ring[:-1]
-    n = len(pts)
+    n = len(ring) - 1
     per_seg: list = [[] for _ in range(n)]
     if n < 3:
         return "too few points", per_seg
-    ax = np.array([p[0] for p in pts]); ay = np.array([p[1] for p in pts])
-    bx = np.roll(ax, -1); by = np.roll(ay, -1)
+    ax, ay, bx, by = _ring_segments(np.array([[p[0] for p in ring]]),
+                                    np.array([[p[1] for p in ring]]))
     # repeated consecutive vertices
     if ((ax == bx) & (ay == by)).any():
         return "repeated point", per_seg
     reason = None
     for i in range(n - 2):
-        # candidate partners j > i+1 (and exclude the wrap pair (0, n-1))
-        j0 = i + 2
-        j1 = n - 1 if i == 0 else n
-        if j0 >= j1:
-            continue
-        j = np.arange(j0, j1)
-        r_x, r_y = bx[i] - ax[i], by[i] - ay[i]
-        s_x, s_y = bx[j] - ax[j], by[j] - ay[j]
-        qp_x, qp_y = ax[j] - ax[i], ay[j] - ay[i]
-        denom = r_x * s_y - r_y * s_x
-        t_num = qp_x * s_y - qp_y * s_x
-        u_num = qp_x * r_y - qp_y * r_x
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = t_num / denom
-            u = u_num / denom
-        proper = (denom != 0) & (t > 0) & (t < 1) & (u > 0) & (u < 1)
+        j0, t, u, proper, touch, overlap = _segment_pairs(ax, ay, bx, by, i)
         # endpoint touches / collinear overlap between non-adjacent
         # segments make the ring non-simple => invalid (JTS LinearRing)
-        touch = (denom != 0) & (t >= 0) & (t <= 1) & (u >= 0) & (u <= 1) \
-            & ~proper
         if touch.any():
             reason = reason or "ring self-intersection (vertex touch)"
-        collinear = (denom == 0) & (t_num == 0)
-        if collinear.any():
-            # overlapping collinear segments: compare 1-D extents on the
-            # segment's dominant axis
-            for jj in j[collinear]:
-                if r_x != 0:
-                    lo, hi = min(ax[i], bx[i]), max(ax[i], bx[i])
-                    lo2, hi2 = min(ax[jj], bx[jj]), max(ax[jj], bx[jj])
-                else:
-                    lo, hi = min(ay[i], by[i]), max(ay[i], by[i])
-                    lo2, hi2 = min(ay[jj], by[jj]), max(ay[jj], by[jj])
-                if max(lo, lo2) <= min(hi, hi2):
-                    reason = reason or "collinear segment overlap"
+        if overlap.any():
+            reason = reason or "collinear segment overlap"
         if proper.any():
             reason = reason or "ring self-intersection"
-            for k, jj in zip(np.nonzero(proper)[0], j[proper]):
-                tt = float(t[k])
-                uu = float(u[k])
-                ixy = (float(ax[i] + tt * r_x), float(ay[i] + tt * r_y))
+            r_x, r_y = bx[0, i] - ax[0, i], by[0, i] - ay[0, i]
+            for k in np.nonzero(proper[0])[0]:
+                tt = float(t[0, k])
+                uu = float(u[0, k])
+                ixy = (float(ax[0, i] + tt * r_x), float(ay[0, i] + tt * r_y))
                 per_seg[i].append((tt, ixy))
-                per_seg[int(jj)].append((uu, ixy))
+                per_seg[j0 + int(k)].append((uu, ixy))
     for lst in per_seg:
         lst.sort(key=lambda e: e[0])
     return reason, per_seg
+
+
+def _simple_rings(vx, vy):
+    """`_segment_intersections(ring)[0] is None` for m closed rings of
+    one vertex count at once: vx, vy are (m, k) arrays of finite
+    coordinates whose last column repeats the first. One
+    `_segment_pairs` step per segment over the rings not yet found
+    invalid, so memory stays O(m * k)."""
+    ax, ay, bx, by = _ring_segments(vx, vy)
+    ok = ~((ax == bx) & (ay == by)).any(axis=1)  # repeated point
+    live = np.nonzero(ok)[0]
+    segs = [a[live] for a in (ax, ay, bx, by)]
+    for i in range(ax.shape[1] - 2):
+        if not live.size:
+            break
+        _, _, _, proper, touch, overlap = _segment_pairs(*segs, i)
+        bad = (proper | touch | overlap).any(axis=1)
+        if bad.any():
+            ok[live[bad]] = False
+            live = live[~bad]
+            segs = [a[~bad] for a in segs]
+    return ok
+
+
+def _fast_ring_rows(vx, vy, geo: bool, validation_rule: str):
+    """Which of m single-ring polygons, given as (m, k) vertex arrays of
+    one vertex count, the POLYGON fast path emits as they are: closed,
+    finite, within [-180, 180] and at most 180 wide under `geo`, not a
+    possible rectangle (a 5-vertex ring with axis-parallel edges: rect
+    demotion) and, unless validation is off, simple.
+    Every other row goes to the tokenizer, which owns the dateline
+    rules, rect demotion, repairs and error texts."""
+    ok = ((vx[:, 0] == vx[:, -1]) & (vy[:, 0] == vy[:, -1])
+          & np.isfinite(vx).all(axis=1) & np.isfinite(vy).all(axis=1))
+    if geo:
+        lo, hi = vx.min(axis=1), vx.max(axis=1)
+        ok &= (hi - lo <= 180.0) & (hi <= 180.0) & (lo >= -180.0)
+    if vx.shape[1] == 5:  # every rect ring has axis-parallel edges
+        ok &= ~((vx[:, :4] == vx[:, 1:]) | (vy[:, :4] == vy[:, 1:])).all(axis=1)
+    if validation_rule != "none" and ok.any():
+        ok[ok] = _simple_rings(vx[ok], vy[ok])
+    return ok
 
 
 def _ring_invalid_reason(ring):
@@ -1165,8 +1227,8 @@ def parse_wkt_columns(texts, geo: bool = True,
             todo = todo & ~bm
 
         # --- single-ring POLYGON fast path (no holes, non-dateline) ---
-        pm_idx = np.nonzero(todo)[0]
-        for i in pm_idx:
+        by_count: dict = {}
+        for i in np.nonzero(todo)[0]:
             m = _POLYGON_FAST.match(vals[i])
             if not m:
                 continue
@@ -1176,26 +1238,24 @@ def parse_wkt_columns(texts, geo: bool = True,
                 continue
             if flat.size < 8 or flat.size % 2:
                 continue  # <4 points: tokenizer raises "unclosed ring"
+            rows, flats = by_count.setdefault(flat.size, ([], []))
+            rows.append(i)
+            flats.append(flat)
+        for rows, flats in by_count.values():
+            rows = np.asarray(rows)
+            flat = np.stack(flats)
             if snap is not None:
                 flat = snap(flat)
-            vx, vy = flat[0::2], flat[1::2]
-            if vx[0] != vx[-1] or vy[0] != vy[-1]:
-                continue  # unclosed -> tokenizer path (error)
-            if geo and (vx.max() - vx.min() > 180.0
-                        or vx.max() > 180.0 or vx.min() < -180.0):
-                continue  # dateline rule / out-of-range -> tokenizer path
-            ring = list(zip(vx.tolist(), vy.tolist()))
-            if _is_rect_ring(ring):
-                continue  # rect demotion -> tokenizer path
-            if validation_rule != "none" and \
-                    _ring_invalid_reason(ring) is not None:
-                continue  # error/repair handling -> tokenizer path
-            kind[i] = KIND_POLYGON
-            xs[i] = vx.tolist(); ys[i] = vy.tolist()
-            ring_offsets[i] = [0, int(vx.size)]
-            minx[i] = vx.min(); maxx[i] = vx.max()
-            miny[i] = vy.min(); maxy[i] = vy.max()
-            todo[i] = False
+            vx, vy = flat[:, 0::2], flat[:, 1::2]
+            ok = _fast_ring_rows(vx, vy, geo, validation_rule)
+            rows, vx, vy = rows[ok], vx[ok], vy[ok]
+            kind[rows] = KIND_POLYGON
+            for i, rx, ry in zip(rows.tolist(), vx.tolist(), vy.tolist()):
+                xs[i] = rx; ys[i] = ry
+                ring_offsets[i] = [0, len(rx)]
+            minx[rows] = vx.min(axis=1); maxx[rows] = vx.max(axis=1)
+            miny[rows] = vy.min(axis=1); maxy[rows] = vy.max(axis=1)
+            todo[rows] = False
 
     for i in np.nonzero(todo)[0]:
         try:

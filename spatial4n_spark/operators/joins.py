@@ -567,12 +567,11 @@ def shape_shape_join(left: DataFrame, right: DataFrame, precision: int,
     # Per-side min-corner axis indices are PRECOMPUTED in this projection
     # (whole-stage codegen + subexpression elimination apply here). The
     # post-join reference-cell filter then rebuilds the cell code from
-    # these four plain int columns — keeping the filter condition small
-    # enough to compile: filters get no subexpression elimination, and
-    # the Morton spread's five self-referencing steps would otherwise
-    # duplicate a greatest-of-struct-fields coord tree 2^5 times past
-    # Janino's 64 KB method limit (observed as an interpreted-fallback
-    # ERROR in BENCH_r02). axis_idx is monotone in the coordinate, so
+    # these four plain int columns — keeping the filter condition small:
+    # filters get no subexpression elimination, so each byte-table
+    # lookup of the Morton spread would carry its own copy of a
+    # greatest-of-struct-fields axis index tree (a copy per byte, per
+    # axis). axis_idx is monotone in the coordinate, so
     # idx(greatest(lminx, rminx)) == greatest(lidx, ridx) and the
     # reference-point dedup semantics are unchanged.
     # Cover arrays come from the BATCH Arrow kernel, not the pure-Column

@@ -94,19 +94,23 @@ def extract_geo_spans(docs: DataFrame) -> DataFrame:
     """docs -> one row per WKT-bearing text span, with the parsed shape.
 
     posexplode preserves span order (span-sequence invariant). The WKT
-    parse runs as ONE mapInPandas pass emitting flat columns — a single
+    parse runs as ONE mapInArrow pass emitting flat columns — a single
     Arrow exchange, no re-evaluation when downstream reads several shape
-    fields (Catalyst duplicates pandas-UDF expressions across collapsed
+    fields (Catalyst duplicates Python-UDF expressions across collapsed
     projections), and bbox fields land as real columns for min/max scan
-    pruning. A `shape` struct is re-assembled JVM-side for the join API.
+    pruning. `doc_id` and `pos` pass through as the batch's own Arrow
+    columns, the parse result is built by `shapes.encode`, and error
+    rows are dropped with one `RecordBatch.filter`. A `shape` struct is
+    re-assembled JVM-side for the join API.
     """
     from typing import Iterator
 
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     from ..kernels.wkt import parse_wkt_columns
-    from ..shapes import FIELD_NAMES, SHAPE_FIELDS, shape_col
+    from ..shapes import FIELD_NAMES, SHAPE_FIELDS, encode, shape_col
 
     span = (docs.select("doc_id", F.posexplode("spans").alias("pos", "span"))
                 .where((F.col("span.kind") == "text")
@@ -118,14 +122,16 @@ def extract_geo_spans(docs: DataFrame) -> DataFrame:
         StructField("pos", IntegerType()),
         *SHAPE_FIELDS])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            cols = parse_wkt_columns(b["wkt"])
-            out = pd.DataFrame({"doc_id": b["doc_id"].to_numpy(),
-                                "pos": b["pos"].to_numpy(), **cols})
-            yield out[out["error"].isna()]
+            cols = parse_wkt_columns(b.column("wkt").to_pandas())
+            shape = encode(b.num_rows, **cols)
+            out = pa.RecordBatch.from_arrays(
+                [b.column("doc_id"), b.column("pos"), *shape.flatten()],
+                names=["doc_id", "pos", *FIELD_NAMES])
+            yield out.filter(pc.is_null(out.column("error")))
 
-    flat = span.mapInPandas(gen, out_schema)
+    flat = span.mapInArrow(gen, out_schema)
     return flat.withColumn("shape",
                            shape_col(**{c: F.col(c) for c in FIELD_NAMES}))
 

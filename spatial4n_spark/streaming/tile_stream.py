@@ -2,7 +2,7 @@
 
 The reference is batch-only (SURVEY 2.6: no streaming), so this is
 engine-added surface: the same WKT-parse -> cell-assign kernels run
-unchanged on a streaming DataFrame (mapInPandas and the JVM-side cell
+unchanged on a streaming DataFrame (mapInArrow and the JVM-side cell
 functions are both streaming-capable), giving incremental tile
 assignment over a landing directory with Structured Streaming's own
 checkpoint/WAL for exactly-once file processing — the streaming

@@ -1,5 +1,6 @@
 import os
 import sys
+import time
 
 import pytest
 
@@ -19,3 +20,33 @@ def spark():
     s = get_spark("spatial4n_spark-tests", cpus=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def strict_codegen(spark):
+    """Make a whole-stage-codegen compile failure raise instead of
+    falling back to interpreted execution, which Spark only logs (a
+    Janino "grows beyond 64 KB" error, for one)."""
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        yield spark
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+
+
+@pytest.fixture
+def settle_spark_tasks(spark):
+    """For a test that expects jobs to fail: afterwards, wait (up to
+    30 s) until no task is running.
+
+    The failed jobs' other tasks are still being killed when such a
+    test returns; Spark kills their Python workers once
+    `spark.python.task.killTimeout` passes, and a task of the next
+    test's job that picked up such a worker then fails with
+    CancelledKeyException."""
+    yield
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    deadline = time.monotonic() + 30
+    while (time.monotonic() < deadline
+           and any(e.numRunningTasks() for e in tracker.getExecutorInfos())):
+        time.sleep(0.1)

@@ -199,7 +199,7 @@ def test_adaptive_point_side_is_pure_codegen(mixed_corpus):
     assert "BroadcastHashJoin" in plan
     # exactly one Python stage: the broadcast shape-cover side
     assert plan.count("ArrowEvalPython") <= 1
-    assert "MapInPandas" not in plan
+    assert "MapInPandas" not in plan and "MapInArrow" not in plan
 
 
 def test_tagged_codes_distinct_across_levels():

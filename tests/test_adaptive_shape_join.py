@@ -132,31 +132,13 @@ def test_pyramid_emission_bounded_and_exact():
             assert got == want, (i, lv)
 
 
-def test_adaptive_no_codegen_compile_fallback(spark, layers):
-    """The per-level reference-cell CASE must compile — same fd-level
-    stderr capture as the fixed-level join's regression test."""
-    import os
-    import tempfile
-
+def test_adaptive_no_codegen_compile_fallback(strict_codegen, layers):
+    """The per-level reference-cell CASE must compile — with codegen
+    fallback off, as in the fixed-level join's regression test."""
     left, right, _, _ = layers
     out = shape_shape_join_adaptive(left, right, min_level=1, max_level=7,
                                     predicate="all")
-    saved = os.dup(2)
-    with tempfile.NamedTemporaryFile("w+", delete=False) as tf:
-        path = tf.name
-    fd = os.open(path, os.O_WRONLY | os.O_TRUNC)
-    os.dup2(fd, 2)
-    try:
-        out.count()
-    finally:
-        os.dup2(saved, 2)
-        os.close(fd)
-        os.close(saved)
-    with open(path) as fh:
-        log = fh.read()
-    os.unlink(path)
-    assert "Failed to compile the generated Java code" not in log, log[:4000]
-    assert "grows beyond 64 KB" not in log, log[:4000]
+    assert out.count() > 0
 
 
 def test_adaptive_two_layer_closure_right_set_equal(spark, layers):

@@ -31,6 +31,38 @@ def test_cell_code_col_bit_identical(spark, precision, mode):
     assert np.array_equal(got, want)
 
 
+@pytest.mark.parametrize("mode", ["column", "sqlstr"])
+def test_guarded_cell_code_bit_identical(strict_codegen, tmp_path, mode):
+    """The `when(kind == 1, cell code)` form the tile-index job uses
+    (no subexpression elimination inside a CASE branch) compiles at
+    every precision and equals the kernel on the guarded rows, null on
+    the others — random points plus grid-boundary inputs. The points
+    are read back from parquet: over a small local DataFrame Spark
+    evaluates the projection on the driver, without codegen."""
+    rng = np.random.default_rng(5)
+    lon = np.concatenate([rng.uniform(-180, 180, 3000),
+                          [112.50000000000003, 112.5, -180.0, 180.0, 0.0,
+                           float(np.nextafter(11.25, 1e9)), -11.25]])
+    lat = np.concatenate([rng.uniform(-90, 90, 3000),
+                          [45.0, 22.5, -90.0, 90.0, 0.0, 5.625,
+                           float(np.nextafter(-45.0, -1e9))]])
+    kind = np.where(np.arange(lon.size) % 3 == 0, 2, 1).astype(np.int8)
+    path = str(tmp_path / "pts")
+    strict_codegen.createDataFrame(pd.DataFrame(
+        {"i": np.arange(lon.size), "lon": lon, "lat": lat, "kind": kind})
+    ).write.parquet(path)
+    df = strict_codegen.read.parquet(path).orderBy("i")
+    args = (("`lat`", "`lon`") if mode == "sqlstr"
+            else (F.col("lat"), F.col("lon")))
+    for p in range(1, 13):
+        got = [r.c for r in df.select(F.when(
+            F.col("kind") == 1, SF.st_cell_code_col(*args, p)).alias("c"))
+            .collect()]  # collect, not toPandas: no float64 detour
+        want = [int(c) if k == 1 else None
+                for k, c in zip(kind, cell_code(lat, lon, p))]
+        assert got == want, p
+
+
 @pytest.mark.parametrize("precision", [1, 2, 4, 6, 7])
 def test_cover_codes_col_sqlstr_identical(spark, precision):
     """String-fragment cover builder == Column-API cover builder on
@@ -136,7 +168,8 @@ def test_sqlstr_path_plan_stays_codegen_no_decimal(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     # "*(N)" prefixes mark whole-stage-codegen stages in the compact form
     assert "*(" in plan or "WholeStageCodegen" in plan
-    for bad in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+    for bad in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                "MapInArrow"):
         assert bad not in plan
     analyzed = out._jdf.queryExecution().analyzed().toString()
     assert "decimal" not in analyzed.lower()

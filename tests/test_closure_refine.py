@@ -160,7 +160,8 @@ def test_convex_fast_path_no_python_and_correct(spark):
     assert fast_pairs == struct_pairs and len(struct_pairs) > 50
 
     p = fast._jdf.queryExecution().executedPlan().toString()
-    for bad in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+    for bad in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                "MapInArrow"):
         assert bad not in p, p[:1500]
 
 

@@ -65,7 +65,8 @@ def test_simhash_pairs_all_jvm(spark):
     docs = _corpus(spark, 20)
     out = simhash_neardup_pairs(docs)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    for bad in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+    for bad in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                "MapInArrow"):
         assert bad not in plan
 
 

@@ -125,7 +125,8 @@ def test_no_python_stage(spark):
     out = grid_cluster(df, "x", "y", PREC, 3)
     out.collect()
     p = out._jdf.queryExecution().executedPlan().toString()
-    for bad in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+    for bad in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                "MapInArrow"):
         assert bad not in p, p[:1200]
 
 

@@ -169,7 +169,7 @@ def test_rect_rect_declared_layer_is_jvm_only(spark):
     # design — joins.py chooses it over the CodegenFallback HOF
     # expression — and is bounded by layer size, not pair count.)
     for bad in ("st_relate_polygon_polygon", "st_shape_intersection_area",
-                "MapInPandas", "BatchEvalPython"):
+                "MapInPandas", "MapInArrow", "BatchEvalPython"):
         assert bad not in p, p[:1500]
     arrow_nodes = [ln for ln in p.splitlines() if "ArrowEvalPython" in ln]
     assert all("cover_codes" in ln for ln in arrow_nodes), arrow_nodes
@@ -388,6 +388,7 @@ def test_shared_slanted_edge_areas(spark):
         assert r["m_inter"] == r["got_inter"], r
 
 
+@pytest.mark.usefixtures("settle_spark_tasks")
 def test_unsupported_and_crossing_inputs_raise(spark):
     """code-review r4: non-area kinds (circle etc.) used to null out of
     the measure and drop under the area>0 filter — indistinguishable
@@ -548,7 +549,7 @@ def test_overlay_with_geometry_rect_declared_jvm(spark):
         assert ((g["maxx"] - g["minx"]) * (g["maxy"] - g["miny"])
                 == pytest.approx(r["inter_area_deg2"], abs=1e-12))
     p = out._jdf.queryExecution().executedPlan().toString()
-    for bad in ("MapInPandas", "BatchEvalPython"):
+    for bad in ("MapInPandas", "MapInArrow", "BatchEvalPython"):
         assert bad not in p
     arrow_nodes = [ln for ln in p.splitlines() if "ArrowEvalPython" in ln]
     assert all("cover_codes" in ln for ln in arrow_nodes), arrow_nodes

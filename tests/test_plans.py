@@ -38,7 +38,8 @@ def test_flagship_join_single_python_stage_and_broadcast(spark):
     # exactly one Python stage in the whole join: the WKT parse.
     # Cell assign, tile cover, bbox gate, and (rect-only) refine are all
     # pure Column expressions.
-    n_python = p.count("MapInPandas") + p.count("FlatMapsInPandas")
+    n_python = (p.count("MapInArrow") + p.count("MapInPandas")
+                + p.count("FlatMapsInPandas"))
     assert n_python == 1, f"want 1 python stage, plan has {n_python}"
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     # shape side broadcasts; no shuffle of the big point side
@@ -121,6 +122,6 @@ def test_rect_center_twin_stays_jvm(spark):
     df = rects.select("srect_id", cx.alias("cx"), cy.alias("cy"))
     p = _plan(df)
     for bad in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-                "Exchange"):
+                "MapInArrow", "Exchange"):
         assert bad not in p, p
     assert "*(1) Project" in p  # the * marks a WholeStageCodegen span

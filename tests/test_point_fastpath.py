@@ -25,7 +25,7 @@ def test_point_fastpath_plan_has_no_python(spark):
     plan = extract_point_spans(docs)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan \
-        and "MapInPandas" not in plan, plan
+        and "MapInPandas" not in plan and "MapInArrow" not in plan, plan
 
 
 def test_point_fastpath_drops_malformed(spark):

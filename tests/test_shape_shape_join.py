@@ -89,36 +89,17 @@ def test_salted_shuffle_path_set_equal_to_broadcast(spark, layers):
     assert plain_shuffle == base
 
 
-def test_no_codegen_compile_fallback(spark, layers):
+def test_no_codegen_compile_fallback(strict_codegen, layers):
     """VERDICT r02 item 2: the two-layer join must stay in compiled
     whole-stage codegen — no Janino 64 KB interpreted fallback.
 
-    The filter-context reference-cell expression used to blow the method
-    limit (spread-bits duplication of a greatest-of-struct-fields tree);
-    the ERROR is only observable via the JVM's log4j console appender,
-    so capture the process stderr at the fd level during execution.
+    The filter-context reference-cell expression is the one at risk
+    (filters get no subexpression elimination). With codegen fallback
+    off, a compile failure raises here instead of only being logged.
     """
-    import os
-    import tempfile
-
     left, right, _, _ = layers
     out = shape_shape_join(left, right, precision=2, predicate="all")
-    saved = os.dup(2)
-    with tempfile.NamedTemporaryFile("w+", delete=False) as tf:
-        path = tf.name
-    fd = os.open(path, os.O_WRONLY | os.O_TRUNC)
-    os.dup2(fd, 2)
-    try:
-        out.count()
-    finally:
-        os.dup2(saved, 2)
-        os.close(fd)
-        os.close(saved)
-    with open(path) as fh:
-        log = fh.read()
-    os.unlink(path)
-    assert "Failed to compile the generated Java code" not in log, log[:4000]
-    assert "grows beyond 64 KB" not in log, log[:4000]
+    assert out.count() > 0
 
 
 def test_closure_right_path_set_equal_to_struct(spark, layers):

@@ -48,6 +48,17 @@ def test_job_output_matches_direct_run(spark, docs_path, tmp_path):
     assert summary2["buckets_skipped"] == N_BUCKETS
 
 
+def test_transform_compiles_without_codegen_fallback(strict_codegen):
+    """The tile-index projection (the cell code under a `kind = 1`
+    guard, which gets no subexpression elimination) must compile in
+    whole-stage codegen: with fallback off a Janino error raises."""
+    from spatial4n_spark.sources.docs import generate_docs
+    docs = cp.with_bucket(generate_docs(strict_codegen, N_DOCS), N_BUCKETS)
+    rows = make_tile_index_transform(N_BUCKETS, 6)(docs).collect()
+    assert len(rows) == N_DOCS
+    assert all((r.cell_id is not None) == (r.kind == 1) for r in rows)
+
+
 def test_spark_submit_cli_end_to_end(tmp_path):
     """The real deployment path: spark-submit --py-files <pkg.zip>."""
     from spatial4n_spark.session import package_zip

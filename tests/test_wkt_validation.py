@@ -225,3 +225,112 @@ def test_multipolygon_member_validation_and_repair():
         assert wkt._ring_invalid_reason(ring) is None
     hull = P(bad_mp, validation_rule="repairConvexHull")
     assert _area2(hull) > 0
+
+
+def _fuzz_polygon_texts(seed=3, n=1500):
+    """Single-ring POLYGON texts on a coarse grid, so repeated vertices,
+    bow-ties, collinear overlaps and vertex touches are common; plus
+    axis-parallel rects, rings wider than 180 or past +-180, and
+    unclosed rings."""
+    rng = np.random.default_rng(seed)
+    texts = []
+    for k in range(n):
+        m = int(rng.integers(3, 8))
+        step = (1.0, 0.1, 45.0)[k % 3]  # 45: rings wider than 180
+        pts = [tuple(float(v) * step for v in rng.integers(-4, 5, 2))
+               for _ in range(m)]
+        if rng.random() < 0.2:  # repeated vertex
+            j = int(rng.integers(0, m))
+            pts.insert(j, pts[j])
+        if k % 11 == 0:  # axis-parallel rect, any start corner/direction
+            x0, y0 = (float(v) for v in rng.integers(-4, 4, 2))
+            w, h = (float(v) for v in rng.integers(1, 4, 2))
+            c = [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)]
+            s = int(rng.integers(0, 4))
+            pts = c[s:] + c[:s]
+            if rng.random() < 0.5:
+                pts = pts[::-1]
+        if k % 17 == 0:
+            pts = [(x + 170.0, y) for x, y in pts]  # past +180
+        ring = pts if k % 13 == 0 else pts + [pts[0]]  # unclosed
+        texts.append("POLYGON((" + ", ".join(f"{x!r} {y!r}" for x, y in ring)
+                     + "))")
+    return texts
+
+
+def _same(a, b):
+    return (a == b or (isinstance(a, float) and isinstance(b, float)
+                       and np.isnan(a) and np.isnan(b)))
+
+
+def _assert_columns_match_parse_shape(texts, rule, snap=None):
+    cols = wkt.parse_wkt_columns(texts, validation_rule=rule, snap=snap)
+    kinds = set()
+    for i, t in enumerate(texts):
+        try:
+            rec, err = P(t, validation_rule=rule, snap=snap), None
+        except wkt.WktParseError as e:
+            rec, err = None, str(e)[:200]
+        assert cols["error"][i] == err, (t, cols["error"][i], err)
+        if rec is None:
+            continue
+        kinds.add(rec["kind"])
+        assert cols["kind"][i] == rec["kind"], t
+        for f in ("x", "y", "radius", "minx", "maxx", "miny", "maxy"):
+            assert _same(float(cols[f][i]), float(rec[f])), (t, f)
+        for f in ("xs", "ys", "ring_offsets"):
+            want = rec[f] or None
+            got = cols[f][i]
+            assert (got is None and want is None) or list(got) == list(want), (t, f)
+    return kinds
+
+
+@pytest.mark.parametrize("rule,snap", [
+    ("none", None), ("error", None), ("repairConvexHull", None),
+    ("repairBuffer0", None), ("error", wkt.make_snap("fixed", 2.0))])
+def test_columns_polygon_batch_matches_parse_shape(rule, snap):
+    """The batched single-ring POLYGON path of parse_wkt_columns gives
+    exactly the per-row parse_shape result: kind, bbox, vertices and
+    error text."""
+    kinds = _assert_columns_match_parse_shape(_fuzz_polygon_texts(), rule, snap)
+    assert {wkt.KIND_POLYGON, wkt.KIND_RECT} <= kinds
+
+
+def _large_rings(n=2400, seed=5):
+    """Closed star-shaped rings of n vertices (simple by construction)
+    and broken copies: a crossing, a vertex touch, a repeated vertex,
+    and a coarse grid snap that makes some of each."""
+    rng = np.random.default_rng(seed)
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    rad = rng.uniform(5, 10, n)
+    star = list(zip((rad * np.cos(ang)).tolist(), (rad * np.sin(ang)).tolist()))
+    crossing = list(star)
+    crossing[700], crossing[702] = crossing[702], crossing[700]
+    touch = list(star)
+    touch[1500] = (0.0, 0.0)
+    touch[1200] = (0.0, 0.0)
+    repeated = star[:900] + [star[900]] + star[900:]
+    snapped = [(round(x / 0.05) * 0.05, round(y / 0.05) * 0.05) for x, y in star]
+    return [r + [r[0]] for r in (star, crossing, touch, repeated, snapped)]
+
+
+@pytest.mark.parametrize("rule", ["none", "error", "repairConvexHull"])
+def test_columns_polygon_batch_large_rings_match_parse_shape(rule):
+    """Rings of a few thousand vertices take the same batched pass (one
+    step per segment, O(rings x vertices) memory) and still equal
+    parse_shape; the simplicity verdict equals the per-ring test."""
+    rings = _large_rings()
+    texts = ["POLYGON((" + ", ".join(f"{x!r} {y!r}" for x, y in r) + "))"
+             for r in rings]
+    kinds = _assert_columns_match_parse_shape(texts, rule)
+    assert wkt.KIND_POLYGON in kinds
+    want = [wkt._ring_invalid_reason(r) is None for r in rings]
+    assert want[:4] == [True, False, False, False]
+    for r, w in zip(rings, want):
+        vx = np.array([[p[0] for p in r]]); vy = np.array([[p[1] for p in r]])
+        assert wkt._simple_rings(vx, vy).tolist() == [w]
+    same = [r for r in rings if len(r) == len(rings[0])]
+    vx = np.array([[p[0] for p in r] for r in same])
+    vy = np.array([[p[1] for p in r] for r in same])
+    assert wkt._simple_rings(vx, vy).tolist() == \
+        [wkt._ring_invalid_reason(r) is None for r in same]
