@@ -1735,7 +1735,7 @@ def q_polygon_polygon_relate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon.Relate(polygon), COVERS semantics: triangles A from
     supplier x 5 derived B-variants (shrink / expand / overlap-shift /
     far-shift / per-key shift) — both layers WKT-parsed, related by the
-    exact split-probe kernel (NtsGeometry.cs:283-314 mapping)."""
+    noded relate kernel (NtsGeometry.cs:283-314 mapping)."""
     from . import functions as SF
     tri = _load(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey AS poly_id",

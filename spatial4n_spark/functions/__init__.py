@@ -767,7 +767,8 @@ def st_relate_polygon_circle(polygon: pa.Array, circle: pa.Array) -> pa.Array:
 @arrow_udf(ByteType())
 def st_relate_polygon_rect(polygon: pa.Array, rect: pa.Array) -> pa.Array:
     """Polygon.Relate(rect), COVERS semantics (NtsGeometry.cs:303-314
-    via from-scratch primitives); the rect is read from its bbox."""
+    mapping; the noded relate in kernels.booleans with the rect as one
+    ring); the rect is read from its bbox."""
     from ..kernels.pip import relate_polygon_rect
     a, r = decode(polygon), decode(rect)
     out = np.empty(len(a), dtype=np.int8)
@@ -1009,8 +1010,8 @@ def rect_center_cols(minx, maxx, miny, maxy):
 @arrow_udf(ByteType())
 def st_relate_polygon_polygon(a: pa.Array, b: pa.Array) -> pa.Array:
     """A.Relate(B) for two (multi)polygons, COVERS semantics
-    (NtsGeometry.cs:283-314 DE-9IM -> SpatialRelation mapping,
-    exact split-probe covers test in kernels.pip)."""
+    (NtsGeometry.cs:283-314 DE-9IM -> SpatialRelation mapping, read
+    off the noded arrangement of both boundaries in kernels.booleans)."""
     from ..kernels.pip import relate_polygon_polygon
     sa, sb = decode(a), decode(b)
     out = np.empty(len(sa), dtype=np.int8)

@@ -1,10 +1,12 @@
 r"""Noded overlay kernel: the AREA and the GEOMETRY of A ∩ B, A \ B,
-A ∪ B and A △ B for two even-odd ring sets, and of the union of N
+A ∪ B and A △ B for two even-odd ring sets, of the union of N
 overlapping members (concave, holed, multipart, nested islands, shared
-edges, vertex touches, duplicates) from one noding pass.
+edges, vertex touches, duplicates), and the RELATE of two ring sets,
+each from one noding pass.
 
 Reference parity target: NTS `Geometry.Intersection` / `Difference` /
-`Union` / `SymDifference` and `UnionGeometryCollection`
+`Union` / `SymDifference`, `UnionGeometryCollection` and `Relate`'s
+DE-9IM -> SpatialRelation mapping
 (Spatial4n.Core.NTS/Shapes/Nts/NtsGeometry.cs op surface). The noder
 follows the snap-rounding design (Hobby 1999; Hershberger 2013): every
 contact is computed once and near-coincident points share one node, so
@@ -38,6 +40,16 @@ degenerate contact is a structural fact instead of a float comparison.
    the next outgoing piece clockwise (one np.lexsort on (node, angle)),
    which closes each region sector and splits figure-eight touches into
    separate rings. Shells come out CCW, holes CW.
+5. Relate. `relate` (polygon <-> polygon and polygon <-> rect) and
+   `member_overlap` (the MULTIPOLYGON member classifier) read the
+   classified pieces instead of keeping any: A covers B when no side
+   of a piece lies in B but not in A (checked before the mirror, so
+   equal shapes are CONTAINS); the closed sets meet when a side lies
+   in both, a piece lies in both, or a node ends pieces of both.
+   Zero-area rings, whose runs cancel and which have no area-bearing
+   side, count through the pieces they run. Boundaries that are
+   apart need no special case: their pieces are the input edges and
+   the same ray cast puts each on its side.
 
 Scale note: runs per candidate pair inside an Arrow batch. Contact
 candidates are bbox-culled over the (edges x edges) grid and the
@@ -52,6 +64,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .relation import CONTAINS, DISJOINT, INTERSECTS, WITHIN
+
 # snap tolerance as a fraction of the pair's bbox extent
 _SNAP_REL = 1e-9
 
@@ -64,6 +78,30 @@ _OPS = {
 
 _BLOCK = 1_000_000  # grid cells per vectorized block
 _CULL = 64         # rows per block once candidates are culled
+
+
+def _roll1(a):
+    """np.roll(a, -1) without np.roll's dispatch overhead."""
+    return np.concatenate((a[1:], a[:1]))
+
+
+def _signed_area2(xs, ys) -> float:
+    return float(np.sum(xs * _roll1(ys) - _roll1(xs) * ys))
+
+
+def _ensure_ccw(xs, ys):
+    if _signed_area2(xs, ys) < 0.0:
+        return xs[::-1].copy(), ys[::-1].copy()
+    return xs, ys
+
+
+def _open_ccw(xs, ys):
+    """Drop a repeated closing vertex and normalize to CCW."""
+    xs = np.asarray(xs, dtype=np.float64)
+    ys = np.asarray(ys, dtype=np.float64)
+    if len(xs) >= 2 and xs[0] == xs[-1] and ys[0] == ys[-1]:
+        xs, ys = xs[:-1], ys[:-1]
+    return _ensure_ccw(xs, ys)
 
 
 def _vertices(rings_a, rings_b):
@@ -175,10 +213,12 @@ def _cluster(cx, cy, tol):
 def _node(rings_a, rings_b):
     """Noded arrangement of both operands' boundaries.
 
-    Returns (nx, ny, lo, hi, cover): node coordinates, the distinct
-    sub-segments as node-id pairs lo < hi, and each piece's coverage
-    parity per operand (pieces x 2 bool, uncovered pieces dropped) —
-    or None when the operands have no edge."""
+    Returns (nx, ny, lo, hi, cover, touch): node coordinates, the
+    distinct sub-segments as node-id pairs lo < hi, each piece's signed
+    coverage count per operand (pieces x 2 int) and whether an
+    operand's rings run the piece at all (pieces x 2 bool; true with a
+    zero count where the runs cancel, as along a zero-area ring) — or
+    None when the operands have no edge."""
     v = _vertices(rings_a, rings_b)
     if v is None:
         return None
@@ -260,8 +300,9 @@ def _node(rings_a, rings_b):
     cover = np.stack([np.bincount(inv[side == k], weights=sgn[side == k],
                                   minlength=len(keys))
                       for k in (0, 1)], axis=1).astype(np.int64)
-    live = (cover != 0).any(axis=1)
-    return nx, ny, keys[live] // nn, keys[live] % nn, cover[live]
+    touch = np.stack([np.bincount(inv[side == k], minlength=len(keys))
+                      for k in (0, 1)], axis=1) > 0
+    return nx, ny, keys // nn, keys % nn, cover, touch
 
 
 def _ray_winding(qx, qy, sx0, sy0, sx1, sy1, w, own):
@@ -299,17 +340,12 @@ def _ray_winding(qx, qy, sx0, sy0, sx1, sy1, w, own):
     return out
 
 
-def _overlay(rings_a, rings_b, op, winding=False):
-    """Kept directed pieces of `op`, region on the left. A point is in
-    an operand when its coverage count there is odd (even-odd rings)
-    or, with `winding`, nonzero (rings oriented by `_oriented`).
-
-    Returns (nx, ny, start, end) — node coordinates and the kept pieces
-    as node-id pairs — or None when nothing is kept."""
-    noded = _node(rings_a, rings_b)
-    if noded is None:
-        return None
-    nx, ny, lo, hi, cover = noded
+def _sides(nx, ny, lo, hi, cover, winding=False):
+    """Each operand's membership just left and just right of every
+    piece (two pieces x 2 bool arrays), from one batched ray cast. A
+    point is in an operand when its coverage count there is odd
+    (even-odd rings) or, with `winding`, nonzero (rings oriented by
+    `_oriented`)."""
     sx, sy = nx - nx.min(), ny - ny.min()   # shifted: smaller products
     x0, y0, x1, y1 = sx[lo], sy[lo], sx[hi], sy[hi]
     dx, dy = x1 - x0, y1 - y0
@@ -333,9 +369,23 @@ def _overlay(rings_a, rings_b, op, winding=False):
     left = np.where(probe_left, probe, probe + cover)
     right = left - cover
     if winding:
-        left, right = left != 0, right != 0
-    else:
-        left, right = (left & 1).astype(bool), (right & 1).astype(bool)
+        return left != 0, right != 0
+    return (left & 1).astype(bool), (right & 1).astype(bool)
+
+
+def _overlay(rings_a, rings_b, op, winding=False):
+    """Kept directed pieces of `op`, region on the left (see `_sides`
+    for `winding`).
+
+    Returns (nx, ny, start, end) — node coordinates and the kept pieces
+    as node-id pairs — or None when nothing is kept."""
+    noded = _node(rings_a, rings_b)
+    if noded is None:
+        return None
+    nx, ny, lo, hi, cover, _ = noded
+    live = cover.any(axis=1)   # a piece whose runs cancel bounds nothing
+    lo, hi, cover = lo[live], hi[live], cover[live]
+    left, right = _sides(nx, ny, lo, hi, cover, winding)
     want = _OPS[op]
     in_l = want(left[:, 0], left[:, 1])
     in_r = want(right[:, 0], right[:, 1])
@@ -377,7 +427,6 @@ def _oriented(members):
     distance-guarded containment probe, so rings touching at a vertex
     still orient correctly."""
     from .overlay import _ring_signs
-    from .union import _signed_area2
     out = []
     for member in members:
         rings = []
@@ -418,6 +467,61 @@ def union_area(members, minus=()) -> float:
 def _union_overlay(members, minus):
     return _overlay(_oriented(members), _oriented(minus), "sub",
                     winding=True)
+
+
+def relate(rings_a, rings_b) -> int:
+    """A.Relate(B) for two even-odd ring sets, as NTS maps DE-9IM
+    outcomes (NtsGeometry.cs:303-314): CONTAINS when closed A covers
+    closed B (checked first, so equal shapes give CONTAINS), WITHIN for
+    the mirror, DISJOINT when the closed sets share no point, else
+    INTERSECTS."""
+    a_b, b_a, _, meet = _relation(rings_a, rings_b)
+    if a_b:
+        return CONTAINS
+    if b_a:
+        return WITHIN
+    return INTERSECTS if meet else DISJOINT
+
+
+def member_overlap(rings_a, rings_b) -> str:
+    """How two MULTIPOLYGON members overlap: 'a_contains_b' /
+    'b_contains_a' (one covers the other), 'none' (interiors disjoint,
+    boundaries may touch) or 'cross' (interiors overlap otherwise)."""
+    a_b, b_a, overlap, _ = _relation(rings_a, rings_b)
+    if a_b:
+        return "a_contains_b"
+    if b_a:
+        return "b_contains_a"
+    return "cross" if overlap else "none"
+
+
+def _relation(rings_a, rings_b):
+    """(A covers B, B covers A, interiors overlap, closed sets meet) for
+    two even-odd ring sets, read off the noded arrangement (an operand
+    without an edge of positive length counts as empty): the sides
+    of every piece are the faces, the pieces and their end nodes the
+    boundaries. A covers B when no side lies in B but not in A and
+    every piece of B's rings lies in closed A — the second test is what
+    decides zero-area rings, whose runs cancel and which have no
+    area-bearing side."""
+    noded = _node(rings_a, rings_b)
+    # an operand without a piece is empty
+    if noded is None or not noded[5].any(axis=0).all():
+        return False, False, False, False
+    nx, ny, lo, hi, cover, touch = noded
+    left, right = _sides(nx, ny, lo, hi, cover)
+    sides = np.concatenate((left, right))
+    a_only = (sides[:, 0] & ~sides[:, 1]).any()
+    b_only = (sides[:, 1] & ~sides[:, 0]).any()
+    overlap = (sides[:, 0] & sides[:, 1]).any()
+    closed = left | right | touch          # piece in closed A / B
+    ends = np.zeros((len(nx), 2), dtype=bool)
+    for k in (0, 1):
+        ends[lo[touch[:, k]], k] = ends[hi[touch[:, k]], k] = True
+    return (not b_only and closed[touch[:, 1], 0].all(),
+            not a_only and closed[touch[:, 0], 1].all(),
+            overlap,
+            overlap or closed.all(axis=1).any() or ends.all(axis=1).any())
 
 
 def _stitch(kept):

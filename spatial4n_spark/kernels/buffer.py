@@ -73,8 +73,8 @@ def buffer_rect(minx, maxx, miny, maxy, dist, geo: bool = True):
 ARC_STEP = np.pi / 16.0  # 8 segments per quadrant, JTS default fidelity
 
 
-# ring primitives shared with kernels/union.py
-from .union import _ensure_ccw, _signed_area2  # noqa: E402
+# ring primitives shared with the noded overlay kernel
+from .booleans import _ensure_ccw, _signed_area2  # noqa: E402
 
 
 def _ring_open(xs, ys):

@@ -15,12 +15,19 @@ Vectorization: many points vs ONE polygon per call (the distributed
 join groups candidate pairs by polygon id, so each kernel call is a
 (polygon, point-batch) pair); the edge loop is over the polygon's own
 edges with all points processed per edge via NumPy.
+
+Polygon <-> polygon and polygon <-> rect relates pass the bbox gate
+here and are then decided on the noded arrangement of both boundaries
+(kernels.booleans.relate), the same noding the overlay area and
+geometry use.
 """
 from __future__ import annotations
 
 import numpy as np
 
-from .relation import CONTAINS, DISJOINT, INTERSECTS, WITHIN
+from .booleans import relate
+from .overlay import _rings
+from .relation import CONTAINS, DISJOINT, WITHIN
 
 
 def points_in_ring(px, py, xs, ys) -> np.ndarray:
@@ -106,57 +113,6 @@ def points_in_polygon(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
     return inside | boundary
 
 
-def _on_ring_boundary(px, py, xs, ys) -> np.ndarray:
-    if len(xs) >= 2 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-        xs, ys = xs[:-1], ys[:-1]
-    out = np.zeros(np.asarray(px).shape, dtype=bool)
-    for i in range(len(xs)):
-        ax, ay = xs[i], ys[i]
-        bx, by = xs[(i + 1) % len(xs)], ys[(i + 1) % len(xs)]
-        cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        out |= ((cross == 0.0)
-                & (px >= min(ax, bx)) & (px <= max(ax, bx))
-                & (py >= min(ay, by)) & (py <= max(ay, by)))
-    return out
-
-
-def _segments_intersect_batch(ax, ay, bx, by, cx, cy, dx, dy):
-    """Vectorized proper/improper segment intersection (touch counts)."""
-    d1 = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-    d2 = (bx - ax) * (dy - ay) - (by - ay) * (dx - ax)
-    d3 = (dx - cx) * (ay - cy) - (dy - cy) * (ax - cx)
-    d4 = (dx - cx) * (by - cy) - (dy - cy) * (bx - cx)
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & \
-             (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
-    # collinear / endpoint-touch cases
-    def on(px_, py_, sx1, sy1, sx2, sy2, d):
-        return (d == 0) & (px_ >= np.minimum(sx1, sx2)) & (px_ <= np.maximum(sx1, sx2)) \
-             & (py_ >= np.minimum(sy1, sy2)) & (py_ <= np.maximum(sy1, sy2))
-    touch = (on(cx, cy, ax, ay, bx, by, d1) | on(dx, dy, ax, ay, bx, by, d2)
-             | on(ax, ay, cx, cy, dx, dy, d3) | on(bx, by, cx, cy, dx, dy, d4))
-    return proper | touch
-
-
-def polygon_edges_cross_rect(xs, ys, minx, maxx, miny, maxy) -> bool:
-    """True if any polygon edge intersects the rect's boundary."""
-    if len(xs) >= 2 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-        xs, ys = np.asarray(xs)[:-1], np.asarray(ys)[:-1]
-    ax = np.asarray(xs, dtype=np.float64)
-    ay = np.asarray(ys, dtype=np.float64)
-    bx = np.roll(ax, -1)
-    by = np.roll(ay, -1)
-    rect_edges = [
-        (minx, miny, maxx, miny), (maxx, miny, maxx, maxy),
-        (maxx, maxy, minx, maxy), (minx, maxy, minx, miny),
-    ]
-    for (cx, cy, dx, dy) in rect_edges:
-        if _segments_intersect_batch(ax, ay, bx, by,
-                                     np.float64(cx), np.float64(cy),
-                                     np.float64(dx), np.float64(dy)).any():
-            return True
-    return False
-
-
 def relate_polygon_points(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
     """Polygon.Relate(point) -> CONTAINS or DISJOINT per point.
 
@@ -167,63 +123,13 @@ def relate_polygon_points(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
     return np.where(inside, CONTAINS, DISJOINT).astype(np.int8)
 
 
-def _any_edge_proper_cross(xs, ys, minx, maxx, miny, maxy) -> bool:
-    """Any polygon edge properly crossing the rect boundary (not mere touch)."""
-    if len(xs) >= 2 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-        xs, ys = np.asarray(xs)[:-1], np.asarray(ys)[:-1]
-    ax = np.asarray(xs, dtype=np.float64)
-    ay = np.asarray(ys, dtype=np.float64)
-    bx = np.roll(ax, -1)
-    by = np.roll(ay, -1)
-    for (cx, cy, dx, dy) in [(minx, miny, maxx, miny), (maxx, miny, maxx, maxy),
-                             (maxx, maxy, minx, maxy), (minx, maxy, minx, miny)]:
-        d1 = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-        d2 = (bx - ax) * (dy - ay) - (by - ay) * (dx - ax)
-        d3 = (dx - cx) * (ay - cy) - (dy - cy) * (ax - cx)
-        d4 = (dx - cx) * (by - cy) - (dy - cy) * (bx - cx)
-        if (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-                & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)).any():
-            return True
-    return False
-
-
 def relate_polygon_rect(xs, ys, ring_offsets, minx, maxx, miny, maxy) -> int:
-    """Polygon.Relate(rect) -> code, COVERS semantics.
-
-    Exact for a convex target (a rect IS convex): mirrors the DE-9IM ->
-    SpatialRelation mapping of NtsGeometry.cs:303-314 via from-scratch
-    primitives — corner PIP, vertex-in-rect, proper edge crossing.
-    Non-dateline-crossing rect assumed (upstream splits pages).
-    """
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    if len(xs) == 0:
-        return DISJOINT
-    pminx, pmaxx = xs.min(), xs.max()
-    pminy, pmaxy = ys.min(), ys.max()
-    if pminx > maxx or pmaxx < minx or pminy > maxy or pmaxy < miny:
-        return DISJOINT
-
-    corners_x = np.array([minx, minx, maxx, maxx])
-    corners_y = np.array([miny, maxy, miny, maxy])
-    corners_in = points_in_polygon(corners_x, corners_y, xs, ys, ring_offsets)
-
-    rings = [(0, len(xs))] if ring_offsets is None or len(ring_offsets) < 2 else \
-        [(ring_offsets[k], ring_offsets[k + 1]) for k in range(len(ring_offsets) - 1)]
-    proper_cross = any(_any_edge_proper_cross(xs[s:e], ys[s:e], minx, maxx, miny, maxy)
-                       for s, e in rings)
-    any_cross = any(polygon_edges_cross_rect(xs[s:e], ys[s:e], minx, maxx, miny, maxy)
-                    for s, e in rings)
-
-    if corners_in.all() and not proper_cross:
-        return CONTAINS  # polygon covers the rect (boundary touch allowed)
-    # rect is convex: all polygon vertices inside rect => whole polygon inside
-    verts_in_rect = ((xs >= minx) & (xs <= maxx) & (ys >= miny) & (ys <= maxy))
-    if verts_in_rect.all():
-        return WITHIN
-    if corners_in.any() or any_cross:
-        return INTERSECTS
-    return DISJOINT
+    """Polygon.Relate(rect) -> code, COVERS semantics: the polygon
+    relate below with the rect as one CCW ring. Non-dateline-crossing
+    rect assumed (upstream splits pages)."""
+    rx = np.array([minx, maxx, maxx, minx], dtype=np.float64)
+    ry = np.array([miny, miny, maxy, maxy], dtype=np.float64)
+    return relate_polygon_polygon(xs, ys, ring_offsets, rx, ry, None)
 
 
 def relate_polygon_circle(xs, ys, ring_offsets, minx, maxx, miny, maxy,
@@ -259,161 +165,17 @@ def relate_polygon_circle(xs, ys, ring_offsets, minx, maxx, miny, maxy,
     return WITHIN
 
 
-# ---------------------------------------------------------------------------
-# polygon <-> polygon relate (NtsGeometry.cs:283-314: Covers -> CONTAINS,
-# CoveredBy -> WITHIN, Disjoint -> DISJOINT, else INTERSECTS — Spatial4j
-# CONTAINS/WITHIN are OGC COVERS/COVEREDBY, boundary-inclusive)
-# ---------------------------------------------------------------------------
-
-def _poly_edge_arrays(xs, ys, ring_offsets):
-    """All boundary edges of a (multi)polygon as (ax, ay, bx, by) arrays,
-    closing each ring (outer shells and holes alike)."""
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    rings = ([(0, len(xs))] if ring_offsets is None or len(ring_offsets) < 2
-             else [(ring_offsets[k], ring_offsets[k + 1])
-                   for k in range(len(ring_offsets) - 1)])
-    pax, pay, pbx, pby = [], [], [], []
-    for s, e in rings:
-        rx, ry = xs[s:e], ys[s:e]
-        if len(rx) >= 2 and rx[0] == rx[-1] and ry[0] == ry[-1]:
-            rx, ry = rx[:-1], ry[:-1]
-        if len(rx) < 2:
-            continue
-        pax.append(rx)
-        pay.append(ry)
-        pbx.append(np.roll(rx, -1))
-        pby.append(np.roll(ry, -1))
-    if not pax:
-        z = np.empty(0, dtype=np.float64)
-        return z, z, z, z
-    return (np.concatenate(pax), np.concatenate(pay),
-            np.concatenate(pbx), np.concatenate(pby))
-
-
-def _edge_split_ts(cx, cy, dx, dy, ax, ay, bx, by):
-    """Sorted unique t-params in [0,1] where segment c->d meets any of
-    the segments a->b (arrays), always including 0 and 1.
-
-    Splitting at every boundary contact makes the in/out status of each
-    sub-segment constant — the basis of the exact covers test."""
-    rx, ry = dx - cx, dy - cy
-    sx, sy = bx - ax, by - ay
-    denom = rx * sy - ry * sx
-    qpx, qpy = ax - cx, ay - cy
-    ts = [0.0, 1.0]
-    nz = denom != 0.0
-    if nz.any():
-        t = (qpx[nz] * sy[nz] - qpy[nz] * sx[nz]) / denom[nz]
-        u = (qpx[nz] * ry - qpy[nz] * rx) / denom[nz]
-        ok = (t >= 0.0) & (t <= 1.0) & (u >= 0.0) & (u <= 1.0)
-        ts.extend(t[ok].tolist())
-    # collinear overlap: denom == 0 and (a-c) x r == 0
-    col = (~nz) & (qpx * ry - qpy * rx == 0.0)
-    if col.any():
-        rr = rx * rx + ry * ry
-        if rr > 0.0:
-            ta = (qpx[col] * rx + qpy[col] * ry) / rr
-            tb = ((bx[col] - cx) * rx + (by[col] - cy) * ry) / rr
-            for arr in (ta, tb):
-                cl = np.clip(arr, 0.0, 1.0)
-                ts.extend(cl.tolist())
-    return np.unique(np.asarray(ts, dtype=np.float64))
-
-
-def _on_polygon_boundary(px, py, xs, ys, ring_offsets) -> np.ndarray:
-    """Points lying on ANY ring boundary of a (multi)polygon.
-
-    One broadcast points x edges NumPy pass (edge-chunked to bound the
-    P x E temporary) instead of a Python loop per edge — the loop made
-    the covers test O(E_A * E_B) Python iterations on corpus-scale
-    polygons (ADVICE r02)."""
-    ax, ay, bx, by = _poly_edge_arrays(xs, ys, ring_offsets)
-    px = np.asarray(px, dtype=np.float64)[:, None]
-    py = np.asarray(py, dtype=np.float64)[:, None]
-    out = np.zeros(px.shape[0], dtype=bool)
-    lox, hix = np.minimum(ax, bx), np.maximum(ax, bx)
-    loy, hiy = np.minimum(ay, by), np.maximum(ay, by)
-    chunk = max(1, 2_000_000 // max(1, px.shape[0]))
-    for s in range(0, len(ax), chunk):
-        e = slice(s, s + chunk)
-        cross = (bx[e] - ax[e]) * (py - ay[e]) - (by[e] - ay[e]) * (px - ax[e])
-        hit = ((cross == 0.0)
-               & (px >= lox[e]) & (px <= hix[e])
-               & (py >= loy[e]) & (py <= hiy[e]))
-        out |= hit.any(axis=1)
-    return out
-
-
-def _polygon_covers_polygon(axs, ays, aro, bxs, bys, bro) -> bool:
-    """Closed A covers closed B: no point of B lies outside A.
-
-    Two exact conditions (both split edges at every boundary contact,
-    making each sub-segment's status constant):
-    1. boundary of B is inside closed A — every B vertex and every B
-       sub-segment midpoint probes in (parity PIP handles A's holes);
-    2. boundary of A never passes STRICTLY through B's interior — else
-       a complement neighborhood of A (e.g. one of A's holes sitting
-       inside B) would expose uncovered B-interior that condition 1
-       cannot see because it only walks B's boundary.
-    """
-    bxs = np.asarray(bxs, dtype=np.float64)
-    bys = np.asarray(bys, dtype=np.float64)
-    if not points_in_polygon(bxs, bys, axs, ays, aro).all():
-        return False
-    eax, eay, ebx, eby = _poly_edge_arrays(axs, ays, aro)
-    cax, cay, cbx, cby = _poly_edge_arrays(bxs, bys, bro)
-    for j in range(len(cax)):
-        ts = _edge_split_ts(cax[j], cay[j], cbx[j], cby[j], eax, eay, ebx, eby)
-        if len(ts) < 2:
-            continue
-        mids_t = (ts[:-1] + ts[1:]) * 0.5
-        mx = cax[j] + mids_t * (cbx[j] - cax[j])
-        my = cay[j] + mids_t * (cby[j] - cay[j])
-        if not points_in_polygon(mx, my, axs, ays, aro).all():
-            return False
-    # condition 2: walk A's edges against B. Midpoints are BATCHED
-    # across all of A's edges into single PIP/boundary passes (the
-    # per-edge boundary test was the O(E_A * E_B) Python hot spot,
-    # ADVICE r02).
-    all_mx, all_my = [], []
-    for j in range(len(eax)):
-        ts = _edge_split_ts(eax[j], eay[j], ebx[j], eby[j], cax, cay, cbx, cby)
-        if len(ts) < 2:
-            continue
-        mids_t = (ts[:-1] + ts[1:]) * 0.5
-        all_mx.append(eax[j] + mids_t * (ebx[j] - eax[j]))
-        all_my.append(eay[j] + mids_t * (eby[j] - eay[j]))
-    if all_mx:
-        mx = np.concatenate(all_mx)
-        my = np.concatenate(all_my)
-        strict = (points_in_polygon(mx, my, bxs, bys, bro)
-                  & ~_on_polygon_boundary(mx, my, bxs, bys, bro))
-        if strict.any():
-            return False
-    return True
-
-
-def _any_boundary_contact(axs, ays, aro, bxs, bys, bro) -> bool:
-    eax, eay, ebx, eby = _poly_edge_arrays(axs, ays, aro)
-    cax, cay, cbx, cby = _poly_edge_arrays(bxs, bys, bro)
-    for j in range(len(cax)):
-        if _segments_intersect_batch(eax, eay, ebx, eby,
-                                     np.float64(cax[j]), np.float64(cay[j]),
-                                     np.float64(cbx[j]), np.float64(cby[j])).any():
-            return True
-    return False
-
-
 def relate_polygon_polygon(axs, ays, aro, bxs, bys, bro) -> int:
     """A.Relate(B) for two (multi)polygons with holes -> code.
 
     Mapping per NtsGeometry.IntersectionMatrixToSpatialRelation
     (NtsGeometry.cs:303-314): COVERS -> CONTAINS, COVEREDBY -> WITHIN,
-    DISJOINT -> DISJOINT, else INTERSECTS. Boundary-only touch is
-    INTERSECTS (OGC disjoint = no shared points at all) unless one
-    covers the other. Dateline-crossing inputs are page-split upstream
-    (wkt.py), same as every other polygon kernel here."""
+    DISJOINT -> DISJOINT, else INTERSECTS (Spatial4j CONTAINS/WITHIN
+    are OGC COVERS/COVEREDBY, boundary-inclusive). Boundary-only touch
+    is INTERSECTS (OGC disjoint = no shared points at all) unless one
+    covers the other. Bbox gate, then the noded relate
+    (kernels.booleans.relate). Dateline-crossing inputs are page-split
+    upstream (wkt.py), same as every other polygon kernel here."""
     axs = np.asarray(axs, dtype=np.float64)
     ays = np.asarray(ays, dtype=np.float64)
     bxs = np.asarray(bxs, dtype=np.float64)
@@ -423,15 +185,10 @@ def relate_polygon_polygon(axs, ays, aro, bxs, bys, bro) -> int:
     if (axs.min() > bxs.max() or axs.max() < bxs.min()
             or ays.min() > bys.max() or ays.max() < bys.min()):
         return DISJOINT
-    if _polygon_covers_polygon(axs, ays, aro, bxs, bys, bro):
-        return CONTAINS
-    if _polygon_covers_polygon(bxs, bys, bro, axs, ays, aro):
-        return WITHIN
-    if _any_boundary_contact(axs, ays, aro, bxs, bys, bro):
-        return INTERSECTS
-    # no boundary contact: each connected piece is wholly in or out, so
-    # a vertex probe per side decides shared area (covers A-in-hole-of-B)
-    if (points_in_polygon(bxs, bys, axs, ays, aro).any()
-            or points_in_polygon(axs, ays, bxs, bys, bro).any()):
-        return INTERSECTS
-    return DISJOINT
+    # a shape whose vertices all coincide is a point: it has no edge
+    if bxs.min() == bxs.max() and bys.min() == bys.max():
+        return int(relate_polygon_points(bxs[:1], bys[:1], axs, ays, aro)[0])
+    if axs.min() == axs.max() and ays.min() == ays.max():
+        return WITHIN if points_in_polygon(axs[:1], ays[:1], bxs, bys,
+                                           bro)[0] else DISJOINT
+    return relate(_rings(axs, ays, aro), _rings(bxs, bys, bro))

@@ -653,30 +653,6 @@ def _rings_to_closed(rx, ry):
             + [(float(rx[0]), float(ry[0]))])
 
 
-def _canonical_member_key(rings):
-    """Geometry-identity key for a member: each ring opened, rotated to
-    its lexicographically-smallest vertex, orientation-normalized (the
-    smaller of forward/reverse tuple), rings sorted. Duplicate members
-    (same geometry, any starting vertex / winding / ring order) share a
-    key; the pairwise relate can't see them (every vertex lies ON the
-    other's boundary) and even-odd would XOR them to nothing."""
-    out = []
-    for xs, ys in rings:
-        if len(xs) >= 2 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-            xs, ys = xs[:-1], ys[:-1]
-        pts = list(zip(xs.tolist(), ys.tolist()))
-        if not pts:
-            out.append(())
-            continue
-        k = pts.index(min(pts))
-        fwd = tuple(pts[k:] + pts[:k])
-        rev_pts = pts[::-1]
-        k2 = rev_pts.index(min(rev_pts))
-        rev = tuple(rev_pts[k2:] + rev_pts[:k2])
-        out.append(min(fwd, rev))
-    return tuple(sorted(out))
-
-
 def _resolve_multi_overlap(members, geo, dateline_rule, validation_rule,
                            allow_multi_overlap) -> dict:
     """MULTIPOLYGON assembly with the reference's COLLECTION-fold
@@ -685,11 +661,13 @@ def _resolve_multi_overlap(members, geo, dateline_rule, validation_rule,
     MakeCollection) whose relate is the member fold — i.e. UNION
     semantics, overlapping members allowed. This engine stores one
     even-odd ring set, where an overlap would XOR into a phantom hole,
-    so overlap is resolved at parse time:
+    so overlap is resolved at parse time. Each member pair whose
+    bboxes meet is classified on the noded arrangement of the two
+    (booleans.member_overlap):
 
     - interiors disjoint (boundary touching fine) -> plain merge;
-    - one member swallows another -> contained member dropped
-      (= its union);
+    - one member covers another (duplicates included) -> covered
+      member dropped (= its union);
     - any other interior overlap (crossings, a member filling another's
       hole, collinear or vertex contact, holed or dateline-paged
       members) -> the exact union of the overlapping members from the
@@ -702,8 +680,7 @@ def _resolve_multi_overlap(members, geo, dateline_rule, validation_rule,
       decides (error | repairConvexHull -> hull | repairBuffer0 ->
       hull | none -> merged as-is with the even-odd artifact).
     """
-    from .booleans import union_members
-    from .union import member_relation
+    from .booleans import member_overlap, union_members
 
     if validation_rule == "none":
         # merged as-is (even-odd artifact accepted) — hoisted above the
@@ -716,16 +693,6 @@ def _resolve_multi_overlap(members, geo, dateline_rule, validation_rule,
     dropped = [False] * n
     crossing = [False] * n
     any_cross = False
-    # duplicate members first (union of a member with itself is the
-    # member): the pairwise relate below can't detect them, and the
-    # even-odd merge would XOR them away entirely
-    seen_keys: dict = {}
-    for i in range(n):
-        key = _canonical_member_key(rings_per[i])
-        if key in seen_keys:
-            dropped[i] = True
-        else:
-            seen_keys[key] = i
     for i in range(n):
         if dropped[i]:
             continue
@@ -740,7 +707,7 @@ def _resolve_multi_overlap(members, geo, dateline_rule, validation_rule,
                      or min(mi["maxy"], mj["maxy"])
                      < max(mi["miny"], mj["miny"]))):
                 continue
-            kind = member_relation(rings_per[i], rings_per[j])
+            kind = member_overlap(rings_per[i], rings_per[j])
             if kind == "a_contains_b":
                 dropped[j] = True
             elif kind == "b_contains_a":

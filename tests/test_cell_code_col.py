@@ -9,9 +9,22 @@ from spatial4n_spark import functions as SF
 from spatial4n_spark.kernels.geohash import cell_code
 
 
+def _from_parquet(spark, tmp_path, **cols):
+    """The columns as a DataFrame read back from parquet, in row order.
+    Over a small createDataFrame(pandas) input (a LocalTableScan) Spark
+    evaluates a projection on the driver, without whole-stage codegen,
+    so a compile failure could not show."""
+    path = str(tmp_path / "in")
+    n = len(next(iter(cols.values())))
+    spark.createDataFrame(pd.DataFrame({"i": np.arange(n), **cols})) \
+        .write.parquet(path)
+    return spark.read.parquet(path).orderBy("i").drop("i")
+
+
 @pytest.mark.parametrize("mode", ["column", "sqlstr"])
 @pytest.mark.parametrize("precision", [1, 2, 4, 5, 6, 7, 9, 12])
-def test_cell_code_col_bit_identical(spark, precision, mode):
+def test_cell_code_col_bit_identical(strict_codegen, tmp_path, precision,
+                                    mode):
     """Both construction modes — Column-API tree and the single-parse
     SQL-string fast path — must be bit-identical to the kernel."""
     rng = np.random.default_rng(42)
@@ -21,7 +34,7 @@ def test_cell_code_col_bit_identical(spark, precision, mode):
     lat = np.concatenate([rng.uniform(-90, 90, 5000),
                           [-90.0, 90.0, 0.0, 45.0, -45.0, 22.5, -22.5,
                            89.999999, -89.999999]])
-    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    df = _from_parquet(strict_codegen, tmp_path, lon=lon, lat=lat)
     args = (("`lat`", "`lon`") if mode == "sqlstr"
             else (F.col("lat"), F.col("lon")))
     got = np.array(
@@ -36,9 +49,8 @@ def test_guarded_cell_code_bit_identical(strict_codegen, tmp_path, mode):
     """The `when(kind == 1, cell code)` form the tile-index job uses
     (no subexpression elimination inside a CASE branch) compiles at
     every precision and equals the kernel on the guarded rows, null on
-    the others — random points plus grid-boundary inputs. The points
-    are read back from parquet: over a small local DataFrame Spark
-    evaluates the projection on the driver, without codegen."""
+    the others — random points plus grid-boundary inputs, read back
+    from parquet."""
     rng = np.random.default_rng(5)
     lon = np.concatenate([rng.uniform(-180, 180, 3000),
                           [112.50000000000003, 112.5, -180.0, 180.0, 0.0,
@@ -47,11 +59,8 @@ def test_guarded_cell_code_bit_identical(strict_codegen, tmp_path, mode):
                           [45.0, 22.5, -90.0, 90.0, 0.0, 5.625,
                            float(np.nextafter(-45.0, -1e9))]])
     kind = np.where(np.arange(lon.size) % 3 == 0, 2, 1).astype(np.int8)
-    path = str(tmp_path / "pts")
-    strict_codegen.createDataFrame(pd.DataFrame(
-        {"i": np.arange(lon.size), "lon": lon, "lat": lat, "kind": kind})
-    ).write.parquet(path)
-    df = strict_codegen.read.parquet(path).orderBy("i")
+    df = _from_parquet(strict_codegen, tmp_path, lon=lon, lat=lat,
+                       kind=kind)
     args = (("`lat`", "`lon`") if mode == "sqlstr"
             else (F.col("lat"), F.col("lon")))
     for p in range(1, 13):
@@ -64,7 +73,8 @@ def test_guarded_cell_code_bit_identical(strict_codegen, tmp_path, mode):
 
 
 @pytest.mark.parametrize("precision", [1, 2, 4, 6, 7])
-def test_cover_codes_col_sqlstr_identical(spark, precision):
+def test_cover_codes_col_sqlstr_identical(strict_codegen, tmp_path,
+                                         precision):
     """String-fragment cover builder == Column-API cover builder on
     random and dateline-crossing bboxes (same cell set, same order)."""
     rng = np.random.default_rng(7)
@@ -75,8 +85,8 @@ def test_cover_codes_col_sqlstr_identical(spark, precision):
     maxx = np.where(maxx > 180, maxx - 360, maxx)   # ~some cross +-180
     miny = rng.uniform(-90, 89, m)
     maxy = np.minimum(90, miny + rng.uniform(0, span, m))
-    df = spark.createDataFrame(pd.DataFrame(
-        {"minx": minx, "maxx": maxx, "miny": miny, "maxy": maxy}))
+    df = _from_parquet(strict_codegen, tmp_path, minx=minx, maxx=maxx,
+                       miny=miny, maxy=maxy)
     a = df.select(SF.st_cover_codes_col(
         F.col("minx"), F.col("maxx"), F.col("miny"), F.col("maxy"),
         precision).alias("c")).toPandas()["c"]
@@ -86,11 +96,11 @@ def test_cover_codes_col_sqlstr_identical(spark, precision):
     assert all(list(x) == list(y) for x, y in zip(a, b))
 
 
-def test_cover_codes_sqlstr_lambda_shadowing(spark):
+def test_cover_codes_sqlstr_lambda_shadowing(strict_codegen, tmp_path):
     """Columns literally named li/ti must not be captured by the cover
     HOF lambda variables (regression for the string-path lambda names)."""
-    df = spark.createDataFrame(pd.DataFrame(
-        {"li": [10.0], "ti": [20.0], "maxx": [11.0], "maxy": [21.0]}))
+    df = _from_parquet(strict_codegen, tmp_path, li=[10.0], ti=[20.0],
+                       maxx=[11.0], maxy=[21.0])
     a = df.select(SF.st_cover_codes_col(
         F.col("li"), F.col("maxx"), F.col("ti"), F.col("maxy"), 3).alias("c")
     ).toPandas()["c"]
@@ -133,7 +143,7 @@ def test_rect_fast_path_equals_kernel_refine(spark):
 
 
 @pytest.mark.parametrize("precision", [2, 5, 6, 12])
-def test_cell_code_exact_at_boundaries(spark, precision):
+def test_cell_code_exact_at_boundaries(strict_codegen, tmp_path, precision):
     """Adversarial boundary battery: exact grid boundaries and +-3e-14 /
     +-1ulp neighbors must match the kernel bisection exactly (the
     closed form alone loses sub-ulp excesses — real data hit this at
@@ -148,7 +158,7 @@ def test_cell_code_exact_at_boundaries(spark, precision):
     lon = np.array([v for v in bounds if -180 <= v <= 180]
                    + [1e-300, -1e-300, 112.50000000000003])
     lat = np.clip(lon / 2.0, -90, 90)
-    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    df = _from_parquet(strict_codegen, tmp_path, lon=lon, lat=lat)
     got = np.array(
         df.select(SF.st_cell_code_col(F.col("lat"), F.col("lon"),
                                       precision).alias("c"))

@@ -114,6 +114,10 @@ def test_polygon_rect_relate():
     assert relate_polygon_rect(xs, ys, ro, 11, 15, 11, 15) == R.DISJOINT
     # identical — CONTAINS preferred
     assert relate_polygon_rect(xs, ys, ro, 0, 10, 0, 10) in (R.CONTAINS, R.WITHIN)
+    # a hole inside the rect: the rect is not covered
+    hx = np.array([0.0, 10, 10, 0, 0, 4, 4, 6, 6, 4])
+    hy = np.array([0.0, 0, 10, 10, 0, 4, 6, 6, 4, 4])
+    assert relate_polygon_rect(hx, hy, [0, 5, 10], 2, 8, 2, 8) == R.INTERSECTS
 
 
 def test_dateline_polygon_width180_rule():

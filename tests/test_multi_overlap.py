@@ -15,7 +15,8 @@ import pytest
 from spatial4n_spark.kernels import booleans
 from spatial4n_spark.kernels.overlay import polygon_area_evenodd
 from spatial4n_spark.kernels.pip import points_in_polygon
-from spatial4n_spark.kernels.wkt import WktParseError, parse_shape
+from spatial4n_spark.kernels.wkt import (WktParseError, parse_shape,
+                                         parse_wkt_batch)
 
 OVERLAP = ("MULTIPOLYGON(((0 0, 10 0, 10 10, 0 10, 0 0)),"
            " ((5 5, 15 5, 15 15, 5 15, 5 5)))")
@@ -167,6 +168,22 @@ def test_corpus_members_still_parse():
             else rec["kind"] == 8
 
 
+def test_fiji_page_sliver_overlap_is_unioned():
+    """A fiji member's dateline page cut leaves a sliver ring 3.4e-7
+    deg wide at x = -180 that overlaps another member's page along
+    x = -180 (about 3e-8 deg^2 of shared interior). The members are
+    unioned, so the sliver strip is covered, not XORed into a phantom
+    hole; the shape 0.1 deg east is covered either way."""
+    import os
+    res = os.path.join(os.path.dirname(__file__), "resources")
+    with open(os.path.join(res, "fiji.wkt.txt")) as fh:
+        text = fh.read().strip()
+    for kw in ({}, {"allow_multi_overlap": True}):
+        rec = parse_wkt_batch([text], **kw)[0][0]
+        assert _pip(rec, [-179.9999998, -179.99999999, -179.9],
+                    [-16.87] * 3).tolist() == [True, True, True]
+
+
 def test_st_from_wkt_allow_multi_overlap(spark):
     from pyspark.sql import functions as F
 
@@ -225,10 +242,9 @@ def test_bridge_member_unions_transitively():
 
 def test_duplicate_members_fold_to_one():
     """Collection-fold identity: union of a member with itself is the
-    member. Bit-identical (or rotated / rewound) duplicate members are
-    invisible to the pairwise relate (every vertex lies ON the other's
-    boundary) and even-odd XORed the region away entirely; the
-    canonical-key dedupe drops them at parse time."""
+    member. Even-odd would XOR bit-identical (or rotated / rewound)
+    duplicate members away entirely; the member classifier finds that
+    each covers the other and drops the later one."""
     dup = "MULTIPOLYGON(((0 0,10 0,10 10,0 10,0 0)),((0 0,10 0,10 10,0 10,0 0)))"
     rec = parse_shape(dup)
     assert len(rec["ring_offsets"]) - 1 == 1
@@ -269,6 +285,20 @@ def test_touch_only_members_still_plain_merge():
     rec = parse_shape(EDGE_SHARE)
     assert rec["kind"] == 8 and len(rec["ring_offsets"]) == 3
     assert _pip(rec, [5, 5], [3, -3]).tolist() == [True, True]
+
+
+def test_vertex_touch_overlap_keeps_both_members():
+    """Members that overlap while touching only at vertices (a vertex on
+    an edge, an edge through a vertex) are unioned, not reduced to the
+    member one of whose vertices lies deep inside the other: (-2.8, 0)
+    lies in the triangle only, (-4, 4) in the other member only."""
+    wkt = ("MULTIPOLYGON(((-2 2, -3 3, -3 -1, -2 2)),"
+           " ((0 4, -4 6, -6 2, -3 2, -1 2, 0 4)))")
+    for kw in ({}, {"validation_rule": "repairConvexHull"},
+               {"allow_multi_overlap": True}):
+        rec = parse_shape(wkt, **kw)
+        assert _pip(rec, [-2.8, -2.8, -4], [0, 2.5, 4]).tolist() == \
+            [True, True, True], kw
 
 
 def test_hole_filling_member_not_dropped_as_contained():

@@ -184,6 +184,76 @@ def test_polygon_with_hole_vs_polygon():
     assert relate_polygon_polygon(xs, ys, ro, bx, by, None) == CONTAINS
 
 
+def test_zero_area_rings_decided_by_contact():
+    """A zero-area ring (out along a line and back, accepted by the WKT
+    parser) has no area-bearing side: it is the set of its segments."""
+    zx, zy = np.array([-1.0, -1, -1]), np.array([0.0, -3, -6])
+    sub_x, sub_y = np.array([-1.0, -1, -1]), np.array([-1.0, -2, -3])
+    assert relate_polygon_polygon(zx, zy, None, zx, zy, None) == CONTAINS
+    assert relate_polygon_polygon(zx, zy, None, sub_x, sub_y, None) == CONTAINS
+    assert relate_polygon_polygon(sub_x, sub_y, None, zx, zy, None) == WITHIN
+    tx, ty = np.array([-3.0, 1, -1]), np.array([-8.0, -8, 2])  # around z
+    assert relate_polygon_polygon(zx, zy, None, tx, ty, None) == WITHIN
+    assert relate_polygon_polygon(tx, ty, None, zx, zy, None) == CONTAINS
+    bx, by = _rect_as_polygon(-2, 0, -2, -1)               # z crosses it
+    assert relate_polygon_polygon(zx, zy, None, bx, by, None) == INTERSECTS
+    bx, by = _rect_as_polygon(-1, 2, 0, 1)                 # z ends on it
+    assert relate_polygon_polygon(zx, zy, None, bx, by, None) == INTERSECTS
+    bx, by = _rect_as_polygon(0, 2, -4, -2)                # apart
+    assert relate_polygon_polygon(zx, zy, None, bx, by, None) == DISJOINT
+    # z inside B's interior, touching no edge, plus a square far off:
+    # no node is shared and no area side is in both, yet z meets B
+    fx, fy = _rect_as_polygon(10, 11, 10, 11)
+    ax, ay = np.concatenate((zx, fx)), np.concatenate((zy, fy))
+    aro = np.array([0, 3, 3 + len(fx)])
+    bx, by = _rect_as_polygon(-2, 0, -7, 1)
+    assert relate_polygon_polygon(ax, ay, aro, bx, by, None) == INTERSECTS
+    assert relate_polygon_polygon(bx, by, None, ax, ay, aro) == INTERSECTS
+
+
+def test_contact_within_snap_tolerance():
+    """Contacts closer than the noder's snap tolerance (1e-9 of the
+    pair's extent) are contacts; farther gaps are not."""
+    ax, ay = _rect_as_polygon(0, 1, 0, 1)
+    for gap, want in ((1e-12, INTERSECTS), (1e-6, DISJOINT)):
+        # an L around A's top-right corner, `gap` away from two of its
+        # edges (the bboxes overlap, so the bbox gate does not decide)
+        g = 1.0 + gap
+        bx = np.array([g, 3, 3, 0.5, 0.5, g])
+        by = np.array([0.5, 0.5, 3, 3, g, g])
+        assert relate_polygon_polygon(ax, ay, None, bx, by, None) == want
+        assert relate_polygon_polygon(bx, by, None, ax, ay, None) == want
+
+
+def test_many_ring_operand_with_apart_boundaries():
+    """1,600 island rings against a square, a frame and a small square
+    whose bboxes overlap A's but whose boundaries run in the gaps: the
+    (edges x edges) and (pieces x pieces) grids exceed one dense block,
+    so the noder and the ray cast run blocked."""
+    xs, ys, ro = [], [], [0]
+    for i in range(40):
+        for j in range(40):
+            xs += [i, i + 0.4, i + 0.4, i]
+            ys += [j, j, j + 0.4, j + 0.4]
+            ro.append(len(xs))
+    ax, ay, aro = np.array(xs, float), np.array(ys, float), np.array(ro)
+
+    def square(a, b):
+        return [a, b, b, a], [a, a, b, b]
+
+    ox, oy = square(0.7, 38.7)   # holds islands 1..38 x 1..38
+    hx, hy = square(0.8, 38.6)   # hole: the frame between holds none
+    sx, sy = square(20.1, 20.3)  # inside island (20, 20)
+    cases = [(ox, oy, None, INTERSECTS),
+             (ox + hx[::-1], oy + hy[::-1], np.array([0, 4, 8]), DISJOINT),
+             (sx, sy, None, CONTAINS)]
+    for bx, by, bro, want in cases:
+        bx, by = np.array(bx, float), np.array(by, float)
+        assert relate_polygon_polygon(ax, ay, aro, bx, by, bro) == want
+        assert relate_polygon_polygon(bx, by, bro, ax, ay, aro) == \
+            transpose(want)
+
+
 # --------------------------------------------------------------------------
 # Fiji / Russia corpus (NtsGeometryTest.cs:227-271)
 # --------------------------------------------------------------------------

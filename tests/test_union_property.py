@@ -14,9 +14,8 @@ of invalid input the validator exists to reject.
 """
 import numpy as np
 
-from spatial4n_spark.kernels.booleans import union_members
+from spatial4n_spark.kernels.booleans import _open_ccw, union_members
 from spatial4n_spark.kernels.pip import points_in_polygon
-from spatial4n_spark.kernels.union import _open_ccw
 from spatial4n_spark.kernels.wkt import _ring_invalid_reason
 
 
