@@ -296,10 +296,13 @@ def st_relate_shape_point(shape: pa.Array, px: pa.Array,
                           py: pa.Array) -> pa.Array:
     """shape.Relate(point) dispatch by kind — the join refine kernel.
 
-    Kernel selection happens per (kind-group), not per row: rows are
-    grouped by kind and each group is processed as one NumPy batch.
+    Kernel selection happens per kind, not per row: each kind's rows
+    are processed as one NumPy batch. The polygon rows, each against
+    its own vertex arrays, go through `points_in_row_polygons` (one
+    kernel call for a batch of small polygons); a polygon row with
+    null vertex arrays reads DISJOINT.
     """
-    from ..kernels.pip import points_in_polygon
+    from ..kernels.pip import points_in_row_polygons
     from ..kernels.relate_circle import relate_circle_point
     from ..kernels.relate_line import linestring_contains_point
 
@@ -323,22 +326,18 @@ def st_relate_shape_point(shape: pa.Array, px: pa.Array,
         out[m] = np.where(same, _rel.CONTAINS, _rel.DISJOINT)
     m = (kd == _wkt.KIND_POLYGON) | (kd == _wkt.KIND_MULTIPOLYGON)
     if m.any():
-        # group rows sharing the same polygon (joins replicate one shape
-        # to many candidate points) and PIP each group as one batch.
-        # Key on the FULL geometry bytes — a heuristic key like
-        # (len, x0, x-1, y0) collides for distinct rings sharing
-        # endpoints (closed rings always have x0 == x-1) and would
-        # silently relate a row against the wrong polygon. tobytes()
-        # is ~ns per vertex, negligible next to the PIP kernel.
-        for rows in _group_by_geometry(s, np.nonzero(m)[0]):
-            vx, vy, ro = s.verts(rows[0])
-            hit = points_in_polygon(pxv[rows], pyv[rows], vx, vy, ro)
-            out[rows] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
+        rows = np.flatnonzero(m)
+        hit = points_in_row_polygons(pxv[rows], pyv[rows], s.xs, s.ys,
+                                     s.ring_offsets, rows)
+        out[rows] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
     m = kd == _wkt.KIND_LINESTRING
     if m.any():
-        # same per-shape grouping as the polygon branch: joins replicate
-        # one line across many candidate points, so batch each line's
-        # points into ONE kernel call instead of a per-row loop
+        # joins replicate one line across many candidate points, so
+        # group rows by line and batch each line's points into ONE
+        # kernel call instead of a per-row loop. Key on the FULL
+        # geometry bytes: a heuristic key like (len, x0, x-1, y0)
+        # collides for distinct lines sharing endpoints and would
+        # relate a row against the wrong line.
         rad = np.where(np.isnan(s.radius), 0.0, s.radius)
         for rows in _group_by_geometry(s, np.nonzero(m)[0], rad):
             i0 = rows[0]

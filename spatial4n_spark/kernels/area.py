@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .booleans import _roll1
 from .normalize import RADIANS_TO_DEGREES, to_radians
 from .relate_rect import rect_width
 
@@ -56,7 +57,7 @@ def polygon_area_euclid(xs, ys, ring_offsets) -> float:
     signs = _ring_even_odd_signs(rings)
     total = 0.0
     for (rx, ry), sg in zip(rings, signs):
-        cross = rx * np.roll(ry, -1) - np.roll(rx, -1) * ry
+        cross = rx * _roll1(ry) - _roll1(rx) * ry
         total += sg * abs(0.5 * cross.sum())
     return total
 

@@ -74,7 +74,7 @@ ARC_STEP = np.pi / 16.0  # 8 segments per quadrant, JTS default fidelity
 
 
 # ring primitives shared with the noded overlay kernel
-from .booleans import _ensure_ccw, _signed_area2  # noqa: E402
+from .booleans import _ensure_ccw, _roll1, _signed_area2  # noqa: E402
 
 
 def _ring_open(xs, ys):
@@ -85,9 +85,9 @@ def _ring_open(xs, ys):
 
 
 def _is_convex_ccw(xs, ys) -> bool:
-    ex = np.roll(xs, -1) - xs
-    ey = np.roll(ys, -1) - ys
-    cross = ex * np.roll(ey, -1) - ey * np.roll(ex, -1)
+    ex = _roll1(xs) - xs
+    ey = _roll1(ys) - ys
+    cross = ex * _roll1(ey) - ey * _roll1(ex)
     return bool(np.all(cross >= 0.0))
 
 
@@ -118,8 +118,8 @@ def _offset_convex_ring(xs, ys, d, arc_step=ARC_STEP):
     """Round-join outward offset of a CCW convex ring by d (exact
     Minkowski with inscribed arc discretization). Returns (oxs, oys)."""
     n = len(xs)
-    ex = np.roll(xs, -1) - xs
-    ey = np.roll(ys, -1) - ys
+    ex = _roll1(xs) - xs
+    ey = _roll1(ys) - ys
     elen = np.hypot(ex, ey)
     keep = elen > 0.0
     # outward normal of CCW edge (a->b) is (dy, -dx)/|e|
@@ -209,7 +209,7 @@ def _erode_convex_ring(xs, ys, d):
 def _clean_ring(rx, ry):
     """Drop duplicate consecutive vertices (a zero-length edge has no
     strip rectangle). Returns None if fewer than 3 vertices survive."""
-    keep = (rx != np.roll(rx, -1)) | (ry != np.roll(ry, -1))
+    keep = (rx != _roll1(rx)) | (ry != _roll1(ry))
     rx, ry = rx[keep], ry[keep]
     if len(rx) < 3:
         return None
@@ -261,7 +261,7 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
     Raises ValueError on a degenerate ring or an erosion whose union
     does not stitch.
     """
-    from .pip import points_in_ring
+    from .pip import points_in_polygon
 
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
@@ -310,7 +310,7 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
     for k, (rx, ry) in enumerate(rings):
         c = 0
         for j, (ox, oy) in enumerate(rings):
-            if j != k and points_in_ring(
+            if j != k and points_in_polygon(
                     np.array([rx[0]]), np.array([ry[0]]), ox, oy)[0]:
                 c += 1
         depth.append(c)

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .booleans import _roll1
 from .normalize import norm_lon_deg
 
 
@@ -101,7 +102,7 @@ def polygon_centroid(xs, ys, ring_offsets):
     lsum = lx = ly = 0.0
     for (rx, ry), sg in zip(rings, signs):
         x0, y0 = rx, ry
-        x1, y1 = np.roll(rx, -1), np.roll(ry, -1)
+        x1, y1 = _roll1(rx), _roll1(ry)
         cross = x0 * y1 - x1 * y0
         a_signed = 0.5 * cross.sum()
         if a_signed != 0.0:

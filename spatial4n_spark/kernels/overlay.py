@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .booleans import _roll1
+
 
 def _rings(xs, ys, ring_offsets):
     """Split flat vertex arrays into per-ring (xs, ys), open form."""
@@ -75,7 +77,7 @@ def _ring_signs(rings):
     CCW at even containment depth, CW at odd depth."""
     signs = []
     for i, (rx, ry) in enumerate(rings):
-        stored = np.sum(rx * np.roll(ry, -1) - np.roll(rx, -1) * ry)
+        stored = np.sum(rx * _roll1(ry) - _roll1(rx) * ry)
         stored_sign = 1.0 if stored >= 0.0 else -1.0
         # depth: number of OTHER rings properly CONTAINING this ring.
         # Vertex probes are unreliable — overlay-output rings
@@ -105,16 +107,16 @@ def _ring_contained_in(rx, ry, ox, oy) -> bool:
     inside R can cover the probe strip along ∂R), so containment
     additionally requires |area(R)| < |area(O)| — for non-crossing
     rings the container is always the larger."""
-    a_r = abs(float(np.sum(rx * np.roll(ry, -1) - np.roll(rx, -1) * ry)))
-    a_o = abs(float(np.sum(ox * np.roll(oy, -1) - np.roll(ox, -1) * oy)))
+    a_r = abs(float(np.sum(rx * _roll1(ry) - _roll1(rx) * ry)))
+    a_o = abs(float(np.sum(ox * _roll1(oy) - _roll1(ox) * oy)))
     if a_r >= a_o:
         return False
     n = len(rx)
-    ex = np.roll(rx, -1) - rx
-    ey = np.roll(ry, -1) - ry
+    ex = _roll1(rx) - rx
+    ey = _roll1(ry) - ry
     elen = np.hypot(ex, ey)
     order = np.argsort(-elen)
-    o2x, o2y = np.roll(ox, -1), np.roll(oy, -1)
+    o2x, o2y = _roll1(ox), _roll1(oy)
     dx, dy = o2x - ox, o2y - oy
     L2 = dx * dx + dy * dy
     L2s = np.where(L2 == 0.0, 1.0, L2)
@@ -129,7 +131,7 @@ def _ring_contained_in(rx, ry, ox, oy) -> bool:
                 qx, qy = mx + s * eps * nx, my + s * eps * ny
                 par, bnd = _parity_and_boundary(
                     np.asarray([qx]), np.asarray([qy]),
-                    rx, ry, np.roll(rx, -1), np.roll(ry, -1))
+                    rx, ry, _roll1(rx), _roll1(ry))
                 if not par[0] or bnd[0]:
                     continue  # wrong side / still on own boundary
                 t = np.clip(((qx - ox) * dx + (qy - oy) * dy) / L2s,
@@ -153,7 +155,7 @@ def polygon_area_evenodd(xs, ys, ring_offsets=None) -> float:
     total = 0.0
     for (rx, ry), sgn in zip(rings, _ring_signs(rings)):
         total += sgn * 0.5 * float(
-            np.sum(rx * np.roll(ry, -1) - np.roll(rx, -1) * ry))
+            np.sum(rx * _roll1(ry) - _roll1(rx) * ry))
     return total
 
 

@@ -11,10 +11,18 @@ outer ring and holes; multipolygons concatenate rings with a parallel
 ring->part map. Dateline-crossing polygons are handled upstream by
 page-splitting at ingest (NtsGeometry.cs:379-527 analog in wkt.py).
 
-Vectorization: many points vs ONE polygon per call (the distributed
-join groups candidate pairs by polygon id, so each kernel call is a
-(polygon, point-batch) pair); the edge loop is over the polygon's own
-edges with all points processed per edge via NumPy.
+Vectorization: `polygon_edges` flattens a batch of polygons, read
+straight from the shape codec's flat vertex buffers, into one edge
+table. `points_in_polygons` tests point k against the edges of its own
+polygon `poly[k]`. An edge can only cross or touch points whose y lies
+in its y-range, and sorting the points by (polygon, y) makes those a
+contiguous run per edge, so the kernel builds exactly the (point, edge)
+pairs that can matter and probes all of them in a few vectorized
+passes. Its cost is that pair count plus a sort: neither the number of
+distinct polygons nor the number of points per polygon adds Python
+iterations. `points_in_row_polygons` serves a row-aligned shape batch
+(rows that repeat one polygon share its edges); `points_in_polygon` is
+the one-polygon call of the same kernel.
 
 Polygon <-> polygon and polygon <-> rect relates pass the bbox gate
 here and are then decided on the noded arrangement of both boundaries
@@ -23,6 +31,8 @@ geometry use.
 """
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 from .booleans import relate
@@ -30,60 +40,237 @@ from .overlay import _rings
 from .relation import CONTAINS, DISJOINT, WITHIN
 
 
-def points_in_ring(px, py, xs, ys) -> np.ndarray:
-    """Crossing-number test of points against one closed ring.
+class Edges(NamedTuple):
+    """Flat edge table of a batch of polygons: polygon i owns edges
+    `offsets[i]:offsets[i + 1]`, ring after ring, each edge running
+    from (ax, ay) to (bx, by)."""
+    ax: np.ndarray
+    ay: np.ndarray
+    bx: np.ndarray
+    by: np.ndarray
+    offsets: np.ndarray
 
-    Boundary points (vertex or on-edge) count as inside. Ring need not
-    repeat the first vertex. Returns bool array.
-    """
+
+class _Lists(NamedTuple):
+    """One ragged column: flat `values`, per-row `offsets` and `valid`
+    (the layout of `shapes.VertexLists`)."""
+    values: np.ndarray
+    offsets: np.ndarray
+    valid: np.ndarray
+
+
+def _one_list(values) -> _Lists:
+    if values is None:
+        return _Lists(np.zeros(0), np.zeros(2, dtype=np.int64),
+                      np.zeros(1, dtype=bool))
+    values = np.asarray(values)
+    return _Lists(values, np.array([0, len(values)]), np.ones(1, dtype=bool))
+
+
+def polygon_edges(xs, ys, ring_offsets, rows=None) -> Edges:
+    """Edge table of the polygons in rows `rows` (default: all) of three
+    ragged columns with `values`, `offsets` and `valid` (the layout of
+    `shapes.VertexLists`). Polygon i of the table is row `rows[i]`.
+
+    A row's `ring_offsets` cut its own vertices into rings; a null or
+    shorter-than-2 `ring_offsets` makes all vertices one ring. A ring
+    that repeats its first vertex drops the repeat; ring k's last edge
+    closes back to its first vertex. A row with null `xs` or `ys` has
+    no edges, so every point reads outside it."""
+    rows = (np.arange(len(xs.valid)) if rows is None
+            else np.asarray(rows, dtype=np.int64))
+    xbase = xs.offsets[rows]
+    ybase = ys.offsets[rows]
+    nv = np.where(xs.valid[rows] & ys.valid[rows],
+                  np.minimum(xs.offsets[rows + 1] - xbase,
+                             ys.offsets[rows + 1] - ybase), 0)
+    rbase = ring_offsets.offsets[rows]
+    nro = np.where(ring_offsets.valid[rows],
+                   ring_offsets.offsets[rows + 1] - rbase, 0)
+    multi = nro >= 2
+    nrings = np.where(multi, nro - 1, 1)
+    first_ring = np.cumsum(nrings) - nrings
+    ring_row = np.repeat(np.arange(len(rows)), nrings)
+    # ring k of a row is its vertices [ring_offsets[k], ring_offsets[k+1])
+    # (all of them without ring_offsets), clamped as a Python slice is
+    cap = nv[ring_row]
+    rs = np.zeros(len(ring_row), dtype=np.int64)
+    re = cap.copy()
+    m = np.flatnonzero(multi[ring_row])
+    p = rbase[ring_row[m]] + m - first_ring[ring_row[m]]
+    rs[m] = ring_offsets.values[p]
+    re[m] = ring_offsets.values[p + 1]
+    rs = np.minimum(rs, cap)
+    n = np.maximum(np.minimum(re, cap) - rs, 0)
+    gx = xbase[ring_row] + rs
+    gy = ybase[ring_row] + rs
+    X, Y = xs.values, ys.values
+    c = np.flatnonzero(n >= 2)
+    n[c] -= ((X[gx[c]] == X[gx[c] + n[c] - 1])
+             & (Y[gy[c]] == Y[gy[c] + n[c] - 1]))
+    # edge i of a ring runs from its vertex i to vertex i + 1, the last
+    # one back to vertex 0
+    ring_end = np.cumsum(n)
+    ering = np.repeat(np.arange(len(n)), n)
+    i = np.arange(len(ering)) - (ring_end - n)[ering]
+    nxt = np.where(i + 1 == n[ering], 0, i + 1)
+    offsets = np.r_[0, ring_end][np.r_[first_ring, len(n)]]
+    return Edges(X[gx[ering] + i], Y[gy[ering] + i],
+                 X[gx[ering] + nxt], Y[gy[ering] + nxt], offsets)
+
+
+# (point, edge) probes per vectorized pass: bounds the pass's memory
+_PAIRS_PER_PASS = 1 << 16
+
+
+def _probe_edges(px, py, ax, ay, bx, by):
+    """(crosses, on_boundary) of point k against edge k, elementwise.
+
+    On the boundary: the edge's cross product is exactly 0 and the
+    point lies in the edge's closed box. Crosses: the +x ray from the
+    point crosses the edge under the half-open y rule, so a ray through
+    a vertex counts once (a horizontal edge never crosses)."""
+    dy = py - ay
+    cross = (bx - ax) * dy - (by - ay) * (px - ax)
+    on = ((cross == 0.0)
+          & (px >= np.minimum(ax, bx)) & (px <= np.maximum(ax, bx))
+          & (py >= np.minimum(ay, by)) & (py <= np.maximum(ay, by)))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        x_at = ax + dy * (bx - ax) / (by - ay)
+    return ((ay > py) != (by > py)) & (px < x_at), on
+
+
+def points_in_polygons(px, py, poly, edges: Edges) -> np.ndarray:
+    """Point k against polygon `poly[k]` of an edge table, even-odd over
+    all its rings, any ring boundary counting as inside.
+
+    An edge can only cross or touch the points whose y lies in its own
+    y-range. Sorting the points by (polygon, y) puts those points of
+    each edge's polygon in one contiguous run, found by binary search,
+    so the kernel probes only these (point, edge) pairs, all of them
+    in a few vectorized passes. Its float operations are those of the
+    per-edge loop it replaced, so answers are bit-identical. A polygon
+    with no edges covers nothing."""
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    if len(xs) >= 2 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-        xs, ys = xs[:-1], ys[:-1]
-    n = len(xs)
-    inside = np.zeros(px.shape, dtype=bool)
-    boundary = np.zeros(px.shape, dtype=bool)
-    x1, y1 = xs, ys
-    x2 = np.roll(xs, -1)
-    y2 = np.roll(ys, -1)
-    for i in range(n):
-        ax, ay, bx, by = x1[i], y1[i], x2[i], y2[i]
-        # boundary: collinear and within segment bbox
-        cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        on_seg = ((cross == 0.0)
-                  & (px >= min(ax, bx)) & (px <= max(ax, bx))
-                  & (py >= min(ay, by)) & (py <= max(ay, by)))
-        boundary |= on_seg
-        # ray cast to +x: half-open in y to avoid double-count at vertices
-        cond = (ay > py) != (by > py)
-        if ay != by:
-            x_at = ax + (py - ay) * (bx - ax) / (by - ay)
-            inside ^= cond & (px < x_at)
-    return inside | boundary
+    poly = np.asarray(poly, dtype=np.int64)
+    n = len(px)
+    # sort by (polygon, y); key = polygon * n + rank of y among all points
+    by_y = np.argsort(py)
+    sy = py[by_y]
+    rank = np.empty(n, dtype=np.int64)
+    rank[by_y] = np.arange(n)
+    order = by_y[np.argsort(poly[by_y], kind="stable")]
+    key = poly[order] * n + rank[order]
+    spx, spy = px[order], py[order]
+    # the edges of the polygons this batch probes
+    used = np.unique(poly)
+    cnt = edges.offsets[used + 1] - edges.offsets[used]
+    e = (np.repeat(edges.offsets[used] - (np.cumsum(cnt) - cnt), cnt)
+         + np.arange(cnt.sum()))
+    ay, by = edges.ay[e], edges.by[e]
+    ylo, yhi = np.minimum(ay, by), np.maximum(ay, by)
+    # keep the edges whose y-range meets their polygon's points' y-range
+    # (each polygon's points are one run of the sorted order)
+    first = np.searchsorted(key, used * n, side="left")
+    last = np.searchsorted(key, (used + 1) * n, side="left") - 1
+    keep = ~((yhi < np.repeat(spy[first], cnt))
+             | (ylo > np.repeat(spy[last], cnt)))
+    e, ylo, yhi = e[keep], ylo[keep], yhi[keep]
+    base = np.repeat(used * n, cnt)[keep]
+    # each edge's run: its polygon's points with y in [ylo, yhi] (ranks
+    # bound a superset; the extra points probe as neither crossing nor
+    # touching)
+    lo = np.searchsorted(key, base + np.searchsorted(sy, ylo, side="left"))
+    hi = np.searchsorted(key, base + np.searchsorted(sy, yhi, side="right"))
+    runs = hi - lo
+    ends = np.cumsum(runs)
+    crossings = np.zeros(n, dtype=np.int64)
+    boundary = np.zeros(n, dtype=bool)
+    s = 0
+    while s < len(runs):
+        done = ends[s - 1] if s else 0
+        t = max(s + 1, int(np.searchsorted(ends, done + _PAIRS_PER_PASS,
+                                           side="right")))
+        r = runs[s:t]
+        pe = np.repeat(e[s:t], r)
+        pt = (np.arange(len(pe))
+              - np.repeat(np.cumsum(r) - r - lo[s:t], r))
+        crosses, on = _probe_edges(spx[pt], spy[pt], edges.ax[pe],
+                                   edges.ay[pe], edges.bx[pe], edges.by[pe])
+        crossings += np.bincount(pt[crosses], minlength=n)
+        boundary[pt[on]] = True
+        s = t
+    out = np.empty(n, dtype=bool)
+    out[order] = (crossings & 1).astype(bool) | boundary
+    return out
 
 
-def _ring_parity_and_boundary(px, py, xs, ys):
-    """(crossing parity, on-boundary) of points vs one ring."""
-    if len(xs) >= 2 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-        xs, ys = xs[:-1], ys[:-1]
-    inside = np.zeros(px.shape, dtype=bool)
-    boundary = np.zeros(px.shape, dtype=bool)
-    n = len(xs)
-    x2 = np.roll(xs, -1)
-    y2 = np.roll(ys, -1)
-    for i in range(n):
-        ax, ay, bx, by = xs[i], ys[i], x2[i], y2[i]
-        cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        boundary |= ((cross == 0.0)
-                     & (px >= min(ax, bx)) & (px <= max(ax, bx))
-                     & (py >= min(ay, by)) & (py <= max(ay, by)))
-        cond = (ay > py) != (by > py)
-        if ay != by:
-            x_at = ax + (py - ay) * (bx - ax) / (by - ay)
-            inside ^= cond & (px < x_at)
-    return inside, boundary
+def _distinct_rows(lists, rows):
+    """(reps, inv): row `rows[k]` holds the same bytes in every ragged
+    column of `lists` (8-byte values) as row `reps[inv[k]]`.
+
+    Rows are matched on a fingerprint (each list's length and its
+    first, middle and last value); each row matched to an earlier one
+    is then compared with it byte for byte, and keeps its own entry if
+    they differ. Distinct polygons cost only the fingerprint sort."""
+    n = len(rows)
+    spans, cols = [], []
+    for col in lists:
+        bits = np.ascontiguousarray(col.values).view(np.int64)
+        st = col.offsets[rows]
+        ln = np.where(col.valid[rows], col.offsets[rows + 1] - st, -1)
+        spans.append((bits, st.tolist(), (st + np.maximum(ln, 0)).tolist()))
+        cols.append(ln)
+        if len(bits):
+            for at in (st, st + ln // 2, st + ln - 1):
+                cols.append(np.where(ln > 0, bits[np.clip(at, 0, len(bits) - 1)],
+                                     0))
+    order = np.lexsort(cols)
+    fp = np.stack(cols)[:, order]
+    new = np.ones(n, dtype=bool)
+    new[1:] = (fp[:, 1:] != fp[:, :-1]).any(axis=0)
+    rep = np.empty(n, dtype=np.int64)
+    rep[order] = order[np.flatnonzero(new)][np.cumsum(new) - 1]
+    cand = np.flatnonzero(rep != np.arange(n))
+    differs = [k for k, r in zip(cand.tolist(), rep[cand].tolist())
+               if any(bits[st[k]:end[k]].tobytes()
+                      != bits[st[r]:end[r]].tobytes()
+                      for bits, st, end in spans)]
+    rep[differs] = differs
+    first, inv = np.unique(rep, return_inverse=True)
+    return rows[first], inv
+
+
+# vertices per edge table in `points_in_row_polygons`: bounds the
+# table's memory when a batch holds many large polygons
+_VERTICES_PER_TABLE = 1 << 20
+
+
+def points_in_row_polygons(px, py, xs, ys, ring_offsets, rows) -> np.ndarray:
+    """Point k against the polygon in row `rows[k]` of three ragged
+    columns (the layout `polygon_edges` reads). Rows holding the same
+    polygon (a join repeats one shape across its candidate points)
+    share one entry of the edge table. One `points_in_polygons` call
+    per ~1M distinct vertices, so a batch of small polygons is one
+    call."""
+    rows = np.asarray(rows, dtype=np.int64)
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    reps, inv = _distinct_rows((xs, ys, ring_offsets), rows)
+    nv = np.where(xs.valid[reps], xs.offsets[reps + 1] - xs.offsets[reps], 0)
+    ends = np.cumsum(nv)
+    total = int(ends[-1]) if len(ends) else 0
+    cuts = np.searchsorted(ends, np.arange(_VERTICES_PER_TABLE, total,
+                                           _VERTICES_PER_TABLE), side="right")
+    bounds = np.unique(np.r_[0, cuts, len(reps)])
+    out = np.empty(len(rows), dtype=bool)
+    for s, t in zip(bounds[:-1], bounds[1:]):
+        sel = np.flatnonzero((inv >= s) & (inv < t))
+        out[sel] = points_in_polygons(px[sel], py[sel], inv[sel] - s,
+                                      polygon_edges(xs, ys, ring_offsets,
+                                                    reps[s:t]))
+    return out
 
 
 def points_in_polygon(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
@@ -94,23 +281,16 @@ def points_in_polygon(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
     AND a multipolygon's disjoint shells (parity 1 in either -> in),
     assuming shells don't mutually overlap (the reference's default,
     NtsSpatialContextFactory allowMultiOverlap=false :63-81). Any ring
-    boundary counts as inside (COVERS semantics).
+    boundary counts as inside (COVERS semantics). The one-polygon call
+    of `points_in_polygons`.
     """
     px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    if ring_offsets is None or len(ring_offsets) < 2:
-        inside, boundary = _ring_parity_and_boundary(px, py, xs, ys)
-        return inside | boundary
-    inside = np.zeros(px.shape, dtype=bool)
-    boundary = np.zeros(px.shape, dtype=bool)
-    for k in range(len(ring_offsets) - 1):
-        s, e = ring_offsets[k], ring_offsets[k + 1]
-        pin, pb = _ring_parity_and_boundary(px, py, xs[s:e], ys[s:e])
-        inside ^= pin
-        boundary |= pb
-    return inside | boundary
+    edges = polygon_edges(_one_list(np.asarray(xs, dtype=np.float64)),
+                          _one_list(np.asarray(ys, dtype=np.float64)),
+                          _one_list(ring_offsets))
+    return points_in_polygons(px.ravel(), np.ravel(py),
+                              np.zeros(px.size, dtype=np.int64),
+                              edges).reshape(px.shape)
 
 
 def relate_polygon_points(px, py, xs, ys, ring_offsets=None) -> np.ndarray:

@@ -15,9 +15,11 @@ table ships with the serialized task — the same bytes the broadcast
 was already paying — and each executor deserializes it once per task
 instead of once per candidate row.
 
-Dispatch inside the UDF mirrors `st_relate_shape_point`: rows
-group by shape id, each group runs the vectorized kernel for that
-shape's kind in one NumPy call.
+Dispatch inside the UDF mirrors `st_relate_shape_point`. The
+polygons of the table are flattened into one edge table when the UDF
+is built, and all polygon rows of a batch are one `points_in_polygons`
+call, each row against its own polygon. The other kinds group rows by
+shape id and run that shape's kernel once per group.
 """
 from __future__ import annotations
 
@@ -29,7 +31,7 @@ from pyspark.sql.types import ByteType
 
 from ..kernels import relation as REL
 from ..kernels import wkt as _wkt
-from ..shapes import decode
+from ..shapes import VertexLists, decode
 
 # guard: beyond this many total vertices the closure (shipped per task)
 # stops being "broadcast-small"; callers fall back to the struct path
@@ -60,14 +62,28 @@ def collect_shape_table(shapes: DataFrame, shape_id: str,
 def make_closure_refine(table: dict):
     """Arrow UDF (shape_id, px, py) -> relation code, with the shape
     table captured in the closure."""
-    from ..kernels.pip import points_in_polygon
+    from ..kernels.pip import points_in_polygons, polygon_edges
     from ..kernels.relate_circle import relate_circle_point
     from ..kernels.relate_line import linestring_contains_point
     from ..kernels.relate_rect import relate_rect_point
 
+    # the polygons ship as one edge table, the other kinds as records
+    poly_index, polys, others = {}, [], {}
+    for sid, rec in table.items():
+        if rec["kind"] in (_wkt.KIND_POLYGON, _wkt.KIND_MULTIPOLYGON):
+            poly_index[sid] = len(polys)
+            polys.append(rec)
+        else:
+            others[sid] = rec
+    edges = polygon_edges(*(
+        VertexLists.from_list([rec[f] for rec in polys], dtype)
+        for f, dtype in (("xs", np.float64), ("ys", np.float64),
+                         ("ring_offsets", np.int64))))
+
     def refine(ids: pa.Array, px: pa.Array, py: pa.Array) -> pa.Array:
         n = len(ids)
         out = np.full(n, REL.DISJOINT, dtype=np.int8)
+        poly = np.full(n, -1, dtype=np.int64)
         idv = ids.to_numpy(zero_copy_only=False)
         pxv = px.to_numpy(zero_copy_only=False)
         pyv = py.to_numpy(zero_copy_only=False)
@@ -77,7 +93,11 @@ def make_closure_refine(table: dict):
         bounds = np.r_[bounds, n]
         for b in range(len(bounds) - 1):
             rows = order[bounds[b]:bounds[b + 1]]
-            rec = table.get(sorted_ids[bounds[b]])
+            sid = sorted_ids[bounds[b]]
+            if sid in poly_index:
+                poly[rows] = poly_index[sid]
+                continue
+            rec = others.get(sid)
             if rec is None:
                 continue
             kind = rec["kind"]
@@ -94,15 +114,15 @@ def make_closure_refine(table: dict):
             elif kind == _wkt.KIND_POINT:
                 hit = (gx == rec["x"]) & (gy == rec["y"])
                 out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
-            elif kind in (_wkt.KIND_POLYGON, _wkt.KIND_MULTIPOLYGON):
-                hit = points_in_polygon(gx, gy, rec["xs"], rec["ys"],
-                                        rec["ring_offsets"])
-                out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
             elif kind == _wkt.KIND_LINESTRING:
                 rad = 0.0 if np.isnan(rec["radius"]) else float(rec["radius"])
                 hit = linestring_contains_point(rec["xs"], rec["ys"], rad,
                                                 gx, gy)
                 out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
+        rows = np.flatnonzero(poly >= 0)
+        if rows.size:
+            hit = points_in_polygons(pxv[rows], pyv[rows], poly[rows], edges)
+            out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
         return pa.array(out, type=pa.int8())
 
     return arrow_udf(refine, ByteType())

@@ -6,6 +6,7 @@ the same confs apply; parallelism comes from the master/cluster manager.
 """
 from __future__ import annotations
 
+import hashlib
 import os
 import zipfile
 
@@ -19,20 +20,27 @@ def package_zip() -> str:
     spatial4n_spark.session import package_zip; print(package_zip())')`.
     Locally, get_spark() calls addPyFile with it so pandas-UDF workers
     can import the kernels regardless of the driver's cwd.
+
+    The zip's name carries a hash of the package's sources, so two
+    checkouts with different code never share a zip, whatever their
+    file times say.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    out = os.path.join("/tmp", "spatial4n_spark_pkg.zip")
-    src_mtime = max(os.path.getmtime(os.path.join(dp, f))
-                    for dp, _, fs in os.walk(pkg_dir) for f in fs if f.endswith(".py"))
-    if not os.path.exists(out) or os.path.getmtime(out) < src_mtime:
-        tmp = out + ".tmp"
+    sources = sorted(os.path.join(dp, f) for dp, _, fs in os.walk(pkg_dir)
+                     for f in fs if f.endswith(".py"))
+    digest = hashlib.sha256()
+    for full in sources:
+        with open(full, "rb") as fh:
+            digest.update(os.path.relpath(full, root).encode() + b"\0"
+                          + fh.read() + b"\0")
+    out = os.path.join("/tmp",
+                       f"spatial4n_spark_pkg-{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(out):
+        tmp = f"{out}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as z:
-            for dp, _, fs in os.walk(pkg_dir):
-                for f in fs:
-                    if f.endswith(".py"):
-                        full = os.path.join(dp, f)
-                        z.write(full, os.path.relpath(full, root))
+            for full in sources:
+                z.write(full, os.path.relpath(full, root))
         os.replace(tmp, out)
     return out
 

@@ -66,6 +66,17 @@ class VertexLists:
                    arr.offsets.to_numpy(),
                    arr.is_valid().to_numpy(zero_copy_only=False))
 
+    @classmethod
+    def from_list(cls, seq, dtype) -> "VertexLists":
+        """Per-row sequences (None for a null row) -> VertexLists."""
+        lens = [0 if v is None else len(v) for v in seq]
+        offsets = np.zeros(len(seq) + 1, dtype=np.int64)
+        np.cumsum(lens, out=offsets[1:])
+        parts = [np.asarray(v, dtype=dtype) for v in seq if v is not None]
+        values = np.concatenate(parts) if parts else np.zeros(0, dtype)
+        return cls(values, offsets,
+                   np.array([v is not None for v in seq], dtype=bool))
+
     def __len__(self):
         return len(self.valid)
 
