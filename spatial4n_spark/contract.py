@@ -450,9 +450,8 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = supplier_circles(spark, sf_dir).selectExpr(
         "circle_id AS query_id", "cx AS qx", "cy AS qy")
     plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None, max_cover_cells=4096)
-    out = knn_join(pts, qs, k=5, radius_deg=60.0, plan=plan,
-                   query_id="query_id", tie_break="point_id",
-                   prefilter_radius=(6.0, 20.0))
+    out = knn_join(pts, qs, k=5, plan=plan, max_radius=60.0,
+                   query_id="query_id", tie_break="point_id")
     return out.select(F.col("query_id").alias("circle_id"),
                       F.col("point_id").alias("c_custkey"),
                       F.col("knn_rank").cast("int").alias("knn_rank"))
@@ -1480,15 +1479,17 @@ FROM m
 
 
 def q_knn_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT kNN via iterative cell-window expansion — no radius bound
-    (operators/knn_rings.py). Ranking: exact Vincenty + id tie-break,
-    identical to the relational oracle's full cross-join kNN."""
-    from .operators.knn_rings import knn_ring_join
+    """EXACT kNN — no radius bound (operators/joins.knn_join with
+    max_radius=None). Ranking: exact Vincenty + id tie-break, identical
+    to the relational oracle's full cross-join kNN."""
+    from .operators.joins import knn_join
+    from .plans.strategy import JoinPlan
     pts = customer_points(spark, sf_dir).withColumnRenamed("c_custkey", "point_id")
     qs = supplier_circles(spark, sf_dir).selectExpr(
         "circle_id AS query_id", "cx AS qx", "cy AS qy")
-    out = knn_ring_join(pts, qs, k=5, precision=2,
-                        query_id="query_id", tie_break="point_id")
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None, max_cover_cells=4096)
+    out = knn_join(pts, qs, k=5, plan=plan,
+                   query_id="query_id", tie_break="point_id")
     return out.select(F.col("query_id").alias("circle_id"),
                       F.col("point_id").alias("c_custkey"),
                       F.col("knn_rank").cast("int").alias("knn_rank"))

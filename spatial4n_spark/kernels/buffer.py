@@ -261,7 +261,7 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
     Raises ValueError on a degenerate ring or an erosion whose union
     does not stitch.
     """
-    from .pip import points_in_polygon
+    from .pip import points_in_polygons, ring_edges
 
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
@@ -305,15 +305,13 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
                 np.concatenate([r[1] for r in out_rings]),
                 off, False)
 
-    # even-odd nesting depth of each ring's first vertex vs the others
-    depth = []
-    for k, (rx, ry) in enumerate(rings):
-        c = 0
-        for j, (ox, oy) in enumerate(rings):
-            if j != k and points_in_polygon(
-                    np.array([rx[0]]), np.array([ry[0]]), ox, oy)[0]:
-                c += 1
-        depth.append(c)
+    # even-odd nesting depth of each ring's first vertex vs the others:
+    # one probe per ordered ring pair (k, j), ring j as its own polygon
+    k, j = np.nonzero(~np.eye(len(rings), dtype=bool))
+    inside = points_in_polygons(np.array([rx[0] for rx, _ in rings])[k],
+                                np.array([ry[0] for _, ry in rings])[k],
+                                j, ring_edges(rings))
+    depth = np.bincount(k[inside], minlength=len(rings)).tolist()
     shells = [r for r, dep in zip(rings, depth) if dep % 2 == 0]
     holes = [r for r, dep in zip(rings, depth) if dep % 2 == 1]
 

@@ -273,6 +273,19 @@ def points_in_row_polygons(px, py, xs, ys, ring_offsets, rows) -> np.ndarray:
     return out
 
 
+def ring_edges(rings) -> Edges:
+    """Edge table holding each (xs, ys) ring of `rings` as its own
+    polygon: polygon i is ring i."""
+    xs = [np.asarray(x, dtype=np.float64) for x, _ in rings]
+    ys = [np.asarray(y, dtype=np.float64) for _, y in rings]
+    off = np.r_[0, np.cumsum([len(x) for x in xs])]
+    valid = np.ones(len(rings), dtype=bool)
+    one_ring = _Lists(np.zeros(0, dtype=np.int64),
+                      np.zeros(len(rings) + 1, dtype=np.int64), ~valid)
+    return polygon_edges(_Lists(np.concatenate(xs), off, valid),
+                         _Lists(np.concatenate(ys), off, valid), one_ring)
+
+
 def points_in_polygon(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
     """PIP via the global even-odd rule over all rings.
 

@@ -468,11 +468,11 @@ def _polygon_invalid_reason(rings):
         sx = np.array([p[0] for p in shell])
         sy = np.array([p[1] for p in shell])
         ro = np.array([0, len(shell)])
-        for hole in rings[1:]:
-            hx = np.array([p[0] for p in hole])
-            hy = np.array([p[1] for p in hole])
-            if not points_in_polygon(hx, hy, sx, sy, ro).all():
-                return "hole outside shell"
+        # every vertex of every hole against the shell, in one call
+        hx = np.array([p[0] for hole in rings[1:] for p in hole])
+        hy = np.array([p[1] for hole in rings[1:] for p in hole])
+        if not points_in_polygon(hx, hy, sx, sy, ro).all():
+            return "hole outside shell"
     return None
 
 

@@ -15,6 +15,9 @@ Scale levers:
 """
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -366,6 +369,40 @@ def point_in_shape_join_adaptive(points: DataFrame, shapes: DataFrame,
     return _project_how(refined, points, how)
 
 
+def _circle_candidates(points: DataFrame, queries: DataFrame,
+                       radius: Column, plan: JoinPlan,
+                       point_x: str, point_y: str,
+                       query_x: str, query_y: str,
+                       prefilter: bool = True) -> DataFrame:
+    """(point, query) candidate pairs of per-query circles: circle bbox
+    (CalcBoxByDistFromPtDEG semantics, pole/dateline handled) -> cell
+    cover -> equi-join. `radius` (degrees) is read on the query side.
+
+    `prefilter`: drop pairs whose codegen haversine exceeds the radius
+    plus slack, so the Arrow stage downstream sees only near-ring
+    candidates. Java and NumPy libm may differ by ulps, so the exact
+    distance filter stays with the caller (see SF.haversine_deg_jvm).
+    """
+    qx, qy = F.col(query_x), F.col(query_y)
+    q = queries.withColumn("__box", SF.st_circle_bbox(qx, qy, radius))
+    # batch Arrow cover on the (small) query side — see shape_shape_join
+    q = (q.withColumn("__cells", SF.st_cover_codes(
+            F.col("__box.minx"), F.col("__box.maxx"),
+            F.col("__box.miny"), F.col("__box.maxy"), plan.precision))
+          .withColumn("cover_cell", F.explode_outer("__cells"))
+          .drop("__cells", "__box")
+          .where(F.col("cover_cell").isNotNull()))
+    pts = with_point_cell(points, point_x, point_y, plan.precision, codes=True)
+    if plan.broadcast_shapes:
+        q = F.broadcast(q)
+    joined = (pts.join(q, pts["cell_id"] == q["cover_cell"], "inner")
+                 .drop("cover_cell", "cell_id"))
+    if prefilter:
+        pre = SF.haversine_deg_jvm(F.col(point_x), F.col(point_y), qx, qy)
+        joined = joined.where(pre <= radius + F.lit(SF.JVM_PREFILTER_SLACK))
+    return joined
+
+
 def distance_join(points: DataFrame, queries: DataFrame, radius_deg: float | Column,
                   plan: JoinPlan,
                   point_x: str = "x", point_y: str = "y",
@@ -373,134 +410,184 @@ def distance_join(points: DataFrame, queries: DataFrame, radius_deg: float | Col
                   calculator: str = "haversine") -> DataFrame:
     """All (point, query) pairs within radius (degrees), exact.
 
-    Query circles expand to bboxes (CalcBoxByDistFromPtDEG semantics,
-    pole/dateline handled) -> cell cover -> equi-join -> exact distance
-    refine. Adds a `dist_deg` column.
+    Query circles expand to bboxes -> cell cover -> equi-join -> exact
+    distance refine. Returns the point and query columns plus
+    `dist_deg`.
     """
-    qx, qy = F.col(query_x), F.col(query_y)
-    box = SF.st_circle_bbox(qx, qy, radius_deg if isinstance(radius_deg, Column)
-                            else F.lit(float(radius_deg)))
-    q = queries.withColumn("__box", box)
-    # batch Arrow cover on the (small) query side — see shape_shape_join
-    q = (q.withColumn("__cells", SF.st_cover_codes(
-            F.col("__box.minx"), F.col("__box.maxx"),
-            F.col("__box.miny"), F.col("__box.maxy"), plan.precision))
-          .withColumn("cover_cell", F.explode_outer("__cells"))
-          .drop("__cells", "__box")
-          .where(F.col("cover_cell").isNotNull()))
-    pts = with_point_cell(points, point_x, point_y, plan.precision, codes=True)
-    if plan.broadcast_shapes:
-        q = F.broadcast(q)
-    joined = pts.join(q, pts["cell_id"] == q["cover_cell"], "inner").drop("cover_cell")
     rad = radius_deg if isinstance(radius_deg, Column) else F.lit(float(radius_deg))
-    if calculator == "haversine":
-        # codegen pre-filter with slack: kills far candidates before
-        # the Arrow stage; the exact kernel filter below remains the
-        # correctness surface (see SF.haversine_deg_jvm)
-        pre = SF.haversine_deg_jvm(F.col(point_x), F.col(point_y), qx, qy)
-        joined = joined.where(pre <= rad + F.lit(SF.JVM_PREFILTER_SLACK))
-    dist = SF.st_distance_deg(F.col(point_x), F.col(point_y), qx, qy, calculator)
+    joined = _circle_candidates(points, queries, rad, plan, point_x, point_y,
+                                query_x, query_y,
+                                prefilter=calculator == "haversine")
+    dist = SF.st_distance_deg(F.col(point_x), F.col(point_y),
+                              F.col(query_x), F.col(query_y), calculator)
     out = joined.withColumn("dist_deg", dist)
     return out.where(F.col("dist_deg") <= rad)
 
 
-def _knn_core(points: DataFrame, queries: DataFrame, k: int,
-              radius_deg: float, plan: JoinPlan,
-              point_x: str, point_y: str, query_x: str, query_y: str,
-              query_id: str, tie_break: str | None) -> DataFrame:
-    """One bounded-radius kNN pass: circle-bbox cover -> cell equi-join
-    -> ONE Arrow pass computing haversine (filter) + Vincenty (exact
-    re-rank) -> row_number <= k."""
+# precision of the kNN count grid: 1024 x 1024 cells of 0.35 x 0.18
+# degrees. On the sf0.1 contract tables (15,000 points, 1,000 queries,
+# k = 5, precision-2 join) it gives 54k cover-join candidates, against
+# 75k when counting at precision 3 and 179k at the join's own 2.
+_COUNT_PRECISION = 4
+
+
+def _window_rings(batches, k: int, lon_n: int, lat_n: int):
+    """mapInArrow body: for each query cell, the smallest ring r whose
+    window of cells — lon indices li-r..li+r (wrapping), lat indices
+    ti-r..ti+r (clamped at the poles) — holds >= k points.
+
+    Input rows are (__li, __ti, __n): a cell's point count, or a null
+    count for a cell holding a query. Output rows are (__li, __ti, __r)
+    per query cell. Window sums read a 2-D cumulative sum of the dense
+    count grid; the count grows with r, so r is found by a binary
+    search, all query cells at once. A cell whose window never reaches
+    k points (fewer than k points in total) gets the r whose window is
+    the whole grid.
+    """
+    import pyarrow as pa
+    batches = list(batches)
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    li = t.column("__li").to_numpy()
+    ti = t.column("__ti").to_numpy()
+    cnt = t.column("__n").fill_null(-1).to_numpy()
+    is_q = cnt < 0
+    # sat[i, j]: points in lat rows < i and lon columns < j
+    grid = np.zeros((lat_n + 1, lon_n + 1), dtype=np.int64)
+    grid[ti[~is_q] + 1, li[~is_q] + 1] = cnt[~is_q]
+    sat = grid.cumsum(axis=0).cumsum(axis=1)
+    qt, ql = ti[is_q], li[is_q]
+
+    def rect(a, b, c0, c1):  # points in lat rows a..b, lon columns c0..c1
+        return sat[b + 1, c1 + 1] - sat[a, c1 + 1] - sat[b + 1, c0] + sat[a, c0]
+
+    def window(r):
+        a = np.maximum(qt - r, 0)
+        b = np.minimum(qt + r, lat_n - 1)
+        full = 2 * r + 1 >= lon_n
+        c0 = np.where(full, 0, np.mod(ql - r, lon_n))
+        c1 = np.where(full, lon_n - 1, np.mod(ql + r, lon_n))
+        wrap = c0 > c1
+        return np.where(wrap,
+                        rect(a, b, c0, np.full_like(c0, lon_n - 1))
+                        + rect(a, b, np.zeros_like(c1), c1),
+                        rect(a, b, c0, c1))
+
+    lo = np.zeros(len(qt), dtype=np.int64)
+    hi = np.full(len(qt), max(lon_n // 2, lat_n - 1), dtype=np.int64)
+    while (lo < hi).any():
+        mid = (lo + hi) // 2
+        ok = window(mid) >= k
+        hi = np.where(ok, mid, hi)
+        lo = np.where(ok, lo, mid + 1)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ql), pa.array(qt), pa.array(lo)],
+        names=["__li", "__ti", "__r"])
+
+
+def _certified_radius(qx: Column, qy: Column, li: Column, ti: Column,
+                      r: Column, lon_n: int, lat_n: int) -> Column:
+    """Great-circle distance (degrees) from q to the farthest point of
+    its ring-r window's closed lat/lon box: every point counted in the
+    window lies within it.
+
+    For fixed latitude φ the distance grows with |Δλ| up to 180°, so the
+    farthest points sit at the box's largest wrapped |Δλ| (180° when the
+    box reaches q's antimeridian or wraps every longitude). Along that
+    meridian cos d = A·sin φ + B·cos φ (A = sin φq, B = cos φq·cos Δλ)
+    is one sinusoid; on the box's latitude interval its minimum lies at
+    an end, or at the trough φ = atan2(-A, -B) when B < 0 and the trough
+    falls inside, where cos d = -sqrt(A² + B²). Near the antipode acos
+    loses digits, so there the bound is the whole sphere (180°); else a
+    1e-9° margin covers the rounding of the bound itself.
+    """
+    w, h = 360.0 / lon_n, 180.0 / lat_n
+    lam_a = (li - r).cast("double") * w - 180.0
+    lam_b = (li + r + 1).cast("double") * w - 180.0
+    dlon = F.least(F.lit(180.0), F.greatest(qx - lam_a, lam_b - qx))
+    phi_a = F.radians(F.greatest(F.lit(-90.0),
+                                 (ti - r).cast("double") * h - 90.0))
+    phi_b = F.radians(F.least(F.lit(90.0),
+                              (ti + r + 1).cast("double") * h - 90.0))
+    a = F.sin(F.radians(qy))
+    b = F.cos(F.radians(qy)) * F.cos(F.radians(dlon))
+    trough = F.atan2(-a, -b)
+    cos_min = F.least(
+        a * F.sin(phi_a) + b * F.cos(phi_a),
+        a * F.sin(phi_b) + b * F.cos(phi_b),
+        F.when((b < 0) & (trough >= phi_a) & (trough <= phi_b),
+               -F.sqrt(a * a + b * b)).otherwise(F.lit(1.0)))
+    return (F.when(cos_min <= -0.999, F.lit(180.0))
+             .otherwise(F.degrees(F.acos(F.least(F.lit(1.0), cos_min)))
+                        + 1e-9))
+
+
+def knn_join(points: DataFrame, queries: DataFrame, k: int, plan: JoinPlan,
+             max_radius: float | None = None,
+             point_x: str = "x", point_y: str = "y",
+             query_x: str = "qx", query_y: str = "qy",
+             query_id: str = "query_id",
+             tie_break: str | None = None) -> DataFrame:
+    """The k nearest points of each query, ranked by exact Vincenty
+    distance (`dist_exact`, degrees) and then `tie_break`; `knn_rank`
+    numbers them 1..k. Returns the point columns, the query columns,
+    `dist_exact` and `knn_rank`.
+
+    `max_radius=None` is exact for any data: every query gets its k
+    nearest points (all of them when there are fewer than k).
+    `max_radius` (degrees) keeps only points within that haversine
+    distance, so a query with fewer than k of them gets fewer rows.
+
+    One lazy plan; building it starts no Spark job.
+    1. Points are counted per cell of a fixed 2^20-cell grid
+       (geohash precision 4, `_COUNT_PRECISION`).
+    2. Each query cell gets the smallest ring r whose (2r+1)² cell
+       window holds >= k points (one `mapInArrow` over the counts,
+       `_window_rings`), joined back to the queries by cell.
+    3. Each query's certified radius R_q is the distance to the farthest
+       point of that window's box (`_certified_radius`): the window
+       holds k points within R_q, so the k nearest all lie within R_q.
+    4. One cover join at radius min(R_q, max_radius), a codegen
+       haversine prefilter, one Arrow pass for haversine and Vincenty,
+       then row_number() <= k.
+    """
+    cp = _COUNT_PRECISION
+    lon_n = 1 << ((cp * 5 + 1) // 2)
+    lat_n = 1 << (cp * 5 // 2)
+    li = SF.st_axis_idx_col(f"`{query_x}`", "lon", cp).alias("__li")
+    ti = SF.st_axis_idx_col(f"`{query_y}`", "lat", cp).alias("__ti")
+    counts = (points.select(
+                  SF.st_axis_idx_col(f"`{point_x}`", "lon", cp).alias("__li"),
+                  SF.st_axis_idx_col(f"`{point_y}`", "lat", cp).alias("__ti"))
+                    .groupBy("__li", "__ti").agg(F.count("*").alias("__n")))
+    query_cells = (queries.select(li, ti).distinct()
+                          .withColumn("__n", F.lit(None).cast("long")))
+    rings = (counts.unionByName(query_cells).coalesce(1)
+                   .mapInArrow(partial(_window_rings, k=k, lon_n=lon_n,
+                                       lat_n=lat_n),
+                               "__li long, __ti long, __r long"))
     qx, qy = F.col(query_x), F.col(query_y)
-    q = queries.withColumn("__box", SF.st_circle_bbox(qx, qy, F.lit(float(radius_deg))))
-    # batch Arrow cover on the (small) query side — see shape_shape_join
-    q = (q.withColumn("__cells", SF.st_cover_codes(
-            F.col("__box.minx"), F.col("__box.maxx"),
-            F.col("__box.miny"), F.col("__box.maxy"), plan.precision))
-          .withColumn("cover_cell", F.explode_outer("__cells"))
-          .drop("__cells", "__box")
-          .where(F.col("cover_cell").isNotNull()))
-    pts = with_point_cell(points, point_x, point_y, plan.precision, codes=True)
-    if plan.broadcast_shapes:
-        q = F.broadcast(q)
-    joined = pts.join(q, pts["cell_id"] == q["cover_cell"], "inner").drop("cover_cell")
-    # codegen haversine pre-filter (slack covers libm drift): the Arrow
-    # stage below then sees only near-ring candidates; the kernel
-    # haversine <= r remains the exact ring test
-    pre = SF.haversine_deg_jvm(F.col(point_x), F.col(point_y), qx, qy)
-    joined = joined.where(pre <= float(radius_deg) + SF.JVM_PREFILTER_SLACK)
+    rad = _certified_radius(qx, qy, F.col("__li"), F.col("__ti"),
+                            F.col("__r"), lon_n, lat_n)
+    if max_radius is not None:
+        rad = F.least(rad, F.lit(float(max_radius)))
+    q = (queries.withColumn("__li", li).withColumn("__ti", ti)
+                .join(F.broadcast(rings), ["__li", "__ti"])
+                .select(*queries.columns, rad.alias("__rad")))
+    cand = _circle_candidates(points, q, F.col("__rad"), plan,
+                              point_x, point_y, query_x, query_y)
     d = SF.st_hav_vin(F.col(point_x), F.col(point_y), qx, qy)
-    cand = (joined.withColumn("__d", d)
-                  .where(F.col("__d.hav") <= float(radius_deg))
-                  .withColumn("dist_exact", F.col("__d.vin"))
-                  .drop("__d"))
+    cand = cand.withColumn("__d", d)
+    if max_radius is not None:
+        cand = cand.where(F.col("__d.hav") <= float(max_radius))
+    cand = cand.withColumn("dist_exact", F.col("__d.vin")).drop("__d", "__rad")
     order = [F.col("dist_exact").asc()]
     if tie_break:
         order.append(F.col(tie_break).asc())
     w = Window.partitionBy(query_id).orderBy(*order)
     return (cand.withColumn("knn_rank", F.row_number().over(w))
                 .where(F.col("knn_rank") <= k))
-
-
-def knn_join(points: DataFrame, queries: DataFrame, k: int, radius_deg: float,
-             plan: JoinPlan,
-             point_x: str = "x", point_y: str = "y",
-             query_x: str = "qx", query_y: str = "qy",
-             query_id: str = "query_id",
-             rerank_calculator: str = "vincentySphere",
-             tie_break: str | None = None,
-             prefilter_radius: float | None = None) -> DataFrame:
-    """Bounded-radius kNN: candidates within `radius_deg` via the cell
-    cover, haversine pre-rank, exact Vincenty re-rank (reference
-    pattern: cheap pre-rank then exact, CartesianDistCalc.cs:36-49),
-    row_number() <= k per query.
-
-    `prefilter_radius`: adaptive escalation — a float or an ascending
-    sequence of radii. Each rung runs the core join at that radius; a
-    query whose k-th candidate lies within the rung is provably
-    identical to its radius_deg answer (any closer point is also
-    within the rung), so only unresolved queries climb to the next,
-    wider cover. Typically >10x fewer candidate pairs than a single
-    wide pass, and the final rung runs over a tiny straggler set.
-
-    Exact when every query has >= k neighbors within radius (else the
-    tail is truncated — callers size the radius; the radius-free exact
-    variant is operators/knn_rings.knn_ring_join).
-    """
-    if prefilter_radius is None:
-        return _knn_core(points, queries, k, radius_deg, plan,
-                         point_x, point_y, query_x, query_y, query_id,
-                         tie_break)
-    rungs = ([prefilter_radius] if isinstance(prefilter_radius, (int, float))
-             else list(prefilter_radius))
-    rungs = sorted(r for r in rungs if r < radius_deg)
-    parts = []
-    live = queries
-    from ..staging import stage
-    for r in rungs:
-        # eager materialization: run the rung once, truncate lineage.
-        # In-memory this is localCheckpoint (blocks released by the
-        # ContextCleaner when the plan is GC'd); with
-        # spark.spatial4n.stageDir set it routes through parquet so a
-        # huge query side never pins rung results in executor memory.
-        near = stage(_knn_core(points, live, k, r, plan,
-                               point_x, point_y, query_x, query_y,
-                               query_id, tie_break), "knn_rung")
-        solved = (near.groupBy(query_id).agg(F.count("*").alias("__cnt"))
-                      .where(F.col("__cnt") >= k).select(query_id))
-        parts.append(near.join(F.broadcast(solved), query_id, "leftsemi"))
-        live = live.join(F.broadcast(solved), query_id, "leftanti")
-        if live.isEmpty():
-            live = None
-            break
-    if live is not None:
-        parts.append(_knn_core(points, live, k, radius_deg, plan,
-                               point_x, point_y, query_x, query_y, query_id,
-                               tie_break))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def shape_shape_join(left: DataFrame, right: DataFrame, precision: int,

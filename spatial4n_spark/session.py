@@ -49,8 +49,8 @@ def clear_cached_state(spark: SparkSession) -> int:
     """Unpersist every persistent RDD (localCheckpoint blocks included)
     and clear the table cache. Returns the number of RDDs released.
 
-    Why this exists: iterative operators (knn escalation rungs, CC
-    label rounds, the multimodal decode materialization) use eager
+    Why this exists: iterative operators (CC label rounds, LSH
+    band tables, the multimodal decode materialization) use eager
     ``localCheckpoint`` — correct within a query, but the blocks stay
     pinned in the block manager until the RDD object is GC'd on the
     driver. In a long session running many queries back-to-back that

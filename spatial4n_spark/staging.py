@@ -2,9 +2,9 @@
 
 Every iterative operator in the engine needs a ROUND BARRIER: execute
 the plan so far, truncate lineage, and hand back a re-readable frame
-(kNN escalation rungs, LSH band tables, connected-component rounds,
-the multimodal decode fan-out). The in-memory form is an eager
-``localCheckpoint()`` — fine per-query, but the blocks pin
+(LSH band tables, connected-component rounds, the multimodal decode
+fan-out). The in-memory form is an eager ``localCheckpoint()`` — fine
+per-query, but the blocks pin
 block-manager memory until driver GC, which is exactly the residue
 that degraded long bench sessions (VERDICT r4 "What's wrong" #1), and
 at 1e9-row scale a round's checkpoint may simply not fit.

@@ -1,48 +1,13 @@
-"""Ring-expansion kNN internals + the salted shuffle-join path."""
+"""Exact kNN (no radius bound) vs brute force + the salted shuffle-join path."""
 import dataclasses
 
-import pytest
 from pyspark.sql import functions as F
 
 from spatial4n_spark import contract
-from spatial4n_spark.operators.joins import point_in_shape_join
-from spatial4n_spark.operators.knn_rings import (d_safe_value, knn_ring_join,
-                                                 _window_cells)
-from spatial4n_spark.plans.strategy import plan_point_shape_join
+from spatial4n_spark.operators.joins import knn_join, point_in_shape_join
+from spatial4n_spark.plans.strategy import JoinPlan, plan_point_shape_join
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_window_cells_counts_and_wrap(spark):
-    # query near the dateline: window must wrap lon without duplicates
-    q = spark.createDataFrame([(1, 179.9, 10.0), (2, 0.0, 89.9)],
-                              "query_id int, qx double, qy double")
-    cells = _window_cells(q, "qx", "qy", precision=2, r=1)
-    counts = {r.query_id: r.n for r in
-              cells.groupBy("query_id").agg(F.count("*").alias("n")).collect()}
-    assert counts[1] == 9          # full 3x3 window, wrapped at dateline
-    assert counts[2] == 6          # top row clamped at the pole -> 3x2
-    # all codes distinct per query
-    assert cells.count() == cells.dropDuplicates(["query_id", "cell_id"]).count()
-
-
-def test_d_safe_bound_behavior():
-    # equatorial: bound grows with the window
-    prev = 0.0
-    for r in (1, 2, 4, 8):
-        d = d_safe_value(0.0, r, precision=2)
-        assert d >= prev
-        prev = d
-    # polar regime: once the window can touch the pole, the longitude
-    # term legitimately collapses toward 0 (all meridians converge) —
-    # termination then comes from the full-lon / full-grid rules
-    assert d_safe_value(85.0, 2, 2) < d_safe_value(0.0, 2, 2)
-    assert d_safe_value(85.0, 2, 2) >= 0.0
-    # full-lon wrap switches to the latitude-only bound
-    lon_n = 32  # precision 2 -> 5 lon bits
-    r_full = (lon_n - 1) // 2 + 1
-    from spatial4n_spark.kernels.geohash import HASH_LEN_TO_LAT_HEIGHT
-    assert d_safe_value(85.0, r_full, 2) == r_full * HASH_LEN_TO_LAT_HEIGHT[2]
 
 
 def test_knn_rings_matches_brute_force(spark):
@@ -50,8 +15,10 @@ def test_knn_rings_matches_brute_force(spark):
         .withColumnRenamed("c_custkey", "point_id")
     qs = contract.supplier_circles(spark, SF_DIR).selectExpr(
         "circle_id AS query_id", "cx AS qx", "cy AS qy")
-    got = knn_ring_join(pts, qs, k=3, precision=2,
-                        query_id="query_id", tie_break="point_id")
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
+                    max_cover_cells=4096)
+    got = knn_join(pts, qs, k=3, plan=plan,
+                   query_id="query_id", tie_break="point_id")
     got_set = {(r.query_id, r.point_id, r.knn_rank) for r in got.collect()}
 
     from spatial4n_spark import functions as SFN
@@ -109,26 +76,3 @@ def test_hot_cell_ratio_drives_salting(spark):
     p2 = plan_point_shape_join(10**9, 10**6, 1.0, 1.0,
                                hot_cell_ratio=r_uni)
     assert p2.salt is None
-
-
-def test_knn_rings_parquet_stage_equals_in_memory(spark, tmp_path):
-    """stage_dir: parquet-staged ring rounds == localCheckpoint rounds."""
-    import os
-
-    from spatial4n_spark.operators.knn_rings import knn_ring_join
-
-    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
-    pts = (spark.read.parquet(os.path.join(sf, "customer.parquet"))
-           .selectExpr("c_custkey AS pid",
-                       "(((c_custkey * 9973) % 72000) / 200.0 - 180.0) AS x",
-                       "(((c_custkey * 9967) % 36000) / 200.0 - 90.0) AS y"))
-    qs = (spark.read.parquet(os.path.join(sf, "nation.parquet"))
-          .selectExpr("n_nationkey AS query_id",
-                      "(((n_nationkey * 131) % 360) - 180.0) AS qx",
-                      "(((n_nationkey * 67) % 180) - 90.0) AS qy"))
-    a = knn_ring_join(pts, qs, k=3, tie_break="pid")
-    b = knn_ring_join(pts, qs, k=3, tie_break="pid",
-                      stage_dir=str(tmp_path / "knn_stage"))
-    ka = {(r["query_id"], r["knn_rank"], r["pid"]) for r in a.collect()}
-    kb = {(r["query_id"], r["knn_rank"], r["pid"]) for r in b.collect()}
-    assert ka == kb and len(ka) > 0

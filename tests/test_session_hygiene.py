@@ -1,6 +1,6 @@
 """clear_cached_state: sweeps localCheckpoint blocks + table cache.
 
-Why: iterative operators (knn rungs, CC rounds, multimodal decode)
+Why: iterative operators (CC rounds, multimodal decode)
 eager-localCheckpoint intermediate frames; the blocks stay pinned in
 the block manager until driver GC. In a long bench session that
 residue degraded later Python-worker queries 2-8x (VERDICT r04 #1).

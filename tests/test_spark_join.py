@@ -18,6 +18,12 @@ from spatial4n_spark.plans.strategy import JoinPlan, plan_point_shape_join
 from spatial4n_spark.sources.docs import extract_geo_spans, generate_docs
 
 
+def _from_parquet(spark, path, pdf):
+    """`pdf` as a DataFrame read back from parquet."""
+    spark.createDataFrame(pdf).write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
 @pytest.fixture(scope="module")
 def points_df(spark):
     rng = np.random.RandomState(11)
@@ -138,12 +144,18 @@ def test_docs_pipeline_pip_join(spark):
     assert counts.get(1, 0) > 0
 
 
-def test_distance_and_knn_join(spark, points_df):
-    sdf, pdf = points_df
+def test_distance_and_knn_join(strict_codegen, tmp_path, points_df):
+    """Inputs read back from parquet: over a createDataFrame(pandas)
+    input (a LocalTableScan) Spark evaluates the haversine prefilter on
+    the driver without whole-stage codegen, so a compile failure of it
+    could not show."""
+    spark = strict_codegen
+    _, pdf = points_df
     queries = pd.DataFrame({"query_id": [0, 1, 2],
                             "qx": [0.0, 100.0, -170.0],
                             "qy": [0.0, 45.0, -60.0]})
-    qdf = spark.createDataFrame(queries)
+    sdf = _from_parquet(spark, tmp_path / "points", pdf)
+    qdf = _from_parquet(spark, tmp_path / "queries", queries)
     plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None, max_cover_cells=4096)
     R = 25.0
     got = (distance_join(sdf, qdf, R, plan).select("query_id", "point_id", "dist_deg")
@@ -158,7 +170,7 @@ def test_distance_and_knn_join(spark, points_df):
         assert got_ids == want_ids, q["query_id"]
 
     k = 7
-    knn = knn_join(sdf, qdf, k, 40.0, plan, query_id="query_id",
+    knn = knn_join(sdf, qdf, k, plan, max_radius=40.0, query_id="query_id",
                    tie_break="point_id").toPandas()
     from spatial4n_spark.kernels.distance import geo_distance_deg as gd
     for _, q in queries.iterrows():
@@ -171,13 +183,10 @@ def test_distance_and_knn_join(spark, points_df):
 
 
 def test_knn_ladder_equals_single_pass(spark):
-    """The multi-rung escalation ladder must return EXACTLY the
-    single-pass bounded-radius answer (rung-resolved queries are
-    provably identical; stragglers fall through)."""
-    import numpy as np
-
-    from spatial4n_spark.operators.joins import knn_join
-    from spatial4n_spark.plans.strategy import JoinPlan
+    """The one kNN plan with a radius must return EXACTLY the single
+    wide pass: every pair within the radius, ranked by Vincenty and the
+    tie-break."""
+    from pyspark.sql import Window
     rng = np.random.default_rng(23)
     pts = spark.createDataFrame(
         [(int(i), float(x), float(y)) for i, (x, y) in enumerate(
@@ -189,13 +198,14 @@ def test_knn_ladder_equals_single_pass(spark):
         ["query_id", "qx", "qy"])
     plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
                     max_cover_cells=4096)
-    kw = dict(k=3, radius_deg=60.0, plan=plan, query_id="query_id",
-              tie_break="point_id")
-    direct = {(r.query_id, r.point_id, r.knn_rank) for r in
-              knn_join(pts, qs, **kw).collect()}
-    ladder = {(r.query_id, r.point_id, r.knn_rank) for r in
-              knn_join(pts, qs, prefilter_radius=(4.0, 15.0), **kw).collect()}
-    single_rung = {(r.query_id, r.point_id, r.knn_rank) for r in
-                   knn_join(pts, qs, prefilter_radius=8.0, **kw).collect()}
-    assert ladder == direct
-    assert single_rung == direct
+    one_plan = {(r.query_id, r.point_id, r.knn_rank) for r in
+                knn_join(pts, qs, 3, plan, max_radius=60.0,
+                         query_id="query_id", tie_break="point_id").collect()}
+    w = Window.partitionBy("query_id").orderBy("dv", "point_id")
+    wide = (distance_join(pts, qs, 60.0, plan)
+            .withColumn("dv", SF.st_distance_deg(
+                F.col("x"), F.col("y"), F.col("qx"), F.col("qy"),
+                "vincentySphere"))
+            .withColumn("rk", F.row_number().over(w)).where("rk <= 3"))
+    single_pass = {(r.query_id, r.point_id, r.rk) for r in wide.collect()}
+    assert one_plan == single_pass and len(one_plan) == 90

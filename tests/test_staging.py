@@ -89,32 +89,6 @@ def test_simhash_pairs_identical_both_paths(spark, stage_conf, tmp_path):
     assert with_stage == in_memory and len(with_stage) > 0
 
 
-def test_knn_rungs_identical_both_paths(spark, stage_conf, tmp_path):
-    from spatial4n_spark.operators.joins import knn_join
-    from spatial4n_spark.plans.strategy import plan_point_shape_join
-    pts = spark.createDataFrame(
-        [(i, (i * 7) % 40 - 20.0, (i * 13) % 30 - 15.0) for i in range(200)],
-        "pid long, x double, y double")
-    qs = spark.createDataFrame(
-        [(q, q * 3.0 - 10.0, q * 2.0 - 5.0) for q in range(8)],
-        "query_id long, qx double, qy double")
-    plan = plan_point_shape_join(200, 8, 34.0, 18.0)
-
-    def run():
-        return _rowset(knn_join(pts, qs, k=3, radius_deg=25.0, plan=plan,
-                                query_x="qx", query_y="qy",
-                                prefilter_radius=[2.0, 8.0]))
-    with_stage = run()
-    spark.conf.unset(STAGE_CONF)
-    try:
-        in_memory = run()
-    finally:
-        spark.conf.set(STAGE_CONF, str(tmp_path / "stage"))
-    assert with_stage == in_memory and len(with_stage) > 0
-    assert any(p.startswith("knn_rung-")
-               for p in os.listdir(stage_conf))
-
-
 def test_components_session_default(spark, stage_conf):
     from spatial4n_spark.operators.components import connected_components
     edges = spark.createDataFrame(
@@ -131,7 +105,6 @@ def test_operator_rounds_distinct_per_run(spark, stage_conf):
     to distinct paths: the first run's result still reads its own
     rounds after the second run wrote its rounds."""
     from spatial4n_spark.operators.components import connected_components
-    from spatial4n_spark.operators.knn_rings import knn_ring_join
     g1 = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     g2 = spark.createDataFrame([(7, 8), (8, 9), (9, 10)],
                                "src long, dst long")
@@ -141,23 +114,3 @@ def test_operator_rounds_distinct_per_run(spark, stage_conf):
     assert set(os.listdir(stage_conf)) - before
     assert _rowset(cc1) == [(1, 1), (2, 1), (3, 1)]
     assert _rowset(cc2) == [(7, 7), (8, 7), (9, 7), (10, 7)]
-
-    pts = spark.createDataFrame(
-        [(i, (i * 7) % 40 - 20.0, (i * 13) % 30 - 15.0) for i in range(200)],
-        "pid long, x double, y double")
-
-    def queries(offset):
-        return spark.createDataFrame(
-            [(q, q * 3.0 - 10.0 + offset, q * 2.0 - 5.0) for q in range(8)],
-            "query_id long, qx double, qy double")
-
-    def run(offset):
-        return knn_ring_join(pts, queries(offset), k=3,
-                             query_x="qx", query_y="qy")
-    k1 = run(0.0)
-    k1_rows = _rowset(k1)
-    before = set(os.listdir(stage_conf))
-    assert _rowset(run(5.0)) != k1_rows
-    assert any(p.startswith("knn_") for p in set(os.listdir(stage_conf))
-               - before)
-    assert _rowset(k1) == k1_rows
