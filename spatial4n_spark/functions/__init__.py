@@ -73,7 +73,7 @@ def _parsed(cols: dict) -> pa.StructArray:
 
 @arrow_udf(SHAPE_SCHEMA)
 def _st_from_wkt_default(texts: pa.Array) -> pa.Array:
-    return _parsed(_wkt.parse_wkt_columns(texts.to_pandas()))
+    return _parsed(_wkt.parse_wkt_columns(texts))
 
 
 _WKT_UDF_CACHE = {("width180", "error", True): _st_from_wkt_default}
@@ -133,13 +133,13 @@ def st_from_wkt(texts, dateline_rule: str = "width180",
             @arrow_udf(SHAPE_SCHEMA)
             def _configured(t: pa.Array) -> pa.Array:
                 return _parsed(_wkt.parse_ntsreader_columns(
-                    t.to_pandas(), geo, dateline_rule, validation_rule,
+                    t, geo, dateline_rule, validation_rule,
                     snap, amo, norm_wrap_longitude=nwl))
         else:
             @arrow_udf(SHAPE_SCHEMA)
             def _configured(t: pa.Array) -> pa.Array:
                 return _parsed(_wkt.parse_wkt_columns(
-                    t.to_pandas(), geo, dateline_rule, validation_rule,
+                    t, geo, dateline_rule, validation_rule,
                     snap, amo))
 
         udf = _WKT_UDF_CACHE[key] = _configured
@@ -371,7 +371,7 @@ def st_relation_name(rel_col):
 def st_from_legacy(texts: pa.Array) -> pa.Array:
     """Legacy text format -> shape struct ("X Y", "minX minY maxX maxY",
     "Circle(x y d=r)"; LegacyShapeReadWriterFormat.cs:46-96)."""
-    return _parsed(_wkt.parse_legacy_columns(texts.to_pandas()))
+    return _parsed(_wkt.parse_column(texts, _wkt.parse_legacy))
 
 
 @pandas_udf(DoubleType())
@@ -781,7 +781,7 @@ def st_relate_polygon_rect(polygon: pa.Array, rect: pa.Array) -> pa.Array:
 def st_from_latlon(texts: pa.Array) -> pa.Array:
     """'lat, lon' string -> point shape struct (ParseUtils.cs:162-191);
     range-invalid rows get an error instead of a shape."""
-    return encode_records(*_wkt.parse_latlon_batch(texts.to_pylist()))
+    return _parsed(_wkt.parse_column(texts, _wkt.parse_latlon))
 
 
 @arrow_udf(SHAPE_SCHEMA)
@@ -1394,16 +1394,7 @@ def st_to_binary(shape: pa.Array) -> pa.Array:
 def st_from_binary(blobs: pa.Array) -> pa.Array:
     """Reference-layout bytes -> shape struct."""
     from ..kernels import binary as _bin
-    recs: list = []
-    errs: list = []
-    for b in blobs.to_pylist():
-        try:
-            recs.append(_bin.read_shape(bytes(b)))
-            errs.append(None)
-        except Exception as e:  # noqa: BLE001
-            recs.append(None)
-            errs.append(str(e)[:200])
-    return encode_records(recs, errs)
+    return _parsed(_wkt.parse_column(blobs, _bin.read_shape))
 
 
 @arrow_udf(VERTEX_SCHEMA)

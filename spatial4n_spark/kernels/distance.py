@@ -22,6 +22,9 @@ def haversine_rad(lat1, lon1, lat2, lon2):
     hx = np.sin((lon1 - lon2) * 0.5)
     hy = np.sin((lat1 - lat2) * 0.5)
     h = hy * hy + np.cos(lat1) * np.cos(lat2) * hx * hx
+    # near the antipode h rounds a hair above 1 and sqrt(1 - h) would be
+    # NaN; clamp as haversine_deg_jvm does (values in [0, 1] unchanged)
+    h = np.clip(h, 0.0, 1.0)
     d = 2.0 * np.arctan2(np.sqrt(h), np.sqrt(1.0 - h))
     same = (lat1 == lat2) & (lon1 == lon2)
     return np.where(same, 0.0, d)

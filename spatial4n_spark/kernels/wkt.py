@@ -14,19 +14,24 @@ Output is a flat dict per shape (the Spark shape-struct):
   aware); xs,ys vertex arrays; ring_offsets (polygon rings / multi parts).
 Collections return kind=KIND_COLLECTION with `members` (list of dicts).
 
-Batch entry points: `parse_wkt_batch` (records + errors) and
-`parse_wkt_columns` (the shape-struct columns the Arrow stages emit).
-Both take the dominant POINT case with one vectorized regex extract;
-`parse_wkt_columns` also takes ENVELOPE and BUFFER(POINT) that way,
-and checks single-ring POLYGONs in one batched pass per vertex count
-(closure, range, rect demotion, simplicity). The tokenizer handles
-the rest per string, including every row a batched check turns away
-(errors -> None + reason, no exceptions, mirroring engine kernels'
-no-throw rule).
+Batch parse: `parse_column` turns one Arrow text or bytes column into
+the shape-struct field columns for every text/bytes -> shape UDF (WKT,
+alt-reader WKT, legacy, lat/lon, binary). Vectorized fast paths take
+what they can of the rows still to do: POINT, ENVELOPE and
+BUFFER(POINT) by one RE2 extract each, single-ring POLYGONs in one
+batched check per vertex count (closure, range, rect demotion,
+simplicity), and the alt reader's POINT with its bounds errors and lon
+wrap. The per-string parser handles the rest, including every row a
+fast path turns away (errors -> reason, no exceptions, mirroring
+engine kernels' no-throw rule). Vertex fields come out as flat
+`shapes.VertexLists`, no per-row Python list.
 """
 from __future__ import annotations
 
 import re
+import warnings
+from functools import partial
+from itertools import chain
 from typing import Optional
 
 import numpy as np
@@ -46,45 +51,19 @@ KIND_MULTIPOLYGON = 8
 KIND_COLLECTION = 9
 
 _NUM_RE = r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?"
-_POINT_FAST = re.compile(
-    rf"^\s*POINT\s*\(\s*({_NUM_RE})\s+({_NUM_RE})(?:\s+{_NUM_RE})*\s*\)\s*$",
-    re.IGNORECASE)
-_ENVELOPE_FAST = re.compile(
-    rf"^\s*ENVELOPE\s*\(\s*({_NUM_RE})\s*,\s*({_NUM_RE})\s*,\s*({_NUM_RE})\s*,\s*({_NUM_RE})\s*\)\s*$",
-    re.IGNORECASE)
-_BUFFER_POINT_FAST = re.compile(
-    rf"^\s*BUFFER\s*\(\s*POINT\s*\(\s*({_NUM_RE})\s+({_NUM_RE})\s*\)\s*,\s*({_NUM_RE})\s*\)\s*$",
-    re.IGNORECASE)
 # single-ring polygon, plain "x y, x y, ..." coordinates
 _POLYGON_FAST = re.compile(
     r"^\s*POLYGON\s*\(\s*\(\s*([0-9eE+.,\s-]+?)\s*\)\s*\)\s*$",
     re.IGNORECASE)
 
-# RE2 named-group variants for the pyarrow fast path ((?i) prefix =
-# RE2 case-insensitive; same grammar as the compiled patterns above)
-_POINT_FAST_PA = (rf"(?i)^\s*POINT\s*\(\s*(?P<a>{_NUM_RE})\s+(?P<b>{_NUM_RE})"
-                  rf"(?:\s+{_NUM_RE})*\s*\)\s*$")
-_ENVELOPE_FAST_PA = (rf"(?i)^\s*ENVELOPE\s*\(\s*(?P<a>{_NUM_RE})\s*,\s*(?P<b>{_NUM_RE})"
-                     rf"\s*,\s*(?P<c>{_NUM_RE})\s*,\s*(?P<d>{_NUM_RE})\s*\)\s*$")
-_BUFFER_POINT_FAST_PA = (rf"(?i)^\s*BUFFER\s*\(\s*POINT\s*\(\s*(?P<a>{_NUM_RE})"
-                         rf"\s+(?P<b>{_NUM_RE})\s*\)\s*,\s*(?P<c>{_NUM_RE})\s*\)\s*$")
-
-
-def _pa_extract_f64(strs, pattern: str, groups: tuple):
-    """Arrow-native regex extract + float64 cast (RE2 + fast_float —
-    both correctly rounded, ~5x faster than the pandas path). Returns
-    None to signal fallback (pyarrow missing / cast overflow)."""
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        arr = pa.Array.from_pandas(strs)
-        if not pa.types.is_string(arr.type) and not pa.types.is_large_string(arr.type):
-            return None
-        ext = pc.extract_regex(arr, pattern)
-        return [pc.cast(pc.struct_field(ext, g), pa.float64())
-                .to_numpy(zero_copy_only=False) for g in groups]
-    except Exception:  # noqa: BLE001 - fall back to the pandas path
-        return None
+# RE2 patterns of the fast paths ((?i) = case-insensitive), run by
+# pyarrow.compute over the rows still to do
+_POINT_RE2 = (rf"(?i)^\s*POINT\s*\(\s*(?P<a>{_NUM_RE})\s+(?P<b>{_NUM_RE})"
+              rf"(?:\s+{_NUM_RE})*\s*\)\s*$")
+_ENVELOPE_RE2 = (rf"(?i)^\s*ENVELOPE\s*\(\s*(?P<a>{_NUM_RE})\s*,\s*(?P<b>{_NUM_RE})"
+                 rf"\s*,\s*(?P<c>{_NUM_RE})\s*,\s*(?P<d>{_NUM_RE})\s*\)\s*$")
+_BUFFER_POINT_RE2 = (rf"(?i)^\s*BUFFER\s*\(\s*POINT\s*\(\s*(?P<a>{_NUM_RE})"
+                     rf"\s+(?P<b>{_NUM_RE})\s*\)\s*,\s*(?P<c>{_NUM_RE})\s*\)\s*$")
 
 
 _TOKEN = re.compile(rf"\s*({_NUM_RE}(?![A-Za-z0-9_.])|[A-Za-z][A-Za-z0-9_]*|[(),])")
@@ -1055,191 +1034,269 @@ def _parse_shape(st: _State, geo: bool, dateline_rule: str = "width180",
     raise WktParseError(f"unknown shape type {word!r}")
 
 
-def parse_wkt_batch(texts, geo: bool = True,
-                    dateline_rule: str = "width180",
-                    validation_rule: str = "error",
-                    snap=None, allow_multi_overlap: bool = False):
-    """Batch parse: list/Series of WKT -> (records, errors) parallel lists.
+# ---------------------------------------------------------------------------
+# batch parse: one Arrow text/bytes column -> the shape-struct field columns
+# ---------------------------------------------------------------------------
 
-    records[i] is a shape dict or None; errors[i] is None or the reason.
-    Fast path: the dominant POINT case is handled by ONE vectorized
-    pandas regex extract over the whole batch; only non-point strings
-    fall back to the per-string tokenizer.
+_SCALAR_FIELDS = ("x", "y", "radius", "minx", "maxx", "miny", "maxy")
+_VERTEX_DTYPES = {"xs": np.float64, "ys": np.float64,
+                  "ring_offsets": np.int64}
+_RECORD_FIELDS = ("kind",) + _SCALAR_FIELDS + tuple(_VERTEX_DTYPES)
+
+
+class _Columns:
+    """The shape-struct fields of one batch while they are filled:
+    `kind` and the scalar fields as NumPy arrays (NaN reads null),
+    `error` as a list, and each vertex field as pieces (rows, per-row
+    lengths, flat values) joined into one `VertexLists` by `columns`."""
+
+    def __init__(self, n: int):
+        self.kind = np.zeros(n, dtype=np.int8)
+        self.scalars = {f: np.full(n, np.nan) for f in _SCALAR_FIELDS}
+        self.error: list = [None] * n
+        self.pieces: dict = {f: [] for f in _VERTEX_DTYPES}
+
+    def put(self, rows, kind, **scalars):
+        self.kind[rows] = kind
+        for f, v in scalars.items():
+            self.scalars[f][rows] = v
+
+    def put_vertices(self, rows, field: str, lens, values):
+        """Row rows[k] holds values[sum(lens[:k]):sum(lens[:k + 1])]."""
+        self.pieces[field].append((rows, np.asarray(lens), values))
+
+    def put_records(self, rows, values: list, parse_one):
+        """Parse values[k] into row rows[k] with `parse_one`; an
+        exception becomes the row's error (kernels never throw)."""
+        done, recs = [], []
+        for i, v in zip(rows.tolist(), values):
+            try:
+                rec = parse_one(v)
+                recs.append([rec[f] for f in _RECORD_FIELDS])
+            except Exception as e:  # noqa: BLE001
+                self.error[i] = str(e)[:200]
+                continue
+            done.append(i)
+        if not done:
+            return
+        rows = np.asarray(done)
+        fields = dict(zip(_RECORD_FIELDS, zip(*recs)))
+        self.put(rows, fields["kind"],
+                 **{f: np.array(fields[f], dtype=np.float64)
+                    for f in _SCALAR_FIELDS})
+        for f, dtype in _VERTEX_DTYPES.items():
+            keep = [k for k, v in enumerate(fields[f])
+                    if v is not None and len(v)]
+            if keep:
+                seqs = [fields[f][k] for k in keep]
+                self.put_vertices(rows[keep], f, [len(v) for v in seqs],
+                                  np.fromiter(chain.from_iterable(seqs), dtype))
+
+    def columns(self) -> dict:
+        from ..shapes import VertexLists
+        n = len(self.kind)
+        lists = {}
+        for f, dtype in _VERTEX_DTYPES.items():
+            lens = np.zeros(n, dtype=np.int64)
+            valid = np.zeros(n, dtype=bool)
+            for rows, piece_lens, _ in self.pieces[f]:
+                lens[rows] = piece_lens
+                valid[rows] = True
+            offsets = np.zeros(n + 1, dtype=np.int64)
+            np.cumsum(lens, out=offsets[1:])
+            values = np.empty(offsets[-1], dtype=dtype)
+            for rows, piece_lens, v in self.pieces[f]:
+                # value j of a piece sits at its row's offset plus j less
+                # the piece's own start of that row
+                shift = offsets[rows] - (np.cumsum(piece_lens) - piece_lens)
+                values[np.repeat(shift, piece_lens) + np.arange(len(v))] = v
+            lists[f] = VertexLists(values, offsets, valid)
+        return dict(kind=self.kind, **self.scalars, **lists, error=self.error)
+
+
+def parse_column(values, parse_one, fast=()) -> dict:
+    """One text or bytes column -> the shape-struct field columns.
+
+    `values` is the Arrow string, large_string or binary array a UDF
+    receives (a list or pandas Series is taken as strings). A null row
+    reads error "null". Each fast path, `fast[k](strs, rows, out) ->
+    taken`, handles what it can of the rows still to do in vectorized
+    passes (`strs` is `values` at `rows`; it writes into `out` and
+    returns the mask of the rows it took, with or without an error).
+    The rest go through `parse_one(value) -> record` one value at a
+    time; an exception becomes the row's error, cut at 200 characters.
+
+    Returns a dict for `shapes.encode`: `kind` int8, the scalar fields
+    float64 (NaN reads null), `xs`/`ys`/`ring_offsets` as
+    `shapes.VertexLists` (an empty list reads null) and `error` a list.
     """
-    import pandas as pd
+    import pyarrow as pa
 
-    s = texts if isinstance(texts, pd.Series) else pd.Series(list(texts), dtype=object)
-    n = len(s)
-    records: list = [None] * n
-    errors: list = [None] * n
+    if not isinstance(values, pa.Array):
+        values = pa.array(values, type=pa.string(), from_pandas=True)
+    out = _Columns(len(values))
+    valid = values.is_valid().to_numpy(zero_copy_only=False)
+    for i in np.nonzero(~valid)[0].tolist():
+        out.error[i] = "null"
+    todo = np.nonzero(valid)[0]
+    for path in fast:
+        if not len(todo):
+            break
+        taken = path(values.take(todo), todo, out)
+        todo = todo[~taken]
+    if len(todo):
+        out.put_records(todo, values.take(todo).to_pylist(), parse_one)
+    return out.columns()
 
-    null_mask = s.isna()
-    pa_res = _pa_extract_f64(s, _POINT_FAST_PA, ("a", "b"))
-    if pa_res is not None:
-        pxv, pyv = pa_res
-    else:
-        ext = s.where(~null_mask, "").astype(str).str.extract(_POINT_FAST, expand=True)
-        # numpy's str->float64 is correctly rounded; pandas' to_numeric
-        # fast path (xstrtod) is NOT and loses ulps on long decimals
-        pxv = np.asarray(ext[0].fillna("nan"), dtype=np.float64)
-        pyv = np.asarray(ext[1].fillna("nan"), dtype=np.float64)
+
+def _extract_f64(strs, pattern: str, groups: str) -> list:
+    """The named groups of RE2 `pattern` as float64 arrays, NaN where a
+    row does not match. Arrow's string -> double cast rounds correctly,
+    as float() does, and is total on what _NUM_RE matches ('1e999'
+    reads inf)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ext = pc.extract_regex(strs, pattern)
+    return [pc.struct_field(ext, g).cast(pa.float64())
+            .to_numpy(zero_copy_only=False) for g in groups]
+
+
+def _point_fast(strs, rows, out, snap=None):
+    """POINT (x y ...) -> point."""
+    x, y = _extract_f64(strs, _POINT_RE2, "ab")
     if snap is not None:
-        pxv, pyv = snap(pxv), snap(pyv)
-    fast = ~np.isnan(pxv) & ~np.isnan(pyv) & ~null_mask.to_numpy()
-    for i in np.nonzero(fast)[0]:
-        records[i] = _mk_point(float(pxv[i]), float(pyv[i]))
-    for i in np.nonzero(null_mask.to_numpy())[0]:
-        errors[i] = "null"
-    rest = np.nonzero(~fast & ~null_mask.to_numpy())[0]
-    vals = s.to_numpy(dtype=object)
-    for i in rest:
-        try:
-            records[i] = parse_shape(vals[i], geo, dateline_rule,
-                                     validation_rule, snap,
-                                     allow_multi_overlap)
-        except Exception as e:  # noqa: BLE001 - kernels never throw
-            errors[i] = str(e)[:200]
-    return records, errors
+        x, y = snap(x), snap(y)
+    ok = ~np.isnan(x) & ~np.isnan(y)
+    x, y = x[ok], y[ok]
+    out.put(rows[ok], KIND_POINT, x=x, y=y, minx=x, maxx=x, miny=y, maxy=y)
+    return ok
+
+
+def _ntsreader_point_fast(strs, rows, out, geo=True, snap=None,
+                          norm_wrap_longitude=False,
+                          world_bounds=(-180.0, 180.0, -90.0, 90.0)):
+    """POINT (x y ...) under the alt reader: lon wrap under
+    `norm_wrap_longitude`, then the bounds check, whose failure is the
+    row's error (parse_shape_ntsreader's xy_hook, vectorized)."""
+    x, y = _extract_f64(strs, _POINT_RE2, "ab")
+    if snap is not None:
+        x, y = snap(x), snap(y)
+    ok = ~np.isnan(x) & ~np.isnan(y)
+    rows, x, y = rows[ok], x[ok], y[ok]
+    if geo and norm_wrap_longitude:
+        x = norm_lon_deg(x)
+    minx_b, maxx_b, miny_b, maxy_b = world_bounds
+    bad_x = ~((x >= minx_b) & (x <= maxx_b))  # NaN (inf wrapped) too
+    bad_y = ~bad_x & ~((y >= miny_b) & (y <= maxy_b))
+    for i, v in zip(rows[bad_x], x[bad_x]):
+        out.error[i] = f"Bad X value {v} is not in boundary {minx_b} to {maxx_b}"
+    for i, v in zip(rows[bad_y], y[bad_y]):
+        out.error[i] = f"Bad Y value {v} is not in boundary {miny_b} to {maxy_b}"
+    good = ~bad_x & ~bad_y
+    x, y = x[good], y[good]
+    out.put(rows[good], KIND_POINT, x=x, y=y, minx=x, maxx=x, miny=y, maxy=y)
+    return ok
+
+
+def _envelope_fast(strs, rows, out, geo=True, snap=None):
+    """ENVELOPE (x1, x2, maxY, minY) with minY <= maxY -> rect."""
+    x1, x2, y2, y1 = _extract_f64(strs, _ENVELOPE_RE2, "abcd")
+    if snap is not None:
+        x1, x2, y2, y1 = snap(x1), snap(x2), snap(y2), snap(y1)
+    ok = ~(np.isnan(x1) | np.isnan(x2) | np.isnan(y2) | np.isnan(y1)) \
+        & (y1 <= y2)
+    x1, x2 = x1[ok], x2[ok]
+    if geo:  # _mk_rect's dateline-edge flip, one edge at most
+        flip_min = (x1 == 180.0) & (x1 != x2)
+        flip_max = ~flip_min & (x2 == -180.0) & (x1 != x2)
+        x1 = np.where(flip_min, -180.0, x1)
+        x2 = np.where(flip_max, 180.0, x2)
+    out.put(rows[ok], KIND_RECT, minx=x1, maxx=x2, miny=y1[ok], maxy=y2[ok])
+    return ok
+
+
+def _buffer_point_fast(strs, rows, out, geo=True, snap=None):
+    """BUFFER(POINT(x y), r) with r >= 0 -> circle (_mk_circle)."""
+    x, y, r = _extract_f64(strs, _BUFFER_POINT_RE2, "abc")
+    if snap is not None:  # NormDist snaps too (NtsWktShapeParser)
+        x, y, r = snap(x), snap(y), snap(r)
+    ok = ~(np.isnan(x) | np.isnan(y) | np.isnan(r)) & (r >= 0)
+    if not ok.any():
+        return ok
+    x, y, r = x[ok], y[ok], r[ok]
+    if geo:
+        r = np.minimum(r, 180.0)
+        minx, maxx, miny, maxy = geo_circle_bbox(x, y, r)
+    else:
+        minx, maxx, miny, maxy = x - r, x + r, y - r, y + r
+    out.put(rows[ok], KIND_CIRCLE, x=x, y=y, radius=r,
+            minx=minx, maxx=maxx, miny=miny, maxy=maxy)
+    return ok
+
+
+def _polygon_fast(strs, rows, out, geo=True, validation_rule="error",
+                  snap=None):
+    """Single-ring POLYGON ((x y, ...)) of plain coordinates, checked in
+    one batched pass per vertex count (_fast_ring_rows)."""
+    import pyarrow.compute as pc
+
+    taken = np.zeros(len(strs), dtype=bool)
+    cand = np.nonzero(pc.match_substring(strs, "POLYGON", ignore_case=True)
+                      .to_numpy(zero_copy_only=False))[0]
+    by_count: dict = {}
+    with warnings.catch_warnings():
+        # np.fromstring warns where it stops short of the end ('0 0e',
+        # '1..5'): that prefix is not the ring the text spells
+        warnings.simplefilter("error", DeprecationWarning)
+        for k, text in zip(cand.tolist(), strs.take(cand).to_pylist()):
+            m = _POLYGON_FAST.match(text)
+            if not m:
+                continue
+            body = m.group(1).replace(",", " ")
+            try:
+                flat = np.fromstring(body, sep=" ")
+            except (DeprecationWarning, ValueError):
+                continue
+            if flat.size < 8 or flat.size % 2:
+                continue  # <4 points: tokenizer raises "unclosed ring"
+            ks, flats = by_count.setdefault(flat.size, ([], []))
+            ks.append(k)
+            flats.append(flat)
+    for ks, flats in by_count.values():
+        ks = np.asarray(ks)
+        flat = np.stack(flats)
+        if snap is not None:
+            flat = snap(flat)
+        vx, vy = flat[:, 0::2], flat[:, 1::2]
+        ok = _fast_ring_rows(vx, vy, geo, validation_rule)
+        ks, vx, vy = ks[ok], vx[ok], vy[ok]
+        m, nv = vx.shape
+        r = rows[ks]
+        out.put(r, KIND_POLYGON, minx=vx.min(axis=1), maxx=vx.max(axis=1),
+                miny=vy.min(axis=1), maxy=vy.max(axis=1))
+        out.put_vertices(r, "xs", np.full(m, nv), vx.ravel())
+        out.put_vertices(r, "ys", np.full(m, nv), vy.ravel())
+        out.put_vertices(r, "ring_offsets", np.full(m, 2), np.tile([0, nv], m))
+        taken[ks] = True
+    return taken
 
 
 def parse_wkt_columns(texts, geo: bool = True,
                       dateline_rule: str = "width180",
                       validation_rule: str = "error",
                       snap=None, allow_multi_overlap: bool = False) -> dict:
-    """Columnar batch parse for the Arrow UDF: dict of arrays matching
-    the Spark shape-struct schema. The dominant POINT case never builds
-    per-row objects — coordinates land straight in the output arrays.
-    """
-    import pandas as pd
-
-    s = texts if isinstance(texts, pd.Series) else pd.Series(list(texts), dtype=object)
-    n = len(s)
-    null_mask = s.isna().to_numpy()
-    pa_res = _pa_extract_f64(s, _POINT_FAST_PA, ("a", "b"))
-    if pa_res is not None:
-        pxv, pyv = pa_res
-    else:
-        ext = s.where(~s.isna(), "").astype(str).str.extract(_POINT_FAST, expand=True)
-        pxv = np.asarray(ext[0].fillna("nan"), dtype=np.float64)
-        pyv = np.asarray(ext[1].fillna("nan"), dtype=np.float64)
-    if snap is not None:
-        pxv, pyv = snap(pxv), snap(pyv)
-    fast = ~np.isnan(pxv) & ~np.isnan(pyv) & ~null_mask
-
-    kind = np.where(fast, np.int8(KIND_POINT), np.int8(KIND_EMPTY))
-    x = np.where(fast, pxv, np.nan)
-    y = np.where(fast, pyv, np.nan)
-    radius = np.full(n, np.nan)
-    minx = x.copy(); maxx = x.copy(); miny = y.copy(); maxy = y.copy()
-    xs: list = [None] * n
-    ys: list = [None] * n
-    ring_offsets: list = [None] * n
-    error: list = [None] * n
-
-    vals = s.to_numpy(dtype=object)
-    for i in np.nonzero(null_mask)[0]:
-        error[i] = "null"
-    todo = ~fast & ~null_mask
-
-    # --- vectorized ENVELOPE fast path (arg order x1, x2, maxY, minY) ---
-    if todo.any():
-        strs = s.where(~s.isna(), "").astype(str)
-        pa_env = _pa_extract_f64(s, _ENVELOPE_FAST_PA, ("a", "b", "c", "d"))
-        if pa_env is not None:
-            e1, e2, e3, e4 = pa_env
-        else:
-            env = strs.str.extract(_ENVELOPE_FAST, expand=True)
-            e1 = np.asarray(env[0].fillna("nan"), dtype=np.float64)
-            e2 = np.asarray(env[1].fillna("nan"), dtype=np.float64)
-            e3 = np.asarray(env[2].fillna("nan"), dtype=np.float64)
-            e4 = np.asarray(env[3].fillna("nan"), dtype=np.float64)
-        if snap is not None:
-            e1, e2, e3, e4 = snap(e1), snap(e2), snap(e3), snap(e4)
-        em = todo & ~np.isnan(e1) & ~np.isnan(e2) & ~np.isnan(e3) & ~np.isnan(e4) \
-            & (e4 <= e3)
-        if em.any():
-            rminx, rmaxx = e1[em], e2[em]
-            if geo:  # dateline-edge normalization (SpatialContext.cs:260-267)
-                flip_min = (rminx == 180.0) & (rminx != rmaxx)
-                flip_max = (rmaxx == -180.0) & (rminx != rmaxx)
-                rminx = np.where(flip_min, -180.0, rminx)
-                rmaxx = np.where(flip_max, 180.0, rmaxx)
-            kind[em] = KIND_RECT
-            minx[em] = rminx; maxx[em] = rmaxx
-            miny[em] = e4[em]; maxy[em] = e3[em]
-            todo = todo & ~em
-
-        # --- vectorized BUFFER(POINT(x y), r) fast path -> circle ---
-        pa_buf = _pa_extract_f64(s, _BUFFER_POINT_FAST_PA, ("a", "b", "c"))
-        if pa_buf is not None:
-            bx, by, br = pa_buf
-        else:
-            bp = strs.str.extract(_BUFFER_POINT_FAST, expand=True)
-            bx = np.asarray(bp[0].fillna("nan"), dtype=np.float64)
-            by = np.asarray(bp[1].fillna("nan"), dtype=np.float64)
-            br = np.asarray(bp[2].fillna("nan"), dtype=np.float64)
-        if snap is not None:  # NormDist snaps too (NtsWktShapeParser)
-            bx, by, br = snap(bx), snap(by), snap(br)
-        bm = todo & ~np.isnan(bx) & ~np.isnan(by) & ~np.isnan(br) & (br >= 0)
-        if bm.any():
-            r_c = np.minimum(br[bm], 180.0) if geo else br[bm]
-            kind[bm] = KIND_CIRCLE
-            x[bm] = bx[bm]; y[bm] = by[bm]; radius[bm] = r_c
-            if geo:
-                cminx, cmaxx, cminy, cmaxy = geo_circle_bbox(bx[bm], by[bm], r_c)
-            else:
-                cminx, cmaxx = bx[bm] - r_c, bx[bm] + r_c
-                cminy, cmaxy = by[bm] - r_c, by[bm] + r_c
-            minx[bm] = cminx; maxx[bm] = cmaxx; miny[bm] = cminy; maxy[bm] = cmaxy
-            todo = todo & ~bm
-
-        # --- single-ring POLYGON fast path (no holes, non-dateline) ---
-        by_count: dict = {}
-        for i in np.nonzero(todo)[0]:
-            m = _POLYGON_FAST.match(vals[i])
-            if not m:
-                continue
-            try:
-                flat = np.fromstring(m.group(1).replace(",", " "), sep=" ")
-            except Exception:  # noqa: BLE001
-                continue
-            if flat.size < 8 or flat.size % 2:
-                continue  # <4 points: tokenizer raises "unclosed ring"
-            rows, flats = by_count.setdefault(flat.size, ([], []))
-            rows.append(i)
-            flats.append(flat)
-        for rows, flats in by_count.values():
-            rows = np.asarray(rows)
-            flat = np.stack(flats)
-            if snap is not None:
-                flat = snap(flat)
-            vx, vy = flat[:, 0::2], flat[:, 1::2]
-            ok = _fast_ring_rows(vx, vy, geo, validation_rule)
-            rows, vx, vy = rows[ok], vx[ok], vy[ok]
-            kind[rows] = KIND_POLYGON
-            for i, rx, ry in zip(rows.tolist(), vx.tolist(), vy.tolist()):
-                xs[i] = rx; ys[i] = ry
-                ring_offsets[i] = [0, len(rx)]
-            minx[rows] = vx.min(axis=1); maxx[rows] = vx.max(axis=1)
-            miny[rows] = vy.min(axis=1); maxy[rows] = vy.max(axis=1)
-            todo[rows] = False
-
-    for i in np.nonzero(todo)[0]:
-        try:
-            rec = parse_shape(vals[i], geo, dateline_rule, validation_rule,
-                              snap, allow_multi_overlap)
-            kind[i] = rec["kind"]
-            x[i] = rec["x"]; y[i] = rec["y"]; radius[i] = rec["radius"]
-            minx[i] = rec["minx"]; maxx[i] = rec["maxx"]
-            miny[i] = rec["miny"]; maxy[i] = rec["maxy"]
-            xs[i] = rec["xs"] or None
-            ys[i] = rec["ys"] or None
-            ring_offsets[i] = rec["ring_offsets"] or None
-        except Exception as e:  # noqa: BLE001
-            error[i] = str(e)[:200]
-    return dict(kind=kind, x=x, y=y, radius=radius, minx=minx, maxx=maxx,
-                miny=miny, maxy=maxy, xs=xs, ys=ys, ring_offsets=ring_offsets,
-                error=error)
+    """WKT column -> shape-struct field columns (parse_column with
+    parse_shape and the POINT, ENVELOPE, BUFFER(POINT) and single-ring
+    POLYGON fast paths)."""
+    kw = dict(geo=geo, snap=snap)
+    return parse_column(
+        texts,
+        lambda t: parse_shape(t, geo, dateline_rule, validation_rule, snap,
+                              allow_multi_overlap),
+        (partial(_point_fast, snap=snap), partial(_envelope_fast, **kw),
+         partial(_buffer_point_fast, **kw),
+         partial(_polygon_fast, validation_rule=validation_rule, **kw)))
 
 
 def parse_ntsreader_columns(texts, geo: bool = True,
@@ -1249,83 +1306,17 @@ def parse_ntsreader_columns(texts, geo: bool = True,
                             norm_wrap_longitude: bool = False,
                             world_bounds: tuple = (-180.0, 180.0,
                                                    -90.0, 90.0)) -> dict:
-    """Columnar batch parse under the ALT reader's semantics (see
-    parse_shape_ntsreader).
-
-    The dominant POINT case keeps the vectorized regex fast path — its
-    wrap/verify steps are themselves vectorized (norm_lon_deg + two
-    bound comparisons on the extracted coordinate arrays), so point-
-    heavy corpora parse at the default grammar's speed. Non-point
-    strings go through the per-string alt-reader tokenizer (the
-    per-vertex hooks preclude the other regex shortcuts)."""
-    import pandas as pd
-
-    from .normalize import norm_lon_deg
-
-    s = texts if isinstance(texts, pd.Series) else pd.Series(list(texts),
-                                                             dtype=object)
-    n = len(s)
-    nan = float("nan")
-    kind = np.zeros(n, dtype=np.int8)
-    x = np.full(n, nan); y = np.full(n, nan); radius = np.full(n, nan)
-    minx = np.full(n, nan); maxx = np.full(n, nan)
-    miny = np.full(n, nan); maxy = np.full(n, nan)
-    xs: list = [None] * n
-    ys: list = [None] * n
-    ring_offsets: list = [None] * n
-    error: list = [None] * n
-    vals = s.to_numpy(dtype=object)
-
-    minx_b, maxx_b, miny_b, maxy_b = world_bounds
-    null_mask = s.isna().to_numpy()
-    pa_res = _pa_extract_f64(s, _POINT_FAST_PA, ("a", "b"))
-    if pa_res is not None:
-        pxv, pyv = pa_res
-    else:
-        ext = s.where(~s.isna(), "").astype(str).str.extract(
-            _POINT_FAST, expand=True)
-        pxv = np.asarray(ext[0].fillna("nan"), dtype=np.float64)
-        pyv = np.asarray(ext[1].fillna("nan"), dtype=np.float64)
-    if snap is not None:
-        pxv, pyv = snap(pxv), snap(pyv)
-    fast = ~np.isnan(pxv) & ~np.isnan(pyv) & ~null_mask
-    if fast.any():
-        if geo and norm_wrap_longitude:
-            pxv = np.where(fast, norm_lon_deg(pxv), pxv)
-        bad_x = fast & ((pxv < minx_b) | (pxv > maxx_b))
-        bad_y = fast & ~bad_x & ((pyv < miny_b) | (pyv > maxy_b))
-        for i in np.nonzero(bad_x)[0]:
-            error[i] = (f"Bad X value {pxv[i]} is not in boundary "
-                        f"{minx_b} to {maxx_b}")
-        for i in np.nonzero(bad_y)[0]:
-            error[i] = (f"Bad Y value {pyv[i]} is not in boundary "
-                        f"{miny_b} to {maxy_b}")
-        ok = fast & ~bad_x & ~bad_y
-        kind[ok] = KIND_POINT
-        x[ok] = pxv[ok]; y[ok] = pyv[ok]
-        minx[ok] = pxv[ok]; maxx[ok] = pxv[ok]
-        miny[ok] = pyv[ok]; maxy[ok] = pyv[ok]
-
-    handled = fast | null_mask
-    for i in np.nonzero(null_mask)[0]:
-        error[i] = "null"
-    for i in np.nonzero(~handled)[0]:
-        try:
-            rec = parse_shape_ntsreader(
-                vals[i], geo, dateline_rule, validation_rule, snap,
-                allow_multi_overlap, norm_wrap_longitude, world_bounds)
-            kind[i] = rec["kind"]
-            x[i] = rec["x"]; y[i] = rec["y"]; radius[i] = rec["radius"]
-            minx[i] = rec["minx"]; maxx[i] = rec["maxx"]
-            miny[i] = rec["miny"]; maxy[i] = rec["maxy"]
-            xs[i] = rec["xs"] or None
-            ys[i] = rec["ys"] or None
-            ring_offsets[i] = rec["ring_offsets"] or None
-        except Exception as e:  # noqa: BLE001 - kernels never throw
-            error[i] = str(e)[:200]
-    return dict(kind=kind, x=x, y=y, radius=radius, minx=minx, maxx=maxx,
-                miny=miny, maxy=maxy, xs=xs, ys=ys, ring_offsets=ring_offsets,
-                error=error)
+    """WKT column under the alt reader (parse_shape_ntsreader) ->
+    shape-struct field columns. Only POINT has a fast path: the
+    per-vertex wrap and bounds hooks rule out the other shortcuts."""
+    return parse_column(
+        texts,
+        lambda t: parse_shape_ntsreader(
+            t, geo, dateline_rule, validation_rule, snap,
+            allow_multi_overlap, norm_wrap_longitude, world_bounds),
+        (partial(_ntsreader_point_fast, geo=geo, snap=snap,
+                 norm_wrap_longitude=norm_wrap_longitude,
+                 world_bounds=world_bounds),))
 
 
 # ---------------------------------------------------------------------------
@@ -1349,6 +1340,13 @@ def _legacy_latlon(token: str) -> tuple:
         raise WktParseError(f"Invalid longitude: longitudes are range -180 "
                             f"to 180: provided lon: [{lon}]")
     return lon, lat
+
+
+def parse_latlon(text: str) -> dict:
+    """'lat, lon' -> point record (ParseUtils.ParseLatitudeLongitude,
+    Io/ParseUtils.cs:162-191 over ParsePointDouble :100-155); lon
+    becomes x, lat y."""
+    return _mk_point(*_legacy_latlon(text))
 
 
 def parse_legacy(text: str, geo: bool = True) -> dict:
@@ -1416,40 +1414,6 @@ def parse_legacy(text: str, geo: bool = True) -> dict:
         f"Only 4 numbers supported (rect) but found more: {text[:50]!r}")
 
 
-def parse_legacy_columns(texts, geo: bool = True) -> dict:
-    """Columnar batch parse of the legacy format (same output layout as
-    parse_wkt_columns)."""
-    import pandas as pd
-
-    s = texts if isinstance(texts, pd.Series) else pd.Series(list(texts), dtype=object)
-    n = len(s)
-    kind = np.zeros(n, dtype=np.int8)
-    x = np.full(n, np.nan); y = np.full(n, np.nan)
-    radius = np.full(n, np.nan)
-    minx = np.full(n, np.nan); maxx = np.full(n, np.nan)
-    miny = np.full(n, np.nan); maxy = np.full(n, np.nan)
-    xs: list = [None] * n
-    ys: list = [None] * n
-    ring_offsets: list = [None] * n
-    error: list = [None] * n
-    vals = s.to_numpy(dtype=object)
-    for i in range(n):
-        if vals[i] is None:
-            error[i] = "null"
-            continue
-        try:
-            rec = parse_legacy(str(vals[i]), geo)
-            kind[i] = rec["kind"]
-            x[i] = rec["x"]; y[i] = rec["y"]; radius[i] = rec["radius"]
-            minx[i] = rec["minx"]; maxx[i] = rec["maxx"]
-            miny[i] = rec["miny"]; maxy[i] = rec["maxy"]
-        except Exception as e:  # noqa: BLE001
-            error[i] = str(e)[:200]
-    return dict(kind=kind, x=x, y=y, radius=radius, minx=minx, maxx=maxx,
-                miny=miny, maxy=maxy, xs=xs, ys=ys, ring_offsets=ring_offsets,
-                error=error)
-
-
 # ---------------------------------------------------------------------------
 # WKT writer (shape struct -> text; NtsSpatialContext.ToString analog,
 # ENVELOPE arg order per the parser's CQL convention, BUFFER extension)
@@ -1490,37 +1454,3 @@ def format_wkt(kind: int, x, y, radius, minx, maxx, miny, maxy,
             rings.append(f"({seg})")
         return "POLYGON (" + ", ".join(rings) + ")"
     raise WktParseError(f"cannot format kind {kind}")
-
-
-def parse_latlon_batch(texts):
-    """'lat, lon' ingest — ParseUtils.ParseLatitudeLongitude
-    (Io/ParseUtils.cs:162-191 over ParsePointDouble :100-155):
-    comma-separated, surrounding spaces trimmed, exactly two values,
-    lat validated to [-90, 90] and lon to [-180, 180]. Returns
-    (records, errors) like parse_wkt_batch; lon becomes x, lat y."""
-    recs = [None] * len(texts)
-    errs = [None] * len(texts)
-    for i, t in enumerate(texts):
-        if t is None:
-            errs[i] = "null lat,lon string"
-            continue
-        parts = t.split(",")
-        if len(parts) != 2 or not parts[0].strip() or not parts[1].strip():
-            errs[i] = f"incompatible dimension (2) and values ({t})"
-            continue
-        try:
-            lat = float(parts[0].strip())
-            lon = float(parts[1].strip())
-        except ValueError as e:
-            errs[i] = str(e)
-            continue
-        if lat < -90.0 or lat > 90.0:
-            errs[i] = (f"Invalid latitude: latitudes are range -90 to 90: "
-                       f"provided lat: [{lat}]")
-            continue
-        if lon < -180.0 or lon > 180.0:
-            errs[i] = (f"Invalid longitude: longitudes are range -180 to "
-                       f"180: provided lon: [{lon}]")
-            continue
-        recs[i] = _mk_point(lon, lat)
-    return recs, errs

@@ -124,7 +124,7 @@ def extract_geo_spans(docs: DataFrame) -> DataFrame:
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            cols = parse_wkt_columns(b.column("wkt").to_pandas())
+            cols = parse_wkt_columns(b.column("wkt"))
             shape = encode(b.num_rows, **cols)
             out = pa.RecordBatch.from_arrays(
                 [b.column("doc_id"), b.column("pos"), *shape.flatten()],

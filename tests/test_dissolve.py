@@ -60,9 +60,8 @@ def test_dissolve_pip_equivalence(spark):
     # sample points (shared edges stay even-odd in touch merges)
     exp = np.zeros(len(px), dtype=bool)
     near = np.zeros(len(px), dtype=bool)
-    from spatial4n_spark.kernels.wkt import parse_wkt_batch
-    recs, errs = parse_wkt_batch([w for _, w in rows])
-    for rec in recs:
+    from spatial4n_spark.kernels.wkt import parse_shape
+    for rec in (parse_shape(w) for _, w in rows):
         assert rec["kind"] == 2
         exp |= ((px >= rec["minx"]) & (px <= rec["maxx"])
                 & (py >= rec["miny"]) & (py <= rec["maxy"]))

@@ -22,13 +22,13 @@ def test_custom_shape_parser_round():
         # built-in grammar is untouched
         assert W.parse_shape("POINT (1 2)")["kind"] == W.KIND_POINT
         # batch path consults the registry too
-        recs, errs = W.parse_wkt_batch(["CUSTOMSHAPE()", "POINT (3 4)"])
-        assert errs == [None, None]
-        assert recs[0]["kind"] == 99 and recs[1]["x"] == 3.0
+        cols = W.parse_wkt_columns(["CUSTOMSHAPE()", "POINT (3 4)"])
+        assert cols["error"] == [None, None]
+        assert cols["kind"][0] == 99 and cols["x"][1] == 3.0
     finally:
         W.unregister_shape_parser("CUSTOMSHAPE")
     # unregistered -> back to an error
-    _, errs = W.parse_wkt_batch(["CUSTOMSHAPE()"])
+    errs = W.parse_wkt_columns(["CUSTOMSHAPE()"])["error"]
     assert errs[0] is not None
 
 

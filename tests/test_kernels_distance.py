@@ -142,3 +142,38 @@ def test_haversine_jvm_antipodal_no_nan(spark):
     vals = [r["d"] for r in d.collect()]
     assert all(v == v for v in vals), vals       # no NaN
     assert all(179.0 <= v <= 180.0 + 1e-9 for v in vals), vals
+
+
+# exactly antipodal pairs whose haversine `h` rounds above 1
+ANTIPODAL = [(-147.33, -14.89, 32.67, 14.89), (153.87, 8.81, -26.13, -8.81),
+             (4.59, -19.9, -175.41, 19.9), (-91.03, 55.64, 88.97, -55.64)]
+
+
+def test_haversine_no_nan_near_antipode():
+    rng = np.random.default_rng(0)
+    x = rng.uniform(-180, 180, 100_000)
+    y = rng.uniform(-89, 89, 100_000)
+    ax, ay = np.where(x > 0, x - 180, x + 180), -y
+    d = dist.geo_distance_deg(x, y, ax, ay, "haversine")
+    assert not np.isnan(d).any()
+    assert np.allclose(d, 180.0, atol=1e-6)
+    x1, y1, x2, y2 = np.array(ANTIPODAL).T
+    assert (dist.geo_distance_deg(x1, y1, x2, y2, "haversine") == 180.0).all()
+
+
+def test_haversine_clamp_keeps_values_bit_identical():
+    """Away from the antipode the clamp changes no bit: the fixture
+    pairs and random pairs equal the unclamped formula exactly."""
+    rng = np.random.default_rng(1)
+    x1 = np.r_[100, 100, 2, rng.uniform(-180, 180, 10_000)]
+    y1 = np.r_[0, 0, 1, rng.uniform(-90, 90, 10_000)]
+    x2 = np.r_[0, -160, 4, rng.uniform(-180, 180, 10_000)]
+    y2 = np.r_[10, 10, 3, rng.uniform(-90, 90, 10_000)]
+    lat1, lon1, lat2, lon2 = (nz.to_radians(a) for a in (y1, x1, y2, x2))
+    hx, hy = np.sin((lon1 - lon2) * 0.5), np.sin((lat1 - lat2) * 0.5)
+    h = hy * hy + np.cos(lat1) * np.cos(lat2) * hx * hx
+    ok = h < 1.0
+    want = nz.to_degrees(2.0 * np.arctan2(np.sqrt(h[ok]), np.sqrt(1.0 - h[ok])))
+    got = dist.geo_distance_deg(x1, y1, x2, y2, "haversine")[ok]
+    assert ok[:3].all() and ok.sum() > 9_990
+    assert np.array_equal(got, want)

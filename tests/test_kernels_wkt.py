@@ -157,12 +157,13 @@ def test_fiji_corpus():
 
 
 def test_batch_parse():
-    recs, errs = wkt.parse_wkt_batch(
+    cols = wkt.parse_wkt_columns(
         ["POINT (1 2)", "not wkt", None, "ENVELOPE (10, 30, 45, 25)"])
-    assert recs[0]["kind"] == wkt.KIND_POINT and errs[0] is None
-    assert recs[1] is None and errs[1]
-    assert recs[2] is None and errs[2] == "null"
-    assert recs[3]["kind"] == wkt.KIND_RECT
+    errs = cols["error"]
+    assert cols["kind"][0] == wkt.KIND_POINT and errs[0] is None
+    assert cols["kind"][1] == wkt.KIND_EMPTY and errs[1]
+    assert cols["kind"][2] == wkt.KIND_EMPTY and errs[2] == "null"
+    assert cols["kind"][3] == wkt.KIND_RECT
 
 
 def test_rect_dateline_edge_normalization():

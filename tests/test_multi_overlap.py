@@ -16,7 +16,7 @@ from spatial4n_spark.kernels import booleans
 from spatial4n_spark.kernels.overlay import polygon_area_evenodd
 from spatial4n_spark.kernels.pip import points_in_polygon
 from spatial4n_spark.kernels.wkt import (WktParseError, parse_shape,
-                                         parse_wkt_batch)
+                                         parse_wkt_columns)
 
 OVERLAP = ("MULTIPOLYGON(((0 0, 10 0, 10 10, 0 10, 0 0)),"
            " ((5 5, 15 5, 15 15, 5 15, 5 5)))")
@@ -179,7 +179,8 @@ def test_fiji_page_sliver_overlap_is_unioned():
     with open(os.path.join(res, "fiji.wkt.txt")) as fh:
         text = fh.read().strip()
     for kw in ({}, {"allow_multi_overlap": True}):
-        rec = parse_wkt_batch([text], **kw)[0][0]
+        cols = parse_wkt_columns([text], **kw)
+        rec = {f: v[0] for f, v in cols.items()}
         assert _pip(rec, [-179.9999998, -179.99999999, -179.9],
                     [-16.87] * 3).tolist() == [True, True, True]
 

@@ -59,12 +59,10 @@ def layers(spark):
 
 def _brute(spark, lrows, rrows):
     """Driver-side expected pair -> area map via the kernel."""
-    from spatial4n_spark.kernels.wkt import parse_wkt_batch
+    from spatial4n_spark.kernels.wkt import parse_shape
 
     def shapes_of(rows):
-        recs, errs = parse_wkt_batch([w for _, w in rows])
-        assert not any(errs), errs
-        return {rid: rec for (rid, _), rec in zip(rows, recs)}
+        return {rid: parse_shape(w) for rid, w in rows}
 
     def pages(rec):
         if rec["kind"] == 2:

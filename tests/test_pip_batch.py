@@ -261,11 +261,10 @@ def test_relate_shape_point_on_distinct_polygons_from_parquet(spark,
                .alias("rel"))
            .collect())
     assert len(got) == len(rows)
-    recs, errs = W.parse_wkt_batch([w for _, w, _, _ in rows[::5]])
-    assert not any(errs)
+    cols = W.parse_wkt_columns([w for _, w, _, _ in rows[::5]])
+    assert not any(cols["error"])
     for row in got:
-        rec = recs[row.id]
-        want = _oracle([row.px], [row.py], rec["xs"], rec["ys"],
-                       rec["ring_offsets"])[0]
+        want = _oracle([row.px], [row.py], cols["xs"][row.id],
+                       cols["ys"][row.id], cols["ring_offsets"][row.id])[0]
         assert row.rel == (R.CONTAINS if want else R.DISJOINT), row
     assert {row.rel for row in got} == {R.CONTAINS, R.DISJOINT}

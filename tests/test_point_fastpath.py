@@ -28,7 +28,11 @@ def test_point_fastpath_plan_has_no_python(spark):
         and "MapInPandas" not in plan and "MapInArrow" not in plan, plan
 
 
-def test_point_fastpath_drops_malformed(spark):
+def test_point_fastpath_drops_malformed(strict_codegen, tmp_path):
+    """Docs read back from parquet: over a createDataFrame input (a
+    LocalTableScan) Spark evaluates the JVM parse on the driver without
+    whole-stage codegen, so a compile failure of it could not show."""
+    spark = strict_codegen
     rows = [("d1", [{"kind": "text", "text": "POINT (10.5 20.5)",
                      "media_ref": None, "offset": 0}]),
             ("d2", [{"kind": "text", "text": "POINT (bogus 20.5)",
@@ -43,9 +47,10 @@ def test_point_fastpath_drops_malformed(spark):
                      "media_ref": None, "offset": 0}]),
             ("d6", [{"kind": "text", "text": "POINT (1 2) junk (3 4)",
                      "media_ref": None, "offset": 0}])]
-    docs = spark.createDataFrame(
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
         rows, "doc_id string, spans array<struct<kind:string,text:string,"
-              "media_ref:string,offset:int>>")
-    got = extract_point_spans(docs).collect()
+              "media_ref:string,offset:int>>").write.parquet(path)
+    got = extract_point_spans(spark.read.parquet(path)).collect()
     assert len(got) == 1 and got[0].doc_id == "d1"
     assert (got[0].x, got[0].y) == (10.5, 20.5)

@@ -266,9 +266,9 @@ def _read_corpus(name):
 
 def test_fiji_kernel_contains_and_smart_bbox():
     from spatial4n_spark.kernels import wkt as W
-    recs, errs = W.parse_wkt_batch([_read_corpus("fiji.wkt.txt")])
-    assert errs[0] is None
-    r = recs[0]
+    cols = W.parse_wkt_columns([_read_corpus("fiji.wkt.txt")])
+    assert cols["error"][0] is None
+    r = {f: v[0] for f, v in cols.items()}
     width = r["maxx"] - r["minx"]
     if width < 0:
         width += 360.0
@@ -283,9 +283,9 @@ def test_fiji_kernel_contains_and_smart_bbox():
 
 def test_russia_parses_with_dateline_normalization():
     from spatial4n_spark.kernels import wkt as W
-    recs, errs = W.parse_wkt_batch([_read_corpus("russia.wkt.txt")])
-    assert errs[0] is None
-    r = recs[0]
+    cols = W.parse_wkt_columns([_read_corpus("russia.wkt.txt")])
+    assert cols["error"][0] is None
+    r = {f: v[0] for f, v in cols.items()}
     assert r["kind"] == 8  # MULTIPOLYGON
     assert len(r["ring_offsets"]) > 100  # many parts survive the page cut
     # dateline-crossing bbox (minx > maxx in wrapped form)

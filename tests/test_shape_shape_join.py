@@ -31,9 +31,9 @@ def layers(spark):
 
 
 def _local_pairs(lrows, rrows, keep):
-    from spatial4n_spark.kernels.wkt import parse_wkt_batch
-    lrecs, _ = parse_wkt_batch([w for _, w in lrows])
-    rrecs, _ = parse_wkt_batch([w for _, w in rrows])
+    from spatial4n_spark.kernels.wkt import parse_shape
+    lrecs = [parse_shape(w) for _, w in lrows]
+    rrecs = [parse_shape(w) for _, w in rrows]
     out = set()
     for (lid, _), lr in zip(lrows, lrecs):
         for (rid, _), rr in zip(rrows, rrecs):

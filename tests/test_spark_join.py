@@ -182,6 +182,26 @@ def test_distance_and_knn_join(strict_codegen, tmp_path, points_df):
         assert got_top == want_top
 
 
+def test_distance_join_keeps_antipodal_pairs(strict_codegen, tmp_path):
+    """At radius 180 every pair is in range, exactly antipodal ones too
+    (their haversine once read NaN and the pair was dropped)."""
+    spark = strict_codegen
+    pairs = [(-147.33, -14.89, 32.67, 14.89), (153.87, 8.81, -26.13, -8.81),
+             (4.59, -19.9, -175.41, 19.9), (-91.03, 55.64, 88.97, -55.64)]
+    x, y, qx, qy = (list(c) for c in zip(*pairs))
+    pts = _from_parquet(spark, tmp_path / "points", pd.DataFrame(
+        {"point_id": range(4), "x": x, "y": y}))
+    qs = _from_parquet(spark, tmp_path / "queries", pd.DataFrame(
+        {"query_id": range(4), "qx": qx, "qy": qy}))
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
+                    max_cover_cells=4096)
+    got = distance_join(pts, qs, 180.0, plan).select(
+        "point_id", "query_id", "dist_deg").collect()
+    assert {(r.point_id, r.query_id) for r in got} == \
+        {(i, j) for i in range(4) for j in range(4)}
+    assert {r.dist_deg for r in got if r.point_id == r.query_id} == {180.0}
+
+
 def test_knn_ladder_equals_single_pass(spark):
     """The one kNN plan with a radius must return EXACTLY the single
     wide pass: every pair within the radius, ranked by Vincenty and the

@@ -162,13 +162,14 @@ def test_buffer0_bowtie_lobes_cover_expected_points():
 # ---- batch/Spark surface -------------------------------------------------
 
 def test_batch_parse_reports_validation_errors():
-    recs, errs = wkt.parse_wkt_batch(
+    cols = wkt.parse_wkt_columns(
         ["POINT (1 2)", BOWTIE, UNCLOSED,
          "POLYGON((0 5, 10 5, 10 20, 0 20, 0 5))"])
-    assert recs[0]["kind"] == wkt.KIND_POINT and errs[0] is None
-    assert recs[1] is None and "invalid polygon" in errs[1]
-    assert recs[2] is None and "unclosed" in errs[2]
-    assert recs[3]["kind"] == wkt.KIND_RECT
+    kind, errs = cols["kind"], cols["error"]
+    assert kind[0] == wkt.KIND_POINT and errs[0] is None
+    assert kind[1] == wkt.KIND_EMPTY and "invalid polygon" in errs[1]
+    assert kind[2] == wkt.KIND_EMPTY and "unclosed" in errs[2]
+    assert kind[3] == wkt.KIND_RECT
 
 
 def test_columns_parse_rules_roundtrip():
@@ -263,16 +264,21 @@ def _same(a, b):
                        and np.isnan(a) and np.isnan(b)))
 
 
-def _assert_columns_match_parse_shape(texts, rule, snap=None):
-    cols = wkt.parse_wkt_columns(texts, validation_rule=rule, snap=snap)
+def _assert_columns_match(cols, texts, parse_one):
+    """Row i of a columnar parse equals parse_one(texts[i]): kind,
+    scalar fields, vertices and error text ("null" for a null row)."""
     kinds = set()
     for i, t in enumerate(texts):
-        try:
-            rec, err = P(t, validation_rule=rule, snap=snap), None
-        except wkt.WktParseError as e:
-            rec, err = None, str(e)[:200]
+        if t is None:
+            rec, err = None, "null"
+        else:
+            try:
+                rec, err = parse_one(t), None
+            except Exception as e:  # noqa: BLE001 - error rows compare too
+                rec, err = None, str(e)[:200]
         assert cols["error"][i] == err, (t, cols["error"][i], err)
         if rec is None:
+            assert cols["kind"][i] == wkt.KIND_EMPTY, t
             continue
         kinds.add(rec["kind"])
         assert cols["kind"][i] == rec["kind"], t
@@ -285,6 +291,12 @@ def _assert_columns_match_parse_shape(texts, rule, snap=None):
     return kinds
 
 
+def _assert_columns_match_parse_shape(texts, rule, snap=None):
+    cols = wkt.parse_wkt_columns(texts, validation_rule=rule, snap=snap)
+    return _assert_columns_match(
+        cols, texts, lambda t: P(t, validation_rule=rule, snap=snap))
+
+
 @pytest.mark.parametrize("rule,snap", [
     ("none", None), ("error", None), ("repairConvexHull", None),
     ("repairBuffer0", None), ("error", wkt.make_snap("fixed", 2.0))])
@@ -294,6 +306,105 @@ def test_columns_polygon_batch_matches_parse_shape(rule, snap):
     error text."""
     kinds = _assert_columns_match_parse_shape(_fuzz_polygon_texts(), rule, snap)
     assert {wkt.KIND_POLYGON, wkt.KIND_RECT} <= kinds
+
+
+# the ENVELOPE, BUFFER(POINT) and POINT fast paths' edges, null rows and
+# POLYGON texts whose coordinate list np.fromstring reads only in part
+FAST_PATH_EDGES = [
+    "ENVELOPE (180, -170, 10, 0)", "ENVELOPE (170, -180, 10, 0)",
+    "ENVELOPE (180, -180, 10, 0)", "ENVELOPE (-180, 180, 10, 0)",
+    "ENVELOPE (180, 180, 10, 0)", "envelope(-180,-180,1,0)",
+    "ENVELOPE (10, 20, 0, 10)", "ENVELOPE (10, 20, 5, 5)",
+    "BUFFER(POINT(1 2), -1)", "BUFFER(POINT(1 2), -0)", "BUFFER(POINT(1 2), 0)",
+    "BUFFER(POINT(1 2), 200)", "BUFFER(POINT(179.5 89.5), 3.25)",
+    "buffer(point(-10 5), 1e999)",
+    "POINT Z (1 2 3)", "POINT M (1 2 3)", "POINT (1 2 3)", "POINT (1 2 3 4)",
+    "POINT (1e999 2)", "POINT (-1e999 1e-999)", "POINT (0.1 -0.7)", None,
+    "POINT (1 2)x", "POINT EMPTY", "LINESTRING (0 0, 1 1)",
+    "POLYGON((0 0, 4 0, 4 3, 0 0))", "POLYGON((0 0, 1 0, 1 1, 0 0, e 5))",
+    "POLYGON((0 0, 1 0, 1 1, 0 0e))", "POLYGON((0 0, 1 0, 1..5, 0 0))",
+    "POLYGON((0 0, 1 0, 1-2 3, 0 0))", None,
+]
+SNAPS = [None, wkt.make_snap("floating_single"), wkt.make_snap("fixed", 4.0)]
+
+
+@pytest.mark.parametrize("snap", SNAPS)
+def test_columns_fast_paths_match_parse_shape(snap):
+    """Every fast path of parse_wkt_columns (POINT, ENVELOPE,
+    BUFFER(POINT), POLYGON) gives exactly the tokenizer's row, under
+    each snap model; so does a batch of null rows only."""
+    kinds = _assert_columns_match_parse_shape(FAST_PATH_EDGES, "error", snap)
+    assert {wkt.KIND_POINT, wkt.KIND_RECT, wkt.KIND_CIRCLE,
+            wkt.KIND_POLYGON} <= kinds
+    assert _assert_columns_match_parse_shape([None] * 3, "error", snap) == set()
+
+
+@pytest.mark.parametrize("nwl", [False, True])
+@pytest.mark.parametrize("snap", SNAPS)
+def test_ntsreader_columns_match_parse_shape_ntsreader(nwl, snap):
+    texts = ["POINT(10.5 20.25)", "POINT(-240 20)", "POINT(181 0)", None,
+             "POINT(540 0)", "POINT(0 95)", "POINT(0 -95)", "POINT(-180 90)",
+             "POINT(200 95)", "POINT (1e999 0)", "POINT Z (1 2 3)",
+             "LINESTRING(0 0, 5 5)", "LINESTRING(0 0, 185 5)",
+             "ENVELOPE(10, 20, 40, 30)", "POLYGON((0 0, 4 0, 4 3, 0 0))",
+             "POLYGON((170 0, 190 0, 190 5, 170 0))", "bogus"]
+    cols = wkt.parse_ntsreader_columns(texts, snap=snap,
+                                       norm_wrap_longitude=nwl)
+    kinds = _assert_columns_match(cols, texts, lambda t: wkt.parse_shape_ntsreader(
+        t, snap=snap, norm_wrap_longitude=nwl))
+    assert {wkt.KIND_POINT, wkt.KIND_POLYGON} <= kinds
+
+
+def test_legacy_column_matches_parse_legacy():
+    texts = ["1 2", "-10.5 20 30 40", "-10 40 30 20", "1 2 3", "1 2 3 4 5",
+             "45.5, -120.25", "95, 0", "Circle(1 2 d=3)", "circle(1 2 3)",
+             "CIRCLE( 4.56,1.23 d=7.89 )", "Circle(1 2 distance=200)",
+             "Circle(1 2)", "Circle(1 2 x=3)", "Circle(1 2 3 4)", "bogus",
+             "", None, "x y"]
+    cols = wkt.parse_column(texts, wkt.parse_legacy)
+    kinds = _assert_columns_match(cols, texts, wkt.parse_legacy)
+    assert {wkt.KIND_POINT, wkt.KIND_RECT, wkt.KIND_CIRCLE} <= kinds
+
+
+def test_latlon_column_error_rows():
+    """st_from_latlon: lon becomes x, lat y; a null, out-of-range,
+    three-value or non-numeric row reads its error, cut at 200
+    characters like every parser's."""
+    import pyarrow as pa
+
+    from spatial4n_spark import functions as SF
+    from spatial4n_spark.shapes import decode
+    texts = ["45.5, -120.25", " -3.25 ,10.5 ", None, "95, 0", "0, 190",
+             "1,2,3", "abc, 5", "5", "1, " + "9" * 300]
+    cols = wkt.parse_column(texts, wkt.parse_latlon)
+    _assert_columns_match(cols, texts, wkt.parse_latlon)
+    s = decode(SF.st_from_latlon.func(pa.array(texts)))
+    assert (s.x[0], s.y[0], s.x[1], s.y[1]) == (-120.25, 45.5, 10.5, -3.25)
+    assert s.error.to_pylist() == [
+        None, None, "null",
+        "Invalid latitude: latitudes are range -90 to 90: provided lat: [95.0]",
+        "Invalid longitude: longitudes are range -180 to 180: provided lon: [190.0]",
+        "incompatible dimension (2) and values (1,2,3)",
+        "could not convert string to float: 'abc'",
+        "incompatible dimension (2) and values (5)",
+        "Invalid longitude: longitudes are range -180 to 180: provided lon: [1e+300]"]
+    assert s.kind.tolist() == [1, 1] + [0] * 7
+
+
+def test_binary_column_null_and_bad_rows():
+    import pyarrow as pa
+
+    from spatial4n_spark import functions as SF
+    from spatial4n_spark.kernels import binary as B
+    from spatial4n_spark.shapes import decode
+    blob = B.write_shape(P("POLYGON((0 0, 4 0, 4 3, 0 0))"))
+    s = decode(SF.st_from_binary.func(
+        pa.array([blob, None, b"", b"\x07", blob], type=pa.binary())))
+    assert s.kind.tolist() == [7, 0, 0, 0, 7]
+    assert s.error.to_pylist()[:2] == [None, "null"]
+    assert s.error[2].as_py() and s.error[3].as_py()
+    assert list(s.xs[4]) == [0.0, 4.0, 4.0, 0.0]
+    assert list(s.ring_offsets[0]) == [0, 4]
 
 
 def _large_rings(n=2400, seed=5):
