@@ -375,7 +375,7 @@ def test_latlon_column_error_rows():
     from spatial4n_spark import functions as SF
     from spatial4n_spark.shapes import decode
     texts = ["45.5, -120.25", " -3.25 ,10.5 ", None, "95, 0", "0, 190",
-             "1,2,3", "abc, 5", "5", "1, " + "9" * 300]
+             "1,2,3", "abc, 5", "5", "1,2," + "9" * 300]
     cols = wkt.parse_column(texts, wkt.parse_latlon)
     _assert_columns_match(cols, texts, wkt.parse_latlon)
     s = decode(SF.st_from_latlon.func(pa.array(texts)))
@@ -387,7 +387,7 @@ def test_latlon_column_error_rows():
         "incompatible dimension (2) and values (1,2,3)",
         "could not convert string to float: 'abc'",
         "incompatible dimension (2) and values (5)",
-        "Invalid longitude: longitudes are range -180 to 180: provided lon: [1e+300]"]
+        ("incompatible dimension (2) and values (1,2," + "9" * 300)[:200]]
     assert s.kind.tolist() == [1, 1] + [0] * 7
 
 
