@@ -24,14 +24,13 @@ simplicity), and the alt reader's POINT with its bounds errors and lon
 wrap. The per-string parser handles the rest, including every row a
 fast path turns away (errors -> reason, no exceptions, mirroring
 engine kernels' no-throw rule). Vertex fields come out as flat
-`shapes.VertexLists`, no per-row Python list.
+`shapes.VertexLists`, built once per batch from the rows that have
+vertices.
 """
 from __future__ import annotations
 
 import re
-import warnings
 from functools import partial
-from itertools import chain
 from typing import Optional
 
 import numpy as np
@@ -51,10 +50,11 @@ KIND_MULTIPOLYGON = 8
 KIND_COLLECTION = 9
 
 _NUM_RE = r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?"
-# single-ring polygon, plain "x y, x y, ..." coordinates
+# single-ring polygon of plain "x y, x y, ..." coordinates, in the
+# tokenizer's grammar: every number whole, one comma between points
 _POLYGON_FAST = re.compile(
-    r"^\s*POLYGON\s*\(\s*\(\s*([0-9eE+.,\s-]+?)\s*\)\s*\)\s*$",
-    re.IGNORECASE)
+    rf"^\s*POLYGON\s*\(\s*\(\s*({_NUM_RE}\s+{_NUM_RE}"
+    rf"(?:\s*,\s*{_NUM_RE}\s+{_NUM_RE})*)\s*\)\s*\)\s*$", re.IGNORECASE)
 
 # RE2 patterns of the fast paths ((?i) = case-insensitive), run by
 # pyarrow.compute over the rows still to do
@@ -1038,32 +1038,23 @@ def _parse_shape(st: _State, geo: bool, dateline_rule: str = "width180",
 # batch parse: one Arrow text/bytes column -> the shape-struct field columns
 # ---------------------------------------------------------------------------
 
-_SCALAR_FIELDS = ("x", "y", "radius", "minx", "maxx", "miny", "maxy")
-_VERTEX_DTYPES = {"xs": np.float64, "ys": np.float64,
-                  "ring_offsets": np.int64}
-_RECORD_FIELDS = ("kind",) + _SCALAR_FIELDS + tuple(_VERTEX_DTYPES)
-
-
 class _Columns:
     """The shape-struct fields of one batch while they are filled:
     `kind` and the scalar fields as NumPy arrays (NaN reads null),
-    `error` as a list, and each vertex field as pieces (rows, per-row
-    lengths, flat values) joined into one `VertexLists` by `columns`."""
+    `error` as a list and each vertex field as a {row: values} dict (a
+    row not in it reads null)."""
 
     def __init__(self, n: int):
+        from ..shapes import SCALAR_FIELDS, VERTEX_FIELDS  # no Spark at import
         self.kind = np.zeros(n, dtype=np.int8)
-        self.scalars = {f: np.full(n, np.nan) for f in _SCALAR_FIELDS}
+        self.scalars = {f: np.full(n, np.nan) for f in SCALAR_FIELDS}
+        self.verts = {f: {} for f in VERTEX_FIELDS}
         self.error: list = [None] * n
-        self.pieces: dict = {f: [] for f in _VERTEX_DTYPES}
 
     def put(self, rows, kind, **scalars):
         self.kind[rows] = kind
         for f, v in scalars.items():
             self.scalars[f][rows] = v
-
-    def put_vertices(self, rows, field: str, lens, values):
-        """Row rows[k] holds values[sum(lens[:k]):sum(lens[:k + 1])]."""
-        self.pieces[field].append((rows, np.asarray(lens), values))
 
     def put_records(self, rows, values: list, parse_one):
         """Parse values[k] into row rows[k] with `parse_one`; an
@@ -1072,45 +1063,27 @@ class _Columns:
         for i, v in zip(rows.tolist(), values):
             try:
                 rec = parse_one(v)
-                recs.append([rec[f] for f in _RECORD_FIELDS])
             except Exception as e:  # noqa: BLE001
                 self.error[i] = str(e)[:200]
                 continue
             done.append(i)
-        if not done:
-            return
-        rows = np.asarray(done)
-        fields = dict(zip(_RECORD_FIELDS, zip(*recs)))
-        self.put(rows, fields["kind"],
-                 **{f: np.array(fields[f], dtype=np.float64)
-                    for f in _SCALAR_FIELDS})
-        for f, dtype in _VERTEX_DTYPES.items():
-            keep = [k for k, v in enumerate(fields[f])
-                    if v is not None and len(v)]
-            if keep:
-                seqs = [fields[f][k] for k in keep]
-                self.put_vertices(rows[keep], f, [len(v) for v in seqs],
-                                  np.fromiter(chain.from_iterable(seqs), dtype))
+            recs.append(rec)
+            for f, col in self.verts.items():
+                if rec[f] is not None and len(rec[f]):
+                    col[i] = rec[f]
+        if recs:
+            self.put(np.asarray(done), [r["kind"] for r in recs],
+                     **{f: np.array([r[f] for r in recs], dtype=np.float64)
+                        for f in self.scalars})
 
     def columns(self) -> dict:
         from ..shapes import VertexLists
-        n = len(self.kind)
         lists = {}
-        for f, dtype in _VERTEX_DTYPES.items():
-            lens = np.zeros(n, dtype=np.int64)
-            valid = np.zeros(n, dtype=bool)
-            for rows, piece_lens, _ in self.pieces[f]:
-                lens[rows] = piece_lens
-                valid[rows] = True
-            offsets = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(lens, out=offsets[1:])
-            values = np.empty(offsets[-1], dtype=dtype)
-            for rows, piece_lens, v in self.pieces[f]:
-                # value j of a piece sits at its row's offset plus j less
-                # the piece's own start of that row
-                shift = offsets[rows] - (np.cumsum(piece_lens) - piece_lens)
-                values[np.repeat(shift, piece_lens) + np.arange(len(v))] = v
-            lists[f] = VertexLists(values, offsets, valid)
+        for f, col in self.verts.items():
+            rows = sorted(col)
+            lists[f] = VertexLists.from_rows(
+                len(self.kind), rows, [col[i] for i in rows],
+                np.int64 if f == "ring_offsets" else np.float64)
         return dict(kind=self.kind, **self.scalars, **lists, error=self.error)
 
 
@@ -1162,13 +1135,18 @@ def _extract_f64(strs, pattern: str, groups: str) -> list:
             .to_numpy(zero_copy_only=False) for g in groups]
 
 
-def _point_fast(strs, rows, out, snap=None):
-    """POINT (x y ...) -> point."""
+def _point_rows(strs, snap):
+    """The rows of POINT (x y ...): their mask and their snapped x, y."""
     x, y = _extract_f64(strs, _POINT_RE2, "ab")
     if snap is not None:
         x, y = snap(x), snap(y)
     ok = ~np.isnan(x) & ~np.isnan(y)
-    x, y = x[ok], y[ok]
+    return ok, x[ok], y[ok]
+
+
+def _point_fast(strs, rows, out, snap=None):
+    """POINT (x y ...) -> point."""
+    ok, x, y = _point_rows(strs, snap)
     out.put(rows[ok], KIND_POINT, x=x, y=y, minx=x, maxx=x, miny=y, maxy=y)
     return ok
 
@@ -1179,11 +1157,8 @@ def _ntsreader_point_fast(strs, rows, out, geo=True, snap=None,
     """POINT (x y ...) under the alt reader: lon wrap under
     `norm_wrap_longitude`, then the bounds check, whose failure is the
     row's error (parse_shape_ntsreader's xy_hook, vectorized)."""
-    x, y = _extract_f64(strs, _POINT_RE2, "ab")
-    if snap is not None:
-        x, y = snap(x), snap(y)
-    ok = ~np.isnan(x) & ~np.isnan(y)
-    rows, x, y = rows[ok], x[ok], y[ok]
+    ok, x, y = _point_rows(strs, snap)
+    rows = rows[ok]
     if geo and norm_wrap_longitude:
         x = norm_lon_deg(x)
     minx_b, maxx_b, miny_b, maxy_b = world_bounds
@@ -1245,24 +1220,19 @@ def _polygon_fast(strs, rows, out, geo=True, validation_rule="error",
     cand = np.nonzero(pc.match_substring(strs, "POLYGON", ignore_case=True)
                       .to_numpy(zero_copy_only=False))[0]
     by_count: dict = {}
-    with warnings.catch_warnings():
-        # np.fromstring warns where it stops short of the end ('0 0e',
-        # '1..5'): that prefix is not the ring the text spells
-        warnings.simplefilter("error", DeprecationWarning)
-        for k, text in zip(cand.tolist(), strs.take(cand).to_pylist()):
-            m = _POLYGON_FAST.match(text)
-            if not m:
-                continue
-            body = m.group(1).replace(",", " ")
-            try:
-                flat = np.fromstring(body, sep=" ")
-            except (DeprecationWarning, ValueError):
-                continue
-            if flat.size < 8 or flat.size % 2:
-                continue  # <4 points: tokenizer raises "unclosed ring"
-            ks, flats = by_count.setdefault(flat.size, ([], []))
-            ks.append(k)
-            flats.append(flat)
+    for k, text in zip(cand.tolist(), strs.take(cand).to_pylist()):
+        m = _POLYGON_FAST.match(text)
+        if not m:
+            continue
+        body = m.group(1)
+        flat = np.fromstring(body.replace(",", " "), sep=" ")
+        if flat.size != 2 * body.count(",") + 2:
+            continue  # read short of the end: not the ring the text spells
+        if flat.size < 8:
+            continue  # <4 points: tokenizer raises "unclosed ring"
+        ks, flats = by_count.setdefault(flat.size, ([], []))
+        ks.append(k)
+        flats.append(flat)
     for ks, flats in by_count.values():
         ks = np.asarray(ks)
         flat = np.stack(flats)
@@ -1271,13 +1241,13 @@ def _polygon_fast(strs, rows, out, geo=True, validation_rule="error",
         vx, vy = flat[:, 0::2], flat[:, 1::2]
         ok = _fast_ring_rows(vx, vy, geo, validation_rule)
         ks, vx, vy = ks[ok], vx[ok], vy[ok]
-        m, nv = vx.shape
-        r = rows[ks]
-        out.put(r, KIND_POLYGON, minx=vx.min(axis=1), maxx=vx.max(axis=1),
-                miny=vy.min(axis=1), maxy=vy.max(axis=1))
-        out.put_vertices(r, "xs", np.full(m, nv), vx.ravel())
-        out.put_vertices(r, "ys", np.full(m, nv), vy.ravel())
-        out.put_vertices(r, "ring_offsets", np.full(m, 2), np.tile([0, nv], m))
+        out.put(rows[ks], KIND_POLYGON, minx=vx.min(axis=1),
+                maxx=vx.max(axis=1), miny=vy.min(axis=1), maxy=vy.max(axis=1))
+        r = rows[ks].tolist()
+        out.verts["xs"].update(zip(r, vx))
+        out.verts["ys"].update(zip(r, vy))
+        out.verts["ring_offsets"].update(
+            dict.fromkeys(r, np.array([0, vx.shape[1]])))
         taken[ks] = True
     return taken
 

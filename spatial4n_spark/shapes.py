@@ -69,13 +69,22 @@ class VertexLists:
     @classmethod
     def from_list(cls, seq, dtype) -> "VertexLists":
         """Per-row sequences (None for a null row) -> VertexLists."""
-        lens = [0 if v is None else len(v) for v in seq]
-        offsets = np.zeros(len(seq) + 1, dtype=np.int64)
+        rows = [i for i, v in enumerate(seq) if v is not None]
+        return cls.from_rows(len(seq), rows, [seq[i] for i in rows], dtype)
+
+    @classmethod
+    def from_rows(cls, n: int, rows, seqs, dtype) -> "VertexLists":
+        """n rows, row rows[k] holding seqs[k] (rows ascending); every
+        other row is null."""
+        parts = [np.asarray(v, dtype=dtype) for v in seqs]
+        valid = np.zeros(n, dtype=bool)
+        valid[rows] = True
+        lens = np.zeros(n, dtype=np.int64)
+        lens[rows] = [len(v) for v in parts]
+        offsets = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(lens, out=offsets[1:])
-        parts = [np.asarray(v, dtype=dtype) for v in seq if v is not None]
         values = np.concatenate(parts) if parts else np.zeros(0, dtype)
-        return cls(values, offsets,
-                   np.array([v is not None for v in seq], dtype=bool))
+        return cls(values, offsets, valid)
 
     def __len__(self):
         return len(self.valid)

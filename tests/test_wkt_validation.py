@@ -264,9 +264,10 @@ def _same(a, b):
                        and np.isnan(a) and np.isnan(b)))
 
 
-def _assert_columns_match(cols, texts, parse_one):
+def _assert_columns_match(cols, texts, parse_one, errors=wkt.WktParseError):
     """Row i of a columnar parse equals parse_one(texts[i]): kind,
-    scalar fields, vertices and error text ("null" for a null row)."""
+    scalar fields, vertices and error text ("null" for a null row).
+    parse_one may raise only `errors`; anything else fails the test."""
     kinds = set()
     for i, t in enumerate(texts):
         if t is None:
@@ -274,7 +275,7 @@ def _assert_columns_match(cols, texts, parse_one):
         else:
             try:
                 rec, err = parse_one(t), None
-            except Exception as e:  # noqa: BLE001 - error rows compare too
+            except errors as e:
                 rec, err = None, str(e)[:200]
         assert cols["error"][i] == err, (t, cols["error"][i], err)
         if rec is None:
@@ -308,8 +309,11 @@ def test_columns_polygon_batch_matches_parse_shape(rule, snap):
     assert {wkt.KIND_POLYGON, wkt.KIND_RECT} <= kinds
 
 
-# the ENVELOPE, BUFFER(POINT) and POINT fast paths' edges, null rows and
-# POLYGON texts whose coordinate list np.fromstring reads only in part
+# the ENVELOPE, BUFFER(POINT) and POINT fast paths' edges, signed and
+# 400-digit numerals, null rows, POLYGON texts whose coordinate list
+# np.fromstring reads only in part and POLYGON comma lists the tokenizer
+# rejects
+LONG = "1" * 400
 FAST_PATH_EDGES = [
     "ENVELOPE (180, -170, 10, 0)", "ENVELOPE (170, -180, 10, 0)",
     "ENVELOPE (180, -180, 10, 0)", "ENVELOPE (-180, 180, 10, 0)",
@@ -324,6 +328,13 @@ FAST_PATH_EDGES = [
     "POLYGON((0 0, 4 0, 4 3, 0 0))", "POLYGON((0 0, 1 0, 1 1, 0 0, e 5))",
     "POLYGON((0 0, 1 0, 1 1, 0 0e))", "POLYGON((0 0, 1 0, 1..5, 0 0))",
     "POLYGON((0 0, 1 0, 1-2 3, 0 0))", None,
+    "POINT (+1 2)", "ENVELOPE (+1, 2, 3, 1)", "BUFFER(POINT(+1 2), +1)",
+    "POINT (1. .5)", f"POINT ({LONG} 2)", f"POINT (0.{LONG} -{LONG}e-399)",
+    f"ENVELOPE (-{LONG}e-398, .{LONG}, +{LONG}e-399, 1.)",
+    f"BUFFER(POINT(1 2), 0.{LONG})",
+    f"POLYGON((+0 0, 4 0, 4 3., .0 {LONG}e-999))",
+    "POLYGON((0 0, 4 0,, 4 3, 0 0))", "POLYGON((0,0,4,0,4,3,0,0))",
+    "POLYGON((0 0, 4 0, 4 3, 0 0,))", "POLYGON((0 0 5, 4 0 5, 4 3 5, 0 0 5))",
 ]
 SNAPS = [None, wkt.make_snap("floating_single"), wkt.make_snap("fixed", 4.0)]
 
@@ -347,7 +358,9 @@ def test_ntsreader_columns_match_parse_shape_ntsreader(nwl, snap):
              "POINT(200 95)", "POINT (1e999 0)", "POINT Z (1 2 3)",
              "LINESTRING(0 0, 5 5)", "LINESTRING(0 0, 185 5)",
              "ENVELOPE(10, 20, 40, 30)", "POLYGON((0 0, 4 0, 4 3, 0 0))",
-             "POLYGON((170 0, 190 0, 190 5, 170 0))", "bogus"]
+             "POLYGON((170 0, 190 0, 190 5, 170 0))", "bogus",
+             "POINT (+1 2)", "POINT (1. .5)", f"POINT ({LONG} 2)",
+             f"POINT (0.{LONG} -{LONG}e-398)", "ENVELOPE (+1, 2, 3, 1)"]
     cols = wkt.parse_ntsreader_columns(texts, snap=snap,
                                        norm_wrap_longitude=nwl)
     kinds = _assert_columns_match(cols, texts, lambda t: wkt.parse_shape_ntsreader(
@@ -362,7 +375,8 @@ def test_legacy_column_matches_parse_legacy():
              "Circle(1 2)", "Circle(1 2 x=3)", "Circle(1 2 3 4)", "bogus",
              "", None, "x y"]
     cols = wkt.parse_column(texts, wkt.parse_legacy)
-    kinds = _assert_columns_match(cols, texts, wkt.parse_legacy)
+    kinds = _assert_columns_match(cols, texts, wkt.parse_legacy,
+                                  (wkt.WktParseError, ValueError))
     assert {wkt.KIND_POINT, wkt.KIND_RECT, wkt.KIND_CIRCLE} <= kinds
 
 
@@ -377,7 +391,8 @@ def test_latlon_column_error_rows():
     texts = ["45.5, -120.25", " -3.25 ,10.5 ", None, "95, 0", "0, 190",
              "1,2,3", "abc, 5", "5", "1,2," + "9" * 300]
     cols = wkt.parse_column(texts, wkt.parse_latlon)
-    _assert_columns_match(cols, texts, wkt.parse_latlon)
+    _assert_columns_match(cols, texts, wkt.parse_latlon,
+                          (wkt.WktParseError, ValueError))
     s = decode(SF.st_from_latlon.func(pa.array(texts)))
     assert (s.x[0], s.y[0], s.x[1], s.y[1]) == (-120.25, 45.5, 10.5, -3.25)
     assert s.error.to_pylist() == [
