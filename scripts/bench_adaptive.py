@@ -105,8 +105,7 @@ def main() -> None:
     results = {}
     truth = None
     for lv in (2, 3, 4, 5):
-        plan = JoinPlan(precision=lv, broadcast_shapes=True, salt=None,
-                        max_cover_cells=1 << 22, shape_kinds=(2,))
+        plan = JoinPlan(precision=lv, broadcast_shapes=True, salt=None, shape_kinds=(2,))
         n, sec = timed(f"fixed_L{lv}",
                        lambda p=plan: point_in_shape_join(pts, rdf, p))
         if truth is None:

@@ -49,8 +49,7 @@ def main() -> None:
            .persist())
     pts.count()
 
-    plan = JoinPlan(precision=3, broadcast_shapes=True, salt=None,
-                    max_cover_cells=8192)
+    plan = JoinPlan(precision=3, broadcast_shapes=True, salt=None)
 
     def run(shape_id):
         t0 = time.time()

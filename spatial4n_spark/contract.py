@@ -193,7 +193,7 @@ _B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 def _axis_idx_sql(coord, lo: float, span: float, bits: int) -> str:
     """EXACT bisection-equivalent cell index: closed form + one boundary
     correction against the exactly-representable grid boundaries
-    b_i = lo + i*step (mirrors functions._axis_idx_col)."""
+    b_i = lo + i*step (mirrors functions._axis_idx_sql)."""
     n = 1 << bits
     step = span / n  # exact dyadic
     i0 = (f"least({n - 1}, greatest(0, "
@@ -215,7 +215,7 @@ def _lat_idx_sql(y, bits):
 
 def _morton_int_sql(lon_idx, lat_idx, precision):
     """Int64 geohash cell code from integer cell indices in SQL —
-    mirrors functions.st_morton_col / kernels.geohash.cell_code
+    mirrors functions._morton_sql / kernels.geohash.cell_code
     bit-for-bit (lon takes the MSB, interleaved lon-first)."""
     nbits = precision * 5
     lon_bits = (nbits + 1) // 2
@@ -427,7 +427,7 @@ def q_dwithin_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = customer_points(spark, sf_dir).withColumnRenamed("c_custkey", "point_id")
     qs = supplier_circles(spark, sf_dir).selectExpr(
         "circle_id AS query_id", "cx AS qx", "cy AS qy", "r AS qr")
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None, max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     out = distance_join(pts, qs, F.col("qr"), plan)
     return out.select(F.col("point_id").alias("c_custkey"),
                       F.col("query_id").alias("circle_id"))
@@ -449,7 +449,7 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = customer_points(spark, sf_dir).withColumnRenamed("c_custkey", "point_id")
     qs = supplier_circles(spark, sf_dir).selectExpr(
         "circle_id AS query_id", "cx AS qx", "cy AS qy")
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None, max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     out = knn_join(pts, qs, k=5, plan=plan, max_radius=60.0,
                    query_id="query_id", tie_break="point_id")
     return out.select(F.col("query_id").alias("circle_id"),
@@ -476,7 +476,7 @@ def q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (prefix truncation) at precision 2."""
     from . import functions as SF
     pts = customer_points(spark, sf_dir)
-    return (pts.withColumn("cell", SF.st_cell(F.col("y"), F.col("x"), 5))
+    return (pts.withColumn("cell", SF.st_cell("`y`", "`x`", 5))
                .withColumn("cell2", F.substring("cell", 1, 2))
                .select("c_custkey", "cell", "cell2"))
 
@@ -508,12 +508,12 @@ def q_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import functions as SF
     from .operators.cluster import grid_cluster
     pts = customer_points(spark, sf_dir)
-    roll = (pts.withColumn("cell", SF.st_cell(F.col("y"), F.col("x"), 5))
+    roll = (pts.withColumn("cell", SF.st_cell("`y`", "`x`", 5))
                .groupBy(F.substring("cell", 1, 2).alias("cell2"))
                .agg(F.count("*").alias("cnt")))
     lab = grid_cluster(pts, "x", "y", precision=2,
                        min_count=_GC_MIN_COUNT)
-    lab2 = (lab.withColumn("cell2", SF.st_cell(F.col("y"), F.col("x"), 2))
+    lab2 = (lab.withColumn("cell2", SF.st_cell("`y`", "`x`", 2))
                .groupBy("cell2")
                .agg(F.min("cluster_id").alias("cluster_id"),
                     F.countDistinct("cluster_id").cast("int")
@@ -686,7 +686,7 @@ def q_polygon_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .plans.strategy import JoinPlan
     polys = supplier_triangles(spark, sf_dir)
     pts = customer_points(spark, sf_dir)
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None, max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     out = point_in_shape_join(pts, polys, plan, shape_id="poly_id")
     return out.select("c_custkey", "poly_id")
 
@@ -1487,7 +1487,7 @@ def q_knn_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = customer_points(spark, sf_dir).withColumnRenamed("c_custkey", "point_id")
     qs = supplier_circles(spark, sf_dir).selectExpr(
         "circle_id AS query_id", "cx AS qx", "cy AS qy")
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None, max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     out = knn_join(pts, qs, k=5, plan=plan,
                    query_id="query_id", tie_break="point_id")
     return out.select(F.col("query_id").alias("circle_id"),
@@ -2187,7 +2187,7 @@ def q_cell_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell indices."""
     from . import functions as SF
     pts = customer_points(spark, sf_dir)
-    cells = pts.withColumn("cell", SF.st_cell(F.col("y"), F.col("x"), 4))
+    cells = pts.withColumn("cell", SF.st_cell("`y`", "`x`", 4))
     box = SF.st_cell_to_box(F.col("cell"))
     return cells.select("c_custkey", "cell",
                         box["minx"].alias("minx"), box["maxx"].alias("maxx"),
@@ -2217,7 +2217,7 @@ def q_sub_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 32 children of each distinct precision-1 cell of the points."""
     from . import functions as SF
     pts = customer_points(spark, sf_dir)
-    base = (pts.withColumn("cell1", SF.st_cell(F.col("y"), F.col("x"), 1))
+    base = (pts.withColumn("cell1", SF.st_cell("`y`", "`x`", 1))
                .select("cell1").distinct())
     from .kernels.geohash import BASE32
     children = F.explode(F.array(*[F.lit(c) for c in BASE32])).alias("suffix")

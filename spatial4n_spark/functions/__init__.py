@@ -36,8 +36,8 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf, pandas_udf
-from pyspark.sql.types import (ArrayType, ByteType, DoubleType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (ArrayType, ByteType, DoubleType, LongType,
+                               StringType, StructField, StructType)
 
 from ..kernels import geohash as _gh
 from ..kernels import relation as _rel
@@ -144,71 +144,6 @@ def st_from_wkt(texts, dateline_rule: str = "width180",
 
         udf = _WKT_UDF_CACHE[key] = _configured
     return udf(texts)
-
-
-@pandas_udf(StringType())
-def _st_cell_udf(lat: pd.Series, lon: pd.Series, precision: pd.Series) -> pd.Series:
-    p = int(precision.iloc[0])
-    return pd.Series(_gh.encode(lat.to_numpy(), lon.to_numpy(), p))
-
-
-def st_cell(lat, lon, precision: int):
-    """Geohash cell id of points (GeohashUtils.EncodeLatLon semantics)."""
-    return _st_cell_udf(lat, lon, F.lit(precision))
-
-
-from pyspark.sql.types import LongType  # noqa: E402
-
-
-@pandas_udf(LongType())
-def _st_cell_code_udf(lat: pd.Series, lon: pd.Series, precision: pd.Series) -> pd.Series:
-    p = int(precision.iloc[0])
-    return pd.Series(_gh.cell_code(lat.to_numpy(), lon.to_numpy(), p))
-
-
-def st_cell_code(lat, lon, precision: int):
-    """Int64 cell code (interleaved geohash bits) — join fast path."""
-    return _st_cell_code_udf(lat, lon, F.lit(precision))
-
-
-@pandas_udf(ArrayType(LongType()))
-def _st_cover_codes_udf(minx: pd.Series, maxx: pd.Series, miny: pd.Series,
-                        maxy: pd.Series, precision: pd.Series) -> pd.Series:
-    p = int(precision.iloc[0])
-    return pd.Series(_gh.cover_codes_bbox_batch(
-        minx.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxx.to_numpy(dtype=np.float64, na_value=np.nan),
-        miny.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxy.to_numpy(dtype=np.float64, na_value=np.nan), p))
-
-
-def st_cover_codes(minx, maxx, miny, maxy, precision: int):
-    """Int64-code tile cover of a bbox (join fast path)."""
-    return _st_cover_codes_udf(minx, maxx, miny, maxy, F.lit(precision))
-
-
-@pandas_udf(ArrayType(StringType()))
-def _st_cover_udf(minx: pd.Series, maxx: pd.Series, miny: pd.Series,
-                  maxy: pd.Series, precision: pd.Series) -> pd.Series:
-    p = int(precision.iloc[0])
-    out = []
-    mnx, mxx, mny, mxy = (minx.to_numpy(), maxx.to_numpy(),
-                          miny.to_numpy(), maxy.to_numpy())
-    for i in range(len(mnx)):
-        if np.isnan(mnx[i]):
-            out.append([])
-        else:
-            out.append(_gh.cover_cells_bbox(mnx[i], mxx[i], mny[i], mxy[i], p))
-    return pd.Series(out)
-
-
-def st_cover_cells(minx, maxx, miny, maxy, precision: int):
-    """Tile cover of a bbox at a fixed level (dateline-aware).
-
-    Equivalent to recursive GetSubGeohashes expansion with bbox pruning
-    (GeohashUtils.cs:207-216) evaluated at `precision`.
-    """
-    return _st_cover_udf(minx, maxx, miny, maxy, F.lit(precision))
 
 
 _BOX_SCHEMA = StructType([
@@ -446,30 +381,41 @@ def st_norm_lat(lat: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# JVM-side cell code: whole-stage-codegen geohash bit interleave
+# JVM-side cell keys: whole-stage-codegen geohash bit interleave
 # ---------------------------------------------------------------------------
+# Every cell key, cover and geohash string is built from SQL fragments
+# with one F.expr parse per call site (a Column-API Morton tree costs
+# ~150 py4j round trips, ~0.5 s of driver time per site).
 
 # byte b -> b's 8 bits spread to the even bit positions of 16 bits
 _SPREAD_LUT = [sum(((b >> i) & 1) << (2 * i) for i in range(8))
                for b in range(256)]
 _SPREAD_LUT_SQL = "array(" + ", ".join(f"{v}L" for v in _SPREAD_LUT) + ")"
+_CONV32_DIGITS = "0123456789ABCDEFGHIJKLMNOPQRSTUV"   # conv(x, 10, 32)
 
 
-def _spread_col(v, bits: int):
-    """Interleave-spread a Column index in [0, 2^bits): bit i -> bit 2i.
+def _dbl_lit(v: float) -> str:
+    """Exact SQL double literal (D suffix keeps the parser off DECIMAL)."""
+    return f"{v!r}D"
 
-    One `element_at` lookup in the byte table per input byte, so `v`
-    appears once per byte in the expression tree (see _spread_sql)."""
-    lut = F.expr(_SPREAD_LUT_SQL)
-    out = None
+
+def _spread_sql(v: str, bits: int) -> str:
+    """Interleave-spread an index fragment in [0, 2^bits): bit i -> bit
+    2i, by one `element_at` lookup in the byte table per input byte.
+
+    Each byte reads `v` once, so a cell code carries its axis index
+    expressions ceil(bits/8) times each (twice at precision 6, four
+    times at 12).
+    """
+    terms = []
     for k in range((bits + 7) // 8):
-        byte = F.shiftright(v, 8 * k).bitwiseAND(F.lit(255)).cast("int")
-        term = F.shiftleft(F.element_at(lut, byte + 1), 16 * k)
-        out = term if out is None else out.bitwiseOR(term)
-    return out
+        byte = f"CAST((shiftright({v}, {8 * k}) & 255L) AS INT)"
+        terms.append(f"shiftleft(element_at({_SPREAD_LUT_SQL}, {byte} + 1),"
+                     f" {16 * k})")
+    return "(" + " | ".join(terms) + ")"
 
 
-def _axis_idx_col(coord, lo: float, span: float, bits: int):
+def _axis_idx_sql(coord: str, lo: float, span: float, bits: int) -> str:
     """EXACT cell index along one axis: closed form + one boundary
     correction step.
 
@@ -481,52 +427,30 @@ def _axis_idx_col(coord, lo: float, span: float, bits: int):
     boundaries b_i = lo + i*step are exactly representable (dyadic step,
     <=36-bit products), so comparing coord against b_{i0} / b_{i0+1}
     restores the exact bisection index. Mirrored by the DuckDB oracle
-    (contract._lon_idx_sql)."""
-    n = 1 << bits
-    step = span / n  # exact dyadic for the +-180 / +-90 world
-    i0 = F.ceil((coord + F.lit(-lo)) / F.lit(span) * F.lit(float(n))).cast("long") - 1
-    i0 = F.least(F.lit(n - 1), F.greatest(F.lit(0), i0))
-    b_lo = F.lit(lo) + i0.cast("double") * F.lit(step)
-    b_hi = F.lit(lo) + (i0 + 1).cast("double") * F.lit(step)
-    corr = (F.when(coord > b_hi, 1)
-             .when(coord <= b_lo, -1).otherwise(0))
-    return F.least(F.lit(n - 1), F.greatest(F.lit(0), i0 + corr))
+    (contract._axis_idx_sql).
 
-
-def _dbl_lit(v: float) -> str:
-    """Exact SQL double literal (D suffix keeps the parser off DECIMAL)."""
-    return f"{v!r}D"
-
-
-def _spread_sql(v: str, bits: int) -> str:
-    """SQL-string twin of _spread_col: the same byte-table lookups.
-
-    Each input byte reads `v` once, so a cell code carries its axis
-    index expressions ceil(bits/8) times each (twice at precision 6,
-    four times at 12). Written with `shiftright`, not `>>`: the
-    operator form does not parse inside _cover_codes_sql's lambda.
+    NaN is index 0, as in the kernel, where NaN is never greater than a
+    midpoint; Spark orders NaN above every double, so the correction
+    alone would move it up a cell. A coordinate beyond the axis range,
+    +-inf included, clamps to the end cell. A null coordinate gives null.
     """
-    terms = []
-    for k in range((bits + 7) // 8):
-        byte = f"CAST((shiftright({v}, {8 * k}) & 255L) AS INT)"
-        terms.append(f"shiftleft(element_at({_SPREAD_LUT_SQL}, {byte} + 1),"
-                     f" {16 * k})")
-    return "(" + " | ".join(terms) + ")"
-
-
-def _axis_idx_sql(coord: str, lo: float, span: float, bits: int) -> str:
-    """SQL-string twin of _axis_idx_col (same closed form + boundary
-    correction; see that docstring for the exactness argument)."""
     n = 1 << bits
     step = span / n
-    i0 = (f"(CAST(ceil((({coord}) + {_dbl_lit(-lo)}) / {_dbl_lit(span)}"
-          f" * {_dbl_lit(float(n))}) AS BIGINT) - 1)")
-    i0 = f"least({n - 1}L, greatest(0L, {i0}))"
+    # clamp before the - 1: ceil of a huge negative coord is the least
+    # BIGINT, and subtracting from it overflows (an error under ANSI)
+    i0 = (f"(least({n}L, greatest(1L, CAST(ceil((({coord}) + {_dbl_lit(-lo)})"
+          f" / {_dbl_lit(span)} * {_dbl_lit(float(n))}) AS BIGINT))) - 1)")
     b_lo = f"({_dbl_lit(lo)} + (CAST({i0} AS DOUBLE) * {_dbl_lit(step)}))"
     b_hi = f"({_dbl_lit(lo)} + (CAST(({i0} + 1) AS DOUBLE) * {_dbl_lit(step)}))"
     corr = (f"(CASE WHEN ({coord}) > {b_hi} THEN 1"
             f" WHEN ({coord}) <= {b_lo} THEN -1 ELSE 0 END)")
-    return f"least({n - 1}L, greatest(0L, {i0} + {corr}))"
+    # least/greatest skip a null argument, so null needs its own branch.
+    # i0 is read three times; keep it so: the tile-index job's guarded
+    # cell code gets no subexpression elimination inside its CASE
+    # branch, and two more reads (the end-cell clamps folded into the
+    # correction's conditions) made that job's pass 29 % slower.
+    return (f"(CASE WHEN isnan({coord}) THEN 0L WHEN ({coord}) IS NOT NULL"
+            f" THEN least({n - 1}L, greatest(0L, {i0} + {corr})) END)")
 
 
 def _morton_sql(li: str, ti: str, precision: int) -> str:
@@ -541,6 +465,19 @@ def _morton_sql(li: str, ti: str, precision: int) -> str:
     return f"CAST(({st} | shiftleft({sl}, 1)) AS BIGINT)"
 
 
+def _geohash_sql(code: str, precision: int) -> str:
+    """Geohash string of an int64 cell-code fragment: its base-32
+    spelling, MSB first (as kernels.geohash.indices_to_hash). `conv`
+    writes the code in base 32 with the digits 0-9A-V, `lpad` restores
+    the leading zero digits and `translate` maps those digits to the
+    geohash alphabet. `code` is read once, so st_cell stays one cell
+    code long: the driver's plan analysis grows with the expression,
+    and one `element_at` per 5-bit group would read it `precision`
+    times (54 KB of SQL at precision 5)."""
+    return (f"translate(lpad(conv(CAST({code} AS STRING), 10, 32),"
+            f" {precision}, '0'), '{_CONV32_DIGITS}', '{_gh.BASE32}')")
+
+
 def _axis_sql_params(axis: str, precision: int) -> tuple:
     nbits = precision * 5
     if axis == "lon":
@@ -550,8 +487,9 @@ def _axis_sql_params(axis: str, precision: int) -> tuple:
     raise ValueError(axis)
 
 
-def st_axis_idx_col(coord, axis: str, precision: int):
-    """Exact per-axis grid index ('lon' or 'lat') at a geohash precision.
+def st_axis_idx_col(coord: str, axis: str, precision: int):
+    """Exact per-axis grid index ('lon' or 'lat') at a geohash precision
+    of the SQL fragment `coord`.
 
     Exposed as a building block so joins can PRECOMPUTE per-side axis
     indices in a projection and keep filter conditions small: codegen
@@ -561,32 +499,16 @@ def st_axis_idx_col(coord, axis: str, precision: int):
     copies per axis, four at precision 12. Precomputed plain columns
     keep a filter-context cell code far below Janino's 64 KB method
     limit (VERDICT r02 item 2).
-
-    `coord` may be a Column or a SQL fragment string; the string form
-    builds the whole expression with ONE F.expr parse (the Column form
-    costs hundreds of py4j roundtrips per call — measured ~0.5 s of
-    driver time per cell-code call site, pure plan-construction).
     """
     lo, span, bits = _axis_sql_params(axis, precision)
-    if isinstance(coord, str):
-        return F.expr(_axis_idx_sql(coord, lo, span, bits))
-    return _axis_idx_col(coord, lo, span, bits)
+    return F.expr(_axis_idx_sql(coord, lo, span, bits))
 
 
-def st_morton_col(li, ti, precision: int):
-    """Interleave precomputed (lon_idx, lat_idx) columns into the int64
-    cell code. li/ti should be plain column references (see
-    st_axis_idx_col) when used inside a filter condition. String
-    arguments are SQL fragments (single-parse fast path)."""
-    if isinstance(li, str) and isinstance(ti, str):
-        return F.expr(_morton_sql(li, ti, precision))
-    nbits = precision * 5
-    sl = _spread_col(li.cast("long"), (nbits + 1) // 2)
-    st = _spread_col(ti.cast("long"), nbits // 2)
-    if nbits % 2 == 1:
-        # odd total: lon occupies even bit positions (LSB-indexed)
-        return sl.bitwiseOR(F.shiftleft(st, 1)).cast("long")
-    return st.bitwiseOR(F.shiftleft(sl, 1)).cast("long")
+def st_morton_col(li: str, ti: str, precision: int):
+    """Interleave (lon_idx, lat_idx) SQL fragments into the int64 cell
+    code. li/ti should be plain column references (see st_axis_idx_col)
+    when used inside a filter condition."""
+    return F.expr(_morton_sql(li, ti, precision))
 
 
 def _cell_code_sql(lat: str, lon: str, precision: int) -> str:
@@ -597,72 +519,75 @@ def _cell_code_sql(lat: str, lon: str, precision: int) -> str:
                        precision)
 
 
-def st_cell_code_col(lat, lon, precision: int):
-    """Int64 geohash cell code as a PURE Column expression (no UDF).
+def st_cell_code_col(lat: str, lon: str, precision: int):
+    """Int64 geohash cell code of the point (lat, lon), given as SQL
+    fragments, as a pure Column expression (no UDF).
 
-    Bit-identical to kernels.geohash.cell_code: lon takes ceil(5p/2)
-    bits, lat floor(5p/2), interleaved lon-first from the MSB. Keeps
-    the entire point side of the spatial join in whole-stage codegen —
-    zero Arrow exchanges for cell assignment.
-
-    lat/lon may be Columns or SQL fragment strings; pass strings where
-    possible — the string path is one F.expr parse instead of ~150
-    py4j roundtrips (~0.5 s of driver time per call site).
+    Bit-identical to kernels.geohash.cell_code, NaN included: lon takes
+    ceil(5p/2) bits, lat floor(5p/2), interleaved lon-first from the
+    MSB. Keeps the point side of the spatial join in whole-stage
+    codegen. A null coordinate gives a null code.
     """
-    if isinstance(lat, str) and isinstance(lon, str):
-        return F.expr(_cell_code_sql(lat, lon, precision))
-    return st_morton_col(st_axis_idx_col(lon, "lon", precision),
-                         st_axis_idx_col(lat, "lat", precision), precision)
+    return F.expr(_cell_code_sql(lat, lon, precision))
 
 
-def _cover_codes_sql(minx: str, maxx: str, miny: str, maxy: str,
-                     precision: int) -> str:
-    nbits = precision * 5
-    lon_bits = (nbits + 1) // 2
-    lat_bits = nbits // 2
-    lon_n = 1 << lon_bits
-    li0 = _axis_idx_sql(minx, -180.0, 360.0, lon_bits)
-    li1 = _axis_idx_sql(maxx, -180.0, 360.0, lon_bits)
-    ti0 = _axis_idx_sql(miny, -90.0, 180.0, lat_bits)
-    ti1 = _axis_idx_sql(maxy, -90.0, 180.0, lat_bits)
-    lon_seq = (f"(CASE WHEN ({minx}) <= ({maxx}) THEN sequence({li0}, {li1})"
-               f" ELSE concat(sequence({li0}, {lon_n - 1}L),"
-               f" sequence(0L, {li1})) END)")
-    # lambda var names must not collide with caller columns referenced
-    # by the ti0/ti1 fragments (they sit inside the outer lambda body)
-    return (f"flatten(transform({lon_seq},"
-            f" __s4n_li -> transform(sequence({ti0}, {ti1}),"
-            f" __s4n_ti -> {_morton_sql('__s4n_li', '__s4n_ti', precision)})))")
+def st_cell(lat: str, lon: str, precision: int):
+    """Geohash cell id of the point (lat, lon), given as SQL fragments
+    (GeohashUtils.EncodeLatLon semantics; equal to
+    kernels.geohash.encode): the base-32 spelling of st_cell_code_col.
+    A null coordinate gives a null cell."""
+    return F.expr(_geohash_sql(_cell_code_sql(lat, lon, precision),
+                               precision))
 
 
-def st_cover_codes_col(minx, maxx, miny, maxy, precision: int):
-    """Int64-code tile cover of a bbox as a PURE Column expression.
+def with_cover_codes(df, minx: str, maxx: str, miny: str, maxy: str,
+                     precision: int, out: str = "cover_cell"):
+    """`df` with one row per (input row, cover cell): column `out` holds
+    the int64 code of each cell at `precision` that the bbox (SQL
+    fragments, dateline-aware) overlaps.
 
-    Same cell set as kernels.geohash.cover_codes_bbox (grid range
-    between the corner cells, dateline-aware lon wrap), built with
-    sequence/transform/flatten + the Morton spread — no Python on the
-    shape side of the join either.
+    The cell set equals kernels.geohash.cover_codes_bbox_batch's, with
+    no duplicates: the grid range between the corner cells, wrapping
+    past the last lon index when minx > maxx (the whole lon ring when
+    the wrapped range would overlap itself). A NaN minx, a null bound or
+    an empty index range (miny > maxy across a cell boundary) gives no
+    rows; any other NaN bound reads as index 0, as in the kernel.
 
-    String arguments are SQL fragments (single-parse fast path); all
-    four must then be strings.
+    A generator cannot nest in another expression, so this is a
+    DataFrame step, not a Column: the corner indices and range sizes
+    are projected first, then one explode over k in [0, nlon * nlat)
+    spells (pmod(li0 + k div nlat, lon_n), ti0 + k mod nlat) into the
+    Morton code, all in whole-stage codegen.
     """
-    if all(isinstance(c, str) for c in (minx, maxx, miny, maxy)):
-        return F.expr(_cover_codes_sql(minx, maxx, miny, maxy, precision))
-    nbits = precision * 5
-    lon_bits = (nbits + 1) // 2
-    lat_bits = nbits // 2
+    lon_lo, lon_span, lon_bits = _axis_sql_params("lon", precision)
+    lat_lo, lat_span, lat_bits = _axis_sql_params("lat", precision)
     lon_n = 1 << lon_bits
-    li0 = _axis_idx_col(minx, -180.0, 360.0, lon_bits)
-    li1 = _axis_idx_col(maxx, -180.0, 360.0, lon_bits)
-    ti0 = _axis_idx_col(miny, -90.0, 180.0, lat_bits)
-    ti1 = _axis_idx_col(maxy, -90.0, 180.0, lat_bits)
-    lon_seq = F.when(minx <= maxx, F.sequence(li0, li1)).otherwise(
-        F.concat(F.sequence(li0, F.lit(lon_n - 1)), F.sequence(F.lit(0), li1)))
-
-    return F.flatten(F.transform(
-        lon_seq, lambda li: F.transform(F.sequence(ti0, ti1),
-                                        lambda ti: st_morton_col(li, ti,
-                                                                 precision))))
+    li0 = _axis_idx_sql(minx, lon_lo, lon_span, lon_bits)
+    li1 = _axis_idx_sql(maxx, lon_lo, lon_span, lon_bits)
+    ti0 = _axis_idx_sql(miny, lat_lo, lat_span, lat_bits)
+    ti1 = _axis_idx_sql(maxy, lat_lo, lat_span, lat_bits)
+    nlon = (f"CASE WHEN isnan({minx}) THEN 0L"
+            f" WHEN ({minx}) > ({maxx})"
+            f" THEN least(__cv_li1 - __cv_li0 + {lon_n + 1}L, {lon_n}L)"
+            f" ELSE __cv_li1 - __cv_li0 + 1L END")
+    k = ("CASE WHEN __cv_nlon > 0 AND __cv_nlat > 0"
+         " THEN sequence(0L, __cv_nlon * __cv_nlat - 1L) END")
+    code = _morton_sql(f"pmod(__cv_li0 + __cv_k div __cv_nlat, {lon_n}L)",
+                       "__cv_ti0 + __cv_k % __cv_nlat", precision)
+    # the indices get their own projection (read more than once below,
+    # so it is not collapsed into the next): each is computed once.
+    # explode_outer + a null filter on the output, not explode: explode
+    # makes InferFiltersFromGenerate add a size() > 0 pre-filter that
+    # builds every sequence array a second time
+    return (df.selectExpr("*", f"{li0} AS __cv_li0", f"{li1} AS __cv_li1",
+                          f"{ti0} AS __cv_ti0", f"{ti1} AS __cv_ti1")
+              .selectExpr("*", f"{nlon} AS __cv_nlon",
+                          "__cv_ti1 - __cv_ti0 + 1L AS __cv_nlat")
+              .selectExpr("*", f"explode_outer({k}) AS __cv_k")
+              .where("__cv_k IS NOT NULL")
+              .withColumn(out, F.expr(code))
+              .drop("__cv_li0", "__cv_li1", "__cv_ti0", "__cv_ti1",
+                    "__cv_nlon", "__cv_nlat", "__cv_k"))
 
 
 @pandas_udf(ArrayType(LongType()))
@@ -721,8 +646,8 @@ def st_cover_pyramid(minx, maxx, miny, maxy,
 
 
 def st_cell_codes_for_levels_col(lat, lon, levels):
-    """Array of level-tagged cell codes of a point at each level in
-    `levels` — the point side of the adaptive multi-level join, as a
+    """Array of level-tagged cell codes of the point (lat, lon SQL
+    fragments) at each level in `levels` — the point side of the adaptive multi-level join, as a
     PURE Column expression (whole-stage codegen; zero Arrow exchange).
 
     Only the FINEST level gets a Morton tree; every coarser code is its
@@ -1228,11 +1153,14 @@ def rect_intersection_area_cols(aminx, amaxx, aminy, amaxy,
 
 
 def make_st_to_wkt(decimals: int | None = None):
-    """WKT formatter UDF factory (shape struct -> text)."""
+    """WKT formatter UDF factory (shape struct -> text). A null shape or
+    an error row writes null; EMPTY writes "POLYGON EMPTY", which
+    st_from_wkt reads back as the same EMPTY row."""
     @arrow_udf(StringType())
     def _to_wkt(shape: pa.Array) -> pa.Array:
         s = decode(shape)
-        return pa.array([_wkt.format_wkt(
+        skip = ~s.valid | s.error.is_valid().to_numpy(zero_copy_only=False)
+        return pa.array([None if skip[i] else _wkt.format_wkt(
             int(s.kind[i]), s.x[i], s.y[i], s.radius[i], s.minx[i],
             s.maxx[i], s.miny[i], s.maxy[i], *s.verts(i), decimals)
             for i in range(len(s))], type=pa.string())
@@ -1377,11 +1305,17 @@ from pyspark.sql.types import BinaryType  # noqa: E402
 @arrow_udf(BinaryType())
 def st_to_binary(shape: pa.Array) -> pa.Array:
     """Shape -> reference-layout bytes (Io/BinaryCodec.cs:158-234;
-    geometry kinds via the WKB branch, Io/Nts/NtsBinaryCodec.cs)."""
+    geometry kinds via the WKB branch, Io/Nts/NtsBinaryCodec.cs).
+
+    A null shape, an error row and EMPTY write null: the reference
+    layout has no value that reads back as EMPTY."""
     from ..kernels import binary as _bin
     s = decode(shape)
     out = []
     for i in range(len(s)):
+        if s.kind[i] == _wkt.KIND_EMPTY:
+            out.append(None)
+            continue
         rec = s.record(i)
         for name in ("xs", "ys", "ring_offsets"):
             if rec[name] is not None:
@@ -1428,8 +1362,8 @@ def register_sql_functions(spark, prefix: str = "") -> list:
     """Register the Arrow-batched st_* UDFs for Spark SQL text queries
     (`spark.udf.register` surface — the SURVEY §2.6 extensibility row).
     Shape arguments and results are whole shape structs, e.g.
-    `st_buffer(st_from_wkt(wkt), 2.5)`. Column-expression builders
-    (st_cell_code_col, st_cover_codes_col) are pure Catalyst
+    `st_buffer(st_from_wkt(wkt), 2.5)`. The cell-key builders
+    (st_cell_code_col, st_cell, with_cover_codes) are pure Catalyst
     expressions and need no registration. Returns the registered
     names."""
     udfs = {

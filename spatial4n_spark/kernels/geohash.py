@@ -227,12 +227,9 @@ def cover_codes_bbox_batch(minx, maxx, miny, maxy, precision: int) -> list:
     """Batch cover_codes_bbox: one vectorized index pass for the whole
     batch + tiny table-lookup per row (no per-bit interleave loop).
 
-    This is the Arrow-UDF shape-side cover for the distributed joins:
-    ~30x faster per row than the scalar path, and using it instead of
-    the pure-Column sequence/transform expression also keeps the
-    whole-stage-codegen source small (the HOF cover expression is
-    CodegenFallback anyway — interpreted per row — AND its Janino
-    compile alone cost seconds per plan)."""
+    A NaN minx gives an empty cover; a wrap whose ends share a lon cell
+    lists that cell twice. The test oracle of the engine's codegen cover
+    (functions.with_cover_codes), which equals it as a set per row."""
     minx = np.asarray(minx, dtype=np.float64)
     maxx = np.asarray(maxx, dtype=np.float64)
     miny = np.asarray(miny, dtype=np.float64)

@@ -1399,6 +1399,8 @@ def _fmt(v: float, decimals: int | None) -> str:
 def format_wkt(kind: int, x, y, radius, minx, maxx, miny, maxy,
                xs, ys, ring_offsets, decimals: int | None = None) -> str:
     f = lambda v: _fmt(v, decimals)  # noqa: E731
+    if kind == KIND_EMPTY:
+        return "POLYGON EMPTY"
     if kind == KIND_POINT:
         return f"POINT ({f(x)} {f(y)})"
     if kind == KIND_RECT:

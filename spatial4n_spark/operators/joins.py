@@ -6,6 +6,12 @@ equi-join on cell_id against point cells -> cheap vectorized bbox gate
 once by construction: a point lives in exactly ONE cell at a level and
 a shape's cover set has no duplicates — no post-join dedup shuffle.
 
+Every cell key runs in whole-stage codegen, built from SQL fragments
+by one builder in `functions`: a point's code is `st_cell_code_col`,
+and every fixed-level cover (shapes, slim closure bboxes, circle
+boxes, zones) is `with_cover_codes`, one `explode(sequence)` generate
+plus the Morton spread. Python runs only in the exact refines.
+
 Scale levers:
 - broadcast(shape_cover) when the shape side is small (the common
   query-shapes-vs-planet case);
@@ -29,19 +35,23 @@ from ..plans.strategy import JoinPlan
 def with_point_cell(points: DataFrame, x: str = "x", y: str = "y",
                     precision: int = 6, cell_col: str = "cell_id",
                     codes: bool = True) -> DataFrame:
-    """Assign each point its (single) cell.
+    """Assign each point its (single) cell, as a pure Column expression
+    (Morton bit-spread, whole-stage codegen, no Python).
 
-    codes=True (default) uses the int64 interleaved-bit cell code
-    computed as a PURE Column expression (Morton bit-spread, whole-stage
-    codegen, zero Arrow exchange) — the join fast path. codes=False
-    produces the reference-compatible geohash string via the kernel.
+    codes=True (default) gives the int64 interleaved-bit cell code, the
+    join key; codes=False spells it as the reference-compatible geohash
+    string.
     """
-    if codes:
-        # string fragments: single-F.expr construction (the Column form
-        # costs ~150 py4j roundtrips of driver time per call site)
-        return points.withColumn(
-            cell_col, SF.st_cell_code_col(f"`{y}`", f"`{x}`", precision))
-    return points.withColumn(cell_col, SF.st_cell(F.col(y), F.col(x), precision))
+    cell = SF.st_cell_code_col if codes else SF.st_cell
+    return points.withColumn(cell_col, cell(f"`{y}`", f"`{x}`", precision))
+
+
+def _bbox_sql(shape_col: str) -> tuple:
+    """SQL fragments of a shape struct's materialized bbox fields."""
+    return tuple(f"`{shape_col}`.`{f}`" for f in ("minx", "maxx", "miny", "maxy"))
+
+
+_SLIM_BBOX = ("`__minx`", "`__maxx`", "`__miny`", "`__maxy`")
 
 
 def with_shape_cover(shapes: DataFrame, shape_col: str = "shape",
@@ -51,29 +61,16 @@ def with_shape_cover(shapes: DataFrame, shape_col: str = "shape",
 
     The bbox is the shape struct's materialized minx/maxx/miny/maxy
     (dateline-aware), so circles/polygons/rects all cover correctly.
-    codes=True builds int64 codes with the pure-JVM grid-range
-    expression (no Python on the shape side); codes=False produces
-    reference-compatible geohash strings via the kernel.
+    The cover is SF.with_cover_codes (whole-stage codegen, no Python);
+    codes=True keeps the int64 codes, codes=False spells them as
+    reference-compatible geohash strings.
     """
-    s = F.col(shape_col)
+    out = SF.with_cover_codes(shapes, *_bbox_sql(shape_col), precision,
+                              cover_col)
     if codes:
-        cells = SF.st_cover_codes_col(
-            f"`{shape_col}`.`minx`", f"`{shape_col}`.`maxx`",
-            f"`{shape_col}`.`miny`", f"`{shape_col}`.`maxy`", precision)
-    else:
-        cells = SF.st_cover_cells(s["minx"], s["maxx"],
-                                  s["miny"], s["maxy"], precision)
-    # explode_outer + null-filter on the OUTPUT column, not explode:
-    # plain explode triggers InferFiltersFromGenerate, whose
-    # size(__cells)>0 pre-filter extracts a SECOND ArrowEvalPython node
-    # evaluating the cover UDF twice per row (observed in the physical
-    # plan). Outer generates are exempt from the rule; empty/null covers
-    # drop in the null-filter instead — identical output, one UDF pass.
-    return (shapes
-            .withColumn("__cells", cells)
-            .withColumn(cover_col, F.explode_outer("__cells"))
-            .drop("__cells")
-            .where(F.col(cover_col).isNotNull()))
+        return out
+    return out.withColumn(cover_col, F.expr(
+        SF._geohash_sql(f"`{cover_col}`", precision)))
 
 
 def point_in_shape_join(points: DataFrame, shapes: DataFrame, plan: JoinPlan,
@@ -188,11 +185,7 @@ def _point_in_shape_join_closure(points: DataFrame, shapes: DataFrame,
         cnames = [shape_id, "__minx", "__maxx", "__miny", "__maxy"] + \
                  [f"__{t}{k}" for k in range(k_max) for t in ("a", "b", "c")]
         slim = spark.createDataFrame(rows, cnames)
-        cover = (slim.withColumn("cover_cell", F.explode_outer(
-                     SF.st_cover_codes_col("`__minx`", "`__maxx`",
-                                           "`__miny`", "`__maxy`",
-                                           plan.precision)))
-                     .where(F.col("cover_cell").isNotNull()))
+        cover = SF.with_cover_codes(slim, *_SLIM_BBOX, plan.precision)
         pts = with_point_cell(points, point_x, point_y, plan.precision,
                               codes=True)
         joined = pts.join(F.broadcast(cover),
@@ -211,11 +204,7 @@ def _point_in_shape_join_closure(points: DataFrame, shapes: DataFrame,
 
     refine_udf = make_closure_refine(table)
     slim = _slim_bbox(shapes, shape_col, shape_id)
-    cover = (slim.withColumn("cover_cell", F.explode_outer(
-                 SF.st_cover_codes_col("`__minx`", "`__maxx`",
-                                       "`__miny`", "`__maxy`",
-                                       plan.precision)))
-                 .where(F.col("cover_cell").isNotNull()))
+    cover = SF.with_cover_codes(slim, *_SLIM_BBOX, plan.precision)
     pts = with_point_cell(points, point_x, point_y, plan.precision, codes=True)
     joined = pts.join(F.broadcast(cover),
                       pts["cell_id"] == cover["cover_cell"], "inner")
@@ -385,13 +374,7 @@ def _circle_candidates(points: DataFrame, queries: DataFrame,
     """
     qx, qy = F.col(query_x), F.col(query_y)
     q = queries.withColumn("__box", SF.st_circle_bbox(qx, qy, radius))
-    # batch Arrow cover on the (small) query side — see shape_shape_join
-    q = (q.withColumn("__cells", SF.st_cover_codes(
-            F.col("__box.minx"), F.col("__box.maxx"),
-            F.col("__box.miny"), F.col("__box.maxy"), plan.precision))
-          .withColumn("cover_cell", F.explode_outer("__cells"))
-          .drop("__cells", "__box")
-          .where(F.col("cover_cell").isNotNull()))
+    q = SF.with_cover_codes(q, *_bbox_sql("__box"), plan.precision).drop("__box")
     pts = with_point_cell(points, point_x, point_y, plan.precision, codes=True)
     if plan.broadcast_shapes:
         q = F.broadcast(q)
@@ -661,24 +644,15 @@ def shape_shape_join(left: DataFrame, right: DataFrame, precision: int,
     # axis). axis_idx is monotone in the coordinate, so
     # idx(greatest(lminx, rminx)) == greatest(lidx, ridx) and the
     # reference-point dedup semantics are unchanged.
-    # Cover arrays come from the BATCH Arrow kernel, not the pure-Column
-    # sequence/transform expression: the HOF expression is
-    # CodegenFallback (interpreted ~1ms/row) and its enclosing stage
-    # cost seconds of Janino compile per plan; the vectorized kernel is
-    # ~30x faster per shape and keeps the codegen stage small. Both
-    # produce the same cell set from the same exact axis indexing.
-    lc = (left.withColumn("__lli0", SF.st_axis_idx_col(f"`{left_shape}`.`minx`", "lon", precision))
-              .withColumn("__lti0", SF.st_axis_idx_col(f"`{left_shape}`.`miny`", "lat", precision))
-              .withColumn("__cells", SF.st_cover_codes(
-                  ls["minx"], ls["maxx"], ls["miny"], ls["maxy"], precision))
-              .withColumn("__cell", F.explode_outer("__cells")).drop("__cells")
-              .where(F.col("__cell").isNotNull()))
-    rc = (right.withColumn("__rli0", SF.st_axis_idx_col(f"`{right_shape}`.`minx`", "lon", precision))
-               .withColumn("__rti0", SF.st_axis_idx_col(f"`{right_shape}`.`miny`", "lat", precision))
-               .withColumn("__cells", SF.st_cover_codes(
-                   rs["minx"], rs["maxx"], rs["miny"], rs["maxy"], precision))
-               .withColumn("__cell", F.explode_outer("__cells")).drop("__cells")
-              .where(F.col("__cell").isNotNull()))
+    lbox, rbox = _bbox_sql(left_shape), _bbox_sql(right_shape)
+    lc = SF.with_cover_codes(
+        left.withColumn("__lli0", SF.st_axis_idx_col(lbox[0], "lon", precision))
+            .withColumn("__lti0", SF.st_axis_idx_col(lbox[2], "lat", precision)),
+        *lbox, precision, "__cell")
+    rc = SF.with_cover_codes(
+        right.withColumn("__rli0", SF.st_axis_idx_col(rbox[0], "lon", precision))
+             .withColumn("__rti0", SF.st_axis_idx_col(rbox[2], "lat", precision)),
+        *rbox, precision, "__cell")
     if broadcast_right:
         rc = F.broadcast(rc)
         j = lc.join(rc, "__cell", "inner")
@@ -725,23 +699,19 @@ def _shape_shape_join_closure(left: DataFrame, right: DataFrame,
     relate_udf = make_closure_shape_relate(table)
 
     ls, rs = F.col(left_shape), F.col(right_shape)
-    lc = (left.withColumn("__lli0", SF.st_axis_idx_col(f"`{left_shape}`.`minx`", "lon", precision))
-              .withColumn("__lti0", SF.st_axis_idx_col(f"`{left_shape}`.`miny`", "lat", precision))
-              .withColumn("__cells", SF.st_cover_codes(
-                  ls["minx"], ls["maxx"], ls["miny"], ls["maxy"], precision))
-              .withColumn("__cell", F.explode_outer("__cells")).drop("__cells")
-              .where(F.col("__cell").isNotNull()))
+    lbox = _bbox_sql(left_shape)
+    lc = SF.with_cover_codes(
+        left.withColumn("__lli0", SF.st_axis_idx_col(lbox[0], "lon", precision))
+            .withColumn("__lti0", SF.st_axis_idx_col(lbox[2], "lat", precision)),
+        *lbox, precision, "__cell")
     slim = right.select(
         right_id,
         rs["minx"].alias("__rminx"), rs["maxx"].alias("__rmaxx"),
         rs["miny"].alias("__rminy"), rs["maxy"].alias("__rmaxy"))
-    rc = (slim.withColumn("__rli0", SF.st_axis_idx_col("`__rminx`", "lon", precision))
-              .withColumn("__rti0", SF.st_axis_idx_col("`__rminy`", "lat", precision))
-              .withColumn("__cells", SF.st_cover_codes(
-                  F.col("__rminx"), F.col("__rmaxx"),
-                  F.col("__rminy"), F.col("__rmaxy"), precision))
-              .withColumn("__cell", F.explode_outer("__cells")).drop("__cells")
-              .where(F.col("__cell").isNotNull()))
+    rc = SF.with_cover_codes(
+        slim.withColumn("__rli0", SF.st_axis_idx_col("`__rminx`", "lon", precision))
+            .withColumn("__rti0", SF.st_axis_idx_col("`__rminy`", "lat", precision)),
+        "`__rminx`", "`__rmaxx`", "`__rminy`", "`__rmaxy`", precision, "__cell")
     j = lc.join(F.broadcast(rc), "__cell", "inner")
 
     bbox_ok = ((ls["minx"] <= F.col("__rmaxx")) & (ls["maxx"] >= F.col("__rminx"))
@@ -897,14 +867,13 @@ def shape_shape_join_adaptive(left: DataFrame, right: DataFrame,
         bbox_ok = ((ls["minx"] <= rs["maxx"]) & (ls["maxx"] >= rs["minx"])
                    & (ls["miny"] <= rs["maxy"]) & (ls["maxy"] >= rs["miny"]))
     m = F.least(F.col("__llvl"), F.col("__rlvl"))
-    g_lon = F.greatest(F.col("__lli0"), F.col("__rli0"))
-    g_lat = F.greatest(F.col("__lti0"), F.col("__rti0"))
     ref = None
     for lv in range(min_level, max_level + 1):
         lon_sh = max_lon_bits - ((lv * 5 + 1) // 2)
         lat_sh = max_lat_bits - ((lv * 5) // 2)
-        code = SF.st_morton_col(F.shiftright(g_lon, lon_sh),
-                                F.shiftright(g_lat, lat_sh), lv)
+        code = SF.st_morton_col(
+            f"shiftright(greatest(`__lli0`, `__rli0`), {lon_sh})",
+            f"shiftright(greatest(`__lti0`, `__rti0`), {lat_sh})", lv)
         tagged = (F.shiftleft(code, LEVEL_TAG_BITS)
                    .bitwiseOR(F.lit(lv)).cast("long"))
         ref = (F.when(m == lv, tagged) if ref is None

@@ -101,12 +101,8 @@ def zonal_stats(pixels: DataFrame, zones: DataFrame,
     from .. import functions as SF
     px = pixels.withColumn(
         "__cell", SF.st_cell_code_col("`px_lat`", "`px_lon`", precision))
-    zc = (zones
-          .withColumn("__cells", SF.st_cover_codes(
-              F.col("minx"), F.col("maxx"), F.col("miny"), F.col("maxy"), precision))
-          .withColumn("__cell", F.explode_outer("__cells"))
-          .drop("__cells")
-          .where(F.col("__cell").isNotNull()))
+    zc = SF.with_cover_codes(zones, "`minx`", "`maxx`", "`miny`", "`maxy`",
+                             precision, "__cell")
     j = (px.join(F.broadcast(zc), "__cell", "inner")
            .where((F.col("px_lon") >= F.col("minx")) & (F.col("px_lon") <= F.col("maxx"))
                   & (F.col("px_lat") >= F.col("miny")) & (F.col("px_lat") <= F.col("maxy"))))
@@ -140,7 +136,7 @@ def zonal_stats_poly(pixels: DataFrame, polys: DataFrame,
     from ..plans.strategy import JoinPlan
     from .joins import point_in_shape_join
     plan = JoinPlan(precision=precision, broadcast_shapes=broadcast,
-                    salt=salt, max_cover_cells=4096)
+                    salt=salt)
     j = point_in_shape_join(pixels, polys, plan,
                             point_x="px_lon", point_y="px_lat",
                             shape_id=(zone_id if broadcast else None))
@@ -173,8 +169,7 @@ def zonal_stats_tagged(pixels: DataFrame, zones: DataFrame,
         F.concat_ws("#", "zone_kind",
                     F.col("zone_id").cast("string")).alias("__zkey"),
         "shape")
-    plan = JoinPlan(precision=precision, broadcast_shapes=True,
-                    salt=None, max_cover_cells=4096)
+    plan = JoinPlan(precision=precision, broadcast_shapes=True, salt=None)
     j = point_in_shape_join(pixels, zkeyed, plan,
                             point_x="px_lon", point_y="px_lat",
                             shape_id="__zkey")

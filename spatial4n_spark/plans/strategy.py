@@ -18,7 +18,6 @@ class JoinPlan:
     precision: int            # geohash level of the cell equi-join
     broadcast_shapes: bool    # broadcast the (exploded) shape-cover side
     salt: int | None          # point-side salt fanout for hot cells, or None
-    max_cover_cells: int      # safety cap per shape at this level
     # shape kinds present on the build side, if known at plan time
     # (e.g. (2,) = rects only). When all kinds are RECT, the JVM bbox
     # gate IS the exact dateline-aware closed-rect containment test
@@ -78,7 +77,7 @@ def plan_point_shape_join(n_points: int, n_shapes: int,
     if not broadcast and hot_cell_ratio is not None and hot_cell_ratio > 0.05:
         salt = 16
     return JoinPlan(precision=precision, broadcast_shapes=broadcast,
-                    salt=salt, max_cover_cells=4096, shape_kinds=shape_kinds,
+                    salt=salt, shape_kinds=shape_kinds,
                     auto_index=auto_index)
 
 

@@ -152,7 +152,7 @@ def test_adaptive_candidate_reduction(mixed_corpus):
                   .select("rect_id", F.explode("__cells").alias("cover_cell")))
     cover_a_rows = cover_a.count()
     pts_a = (sdf.select("point_id", SF.st_cell_codes_multilevel_col(
-                 F.col("y"), F.col("x"), lo, hi).alias("__mlcells"))
+                 "`y`", "`x`", lo, hi).alias("__mlcells"))
                 .select("point_id", F.explode("__mlcells").alias("cell_id")))
     cand_adaptive = pts_a.join(F.broadcast(cover_a),
                                pts_a["cell_id"] == cover_a["cover_cell"]).count()
@@ -214,15 +214,17 @@ def test_tagged_codes_distinct_across_levels():
 
 
 def test_shape_cover_single_udf_pass(mixed_corpus):
-    """Regression: plain explode of a UDF-built cover array triggers
+    """with_shape_cover plans no Python node: its cover and geohash
+    spelling are codegen expressions. Regression for the adaptive
+    cover: plain explode of a UDF-built cover array triggers
     InferFiltersFromGenerate, whose size()>0 pre-filter extracts a
     SECOND ArrowEvalPython node — the cover UDF then runs twice per
-    shape row. with_shape_cover/adaptive cover must plan exactly ONE
-    ArrowEvalPython (explode_outer + null-filter on the output)."""
+    shape row. It must plan exactly ONE ArrowEvalPython (explode_outer
+    + null-filter on the output)."""
     _, _, rdf, _ = mixed_corpus
     cov = with_shape_cover(rdf, "shape", 4, codes=False)
     plan = cov._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
     cov_a = rdf.select("rect_id", F.explode_outer(SF.st_cover_codes_adaptive(
         F.col("shape.minx"), F.col("shape.maxx"),
         F.col("shape.miny"), F.col("shape.maxy"), 2, 7)).alias("c"))

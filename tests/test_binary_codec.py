@@ -85,3 +85,24 @@ def test_multipolygon_no_holes_wkb_unchanged():
     assert struct.unpack_from("<I", b, 6)[0] == 2
     r = B.read_shape(b)
     assert len(r["ring_offsets"]) - 1 == 2
+
+
+def test_writers_null_error_and_empty_rows():
+    """One null, error or EMPTY row does not fail the writers' batch:
+    null and error rows write null; EMPTY writes "POLYGON EMPTY" (read
+    back as the same EMPTY row) and binary null (the layout has no
+    EMPTY); the point still round-trips."""
+    import pyarrow as pa
+
+    from spatial4n_spark import functions as SF
+    texts = pa.array(["POINT (1 2)", "bogus", None, "POLYGON EMPTY"])
+    shapes = SF._st_from_wkt_default.func(texts)
+    shapes = pa.concat_arrays([shapes, pa.nulls(1, shapes.type)])
+    wkt = SF.make_st_to_wkt().func(shapes).to_pylist()
+    assert wkt == ["POINT (1 2)", None, None, "POLYGON EMPTY", None]
+    assert (SF._st_from_wkt_default.func(pa.array(wkt[3:4])).to_pylist()
+            == shapes[3:4].to_pylist())
+    blobs = SF.st_to_binary.func(shapes).to_pylist()
+    assert blobs[1:] == [None] * 4
+    assert (SF.st_from_binary.func(pa.array(blobs[:1])).to_pylist()
+            == shapes[:1].to_pylist())

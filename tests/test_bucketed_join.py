@@ -6,7 +6,6 @@ Exchange at all, and results equal the plain shuffled join.
 """
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from spatial4n_spark import functions as SF
 from spatial4n_spark.sources.bucketed import (cell_join_bucketed,
@@ -31,7 +30,7 @@ def bucketed_tables(spark):
             zip(rng.uniform(-60, 60, 500), rng.uniform(-40, 40, 500)))],
         ["zid", "zx", "zy"])
     zones = zones.withColumn(
-        "cell_id", SF.st_cell_code_col(F.col("zy"), F.col("zx"), PRECISION))
+        "cell_id", SF.st_cell_code_col("`zy`", "`zx`", PRECISION))
     prepare_points_bucketed(spark, pts, "pts_bucketed", PRECISION,
                             n_buckets=N_BUCKETS)
     write_bucketed_by_cell(zones, "zones_bucketed", N_BUCKETS)
@@ -63,7 +62,7 @@ def test_bucketed_join_equals_shuffled_join(spark, bucketed_tables):
                 cell_join_bucketed(spark, lt, rt).select("pid", "zid")
                 .collect()}
     plain_pts = pts.withColumn(
-        "cell_id", SF.st_cell_code_col(F.col("y"), F.col("x"), PRECISION))
+        "cell_id", SF.st_cell_code_col("`y`", "`x`", PRECISION))
     plain = {(r.pid, r.zid) for r in
              plain_pts.join(zones, "cell_id").select("pid", "zid").collect()}
     assert bucketed == plain and len(bucketed) > 0

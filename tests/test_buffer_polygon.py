@@ -249,8 +249,7 @@ def test_buffered_polygon_join_end_to_end(spark):
         [(1, 10.0, 5.0), (2, 10.0, -1.9), (3, 10.0, -2.1),
          (4, 21.40, -1.40)],  # ~1.98 from vertex (20,0), in its cone
         ["pid", "x", "y"])
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     got = sorted(r["pid"] for r in point_in_shape_join(
         pts, buffered, plan, shape_id="sid").select("pid").collect())
     assert got == [1, 2, 4], got

@@ -43,8 +43,7 @@ def test_closure_refine_matches_struct_path(spark):
               .withColumn("shape", SF.st_from_wkt(F.col("wkt")))
               .select("sid", "shape"))
 
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     struct_pairs = {(r["pid"], r["sid"]) for r in
                     point_in_shape_join(pts, shapes, plan)
                     .select("pid", "sid").collect()}
@@ -68,8 +67,7 @@ def test_closure_refine_falls_back_when_layer_too_big(spark, monkeypatch):
         [(1, "POLYGON((-10 -10, 30 -10, 10 25, -10 -10))")], "sid int, wkt string")
         .withColumn("shape", SF.st_from_wkt(F.col("wkt")))
         .select("sid", "shape"))
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     out = point_in_shape_join(pts, shapes, plan, shape_id="sid")
     assert [(r["pid"], r["sid"]) for r in out.select("pid", "sid").collect()] \
         == [(0, 1)]
@@ -91,8 +89,7 @@ def test_closure_falls_back_on_duplicate_or_null_ids(spark):
         "sid int, wkt string")
         .withColumn("shape", SF.st_from_wkt(F.col("wkt")))
         .select("sid", "shape"))
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     out = point_in_shape_join(pts, shapes, plan, shape_id="sid")
     assert sorted((r["pid"], r["sid"]) for r in
                   out.select("pid", "sid").collect()) == [(0, 7), (1, 7)]
@@ -115,8 +112,7 @@ def test_closure_semi_anti_match_struct(spark):
          (2, "BUFFER(POINT(40 10), 9)")], "sid int, wkt string")
         .withColumn("shape", SF.st_from_wkt(F.col("wkt")))
         .select("sid", "shape"))
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     for how in ("leftsemi", "leftanti"):
         a = {r["pid"] for r in point_in_shape_join(
             pts, shapes, plan, how=how).select("pid").collect()}
@@ -149,8 +145,7 @@ def test_convex_fast_path_no_python_and_correct(spark):
     shapes = (spark.createDataFrame(wkts, "sid int, wkt string")
               .withColumn("shape", SF.st_from_wkt(F.col("wkt")))
               .select("sid", "shape"))
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     struct_pairs = {(r["pid"], r["sid"]) for r in
                     point_in_shape_join(pts, shapes, plan)
                     .select("pid", "sid").collect()}
@@ -184,8 +179,7 @@ def test_nonconvex_layer_skips_fast_path(spark):
     shapes = (spark.createDataFrame(wkts, "sid int, wkt string")
               .withColumn("shape", SF.st_from_wkt(F.col("wkt")))
               .select("sid", "shape"))
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     a = {r["pid"] for r in point_in_shape_join(pts, shapes, plan)
          .select("pid").collect()}
     b = {r["pid"] for r in point_in_shape_join(pts, shapes, plan,

@@ -171,14 +171,13 @@ def test_auto_index_factory_key(spark):
     try:
         # broadcast off + auto_index on -> closure path still taken
         plan2 = JoinPlan(precision=2, broadcast_shapes=False, salt=None,
-                         max_cover_cells=4096, auto_index=True)
+                         auto_index=True)
         out = point_in_shape_join(pts, shapes, plan2, shape_id="sid")
         assert [r["pid"] for r in out.select("pid").collect()] == [1]
         assert called
         # broadcast off + auto_index off -> struct path
         called.clear()
-        plan3 = JoinPlan(precision=2, broadcast_shapes=False, salt=None,
-                         max_cover_cells=4096)
+        plan3 = JoinPlan(precision=2, broadcast_shapes=False, salt=None)
         out = point_in_shape_join(pts, shapes, plan3, shape_id="sid")
         assert [r["pid"] for r in out.select("pid").collect()] == [1]
         assert not called

@@ -79,8 +79,7 @@ def test_distributed_join_dateline_polygon(spark):
         "pid": [1, 2, 3, 4, 5],
         "x": [175.0, -175.0, 0.0, 169.0, -169.0],
         "y": [5.0, 5.0, 5.0, 5.0, 5.0]}))
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     got = {r.pid for r in point_in_shape_join(pts, polys, plan)
            .select("pid").collect()}
     assert got == {1, 2}

@@ -19,8 +19,7 @@ from spatial4n_spark.kernels.distance import geo_distance_deg
 from spatial4n_spark.operators.joins import _certified_radius, knn_join
 from spatial4n_spark.plans.strategy import JoinPlan
 
-PLAN = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                max_cover_cells=4096)
+PLAN = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
 
 
 def _from_parquet(spark, path, pdf):

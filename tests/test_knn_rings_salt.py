@@ -15,8 +15,7 @@ def test_knn_rings_matches_brute_force(spark):
         .withColumnRenamed("c_custkey", "point_id")
     qs = contract.supplier_circles(spark, SF_DIR).selectExpr(
         "circle_id AS query_id", "cx AS qx", "cy AS qy")
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     got = knn_join(pts, qs, k=3, plan=plan,
                    query_id="query_id", tie_break="point_id")
     got_set = {(r.query_id, r.point_id, r.knn_rank) for r in got.collect()}

@@ -161,16 +161,13 @@ def test_rect_rect_declared_layer_is_jvm_only(spark):
     for k in got:
         assert got[k] == pytest.approx(exp[k], abs=1e-9)
     p = out._jdf.queryExecution().executedPlan().toString()
-    # no per-PAIR Python anywhere: neither the polygon relate refine
-    # nor the Arrow measure survive the (2,2) declaration; the measure
-    # is a plain Project. (The per-SHAPE cover-code kernel is Arrow by
-    # design — joins.py chooses it over the CodegenFallback HOF
-    # expression — and is bounded by layer size, not pair count.)
+    # no Python anywhere: neither the polygon relate refine nor the
+    # Arrow measure survive the (2,2) declaration (the measure is a
+    # plain Project), and the cell covers are codegen expressions
     for bad in ("st_relate_polygon_polygon", "st_shape_intersection_area",
-                "MapInPandas", "MapInArrow", "BatchEvalPython"):
+                "MapInPandas", "MapInArrow", "BatchEvalPython",
+                "ArrowEvalPython"):
         assert bad not in p, p[:1500]
-    arrow_nodes = [ln for ln in p.splitlines() if "ArrowEvalPython" in ln]
-    assert all("cover_codes" in ln for ln in arrow_nodes), arrow_nodes
 
 
 def test_mixed_pairs_rect_branch_matches_arrow(spark):
@@ -547,7 +544,6 @@ def test_overlay_with_geometry_rect_declared_jvm(spark):
         assert ((g["maxx"] - g["minx"]) * (g["maxy"] - g["miny"])
                 == pytest.approx(r["inter_area_deg2"], abs=1e-12))
     p = out._jdf.queryExecution().executedPlan().toString()
-    for bad in ("MapInPandas", "MapInArrow", "BatchEvalPython"):
+    for bad in ("MapInPandas", "MapInArrow", "BatchEvalPython",
+                "ArrowEvalPython"):
         assert bad not in p
-    arrow_nodes = [ln for ln in p.splitlines() if "ArrowEvalPython" in ln]
-    assert all("cover_codes" in ln for ln in arrow_nodes), arrow_nodes

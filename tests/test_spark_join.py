@@ -64,7 +64,7 @@ def test_point_in_rect_join_matches_kernel(spark, points_df, rects_pdf):
             F.lit(None).cast("array<int>").alias("ring_offsets"),
             F.lit(None).cast("string").alias("error"),
         ))
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None, max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     got = (point_in_shape_join(sdf, rects, plan)
            .select("point_id", "rect_id").toPandas()
            .sort_values(["point_id", "rect_id"]).reset_index(drop=True))
@@ -102,9 +102,9 @@ def test_join_strategies_agree(spark, points_df, rects_pdf):
             F.lit(None).cast("string").alias("error"),
         ))
     plans = [
-        JoinPlan(precision=3, broadcast_shapes=True, salt=None, max_cover_cells=4096),
-        JoinPlan(precision=3, broadcast_shapes=False, salt=None, max_cover_cells=4096),
-        JoinPlan(precision=3, broadcast_shapes=False, salt=8, max_cover_cells=4096),
+        JoinPlan(precision=3, broadcast_shapes=True, salt=None),
+        JoinPlan(precision=3, broadcast_shapes=False, salt=None),
+        JoinPlan(precision=3, broadcast_shapes=False, salt=8),
     ]
     results = [sorted(map(tuple, point_in_shape_join(sdf, rects, p)
                           .select("point_id", "rect_id").collect()))
@@ -156,7 +156,7 @@ def test_distance_and_knn_join(strict_codegen, tmp_path, points_df):
                             "qy": [0.0, 45.0, -60.0]})
     sdf = _from_parquet(spark, tmp_path / "points", pdf)
     qdf = _from_parquet(spark, tmp_path / "queries", queries)
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None, max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     R = 25.0
     got = (distance_join(sdf, qdf, R, plan).select("query_id", "point_id", "dist_deg")
            .toPandas())
@@ -193,8 +193,7 @@ def test_distance_join_keeps_antipodal_pairs(strict_codegen, tmp_path):
         {"point_id": range(4), "x": x, "y": y}))
     qs = _from_parquet(spark, tmp_path / "queries", pd.DataFrame(
         {"query_id": range(4), "qx": qx, "qy": qy}))
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     got = distance_join(pts, qs, 180.0, plan).select(
         "point_id", "query_id", "dist_deg").collect()
     assert {(r.point_id, r.query_id) for r in got} == \
@@ -216,8 +215,7 @@ def test_knn_ladder_equals_single_pass(spark):
         [(int(i), float(x), float(y)) for i, (x, y) in enumerate(
             zip(rng.uniform(-170, 170, 30), rng.uniform(-80, 80, 30)))],
         ["query_id", "qx", "qy"])
-    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=2, broadcast_shapes=True, salt=None)
     one_plan = {(r.query_id, r.point_id, r.knn_rank) for r in
                 knn_join(pts, qs, 3, plan, max_radius=60.0,
                          query_id="query_id", tie_break="point_id").collect()}

@@ -35,8 +35,7 @@ def _shapes(spark):
 
 def test_stream_static_join_equals_batch(spark, dirs):
     shapes = _shapes(spark)
-    plan = JoinPlan(precision=3, broadcast_shapes=True, salt=None,
-                    max_cover_cells=4096)
+    plan = JoinPlan(precision=3, broadcast_shapes=True, salt=None)
 
     _land(spark, dirs, 0, 500)
     out = spatial_join_stream(
