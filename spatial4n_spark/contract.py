@@ -255,8 +255,45 @@ def geohash_sql(x, y, precision):
 # derived Spark inputs
 # ---------------------------------------------------------------------------
 
+# The schema of every table `_load` reads, as Spark infers it from
+# the parquet footers (pandas-written timestamps carry no time zone, so
+# they read as TIMESTAMP_NTZ).
+TABLE_SCHEMAS = {
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, "
+                "c_acctbal DOUBLE, c_mktsegment STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, "
+                "s_acctbal DOUBLE",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+            "p_size INT, p_retailprice DOUBLE",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+              "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, "
+              "o_orderpriority STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+                "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+                "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+                "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, "
+                 "n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "events": "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
+              "event_type STRING, value DOUBLE, props STRING",
+}
+
+
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Read table `name` from `<sf_dir>/<name>.parquet` with its
+    declared schema (`TABLE_SCHEMAS`).
+
+    `spark.read.parquet` without a schema infers one, and the inference
+    reads the file footers through a Spark job while the plan is being
+    built: one eager job per table per query, 26 of the 37 that one
+    `query_mix` pass started, and most of the analyzer's
+    `ResolveDataSource` time. With the schema given, building a plan
+    starts no job. A file whose columns differ from the declaration is
+    read by name, as any parquet read with a user schema is."""
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(
+        f"{sf_dir}/{name}.parquet")
 
 
 def customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3161,9 +3198,15 @@ def _boolean_geometry_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = base.withColumn("ba", SF.st_from_wkt(awkt)) \
              .withColumn("bb", SF.st_from_wkt(bwkt))
     args = (F.col("ba"), F.col("bb"))
-    df = (df.withColumn("gi", SF.st_intersection(*args))
-            .withColumn("gd", SF.st_difference(*args))
-            .withColumn("gu", SF.st_union(*args)))
+    # Each geometry is read twice below (area and ring count), so each
+    # kernel is the once-copy. One projection for the three: chained
+    # nondeterministic projections would each get their own copy of
+    # the two parses.
+    once = SF.evaluated_once
+    df = df.select("c_nationkey",
+                   once(SF.st_intersection)(*args).alias("gi"),
+                   once(SF.st_difference)(*args).alias("gd"),
+                   once(SF.st_union)(*args).alias("gu"))
 
     def fam(col, tag):
         s = F.col(col)

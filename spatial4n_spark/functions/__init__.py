@@ -31,6 +31,8 @@ callable from SQL text after `register_sql_functions(spark)`, e.g.
 """
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -69,6 +71,23 @@ def _double_struct(**cols) -> pa.StructArray:
 def _parsed(cols: dict) -> pa.StructArray:
     """Columnar parser output (dict of field arrays) -> shape structs."""
     return encode(len(cols["kind"]), **cols)
+
+
+def evaluated_once(udf):
+    """A copy of `udf` whose calls Catalyst never copies.
+
+    A deterministic UDF call is an ordinary expression to the
+    optimizer: after `withColumn(c, f(x)).where(<c>)`,
+    PushPredicateThroughNonJoin substitutes f(x) into a Filter below
+    its Project, and CollapseProject inlines a column read twice, so
+    the kernel runs in two Python nodes over the same rows. A
+    nondeterministic call is neither substituted nor inlined: it runs
+    once, where it was written. Use the copy where a pair kernel's
+    result column is read again or filtered on. `asNondeterministic`
+    marks the instance it is called on, so it is called on a copy and
+    `udf` itself stays deterministic."""
+    return copy.copy(getattr(udf, "_unwrapped", udf)) \
+        .asNondeterministic()._wrapped()
 
 
 @arrow_udf(SHAPE_SCHEMA)
@@ -195,15 +214,6 @@ def st_distance_km(x1, y1, x2, y2, calculator: str = "haversine"):
 def st_dwithin(x1, y1, x2, y2, dist_deg, calculator: str = "haversine"):
     """Distance-within predicate (AbstractDistanceCalculator.Within)."""
     return st_distance_deg(x1, y1, x2, y2, calculator) <= dist_deg
-
-
-@pandas_udf(ByteType())
-def st_relate_rect_point(minx: pd.Series, maxx: pd.Series, miny: pd.Series,
-                         maxy: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
-    """Dateline-aware rect.Relate(point) (RectangleImpl.cs:176-209)."""
-    return pd.Series(_relate_rect_point(
-        minx.to_numpy(), maxx.to_numpy(), miny.to_numpy(), maxy.to_numpy(),
-        px.to_numpy(), py.to_numpy(), geo=True))
 
 
 @pandas_udf(ByteType())
@@ -1153,13 +1163,16 @@ def rect_intersection_area_cols(aminx, amaxx, aminy, amaxy,
 
 
 def make_st_to_wkt(decimals: int | None = None):
-    """WKT formatter UDF factory (shape struct -> text). A null shape or
-    an error row writes null; EMPTY writes "POLYGON EMPTY", which
-    st_from_wkt reads back as the same EMPTY row."""
+    """WKT formatter UDF factory (shape struct -> text). A null shape,
+    an error row and a GEOMETRYCOLLECTION (kind 9, whose members the
+    struct does not hold) write null; EMPTY writes "POLYGON EMPTY",
+    which st_from_wkt reads back as the same EMPTY row. A MULTIPOLYGON
+    writes one member per shell with its holes."""
     @arrow_udf(StringType())
     def _to_wkt(shape: pa.Array) -> pa.Array:
         s = decode(shape)
-        skip = ~s.valid | s.error.is_valid().to_numpy(zero_copy_only=False)
+        skip = (~s.valid | s.error.is_valid().to_numpy(zero_copy_only=False)
+                | (s.kind == _wkt.KIND_COLLECTION))
         return pa.array([None if skip[i] else _wkt.format_wkt(
             int(s.kind[i]), s.x[i], s.y[i], s.radius[i], s.minx[i],
             s.maxx[i], s.miny[i], s.maxy[i], *s.verts(i), decimals)

@@ -9,9 +9,9 @@ nested encoded shapes. Geometry (Io/Nts/NtsBinaryCodec.cs:56-66,
 137-156, "handles everything") is the type byte followed by standard
 little-endian WKB: LineString=2, Polygon=3, MultiPoint=4,
 MultiLineString=5, MultiPolygon=6, rings closed (first vertex
-repeated). A multipolygon record's flattened even-odd rings are
-written one WKB polygon per ring (the engine's page-split model keeps
-hole semantics by parity, not nesting). The engine's at-rest format is
+repeated). A multipolygon record's flat even-odd ring list is grouped
+into one WKB polygon per shell with its holes (`_nest_rings`, which
+the WKT writer shares). The engine's at-rest format is
 Parquet (the shape struct IS the decoded form); this codec exists for
 golden-file parity and exchange with reference implementations.
 """

@@ -1418,11 +1418,18 @@ def format_wkt(kind: int, x, y, radius, minx, maxx, miny, maxy,
         return base
     if kind in (KIND_POLYGON, KIND_MULTIPOLYGON):
         ro = list(ring_offsets) if ring_offsets is not None else [0, len(xs)]
-        rings = []
-        for k in range(len(ro) - 1):
-            seg = ", ".join(f"{f(a)} {f(b)}"
-                            for a, b in zip(xs[ro[k]:ro[k + 1]],
-                                            ys[ro[k]:ro[k + 1]]))
-            rings.append(f"({seg})")
-        return "POLYGON (" + ", ".join(rings) + ")"
+        rings = [(xs[ro[k]:ro[k + 1]], ys[ro[k]:ro[k + 1]])
+                 for k in range(len(ro) - 1)]
+
+        def polygon(part):
+            return "(" + ", ".join(
+                "(" + ", ".join(f"{f(a)} {f(b)}" for a, b in zip(rx, ry)) + ")"
+                for rx, ry in part) + ")"
+        if kind == KIND_POLYGON:
+            return "POLYGON " + polygon(rings)
+        # the flat even-odd ring list regrouped into [shell, holes...]
+        # members, as the WKB writer groups them
+        from .binary import _nest_rings
+        return ("MULTIPOLYGON ("
+                + ", ".join(polygon(part) for part in _nest_rings(rings)) + ")")
     raise WktParseError(f"cannot format kind {kind}")

@@ -560,7 +560,8 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, plan: JoinPlan,
                 .select(*queries.columns, rad.alias("__rad")))
     cand = _circle_candidates(points, q, F.col("__rad"), plan,
                               point_x, point_y, query_x, query_y)
-    d = SF.st_hav_vin(F.col(point_x), F.col(point_y), qx, qy)
+    d = SF.evaluated_once(SF.st_hav_vin)(F.col(point_x), F.col(point_y),
+                                         qx, qy)
     cand = cand.withColumn("__d", d)
     if max_radius is not None:
         cand = cand.where(F.col("__d.hav") <= float(max_radius))
@@ -680,7 +681,8 @@ def shape_shape_join(left: DataFrame, right: DataFrame, precision: int,
     if predicate == "bbox" or (shape_kinds == (2, 2)
                                and predicate == "intersects"):
         return gated
-    return _apply_shape_predicate(gated, ls, rs, predicate)
+    return _apply_shape_predicate(gated, predicate,
+                                  SF.st_relate_polygon_polygon, ls, rs)
 
 
 def _shape_shape_join_closure(left: DataFrame, right: DataFrame,
@@ -690,7 +692,6 @@ def _shape_shape_join_closure(left: DataFrame, right: DataFrame,
     """Closure-right variant of shape_shape_join (see right_id doc).
     Returns None when the right layer exceeds the vertex cap."""
     from .. import functions as SF
-    from ..kernels import relation as REL
     from .refine import collect_shape_table, make_closure_shape_relate
 
     table = collect_shape_table(right, right_id, right_shape)
@@ -722,31 +723,24 @@ def _shape_shape_join_closure(left: DataFrame, right: DataFrame,
     gated = (j.where(bbox_ok & (F.col("__cell") == ref_cell))
               .drop("__cell", "__lli0", "__lti0", "__rli0", "__rti0",
                     "__rminx", "__rmaxx", "__rminy", "__rmaxy"))
+    return _apply_shape_predicate(gated, predicate, relate_udf,
+                                  ls, F.col(right_id))
 
+
+def _apply_shape_predicate(gated: DataFrame, predicate: str, relate,
+                           *args) -> DataFrame:
+    """Exact relate refine + predicate filter shared by the fixed-level
+    and adaptive two-layer joins: `relate(*args)` is the struct relate
+    `st_relate_polygon_polygon(lshape, rshape)` or a closure relate
+    `(lshape, right_id)`."""
     if predicate == "bbox":
         return gated
-    rel = relate_udf(ls, F.col(right_id))
     if predicate == "all":
+        # callers filter on `relation`: the once-copy keeps that filter
+        # from running the relate a second time
+        rel = SF.evaluated_once(relate)(*args)
         return gated.withColumn("relation", rel.cast("int"))
-    if predicate == "intersects":
-        cond = rel != REL.DISJOINT
-    elif predicate == "contains":
-        cond = rel == REL.CONTAINS
-    elif predicate == "within":
-        cond = rel == REL.WITHIN
-    else:
-        raise ValueError(predicate)
-    return gated.where(cond)
-
-
-def _apply_shape_predicate(gated: DataFrame, ls, rs, predicate: str) -> DataFrame:
-    """Exact polygon-polygon refine + predicate filter shared by the
-    fixed-level and adaptive two-layer joins."""
-    if predicate == "bbox":
-        return gated
-    rel = SF.st_relate_polygon_polygon(ls, rs)
-    if predicate == "all":
-        return gated.withColumn("relation", rel.cast("int"))
+    rel = relate(*args)
     if predicate == "intersects":
         cond = rel != REL.DISJOINT
     elif predicate == "contains":
@@ -882,15 +876,8 @@ def shape_shape_join_adaptive(left: DataFrame, right: DataFrame,
               .drop("__cell", "__lli0", "__lti0", "__rli0", "__rti0",
                     "__llvl", "__rlvl"))
     if closure_relate is not None:
-        from ..kernels import relation as REL
         gated = gated.drop("__rminx", "__rmaxx", "__rminy", "__rmaxy")
-        rel = closure_relate(ls, F.col(right_id))
-        if predicate == "all":
-            return gated.withColumn("relation", rel.cast("int"))
-        keep = {"intersects": rel != REL.DISJOINT,
-                "contains": rel == REL.CONTAINS,
-                "within": rel == REL.WITHIN}.get(predicate)
-        if keep is None:
-            raise ValueError(predicate)
-        return gated.where(keep)
-    return _apply_shape_predicate(gated, ls, rs, predicate)
+        return _apply_shape_predicate(gated, predicate, closure_relate,
+                                      ls, F.col(right_id))
+    return _apply_shape_predicate(gated, predicate,
+                                  SF.st_relate_polygon_polygon, ls, rs)

@@ -122,8 +122,11 @@ def overlay_intersection_join(left: DataFrame, right: DataFrame,
     if with_fracs:
         # ONE fused Arrow exchange for inter + both own areas; the
         # rect x rect rows still take the JVM formula for the area
-        # (bit-identical to the paged kernel) and JVM own-areas.
-        out = pairs.withColumn("__m", SF.st_overlay_measure(ls, rs))
+        # (bit-identical to the paged kernel) and JVM own-areas. Every
+        # measure column is read more than once or filtered on, so each
+        # kernel is the once-copy (SF.evaluated_once).
+        out = pairs.withColumn(
+            "__m", SF.evaluated_once(SF.st_overlay_measure)(ls, rs))
         mm = F.col("__m")
         area = F.when(both_rect, rect_jvm).otherwise(mm["inter"])
         la = F.when(ls["kind"] == 2, _rect_area(ls)).otherwise(mm["a_area"])
@@ -135,7 +138,7 @@ def overlay_intersection_join(left: DataFrame, right: DataFrame,
                               F.when(ra > 0.0, F.col(area_col) / ra))
                   .drop("__m"))
     else:
-        arrow = SF.st_shape_intersection_area(ls, rs)
+        arrow = SF.evaluated_once(SF.st_shape_intersection_area)(ls, rs)
         out = pairs.withColumn(
             area_col, F.when(both_rect, rect_jvm).otherwise(arrow))
     if not keep_zero:
@@ -150,7 +153,7 @@ def overlay_intersection_join(left: DataFrame, right: DataFrame,
             geometry_col,
             F.when(F.col(area_col) == 0.0, shape_col(kind=0))
              .when(both_rect, _rect_inter_struct(ls, rs))
-             .otherwise(SF.st_intersection(ls, rs)))
+             .otherwise(SF.evaluated_once(SF.st_intersection)(ls, rs)))
     return out
 
 

@@ -106,3 +106,45 @@ def test_writers_null_error_and_empty_rows():
     assert blobs[1:] == [None] * 4
     assert (SF.st_from_binary.func(pa.array(blobs[:1])).to_pylist()
             == shapes[:1].to_pylist())
+
+
+def test_wkt_writer_multipolygon_roundtrip_with_holes():
+    """st_to_wkt writes a MULTIPOLYGON as members (shell + its holes,
+    grouped like the WKB writer), so st_from_wkt reads the same struct
+    back: holed members, a member inside another's hole, hole-free
+    members."""
+    import pyarrow as pa
+
+    from spatial4n_spark import functions as SF
+    texts = pa.array([
+        "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0),"
+        " (2 2, 4 2, 4 4, 2 4, 2 2)),"
+        " ((20 20, 30 20, 30 30, 20 30, 20 20), (22 22, 24 22, 24 24, 22 22)))",
+        "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0),"
+        " (2 2, 8 2, 8 8, 2 8, 2 2)), ((4 4, 6 4, 6 6, 4 6, 4 4)))",
+        "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((5 5, 6 5, 6 6, 5 5)))",
+    ])
+    shapes = SF._st_from_wkt_default.func(texts)
+    assert shapes.field("kind").to_pylist() == [8, 8, 8]
+    wkt = SF.make_st_to_wkt().func(shapes)
+    assert all(w.startswith("MULTIPOLYGON (((") for w in wkt.to_pylist())
+    assert wkt[2].as_py() == ("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)),"
+                              " ((5 5, 6 5, 6 6, 5 5)))")
+    back = SF._st_from_wkt_default.func(wkt)
+    assert back.to_pylist() == shapes.to_pylist()
+
+
+def test_wkt_writer_collection_row_writes_null():
+    """A GEOMETRYCOLLECTION row (kind 9) writes null; the rest of its
+    batch is written as usual."""
+    import pyarrow as pa
+
+    from spatial4n_spark import functions as SF
+    texts = pa.array(["POINT (1 2)",
+                      "GEOMETRYCOLLECTION (POINT (1 2), POINT (3 4))",
+                      "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((5 5, 6 5, 6 6, 5 5)))"])
+    shapes = SF._st_from_wkt_default.func(texts)
+    assert shapes.field("kind").to_pylist() == [1, 9, 8]
+    wkt = SF.make_st_to_wkt().func(shapes).to_pylist()
+    assert wkt[:2] == ["POINT (1 2)", None]
+    assert wkt[2].startswith("MULTIPOLYGON")
