@@ -49,8 +49,9 @@ from ..kernels.distance import geo_distance_deg as _geo_dist
 from ..kernels.relate_circle import relate_circle_rect as _relate_circle_rect
 from ..kernels.relate_rect import relate_rect_point as _relate_rect_point
 from ..kernels.relate_rect import relate_rect_rect as _relate_rect_rect
-from ..shapes import (SHAPE_SCHEMA, VERTEX_SCHEMA, closed_rings_record,
-                      decode, encode, encode_records, rect_pages)
+from ..shapes import (SHAPE_SCHEMA, VERTEX_SCHEMA, VertexLists,
+                      closed_rings_record,
+                      decode, encode, encode_records)
 
 
 def _f64(arr: pa.Array) -> np.ndarray:
@@ -941,43 +942,154 @@ def rect_center_cols(minx, maxx, miny, maxy):
     return cx, cy
 
 
+def _polygon_lists(s, split_pages: bool = False):
+    """The polygonal vertex lists of every row of a shape batch, as
+    three ragged columns (xs, ys, ring_offsets): a POLYGON or
+    MULTIPOLYGON row's own lists, a rect's ring pages (`rect_pages`:
+    one 4-corner ring, two split at the dateline), a point's one vertex
+    and null lists for every other row. With `split_pages` each page of
+    a rect is an entry of its own, without ring offsets. Returns
+    (xs, ys, ring_offsets, row): entry k belongs to row row[k]."""
+    kind = s.kind
+    poly = (kind == 7) | (kind == 8)
+    rect = kind == 2
+    cross = rect & (s.minx > s.maxx)
+    per_row = np.where(rect & split_pages, 1 + cross, 1)
+    row = np.repeat(np.arange(len(kind)), per_row)
+    page = np.arange(len(row)) - np.repeat(np.cumsum(per_row) - per_row,
+                                           per_row)
+    npages = np.where(rect[row], 1 if split_pages else 1 + cross[row], 0)
+    ep, ept = poly[row], (kind == 1)[row]
+
+    def ragged(own, n_rect, n_point, fill):
+        """One ragged column: a polygon entry copies its row's list
+        `own`, the others hold n_rect / n_point values from `fill`."""
+        n = np.select([ep, npages > 0, ept],
+                      [np.diff(own.offsets)[row], n_rect, n_point], 0)
+        valid = np.select([ep, npages > 0, ept], [own.valid[row],
+                                                  n_rect > 0, n_point > 0],
+                          False)
+        n = np.where(valid, n, 0)
+        off = np.zeros(len(row) + 1, dtype=np.int64)
+        np.cumsum(n, out=off[1:])
+        e = np.repeat(np.arange(len(row)), n)
+        j = np.arange(off[-1]) - off[:-1][e]
+        values = np.empty(off[-1], dtype=own.values.dtype)
+        m = ep[e]
+        values[m] = own.values[own.offsets[row[e[m]]] + j[m]]
+        values[~m] = fill(e[~m], j[~m])
+        return VertexLists(values, off, valid)
+
+    def corner(lo, hi):   # 4-corner page rings, x: lo hi hi lo
+        def fill(e, j):
+            r, q, c = row[e], page[e] + j // 4, j % 4
+            x0 = np.where(cross[r] & (q == 1), -180.0, lo[r])
+            x1 = np.where(cross[r] & (q == 0), 180.0, hi[r])
+            return np.where((c == 0) | (c == 3), x0, x1)
+        return fill
+
+    xs = ragged(s.xs, 4 * npages, 1, lambda e, j: np.where(
+        ept[e], s.x[row[e]], corner(s.minx, s.maxx)(e, j)))
+    # y: miny miny maxy maxy on every page
+    ys = ragged(s.ys, 4 * npages, 1, lambda e, j: np.where(
+        ept[e], s.y[row[e]],
+        np.where(j % 4 < 2, s.miny[row[e]], s.maxy[row[e]])))
+    ro = ragged(s.ring_offsets, 0 if split_pages else npages + 1, 0,
+                lambda e, j: 4 * j)
+    return xs, ys, ro, row
+
+
+def relate_operands(s):
+    """The relate's view of a shape batch: its `_polygon_lists` and
+    which rows relate as null (a null struct, an error row, a kind
+    other than EMPTY, point, rect, POLYGON and MULTIPOLYGON)."""
+    err = s.error.is_valid().to_numpy(zero_copy_only=False)
+    null = (~s.valid | ((s.kind == 0) & err)
+            | ~np.isin(s.kind, (0, 1, 2, 7, 8)))
+    return _polygon_lists(s)[:3], null
+
+
+def relate_shape_pairs(a, ia, b, ib):
+    """A.Relate(B) for shape pairs: pair k relates row ia[k] of the
+    operands `a` (`relate_operands`) with row ib[k] of `b`. Returns
+    (int8 codes, null mask). An EMPTY row is DISJOINT from everything;
+    a rect relates as its ring pages; a point as its one vertex."""
+    from ..kernels.pip import relate_polygons
+    (la, na), (lb, nb) = a, b
+    null = na[ia] | nb[ib]
+    out = np.zeros(len(ia), dtype=np.int8)
+    k = np.flatnonzero(~null)
+    out[k] = relate_polygons(la, ia[k], lb, ib[k])
+    return out, null
+
+
 @arrow_udf(ByteType())
 def st_relate_polygon_polygon(a: pa.Array, b: pa.Array) -> pa.Array:
-    """A.Relate(B) for two (multi)polygons, COVERS semantics
+    """A.Relate(B) for two polygonal shapes, COVERS semantics
     (NtsGeometry.cs:283-314 DE-9IM -> SpatialRelation mapping, read
-    off the noded arrangement of both boundaries in kernels.booleans)."""
-    from ..kernels.pip import relate_polygon_polygon
+    off the noded arrangement of both boundaries in kernels.booleans,
+    every row of the batch in one pass). POLYGON, MULTIPOLYGON, rect
+    (its ring pages) and point rows relate; EMPTY is DISJOINT; a null
+    or error row, or any other kind, gives null."""
     sa, sb = decode(a), decode(b)
-    out = np.empty(len(sa), dtype=np.int8)
-    for i in range(len(sa)):
-        out[i] = relate_polygon_polygon(*sa.verts(i), *sb.verts(i))
-    return pa.array(out, type=pa.int8())
+    rows = np.arange(len(sa))
+    out, null = relate_shape_pairs(relate_operands(sa), rows,
+                                   relate_operands(sb), rows)
+    return pa.array(out, type=pa.int8(), mask=null)
 
 
-def _area_pages(s, i):
-    """Row i -> list of planar (xs, ys, ring_offsets) pages for the
-    overlay area kernel. Rects unwrap at the dateline into up to two
-    pages; polygons arrive already page-split from the WKT parser.
-    Returns None for kinds without a polygonal footprint the kernel
-    can measure (circle/collection/empty); measure-zero kinds
-    (point/line) return []."""
-    k = s.kind[i]
-    if k == 2:
-        return [(rx, ry, None) for rx, ry in
-                rect_pages(s.minx[i], s.maxx[i], s.miny[i], s.maxy[i])]
-    if k in (7, 8):
-        return [s.verts(i)]
-    if k in (1, 4, 5, 6):
-        return []
-    return None
+def _measure_pages(s):
+    """The overlay measure's pages of a shape batch: (lists, pages,
+    first, nan). Row r's pages are entries pages[first[r]:first[r + 1]]
+    of the ragged columns `lists` — a POLYGON / MULTIPOLYGON row is one
+    page, a rect one per dateline page; measure-zero kinds (point,
+    line) have none; `nan` marks rows without a polygonal footprint
+    the kernel can measure (EMPTY, null, error, circle, collection)."""
+    *lists, row = _polygon_lists(s, split_pages=True)
+    pages = np.flatnonzero(np.isin(s.kind[row], (2, 7, 8)))
+    first = np.zeros(len(s) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(row[pages], minlength=len(s)), out=first[1:])
+    return lists, pages, first, ~np.isin(s.kind, (1, 2, 4, 5, 6, 7, 8))
 
 
-def _paged_intersection_area(pa_, pb):
-    from ..kernels.overlay import intersection_area
-    if pa_ is None or pb is None:
-        return np.nan
-    return sum(intersection_area(*p, *q)
-               for p in pa_ for q in pb) if pa_ and pb else 0.0
+def _paged_sum(vals, row, pos, n):
+    """Per row, the sum of its values in page order, as Python's sum
+    runs it (0 + v0 + v1 ...); vals[k] is at position pos[k] of row
+    row[k]."""
+    out = np.zeros(n)
+    for p in range(int(pos.max()) + 1 if len(pos) else 0):
+        m = pos == p
+        out[row[m]] = out[row[m]] + vals[m]
+    return out
+
+
+def _intersection_measure(sa, sb, own: bool):
+    """(A ∩ B area, and with `own` A's and B's own areas) per row of two
+    shape batches, each page pair of a row one pair of one batched
+    kernel call."""
+    from ..kernels.overlay import intersection_areas, polygon_areas_evenodd
+    n = len(sa)
+    la, pa_, fa, nan_a = _measure_pages(sa)
+    lb, pb, fb, nan_b = _measure_pages(sb)
+    ca, cb = np.diff(fa), np.diff(fb)
+    cnt = ca * cb
+    row = np.repeat(np.arange(n), cnt)
+    k = np.arange(len(row)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    ia = pa_[fa[row] + k // np.maximum(cb[row], 1)]
+    ib = pb[fb[row] + k % np.maximum(cb[row], 1)]
+    inter = _paged_sum(intersection_areas(la, ia, lb, ib), row, k, n)
+    inter[nan_a | nan_b] = np.nan
+    if not own:
+        return inter, None, None
+    areas = []
+    for lists, pages, first, nan in ((la, pa_, fa, nan_a), (lb, pb, fb, nan_b)):
+        cnt = np.diff(first)
+        prow = np.repeat(np.arange(n), cnt)
+        area = _paged_sum(polygon_areas_evenodd(*lists)[pages], prow,
+                          np.arange(len(pages)) - first[prow], n)
+        area[nan] = np.nan
+        areas.append(area)
+    return inter, *areas
 
 
 @arrow_udf(DoubleType())
@@ -985,14 +1097,12 @@ def st_shape_intersection_area(a: pa.Array, b: pa.Array) -> pa.Array:
     """Kind-dispatching intersection area (deg^2) over shape structs:
     rect x rect / rect x polygon / polygon x polygon, dateline-crossing
     rects paged. The kernel (the noded overlay of kernels/booleans.py,
-    Green's theorem over the kept boundary pieces) is robust to holes,
-    multiparts, shared edges and A == B, with no degenerate bailout.
-    Measure-zero kinds (point/line) give 0.0; kinds without a polygonal
-    footprint (circle/collection/empty) give null."""
-    sa, sb = decode(a), decode(b)
-    return _doubles([_paged_intersection_area(_area_pages(sa, i),
-                                              _area_pages(sb, i))
-                     for i in range(len(sa))])
+    Green's theorem over the kept boundary pieces, every pair of the
+    batch in one pass) is robust to holes, multiparts, shared edges and
+    A == B, with no degenerate bailout. Measure-zero kinds (point/line)
+    give 0.0; kinds without a polygonal footprint
+    (circle/collection/empty) give null."""
+    return _doubles(_intersection_measure(decode(a), decode(b), False)[0])
 
 
 @arrow_udf(SHAPE_SCHEMA)
@@ -1036,54 +1146,53 @@ def st_sym_difference(a: pa.Array, b: pa.Array) -> pa.Array:
 
 
 def _boolean_geometry(op, a, b) -> pa.StructArray:
-    """Shared per-row driver for the boolean geometry UDFs: shape
-    structs -> even-odd rings -> noded overlay `op` -> members ->
-    closed-ring struct."""
-    from ..kernels.booleans import members_of_robust, robust_boolean
+    """Shared driver for the boolean geometry UDFs: shape structs ->
+    even-odd ring sets -> one batched noded overlay `op` -> per row
+    members -> closed-ring struct."""
+    from ..kernels.booleans import (members_of_robust, overlay_rings,
+                                    pair_vertices)
     sa, sb = decode(a), decode(b)
+    (ra, err_a), (rb, err_b) = _evenodd_rings(sa), _evenodd_rings(sb)
+    errs = np.where(err_a != None, err_a, err_b)  # noqa: E711
+    ok = np.flatnonzero(errs == None)  # noqa: E711
     recs: list = [None] * len(sa)
-    errs: list = [None] * len(sa)
-    for i in range(len(sa)):
-        try:
-            rings_a, rings_b = _evenodd_rings(sa, i), _evenodd_rings(sb, i)
-        except ValueError as e:
-            errs[i] = str(e)
-            continue
-        rings = robust_boolean(rings_a, rings_b, op)
+    for i, rings in zip(ok.tolist(),
+                        overlay_rings(pair_vertices(ra, ok, rb, ok), op)):
         members = None if rings is None else members_of_robust(rings)
         if members is None:
             errs[i] = "overlay: result rings did not stitch or nest"
         elif members:
             recs[i] = closed_rings_record(members)
-    return encode_records(recs, errs)
+    return encode_records(recs, errs.tolist())
 
 
-def _evenodd_rings(s, i):
-    """Even-odd ring list [(xs, ys), ...] of row i, or ValueError for
-    kinds without polygonal geometry. Dateline-crossing rects
-    page-split into two rings (the WKT parser's convention); EMPTY
-    (kind 0) is the empty ring set — the overlay kernel then gives NTS
-    parity for free (A ∩ ∅ = ∅, A \\ ∅ = A ∪ ∅ = A)."""
-    kind = s.kind[i]
-    if kind == 0:
-        return []
-    if kind == 2:
-        return rect_pages(s.minx[i], s.maxx[i], s.miny[i], s.maxy[i])
-    if kind not in (7, 8):
-        raise ValueError(f"st_intersection needs polygons/rects,"
-                         f" got kind {int(kind)}")
-    rx, ry, offs = s.verts(i)
-    if offs is None:
-        offs = np.asarray([0, len(rx)], dtype=np.int64)
-    out = []
-    for k in range(len(offs) - 1):
-        gx, gy = rx[offs[k]:offs[k + 1]], ry[offs[k]:offs[k + 1]]
-        if len(gx) >= 2 and gx[0] == gx[-1] and gy[0] == gy[-1]:
-            gx, gy = gx[:-1], gy[:-1]
-        if len(gx) < 3:
-            raise ValueError("degenerate ring (<3 vertices)")
-        out.append((gx, gy))
-    return out
+def _evenodd_rings(s):
+    """(Rings, errors): the even-odd ring set of every row of a shape
+    batch, and per row None or the error of a kind without polygonal
+    geometry. A rect gives its ring pages (`rect_pages`, split at the
+    dateline as the WKT parser splits); a POLYGON / MULTIPOLYGON ring
+    of under three vertices is an error; EMPTY (kind 0) is the empty
+    ring set — the overlay kernel then gives NTS parity for free
+    (A ∩ ∅ = ∅, A \\ ∅ = A ∪ ∅ = A)."""
+    from ..kernels.booleans import Rings, _group_of, _offsets, ring_spans
+    xs, ys, ro, _ = _polygon_lists(s)
+    kind = s.kind
+    rect = kind == 2
+    areal = rect | (kind == 7) | (kind == 8)
+    first, gx, gy, n = ring_spans(xs, ys, ro, np.arange(len(kind)),
+                                  whole_if_short=False, drop=~rect)
+    ring_row = _group_of(first)
+    errs = np.full(len(kind), None, dtype=object)
+    errs[~areal & (kind != 0)] = [
+        f"st_intersection needs polygons/rects, got kind {int(k)}"
+        for k in kind[~areal & (kind != 0)]]
+    short = np.zeros(len(kind), dtype=bool)
+    short[ring_row[n < 3]] = True
+    errs[areal & ~rect & short] = "degenerate ring (<3 vertices)"
+    keep = areal[ring_row]
+    first = _offsets(np.bincount(ring_row[keep], minlength=len(kind)))
+    return Rings(xs.values, ys.values, gx[keep], gy[keep], n[keep],
+                 first), errs
 
 
 _OVERLAY_MEASURE_SCHEMA = StructType([
@@ -1098,23 +1207,7 @@ def st_overlay_measure(a: pa.Array, b: pa.Array) -> pa.Array:
     """Fused overlay measure: intersection area + both own areas in ONE
     Arrow exchange (the with_fracs overlay path would otherwise ship
     the pair's vertex arrays through three separate UDF stages)."""
-    from ..kernels.overlay import polygon_area_evenodd
-    sa, sb = decode(a), decode(b)
-    n = len(sa)
-    inter = np.empty(n)
-    a_area = np.empty(n)
-    b_area = np.empty(n)
-
-    def own(pages):
-        if pages is None:
-            return np.nan
-        return sum(polygon_area_evenodd(*p) for p in pages)
-
-    for i in range(n):
-        pa_, pb = _area_pages(sa, i), _area_pages(sb, i)
-        a_area[i] = own(pa_)
-        b_area[i] = own(pb)
-        inter[i] = _paged_intersection_area(pa_, pb)
+    inter, a_area, b_area = _intersection_measure(decode(a), decode(b), True)
     return _double_struct(inter=inter, a_area=a_area, b_area=b_area)
 
 

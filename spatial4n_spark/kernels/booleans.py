@@ -40,8 +40,9 @@ degenerate contact is a structural fact instead of a float comparison.
    the next outgoing piece clockwise (one np.lexsort on (node, angle)),
    which closes each region sector and splits figure-eight touches into
    separate rings. Shells come out CCW, holes CW.
-5. Relate. `relate` (polygon <-> polygon and polygon <-> rect) and
-   `member_overlap` (the MULTIPOLYGON member classifier) read the
+5. Relate. `relate_pairs` (polygon <-> polygon and polygon <-> rect;
+   `relate` is its one-pair call) and `member_overlap` (the
+   MULTIPOLYGON member classifier) read the
    classified pieces instead of keeping any: A covers B when no side
    of a piece lies in B but not in A (checked before the mirror, so
    equal shapes are CONTAINS); the closed sets meet when a side lies
@@ -51,16 +52,28 @@ degenerate contact is a structural fact instead of a float comparison.
    apart need no special case: their pieces are the input edges and
    the same ray cast puts each on its side.
 
-Scale note: runs per candidate pair inside an Arrow batch. Contact
-candidates are bbox-culled over the (edges x edges) grid and the
-classification is one (pieces x pieces) ray cast. A grid of up to
-`_BLOCK` cells is one dense pass; a larger one (a buffer's boundary
-strip of a few hundred vertices has ~15k edges) runs in blocks of
+Scale note: the noder runs once per Arrow batch, over every operand
+pair of the batch at once (`pair_vertices` lays the pairs out as flat
+vertex arrays, pair after pair; a one-pair caller passes a batch of
+one). Every float operation keeps its pair's own inputs: the snap
+tolerance comes from the pair's own extent, the ray cast and the
+Green's sum shift by the pair's own node minimum, and each pair's area
+is one `np.sum` over its own contiguous pieces. The pair index is the
+major key of every sort, so node ids keep their order within a pair
+and each pair's output is bit-identical to a batch of one. Contact
+candidates and the classification meet only the pair's own edges and
+pieces: small pairs are gathered into block-diagonal passes of at most
+`_PAIR_BLOCK` cells; a pair of more than `_ALONE` cells runs alone, as
+one dense pass of up to `_BLOCK` cells or, above that (a buffer's
+boundary strip of a few hundred vertices has ~15k edges), in blocks of
 `_CULL` rows that each meet only the candidates reaching their span
 (sorted by x for boxes, by y for rays), with the pairs put back in
-dense order so node ids and output are the same either way.
+dense order. Memory per block is bounded whatever the batch size.
 """
 from __future__ import annotations
+
+import math
+from typing import NamedTuple
 
 import numpy as np
 
@@ -78,6 +91,8 @@ _OPS = {
 
 _BLOCK = 1_000_000  # grid cells per vectorized block
 _CULL = 64         # rows per block once candidates are culled
+_ALONE = 1 << 12   # a pair with more grid cells runs alone
+_PAIR_BLOCK = 1 << 16  # grid cells per block-diagonal pass of small pairs
 
 
 def _roll1(a):
@@ -104,35 +119,245 @@ def _open_ccw(xs, ys):
     return _ensure_ccw(xs, ys)
 
 
-def _vertices(rings_a, rings_b):
-    """Flat vertices of both operands: x, y, index of the next vertex
-    around the same ring, and the operand (0 = A, 1 = B) per vertex.
-    Closing duplicates and rings under three vertices are dropped."""
-    xs, ys, nxt, opnd = [], [], [], []
-    base = 0
-    for k, rings in enumerate((rings_a, rings_b)):
-        for rx, ry in rings:
-            rx = np.asarray(rx, dtype=np.float64)
-            ry = np.asarray(ry, dtype=np.float64)
-            if len(rx) >= 2 and rx[0] == rx[-1] and ry[0] == ry[-1]:
-                rx, ry = rx[:-1], ry[:-1]
-            n = len(rx)
-            if n < 3:
-                continue
-            nx = np.arange(base + 1, base + n + 1)
-            nx[-1] = base
-            xs.append(rx)
-            ys.append(ry)
-            nxt.append(nx)
-            opnd.append(np.full(n, k, dtype=np.int8))
-            base += n
-    if not xs:
-        return None
-    return (np.concatenate(xs), np.concatenate(ys), np.concatenate(nxt),
-            np.concatenate(opnd))
+def _offsets(counts):
+    """Start offsets of consecutive groups of `counts` items, plus the
+    total: group g owns items out[g]:out[g + 1]."""
+    out = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=out[1:])
+    return out
 
 
-def _box_pairs(ax0, ax1, ay0, ay1, bx0, bx1, by0, by1):
+def _group_of(base):
+    """Group index of every item of groups laid out by `base`."""
+    return np.repeat(np.arange(len(base) - 1), np.diff(base))
+
+
+def _group_reduce(ufunc, values, base, empty=0.0):
+    """ufunc.reduce over each group of `values` laid out by `base`;
+    `empty` for a group without items."""
+    out = np.full(len(base) - 1, empty, dtype=np.float64)
+    has = np.diff(base) > 0
+    if has.any():
+        out[has] = ufunc.reduceat(values, base[:-1][has])
+    return out
+
+
+# --- ragged input -----------------------------------------------------------
+
+class Lists(NamedTuple):
+    """One ragged column: flat `values`, per-row `offsets` and `valid`
+    (the layout of `shapes.VertexLists`)."""
+    values: np.ndarray
+    offsets: np.ndarray
+    valid: np.ndarray
+
+
+def _one_row(values) -> Lists:
+    """A ragged column of one row holding `values` (None: a null row)."""
+    if values is None:
+        return Lists(np.zeros(0), np.zeros(2, dtype=np.int64),
+                     np.zeros(1, dtype=bool))
+    values = np.asarray(values)
+    return Lists(values, np.array([0, len(values)]), np.ones(1, dtype=bool))
+
+
+def one_polygon(xs, ys, ring_offsets=None) -> tuple:
+    """(xs, ys, ring_offsets) ragged columns of one polygon row."""
+    return tuple(_one_row(None if c is None else np.asarray(c, dtype=t))
+                 for c, t in ((xs, np.float64), (ys, np.float64),
+                              (ring_offsets, np.int64)))
+
+
+def _row_vertices(xs, ys, rows):
+    """(first x, first y, vertex count) of rows `rows` of two ragged
+    columns; a row with a null `xs` or `ys` has no vertex."""
+    xbase, ybase = xs.offsets[rows], ys.offsets[rows]
+    return xbase, ybase, np.where(xs.valid[rows] & ys.valid[rows],
+                                  np.minimum(xs.offsets[rows + 1] - xbase,
+                                             ys.offsets[rows + 1] - ybase), 0)
+
+
+def row_boxes(xs, ys, rows):
+    """(vertex count, minx, maxx, miny, maxy) of rows `rows` of two
+    ragged columns; a row without vertices has a NaN box."""
+    xbase, ybase, nv = _row_vertices(xs, ys, rows)
+    vb = _offsets(nv)
+    k = np.arange(vb[-1]) - np.repeat(vb[:-1], nv)
+    gx = xs.values[np.repeat(xbase, nv) + k]
+    gy = ys.values[np.repeat(ybase, nv) + k]
+    nan = np.nan
+    return (nv, _group_reduce(np.minimum, gx, vb, nan),
+            _group_reduce(np.maximum, gx, vb, nan),
+            _group_reduce(np.minimum, gy, vb, nan),
+            _group_reduce(np.maximum, gy, vb, nan))
+
+
+def ring_spans(xs, ys, ring_offsets, rows, whole_if_short=True, drop=True):
+    """Rings of rows `rows` of three ragged columns.
+
+    Returns (first, gx, gy, n): row k owns rings first[k]:first[k + 1];
+    ring r is the n[r] vertices from gx[r] of xs.values (gy[r] of
+    ys.values). A row's `ring_offsets` cut its vertices into rings,
+    clamped as a Python slice is; a null `ring_offsets` (or, with
+    `whole_if_short`, one of fewer than 2 entries) makes all vertices
+    one ring; a null `xs` or `ys` has no vertex. With `drop` (a bool,
+    or one per row) a ring of 2+ vertices that repeats its first vertex
+    drops the repeat."""
+    rows = np.asarray(rows, dtype=np.int64)
+    xbase, ybase, nv = _row_vertices(xs, ys, rows)
+    rbase = ring_offsets.offsets[rows]
+    nro = np.where(ring_offsets.valid[rows],
+                   ring_offsets.offsets[rows + 1] - rbase, 0)
+    multi = nro >= 2 if whole_if_short else ring_offsets.valid[rows]
+    nrings = np.where(multi, np.maximum(nro - 1, 0), 1)
+    first = _offsets(nrings)
+    ring_row = np.repeat(np.arange(len(rows)), nrings)
+    cap = nv[ring_row]
+    rs = np.zeros(len(ring_row), dtype=np.int64)
+    re = cap.copy()
+    m = np.flatnonzero(multi[ring_row])
+    p = rbase[ring_row[m]] + m - first[ring_row[m]]
+    rs[m] = ring_offsets.values[p]
+    re[m] = ring_offsets.values[p + 1]
+    rs = np.minimum(rs, cap)
+    n = np.maximum(np.minimum(re, cap) - rs, 0)
+    gx = xbase[ring_row] + rs
+    gy = ybase[ring_row] + rs
+    X, Y = xs.values, ys.values
+    c = np.flatnonzero((n >= 2) & np.broadcast_to(drop, rows.shape)[ring_row])
+    n[c] -= ((X[gx[c]] == X[gx[c] + n[c] - 1])
+             & (Y[gy[c]] == Y[gy[c] + n[c] - 1]))
+    return first, gx, gy, n
+
+
+class Rings(NamedTuple):
+    """Ring sets (one operand each: a shape, or one page of one) as
+    rings of flat coordinate buffers: set s owns rings
+    first[s]:first[s + 1]; ring r is the size[r] vertices from sx[r] of
+    `x` (sy[r] of `y`)."""
+    x: np.ndarray
+    y: np.ndarray
+    sx: np.ndarray
+    sy: np.ndarray
+    size: np.ndarray
+    first: np.ndarray
+
+
+def shape_rings(xs, ys, ring_offsets, rows) -> Rings:
+    """Ring sets of rows `rows` of three ragged columns: the rings of
+    `ring_spans`, a ring of under three vertices left out."""
+    first, gx, gy, n = ring_spans(xs, ys, ring_offsets, rows)
+    keep = n >= 3
+    first = _offsets(np.bincount(_group_of(first)[keep],
+                                 minlength=len(first) - 1))
+    return Rings(xs.values, ys.values, gx[keep], gy[keep], n[keep], first)
+
+
+def _list_rings(rings) -> Rings:
+    """One ring set from a list of (xs, ys) rings."""
+    xs = [np.asarray(rx, dtype=np.float64) for rx, _ in rings]
+    ys = [np.asarray(ry, dtype=np.float64) for _, ry in rings]
+    size = np.array([len(rx) for rx in xs], dtype=np.int64)
+    start = _offsets(size)[:-1]
+    cat = (lambda a: np.concatenate(a) if a else np.zeros(0))
+    return Rings(cat(xs), cat(ys), start, start, size,
+                 np.array([0, len(xs)], dtype=np.int64))
+
+
+class _Verts(NamedTuple):
+    """Flat vertices of a batch of operand pairs, pair after pair:
+    operand A's rings, then B's, each ring's vertices in order. Pair p
+    owns vertices base[p]:base[p + 1]; `nxt` is the index of the next
+    vertex around the same ring; `opnd` is 0 for A, 1 for B."""
+    x: np.ndarray
+    y: np.ndarray
+    nxt: np.ndarray
+    opnd: np.ndarray
+    base: np.ndarray
+
+
+def pair_vertices(a: Rings, ia, b: Rings, ib) -> _Verts:
+    """The noder's input for operand pairs: pair k is ring set ia[k] of
+    `a` against ring set ib[k] of `b`. A ring that repeats its first
+    vertex drops the repeat; a ring left under three vertices is left
+    out."""
+    ia = np.asarray(ia, dtype=np.int64)
+    ib = np.asarray(ib, dtype=np.int64)
+    npair = len(ia)
+    # rings in (pair, operand, ring) order
+    start = np.stack((a.first[ia], b.first[ib]), axis=1).ravel()
+    cnt = np.stack((a.first[ia + 1] - a.first[ia],
+                    b.first[ib + 1] - b.first[ib]), axis=1).ravel()
+    slot = np.repeat(np.arange(2 * npair), cnt)
+    rid = np.repeat(start - _offsets(cnt)[:-1], cnt) + np.arange(len(slot))
+    src = slot % 2
+    sx = np.empty(len(slot), dtype=np.int64)
+    sy = np.empty(len(slot), dtype=np.int64)
+    size = np.empty(len(slot), dtype=np.int64)
+    bufs = (a, b)
+    for k, r in enumerate(bufs):
+        m = src == k
+        sx[m], sy[m], size[m] = r.sx[rid[m]], r.sy[rid[m]], r.size[rid[m]]
+        c = np.flatnonzero(m & (size >= 2))
+        size[c] -= ((r.x[sx[c]] == r.x[sx[c] + size[c] - 1])
+                    & (r.y[sy[c]] == r.y[sy[c] + size[c] - 1]))
+    keep = size >= 3
+    sx, sy, size, src, slot = sx[keep], sy[keep], size[keep], src[keep], \
+        slot[keep]
+    rb = _offsets(size)
+    ring = np.repeat(np.arange(len(size)), size)
+    k = np.arange(rb[-1]) - rb[:-1][ring]
+    vsrc = src[ring]
+    vx = np.empty(len(ring))
+    vy = np.empty(len(ring))
+    for s, r in enumerate(bufs):
+        m = vsrc == s
+        vx[m] = r.x[sx[ring[m]] + k[m]]
+        vy[m] = r.y[sy[ring[m]] + k[m]]
+    nxt = np.arange(1, len(ring) + 1)
+    nxt[rb[1:] - 1] = rb[:-1]
+    base = _offsets(np.bincount(slot[ring] // 2, minlength=npair))
+    return _Verts(vx, vy, nxt, vsrc.astype(np.int8), base)
+
+
+def _vertices(rings_a, rings_b) -> _Verts:
+    """Batch of one pair from two lists of (xs, ys) rings."""
+    return pair_vertices(_list_rings(rings_a), [0], _list_rings(rings_b),
+                         [0])
+
+
+# --- noding -----------------------------------------------------------------
+
+def _runs(cells):
+    """Consecutive group ranges (s, t, alone) covering every group in
+    order. A group of more than `_ALONE` grid cells is a run alone, and
+    so is a group no neighbour joins; the others are gathered into runs
+    of at most `_PAIR_BLOCK` cells."""
+    ends = np.cumsum(cells)
+    s = 0
+    for b in np.flatnonzero(cells > _ALONE).tolist() + [len(cells)]:
+        while s < b:
+            done = int(ends[s - 1]) if s else 0
+            t = int(np.searchsorted(ends, done + _PAIR_BLOCK, side="right"))
+            t = min(max(t, s + 1), b)
+            yield s, t, t == s + 1
+            s = t
+        if b < len(cells):
+            yield b, b + 1, True
+            s = b + 1
+
+
+def _grid(na, nb, abase, bbase, s, t):
+    """Every (i, j) of groups s..t-1, i among the group's a items and j
+    among its b items, in (i, j) order."""
+    c = na[s:t] * nb[s:t]
+    g = np.repeat(np.arange(s, t), c)
+    q, r = np.divmod(np.arange(len(g)) - np.repeat(_offsets(c)[:-1], c),
+                     nb[g])
+    return abase[g] + q, bbase[g] + r
+
+
+def _box_pairs_one(ax0, ax1, ay0, ay1, bx0, bx1, by0, by1):
     """Index pairs (i, j) whose closed boxes a_i and b_j meet, in
     (i, j) order."""
     if len(ax0) * len(bx0) <= _BLOCK:
@@ -167,25 +392,64 @@ def _box_pairs(ax0, ax1, ay0, ay1, bx0, bx1, by0, by1):
     return i[o], j[o]
 
 
-def _cluster(cx, cy, tol):
+def _box_pairs(a, abase, b, bbase):
+    """Index pairs (i, j) whose closed boxes meet, in (i, j) order, a
+    box of group p meeting only the boxes of group p. `a` and `b` are
+    (x0, x1, y0, y1) arrays; group p owns a boxes abase[p]:abase[p + 1]
+    and b boxes bbase[p]:bbase[p + 1]."""
+    ax0, ax1, ay0, ay1 = a
+    bx0, bx1, by0, by1 = b
+    na, nb = np.diff(abase), np.diff(bbase)
+    out_i, out_j = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int64)]
+    for s, t, alone in _runs(na * nb):
+        if alone:
+            if na[s] * nb[s] == 0:
+                continue
+            ga, gb = slice(abase[s], abase[s + 1]), slice(bbase[s], bbase[s + 1])
+            i, j = _box_pairs_one(ax0[ga], ax1[ga], ay0[ga], ay1[ga],
+                                  bx0[gb], bx1[gb], by0[gb], by1[gb])
+            out_i.append(i + abase[s])
+            out_j.append(j + bbase[s])
+            continue
+        i, j = _grid(na, nb, abase, bbase, s, t)
+        hit = ((ax0[i] <= bx1[j]) & (bx0[j] <= ax1[i])
+               & (ay0[i] <= by1[j]) & (by0[j] <= ay1[i]))
+        out_i.append(i[hit])
+        out_j.append(j[hit])
+    return np.concatenate(out_i), np.concatenate(out_j)
+
+
+def _cluster(cx, cy, tol, grp):
     """Label every candidate point with the smallest index of the
-    points it is chained to by distance <= tol."""
+    points of its group `grp` it is chained to by distance <= tol
+    (`tol` per point, the same within a group)."""
     n = len(cx)
     lab = np.arange(n)
-    # sort by (tol-wide x column, y): near pairs sit in one column or
-    # the next, within tol in y — found by lexicographic searchsorted
-    key = np.floor(cx / tol) + 1j * cy
-    order = np.argsort(key)
-    skey = key[order]
+    # sort by (group, tol-wide x column, y): near pairs sit in one
+    # column or the next of their group, within tol in y — found by
+    # lexicographic searchsorted on (column slot, y)
+    col = np.floor(cx / tol)
+    order = np.lexsort((cy, col, grp))
+    scol, sgrp, sy, stol = col[order], grp[order], cy[order], tol[order]
+    new = np.ones(n, dtype=bool)
+    new[1:] = (sgrp[1:] != sgrp[:-1]) | (scol[1:] != scol[:-1])
+    slot = np.cumsum(new) - 1
+    heads = np.flatnonzero(new)
+    # the slot after each one is the next column of the same group
+    nxt_col = np.zeros(len(heads), dtype=bool)
+    nxt_col[:-1] = ((sgrp[heads[1:]] == sgrp[heads[:-1]])
+                    & (scol[heads[1:]] == scol[heads[:-1]] + 1.0))
+    skey = slot + 1j * sy
     pa, pb = [], []
-    for dcol in (0.0, 1.0):
-        lo = np.searchsorted(skey, skey.real + dcol + 1j * (skey.imag - tol),
-                             side="left")
-        hi = np.searchsorted(skey, skey.real + dcol + 1j * (skey.imag + tol),
+    for dcol in (0, 1):
+        lo = np.searchsorted(skey, slot + dcol + 1j * (sy - stol), side="left")
+        hi = np.searchsorted(skey, slot + dcol + 1j * (sy + stol),
                              side="right")
-        if dcol == 0.0:
+        if dcol == 0:
             lo = np.maximum(lo, np.arange(n) + 1)
         cnt = np.maximum(hi - lo, 0)
+        if dcol == 1:
+            cnt = np.where(nxt_col[slot], cnt, 0)
         tot = int(cnt.sum())
         if tot:
             a = np.repeat(np.arange(n), cnt)
@@ -196,7 +460,7 @@ def _cluster(cx, cy, tol):
     if not pa:
         return lab
     pa, pb = np.concatenate(pa), np.concatenate(pb)
-    near = (cx[pa] - cx[pb]) ** 2 + (cy[pa] - cy[pb]) ** 2 <= tol * tol
+    near = (cx[pa] - cx[pb]) ** 2 + (cy[pa] - cy[pb]) ** 2 <= tol[pa] * tol[pa]
     pa, pb = pa[near], pb[near]
     # min-label propagation with pointer jumping, to a fixpoint
     while True:
@@ -210,47 +474,67 @@ def _cluster(cx, cy, tol):
         lab = new
 
 
-def _node(rings_a, rings_b):
-    """Noded arrangement of both operands' boundaries.
+class _Noded(NamedTuple):
+    """Noded arrangement of a batch of pairs: node coordinates (pair p
+    owns nodes nbase[p]:nbase[p + 1]), the distinct sub-segments as
+    node-id pairs lo < hi (pair p owns pieces pbase[p]:pbase[p + 1]),
+    each piece's signed coverage count per operand (pieces x 2 int) and
+    whether an operand's rings run the piece at all (pieces x 2 bool;
+    true with a zero count where the runs cancel, as along a zero-area
+    ring)."""
+    nx: np.ndarray
+    ny: np.ndarray
+    nbase: np.ndarray
+    lo: np.ndarray
+    hi: np.ndarray
+    cover: np.ndarray
+    touch: np.ndarray
+    pbase: np.ndarray
 
-    Returns (nx, ny, lo, hi, cover, touch): node coordinates, the
-    distinct sub-segments as node-id pairs lo < hi, each piece's signed
-    coverage count per operand (pieces x 2 int) and whether an
-    operand's rings run the piece at all (pieces x 2 bool; true with a
-    zero count where the runs cancel, as along a zero-area ring) — or
-    None when the operands have no edge."""
-    v = _vertices(rings_a, rings_b)
-    if v is None:
-        return None
-    vx, vy, nxt, opnd = v
-    e = np.nonzero((vx != vx[nxt]) | (vy != vy[nxt]))[0]
-    if len(e) == 0:
-        return None
-    # floored at ~50 ulps of the coordinates' magnitude, so a pair far
-    # from the origin still snaps float noise together
-    span = max(vx.max() - vx.min(), vy.max() - vy.min())
-    tol = max(span * _SNAP_REL,
-              max(np.abs(vx).max(), np.abs(vy).max()) * 1e-14)
+
+def _pair_tol(vx, vy, base):
+    """Snap tolerance of each pair: `_SNAP_REL` of its extent, floored
+    at ~50 ulps of its coordinates' magnitude, so a pair far from the
+    origin still snaps float noise together."""
+    def span(v):
+        return (_group_reduce(np.maximum, v, base)
+                - _group_reduce(np.minimum, v, base))
+    mag = np.maximum(_group_reduce(np.maximum, np.abs(vx), base),
+                     _group_reduce(np.maximum, np.abs(vy), base))
+    return np.maximum(np.maximum(span(vx), span(vy)) * _SNAP_REL, mag * 1e-14)
+
+
+def _node(v: _Verts) -> _Noded:
+    """Noded arrangement of both operands' boundaries, for every pair of
+    the batch at once (see the module docstring)."""
+    npair = len(v.base) - 1
+    vx, vy, nxt, opnd = v.x, v.y, v.nxt, v.opnd
+    vpair = _group_of(v.base)
+    e = np.flatnonzero((vx != vx[nxt]) | (vy != vy[nxt]))
+    epair = vpair[e]
+    ebase = _offsets(np.bincount(epair, minlength=npair))
+    tol = _pair_tol(vx, vy, v.base)
+    etol = tol[epair]
     ea, eb = e, nxt[e]            # edge k runs vertex ea[k] -> eb[k]
     x0, y0, x1, y1 = vx[ea], vy[ea], vx[eb], vy[eb]
     dx, dy = x1 - x0, y1 - y0
-    bx0, bx1 = np.minimum(x0, x1) - tol, np.maximum(x0, x1) + tol
-    by0, by1 = np.minimum(y0, y1) - tol, np.maximum(y0, y1) + tol
+    ebox = (np.minimum(x0, x1) - etol, np.maximum(x0, x1) + etol,
+            np.minimum(y0, y1) - etol, np.maximum(y0, y1) + etol)
 
     # vertices within tol of an edge's interior split that edge
-    vi, ek = _box_pairs(vx, vx, vy, vy, bx0, bx1, by0, by1)
+    vi, ek = _box_pairs((vx, vx, vy, vy), v.base, ebox, ebase)
     own = (vi == ea[ek]) | (vi == eb[ek])
     vi, ek = vi[~own], ek[~own]
     L2 = dx[ek] ** 2 + dy[ek] ** 2
     tv = ((vx[vi] - x0[ek]) * dx[ek] + (vy[vi] - y0[ek]) * dy[ek]) / L2
     d2 = ((vx[vi] - x0[ek] - tv * dx[ek]) ** 2
           + (vy[vi] - y0[ek] - tv * dy[ek]) ** 2)
-    on = (tv > 0.0) & (tv < 1.0) & (d2 <= tol * tol)
+    on = (tv > 0.0) & (tv < 1.0) & (d2 <= etol[ek] * etol[ek])
     vi, ek, tv = vi[on], ek[on], tv[on]
 
     # proper crossings, each edge pair once; a crossing within tol/2 of
     # an endpoint is that vertex's contact, found above
-    i, j = _box_pairs(bx0, bx1, by0, by1, bx0, bx1, by0, by1)
+    i, j = _box_pairs(ebox, ebase, ebox, ebase)
     pair = ((i < j) & (ea[i] != ea[j]) & (ea[i] != eb[j])
             & (eb[i] != ea[j]) & (eb[i] != eb[j]))
     i, j = i[pair], j[pair]
@@ -262,7 +546,12 @@ def _node(rings_a, rings_b):
     hit = (den != 0.0) & (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0)
     i, j, t, u = i[hit], j[hit], t[hit], u[hit]
     px, py = x0[i] + t * dx[i], y0[i] + t * dy[i]
-    lim = (0.5 * tol) ** 2
+    # (tol/2)^2 by libm pow, as a pair's scalar tolerance squares; a
+    # product h * h differs from it in the last bit for ~0.1 % of h
+    need = np.unique(epair[i])
+    lim = np.zeros(npair)
+    lim[need] = [math.pow(h, 2.0) for h in (0.5 * tol[need]).tolist()]
+    lim = lim[epair[i]]
     clear = np.ones(len(i), dtype=bool)
     for ex, ey in ((x0[i], y0[i]), (x1[i], y1[i]),
                    (x0[j], y0[j]), (x1[j], y1[j])):
@@ -270,19 +559,29 @@ def _node(rings_a, rings_b):
     i, j, t, u, px, py = i[clear], j[clear], t[clear], u[clear], \
         px[clear], py[clear]
 
-    # merge near-coincident candidates into nodes (vertices first, so
-    # a cluster holding a vertex takes that vertex's coordinates)
-    nv, nc = len(vx), len(px)
-    cx, cy = np.concatenate((vx, px)), np.concatenate((vy, py))
-    rep, node = np.unique(_cluster(cx, cy, tol), return_inverse=True)
-    nx, ny = cx[rep], cy[rep]
+    # merge near-coincident candidates into nodes: each pair's vertices,
+    # then its crossings (vertices first, so a cluster holding a vertex
+    # takes that vertex's coordinates)
+    xpair = epair[i]
+    nv = np.diff(v.base)
+    nc = np.bincount(xpair, minlength=npair)
+    cbase = _offsets(nv + nc)
+    vpos = cbase[vpair] + np.arange(len(vx)) - v.base[vpair]
+    cpos = (cbase[xpair] + nv[xpair] + np.arange(len(px))
+            - _offsets(nc)[xpair])
+    cx = np.empty(cbase[-1])
+    cy = np.empty(cbase[-1])
+    cx[vpos], cy[vpos], cx[cpos], cy[cpos] = vx, vy, px, py
+    cpair = _group_of(cbase)
+    rep, node = np.unique(_cluster(cx, cy, tol[cpair], cpair),
+                          return_inverse=True)
+    nx, ny, npr = cx[rep], cy[rep], cpair[rep]
 
     # split every edge at its contacts, in order along the edge
     m = len(e)
-    cid = np.arange(nv, nv + nc)
     ek_all = np.concatenate((np.arange(m), np.arange(m), ek, i, j))
     t_all = np.concatenate((np.zeros(m), np.ones(m), tv, t, u))
-    p_all = np.concatenate((ea, eb, vi, cid, cid))
+    p_all = np.concatenate((vpos[ea], vpos[eb], vpos[vi], cpos, cpos))
     o = np.lexsort((t_all, ek_all))
     ek_s, nd = ek_all[o], node[p_all[o]]
     same = ek_s[1:] == ek_s[:-1]
@@ -290,8 +589,6 @@ def _node(rings_a, rings_b):
     side = opnd[ea[ek_s[:-1][same]]]
     real = a_ != b_
     a_, b_, side = a_[real], b_[real], side[real]
-    if len(a_) == 0:
-        return None
     nn = len(nx)
     keys, inv = np.unique(np.minimum(a_, b_) * nn + np.maximum(a_, b_),
                           return_inverse=True)
@@ -302,10 +599,13 @@ def _node(rings_a, rings_b):
                       for k in (0, 1)], axis=1).astype(np.int64)
     touch = np.stack([np.bincount(inv[side == k], minlength=len(keys))
                       for k in (0, 1)], axis=1) > 0
-    return nx, ny, keys // nn, keys % nn, cover, touch
+    lo, hi = keys // nn, keys % nn
+    return _Noded(nx, ny, _offsets(np.bincount(npr, minlength=npair)),
+                  lo, hi, cover, touch,
+                  _offsets(np.bincount(npr[lo], minlength=npair)))
 
 
-def _ray_winding(qx, qy, sx0, sy0, sx1, sy1, w, own):
+def _ray_winding_one(qx, qy, sx0, sy0, sx1, sy1, w, own):
     """Per query point: the w-weighted count of segments the ray from
     (qx, qy) toward +x crosses (half-open in y), skipping the query's
     own segment own[k]. Returns (queries x w columns) int64."""
@@ -319,7 +619,7 @@ def _ray_winding(qx, qy, sx0, sy0, sx1, sy1, w, own):
             return hit @ w
         # several blocks: visit queries in y order and give each block
         # only the segments whose y span reaches its band (segments
-        # sorted by lower end, as in _box_pairs)
+        # sorted by lower end, as in _box_pairs_one)
         out = np.zeros((len(qx), w.shape[1]), dtype=np.int64)
         oq = np.argsort(qy, kind="stable")
         ylo, yhi = np.minimum(sy0, sy1), np.maximum(sy0, sy1)
@@ -340,29 +640,74 @@ def _ray_winding(qx, qy, sx0, sy0, sx1, sy1, w, own):
     return out
 
 
-def _sides(nx, ny, lo, hi, cover, winding=False):
+def _ray_winding(qx, qy, qbase, sx0, sy0, sx1, sy1, sbase, w, own):
+    """`_ray_winding_one` for groups: the queries of group p
+    (qbase[p]:qbase[p + 1]) meet only its segments
+    (sbase[p]:sbase[p + 1]); own[k] is a segment index."""
+    out = np.zeros((len(qx), w.shape[1]), dtype=np.int64)
+    nq, ns = np.diff(qbase), np.diff(sbase)
+    hits_i, hits_j = [], []
+    for s, t, alone in _runs(nq * ns):
+        if alone:
+            if nq[s] * ns[s] == 0:
+                continue
+            q, g = slice(qbase[s], qbase[s + 1]), slice(sbase[s], sbase[s + 1])
+            out[q] = _ray_winding_one(qx[q], qy[q], sx0[g], sy0[g], sx1[g],
+                                      sy1[g], w[g], own[q] - sbase[s])
+            continue
+        i, j = _grid(nq, ns, qbase, sbase, s, t)
+        yq = qy[i]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            slope = (sx1[j] - sx0[j]) / (sy1[j] - sy0[j])
+            hit = (((sy0[j] > yq) != (sy1[j] > yq))
+                   & (qx[i] < sx0[j] + (yq - sy0[j]) * slope)
+                   & (own[i] != j))
+        hits_i.append(i[hit])
+        hits_j.append(j[hit])
+    if hits_i:
+        i, j = np.concatenate(hits_i), np.concatenate(hits_j)
+        for c in range(w.shape[1]):
+            out[:, c] += np.bincount(i, weights=w[j, c],
+                                     minlength=len(qx)).astype(np.int64)
+    return out
+
+
+def _shifted(nx, ny, nbase):
+    """Node coordinates shifted by their pair's own minimum (smaller
+    products in the ray cast and the Green's sum)."""
+    npr = _group_of(nbase)
+    return (nx - _group_reduce(np.minimum, nx, nbase)[npr],
+            ny - _group_reduce(np.minimum, ny, nbase)[npr])
+
+
+def _sides(nd: _Noded, lo, hi, cover, base, winding=False):
     """Each operand's membership just left and just right of every
-    piece (two pieces x 2 bool arrays), from one batched ray cast. A
-    point is in an operand when its coverage count there is odd
-    (even-odd rings) or, with `winding`, nonzero (rings oriented by
-    `_oriented`)."""
-    sx, sy = nx - nx.min(), ny - ny.min()   # shifted: smaller products
+    piece lo -> hi (two pieces x 2 bool arrays; pair p owns pieces
+    base[p]:base[p + 1]), from one batched ray cast that meets only the
+    pair's own pieces. A point is in an operand when its coverage count
+    there is odd (even-odd rings) or, with `winding`, nonzero (rings
+    oriented by `_oriented`)."""
+    sx, sy = _shifted(nd.nx, nd.ny, nd.nbase)
     x0, y0, x1, y1 = sx[lo], sy[lo], sx[hi], sy[hi]
     dx, dy = x1 - x0, y1 - y0
     mx, my = (x0 + x1) * 0.5, (y0 + y1) * 0.5
     steep = np.abs(dy) >= np.abs(dx)
+    ppair = _group_of(base)
     probe = np.empty(cover.shape, dtype=np.int64)
     for sel, swap in ((steep, False), (~steep, True)):
-        k = np.nonzero(sel)[0]
+        k = np.flatnonzero(sel)
         if len(k) == 0:
             continue
+        qbase = _offsets(np.bincount(ppair[k], minlength=len(base) - 1))
         if swap:   # y-ray: the same cast with the axes exchanged,
             # which mirrors the winding sign
             w = cover * -np.sign(dx).astype(np.int64)[:, None]
-            probe[k] = _ray_winding(my[k], mx[k], y0, x0, y1, x1, w, k)
+            probe[k] = _ray_winding(my[k], mx[k], qbase, y0, x0, y1, x1,
+                                    base, w, k)
         else:
             w = cover * np.sign(dy).astype(np.int64)[:, None]
-            probe[k] = _ray_winding(mx[k], my[k], x0, y0, x1, y1, w, k)
+            probe[k] = _ray_winding(mx[k], my[k], qbase, x0, y0, x1, y1,
+                                    base, w, k)
     # the probed side is east of steep pieces, north of flat ones;
     # crossing a piece from its right to its left adds its coverage
     probe_left = np.where(steep, dy < 0.0, dx > 0.0)[:, None]
@@ -373,42 +718,72 @@ def _sides(nx, ny, lo, hi, cover, winding=False):
     return (left & 1).astype(bool), (right & 1).astype(bool)
 
 
-def _overlay(rings_a, rings_b, op, winding=False):
-    """Kept directed pieces of `op`, region on the left (see `_sides`
-    for `winding`).
+# --- overlay: area and geometry ---------------------------------------------
 
-    Returns (nx, ny, start, end) — node coordinates and the kept pieces
-    as node-id pairs — or None when nothing is kept."""
-    noded = _node(rings_a, rings_b)
-    if noded is None:
-        return None
-    nx, ny, lo, hi, cover, _ = noded
-    live = cover.any(axis=1)   # a piece whose runs cancel bounds nothing
-    lo, hi, cover = lo[live], hi[live], cover[live]
-    left, right = _sides(nx, ny, lo, hi, cover, winding)
+class _Kept(NamedTuple):
+    """Kept directed pieces of an overlay, region on the left, as
+    node-id pairs start -> end (pair p owns pieces base[p]:base[p + 1]
+    and nodes nbase[p]:nbase[p + 1])."""
+    nx: np.ndarray
+    ny: np.ndarray
+    nbase: np.ndarray
+    start: np.ndarray
+    end: np.ndarray
+    base: np.ndarray
+
+
+def _overlay(v: _Verts, op, winding=False) -> _Kept:
+    """Kept directed pieces of `op` for every pair of the batch (see
+    `_sides` for `winding`)."""
+    nd = _node(v)
+    npair = len(v.base) - 1
+    live = nd.cover.any(axis=1)   # a piece whose runs cancel bounds nothing
+    ppair = _group_of(nd.pbase)[live]
+    lo, hi, cover = nd.lo[live], nd.hi[live], nd.cover[live]
+    left, right = _sides(nd, lo, hi, cover,
+                         _offsets(np.bincount(ppair, minlength=npair)), winding)
     want = _OPS[op]
     in_l = want(left[:, 0], left[:, 1])
     in_r = want(right[:, 0], right[:, 1])
     keep = in_l != in_r
-    if not keep.any():
-        return None
     lo, hi, in_l = lo[keep], hi[keep], in_l[keep]
-    return nx, ny, np.where(in_l, lo, hi), np.where(in_l, hi, lo)
+    return _Kept(nd.nx, nd.ny, nd.nbase, np.where(in_l, lo, hi),
+                 np.where(in_l, hi, lo),
+                 _offsets(np.bincount(ppair[keep], minlength=npair)))
+
+
+def overlay_areas(v: _Verts, op, winding=False) -> np.ndarray:
+    """Exact planar area of `op` for every pair of the batch: the
+    Green's-theorem sum over the kept pieces, no stitch."""
+    k = _overlay(v, op, winding)
+    sx, sy = _shifted(k.nx, k.ny, k.nbase)
+    term = sx[k.start] * sy[k.end] - sx[k.end] * sy[k.start]
+    out = np.zeros(len(k.base) - 1)
+    b = k.base.tolist()
+    # one np.sum per pair keeps each pair's summation order
+    for p in np.flatnonzero(np.diff(k.base)).tolist():
+        out[p] = 0.5 * float(np.sum(term[b[p]:b[p + 1]]))
+    return out
+
+
+def overlay_rings(v: _Verts, op, winding=False) -> list:
+    """Boolean GEOMETRY of `op` for every pair of the batch: per pair a
+    ring list in even-odd form (shells CCW, holes CW; [] for an empty
+    result), or None when the stitch fails (see robust_boolean)."""
+    k = _overlay(v, op, winding)
+    out = []
+    for p in range(len(k.base) - 1):
+        s, e = k.base[p], k.base[p + 1]
+        n0, n1 = k.nbase[p], k.nbase[p + 1]
+        out.append(_stitch(k.nx[n0:n1], k.ny[n0:n1], k.start[s:e] - n0,
+                           k.end[s:e] - n0) if e > s else [])
+    return out
 
 
 def boolean_area(rings_a, rings_b, op) -> float:
     """Exact planar area of `op` over two even-odd ring sets: the
     Green's-theorem sum over the kept pieces, no stitch."""
-    return _green_area(_overlay(rings_a, rings_b, op))
-
-
-def _green_area(kept) -> float:
-    if kept is None:
-        return 0.0
-    nx, ny, start, end = kept
-    nx, ny = nx - nx.min(), ny - ny.min()   # shifted: smaller products
-    xa, ya, xb, yb = nx[start], ny[start], nx[end], ny[end]
-    return 0.5 * float(np.sum(xa * yb - xb * ya))
+    return float(overlay_areas(_vertices(rings_a, rings_b), op)[0])
 
 
 def robust_boolean(rings_a, rings_b, op):
@@ -417,7 +792,7 @@ def robust_boolean(rings_a, rings_b, op):
     CCW, holes CW; [] for an empty result), or None when the stitch
     meets a node whose kept pieces do not alternate in/out (snapping
     created a crossing) — callers report an error row."""
-    return _stitch(_overlay(rings_a, rings_b, op))
+    return overlay_rings(_vertices(rings_a, rings_b), op)[0]
 
 
 def _oriented(members):
@@ -455,39 +830,43 @@ def union_members(members, minus=()):
     (and that of `minus` zero). Returns rings in even-odd form (shells
     CCW, holes CW; [] for an empty result), or None when the stitch
     fails (see robust_boolean)."""
-    return _stitch(_union_overlay(members, minus))
+    return overlay_rings(_union_vertices(members, minus), "sub",
+                         winding=True)[0]
 
 
 def union_area(members, minus=()) -> float:
     """Exact planar area of union_members(members, minus): the Green's
     sum over its kept pieces, no stitch."""
-    return _green_area(_union_overlay(members, minus))
+    return float(overlay_areas(_union_vertices(members, minus), "sub",
+                               winding=True)[0])
 
 
-def _union_overlay(members, minus):
-    return _overlay(_oriented(members), _oriented(minus), "sub",
-                    winding=True)
+def _union_vertices(members, minus):
+    return _vertices(_oriented(members), _oriented(minus))
+
+
+def relate_pairs(v: _Verts) -> np.ndarray:
+    """A.Relate(B) for every pair of the batch (int8 codes), as NTS maps
+    DE-9IM outcomes (NtsGeometry.cs:303-314): CONTAINS when closed A
+    covers closed B (checked first, so equal shapes give CONTAINS),
+    WITHIN for the mirror, DISJOINT when the closed sets share no
+    point, else INTERSECTS."""
+    a_b, b_a, _, meet = _relations(v)
+    return np.where(a_b, CONTAINS, np.where(
+        b_a, WITHIN, np.where(meet, INTERSECTS, DISJOINT))).astype(np.int8)
 
 
 def relate(rings_a, rings_b) -> int:
-    """A.Relate(B) for two even-odd ring sets, as NTS maps DE-9IM
-    outcomes (NtsGeometry.cs:303-314): CONTAINS when closed A covers
-    closed B (checked first, so equal shapes give CONTAINS), WITHIN for
-    the mirror, DISJOINT when the closed sets share no point, else
-    INTERSECTS."""
-    a_b, b_a, _, meet = _relation(rings_a, rings_b)
-    if a_b:
-        return CONTAINS
-    if b_a:
-        return WITHIN
-    return INTERSECTS if meet else DISJOINT
+    """relate_pairs for two even-odd ring sets."""
+    return int(relate_pairs(_vertices(rings_a, rings_b))[0])
 
 
 def member_overlap(rings_a, rings_b) -> str:
     """How two MULTIPOLYGON members overlap: 'a_contains_b' /
     'b_contains_a' (one covers the other), 'none' (interiors disjoint,
     boundaries may touch) or 'cross' (interiors overlap otherwise)."""
-    a_b, b_a, overlap, _ = _relation(rings_a, rings_b)
+    a_b, b_a, overlap, _ = (r[0] for r in
+                            _relations(_vertices(rings_a, rings_b)))
     if a_b:
         return "a_contains_b"
     if b_a:
@@ -495,40 +874,43 @@ def member_overlap(rings_a, rings_b) -> str:
     return "cross" if overlap else "none"
 
 
-def _relation(rings_a, rings_b):
-    """(A covers B, B covers A, interiors overlap, closed sets meet) for
-    two even-odd ring sets, read off the noded arrangement (an operand
-    without an edge of positive length counts as empty): the sides
-    of every piece are the faces, the pieces and their end nodes the
+def _relations(v: _Verts):
+    """Per pair: (A covers B, B covers A, interiors overlap, closed sets
+    meet), bool arrays read off the noded arrangement (an operand
+    without an edge of positive length counts as empty): the sides of
+    every piece are the faces, the pieces and their end nodes the
     boundaries. A covers B when no side lies in B but not in A and
     every piece of B's rings lies in closed A — the second test is what
     decides zero-area rings, whose runs cancel and which have no
     area-bearing side."""
-    noded = _node(rings_a, rings_b)
+    nd = _node(v)
+    npair = len(v.base) - 1
+    left, right = _sides(nd, nd.lo, nd.hi, nd.cover, nd.pbase)
+    ppair = _group_of(nd.pbase)
+
+    def some(mask, grp=ppair):   # per pair: does any item hold `mask`
+        return np.bincount(grp[mask], minlength=npair) > 0
+
+    touch = nd.touch
     # an operand without a piece is empty
-    if noded is None or not noded[5].any(axis=0).all():
-        return False, False, False, False
-    nx, ny, lo, hi, cover, touch = noded
-    left, right = _sides(nx, ny, lo, hi, cover)
-    sides = np.concatenate((left, right))
-    a_only = (sides[:, 0] & ~sides[:, 1]).any()
-    b_only = (sides[:, 1] & ~sides[:, 0]).any()
-    overlap = (sides[:, 0] & sides[:, 1]).any()
+    both = some(touch[:, 0]) & some(touch[:, 1])
+    a_only = some((left[:, 0] & ~left[:, 1]) | (right[:, 0] & ~right[:, 1]))
+    b_only = some((left[:, 1] & ~left[:, 0]) | (right[:, 1] & ~right[:, 0]))
+    overlap = some((left[:, 0] & left[:, 1]) | (right[:, 0] & right[:, 1]))
     closed = left | right | touch          # piece in closed A / B
-    ends = np.zeros((len(nx), 2), dtype=bool)
+    ends = np.zeros((len(nd.nx), 2), dtype=bool)
     for k in (0, 1):
-        ends[lo[touch[:, k]], k] = ends[hi[touch[:, k]], k] = True
-    return (not b_only and closed[touch[:, 1], 0].all(),
-            not a_only and closed[touch[:, 0], 1].all(),
-            overlap,
-            overlap or closed.all(axis=1).any() or ends.all(axis=1).any())
+        ends[nd.lo[touch[:, k]], k] = ends[nd.hi[touch[:, k]], k] = True
+    meet = (overlap | some(closed.all(axis=1))
+            | some(ends.all(axis=1), _group_of(nd.nbase)))
+    return (both & ~b_only & ~some(touch[:, 1] & ~closed[:, 0]),
+            both & ~a_only & ~some(touch[:, 0] & ~closed[:, 1]),
+            both & overlap, both & meet)
 
 
-def _stitch(kept):
-    """Rings from kept directed pieces (see the module docstring)."""
-    if kept is None:
-        return []
-    nx, ny, start, end = kept
+def _stitch(nx, ny, start, end):
+    """Rings from one pair's kept directed pieces (see the module
+    docstring)."""
     n = len(start)
     ex, ey = nx[end] - nx[start], ny[end] - ny[start]
     # rays around every node: each piece leaves its start (out-ray) and

@@ -306,12 +306,15 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
                 off, False)
 
     # even-odd nesting depth of each ring's first vertex vs the others:
-    # one probe per ordered ring pair (k, j), ring j as its own polygon
-    k, j = np.nonzero(~np.eye(len(rings), dtype=bool))
-    inside = points_in_polygons(np.array([rx[0] for rx, _ in rings])[k],
-                                np.array([ry[0] for _, ry in rings])[k],
-                                j, ring_edges(rings))
-    depth = np.bincount(k[inside], minlength=len(rings)).tolist()
+    # one probe per ordered ring pair (k, j), ring j as its own polygon;
+    # a lone ring has depth 0
+    depth = [0]
+    if len(rings) > 1:
+        k, j = np.nonzero(~np.eye(len(rings), dtype=bool))
+        inside = points_in_polygons(np.array([rx[0] for rx, _ in rings])[k],
+                                    np.array([ry[0] for _, ry in rings])[k],
+                                    j, ring_edges(rings))
+        depth = np.bincount(k[inside], minlength=len(rings)).tolist()
     shells = [r for r, dep in zip(rings, depth) if dep % 2 == 0]
     holes = [r for r, dep in zip(rings, depth) if dep % 2 == 1]
 

@@ -9,7 +9,7 @@ measure of A∩B per candidate pair, not just INTERSECTS. These kernels
 are the per-pair refine stage of operators/overlay.py; candidates come
 from the same cell-cover equi-join every other two-layer join uses.
 
-`intersection_area` is the AREA output of the noded overlay kernel
+`intersection_areas` is the AREA output of the noded overlay kernel
 (kernels/booleans.py): both boundaries are noded once with a
 bbox-relative snap tolerance, every sub-segment is a node-id pair, the
 pieces bounding A ∩ B are selected by one batched parity pass, and the
@@ -20,13 +20,15 @@ both property-tested. The geometry (`st_intersection` and friends) is
 stitched from the same kept pieces, so measure and geometry agree.
 
 Complexity per pair: bbox-culled O(E_A·E_B) contact detection plus one
-(pieces x pieces) classify pass, vectorized.
+(pieces x pieces) classify pass, vectorized; `intersection_areas` runs
+every pair of a batch through one noding pass.
 """
 from __future__ import annotations
 
 import numpy as np
 
-from .booleans import _roll1
+from .booleans import (_offsets, _roll1, one_polygon, overlay_areas,
+                       pair_vertices, row_boxes, shape_rings)
 
 
 def _rings(xs, ys, ring_offsets):
@@ -159,20 +161,61 @@ def polygon_area_evenodd(xs, ys, ring_offsets=None) -> float:
     return total
 
 
+def polygon_areas_evenodd(xs, ys, ring_offsets) -> np.ndarray:
+    """polygon_area_evenodd of every row of three ragged columns (the
+    layout `pip.polygon_edges` reads). A one-ring row is its ring's
+    |Green's sum| / 2, one np.sum per ring; a row of several rings
+    takes the per-ring-pair containment probe of `_ring_signs`."""
+    rows = np.arange(len(xs.valid))
+    r = shape_rings(xs, ys, ring_offsets, rows)
+    nring = np.diff(r.first)
+    out = np.zeros(len(rows))
+    one = np.flatnonzero(nring == 1)
+    ring = r.first[one]
+    n = r.size[ring]
+    vb = _offsets(n)
+    k = np.arange(vb[-1]) - np.repeat(vb[:-1], n)
+    nxt = np.where(k + 1 == np.repeat(n, n), 0, k + 1)
+    gx, gy = np.repeat(r.sx[ring], n), np.repeat(r.sy[ring], n)
+    term = (r.x[gx + k] * r.y[gy + nxt]) - (r.x[gx + nxt] * r.y[gy + k])
+    b = vb.tolist()
+    for q, row in enumerate(one.tolist()):
+        s = np.sum(term[b[q]:b[q + 1]])
+        out[row] = 0.0 + (1.0 if s >= 0.0 else -1.0) * 0.5 * float(s)
+    for row in np.flatnonzero(nring > 1).tolist():
+        out[row] = polygon_area_evenodd(*(
+            c.values[c.offsets[row]:c.offsets[row + 1]] if c.valid[row]
+            else None for c in (xs, ys, ring_offsets)))
+    return out
+
+
 def intersection_area(axs, ays, aro, bxs, bys, bro) -> float:
-    """Exact planar area (deg^2) of A ∩ B for even-odd (multi)polygons:
-    the noded overlay kernel's Green's-theorem sum (see module
-    docstring). Robust to holes, multiparts, shared edges, vertex
-    contact and A == B; no degenerate bailout."""
-    from .booleans import boolean_area
-    a_rings = _rings(axs, ays, aro)
-    b_rings = _rings(bxs, bys, bro)
-    if not a_rings or not b_rings:
-        return 0.0
-    ax, ay = np.asarray(axs, dtype=float), np.asarray(ays, dtype=float)
-    bx, by = np.asarray(bxs, dtype=float), np.asarray(bys, dtype=float)
-    # bbox fast reject
-    if (ax.min() > bx.max() or ax.max() < bx.min()
-            or ay.min() > by.max() or ay.max() < by.min()):
-        return 0.0
-    return boolean_area(a_rings, b_rings, "and")
+    """Exact planar area (deg^2) of A ∩ B for two even-odd
+    (multi)polygons: the one-pair call of `intersection_areas`."""
+    return float(intersection_areas(one_polygon(axs, ays, aro), [0],
+                                    one_polygon(bxs, bys, bro), [0])[0])
+
+
+def intersection_areas(a, ia, b, ib) -> np.ndarray:
+    """Exact planar area (deg^2) of A ∩ B for operand pairs: pair k
+    intersects row ia[k] of a = (xs, ys, ring_offsets) with row ib[k]
+    of b, two sets of ragged columns holding even-odd (multi)polygons.
+    The noded overlay kernel's Green's-theorem sum (see module
+    docstring), all pairs in one batch. Robust to holes, multiparts,
+    shared edges, vertex contact and A == B; no degenerate bailout. A
+    pair with a side of no ring, or whose bboxes miss, measures 0."""
+    ia = np.asarray(ia, dtype=np.int64)
+    ib = np.asarray(ib, dtype=np.int64)
+    out = np.zeros(len(ia))
+    ua, ka = np.unique(ia, return_inverse=True)
+    ub, kb = np.unique(ib, return_inverse=True)
+    ra, rb = shape_rings(*a, ua), shape_rings(*b, ub)
+    _, aminx, amaxx, aminy, amaxy = (v[ka] for v in row_boxes(*a[:2], ua))
+    _, bminx, bmaxx, bminy, bmaxy = (v[kb] for v in row_boxes(*b[:2], ub))
+    live = ((np.diff(ra.first)[ka] > 0) & (np.diff(rb.first)[kb] > 0)
+            & ~((aminx > bmaxx) | (amaxx < bminx)
+                | (aminy > bmaxy) | (amaxy < bminy)))
+    k = np.flatnonzero(live)
+    if len(k):
+        out[k] = overlay_areas(pair_vertices(ra, ka[k], rb, kb[k]), "and")
+    return out

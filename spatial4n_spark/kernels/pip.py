@@ -24,10 +24,11 @@ iterations. `points_in_row_polygons` serves a row-aligned shape batch
 (rows that repeat one polygon share its edges); `points_in_polygon` is
 the one-polygon call of the same kernel.
 
-Polygon <-> polygon and polygon <-> rect relates pass the bbox gate
-here and are then decided on the noded arrangement of both boundaries
-(kernels.booleans.relate), the same noding the overlay area and
-geometry use.
+Polygon <-> polygon and polygon <-> rect relates (`relate_polygons`,
+all pairs of a batch at once) pass the bbox gate here and are then
+decided on the noded arrangement of both boundaries
+(kernels.booleans.relate_pairs), the same batched noding the overlay
+area and geometry use.
 """
 from __future__ import annotations
 
@@ -35,8 +36,8 @@ from typing import NamedTuple
 
 import numpy as np
 
-from .booleans import relate
-from .overlay import _rings
+from .booleans import (Lists, one_polygon, pair_vertices, relate_pairs,
+                       row_boxes, ring_spans, shape_rings)
 from .relation import CONTAINS, DISJOINT, WITHIN
 
 
@@ -51,70 +52,28 @@ class Edges(NamedTuple):
     offsets: np.ndarray
 
 
-class _Lists(NamedTuple):
-    """One ragged column: flat `values`, per-row `offsets` and `valid`
-    (the layout of `shapes.VertexLists`)."""
-    values: np.ndarray
-    offsets: np.ndarray
-    valid: np.ndarray
-
-
-def _one_list(values) -> _Lists:
-    if values is None:
-        return _Lists(np.zeros(0), np.zeros(2, dtype=np.int64),
-                      np.zeros(1, dtype=bool))
-    values = np.asarray(values)
-    return _Lists(values, np.array([0, len(values)]), np.ones(1, dtype=bool))
-
-
 def polygon_edges(xs, ys, ring_offsets, rows=None) -> Edges:
     """Edge table of the polygons in rows `rows` (default: all) of three
     ragged columns with `values`, `offsets` and `valid` (the layout of
     `shapes.VertexLists`). Polygon i of the table is row `rows[i]`.
 
-    A row's `ring_offsets` cut its own vertices into rings; a null or
-    shorter-than-2 `ring_offsets` makes all vertices one ring. A ring
-    that repeats its first vertex drops the repeat; ring k's last edge
-    closes back to its first vertex. A row with null `xs` or `ys` has
-    no edges, so every point reads outside it."""
+    Rings are those of `booleans.ring_spans`: a row's `ring_offsets`
+    cut its own vertices into rings, a null or shorter-than-2
+    `ring_offsets` makes all vertices one ring, and a ring that repeats
+    its first vertex drops the repeat. Ring k's last edge closes back
+    to its first vertex. A row with null `xs` or `ys` has no edges, so
+    every point reads outside it."""
     rows = (np.arange(len(xs.valid)) if rows is None
             else np.asarray(rows, dtype=np.int64))
-    xbase = xs.offsets[rows]
-    ybase = ys.offsets[rows]
-    nv = np.where(xs.valid[rows] & ys.valid[rows],
-                  np.minimum(xs.offsets[rows + 1] - xbase,
-                             ys.offsets[rows + 1] - ybase), 0)
-    rbase = ring_offsets.offsets[rows]
-    nro = np.where(ring_offsets.valid[rows],
-                   ring_offsets.offsets[rows + 1] - rbase, 0)
-    multi = nro >= 2
-    nrings = np.where(multi, nro - 1, 1)
-    first_ring = np.cumsum(nrings) - nrings
-    ring_row = np.repeat(np.arange(len(rows)), nrings)
-    # ring k of a row is its vertices [ring_offsets[k], ring_offsets[k+1])
-    # (all of them without ring_offsets), clamped as a Python slice is
-    cap = nv[ring_row]
-    rs = np.zeros(len(ring_row), dtype=np.int64)
-    re = cap.copy()
-    m = np.flatnonzero(multi[ring_row])
-    p = rbase[ring_row[m]] + m - first_ring[ring_row[m]]
-    rs[m] = ring_offsets.values[p]
-    re[m] = ring_offsets.values[p + 1]
-    rs = np.minimum(rs, cap)
-    n = np.maximum(np.minimum(re, cap) - rs, 0)
-    gx = xbase[ring_row] + rs
-    gy = ybase[ring_row] + rs
+    first, gx, gy, n = ring_spans(xs, ys, ring_offsets, rows)
     X, Y = xs.values, ys.values
-    c = np.flatnonzero(n >= 2)
-    n[c] -= ((X[gx[c]] == X[gx[c] + n[c] - 1])
-             & (Y[gy[c]] == Y[gy[c] + n[c] - 1]))
     # edge i of a ring runs from its vertex i to vertex i + 1, the last
     # one back to vertex 0
     ring_end = np.cumsum(n)
     ering = np.repeat(np.arange(len(n)), n)
     i = np.arange(len(ering)) - (ring_end - n)[ering]
     nxt = np.where(i + 1 == n[ering], 0, i + 1)
-    offsets = np.r_[0, ring_end][np.r_[first_ring, len(n)]]
+    offsets = np.r_[0, ring_end][first]
     return Edges(X[gx[ering] + i], Y[gy[ering] + i],
                  X[gx[ering] + nxt], Y[gy[ering] + nxt], offsets)
 
@@ -280,10 +239,10 @@ def ring_edges(rings) -> Edges:
     ys = [np.asarray(y, dtype=np.float64) for _, y in rings]
     off = np.r_[0, np.cumsum([len(x) for x in xs])]
     valid = np.ones(len(rings), dtype=bool)
-    one_ring = _Lists(np.zeros(0, dtype=np.int64),
-                      np.zeros(len(rings) + 1, dtype=np.int64), ~valid)
-    return polygon_edges(_Lists(np.concatenate(xs), off, valid),
-                         _Lists(np.concatenate(ys), off, valid), one_ring)
+    one_ring = Lists(np.zeros(0, dtype=np.int64),
+                     np.zeros(len(rings) + 1, dtype=np.int64), ~valid)
+    return polygon_edges(Lists(np.concatenate(xs), off, valid),
+                         Lists(np.concatenate(ys), off, valid), one_ring)
 
 
 def points_in_polygon(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
@@ -298,9 +257,7 @@ def points_in_polygon(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
     of `points_in_polygons`.
     """
     px = np.asarray(px, dtype=np.float64)
-    edges = polygon_edges(_one_list(np.asarray(xs, dtype=np.float64)),
-                          _one_list(np.asarray(ys, dtype=np.float64)),
-                          _one_list(ring_offsets))
+    edges = polygon_edges(*one_polygon(xs, ys, ring_offsets))
     return points_in_polygons(px.ravel(), np.ravel(py),
                               np.zeros(px.size, dtype=np.int64),
                               edges).reshape(px.shape)
@@ -359,29 +316,56 @@ def relate_polygon_circle(xs, ys, ring_offsets, minx, maxx, miny, maxy,
 
 
 def relate_polygon_polygon(axs, ays, aro, bxs, bys, bro) -> int:
-    """A.Relate(B) for two (multi)polygons with holes -> code.
+    """A.Relate(B) for two (multi)polygons with holes -> code: the
+    one-pair call of `relate_polygons`."""
+    return int(relate_polygons(one_polygon(axs, ays, aro), [0],
+                               one_polygon(bxs, bys, bro), [0])[0])
+
+
+def relate_polygons(a, ia, b, ib) -> np.ndarray:
+    """A.Relate(B) -> int8 code for operand pairs: pair k relates row
+    ia[k] of a = (xs, ys, ring_offsets) with row ib[k] of b, two sets
+    of ragged columns (the layout `polygon_edges` reads) holding
+    (multi)polygons with holes.
 
     Mapping per NtsGeometry.IntersectionMatrixToSpatialRelation
     (NtsGeometry.cs:303-314): COVERS -> CONTAINS, COVEREDBY -> WITHIN,
     DISJOINT -> DISJOINT, else INTERSECTS (Spatial4j CONTAINS/WITHIN
     are OGC COVERS/COVEREDBY, boundary-inclusive). Boundary-only touch
     is INTERSECTS (OGC disjoint = no shared points at all) unless one
-    covers the other. Bbox gate, then the noded relate
-    (kernels.booleans.relate). Dateline-crossing inputs are page-split
-    upstream (wkt.py), same as every other polygon kernel here."""
-    axs = np.asarray(axs, dtype=np.float64)
-    ays = np.asarray(ays, dtype=np.float64)
-    bxs = np.asarray(bxs, dtype=np.float64)
-    bys = np.asarray(bys, dtype=np.float64)
-    if axs.size == 0 or bxs.size == 0:
-        return DISJOINT
-    if (axs.min() > bxs.max() or axs.max() < bxs.min()
-            or ays.min() > bys.max() or ays.max() < bys.min()):
-        return DISJOINT
+    covers the other. A row without vertices is DISJOINT from
+    everything; then the bbox gate; a row whose vertices all coincide
+    is a point, tested against the other polygon's rings; every other
+    pair is decided in one batched noded relate
+    (kernels.booleans.relate_pairs). Dateline-crossing inputs are
+    page-split upstream (wkt.py), same as every other polygon kernel
+    here."""
+    ia = np.asarray(ia, dtype=np.int64)
+    ib = np.asarray(ib, dtype=np.int64)
+    out = np.full(len(ia), DISJOINT, dtype=np.int8)
+    ua, ka = np.unique(ia, return_inverse=True)
+    ub, kb = np.unique(ib, return_inverse=True)
+    na, aminx, amaxx, aminy, amaxy = (v[ka] for v in row_boxes(*a[:2], ua))
+    nb, bminx, bmaxx, bminy, bmaxy = (v[kb] for v in row_boxes(*b[:2], ub))
+    live = ((na > 0) & (nb > 0)
+            & ~((aminx > bmaxx) | (amaxx < bminx)
+                | (aminy > bmaxy) | (amaxy < bminy)))
     # a shape whose vertices all coincide is a point: it has no edge
-    if bxs.min() == bxs.max() and bys.min() == bys.max():
-        return int(relate_polygon_points(bxs[:1], bys[:1], axs, ays, aro)[0])
-    if axs.min() == axs.max() and ays.min() == ays.max():
-        return WITHIN if points_in_polygon(axs[:1], ays[:1], bxs, bys,
-                                           bro)[0] else DISJOINT
-    return relate(_rings(axs, ays, aro), _rings(bxs, bys, bro))
+    b_pt = live & (bminx == bmaxx) & (bminy == bmaxy)
+    a_pt = live & ~b_pt & (aminx == amaxx) & (aminy == amaxy)
+    for sel, (pts, p_rows), (poly, g_rows), hit in (
+            (b_pt, (b, ib), (a, ia), CONTAINS),
+            (a_pt, (a, ia), (b, ib), WITHIN)):
+        k = np.flatnonzero(sel)
+        if len(k):
+            xs, ys = pts[0], pts[1]
+            first = p_rows[k]
+            inside = points_in_row_polygons(
+                xs.values[xs.offsets[first]], ys.values[ys.offsets[first]],
+                *poly, g_rows[k])
+            out[k] = np.where(inside, hit, DISJOINT)
+    k = np.flatnonzero(live & ~b_pt & ~a_pt)
+    if len(k):
+        out[k] = relate_pairs(pair_vertices(shape_rings(*a, ua), ka[k],
+                                            shape_rings(*b, ub), kb[k]))
+    return out

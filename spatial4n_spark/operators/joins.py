@@ -699,16 +699,13 @@ def _shape_shape_join_closure(left: DataFrame, right: DataFrame,
         return None
     relate_udf = make_closure_shape_relate(table)
 
-    ls, rs = F.col(left_shape), F.col(right_shape)
+    ls = F.col(left_shape)
     lbox = _bbox_sql(left_shape)
     lc = SF.with_cover_codes(
         left.withColumn("__lli0", SF.st_axis_idx_col(lbox[0], "lon", precision))
             .withColumn("__lti0", SF.st_axis_idx_col(lbox[2], "lat", precision)),
         *lbox, precision, "__cell")
-    slim = right.select(
-        right_id,
-        rs["minx"].alias("__rminx"), rs["maxx"].alias("__rmaxx"),
-        rs["miny"].alias("__rminy"), rs["maxy"].alias("__rmaxy"))
+    slim = _table_bboxes(right, table, right_id)
     rc = SF.with_cover_codes(
         slim.withColumn("__rli0", SF.st_axis_idx_col("`__rminx`", "lon", precision))
             .withColumn("__rti0", SF.st_axis_idx_col("`__rminy`", "lat", precision)),
@@ -725,6 +722,23 @@ def _shape_shape_join_closure(left: DataFrame, right: DataFrame,
                     "__rminx", "__rmaxx", "__rminy", "__rmaxy"))
     return _apply_shape_predicate(gated, predicate, relate_udf,
                                   ls, F.col(right_id))
+
+
+def _table_bboxes(right: DataFrame, table: dict, right_id: str) -> DataFrame:
+    """(right_id, __rminx, __rmaxx, __rminy, __rmaxy) of a collected
+    right layer (`refine.collect_shape_table`) as a local DataFrame:
+    the closure plan reads the bboxes the collect already parsed
+    instead of parsing the right layer a second time."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    def num(v):
+        return None if np.isnan(v) else v
+    names = ("__rminx", "__rmaxx", "__rminy", "__rmaxy")
+    schema = StructType([right.schema[right_id]]
+                        + [StructField(c, DoubleType()) for c in names])
+    rows = [(sid, *(num(rec[f]) for f in ("minx", "maxx", "miny", "maxy")))
+            for sid, rec in table.items()]
+    return right.sparkSession.createDataFrame(rows, schema)
 
 
 def _apply_shape_predicate(gated: DataFrame, predicate: str, relate,
@@ -806,11 +820,7 @@ def shape_shape_join_adaptive(left: DataFrame, right: DataFrame,
         table = collect_shape_table(right, right_id, right_shape)
         if table is not None:
             closure_relate = make_closure_shape_relate(table)
-            rs_src = F.col(right_shape)
-            right = right.select(
-                right_id,
-                rs_src["minx"].alias("__rminx"), rs_src["maxx"].alias("__rmaxx"),
-                rs_src["miny"].alias("__rminy"), rs_src["maxy"].alias("__rmaxy"))
+            right = _table_bboxes(right, table, right_id)
 
     ls, rs = F.col(left_shape), F.col(right_shape)
     mask = (1 << LEVEL_TAG_BITS) - 1

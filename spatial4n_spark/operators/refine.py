@@ -25,13 +25,14 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ByteType
 
 from ..kernels import relation as REL
 from ..kernels import wkt as _wkt
-from ..shapes import VertexLists, decode
+from ..shapes import VertexLists, decode, encode_records
 
 # guard: beyond this many total vertices the closure (shipped per task)
 # stops being "broadcast-small"; callers fall back to the struct path
@@ -42,7 +43,8 @@ def collect_shape_table(shapes: DataFrame, shape_id: str,
                         shape_col: str = "shape"):
     """One driver-side pass over the (broadcast-small) shape layer ->
     {id: shape record} (`ShapeBatch.record` dicts: NaN for null
-    scalars, NumPy vertex arrays or None). Returns None when the layer
+    scalars, NumPy vertex arrays or None; a null shape's record carries
+    the error "null shape"). Returns None when the layer
     exceeds MAX_CLOSURE_VERTICES (caller should use the struct refine
     instead)."""
     t = shapes.select(shape_id, shape_col).toArrow()
@@ -56,7 +58,10 @@ def collect_shape_table(shapes: DataFrame, shape_id: str,
     nverts = np.diff(s.xs.offsets)[s.xs.valid].sum()
     if nverts > MAX_CLOSURE_VERTICES:
         return None
-    return {sid: s.record(i) for i, sid in enumerate(ids)}
+    table = {sid: s.record(i) for i, sid in enumerate(ids)}
+    for i in np.flatnonzero(~s.valid).tolist():
+        table[ids[i]]["error"] = "null shape"
+    return table
 
 
 def make_closure_refine(table: dict):
@@ -132,18 +137,27 @@ def make_closure_shape_relate(table: dict):
     """Arrow UDF (left shape, right_id) -> relation code, with the
     RIGHT layer's vertex arrays captured in the closure (two-layer
     join, broadcast-small right side): per candidate pair only the
-    LEFT shape crosses Arrow."""
-    from ..kernels.pip import relate_polygon_polygon
+    LEFT shape crosses Arrow. The relate is `st_relate_polygon_polygon`'s
+    over the table's shapes, every pair of a batch in one pass; a
+    right id missing from the table relates as DISJOINT."""
+    from ..functions import relate_operands, relate_shape_pairs
+    ids = list(table)
+    recs = [table[k] for k in ids]
+    right = relate_operands(decode(encode_records(
+        recs, [rec["error"] for rec in recs])))
+    id_set = pa.array(ids)
 
     def relate(left: pa.Array, rid: pa.Array) -> pa.Array:
         a = decode(left)
+        ib = (pc.index_in(rid.cast(id_set.type), value_set=id_set)
+              .fill_null(-1).to_numpy(zero_copy_only=False)
+              if len(ids) else np.full(len(a), -1))
         out = np.full(len(a), REL.DISJOINT, dtype=np.int8)
-        for i, r in enumerate(rid.to_pylist()):
-            rec = table.get(r)
-            if rec is not None:
-                out[i] = relate_polygon_polygon(
-                    *a.verts(i), rec["xs"], rec["ys"], rec["ring_offsets"])
-        return pa.array(out, type=pa.int8())
+        null = np.zeros(len(a), dtype=bool)
+        k = np.flatnonzero(ib >= 0)
+        out[k], null[k] = relate_shape_pairs(relate_operands(a), k,
+                                             right, ib[k])
+        return pa.array(out, type=pa.int8(), mask=null)
 
     return arrow_udf(relate, ByteType())
 
