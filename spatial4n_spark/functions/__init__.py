@@ -38,8 +38,8 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf, pandas_udf
-from pyspark.sql.types import (ArrayType, ByteType, DoubleType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (ByteType, DoubleType, StringType,
+                               StructField, StructType)
 
 from ..kernels import geohash as _gh
 from ..kernels import relation as _rel
@@ -601,90 +601,6 @@ def with_cover_codes(df, minx: str, maxx: str, miny: str, maxy: str,
                     "__cv_nlon", "__cv_nlat", "__cv_k"))
 
 
-@pandas_udf(ArrayType(LongType()))
-def _st_cover_codes_adaptive_udf(minx: pd.Series, maxx: pd.Series,
-                                 miny: pd.Series, maxy: pd.Series,
-                                 min_level: pd.Series, max_level: pd.Series,
-                                 cells_budget: pd.Series) -> pd.Series:
-    lo, hi = int(min_level.iloc[0]), int(max_level.iloc[0])
-    budget = int(cells_budget.iloc[0])
-    return pd.Series(_gh.cover_codes_bbox_adaptive_batch(
-        minx.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxx.to_numpy(dtype=np.float64, na_value=np.nan),
-        miny.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxy.to_numpy(dtype=np.float64, na_value=np.nan), lo, hi, budget))
-
-
-def st_cover_codes_adaptive(minx, maxx, miny, maxy,
-                            min_level: int, max_level: int,
-                            cells_budget: int = 4):
-    """Level-TAGGED cover codes at each bbox's own adaptive level (the
-    finest level in the band whose EXACT cover count fits
-    `cells_budget`; oversized bboxes fall back to a min_level grid
-    range). Join keys are (code << 4) | level — disjoint across levels.
-    The multi-level spatial-index shape side (batch Arrow kernel,
-    kernels/geohash.cover_codes_bbox_adaptive_batch)."""
-    return _st_cover_codes_adaptive_udf(minx, maxx, miny, maxy,
-                                        F.lit(min_level), F.lit(max_level),
-                                        F.lit(cells_budget))
-
-
-@pandas_udf(ArrayType(LongType()))
-def _st_cover_pyramid_udf(minx: pd.Series, maxx: pd.Series,
-                          miny: pd.Series, maxy: pd.Series,
-                          min_level: pd.Series, max_level: pd.Series,
-                          cells_budget: pd.Series) -> pd.Series:
-    lo, hi = int(min_level.iloc[0]), int(max_level.iloc[0])
-    budget = int(cells_budget.iloc[0])
-    return pd.Series(_gh.cover_pyramid_batch(
-        minx.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxx.to_numpy(dtype=np.float64, na_value=np.nan),
-        miny.to_numpy(dtype=np.float64, na_value=np.nan),
-        maxy.to_numpy(dtype=np.float64, na_value=np.nan), lo, hi, budget))
-
-
-def st_cover_pyramid(minx, maxx, miny, maxy,
-                     min_level: int, max_level: int,
-                     cells_budget: int = 4):
-    """Multi-level tagged cover pyramid of a bbox: own adaptive-level
-    cover first (element 0's tag IS the shape's level), then the exact
-    cover at every coarser level down to min_level (prefix-shift
-    derived). The two-sided adaptive join's shape emission — bounded
-    per row by cells_budget + 4x(levels below own)."""
-    return _st_cover_pyramid_udf(minx, maxx, miny, maxy,
-                                 F.lit(min_level), F.lit(max_level),
-                                 F.lit(cells_budget))
-
-
-def st_cell_codes_for_levels_col(lat, lon, levels):
-    """Array of level-tagged cell codes of the point (lat, lon SQL
-    fragments) at each level in `levels` — the point side of the adaptive multi-level join, as a
-    PURE Column expression (whole-stage codegen; zero Arrow exchange).
-
-    Only the FINEST level gets a Morton tree; every coarser code is its
-    ancestor by the prefix property (a level-L code >> 5*(L-Lc) IS the
-    level-Lc code — kernels/geohash.py), so codegen evaluates one
-    coordinate tree per row instead of len(levels) (ProjectExec
-    subexpression elimination collapses the shared base). Pass only the
-    levels the shape side actually uses (plan-time pruning) to cut the
-    point-side fan-out."""
-    levels = list(levels)
-    tag_bits = _gh.LEVEL_TAG_BITS
-    finest = max(levels)
-    base = st_cell_code_col(lat, lon, finest)
-    return F.array(*[
-        F.shiftleft(F.shiftright(base, 5 * (finest - lv)), tag_bits)
-         .bitwiseOR(F.lit(lv)).cast("long")
-        for lv in levels])
-
-
-def st_cell_codes_multilevel_col(lat, lon, min_level: int, max_level: int):
-    """st_cell_codes_for_levels_col over the full [min_level, max_level]
-    band."""
-    return st_cell_codes_for_levels_col(lat, lon,
-                                        range(min_level, max_level + 1))
-
-
 @arrow_udf(ByteType())
 def st_relate_polygon_circle(polygon: pa.Array, circle: pa.Array) -> pa.Array:
     """Polygon.Relate(circle) vertex-counting (NtsGeometry.cs:248-275);
@@ -696,20 +612,6 @@ def st_relate_polygon_circle(polygon: pa.Array, circle: pa.Array) -> pa.Array:
         out[i] = relate_polygon_circle(
             *a.verts(i), a.minx[i], a.maxx[i], a.miny[i], a.maxy[i],
             c.x[i], c.y[i], c.radius[i])
-    return pa.array(out, type=pa.int8())
-
-
-@arrow_udf(ByteType())
-def st_relate_polygon_rect(polygon: pa.Array, rect: pa.Array) -> pa.Array:
-    """Polygon.Relate(rect), COVERS semantics (NtsGeometry.cs:303-314
-    mapping; the noded relate in kernels.booleans with the rect as one
-    ring); the rect is read from its bbox."""
-    from ..kernels.pip import relate_polygon_rect
-    a, r = decode(polygon), decode(rect)
-    out = np.empty(len(a), dtype=np.int8)
-    for i in range(len(a)):
-        out[i] = relate_polygon_rect(*a.verts(i), r.minx[i], r.maxx[i],
-                                     r.miny[i], r.maxy[i])
     return pa.array(out, type=pa.int8())
 
 
@@ -1036,6 +938,12 @@ def st_relate_polygon_polygon(a: pa.Array, b: pa.Array) -> pa.Array:
     out, null = relate_shape_pairs(relate_operands(sa), rows,
                                    relate_operands(sb), rows)
     return pa.array(out, type=pa.int8(), mask=null)
+
+
+# Polygon.Relate(rect), COVERS semantics (NtsGeometry.cs:303-314): the
+# polygon relate, which relates a rect row as its ring pages (two when
+# the rect crosses the dateline)
+st_relate_polygon_rect = st_relate_polygon_polygon
 
 
 def _measure_pages(s):

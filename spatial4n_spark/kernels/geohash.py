@@ -345,33 +345,7 @@ def lookup_degrees_size_for_hash_len(hash_len: int) -> tuple[float, float]:
     return HASH_LEN_TO_LAT_HEIGHT[hash_len], HASH_LEN_TO_LON_WIDTH[hash_len]
 
 
-# --- adaptive multi-level cover (per-shape level) -------------------------
-#
-# A single global cover level breaks down when shape sizes span orders
-# of magnitude (Russia vs Monaco in one admin layer): a level fine
-# enough for the small shapes explodes the big shapes into thousands
-# of cover cells, and a level coarse enough for the big shapes makes
-# every small shape share its cell with millions of unrelated points.
-# The adaptive index keys each shape at ITS OWN level -- the finest
-# level whose cell still contains the shape's bbox extent, so every
-# cover set is at most 2x2 cells -- and tags the level into the int64
-# join key's low bits. Points join by computing their (single) cell at
-# each level in the band: bounded fan-out on both sides regardless of
-# the shape-size distribution. This is the S2/RecursivePrefixTree
-# multi-level idea re-expressed as a plain Spark equi-join key.
-
-LEVEL_TAG_BITS = 4  # join-key low bits carrying the level (max level 11)
-
-
-def tag_level(codes, level: int):
-    """Tag int64 cell codes with their level: (code << 4) | level.
-
-    Codes at different levels use different bit counts and would
-    otherwise collide numerically (level-5 code 0b...01 == level-6
-    code 0b...01); the tag makes keys from different levels disjoint.
-    """
-    return (np.asarray(codes, dtype=np.int64) << LEVEL_TAG_BITS) | level
-
+# --- cover sizes ---------------------------------------------------------
 
 def cover_counts_bbox(minx, maxx, miny, maxy, level: int) -> np.ndarray:
     """EXACT cover-cell count of each bbox at `level` (dateline-aware),
@@ -385,97 +359,3 @@ def cover_counts_bbox(minx, maxx, miny, maxy, level: int) -> np.ndarray:
     ncols = np.where(minx <= maxx, hi_lon - lo_lon + 1,
                      lon_n - lo_lon + hi_lon + 1)
     return ncols * (hi_lat - lo_lat + 1)
-
-
-def adaptive_level_for_bbox(minx, maxx, miny, maxy,
-                            min_level: int, max_level: int,
-                            cells_budget: int = 4) -> np.ndarray:
-    """Per-bbox cover level: the FINEST level in [min_level, max_level]
-    whose EXACT cover-cell count stays within `cells_budget`. Shapes
-    too large for the budget even at min_level fall back to min_level
-    (grid-range cover, same as the fixed-level path at that level).
-
-    cells_budget=4 keys each shape where its bbox spans at most ~2
-    cells per axis (minimal fan-out); a larger budget (16, 64) trades
-    bounded extra cover rows for a tighter cover on BIG shapes — their
-    candidate false-positive band shrinks by the finer cell size. Cover
-    count is weakly monotone in the level (each coarse cell splits into
-    children), so the loop's last fitting level IS the finest.
-    """
-    minx = np.asarray(minx, dtype=np.float64)
-    lvl = np.full(minx.shape, min_level, dtype=np.int64)
-    for lv in range(min_level + 1, max_level + 1):
-        fits = cover_counts_bbox(minx, maxx, miny, maxy, lv) <= cells_budget
-        lvl = np.where(fits, lv, lvl)
-    return lvl
-
-
-def cover_codes_bbox_adaptive_batch(minx, maxx, miny, maxy,
-                                    min_level: int, max_level: int,
-                                    cells_budget: int = 4) -> list:
-    """Level-tagged cover codes, one list per row, at each row's own
-    adaptive level. Same grid-range/dateline semantics as
-    cover_codes_bbox_batch; rows are processed in per-level batches so
-    the vectorized index pass is shared within a level."""
-    assert 1 <= min_level <= max_level <= 11, (min_level, max_level)
-    minx = np.asarray(minx, dtype=np.float64)
-    maxx = np.asarray(maxx, dtype=np.float64)
-    miny = np.asarray(miny, dtype=np.float64)
-    maxy = np.asarray(maxy, dtype=np.float64)
-    n = len(minx)
-    out: list = [[]] * n
-    ok = ~np.isnan(minx)
-    lvls = adaptive_level_for_bbox(minx, maxx, miny, maxy,
-                                   min_level, max_level, cells_budget)
-    for lv in np.unique(lvls[ok]):
-        idx = np.nonzero(ok & (lvls == lv))[0]
-        covers = cover_codes_bbox_batch(minx[idx], maxx[idx],
-                                        miny[idx], maxy[idx], int(lv))
-        shift = int(lv)
-        for j, i in enumerate(idx):
-            out[i] = [(c << LEVEL_TAG_BITS) | shift for c in covers[j]]
-    return out
-
-
-def cover_pyramid_batch(minx, maxx, miny, maxy,
-                        min_level: int, max_level: int,
-                        cells_budget: int = 4) -> list:
-    """Multi-level cover pyramid, one list of TAGGED codes per row:
-    the adaptive own-level cover FIRST (contract: element 0's tag is
-    the shape's own level), then the distinct cover at every coarser
-    level down to min_level.
-
-    The coarser sets are exact covers, derived for free from the
-    prefix property: a level-L code right-shifted by 5*(L-Lc) IS its
-    level-Lc ancestor, and the ancestor set of a grid-range cover is
-    the grid-range cover at the coarser level. Total emission per row
-    is bounded by cells_budget + 4*(levels below own) regardless of
-    the shape's size — the two-sided adaptive join's shape emission
-    (each pair of shapes meets at level min(L_left, L_right), where
-    both pyramids contain their full bbox cover). Shapes too big even
-    for min_level are clamped there and emit the exact min_level
-    cover — bounded by the min_level grid (32 cells at level 1).
-    """
-    assert 1 <= min_level <= max_level <= 11, (min_level, max_level)
-    minx = np.asarray(minx, dtype=np.float64)
-    maxx = np.asarray(maxx, dtype=np.float64)
-    miny = np.asarray(miny, dtype=np.float64)
-    maxy = np.asarray(maxy, dtype=np.float64)
-    n = len(minx)
-    out: list = [[]] * n
-    ok = ~np.isnan(minx)
-    lvls = adaptive_level_for_bbox(minx, maxx, miny, maxy,
-                                   min_level, max_level, cells_budget)
-    for lv in np.unique(lvls[ok]):
-        idx = np.nonzero(ok & (lvls == lv))[0]
-        covers = cover_codes_bbox_batch(minx[idx], maxx[idx],
-                                        miny[idx], maxy[idx], int(lv))
-        own = int(lv)
-        for j, i in enumerate(idx):
-            codes = np.asarray(covers[j], dtype=np.int64)
-            pyramid = list(((codes << LEVEL_TAG_BITS) | own))
-            for lc in range(own - 1, min_level - 1, -1):
-                anc = np.unique(codes >> (5 * (own - lc)))
-                pyramid.extend(((anc << LEVEL_TAG_BITS) | lc).tolist())
-            out[i] = [int(c) for c in pyramid]
-    return out

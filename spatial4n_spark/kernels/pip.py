@@ -273,15 +273,6 @@ def relate_polygon_points(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
     return np.where(inside, CONTAINS, DISJOINT).astype(np.int8)
 
 
-def relate_polygon_rect(xs, ys, ring_offsets, minx, maxx, miny, maxy) -> int:
-    """Polygon.Relate(rect) -> code, COVERS semantics: the polygon
-    relate below with the rect as one CCW ring. Non-dateline-crossing
-    rect assumed (upstream splits pages)."""
-    rx = np.array([minx, maxx, maxx, minx], dtype=np.float64)
-    ry = np.array([miny, miny, maxy, maxy], dtype=np.float64)
-    return relate_polygon_polygon(xs, ys, ring_offsets, rx, ry, None)
-
-
 def relate_polygon_circle(xs, ys, ring_offsets, minx, maxx, miny, maxy,
                           cx, cy, r, geo: bool = True) -> int:
     """Polygon.Relate(circle) — the reference's vertex-counting

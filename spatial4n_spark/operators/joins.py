@@ -136,24 +136,6 @@ def _slim_bbox(shapes: DataFrame, shape_col: str, shape_id: str) -> DataFrame:
         s["miny"].alias("__miny"), s["maxy"].alias("__maxy"))
 
 
-def _closure_gate_refine(joined: DataFrame, shape_id: str,
-                         point_x: str, point_y: str, refine_udf) -> DataFrame:
-    """Dateline-aware bbox gate over the slim __min/__max columns, then
-    the closure refine — the tail shared by the fixed-level and
-    adaptive closure paths."""
-    px, py = F.col(point_x), F.col(point_y)
-    maxx_u = F.when(F.col("__maxx") < F.col("__minx"),
-                    F.col("__maxx") + 360.0).otherwise(F.col("__maxx"))
-    px_shift = F.when(px < F.col("__minx"), px + 360.0).otherwise(
-        F.when(px > maxx_u, px - 360.0).otherwise(px))
-    bbox_ok = ((py >= F.col("__miny")) & (py <= F.col("__maxy"))
-               & (px_shift >= F.col("__minx")) & (px_shift <= maxx_u))
-    refined = (joined.where(bbox_ok)
-               .where(refine_udf(F.col(shape_id), px, py) == REL.CONTAINS)
-               .withColumn("relation", F.lit(REL.CONTAINS).cast("tinyint")))
-    return refined.drop("cover_cell", "__minx", "__maxx", "__miny", "__maxy")
-
-
 def _point_in_shape_join_closure(points: DataFrame, shapes: DataFrame,
                                  plan: JoinPlan, point_x: str, point_y: str,
                                  shape_col: str, shape_id: str) -> DataFrame | None:
@@ -208,7 +190,19 @@ def _point_in_shape_join_closure(points: DataFrame, shapes: DataFrame,
     pts = with_point_cell(points, point_x, point_y, plan.precision, codes=True)
     joined = pts.join(F.broadcast(cover),
                       pts["cell_id"] == cover["cover_cell"], "inner")
-    return _closure_gate_refine(joined, shape_id, point_x, point_y, refine_udf)
+    # dateline-aware bbox gate over the slim __min/__max columns, then
+    # the closure refine
+    px, py = F.col(point_x), F.col(point_y)
+    maxx_u = F.when(F.col("__maxx") < F.col("__minx"),
+                    F.col("__maxx") + 360.0).otherwise(F.col("__maxx"))
+    px_shift = F.when(px < F.col("__minx"), px + 360.0).otherwise(
+        F.when(px > maxx_u, px - 360.0).otherwise(px))
+    bbox_ok = ((py >= F.col("__miny")) & (py <= F.col("__maxy"))
+               & (px_shift >= F.col("__minx")) & (px_shift <= maxx_u))
+    refined = (joined.where(bbox_ok)
+               .where(refine_udf(F.col(shape_id), px, py) == REL.CONTAINS)
+               .withColumn("relation", F.lit(REL.CONTAINS).cast("tinyint")))
+    return refined.drop("cover_cell", "__minx", "__maxx", "__miny", "__maxy")
 
 
 def _gate_and_refine(joined: DataFrame, shape_col: str,
@@ -251,111 +245,6 @@ def _project_how(refined: DataFrame, points: DataFrame, how: str) -> DataFrame:
     if how == "leftanti":
         return points.join(hits, on=points.columns, how="leftanti")
     raise ValueError(how)
-
-
-def point_in_shape_join_adaptive(points: DataFrame, shapes: DataFrame,
-                                 min_level: int = 3, max_level: int = 7,
-                                 cells_budget: int = 4,
-                                 levels: list | None = None,
-                                 point_x: str = "x", point_y: str = "y",
-                                 shape_col: str = "shape",
-                                 broadcast_shapes: bool = True,
-                                 salt: int | None = None,
-                                 shape_kinds: tuple | None = None,
-                                 how: str = "inner",
-                                 shape_id: str | None = None) -> DataFrame:
-    """Multi-level (adaptive) point-in-shape join.
-
-    The fixed-level join degrades when shape sizes span orders of
-    magnitude (one admin layer holding Russia AND Monaco): a fine level
-    explodes big shapes into thousands of cover cells; a coarse level
-    drowns small shapes in false candidates. Here every shape is keyed
-    at ITS OWN level — the finest level in [min_level, max_level] whose
-    exact cover count fits `cells_budget` — so each cover set is
-    bounded by the budget (oversized shapes fall back to a min_level
-    grid range). The level is tagged into the int64 join key's low bits
-    (kernels/geohash.tag_level), keeping keys from different levels
-    disjoint in ONE equi-join.
-
-    Point side: an array of level-tagged codes, one per ACTIVE level,
-    built as a pure Column expression (whole-stage codegen) and
-    exploded. `levels` prunes the band to the levels the shape side
-    actually uses: pass it explicitly when known, else it is derived
-    with one tiny aggregation over the shape side (the small side of
-    the join — at 10^6 shapes that's a sub-second job; the 10^12-point
-    side is never touched). A (point, shape) pair still meets at most
-    once: the shape has ONE level and the point has ONE cell at that
-    level.
-
-    Scale story at 10^12 points x 10^6 mixed-size shapes: shape side
-    stays <= cells_budget rows/shape (vs 4096-cell caps or skew salting
-    at a forced fine level); the point side's xL fan-out happens inside
-    the scan projection — no extra shuffle when broadcasting, and the
-    shuffle key (tagged cell) spreads hot regions across the finer
-    levels. `salt` handles residual hot cells on the shuffle path, same
-    scheme as point_in_shape_join.
-
-    `shape_id` (broadcast path only): switch to the closure refine —
-    same contract as point_in_shape_join(shape_id=): the layer's vertex
-    arrays ride the refine UDF's closure, the broadcast carries only
-    (id, bbox, tagged cover), output has point columns + shape_id +
-    relation. Falls back to the struct path above the vertex cap.
-    """
-    closure_refine = None
-    if shape_id is not None and broadcast_shapes:
-        from .refine import collect_shape_table, make_closure_refine
-        table = collect_shape_table(shapes, shape_id, shape_col)
-        if table is not None:
-            closure_refine = make_closure_refine(table)
-            slim = _slim_bbox(shapes, shape_col, shape_id)
-            shapes = slim
-            cover_src = (F.col("__minx"), F.col("__maxx"),
-                         F.col("__miny"), F.col("__maxy"))
-    if closure_refine is None:
-        s = F.col(shape_col)
-        cover_src = (s["minx"], s["maxx"], s["miny"], s["maxy"])
-    cover = (shapes.withColumn("__cells", SF.st_cover_codes_adaptive(
-                 *cover_src, min_level, max_level, cells_budget))
-                   .withColumn("cover_cell", F.explode_outer("__cells"))
-                   .drop("__cells")
-                   .where(F.col("cover_cell").isNotNull()))
-    if levels is None:
-        # plan-time pruning: distinct levels present on the (small)
-        # shape side — the level tag is the key's low 4 bits
-        from ..kernels.geohash import LEVEL_TAG_BITS
-        mask = (1 << LEVEL_TAG_BITS) - 1
-        levels = sorted(
-            r[0] for r in cover.select(
-                F.col("cover_cell").bitwiseAND(F.lit(mask)).alias("lv"))
-            .distinct().collect())
-        if not levels:
-            levels = [min_level]
-    pts = (points.withColumn("__mlcells", SF.st_cell_codes_for_levels_col(
-               f"`{point_y}`", f"`{point_x}`", levels))
-                 .withColumn("cell_id", F.explode_outer("__mlcells"))
-                 .drop("__mlcells"))
-    if broadcast_shapes:
-        cover = F.broadcast(cover)
-        join_cond = pts["cell_id"] == cover["cover_cell"]
-    elif salt:
-        cover = cover.withColumn(
-            "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
-        pts = pts.withColumn(
-            "__salt", F.pmod(F.hash(F.col(point_x), F.col(point_y)),
-                             F.lit(salt)))
-        join_cond = ((pts["cell_id"] == cover["cover_cell"])
-                     & (pts["__salt"] == cover["__salt"]))
-    else:
-        join_cond = pts["cell_id"] == cover["cover_cell"]
-    joined = pts.join(cover, join_cond, "inner")
-    if closure_refine is not None:
-        refined = _closure_gate_refine(joined, shape_id, point_x, point_y,
-                                       closure_refine)
-    else:
-        refined = _gate_and_refine(joined, shape_col, point_x, point_y,
-                                   shape_kinds)
-    refined = refined.drop("cover_cell", "cell_id", "__salt")
-    return _project_how(refined, points, how)
 
 
 def _circle_candidates(points: DataFrame, queries: DataFrame,
@@ -743,8 +632,8 @@ def _table_bboxes(right: DataFrame, table: dict, right_id: str) -> DataFrame:
 
 def _apply_shape_predicate(gated: DataFrame, predicate: str, relate,
                            *args) -> DataFrame:
-    """Exact relate refine + predicate filter shared by the fixed-level
-    and adaptive two-layer joins: `relate(*args)` is the struct relate
+    """Exact relate refine + predicate filter of the two-layer join's
+    struct and closure paths: `relate(*args)` is the struct relate
     `st_relate_polygon_polygon(lshape, rshape)` or a closure relate
     `(lshape, right_id)`."""
     if predicate == "bbox":
@@ -764,130 +653,3 @@ def _apply_shape_predicate(gated: DataFrame, predicate: str, relate,
     else:
         raise ValueError(predicate)
     return gated.where(cond)
-
-
-def shape_shape_join_adaptive(left: DataFrame, right: DataFrame,
-                              min_level: int = 2, max_level: int = 7,
-                              cells_budget: int = 4,
-                              left_shape: str = "lshape",
-                              right_shape: str = "rshape",
-                              broadcast_right: bool = True,
-                              predicate: str = "intersects",
-                              salt: int | None = None,
-                              right_id: str | None = None) -> DataFrame:
-    """Two-sided adaptive (multi-level) shape x shape join.
-
-    Both layers can mix Monaco-size and Russia-size shapes: each shape
-    is keyed at ITS OWN level (finest level whose exact cover count
-    fits cells_budget) and emits its level-tagged cover PYRAMID — the
-    own-level cover plus the exact cover at every coarser level down
-    to min_level, derived for free from the geohash prefix property
-    (ancestor code == code >> 5*dL). Emission per shape is bounded by
-    cells_budget + 4 x (own_level - min_level) whatever the size
-    distribution — the fixed-level join's 4096-cell blowup on big
-    shapes cannot happen.
-
-    A pair (L_l, L_r) meets at level m = min(L_l, L_r): both pyramids
-    contain the full bbox cover at m (a pyramid level IS the exact
-    cover at that level), so overlapping bboxes share >= 1 key there.
-    Dedup is the reference-point rule evaluated AT m: the match is
-    kept only in the level-m cell containing (greatest(minx),
-    greatest(miny)) of the two bboxes. That cell holds the reference
-    point, which lies in both bboxes' covers at m, and exactly one
-    level-m cell contains it — uniqueness without any dedup shuffle.
-    Matches at levels below m fail the reference filter (its tag is m).
-
-    The reference cell is rebuilt per level from per-side axis indices
-    precomputed ONCE at max_level: an index at level L is the
-    max_level index right-shifted by the bit difference (the same
-    prefix property), so the post-join filter is a small CASE over
-    plain int columns — compiled codegen, no Janino blowup (VERDICT
-    r02 item 2 pattern).
-
-    Assumes page-split (non-dateline-crossing) bboxes, as produced by
-    the WKT parser. `salt`/broadcast semantics match shape_shape_join.
-    """
-    from ..kernels.geohash import LEVEL_TAG_BITS
-
-    closure_relate = None
-    if right_id is not None and broadcast_right:
-        # same contract as shape_shape_join(right_id=): right layer's
-        # vertices ride the relate UDF's closure; the broadcast carries
-        # only (id, bbox, tagged cover) and the output has no right
-        # struct. Falls back to the struct path above the vertex cap
-        # or on duplicate/null ids.
-        from .refine import collect_shape_table, make_closure_shape_relate
-        table = collect_shape_table(right, right_id, right_shape)
-        if table is not None:
-            closure_relate = make_closure_shape_relate(table)
-            right = _table_bboxes(right, table, right_id)
-
-    ls, rs = F.col(left_shape), F.col(right_shape)
-    mask = (1 << LEVEL_TAG_BITS) - 1
-    max_lon_bits = (max_level * 5 + 1) // 2
-    max_lat_bits = (max_level * 5) // 2
-
-    def side(df, bbox, li, ti, lvl):
-        # bbox elements are SQL fragments: axis-idx trees build with one
-        # F.expr parse; the pyramid UDF needs Columns, so wrap there
-        mnx, mxx, mny, mxy = bbox
-        return (df.withColumn(li, SF.st_axis_idx_col(mnx, "lon", max_level))
-                  .withColumn(ti, SF.st_axis_idx_col(mny, "lat", max_level))
-                  .withColumn("__cells", SF.st_cover_pyramid(
-                      F.expr(mnx), F.expr(mxx), F.expr(mny), F.expr(mxy),
-                      min_level, max_level, cells_budget))
-                  .withColumn(lvl, F.element_at("__cells", 1)
-                              .bitwiseAND(F.lit(mask)))
-                  .withColumn("__cell", F.explode_outer("__cells"))
-                  .drop("__cells")
-                  .where(F.col("__cell").isNotNull()))
-
-    lc = side(left, (f"`{left_shape}`.`minx`", f"`{left_shape}`.`maxx`",
-                     f"`{left_shape}`.`miny`", f"`{left_shape}`.`maxy`"),
-              "__lli0", "__lti0", "__llvl")
-    if closure_relate is not None:
-        r_bbox = ("`__rminx`", "`__rmaxx`", "`__rminy`", "`__rmaxy`")
-    else:
-        r_bbox = (f"`{right_shape}`.`minx`", f"`{right_shape}`.`maxx`",
-                  f"`{right_shape}`.`miny`", f"`{right_shape}`.`maxy`")
-    rc = side(right, r_bbox, "__rli0", "__rti0", "__rlvl")
-    if broadcast_right:
-        rc = F.broadcast(rc)
-        j = lc.join(rc, "__cell", "inner")
-    elif salt:
-        lc = lc.withColumn("__salt", F.pmod(
-            F.hash(*[lc[c] for c in left.columns if c != left_shape]),
-            F.lit(salt)))
-        rc = rc.withColumn("__salt", F.explode(
-            F.array(*[F.lit(i) for i in range(salt)])))
-        j = lc.join(rc, ["__cell", "__salt"], "inner").drop("__salt")
-    else:
-        j = lc.join(rc, "__cell", "inner")
-
-    if closure_relate is not None:
-        bbox_ok = ((ls["minx"] <= F.col("__rmaxx")) & (ls["maxx"] >= F.col("__rminx"))
-                   & (ls["miny"] <= F.col("__rmaxy")) & (ls["maxy"] >= F.col("__rminy")))
-    else:
-        bbox_ok = ((ls["minx"] <= rs["maxx"]) & (ls["maxx"] >= rs["minx"])
-                   & (ls["miny"] <= rs["maxy"]) & (ls["maxy"] >= rs["miny"]))
-    m = F.least(F.col("__llvl"), F.col("__rlvl"))
-    ref = None
-    for lv in range(min_level, max_level + 1):
-        lon_sh = max_lon_bits - ((lv * 5 + 1) // 2)
-        lat_sh = max_lat_bits - ((lv * 5) // 2)
-        code = SF.st_morton_col(
-            f"shiftright(greatest(`__lli0`, `__rli0`), {lon_sh})",
-            f"shiftright(greatest(`__lti0`, `__rti0`), {lat_sh})", lv)
-        tagged = (F.shiftleft(code, LEVEL_TAG_BITS)
-                   .bitwiseOR(F.lit(lv)).cast("long"))
-        ref = (F.when(m == lv, tagged) if ref is None
-               else ref.when(m == lv, tagged))
-    gated = (j.where(bbox_ok & (F.col("__cell") == ref))
-              .drop("__cell", "__lli0", "__lti0", "__rli0", "__rti0",
-                    "__llvl", "__rlvl"))
-    if closure_relate is not None:
-        gated = gated.drop("__rminx", "__rmaxx", "__rminy", "__rmaxy")
-        return _apply_shape_predicate(gated, predicate, closure_relate,
-                                      ls, F.col(right_id))
-    return _apply_shape_predicate(gated, predicate,
-                                  SF.st_relate_polygon_polygon, ls, rs)

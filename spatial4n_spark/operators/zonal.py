@@ -78,40 +78,6 @@ def decode_raster_tiles(refs_df: DataFrame) -> DataFrame:
     return refs_df.select("media_ref").distinct().mapInPandas(gen, PIXEL_SCHEMA)
 
 
-def zonal_stats(pixels: DataFrame, zones: DataFrame,
-                zone_id: str = "rect_id", precision: int = 2) -> DataFrame:
-    """Aggregate pixel values per (plain) rect zone: count/sum/mean.
-
-    Containment is the closed-rect test (boundary in, matching COVERS,
-    RectangleImpl.cs:176-209 plain-rect branch).
-
-    Plan (the same coarse/refine skeleton as joins.point_in_shape_join):
-    pixels get a single int64 cell code (pure codegen Morton spread),
-    zones explode to their cover codes, the join is a broadcast-hash
-    EQUI-join on the code, and the exact bbox test refines. A pixel
-    lives in exactly one cell and a zone's cover set is duplicate-free,
-    so no post-join dedup. At 100 TB of pixels this keys the shuffle
-    (or broadcast probe) instead of comparing every pixel against every
-    zone — never a BroadcastNestedLoopJoin.
-
-    px_count / px_sum are exact integers; px_mean is derived and is NOT
-    part of the hashed contract projection (a half-way rounding tie on
-    a double mean is oracle-unstable across engines).
-    """
-    from .. import functions as SF
-    px = pixels.withColumn(
-        "__cell", SF.st_cell_code_col("`px_lat`", "`px_lon`", precision))
-    zc = SF.with_cover_codes(zones, "`minx`", "`maxx`", "`miny`", "`maxy`",
-                             precision, "__cell")
-    j = (px.join(F.broadcast(zc), "__cell", "inner")
-           .where((F.col("px_lon") >= F.col("minx")) & (F.col("px_lon") <= F.col("maxx"))
-                  & (F.col("px_lat") >= F.col("miny")) & (F.col("px_lat") <= F.col("maxy"))))
-    return (j.groupBy(zone_id)
-             .agg(F.count("*").alias("px_count"),
-                  F.sum("value").alias("px_sum"),
-                  F.round(F.sum("value") / F.count("*").cast("double"), 6).alias("px_mean")))
-
-
 def zonal_stats_poly(pixels: DataFrame, polys: DataFrame,
                      zone_id: str = "poly_id", precision: int = 2,
                      broadcast: bool = True,

@@ -88,22 +88,29 @@ def test_polygon_circle_relate_all_verdicts():
 
 
 def test_polygon_rect_relate_all_verdicts():
-    """Polygon.Relate(rect) COVERS semantics — all verdicts + touch."""
+    """Polygon.Relate(rect) COVERS semantics — all verdicts + touch,
+    every case one row of one st_relate_polygon_rect batch."""
     import numpy as np
 
-    from spatial4n_spark.kernels.pip import relate_polygon_rect
-    tri_x = np.array([0.0, 24.0, 12.0, 0.0])
-    tri_y = np.array([0.0, 0.0, 14.0, 0.0])
-    ro = np.array([0, 4])
-    # rect far away
-    assert relate_polygon_rect(tri_x, tri_y, ro, 50, 60, 50, 60) == DISJOINT
-    # rect fully inside triangle -> polygon CONTAINS rect
-    assert relate_polygon_rect(tri_x, tri_y, ro, 10, 13, 2, 4) == CONTAINS
-    # triangle fully inside big rect -> WITHIN
-    assert relate_polygon_rect(tri_x, tri_y, ro, -5, 30, -5, 20) == WITHIN
-    # partial overlap
-    assert relate_polygon_rect(tri_x, tri_y, ro, -5, 5, -5, 5) == INTERSECTS
-    # boundary touch only (rect's right edge passes through vertex 0)
-    assert relate_polygon_rect(tri_x, tri_y, ro, -5, 0, -2, 2) == INTERSECTS
-    # bbox overlaps but corner region empty -> DISJOINT
-    assert relate_polygon_rect(tri_x, tri_y, ro, -4, 1, 8, 13) == DISJOINT
+    from spatial4n_spark import functions as SF
+    from spatial4n_spark.shapes import encode
+    cases = [
+        ((50, 60, 50, 60), DISJOINT),    # rect far away
+        ((10, 13, 2, 4), CONTAINS),      # rect fully inside triangle
+        ((-5, 30, -5, 20), WITHIN),      # triangle fully inside big rect
+        ((-5, 5, -5, 5), INTERSECTS),    # partial overlap
+        # boundary touch only (rect's right edge passes through vertex 0)
+        ((-5, 0, -2, 2), INTERSECTS),
+        ((-4, 1, 8, 13), DISJOINT),      # bbox overlaps, corner region empty
+    ]
+    n = len(cases)
+    tri = encode(n, kind=np.full(n, 7, np.int8),
+                 minx=np.zeros(n), maxx=np.full(n, 24.0),
+                 miny=np.zeros(n), maxy=np.full(n, 14.0),
+                 xs=[[0.0, 24.0, 12.0, 0.0]] * n,
+                 ys=[[0.0, 0.0, 14.0, 0.0]] * n, ring_offsets=[[0, 4]] * n)
+    rects = encode(n, kind=np.full(n, 2, np.int8),
+                   **{f: np.array([b[k] for b, _ in cases], dtype=float)
+                      for k, f in enumerate(("minx", "maxx", "miny", "maxy"))})
+    got = SF.st_relate_polygon_rect.func(tri, rects).to_pylist()
+    assert got == [want for _, want in cases]

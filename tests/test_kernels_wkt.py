@@ -8,7 +8,8 @@ import pytest
 
 from spatial4n_spark.kernels import wkt
 from spatial4n_spark.kernels import relation as R
-from spatial4n_spark.kernels.pip import relate_polygon_points, relate_polygon_rect
+from spatial4n_spark.kernels.pip import (relate_polygon_points,
+                                         relate_polygon_polygon)
 
 
 def P(s):
@@ -108,16 +109,22 @@ def test_polygon_rect_relate():
     xs = np.array([0.0, 10.0, 10.0, 0.0, 0.0])
     ys = np.array([0.0, 0.0, 10.0, 10.0, 0.0])
     ro = np.array([0, 5])
-    assert relate_polygon_rect(xs, ys, ro, 2, 8, 2, 8) == R.CONTAINS
-    assert relate_polygon_rect(xs, ys, ro, -5, 15, -5, 15) == R.WITHIN
-    assert relate_polygon_rect(xs, ys, ro, 5, 15, 5, 15) == R.INTERSECTS
-    assert relate_polygon_rect(xs, ys, ro, 11, 15, 11, 15) == R.DISJOINT
+
+    def rel(xs, ys, ro, minx, maxx, miny, maxy):
+        # Polygon.Relate(rect): the rect as one 4-corner ring
+        return relate_polygon_polygon(
+            xs, ys, ro, np.array([minx, maxx, maxx, minx], dtype=float),
+            np.array([miny, miny, maxy, maxy], dtype=float), None)
+    assert rel(xs, ys, ro, 2, 8, 2, 8) == R.CONTAINS
+    assert rel(xs, ys, ro, -5, 15, -5, 15) == R.WITHIN
+    assert rel(xs, ys, ro, 5, 15, 5, 15) == R.INTERSECTS
+    assert rel(xs, ys, ro, 11, 15, 11, 15) == R.DISJOINT
     # identical — CONTAINS preferred
-    assert relate_polygon_rect(xs, ys, ro, 0, 10, 0, 10) in (R.CONTAINS, R.WITHIN)
+    assert rel(xs, ys, ro, 0, 10, 0, 10) in (R.CONTAINS, R.WITHIN)
     # a hole inside the rect: the rect is not covered
     hx = np.array([0.0, 10, 10, 0, 0, 4, 4, 6, 6, 4])
     hy = np.array([0.0, 0, 10, 10, 0, 4, 6, 6, 4, 4])
-    assert relate_polygon_rect(hx, hy, [0, 5, 10], 2, 8, 2, 8) == R.INTERSECTS
+    assert rel(hx, hy, [0, 5, 10], 2, 8, 2, 8) == R.INTERSECTS
 
 
 def test_dateline_polygon_width180_rule():

@@ -133,11 +133,18 @@ def test_relate_polygon_polygon_equals_relate_polygon_rect():
     rects = ["ENVELOPE(1, 3, 2, 1)", "POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))",
              "ENVELOPE(4.5, 5.5, 5.5, 4.5)", "ENVELOPE(20, 30, 30, 20)",
              "ENVELOPE(-1, 11, 11, -1)", "ENVELOPE(4, 6, 6, 4)"]
-    p = _parse([x for x in polys for _ in rects])
-    r = _parse([y for _ in polys for y in rects])
-    assert decode(r).kind.tolist() == [2] * len(polys) * len(rects)
+    # a rect crossing the dateline, a triangle inside it (lon 172-176)
+    # and one inside the complementary span (lon 10-12)
+    crossing = [("POLYGON((172 1, 176 1, 174 3, 172 1))",
+                 "ENVELOPE(170, -170, 5, 0)", REL.WITHIN),
+                ("POLYGON((10 1, 12 1, 11 3, 10 1))",
+                 "ENVELOPE(170, -170, 5, 0)", REL.DISJOINT)]
+    p = _parse([x for x in polys for _ in rects] + [x for x, _, _ in crossing])
+    r = _parse([y for _ in polys for y in rects] + [y for _, y, _ in crossing])
+    assert decode(r).kind.tolist() == [2] * len(r)
     got = SF.st_relate_polygon_polygon.func(p, r).to_pylist()
     assert got == SF.st_relate_polygon_rect.func(p, r).to_pylist()
+    assert got[-len(crossing):] == [want for _, _, want in crossing]
     assert {REL.CONTAINS, REL.WITHIN, REL.INTERSECTS, REL.DISJOINT} <= set(got)
 
 

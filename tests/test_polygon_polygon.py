@@ -10,11 +10,12 @@ russia.wkt.txt, public test resources copied verbatim).
 import numpy as np
 import pytest
 
+from spatial4n_spark import functions as SF
 from spatial4n_spark.kernels.pip import (points_in_polygon,
-                                         relate_polygon_polygon,
-                                         relate_polygon_rect)
+                                         relate_polygon_polygon)
 from spatial4n_spark.kernels.relation import (CONTAINS, DISJOINT, INTERSECTS,
                                               WITHIN, transpose)
+from spatial4n_spark.shapes import encode
 
 MIN_PER_CLASS = 20
 N_SAMPLE = 40
@@ -52,6 +53,7 @@ def test_polygon_rect_randomized_with_point_sampling():
     rng = np.random.default_rng(1234)
     counts = {CONTAINS: 0, WITHIN: 0, DISJOINT: 0, INTERSECTS: 0}
     bbox_disjoint_hits = 0
+    cases = []
     i = 0
     while min(counts.values()) < MIN_PER_CLASS or bbox_disjoint_hits < MIN_PER_CLASS:
         i += 1
@@ -78,18 +80,15 @@ def test_polygon_rect_randomized_with_point_sampling():
         if rminy >= rmaxy:
             continue
 
-        v = relate_polygon_rect(xs, ys, None, rminx, rmaxx, rminy, rmaxy)
+        qx, qy = _rect_as_polygon(rminx, rmaxx, rminy, rmaxy)
+        v = relate_polygon_polygon(xs, ys, None, qx, qy, None)
         counts[v] = counts.get(v, 0) + 1
+        cases.append((xs, ys, (rminx, rmaxx, rminy, rmaxy), v))
         bbox_dis = (xs.min() > rmaxx or xs.max() < rminx
                     or ys.min() > rmaxy or ys.max() < rminy)
         if bbox_dis:
             bbox_disjoint_hits += 1
             assert v == DISJOINT
-
-        # cross-check against the general polygon-polygon kernel
-        qx, qy = _rect_as_polygon(rminx, rmaxx, rminy, rmaxy)
-        v2 = relate_polygon_polygon(xs, ys, None, qx, qy, None)
-        assert v2 == v, (i, v, v2)
 
         # point-sampling verification
         rpx = rng.uniform(rminx, rmaxx, N_SAMPLE)
@@ -105,6 +104,18 @@ def test_polygon_rect_randomized_with_point_sampling():
             assert inside_rect.all(), i
     assert min(counts.values()) >= MIN_PER_CLASS, counts
     assert bbox_disjoint_hits >= MIN_PER_CLASS
+
+    # the rect UDF relates the whole batch in one pass, each row as the
+    # per-pair kernel does with the rect ring
+    polys = encode(len(cases), kind=np.full(len(cases), 7, np.int8),
+                   xs=[np.r_[x, x[:1]] for x, _, _, _ in cases],
+                   ys=[np.r_[y, y[:1]] for _, y, _, _ in cases],
+                   ring_offsets=[[0, len(x) + 1] for x, _, _, _ in cases])
+    rects = encode(len(cases), kind=np.full(len(cases), 2, np.int8),
+                   **{f: np.array([b[k] for _, _, b, _ in cases])
+                      for k, f in enumerate(("minx", "maxx", "miny", "maxy"))})
+    got = SF.st_relate_polygon_rect.func(polys, rects).to_pylist()
+    assert got == [v for _, _, _, v in cases]
 
 
 def test_polygon_polygon_randomized_with_point_sampling():

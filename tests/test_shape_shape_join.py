@@ -1,5 +1,7 @@
 """Distributed polygon x polygon join vs brute-force kernel oracle,
-plus the no-dedup-shuffle plan property."""
+plus the no-dedup-shuffle plan property, on two pairs of layers: even
+sizes, and a mixed-size pair (tiny and continent-scale triangles on
+both sides) where one shape meets others in many shared cells."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -30,6 +32,23 @@ def layers(spark):
     return left, right, lrows, rrows
 
 
+@pytest.fixture(scope="module")
+def mixed_layers(spark):
+    rng = np.random.default_rng(7)
+    # 3 of 4 tiny, 1 of 4 continent-scale, on BOTH sides
+    lrows = [(i, _tri_wkt(rng.uniform(-60, 40), rng.uniform(-40, 30),
+                          rng.uniform(0.01, 0.1) if i % 4
+                          else rng.uniform(20, 60))) for i in range(50)]
+    rrows = [(j, _tri_wkt(rng.uniform(-60, 40), rng.uniform(-40, 30),
+                          rng.uniform(0.02, 0.2) if j % 5
+                          else rng.uniform(15, 40))) for j in range(70)]
+    left = (spark.createDataFrame(lrows, ["lid", "lwkt"])
+            .withColumn("lshape", SF.st_from_wkt(F.col("lwkt"))))
+    right = (spark.createDataFrame(rrows, ["rid", "rwkt"])
+             .withColumn("rshape", SF.st_from_wkt(F.col("rwkt"))))
+    return left, right, lrows, rrows
+
+
 def _local_pairs(lrows, rrows, keep):
     from spatial4n_spark.kernels.wkt import parse_shape
     lrecs = [parse_shape(w) for _, w in lrows]
@@ -45,12 +64,14 @@ def _local_pairs(lrows, rrows, keep):
     return out
 
 
-@pytest.mark.parametrize("predicate,keep", [
+PREDICATES = pytest.mark.parametrize("predicate,keep", [
     ("intersects", lambda r: r != DISJOINT),
     ("contains", lambda r: r == CONTAINS),
     ("within", lambda r: r == WITHIN),
 ])
-def test_join_matches_bruteforce(spark, layers, predicate, keep):
+
+
+def _check_bruteforce(layers, predicate, keep):
     left, right, lrows, rrows = layers
     got = {(r.lid, r.rid) for r in
            shape_shape_join(left, right, precision=2, predicate=predicate)
@@ -58,6 +79,17 @@ def test_join_matches_bruteforce(spark, layers, predicate, keep):
     want = _local_pairs(lrows, rrows, keep)
     assert got == want, (len(got), len(want),
                          sorted(got - want)[:5], sorted(want - got)[:5])
+
+
+@PREDICATES
+def test_join_matches_bruteforce(spark, layers, predicate, keep):
+    _check_bruteforce(layers, predicate, keep)
+
+
+@PREDICATES
+def test_mixed_size_join_matches_bruteforce(spark, mixed_layers, predicate,
+                                            keep):
+    _check_bruteforce(mixed_layers, predicate, keep)
 
 
 def test_reference_point_dedup_no_distinct(spark, layers):
@@ -73,20 +105,28 @@ def test_reference_point_dedup_no_distinct(spark, layers):
     assert len(rows) == len({(r.lid, r.rid) for r in rows})
 
 
-def test_salted_shuffle_path_set_equal_to_broadcast(spark, layers):
+def _check_plans_agree(layers):
+    """Salted and shuffle plans give the broadcast plan's rows, and the
+    reference-cell rule leaves each pair once in every plan."""
     left, right, _, _ = layers
-    base = {(r.lid, r.rid, r.relation) for r in
-            shape_shape_join(left, right, precision=2, predicate="all")
-            .collect()}
-    salted = {(r.lid, r.rid, r.relation) for r in
-              shape_shape_join(left, right, precision=2, predicate="all",
-                               broadcast_right=False, salt=4).collect()}
-    plain_shuffle = {(r.lid, r.rid, r.relation) for r in
-                     shape_shape_join(left, right, precision=2,
-                                      predicate="all",
-                                      broadcast_right=False).collect()}
+    runs = [[(r.lid, r.rid, r.relation) for r in
+             shape_shape_join(left, right, precision=2, predicate="all",
+                              **kw).collect()]
+            for kw in ({}, dict(broadcast_right=False, salt=4),
+                       dict(broadcast_right=False))]
+    base, salted, plain_shuffle = (set(rows) for rows in runs)
     assert salted == base
     assert plain_shuffle == base
+    for rows in runs:
+        assert len(rows) == len({(lid, rid) for lid, rid, _ in rows})
+
+
+def test_salted_shuffle_path_set_equal_to_broadcast(spark, layers):
+    _check_plans_agree(layers)
+
+
+def test_mixed_size_plans_agree(spark, mixed_layers):
+    _check_plans_agree(mixed_layers)
 
 
 def test_no_codegen_compile_fallback(strict_codegen, layers):
@@ -102,10 +142,7 @@ def test_no_codegen_compile_fallback(strict_codegen, layers):
     assert out.count() > 0
 
 
-def test_closure_right_path_set_equal_to_struct(spark, layers):
-    """right_id closure path (right vertices in the UDF closure, only
-    left arrays cross Arrow) == the struct path, for every predicate
-    incl. relation codes."""
+def _check_closure_right(layers):
     left, right, _, _ = layers
     for predicate in ("intersects", "contains", "within", "all"):
         a = shape_shape_join(left, right, precision=2, predicate=predicate)
@@ -115,6 +152,17 @@ def test_closure_right_path_set_equal_to_struct(spark, layers):
         sa = {tuple(r) for r in a.select(*cols).collect()}
         sb = {tuple(r) for r in b.select(*cols).collect()}
         assert sa == sb, predicate
+
+
+def test_closure_right_path_set_equal_to_struct(spark, layers):
+    """right_id closure path (right vertices in the UDF closure, only
+    left arrays cross Arrow) == the struct path, for every predicate
+    incl. relation codes."""
+    _check_closure_right(layers)
+
+
+def test_mixed_size_closure_right_set_equal(spark, mixed_layers):
+    _check_closure_right(mixed_layers)
 
 
 def test_closure_right_falls_back_above_vertex_cap(spark, layers, monkeypatch):

@@ -13,8 +13,10 @@ from spatial4n_spark import functions as SF
 from spatial4n_spark.kernels import relation as REL
 from spatial4n_spark.kernels.relate_rect import relate_rect_point
 from spatial4n_spark.operators.joins import (distance_join, knn_join,
-                                             point_in_shape_join)
+                                             point_in_shape_join,
+                                             with_shape_cover)
 from spatial4n_spark.plans.strategy import JoinPlan, plan_point_shape_join
+from spatial4n_spark.shapes import shape_col
 from spatial4n_spark.sources.docs import extract_geo_spans, generate_docs
 
 
@@ -227,3 +229,96 @@ def test_knn_ladder_equals_single_pass(spark):
             .withColumn("rk", F.row_number().over(w)).where("rk <= 3"))
     single_pass = {(r.query_id, r.point_id, r.rk) for r in wide.collect()}
     assert one_plan == single_pass and len(one_plan) == 90
+
+
+@pytest.fixture(scope="module")
+def mixed_corpus(spark):
+    """A mixed-size layer no single cover level fits well: 200 tiny
+    rects (0.02-0.2 deg) + 8 continent-scale rects (30-80 deg), one
+    crossing the dateline; 6000 uniform points."""
+    rng = np.random.RandomState(7)
+    n = 6000
+    pts = pd.DataFrame({
+        "point_id": np.arange(n),
+        "x": rng.uniform(-180, 180, n),
+        "y": rng.uniform(-90, 90, n),
+    })
+    m_small, m_big = 200, 8
+    cx = rng.uniform(-178, 178, m_small)
+    w = rng.uniform(0.02, 0.2, m_small)
+    y1 = rng.uniform(-85, 84, m_small)
+    h = rng.uniform(0.02, 0.2, m_small)
+    small = pd.DataFrame({"rect_id": np.arange(m_small),
+                          "minx": cx - w / 2, "maxx": cx + w / 2,
+                          "miny": y1, "maxy": y1 + h})
+    bw = rng.uniform(30, 80, m_big)
+    bx = rng.uniform(-170, 90, m_big)
+    by = rng.uniform(-80, 40, m_big)
+    bh = rng.uniform(20, 40, m_big)
+    big = pd.DataFrame({"rect_id": np.arange(m_small, m_small + m_big),
+                        "minx": bx, "maxx": bx + bw,
+                        "miny": by, "maxy": by + bh})
+    # one dateline-crossing big rect (minx > maxx)
+    big.loc[big.index[-1], ["minx", "maxx"]] = [150.0, -160.0]
+    rects = pd.concat([small, big], ignore_index=True)
+    sdf = spark.createDataFrame(pts)
+    rdf = spark.createDataFrame(rects).withColumn("shape", shape_col(
+        kind=2, minx=F.col("minx"), maxx=F.col("maxx"),
+        miny=F.col("miny"), maxy=F.col("maxy")))
+    return sdf, pts, rdf, rects
+
+
+def _truth_pairs(pts: pd.DataFrame, rects: pd.DataFrame) -> pd.DataFrame:
+    px = np.repeat(pts["x"].to_numpy(), len(rects))
+    py = np.repeat(pts["y"].to_numpy(), len(rects))
+    rx1 = np.tile(rects["minx"].to_numpy(), len(pts))
+    rx2 = np.tile(rects["maxx"].to_numpy(), len(pts))
+    ry1 = np.tile(rects["miny"].to_numpy(), len(pts))
+    ry2 = np.tile(rects["maxy"].to_numpy(), len(pts))
+    rel = relate_rect_point(rx1, rx2, ry1, ry2, px, py, geo=True)
+    hits = rel == REL.CONTAINS
+    return (pd.DataFrame({
+        "point_id": np.repeat(pts["point_id"].to_numpy(), len(rects))[hits],
+        "rect_id": np.tile(rects["rect_id"].to_numpy(), len(pts))[hits]})
+        .sort_values(["point_id", "rect_id"]).reset_index(drop=True))
+
+
+@pytest.mark.parametrize("path", ["broadcast", "salted", "shuffle",
+                                  "closure"])
+def test_mixed_size_pip_join_matches_kernel(mixed_corpus, path):
+    """Each plan of the fixed-level join on the mixed-size layer: the
+    inner pairs equal the kernel truth and each pair appears once;
+    leftsemi keeps the points with a hit and leftanti the rest. The
+    broadcast and salted plans take the JVM rect gate, the shuffle plan
+    the kernel refine, and `shape_id` the closure refine (the dateline
+    rect keeps the layer off the convex fast path)."""
+    sdf, pts, rdf, rects = mixed_corpus
+    plan = {"broadcast": JoinPlan(3, True, None, shape_kinds=(2,)),
+            "salted": JoinPlan(3, False, 4, shape_kinds=(2,)),
+            "shuffle": JoinPlan(3, False, None),
+            "closure": JoinPlan(3, True, None)}[path]
+    shape_id = "rect_id" if path == "closure" else None
+
+    def join(how):
+        return point_in_shape_join(sdf, rdf, plan, how=how, shape_id=shape_id)
+    got = (join("inner").select("point_id", "rect_id").toPandas()
+           .sort_values(["point_id", "rect_id"]).reset_index(drop=True))
+    truth = _truth_pairs(pts, rects)
+    assert len(truth) > 100
+    pd.testing.assert_frame_equal(got, truth)
+
+    hit_ids = set(truth["point_id"].tolist())
+    semi = join("leftsemi").select("point_id").toPandas()["point_id"]
+    assert sorted(semi.tolist()) == sorted(hit_ids)
+    anti = join("leftanti").select("point_id").toPandas()["point_id"]
+    assert set(anti.tolist()) == set(pts["point_id"].tolist()) - hit_ids
+    assert len(anti) + len(semi) == len(pts)
+
+
+def test_shape_cover_plans_no_python(mixed_corpus):
+    """with_shape_cover plans no Python node: its cover and geohash
+    spelling are codegen expressions."""
+    _, _, rdf, _ = mixed_corpus
+    cov = with_shape_cover(rdf, "shape", 4, codes=False)
+    plan = cov._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 0, plan
