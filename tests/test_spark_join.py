@@ -283,34 +283,57 @@ def _truth_pairs(pts: pd.DataFrame, rects: pd.DataFrame) -> pd.DataFrame:
         .sort_values(["point_id", "rect_id"]).reset_index(drop=True))
 
 
-@pytest.mark.parametrize("path", ["broadcast", "salted", "shuffle",
-                                  "closure"])
-def test_mixed_size_pip_join_matches_kernel(mixed_corpus, path):
-    """Each plan of the fixed-level join on the mixed-size layer: the
-    inner pairs equal the kernel truth and each pair appears once;
-    leftsemi keeps the points with a hit and leftanti the rest. The
+_MIXED_PLANS = {"broadcast": JoinPlan(3, True, None, shape_kinds=(2,)),
+                "salted": JoinPlan(3, False, 4, shape_kinds=(2,)),
+                "shuffle": JoinPlan(3, False, None),
+                "closure": JoinPlan(3, True, None)}
+
+
+def _mixed_join(mixed_corpus, path, how):
+    """The fixed-level join of the mixed-size layer under one plan. The
     broadcast and salted plans take the JVM rect gate, the shuffle plan
     the kernel refine, and `shape_id` the closure refine (the dateline
     rect keeps the layer off the convex fast path)."""
-    sdf, pts, rdf, rects = mixed_corpus
-    plan = {"broadcast": JoinPlan(3, True, None, shape_kinds=(2,)),
-            "salted": JoinPlan(3, False, 4, shape_kinds=(2,)),
-            "shuffle": JoinPlan(3, False, None),
-            "closure": JoinPlan(3, True, None)}[path]
+    sdf, _, rdf, _ = mixed_corpus
     shape_id = "rect_id" if path == "closure" else None
+    return point_in_shape_join(sdf, rdf, _MIXED_PLANS[path], how=how,
+                               shape_id=shape_id)
 
-    def join(how):
-        return point_in_shape_join(sdf, rdf, plan, how=how, shape_id=shape_id)
-    got = (join("inner").select("point_id", "rect_id").toPandas()
+
+@pytest.mark.parametrize("path", list(_MIXED_PLANS))
+def test_mixed_size_pip_join_matches_kernel(mixed_corpus, path):
+    """Each plan of the fixed-level join on the mixed-size layer: the
+    inner pairs equal the kernel truth."""
+    _, pts, _, rects = mixed_corpus
+    got = (_mixed_join(mixed_corpus, path, "inner")
+           .select("point_id", "rect_id").toPandas()
            .sort_values(["point_id", "rect_id"]).reset_index(drop=True))
     truth = _truth_pairs(pts, rects)
     assert len(truth) > 100
     pd.testing.assert_frame_equal(got, truth)
 
-    hit_ids = set(truth["point_id"].tolist())
-    semi = join("leftsemi").select("point_id").toPandas()["point_id"]
+
+def test_mixed_size_pip_pair_uniqueness(mixed_corpus):
+    """A (point, rect) pair meets once: the point has one cell at the
+    join level and a rect's cover holds that cell at most once, so no
+    dedup shuffle is needed."""
+    dup = (_mixed_join(mixed_corpus, "broadcast", "inner")
+           .groupBy("point_id", "rect_id").count()
+           .where(F.col("count") > 1).count())
+    assert dup == 0
+
+
+@pytest.mark.parametrize("path", list(_MIXED_PLANS))
+def test_mixed_size_pip_semi_anti(mixed_corpus, path):
+    """leftsemi keeps each point with a kernel-truth hit once and
+    leftanti keeps the rest."""
+    _, pts, _, rects = mixed_corpus
+    hit_ids = set(_truth_pairs(pts, rects)["point_id"].tolist())
+    semi = (_mixed_join(mixed_corpus, path, "leftsemi")
+            .select("point_id").toPandas()["point_id"])
     assert sorted(semi.tolist()) == sorted(hit_ids)
-    anti = join("leftanti").select("point_id").toPandas()["point_id"]
+    anti = (_mixed_join(mixed_corpus, path, "leftanti")
+            .select("point_id").toPandas()["point_id"])
     assert set(anti.tolist()) == set(pts["point_id"].tolist()) - hit_ids
     assert len(anti) + len(semi) == len(pts)
 
