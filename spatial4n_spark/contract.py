@@ -3016,7 +3016,7 @@ def q_polygon_polygon_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     rb = tb.withColumn("rshape", SF.st_from_wkt(
         F.expr(wkt3(["u1", "u2", "u3"], ["w1", "w2", "w3"]))))
     out = shape_shape_join(la.select("lid", "lshape"), rb.select("rid", "rshape"),
-                           precision=2, predicate="all", right_id="rid")
+                           precision=2, predicate="all")
     pairs = (out.where(F.col("relation") != 3)
                 .select("lid", "rid", F.col("relation").alias("rel")))
     return pairs.join(_dissolve_family(spark, sf_dir), "rid")

@@ -240,68 +240,82 @@ def st_relate_circle_rect(cx: pd.Series, cy: pd.Series, r: pd.Series,
 @arrow_udf(ByteType())
 def st_relate_shape_point(shape: pa.Array, px: pa.Array,
                           py: pa.Array) -> pa.Array:
-    """shape.Relate(point) dispatch by kind — the join refine kernel.
+    """shape.Relate(point) dispatch by kind — the join refine kernel
+    (`relate_shape_points` over the batch, row k against point k)."""
+    s = decode(shape)
+    out = relate_shape_points(s, np.arange(len(s)), _f64(px), _f64(py))
+    return pa.array(out, type=pa.int8())
 
-    Kernel selection happens per kind, not per row: each kind's rows
-    are processed as one NumPy batch. The polygon rows, each against
-    its own vertex arrays, go through `points_in_row_polygons` (one
-    kernel call for a batch of small polygons); a polygon row with
-    null vertex arrays reads DISJOINT.
+
+def relate_shape_points(s, rows, px, py) -> np.ndarray:
+    """shape.Relate(point) -> int8 code per point: point k relates with
+    row `rows[k]` of the shape batch `s`.
+
+    Kernel selection happens per kind, not per point: each kind's
+    points are processed as one NumPy batch. The polygon rows, each
+    against its own vertex arrays, go through `points_in_row_polygons`
+    (one kernel call for a batch of small polygons; points that share a
+    row share its edges); a polygon row with null vertex arrays reads
+    DISJOINT, and so does every kind without a case here.
     """
     from ..kernels.pip import points_in_row_polygons
     from ..kernels.relate_circle import relate_circle_point
     from ..kernels.relate_line import linestring_contains_point
 
-    s = decode(shape)
-    out = np.full(len(s), _rel.DISJOINT, dtype=np.int8)
-    kd = s.kind
-    pxv = _f64(px)
-    pyv = _f64(py)
+    rows = np.asarray(rows, dtype=np.int64)
+    out = np.full(len(rows), _rel.DISJOINT, dtype=np.int8)
+    kd = s.kind[rows]
 
-    m = kd == _wkt.KIND_RECT
-    if m.any():
-        out[m] = _relate_rect_point(s.minx[m], s.maxx[m], s.miny[m],
-                                    s.maxy[m], pxv[m], pyv[m], geo=True)
-    m = kd == _wkt.KIND_CIRCLE
-    if m.any():
-        out[m] = relate_circle_point(s.x[m], s.y[m], s.radius[m],
-                                     pxv[m], pyv[m], geo=True)
-    m = kd == _wkt.KIND_POINT
-    if m.any():
-        same = (s.x[m] == pxv[m]) & (s.y[m] == pyv[m])
+    m = np.flatnonzero(kd == _wkt.KIND_RECT)
+    if len(m):
+        r = rows[m]
+        out[m] = _relate_rect_point(s.minx[r], s.maxx[r], s.miny[r],
+                                    s.maxy[r], px[m], py[m], geo=True)
+    m = np.flatnonzero(kd == _wkt.KIND_CIRCLE)
+    if len(m):
+        r = rows[m]
+        out[m] = relate_circle_point(s.x[r], s.y[r], s.radius[r],
+                                     px[m], py[m], geo=True)
+    m = np.flatnonzero(kd == _wkt.KIND_POINT)
+    if len(m):
+        r = rows[m]
+        same = (s.x[r] == px[m]) & (s.y[r] == py[m])
         out[m] = np.where(same, _rel.CONTAINS, _rel.DISJOINT)
-    m = (kd == _wkt.KIND_POLYGON) | (kd == _wkt.KIND_MULTIPOLYGON)
-    if m.any():
-        rows = np.flatnonzero(m)
-        hit = points_in_row_polygons(pxv[rows], pyv[rows], s.xs, s.ys,
-                                     s.ring_offsets, rows)
-        out[rows] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
-    m = kd == _wkt.KIND_LINESTRING
-    if m.any():
+    m = np.flatnonzero((kd == _wkt.KIND_POLYGON)
+                       | (kd == _wkt.KIND_MULTIPOLYGON))
+    if len(m):
+        hit = points_in_row_polygons(px[m], py[m], s.xs, s.ys,
+                                     s.ring_offsets, rows[m])
+        out[m] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
+    m = np.flatnonzero(kd == _wkt.KIND_LINESTRING)
+    if len(m):
         # joins replicate one line across many candidate points, so
-        # group rows by line and batch each line's points into ONE
-        # kernel call instead of a per-row loop. Key on the FULL
-        # geometry bytes: a heuristic key like (len, x0, x-1, y0)
-        # collides for distinct lines sharing endpoints and would
-        # relate a row against the wrong line.
+        # group the points by line and batch each line's points into
+        # ONE kernel call. Key on the FULL geometry bytes: a heuristic
+        # key like (len, x0, x-1, y0) collides for distinct lines
+        # sharing endpoints and would relate a point against the wrong
+        # line.
         rad = np.where(np.isnan(s.radius), 0.0, s.radius)
-        for rows in _group_by_geometry(s, np.nonzero(m)[0], rad):
-            i0 = rows[0]
+        lines, at = np.unique(rows[m], return_inverse=True)
+        for group in _group_by_geometry(s, lines, rad):
+            i0 = lines[group[0]]
+            k = m[np.isin(at, group)]
             hit = linestring_contains_point(s.xs[i0], s.ys[i0], rad[i0],
-                                            pxv[rows], pyv[rows])
-            out[rows] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
-    return pa.array(out, type=pa.int8())
+                                            px[k], py[k])
+            out[k] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
+    return out
 
 
 def _group_by_geometry(s, idxs, extra=None) -> list:
-    """Row indices `idxs` grouped by identical vertex arrays (and
-    `extra[i]`), as int arrays in first-seen order."""
+    """Positions into `idxs` grouped by identical vertex arrays (and
+    `extra[idxs[p]]`) of rows `idxs`, as int arrays in first-seen
+    order."""
     groups: dict = {}
     setd = groups.setdefault
-    for i in idxs:
+    for p, i in enumerate(idxs.tolist()):
         key = tuple(None if v is None else v.tobytes() for v in s.verts(i))
-        setd(key if extra is None else (key, extra[i]), []).append(i)
-    return [np.asarray(rows) for rows in groups.values()]
+        setd(key if extra is None else (key, extra[i]), []).append(p)
+    return [np.asarray(g) for g in groups.values()]
 
 
 def st_relation_name(rel_col):
@@ -603,16 +617,49 @@ def with_cover_codes(df, minx: str, maxx: str, miny: str, maxy: str,
 
 @arrow_udf(ByteType())
 def st_relate_polygon_circle(polygon: pa.Array, circle: pa.Array) -> pa.Array:
-    """Polygon.Relate(circle) vertex-counting (NtsGeometry.cs:248-275);
-    the circle is read from its x, y and radius fields."""
-    from ..kernels.pip import relate_polygon_circle
+    """Polygon.Relate(circle), the reference's vertex counting
+    (NtsGeometry.cs:248-275), every row of the batch at once; the
+    circle is read from its x, y and radius fields.
+
+    1. bbox gate: rect.Relate(circle), the transposed GeoCircle
+       relate; WITHIN and DISJOINT short-circuit, and a rect row's
+       answer is this one.
+    2. Count the vertices outside the circle; mixed => INTERSECTS.
+    3. All outside => DISJOINT unless the polygon covers the circle's
+       center (then CONTAINS). None outside => WITHIN.
+
+    POLYGON, MULTIPOLYGON, rect and point rows (a point as its one
+    vertex) relate; EMPTY is DISJOINT; a null or error row, any other
+    kind, or a circle without x, y or radius gives null."""
+    from ..kernels.pip import points_in_row_polygons
+    from ..kernels.relate_circle import circle_contains_xy
+
     a, c = decode(polygon), decode(circle)
-    out = np.empty(len(a), dtype=np.int8)
-    for i in range(len(a)):
-        out[i] = relate_polygon_circle(
-            *a.verts(i), a.minx[i], a.maxx[i], a.miny[i], a.maxy[i],
-            c.x[i], c.y[i], c.radius[i])
-    return pa.array(out, type=pa.int8())
+    (xs, ys, ro), null = relate_operands(a)
+    null |= np.isnan(c.x) | np.isnan(c.y) | np.isnan(c.radius)
+    out = _rel.transpose(_relate_circle_rect(
+        c.x, c.y, c.radius, a.minx, a.maxx, a.miny, a.maxy,
+        geo=True)).astype(np.int8)
+    out[a.kind == _wkt.KIND_EMPTY] = _rel.DISJOINT
+    rows = np.flatnonzero(~null & (a.kind != _wkt.KIND_RECT)
+                          & (a.kind != _wkt.KIND_EMPTY)
+                          & (out != _rel.WITHIN) & (out != _rel.DISJOINT))
+    # every vertex of those rows, flat, with its row
+    nv = np.where(xs.valid[rows], np.diff(xs.offsets)[rows], 0)
+    vrow = np.repeat(rows, nv)
+    at = (np.arange(nv.sum()) + np.repeat(xs.offsets[rows] - np.cumsum(nv)
+                                          + nv, nv))
+    inside = circle_contains_xy(c.x[vrow], c.y[vrow], c.radius[vrow],
+                                xs.values[at], ys.values[at], geo=True)
+    n_out = np.bincount(np.repeat(np.arange(len(rows)), nv),
+                        weights=~inside, minlength=len(rows))
+    out[rows] = np.where(n_out == 0, _rel.WITHIN, _rel.INTERSECTS)
+    probe = rows[n_out == nv]
+    if len(probe):
+        hit = points_in_row_polygons(c.x[probe], c.y[probe], xs, ys, ro,
+                                     probe)
+        out[probe] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
+    return pa.array(out, type=pa.int8(), mask=null)
 
 
 @arrow_udf(SHAPE_SCHEMA)

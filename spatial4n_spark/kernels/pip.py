@@ -169,10 +169,16 @@ def _distinct_rows(lists, rows):
     """(reps, inv): row `rows[k]` holds the same bytes in every ragged
     column of `lists` (8-byte values) as row `reps[inv[k]]`.
 
-    Rows are matched on a fingerprint (each list's length and its
-    first, middle and last value); each row matched to an earlier one
-    is then compared with it byte for byte, and keeps its own entry if
-    they differ. Distinct polygons cost only the fingerprint sort."""
+    Equal row indices collapse first (a bitmap over the row range, no
+    sort). The distinct rows are then matched on a fingerprint (each
+    list's length and its first, middle and last value); each row
+    matched to an earlier one is compared with it byte for byte, and
+    keeps its own entry if they differ. Distinct polygons cost only
+    the fingerprint sort."""
+    seen = np.zeros(rows.max() + 1 if len(rows) else 0, dtype=bool)
+    seen[rows] = True
+    back = np.cumsum(seen)[rows] - 1
+    rows = np.flatnonzero(seen)
     n = len(rows)
     spans, cols = [], []
     for col in lists:
@@ -198,7 +204,7 @@ def _distinct_rows(lists, rows):
                       for bits, st, end in spans)]
     rep[differs] = differs
     first, inv = np.unique(rep, return_inverse=True)
-    return rows[first], inv
+    return rows[first], inv[back]
 
 
 # vertices per edge table in `points_in_row_polygons`: bounds the
@@ -223,6 +229,9 @@ def points_in_row_polygons(px, py, xs, ys, ring_offsets, rows) -> np.ndarray:
     cuts = np.searchsorted(ends, np.arange(_VERTICES_PER_TABLE, total,
                                            _VERTICES_PER_TABLE), side="right")
     bounds = np.unique(np.r_[0, cuts, len(reps)])
+    if len(bounds) == 2:    # one edge table: no per-table point subsets
+        return points_in_polygons(px, py, inv, polygon_edges(
+            xs, ys, ring_offsets, reps))
     out = np.empty(len(rows), dtype=bool)
     for s, t in zip(bounds[:-1], bounds[1:]):
         sel = np.flatnonzero((inv >= s) & (inv < t))
@@ -271,39 +280,6 @@ def relate_polygon_points(px, py, xs, ys, ring_offsets=None) -> np.ndarray:
     """
     inside = points_in_polygon(px, py, xs, ys, ring_offsets)
     return np.where(inside, CONTAINS, DISJOINT).astype(np.int8)
-
-
-def relate_polygon_circle(xs, ys, ring_offsets, minx, maxx, miny, maxy,
-                          cx, cy, r, geo: bool = True) -> int:
-    """Polygon.Relate(circle) — the reference's vertex-counting
-    algorithm (NtsGeometry.cs:248-275):
-
-    1. bbox gate: rect.Relate(circle) (= transpose of the GeoCircle
-       machine); WITHIN/DISJOINT short-circuit.
-    2. Count vertices outside the circle; mixed => INTERSECTS.
-    3. All outside => DISJOINT unless the polygon covers the circle's
-       center (then CONTAINS). None outside => WITHIN.
-    """
-    from .relate_circle import circle_contains_xy, relate_circle_rect
-    from .relation import (CONTAINS, DISJOINT, INTERSECTS, WITHIN,
-                           transpose)
-
-    bbox_r = int(transpose(relate_circle_rect(
-        cx, cy, r, minx, maxx, miny, maxy, geo=geo))[0])
-    if bbox_r in (WITHIN, DISJOINT):
-        return bbox_r
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    inside = circle_contains_xy(np.full(xs.shape, cx), np.full(xs.shape, cy),
-                                np.full(xs.shape, r), xs, ys, geo=geo)
-    n_out = int((~inside).sum())
-    if 0 < n_out < xs.size:
-        return INTERSECTS
-    if n_out == xs.size:
-        center_in = bool(points_in_polygon(
-            np.array([cx]), np.array([cy]), xs, ys, ring_offsets)[0])
-        return CONTAINS if center_in else DISJOINT
-    return WITHIN
 
 
 def relate_polygon_polygon(axs, ays, aro, bxs, bys, bro) -> int:

@@ -468,7 +468,6 @@ def shape_shape_join(left: DataFrame, right: DataFrame, precision: int,
                      broadcast_right: bool = True,
                      predicate: str = "intersects",
                      salt: int | None = None,
-                     right_id: str | None = None,
                      shape_kinds: tuple | None = None) -> DataFrame:
     """Distributed polygon(shape) x polygon(shape) spatial join.
 
@@ -505,24 +504,7 @@ def shape_shape_join(left: DataFrame, right: DataFrame, precision: int,
     (RectangleImpl.Relate(rect) on planar rects), so the Python refine
     is skipped entirely and the whole join runs inside codegen — the
     two-layer twin of the rects-only gate in point_in_shape_join.
-
-    `right_id`: unique right-key column enabling the CLOSURE refine for
-    the broadcast-small right side (the admin-boundaries x parcels
-    asymmetry): the right layer's vertex arrays are collected once into
-    the relate UDF's closure, the broadcast carries only (id, bbox),
-    and per candidate pair only the LEFT shape's arrays cross Arrow.
-    Output then carries left columns + right_id (+ relation), no right
-    struct. Falls back to the struct path above the vertex cap.
     """
-    from .. import functions as SF
-    from ..kernels import relation as REL
-
-    if right_id is not None and broadcast_right:
-        out = _shape_shape_join_closure(left, right, precision, left_shape,
-                                        right_shape, predicate, right_id)
-        if out is not None:
-            return out
-
     ls, rs = F.col(left_shape), F.col(right_shape)
     # Per-side min-corner axis indices are PRECOMPUTED in this projection
     # (whole-stage codegen + subexpression elimination apply here). The
@@ -570,80 +552,12 @@ def shape_shape_join(left: DataFrame, right: DataFrame, precision: int,
     if predicate == "bbox" or (shape_kinds == (2, 2)
                                and predicate == "intersects"):
         return gated
-    return _apply_shape_predicate(gated, predicate,
-                                  SF.st_relate_polygon_polygon, ls, rs)
-
-
-def _shape_shape_join_closure(left: DataFrame, right: DataFrame,
-                              precision: int, left_shape: str,
-                              right_shape: str, predicate: str,
-                              right_id: str) -> DataFrame | None:
-    """Closure-right variant of shape_shape_join (see right_id doc).
-    Returns None when the right layer exceeds the vertex cap."""
-    from .. import functions as SF
-    from .refine import collect_shape_table, make_closure_shape_relate
-
-    table = collect_shape_table(right, right_id, right_shape)
-    if table is None:
-        return None
-    relate_udf = make_closure_shape_relate(table)
-
-    ls = F.col(left_shape)
-    lbox = _bbox_sql(left_shape)
-    lc = SF.with_cover_codes(
-        left.withColumn("__lli0", SF.st_axis_idx_col(lbox[0], "lon", precision))
-            .withColumn("__lti0", SF.st_axis_idx_col(lbox[2], "lat", precision)),
-        *lbox, precision, "__cell")
-    slim = _table_bboxes(right, table, right_id)
-    rc = SF.with_cover_codes(
-        slim.withColumn("__rli0", SF.st_axis_idx_col("`__rminx`", "lon", precision))
-            .withColumn("__rti0", SF.st_axis_idx_col("`__rminy`", "lat", precision)),
-        "`__rminx`", "`__rmaxx`", "`__rminy`", "`__rmaxy`", precision, "__cell")
-    j = lc.join(F.broadcast(rc), "__cell", "inner")
-
-    bbox_ok = ((ls["minx"] <= F.col("__rmaxx")) & (ls["maxx"] >= F.col("__rminx"))
-               & (ls["miny"] <= F.col("__rmaxy")) & (ls["maxy"] >= F.col("__rminy")))
-    ref_cell = SF.st_morton_col("greatest(`__lli0`, `__rli0`)",
-                                "greatest(`__lti0`, `__rti0`)",
-                                precision)
-    gated = (j.where(bbox_ok & (F.col("__cell") == ref_cell))
-              .drop("__cell", "__lli0", "__lti0", "__rli0", "__rti0",
-                    "__rminx", "__rmaxx", "__rminy", "__rmaxy"))
-    return _apply_shape_predicate(gated, predicate, relate_udf,
-                                  ls, F.col(right_id))
-
-
-def _table_bboxes(right: DataFrame, table: dict, right_id: str) -> DataFrame:
-    """(right_id, __rminx, __rmaxx, __rminy, __rmaxy) of a collected
-    right layer (`refine.collect_shape_table`) as a local DataFrame:
-    the closure plan reads the bboxes the collect already parsed
-    instead of parsing the right layer a second time."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    def num(v):
-        return None if np.isnan(v) else v
-    names = ("__rminx", "__rmaxx", "__rminy", "__rmaxy")
-    schema = StructType([right.schema[right_id]]
-                        + [StructField(c, DoubleType()) for c in names])
-    rows = [(sid, *(num(rec[f]) for f in ("minx", "maxx", "miny", "maxy")))
-            for sid, rec in table.items()]
-    return right.sparkSession.createDataFrame(rows, schema)
-
-
-def _apply_shape_predicate(gated: DataFrame, predicate: str, relate,
-                           *args) -> DataFrame:
-    """Exact relate refine + predicate filter of the two-layer join's
-    struct and closure paths: `relate(*args)` is the struct relate
-    `st_relate_polygon_polygon(lshape, rshape)` or a closure relate
-    `(lshape, right_id)`."""
-    if predicate == "bbox":
-        return gated
     if predicate == "all":
         # callers filter on `relation`: the once-copy keeps that filter
         # from running the relate a second time
-        rel = SF.evaluated_once(relate)(*args)
+        rel = SF.evaluated_once(SF.st_relate_polygon_polygon)(ls, rs)
         return gated.withColumn("relation", rel.cast("int"))
-    rel = relate(*args)
+    rel = SF.st_relate_polygon_polygon(ls, rs)
     if predicate == "intersects":
         cond = rel != REL.DISJOINT
     elif predicate == "contains":

@@ -15,11 +15,10 @@ table ships with the serialized task — the same bytes the broadcast
 was already paying — and each executor deserializes it once per task
 instead of once per candidate row.
 
-Dispatch inside the UDF mirrors `st_relate_shape_point`. The
-polygons of the table are flattened into one edge table when the UDF
-is built, and all polygon rows of a batch are one `points_in_polygons`
-call, each row against its own polygon. The other kinds group rows by
-shape id and run that shape's kernel once per group.
+The UDF maps each shape id to its row of the decoded table and runs
+the struct refine's own kernel dispatch (`functions.relate_shape_points`)
+on those rows, so both refines share one body. A convex layer skips
+Python altogether (`convex_halfplanes`).
 """
 from __future__ import annotations
 
@@ -32,7 +31,7 @@ from pyspark.sql.types import ByteType
 
 from ..kernels import relation as REL
 from ..kernels import wkt as _wkt
-from ..shapes import VertexLists, decode, encode_records
+from ..shapes import decode, encode_records
 
 # guard: beyond this many total vertices the closure (shipped per task)
 # stops being "broadcast-small"; callers fall back to the struct path
@@ -66,100 +65,28 @@ def collect_shape_table(shapes: DataFrame, shape_id: str,
 
 def make_closure_refine(table: dict):
     """Arrow UDF (shape_id, px, py) -> relation code, with the shape
-    table captured in the closure."""
-    from ..kernels.pip import points_in_polygons, polygon_edges
-    from ..kernels.relate_circle import relate_circle_point
-    from ..kernels.relate_line import linestring_contains_point
-    from ..kernels.relate_rect import relate_rect_point
+    table captured in the closure: `functions.relate_shape_points`
+    over the table decoded once, each point against the row of its
+    shape id; an id missing from the table reads DISJOINT."""
+    from ..functions import relate_shape_points
 
-    # the polygons ship as one edge table, the other kinds as records
-    poly_index, polys, others = {}, [], {}
-    for sid, rec in table.items():
-        if rec["kind"] in (_wkt.KIND_POLYGON, _wkt.KIND_MULTIPOLYGON):
-            poly_index[sid] = len(polys)
-            polys.append(rec)
-        else:
-            others[sid] = rec
-    edges = polygon_edges(*(
-        VertexLists.from_list([rec[f] for rec in polys], dtype)
-        for f, dtype in (("xs", np.float64), ("ys", np.float64),
-                         ("ring_offsets", np.int64))))
+    ids = list(table)
+    recs = [table[k] for k in ids]
+    shapes = decode(encode_records(recs, [rec["error"] for rec in recs]))
+    id_set = pa.array(ids)
 
-    def refine(ids: pa.Array, px: pa.Array, py: pa.Array) -> pa.Array:
-        n = len(ids)
-        out = np.full(n, REL.DISJOINT, dtype=np.int8)
-        poly = np.full(n, -1, dtype=np.int64)
-        idv = ids.to_numpy(zero_copy_only=False)
-        pxv = px.to_numpy(zero_copy_only=False)
-        pyv = py.to_numpy(zero_copy_only=False)
-        order = np.argsort(idv, kind="stable")
-        sorted_ids = idv[order]
-        bounds = np.nonzero(np.r_[True, sorted_ids[1:] != sorted_ids[:-1]])[0]
-        bounds = np.r_[bounds, n]
-        for b in range(len(bounds) - 1):
-            rows = order[bounds[b]:bounds[b + 1]]
-            sid = sorted_ids[bounds[b]]
-            if sid in poly_index:
-                poly[rows] = poly_index[sid]
-                continue
-            rec = others.get(sid)
-            if rec is None:
-                continue
-            kind = rec["kind"]
-            gx, gy = pxv[rows], pyv[rows]
-            full = lambda v: np.full(len(rows), v)  # noqa: E731
-            if kind == _wkt.KIND_RECT:
-                out[rows] = relate_rect_point(
-                    full(rec["minx"]), full(rec["maxx"]),
-                    full(rec["miny"]), full(rec["maxy"]), gx, gy, geo=True)
-            elif kind == _wkt.KIND_CIRCLE:
-                out[rows] = relate_circle_point(
-                    full(rec["x"]), full(rec["y"]), full(rec["radius"]),
-                    gx, gy, geo=True)
-            elif kind == _wkt.KIND_POINT:
-                hit = (gx == rec["x"]) & (gy == rec["y"])
-                out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
-            elif kind == _wkt.KIND_LINESTRING:
-                rad = 0.0 if np.isnan(rec["radius"]) else float(rec["radius"])
-                hit = linestring_contains_point(rec["xs"], rec["ys"], rad,
-                                                gx, gy)
-                out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
-        rows = np.flatnonzero(poly >= 0)
-        if rows.size:
-            hit = points_in_polygons(pxv[rows], pyv[rows], poly[rows], edges)
-            out[rows] = np.where(hit, REL.CONTAINS, REL.DISJOINT)
+    def refine(sid: pa.Array, px: pa.Array, py: pa.Array) -> pa.Array:
+        row = (pc.index_in(sid.cast(id_set.type), value_set=id_set)
+               .fill_null(-1).to_numpy(zero_copy_only=False)
+               if len(ids) else np.full(len(sid), -1))
+        out = np.full(len(sid), REL.DISJOINT, dtype=np.int8)
+        k = np.flatnonzero(row >= 0)
+        out[k] = relate_shape_points(
+            shapes, row[k], px.to_numpy(zero_copy_only=False)[k],
+            py.to_numpy(zero_copy_only=False)[k])
         return pa.array(out, type=pa.int8())
 
     return arrow_udf(refine, ByteType())
-
-
-def make_closure_shape_relate(table: dict):
-    """Arrow UDF (left shape, right_id) -> relation code, with the
-    RIGHT layer's vertex arrays captured in the closure (two-layer
-    join, broadcast-small right side): per candidate pair only the
-    LEFT shape crosses Arrow. The relate is `st_relate_polygon_polygon`'s
-    over the table's shapes, every pair of a batch in one pass; a
-    right id missing from the table relates as DISJOINT."""
-    from ..functions import relate_operands, relate_shape_pairs
-    ids = list(table)
-    recs = [table[k] for k in ids]
-    right = relate_operands(decode(encode_records(
-        recs, [rec["error"] for rec in recs])))
-    id_set = pa.array(ids)
-
-    def relate(left: pa.Array, rid: pa.Array) -> pa.Array:
-        a = decode(left)
-        ib = (pc.index_in(rid.cast(id_set.type), value_set=id_set)
-              .fill_null(-1).to_numpy(zero_copy_only=False)
-              if len(ids) else np.full(len(a), -1))
-        out = np.full(len(a), REL.DISJOINT, dtype=np.int8)
-        null = np.zeros(len(a), dtype=bool)
-        k = np.flatnonzero(ib >= 0)
-        out[k], null[k] = relate_shape_pairs(relate_operands(a), k,
-                                             right, ib[k])
-        return pa.array(out, type=pa.int8(), mask=null)
-
-    return arrow_udf(relate, ByteType())
 
 
 # convex fast path: above this edge count the unrolled JVM predicate

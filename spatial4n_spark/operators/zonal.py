@@ -78,40 +78,6 @@ def decode_raster_tiles(refs_df: DataFrame) -> DataFrame:
     return refs_df.select("media_ref").distinct().mapInPandas(gen, PIXEL_SCHEMA)
 
 
-def zonal_stats_poly(pixels: DataFrame, polys: DataFrame,
-                     zone_id: str = "poly_id", precision: int = 2,
-                     broadcast: bool = True,
-                     salt: int | None = None) -> DataFrame:
-    """Zonal stats over POLYGON zones (the general raster<->vector case).
-
-    Same coarse/refine skeleton, but zones are shape structs (WKT-parsed
-    polygons, dateline pages included): pixel centers run through
-    `point_in_shape_join` — cell-code equi-join on the polygon's bbox
-    cover, JVM bbox gate, then the even-odd PIP kernel refine
-    (kernels/pip.py, NtsGeometry.cs:260-275 semantics) — and the
-    aggregate keys the zone id. Nothing here is polygon-count-bound:
-    on the default broadcast path the pixel side never shuffles (zone
-    covers broadcast + closure refine), and the refine is one Arrow
-    pass over gate survivors only.
-
-    `broadcast=False` is the huge-zone-layer regime (10^6+ zones): the
-    join shuffles both sides on the cell code (optionally salted for
-    hot cells) and the struct refine runs — pick it when the zone
-    layer itself is beyond executor memory.
-    """
-    from ..plans.strategy import JoinPlan
-    from .joins import point_in_shape_join
-    plan = JoinPlan(precision=precision, broadcast_shapes=broadcast,
-                    salt=salt)
-    j = point_in_shape_join(pixels, polys, plan,
-                            point_x="px_lon", point_y="px_lat",
-                            shape_id=(zone_id if broadcast else None))
-    return (j.groupBy(zone_id)
-             .agg(F.count("*").alias("px_count"),
-                  F.sum("value").alias("px_sum"),
-                  F.round(F.sum("value") / F.count("*").cast("double"), 6).alias("px_mean")))
-
-
 def zonal_stats_tagged(pixels: DataFrame, zones: DataFrame,
                        precision: int = 2) -> DataFrame:
     """ONE coarse/refine pass for a MIXED zone layer.

@@ -74,17 +74,21 @@ def test_flags_agg_equals_sequential_combine_fold(n):
 def test_polygon_circle_relate_all_verdicts():
     """Vertex-counting Polygon.Relate(circle) (NtsGeometry.cs:248-275):
     unit coverage of all four verdicts incl. the WITHIN branch the
-    contract data doesn't reach."""
-    import numpy as np
-
-    from spatial4n_spark.kernels.pip import relate_polygon_circle
-    tri = (np.array([0.0, 24.0, 12.0, 0.0]),
-           np.array([0.0, 0.0, 14.0, 0.0]), np.array([0, 4]))
-    bbox = (0.0, 24.0, 0.0, 14.0)
-    assert relate_polygon_circle(*tri, *bbox, 100.0, 50.0, 5.0) == DISJOINT
-    assert relate_polygon_circle(*tri, *bbox, 12.0, 5.0, 60.0) == WITHIN
-    assert relate_polygon_circle(*tri, *bbox, 12.0, 5.0, 0.5) == CONTAINS
-    assert relate_polygon_circle(*tri, *bbox, 0.0, 0.0, 8.0) == INTERSECTS
+    contract data doesn't reach, every case one row of one
+    st_relate_polygon_circle batch."""
+    from spatial4n_spark import functions as SF
+    from spatial4n_spark.shapes import encode
+    cases = [((100.0, 50.0, 5.0), DISJOINT), ((12.0, 5.0, 60.0), WITHIN),
+             ((12.0, 5.0, 0.5), CONTAINS), ((0.0, 0.0, 8.0), INTERSECTS)]
+    n = len(cases)
+    tri = encode(n, kind=np.full(n, 7, np.int8),
+                 xs=[[0.0, 24.0, 12.0, 0.0]] * n, ys=[[0.0, 0.0, 14.0, 0.0]] * n,
+                 ring_offsets=[[0, 4]] * n, minx=np.zeros(n),
+                 maxx=np.full(n, 24.0), miny=np.zeros(n), maxy=np.full(n, 14.0))
+    cx, cy, r = (np.array(v) for v in zip(*[c for c, _ in cases]))
+    circle = encode(n, kind=np.full(n, 3, np.int8), x=cx, y=cy, radius=r)
+    got = SF.st_relate_polygon_circle.func(tri, circle).to_pylist()
+    assert got == [want for _, want in cases]
 
 
 def test_polygon_rect_relate_all_verdicts():

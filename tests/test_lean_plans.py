@@ -131,21 +131,16 @@ def layers(spark, tmp_path_factory):
     return left, right
 
 
-@pytest.mark.parametrize("right_id", [None, "rid"])
-def test_shape_join_all_then_filter_relates_once(spark, layers, right_id):
+def test_shape_join_all_then_filter_relates_once(spark, layers):
     left, right = layers
-    out = shape_shape_join(left, right, 2, predicate="all", right_id=right_id)
+    out = shape_shape_join(left, right, 2, predicate="all")
     rows, names = _collect_once_each(
         out.where(F.col("relation") != REL.DISJOINT).select("lid", "rid"))
-    # one parse per side on the struct path; the closure path parses
-    # the right layer only in its collect (its broadcast side is the
-    # collected bboxes), so its plan parses the left side alone; and
-    # one relate
-    assert names["_st_from_wkt_default"] == (2 if right_id is None else 1)
-    assert names["st_relate_polygon_polygon" if right_id is None
-                 else "relate"] == 1
-    want = shape_shape_join(left, right, 2, predicate="intersects",
-                            right_id=right_id).select("lid", "rid").collect()
+    # one parse per side and one relate
+    assert names["_st_from_wkt_default"] == 2
+    assert names["st_relate_polygon_polygon"] == 1
+    want = shape_shape_join(left, right, 2, predicate="intersects"
+                            ).select("lid", "rid").collect()
     assert len(rows) > 20 and sorted(rows) == sorted(want)
 
 

@@ -4,8 +4,9 @@ row's answer must not depend on the rows it shares a batch with.
 
 - Row classes: the polygon relate is total. A rect relates as its ring
   pages, a point as its one vertex, EMPTY as DISJOINT; a null struct,
-  an error row and any other kind give null, on either side, through
-  the struct UDF and the closure relate alike.
+  an error row and any other kind give null, on either side. The
+  polygon-circle relate is total on the same classes, and the closure
+  point refine answers as the struct point relate on every class.
 - Batch independence: each row alone equals the same row inside one
   mixed batch (every row class, holes, MULTIPOLYGONs, shared edges,
   vertex touches, A == B, a zero-area ring, coordinates near +-1e6,
@@ -24,9 +25,10 @@ from pyspark.sql import functions as F
 from spatial4n_spark import functions as SF
 from spatial4n_spark.kernels import relation as REL
 from spatial4n_spark.kernels.pip import relate_polygon_polygon
+from spatial4n_spark.kernels.relate_circle import relate_circle_rect
 from spatial4n_spark.operators.joins import shape_shape_join
 from spatial4n_spark.operators.refine import (collect_shape_table,
-                                              make_closure_shape_relate)
+                                              make_closure_refine)
 from spatial4n_spark.shapes import decode, encode
 
 CLASSES = {
@@ -108,21 +110,86 @@ def test_relate_row_classes_struct_udf():
         assert rel["empty", c] is None
 
 
-def test_relate_row_classes_closure(spark):
-    pairs, a, b = _class_pairs()
+def _circles(cx, cy, r):
+    n = len(cx)
+    return encode(n, kind=np.full(n, 3, np.int8), x=np.asarray(cx, float),
+                  y=np.asarray(cy, float), radius=np.asarray(r, float))
+
+
+def test_relate_polygon_circle_row_classes():
+    """Every row class against circles that contain, cut and miss the
+    class shapes (one near the dateline), one batch: rect rows answer
+    the transposed rect relate of the circle, EMPTY is DISJOINT, the
+    null classes are null, and each row alone equals the row in the
+    batch."""
     names = list(CLASSES)
+    circles = [(2, 1, 0.5), (2, 1, 30), (100, 50, 5), (175, 2, 3), (0, 0, 3)]
+    rows = [(n, c) for c in circles for n in names]
+    poly = _parse([CLASSES[n] for n, _ in rows],
+                  [k for k, (n, _) in enumerate(rows) if n == "null"])
+    circ = _circles(*zip(*[c for _, c in rows]))
+    got = SF.st_relate_polygon_circle.func(poly, circ).to_pylist()
+    assert got == [SF.st_relate_polygon_circle.func(
+        poly.slice(k, 1), circ.slice(k, 1)).to_pylist()[0]
+        for k in range(len(rows))]
+    s = decode(poly)
+    rel = dict(zip(rows, got))
+    for k, (n, (cx, cy, r)) in enumerate(rows):
+        if n in NULL_CLASSES:
+            assert got[k] is None, (n, cx, cy, r)
+        elif n == "empty":
+            assert got[k] == REL.DISJOINT
+        elif n in ("rect", "page_rect"):
+            assert got[k] == REL.transpose(relate_circle_rect(
+                cx, cy, r, s.minx[k], s.maxx[k], s.miny[k], s.maxy[k]))[0]
+    c_in, c_all, c_far, c_dl, c_cut = circles
+    assert rel["polygon", c_in] == REL.CONTAINS
+    assert rel["polygon", c_all] == rel["rect", c_all] == REL.WITHIN
+    assert rel["polygon", c_cut] == REL.INTERSECTS
+    assert rel["point", c_in] == rel["point", c_cut] == REL.WITHIN
+    assert rel["point", c_far] == rel["polygon", c_far] == REL.DISJOINT
+    assert rel["page_rect", c_dl] == REL.INTERSECTS
+    assert rel["page_rect", c_in] == REL.DISJOINT
+    # a circle without a radius relates as null
+    one = _parse([CLASSES["polygon"]])
+    assert SF.st_relate_polygon_circle.func(
+        one, _circles([2.0], [1.0], [np.nan])).to_pylist() == [None]
+
+
+def test_closure_refine_equals_struct_point_relate(spark):
+    """The closure point refine (shape table in the UDF closure, rows
+    picked by shape id) answers as `st_relate_shape_point` on every row
+    class, including a circle, a linestring and a dateline rect, at
+    probes inside, on the boundary, outside and across the dateline;
+    an id missing from the table reads DISJOINT."""
+    names = list(CLASSES)
+    shapes = _parse([CLASSES[n] for n in names], [names.index("null")])
     right = spark.createDataFrame(pa.table({
-        "rid": pa.array(np.arange(len(names), dtype=np.int64)),
-        "shape": _parse([CLASSES[n] for n in names], [names.index("null")])}))
-    table = collect_shape_table(right, "rid")
-    relate = make_closure_shape_relate(table).func
-    rid = pa.array([names.index(cb) for _, cb in pairs] + [99],
-                   type=pa.int64())
-    left = pa.concat_arrays([a, a.slice(0, 1)])
-    got = relate(left, rid).to_pylist()
-    # the closure relate answers as the struct relate; an id missing
-    # from the table is DISJOINT
-    assert got == _expected(pairs, a, b) + [REL.DISJOINT]
+        "sid": pa.array(np.arange(len(names), dtype=np.int64)),
+        "shape": shapes}))
+    refine = make_closure_refine(collect_shape_table(right, "sid")).func
+    probes = [(2, 1), (1, 1), (0, 0), (0.5, 0.5), (3, 1.5), (2, 3),
+              (175, 2), (-175, 2), (179, 6), (10, 10), (-0.5, -0.5)]
+    sid = np.repeat(np.arange(len(names)), len(probes))
+    px = np.tile([x for x, _ in probes], len(names)).astype(float)
+    py = np.tile([y for _, y in probes], len(names)).astype(float)
+    want = SF.st_relate_shape_point.func(shapes.take(sid), pa.array(px),
+                                         pa.array(py)).to_pylist()
+    got = refine(pa.array(np.r_[sid, 99]), pa.array(np.r_[px, 1.0]),
+                 pa.array(np.r_[py, 1.0])).to_pylist()
+    assert got == want + [REL.DISJOINT]
+    by_class = {n: set(want[k * len(probes):(k + 1) * len(probes)])
+                for k, n in enumerate(names)}
+    for n in ("polygon", "rect", "page_rect", "point", "circle", "line"):
+        assert by_class[n] == {REL.CONTAINS, REL.DISJOINT}, n
+    # the same table under string ids, probed in reverse order
+    keyed = right.selectExpr("concat('z#', cast(sid as string)) AS sid",
+                             "shape")
+    refine = make_closure_refine(collect_shape_table(keyed, "sid")).func
+    ids = pa.array([f"z#{k}" for k in sid[::-1]] + ["z#99"])
+    got = refine(ids, pa.array(np.r_[px[::-1], 1.0]),
+                 pa.array(np.r_[py[::-1], 1.0])).to_pylist()
+    assert got == want[::-1] + [REL.DISJOINT]
 
 
 def test_relate_polygon_polygon_equals_relate_polygon_rect():
@@ -152,10 +219,9 @@ def _tri(x, y, w):
     return f"POLYGON(({x} {y}, {x + w} {y}, {x + w / 2} {y + w}, {x} {y}))"
 
 
-@pytest.mark.parametrize("right_id", [None, "rid"])
-def test_shape_join_with_rects_parquet(spark, tmp_path, right_id):
+def test_shape_join_with_rects_parquet(spark, tmp_path):
     """A square POLYGON in each layer parses as a rect; the join relates
-    it on the struct path and on the closure path."""
+    it."""
     left = ["POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))", _tri(1, 1, 2), _tri(3, 3, 4),
             "POLYGON((20 20, 22 20, 22 22, 20 22, 20 20))", "POINT (2 2)"]
     right = ["POLYGON((2 2, 6 2, 6 6, 2 6, 2 2))", _tri(0, 0, 6),
@@ -168,7 +234,7 @@ def test_shape_join_with_rects_parquet(spark, tmp_path, right_id):
         "lid", SF.st_from_wkt(F.col("wkt")).alias("lshape"))
     rd = spark.read.parquet(f"{base}_r.parquet").select(
         "rid", SF.st_from_wkt(F.col("wkt")).alias("rshape"))
-    out = shape_shape_join(ld, rd, 2, predicate="all", right_id=right_id)
+    out = shape_shape_join(ld, rd, 2, predicate="all")
     got = {(r.lid, r.rid): r.relation
            for r in out.select("lid", "rid", "relation").collect()}
     sl, sr = decode(_parse(left)), decode(_parse(right))

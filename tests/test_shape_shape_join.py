@@ -140,37 +140,3 @@ def test_no_codegen_compile_fallback(strict_codegen, layers):
     left, right, _, _ = layers
     out = shape_shape_join(left, right, precision=2, predicate="all")
     assert out.count() > 0
-
-
-def _check_closure_right(layers):
-    left, right, _, _ = layers
-    for predicate in ("intersects", "contains", "within", "all"):
-        a = shape_shape_join(left, right, precision=2, predicate=predicate)
-        b = shape_shape_join(left, right, precision=2, predicate=predicate,
-                             right_id="rid")
-        cols = ["lid", "rid"] + (["relation"] if predicate == "all" else [])
-        sa = {tuple(r) for r in a.select(*cols).collect()}
-        sb = {tuple(r) for r in b.select(*cols).collect()}
-        assert sa == sb, predicate
-
-
-def test_closure_right_path_set_equal_to_struct(spark, layers):
-    """right_id closure path (right vertices in the UDF closure, only
-    left arrays cross Arrow) == the struct path, for every predicate
-    incl. relation codes."""
-    _check_closure_right(layers)
-
-
-def test_mixed_size_closure_right_set_equal(spark, mixed_layers):
-    _check_closure_right(mixed_layers)
-
-
-def test_closure_right_falls_back_above_vertex_cap(spark, layers, monkeypatch):
-    from spatial4n_spark.operators import refine
-    left, right, _, _ = layers
-    monkeypatch.setattr(refine, "MAX_CLOSURE_VERTICES", 5)
-    a = shape_shape_join(left, right, precision=2, predicate="intersects")
-    b = shape_shape_join(left, right, precision=2, predicate="intersects",
-                         right_id="rid")
-    assert ({(r.lid, r.rid) for r in a.select("lid", "rid").collect()}
-            == {(r.lid, r.rid) for r in b.select("lid", "rid").collect()})

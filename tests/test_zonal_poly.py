@@ -1,14 +1,13 @@
 """Polygon-zone zonal stats vs a brute-force even-odd oracle.
 
-zonal_stats_poly runs pixels through the cell-join + PIP-refine
-skeleton; here we check its aggregates against a direct NumPy
-point-in-polygon evaluation over the same synthetic pixels.
+`zonal_stats_tagged` runs pixels through the cell-join + PIP-refine
+skeleton; here one `poly` family of polygon zones is checked against a
+direct point-in-polygon evaluation over the same synthetic pixels.
 """
 import os
 import sys
 
 import numpy as np
-import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,9 +37,9 @@ POLYS = {
 }
 
 
-def test_zonal_stats_poly_matches_bruteforce(spark):
+def test_polygon_zones_match_bruteforce(spark):
     from spatial4n_spark import functions as SF
-    from spatial4n_spark.operators.zonal import zonal_stats_poly
+    from spatial4n_spark.operators.zonal import zonal_stats_tagged
 
     rng = np.random.RandomState(7)
     lon = rng.uniform(-175, 175, 4000)
@@ -53,46 +52,17 @@ def test_zonal_stats_poly_matches_bruteforce(spark):
     rows = []
     for pid, ring in POLYS.items():
         wkt = "POLYGON((" + ", ".join(f"{x} {y}" for x, y in ring + [ring[0]]) + "))"
-        rows.append((pid, wkt))
-    polys = (spark.createDataFrame(rows, "poly_id int, wkt string")
+        rows.append(("poly", pid, wkt))
+    zones = (spark.createDataFrame(rows, "zone_kind string, zone_id bigint, wkt string")
              .withColumn("shape", SF.st_from_wkt(F.col("wkt")))
-             .select("poly_id", "shape"))
+             .select("zone_kind", "zone_id", "shape"))
 
-    got = {r["poly_id"]: (r["px_count"], r["px_sum"])
-           for r in zonal_stats_poly(px, polys, precision=2).collect()}
+    got = {(r["zone_kind"], r["zone_id"]): (r["px_count"], r["px_sum"])
+           for r in zonal_stats_tagged(px, zones, precision=2).collect()}
 
     want = {}
     for pid, ring in POLYS.items():
         m = np.array([_pip(a, b, ring) for a, b in zip(lon, lat)])
         if m.any():
-            want[pid] = (int(m.sum()), int(val[m].sum()))
+            want["poly", pid] = (int(m.sum()), int(val[m].sum()))
     assert got == want
-
-
-def test_zonal_stats_poly_shuffle_path_matches_broadcast(spark):
-    """broadcast=False (struct refine + shuffled cell join, the
-    huge-zone-layer regime) == the default broadcast/closure path."""
-    from spatial4n_spark import functions as SF
-    from spatial4n_spark.operators.zonal import zonal_stats_poly
-
-    rng = np.random.RandomState(3)
-    lon = rng.uniform(-170, 170, 2000)
-    lat = rng.uniform(-80, 80, 2000)
-    val = rng.randint(0, 255, 2000)
-    px = spark.createDataFrame(
-        [(float(a), float(b), int(v)) for a, b, v in zip(lon, lat, val)],
-        "px_lon double, px_lat double, value long")
-    rows = []
-    for pid, ring in POLYS.items():
-        wkt = "POLYGON((" + ", ".join(f"{x} {y}" for x, y in ring + [ring[0]]) + "))"
-        rows.append((pid, wkt))
-    polys = (spark.createDataFrame(rows, "poly_id int, wkt string")
-             .withColumn("shape", SF.st_from_wkt(F.col("wkt")))
-             .select("poly_id", "shape"))
-
-    a = {(r["poly_id"], r["px_count"], r["px_sum"]) for r in
-         zonal_stats_poly(px, polys, precision=2).collect()}
-    b = {(r["poly_id"], r["px_count"], r["px_sum"]) for r in
-         zonal_stats_poly(px, polys, precision=2, broadcast=False,
-                          salt=4).collect()}
-    assert a == b and len(a) >= 2
