@@ -297,25 +297,28 @@ def relate_shape_points(s, rows, px, py) -> np.ndarray:
         # line.
         rad = np.where(np.isnan(s.radius), 0.0, s.radius)
         lines, at = np.unique(rows[m], return_inverse=True)
-        for group in _group_by_geometry(s, lines, rad):
-            i0 = lines[group[0]]
-            k = m[np.isin(at, group)]
+        lab = _group_by_geometry(s, lines, rad)[at]
+        by = np.argsort(lab, kind="stable")
+        for k in np.split(m[by], np.flatnonzero(np.diff(lab[by])) + 1):
+            i0 = rows[k[0]]
             hit = linestring_contains_point(s.xs[i0], s.ys[i0], rad[i0],
                                             px[k], py[k])
             out[k] = np.where(hit, _rel.CONTAINS, _rel.DISJOINT)
     return out
 
 
-def _group_by_geometry(s, idxs, extra=None) -> list:
-    """Positions into `idxs` grouped by identical vertex arrays (and
-    `extra[idxs[p]]`) of rows `idxs`, as int arrays in first-seen
-    order."""
+def _group_by_geometry(s, idxs, extra=None) -> np.ndarray:
+    """Group label of each row of `idxs`: rows with identical vertex
+    arrays (and equal `extra[row]`) share a label, numbered in
+    first-seen order."""
     groups: dict = {}
     setd = groups.setdefault
-    for p, i in enumerate(idxs.tolist()):
+    labels = []
+    for i in idxs.tolist():
         key = tuple(None if v is None else v.tobytes() for v in s.verts(i))
-        setd(key if extra is None else (key, extra[i]), []).append(p)
-    return [np.asarray(g) for g in groups.values()]
+        labels.append(setd(key if extra is None else (key, extra[i]),
+                           len(groups)))
+    return np.asarray(labels, dtype=np.int64)
 
 
 def st_relation_name(rel_col):

@@ -229,9 +229,6 @@ def points_in_row_polygons(px, py, xs, ys, ring_offsets, rows) -> np.ndarray:
     cuts = np.searchsorted(ends, np.arange(_VERTICES_PER_TABLE, total,
                                            _VERTICES_PER_TABLE), side="right")
     bounds = np.unique(np.r_[0, cuts, len(reps)])
-    if len(bounds) == 2:    # one edge table: no per-table point subsets
-        return points_in_polygons(px, py, inv, polygon_edges(
-            xs, ys, ring_offsets, reps))
     out = np.empty(len(rows), dtype=bool)
     for s, t in zip(bounds[:-1], bounds[1:]):
         sel = np.flatnonzero((inv >= s) & (inv < t))

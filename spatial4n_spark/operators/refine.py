@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ByteType
 
-from ..kernels import relation as REL
 from ..kernels import wkt as _wkt
 from ..shapes import decode, encode_records
 
@@ -72,19 +71,19 @@ def make_closure_refine(table: dict):
 
     ids = list(table)
     recs = [table[k] for k in ids]
-    shapes = decode(encode_records(recs, [rec["error"] for rec in recs]))
+    # the row after the table's is an empty record (kind 0): a missing
+    # id maps to it and reads DISJOINT
+    shapes = decode(encode_records(recs + [None],
+                                   [rec["error"] for rec in recs] + [None]))
     id_set = pa.array(ids)
 
     def refine(sid: pa.Array, px: pa.Array, py: pa.Array) -> pa.Array:
         row = (pc.index_in(sid.cast(id_set.type), value_set=id_set)
-               .fill_null(-1).to_numpy(zero_copy_only=False)
-               if len(ids) else np.full(len(sid), -1))
-        out = np.full(len(sid), REL.DISJOINT, dtype=np.int8)
-        k = np.flatnonzero(row >= 0)
-        out[k] = relate_shape_points(
-            shapes, row[k], px.to_numpy(zero_copy_only=False)[k],
-            py.to_numpy(zero_copy_only=False)[k])
-        return pa.array(out, type=pa.int8())
+               .fill_null(len(ids)).to_numpy(zero_copy_only=False)
+               if len(ids) else np.zeros(len(sid), dtype=np.int64))
+        return pa.array(relate_shape_points(
+            shapes, row, px.to_numpy(zero_copy_only=False),
+            py.to_numpy(zero_copy_only=False)), type=pa.int8())
 
     return arrow_udf(refine, ByteType())
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from spatial4n_spark import functions as SF
 from spatial4n_spark.kernels import relation as REL
+from spatial4n_spark.kernels.pip import points_in_polygon
 from spatial4n_spark.kernels.relate_rect import relate_rect_point
 from spatial4n_spark.operators.joins import (distance_join, knn_join,
                                              point_in_shape_join,
@@ -89,7 +90,8 @@ def test_point_in_rect_join_matches_kernel(spark, points_df, rects_pdf):
 
 
 def test_join_strategies_agree(spark, points_df, rects_pdf):
-    """broadcast / shuffle / salted plans return identical pair sets."""
+    """broadcast / shuffle / salted plans return identical pair sets,
+    on a rect layer and on a non-convex polygon layer."""
     sdf, _ = points_df
     rects = spark.createDataFrame(rects_pdf).withColumn(
         "shape", F.struct(
@@ -113,6 +115,30 @@ def test_join_strategies_agree(spark, points_df, rects_pdf):
                for p in plans]
     assert results[0] == results[1] == results[2]
     assert len(results[0]) > 50
+
+    # non-convex polygons (12-point stars) go through the struct
+    # polygon refine on every plan; each plan equals the kernel truth
+    _, pdf = points_df
+    rng = np.random.RandomState(13)
+    t = np.linspace(0, 2 * np.pi, 12, endpoint=False)
+    stars, want = [], []
+    for sid in range(30):
+        cx, cy = rng.uniform(-160, 160), rng.uniform(-70, 70)
+        r = np.where(np.arange(12) % 2, 4.0, 12.0) * rng.uniform(0.5, 1.5)
+        xs, ys = cx + r * np.cos(t), cy + r * np.sin(t)
+        ring = ", ".join(f"{x!r} {y!r}" for x, y in
+                         zip(np.r_[xs, xs[0]], np.r_[ys, ys[0]]))
+        stars.append((sid, f"POLYGON(({ring}))"))
+        hit = points_in_polygon(pdf["x"].to_numpy(), pdf["y"].to_numpy(),
+                                xs, ys)
+        want += [(int(p), sid) for p in pdf["point_id"].to_numpy()[hit]]
+    polys = (spark.createDataFrame(stars, "poly_id int, wkt string")
+             .select("poly_id", SF.st_from_wkt(F.col("wkt")).alias("shape")))
+    for p in plans:
+        got = sorted(map(tuple, point_in_shape_join(sdf, polys, p)
+                         .select("point_id", "poly_id").collect()))
+        assert got == sorted(want)
+    assert len(want) > 50
 
 
 def test_docs_pipeline_pip_join(spark):
