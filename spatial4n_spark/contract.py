@@ -245,12 +245,6 @@ def _interleave_sql(lon_idx, lat_idx, precision):
     return "concat(" + ", ".join(chars) + ")"
 
 
-def geohash_sql(x, y, precision):
-    nbits = precision * 5
-    return _interleave_sql(_lon_idx_sql(x, (nbits + 1) // 2),
-                           _lat_idx_sql(y, nbits // 2), precision)
-
-
 # ---------------------------------------------------------------------------
 # derived Spark inputs
 # ---------------------------------------------------------------------------
@@ -754,23 +748,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_on_pairs(docs, pairs, n=3)
 
 
-ORACLE_NGRAM_JACCARD = """
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, len(string_split(text, ' ')) - 1),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i + 1] || ' ' ||
-                string_split(text, ' ')[i + 2])) AS s
-  FROM documents
-)
-SELECT a.doc_id AS doc_id,
-       round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-             (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-"""
-
-
 ORACLE_NGRAM_LSH_TMPL = """
 WITH pairs AS ({minhash}),
 sh AS (
@@ -787,12 +764,6 @@ SELECT p.doc_a, p.doc_b,
              (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
 FROM pairs p JOIN sh a ON a.doc_id = p.doc_a JOIN sh b ON b.doc_id = p.doc_b
 """
-
-
-def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import minhash_lsh_pairs
-    return minhash_lsh_pairs(_load(spark, sf_dir, "documents"),
-                             n_hashes=16, bands=4, shingle_n=2)
 
 
 def _ddb_minhash_cols(n_hashes: int = 16) -> str:

@@ -321,15 +321,6 @@ def _group_by_geometry(s, idxs, extra=None) -> np.ndarray:
     return np.asarray(labels, dtype=np.int64)
 
 
-def st_relation_name(rel_col):
-    """Relation code -> name (WITHIN/CONTAINS/DISJOINT/INTERSECTS)."""
-    return (F.when(rel_col == _rel.WITHIN, "WITHIN")
-             .when(rel_col == _rel.CONTAINS, "CONTAINS")
-             .when(rel_col == _rel.DISJOINT, "DISJOINT")
-             .when(rel_col == _rel.INTERSECTS, "INTERSECTS")
-             .otherwise("NONE"))
-
-
 @arrow_udf(SHAPE_SCHEMA)
 def st_from_legacy(texts: pa.Array) -> pa.Array:
     """Legacy text format -> shape struct ("X Y", "minX minY maxX maxY",
@@ -1107,16 +1098,15 @@ def _boolean_geometry(op, a, b) -> pa.StructArray:
     """Shared driver for the boolean geometry UDFs: shape structs ->
     even-odd ring sets -> one batched noded overlay `op` -> per row
     members -> closed-ring struct."""
-    from ..kernels.booleans import (members_of_robust, overlay_rings,
+    from ..kernels.booleans import (members_of_rows, overlay_rings,
                                     pair_vertices)
     sa, sb = decode(a), decode(b)
     (ra, err_a), (rb, err_b) = _evenodd_rings(sa), _evenodd_rings(sb)
     errs = np.where(err_a != None, err_a, err_b)  # noqa: E711
     ok = np.flatnonzero(errs == None)  # noqa: E711
     recs: list = [None] * len(sa)
-    for i, rings in zip(ok.tolist(),
-                        overlay_rings(pair_vertices(ra, ok, rb, ok), op)):
-        members = None if rings is None else members_of_robust(rings)
+    for i, members in zip(ok.tolist(), members_of_rows(
+            overlay_rings(pair_vertices(ra, ok, rb, ok), op))):
         if members is None:
             errs[i] = "overlay: result rings did not stitch or nest"
         elif members:
@@ -1333,19 +1323,6 @@ def st_vector_distance(vec1, vec2, power: float):
     if p == 2.0:
         return F.sqrt(s)
     return F.pow(s, F.lit(1.0 / p))
-
-
-def vector_box_corner_cols(center_cols, distance, upper_right: bool):
-    """JVM VectorBoxCorner (DistanceUtils.cs:191-211): each coordinate
-    Column moves by sin(45deg) * distance (negated for lower-left)."""
-    from pyspark.sql import Column
-
-    from ..kernels.distance import SIN_45_AS_RADS
-    d = distance if isinstance(distance, Column) else F.lit(float(distance))
-    d = F.lit(SIN_45_AS_RADS) * d
-    if not upper_right:
-        d = -d
-    return [c + d for c in center_cols]
 
 
 _HAV_VIN_SCHEMA = StructType([

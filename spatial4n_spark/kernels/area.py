@@ -41,25 +41,27 @@ def euclidean_circle_area(radius):
 
 
 def polygon_area_euclid(xs, ys, ring_offsets) -> float:
-    """Euclidean (multi)polygon area with even-odd holes — geom.Area in
-    NtsGeometry.GetArea (NtsGeometry.cs:184-196). Per ring the shoelace
-    |0.5 * sum(cross)|, signed by even-odd nesting depth so holes
-    subtract regardless of winding (same rule as centroid/PIP)."""
-    from .centroid import _ring_even_odd_signs
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    offs = (list(ring_offsets) if ring_offsets is not None
-            and len(ring_offsets) >= 2 else [0, len(xs)])
-    rings = [(xs[a:b], ys[a:b]) for a, b in zip(offs[:-1], offs[1:])
-             if b - a >= 3]
-    if not rings:
-        return 0.0
-    signs = _ring_even_odd_signs(rings)
-    total = 0.0
-    for (rx, ry), sg in zip(rings, signs):
-        cross = rx * _roll1(ry) - _roll1(rx) * ry
-        total += sg * abs(0.5 * cross.sum())
-    return total
+    """Euclidean (multi)polygon area with even-odd holes: the one-row
+    call of `polygon_areas_euclid`."""
+    return polygon_areas_euclid([xs], [ys], [ring_offsets])[0]
+
+
+def polygon_areas_euclid(xs_list, ys_list, ro_list) -> list:
+    """Euclidean area of each (multi)polygon record with even-odd holes
+    — geom.Area in NtsGeometry.GetArea (NtsGeometry.cs:184-196). Per
+    ring the shoelace |0.5 * sum(cross)|, signed by even-odd nesting
+    depth (`centroid.evenodd_signs`, one call for every record) so
+    holes subtract regardless of winding (same rule as centroid/PIP)."""
+    from .centroid import evenodd_signs, record_rings
+    rings = [record_rings(*rec) for rec in zip(xs_list, ys_list, ro_list)]
+    out = []
+    for rs, signs in zip(rings, evenodd_signs(rings)):
+        total = 0.0
+        for (rx, ry), sg in zip(rs, signs):
+            cross = rx * _roll1(ry) - _roll1(rx) * ry
+            total += sg * abs(0.5 * cross.sum())
+        out.append(total)
+    return out
 
 
 def buffered_line_area(xs, ys, buf: float) -> tuple[float, bool]:
@@ -121,10 +123,11 @@ def shape_area_batch(kind, radius, minx, maxx, miny, maxy,
         cap = (geo_rect_area(mnx[i], mxx[i], mny[i], mxy[i]) if geo
                else euclidean_rect_area(mnx[i], mxx[i], mny[i], mxy[i]))
         out[i] = min(s, float(cap))
-    for i in np.nonzero((kind == 7) | (kind == 8))[0]:
-        if xs_list[i] is None:
-            continue
-        ea = polygon_area_euclid(xs_list[i], ys_list[i], ro_list[i])
+    rows = [i for i in np.flatnonzero((kind == 7) | (kind == 8)).tolist()
+            if xs_list[i] is not None]
+    for i, ea in zip(rows, polygon_areas_euclid(
+            [xs_list[i] for i in rows], [ys_list[i] for i in rows],
+            [ro_list[i] for i in rows])):
         if not geo or ea == 0.0:
             out[i] = ea
             continue

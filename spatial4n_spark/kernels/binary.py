@@ -171,23 +171,6 @@ def _write_wkb(rec: dict) -> bytes:
     raise WktParseError(f"unsupported geometry kind for WKB: {kind}")
 
 
-def _ring_contains_point(xs, ys, px, py) -> bool:
-    """Even-odd crossing test of one ring (closed or open) — local
-    helper for WKB nesting classification."""
-    n = len(xs)
-    if n >= 2 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-        n -= 1
-    inside = False
-    j = n - 1
-    for i in range(n):
-        if (ys[i] > py) != (ys[j] > py):
-            t = (py - ys[i]) / (ys[j] - ys[i])
-            if px < xs[i] + t * (xs[j] - xs[i]):
-                inside = not inside
-        j = i
-    return inside
-
-
 def _nest_rings(rings):
     """Group a multipolygon's FLAT ring list into [shell, holes...]
     parts by even-odd nesting depth (ADVICE r02: the flat encoding
@@ -197,47 +180,27 @@ def _nest_rings(rings):
     interior rings of their part's polygon).
 
     A ring contained in an even number of other rings is a shell; odd
-    => a hole of its innermost containing shell. This matches the
-    record's even-odd PIP semantics exactly, so WKT -> record -> WKB
-    preserves area. O(R^2) vertex tests — multipolygon ring counts are
-    small; classification uses each ring's first vertex (rings sharing
-    a boundary vertex are already invalid under the validation rules).
+    => a hole of its innermost containing shell (`pip.ring_nesting`),
+    or its own part when no shell holds it. This matches the record's
+    even-odd PIP semantics, so WKT -> record -> WKB preserves area. The
+    containment test probes beside each ring's edges, so a hole that
+    touches its shell at a vertex (its first one included) still nests.
     """
-    n = len(rings)
-    if n <= 1:
-        return [[r] for r in rings]
-    contains = [[False] * n for _ in range(n)]
-    depth = [0] * n
-    for i in range(n):
-        xi, yi = rings[i]
-        for j in range(n):
-            if i == j:
-                continue
-            xj, yj = rings[j]
-            if _ring_contains_point(xj, yj, xi[0], yi[0]):
-                contains[j][i] = True
-                depth[i] += 1
+    from .booleans import list_rings
+    from .pip import ring_nesting
+    depth, parent = ring_nesting(list_rings([rings]))
     parts = []
     part_of = {}
-    for i in range(n):
-        if depth[i] % 2 == 0:
+    for i, d in enumerate(depth.tolist()):
+        if d % 2 == 0:
             part_of[i] = len(parts)
             parts.append([rings[i]])
-    for i in range(n):
-        if depth[i] % 2 == 1:
-            # innermost containing shell: a shell at depth[i]-1 that
-            # contains ring i
-            parent = None
-            for j in range(n):
-                if contains[j][i] and depth[j] == depth[i] - 1 \
-                        and depth[j] % 2 == 0:
-                    parent = j
-                    break
-            if parent is None:  # degenerate — keep as its own shell
-                part_of[i] = len(parts)
+    for i, (d, p) in enumerate(zip(depth.tolist(), parent.tolist())):
+        if d % 2 == 1:
+            if p < 0:  # degenerate — keep as its own shell
                 parts.append([rings[i]])
             else:
-                parts[part_of[parent]].append(rings[i])
+                parts[part_of[p]].append(rings[i])
     return parts
 
 

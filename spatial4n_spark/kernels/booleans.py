@@ -253,15 +253,16 @@ def shape_rings(xs, ys, ring_offsets, rows) -> Rings:
     return Rings(xs.values, ys.values, gx[keep], gy[keep], n[keep], first)
 
 
-def _list_rings(rings) -> Rings:
-    """One ring set from a list of (xs, ys) rings."""
-    xs = [np.asarray(rx, dtype=np.float64) for rx, _ in rings]
-    ys = [np.asarray(ry, dtype=np.float64) for _, ry in rings]
+def list_rings(sets) -> Rings:
+    """Ring sets from lists of (xs, ys) rings: set s holds the rings of
+    sets[s], as given."""
+    xs = [np.asarray(rx, dtype=np.float64) for rs in sets for rx, _ in rs]
+    ys = [np.asarray(ry, dtype=np.float64) for rs in sets for _, ry in rs]
     size = np.array([len(rx) for rx in xs], dtype=np.int64)
     start = _offsets(size)[:-1]
     cat = (lambda a: np.concatenate(a) if a else np.zeros(0))
     return Rings(cat(xs), cat(ys), start, start, size,
-                 np.array([0, len(xs)], dtype=np.int64))
+                 _offsets([len(rs) for rs in sets]))
 
 
 class _Verts(NamedTuple):
@@ -322,7 +323,7 @@ def pair_vertices(a: Rings, ia, b: Rings, ib) -> _Verts:
 
 def _vertices(rings_a, rings_b) -> _Verts:
     """Batch of one pair from two lists of (xs, ys) rings."""
-    return pair_vertices(_list_rings(rings_a), [0], _list_rings(rings_b),
+    return pair_vertices(list_rings([rings_a]), [0], list_rings([rings_b]),
                          [0])
 
 
@@ -798,11 +799,11 @@ def robust_boolean(rings_a, rings_b, op):
 def _oriented(members):
     """The rings of every member, oriented so that the member's winding
     number is 1 inside and 0 outside: shells CCW and holes CW by
-    even-odd depth within the member. Depth comes from the
-    distance-guarded containment probe, so rings touching at a vertex
-    still orient correctly."""
-    from .overlay import _ring_signs
-    out = []
+    even-odd depth within the member (`pip.ring_nesting`, one call for
+    all members), so rings touching at a vertex still orient
+    correctly."""
+    from .pip import ring_nesting
+    opened = []
     for member in members:
         rings = []
         for rx, ry in member:
@@ -812,13 +813,11 @@ def _oriented(members):
                 rx, ry = rx[:-1], ry[:-1]
             if len(rx) >= 3:
                 rings.append((rx, ry))
-        if len(rings) == 1:   # one ring: its own orientation decides
-            signs = [_signed_area2(*rings[0])]
-        else:
-            signs = _ring_signs(rings)
-        for (rx, ry), sgn in zip(rings, signs):
-            out.append((rx, ry) if sgn >= 0 else (rx[::-1], ry[::-1]))
-    return out
+        opened.append(rings)
+    depth = ring_nesting(list_rings(opened))[0].tolist()
+    rings = [r for member in opened for r in member]
+    return [(rx, ry) if (_signed_area2(rx, ry) >= 0.0) == (d % 2 == 0)
+            else (rx[::-1], ry[::-1]) for (rx, ry), d in zip(rings, depth)]
 
 
 def union_members(members, minus=()):
@@ -953,35 +952,38 @@ def _stitch(nx, ny, start, end):
 
 
 def members_of_robust(rings):
-    """Member grouping [(shell, [holes])] for robust_boolean output:
-    rings may TOUCH at points (figure-eight contacts), where
-    first-vertex parity is unreliable — nesting uses the
-    distance-guarded containment probe (overlay._ring_contained_in)."""
-    from .overlay import _ring_contained_in
-    opened = [(np.asarray(rx, dtype=np.float64),
-               np.asarray(ry, dtype=np.float64)) for rx, ry in rings]
-    depth = []
-    for i, (rx, ry) in enumerate(opened):
-        d = 0
-        for j, (ox, oy) in enumerate(opened):
-            if j != i and _ring_contained_in(rx, ry, ox, oy):
-                d += 1
-        depth.append(d)
-    members = []
-    shell_idx = []
-    for i, (r, d) in enumerate(zip(opened, depth)):
-        if d % 2 == 0:
-            members.append((r, []))
-            shell_idx.append(i)
-    for i, (r, d) in enumerate(zip(opened, depth)):
-        if d % 2 == 1:
-            parent, pdepth = None, -1
-            for m, si in enumerate(shell_idx):
-                if depth[si] == d - 1 and _ring_contained_in(
-                        r[0], r[1], opened[si][0], opened[si][1]):
-                    if depth[si] > pdepth:
-                        parent, pdepth = m, depth[si]
-            if parent is None:
-                return None
-            members[parent][1].append(r)
-    return members
+    """Member grouping [(shell, [holes])] of one ring list of
+    robust_boolean output: the one-row call of `members_of_rows`."""
+    return members_of_rows([rings])[0]
+
+
+def members_of_rows(ring_lists):
+    """Member grouping [(shell, [holes])] of each ring list of
+    robust_boolean output; None for a None list (a failed stitch) and
+    for a list with a hole that no shell holds. The rings may TOUCH at
+    points (figure-eight contacts); the nesting is `pip.ring_nesting`,
+    one call for every list: a ring at even depth is a shell, one at
+    odd depth a hole of its parent."""
+    from .pip import ring_nesting
+    lists = [[(np.asarray(rx, dtype=np.float64),
+               np.asarray(ry, dtype=np.float64)) for rx, ry in rings or ()]
+             for rings in ring_lists]
+    depth, parent = ring_nesting(list_rings(lists))
+    depth, parent = depth.tolist(), parent.tolist()
+    out = []
+    base = 0
+    for given, rings in zip(ring_lists, lists):
+        members, slot = [], {}
+        for i, r in enumerate(rings, base):
+            if depth[i] % 2 == 0:
+                slot[i] = len(members)
+                members.append((r, []))
+        for i, r in enumerate(rings, base):
+            if depth[i] % 2 == 1:
+                if parent[i] < 0:
+                    members = None
+                    break
+                members[slot[parent[i]]][1].append(r)
+        out.append(None if given is None else members)
+        base += len(rings)
+    return out

@@ -261,7 +261,8 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
     Raises ValueError on a degenerate ring or an erosion whose union
     does not stitch.
     """
-    from .pip import points_in_polygons, ring_edges
+    from .booleans import list_rings
+    from .pip import ring_nesting
 
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
@@ -305,16 +306,10 @@ def buffer_polygon(xs, ys, ring_offsets, d, arc_step=ARC_STEP):
                 np.concatenate([r[1] for r in out_rings]),
                 off, False)
 
-    # even-odd nesting depth of each ring's first vertex vs the others:
-    # one probe per ordered ring pair (k, j), ring j as its own polygon;
-    # a lone ring has depth 0
+    # even-odd nesting depth: a shell at even depth, a hole at odd
     depth = [0]
     if len(rings) > 1:
-        k, j = np.nonzero(~np.eye(len(rings), dtype=bool))
-        inside = points_in_polygons(np.array([rx[0] for rx, _ in rings])[k],
-                                    np.array([ry[0] for _, ry in rings])[k],
-                                    j, ring_edges(rings))
-        depth = np.bincount(k[inside], minlength=len(rings)).tolist()
+        depth = ring_nesting(list_rings([rings]))[0].tolist()
     shells = [r for r, dep in zip(rings, depth) if dep % 2 == 0]
     holes = [r for r, dep in zip(rings, depth) if dep % 2 == 1]
 

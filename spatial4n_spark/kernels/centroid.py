@@ -46,58 +46,61 @@ def rect_center(minx, maxx, miny, maxy):
     return cx, cy
 
 
-def _ring_even_odd_signs(rings):
-    """+1 for rings at even nesting depth (shells), -1 for odd (holes)
-    — the same even-odd rule as the record's PIP semantics and
-    binary._nest_rings. Ring containment goes through the
-    distance-guarded probe (overlay._ring_contained_in, r5): rings out
-    of the boolean-geometry kernels start at crossing points that sit
-    ON another ring's boundary within float rounding, where the old
-    first-vertex probe coin-flipped."""
-    from .overlay import _ring_contained_in
-    n = len(rings)
-    signs = np.ones(n)
-    if n <= 1:
-        return signs
-    for i in range(n):
-        depth = 0
-        for j in range(n):
-            if i != j and _ring_contained_in(rings[i][0], rings[i][1],
-                                             rings[j][0], rings[j][1]):
-                depth += 1
-        if depth % 2 == 1:
-            signs[i] = -1.0
-    return signs
+def record_rings(xs, ys, ring_offsets):
+    """The rings of a (multi)polygon record that hold 3+ stored
+    vertices, as stored (a closing repeat kept); a null or short
+    ring_offsets makes all vertices one ring."""
+    xs = np.asarray(xs, dtype=np.float64)
+    ys = np.asarray(ys, dtype=np.float64)
+    # ring_offsets is the full fence [0, n0, n0+n1, ..., total]
+    offs = (list(ring_offsets) if ring_offsets is not None
+            and len(ring_offsets) >= 2 else [0, len(xs)])
+    return [(xs[a:b], ys[a:b]) for a, b in zip(offs[:-1], offs[1:])
+            if b - a >= 3]
+
+
+def evenodd_signs(ring_lists) -> list:
+    """Per ring list, +1 for each ring at even nesting depth (a shell)
+    and -1 at odd depth (a hole) — the record's even-odd PIP rule.
+    One `pip.ring_nesting` call for every list."""
+    from .booleans import list_rings
+    from .pip import ring_nesting
+    depth = ring_nesting(list_rings(ring_lists))[0]
+    return np.split(np.where(depth % 2 == 1, -1.0, 1.0),
+                    np.cumsum([len(r) for r in ring_lists])[:-1])
 
 
 def polygon_centroid(xs, ys, ring_offsets):
-    """Area centroid of a (multi)polygon record with even-odd holes.
+    """Area centroid of a (multi)polygon record with even-odd holes:
+    the one-row call of `polygon_centroids`."""
+    return polygon_centroids([xs], [ys], [ring_offsets])[0]
+
+
+def polygon_centroids(xs_list, ys_list, ro_list) -> list:
+    """Area centroid (cx, cy) of each (multi)polygon record.
 
     Per ring, the standard signed-area centroid
     (C = sum((p_i + p_{i+1}) * cross_i) / (6 * A_signed)) is
     orientation-invariant after the division; rings are then weighted
-    by sign * |A| where sign comes from even-odd nesting depth, so
-    holes subtract regardless of their winding — exactly the record's
-    area semantics. Degenerate total area falls back to the boundary
-    length centroid, then to the plain vertex average (NTS Centroid's
-    areal -> lineal -> puntal ladder).
+    by sign * |A| where sign comes from even-odd nesting depth
+    (`evenodd_signs`, one call for every record), so holes subtract
+    regardless of their winding — exactly the record's area semantics.
+    Degenerate total area falls back to the boundary length centroid,
+    then to the plain vertex average (NTS Centroid's areal -> lineal ->
+    puntal ladder).
     """
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    # ring_offsets is the full fence [0, n0, n0+n1, ..., total]
-    if ring_offsets is None or len(ring_offsets) < 2:
-        offs = [0, len(xs)]
-    else:
-        offs = list(ring_offsets)
-    rings = []
-    for a, b in zip(offs[:-1], offs[1:]):
-        if b - a >= 3:
-            rings.append((xs[a:b], ys[a:b]))
+    xs_list = [np.asarray(xs, dtype=np.float64) for xs in xs_list]
+    ys_list = [np.asarray(ys, dtype=np.float64) for ys in ys_list]
+    rings = [record_rings(*rec) for rec in zip(xs_list, ys_list, ro_list)]
+    return [_centroid(*rec) for rec in zip(xs_list, ys_list, rings,
+                                           evenodd_signs(rings))]
+
+
+def _centroid(xs, ys, rings, signs):
     if not rings:
         if len(xs) == 0:
             return float("nan"), float("nan")
         return float(xs.mean()), float(ys.mean())
-    signs = _ring_even_odd_signs(rings)
     wsum = cx = cy = 0.0
     lsum = lx = ly = 0.0
     for (rx, ry), sg in zip(rings, signs):
@@ -127,7 +130,8 @@ def center_batch(kind, x, y, minx, maxx, miny, maxy, xs_list, ys_list,
                  ring_offsets_list):
     """Per-row GetCenter over flat shape-record arrays -> (cx, cy)
     float64 arrays. Vectorized for the point/circle/rect/bbox kinds;
-    only polygon rows take the per-row centroid path."""
+    the polygon rows take `polygon_centroids`, one call for the
+    batch."""
     kind = np.asarray(kind, dtype=np.int8)
     n = len(kind)
     cx = np.full(n, np.nan)
@@ -147,9 +151,11 @@ def center_batch(kind, x, y, minx, maxx, miny, maxy, xs_list, ys_list,
                                np.asarray(maxy, dtype=np.float64)[bx])
         cx[bx] = rcx
         cy[bx] = rcy
-    for i in np.nonzero((kind == 7) | (kind == 8))[0]:
-        if xs_list[i] is None:
-            continue  # malformed record: stay (nan, nan) like empty
-        cx[i], cy[i] = polygon_centroid(xs_list[i], ys_list[i],
-                                        ring_offsets_list[i])
+    # a malformed record (no vertex list) stays (nan, nan) like empty
+    rows = [i for i in np.flatnonzero((kind == 7) | (kind == 8)).tolist()
+            if xs_list[i] is not None]
+    for i, (px, py) in zip(rows, polygon_centroids(
+            [xs_list[i] for i in rows], [ys_list[i] for i in rows],
+            [ring_offsets_list[i] for i in rows])):
+        cx[i], cy[i] = px, py
     return cx, cy

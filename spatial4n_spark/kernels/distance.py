@@ -84,13 +84,6 @@ def cartesian_distance(x1, y1, x2, y2, squared: bool = False):
     return s if squared else np.sqrt(s)
 
 
-def distance_deg(x1, y1, x2, y2, geo: bool = True, calculator: str | None = None):
-    """Context-style dispatch: geo -> spherical degrees, else cartesian."""
-    if geo:
-        return geo_distance_deg(x1, y1, x2, y2, calculator or "haversine")
-    return cartesian_distance(x1, y1, x2, y2)
-
-
 def vector_distance(vec1, vec2, power: float):
     """p-norm length between two vectors (DistanceUtils.cs:123-189).
 

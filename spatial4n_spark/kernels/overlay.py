@@ -1,6 +1,6 @@
 """Polygon-overlay measures: the exact intersection AREA of two
 even-odd (multi)polygons per candidate pair, plus the even-odd own
-area and the ring-containment probe the measure's callers share.
+area of each operand (its rings signed by `pip.ring_nesting`).
 
 Engine-added scale operators (no reference analog — Spatial4n exposes
 Relate verdicts but no overlay): the classic GIS overlay join ("for
@@ -27,166 +27,41 @@ from __future__ import annotations
 
 import numpy as np
 
-from .booleans import (_offsets, _roll1, one_polygon, overlay_areas,
+from .booleans import (_group_of, _offsets, one_polygon, overlay_areas,
                        pair_vertices, row_boxes, shape_rings)
-
-
-def _rings(xs, ys, ring_offsets):
-    """Split flat vertex arrays into per-ring (xs, ys), open form."""
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    spans = ([(0, len(xs))] if ring_offsets is None or len(ring_offsets) < 2
-             else [(int(ring_offsets[k]), int(ring_offsets[k + 1]))
-                   for k in range(len(ring_offsets) - 1)])
-    out = []
-    for s, e in spans:
-        rx, ry = xs[s:e], ys[s:e]
-        if len(rx) >= 2 and rx[0] == rx[-1] and ry[0] == ry[-1]:
-            rx, ry = rx[:-1], ry[:-1]
-        if len(rx) >= 3:
-            out.append((rx, ry))
-    return out
-
-
-def _parity_and_boundary(px, py, ax, ay, bx, by):
-    """Vectorized even-odd parity + on-boundary of points vs an edge
-    soup (one broadcast points x edges pass, edge-chunked)."""
-    px = np.asarray(px, dtype=np.float64)[:, None]
-    py = np.asarray(py, dtype=np.float64)[:, None]
-    parity = np.zeros(px.shape[0], dtype=bool)
-    boundary = np.zeros(px.shape[0], dtype=bool)
-    lox, hix = np.minimum(ax, bx), np.maximum(ax, bx)
-    loy, hiy = np.minimum(ay, by), np.maximum(ay, by)
-    chunk = max(1, 2_000_000 // max(1, px.shape[0]))
-    for s in range(0, len(ax), chunk):
-        e = slice(s, s + chunk)
-        cross = (bx[e] - ax[e]) * (py - ay[e]) - (by[e] - ay[e]) * (px - ax[e])
-        boundary |= ((cross == 0.0)
-                     & (px >= lox[e]) & (px <= hix[e])
-                     & (py >= loy[e]) & (py <= hiy[e])).any(axis=1)
-        cond = (ay[e] > py) != (by[e] > py)
-        dy = by[e] - ay[e]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            x_at = ax[e] + (py - ay[e]) * (bx[e] - ax[e]) / dy
-        hit = cond & (dy != 0.0) & (px < x_at)
-        parity ^= (hit.sum(axis=1) & 1).astype(bool)
-    return parity, boundary
-
-
-def _ring_signs(rings):
-    """Per-ring multiplier that flips each ring's stored traversal to
-    the positively-oriented even-odd boundary: required orientation is
-    CCW at even containment depth, CW at odd depth."""
-    signs = []
-    for i, (rx, ry) in enumerate(rings):
-        stored = np.sum(rx * _roll1(ry) - _roll1(rx) * ry)
-        stored_sign = 1.0 if stored >= 0.0 else -1.0
-        # depth: number of OTHER rings properly CONTAINING this ring.
-        # Vertex probes are unreliable — overlay-output rings
-        # (st_intersection / st_union) touch each other at shared
-        # nodes, and seam-touching siblings (a nested piece hugging
-        # part of this ring) contaminate any single global probe.
-        # Decide each (ring, other) pair with its own distance-guarded
-        # interior probe instead.
-        depth = 0
-        for j, (ox, oy) in enumerate(rings):
-            if j != i and _ring_contained_in(rx, ry, ox, oy):
-                depth += 1
-        required = 1.0 if depth % 2 == 0 else -1.0
-        signs.append(required * stored_sign)
-    return signs
-
-
-def _ring_contained_in(rx, ry, ox, oy) -> bool:
-    """True iff ring (rx, ry) lies inside ring (ox, oy). Valid for
-    even-odd arrangements: the rings never properly cross, but may
-    touch at shared nodes (overlay output) or share seam arcs. Probes
-    are offset strictly inside (rx, ry) and must clear the other ring's
-    edges by half the offset before their parity is trusted; falls
-    back to the first-vertex parity when every probe hugs the other
-    boundary. A probe of R
-    landing in O is necessary but not sufficient (a SMALLER O nested
-    inside R can cover the probe strip along ∂R), so containment
-    additionally requires |area(R)| < |area(O)| — for non-crossing
-    rings the container is always the larger."""
-    a_r = abs(float(np.sum(rx * _roll1(ry) - _roll1(rx) * ry)))
-    a_o = abs(float(np.sum(ox * _roll1(oy) - _roll1(ox) * oy)))
-    if a_r >= a_o:
-        return False
-    n = len(rx)
-    ex = _roll1(rx) - rx
-    ey = _roll1(ry) - ry
-    elen = np.hypot(ex, ey)
-    order = np.argsort(-elen)
-    o2x, o2y = _roll1(ox), _roll1(oy)
-    dx, dy = o2x - ox, o2y - oy
-    L2 = dx * dx + dy * dy
-    L2s = np.where(L2 == 0.0, 1.0, L2)
-    for k in order[:min(12, n)]:
-        if elen[k] == 0.0:
-            continue
-        mx = rx[k] + ex[k] / 2.0
-        my = ry[k] + ey[k] / 2.0
-        nx, ny = ey[k] / elen[k], -ex[k] / elen[k]
-        for eps in (elen[k] * 1e-6, elen[k] * 1e-3):
-            for s in (1.0, -1.0):
-                qx, qy = mx + s * eps * nx, my + s * eps * ny
-                par, bnd = _parity_and_boundary(
-                    np.asarray([qx]), np.asarray([qy]),
-                    rx, ry, _roll1(rx), _roll1(ry))
-                if not par[0] or bnd[0]:
-                    continue  # wrong side / still on own boundary
-                t = np.clip(((qx - ox) * dx + (qy - oy) * dy) / L2s,
-                            0.0, 1.0)
-                d2 = (qx - (ox + t * dx)) ** 2 + (qy - (oy + t * dy)) ** 2
-                if float(d2.min()) <= (eps * 0.5) ** 2:
-                    continue  # hugs the other boundary — inconclusive
-                par_o, _ = _parity_and_boundary(
-                    np.asarray([qx]), np.asarray([qy]),
-                    ox, oy, o2x, o2y)
-                return bool(par_o[0])
-    par_o, _ = _parity_and_boundary(
-        np.asarray([rx[0]]), np.asarray([ry[0]]), ox, oy, o2x, o2y)
-    return bool(par_o[0])
 
 
 def polygon_area_evenodd(xs, ys, ring_offsets=None) -> float:
     """Planar even-odd area (deg^2) of a (multi)polygon — shells minus
-    holes, orientation-insensitive."""
-    rings = _rings(xs, ys, ring_offsets)
-    total = 0.0
-    for (rx, ry), sgn in zip(rings, _ring_signs(rings)):
-        total += sgn * 0.5 * float(
-            np.sum(rx * _roll1(ry) - _roll1(rx) * ry))
-    return total
+    holes, orientation-insensitive: the one-row call of
+    `polygon_areas_evenodd`."""
+    return float(polygon_areas_evenodd(*one_polygon(xs, ys,
+                                                    ring_offsets))[0])
 
 
 def polygon_areas_evenodd(xs, ys, ring_offsets) -> np.ndarray:
-    """polygon_area_evenodd of every row of three ragged columns (the
-    layout `pip.polygon_edges` reads). A one-ring row is its ring's
-    |Green's sum| / 2, one np.sum per ring; a row of several rings
-    takes the per-ring-pair containment probe of `_ring_signs`."""
-    rows = np.arange(len(xs.valid))
-    r = shape_rings(xs, ys, ring_offsets, rows)
-    nring = np.diff(r.first)
-    out = np.zeros(len(rows))
-    one = np.flatnonzero(nring == 1)
-    ring = r.first[one]
-    n = r.size[ring]
+    """Planar even-odd area (deg^2) of every row of three ragged
+    columns (the layout `pip.polygon_edges` reads): per ring the Green's
+    sum, one np.sum, signed so that a ring at even nesting depth
+    (`pip.ring_nesting`, one call for the batch) adds and one at odd
+    depth subtracts, whatever its stored orientation."""
+    from .pip import ring_nesting
+    r = shape_rings(xs, ys, ring_offsets, np.arange(len(xs.valid)))
+    flip = np.where(ring_nesting(r)[0] % 2 == 1, -1.0, 1.0).tolist()
+    n = r.size
     vb = _offsets(n)
-    k = np.arange(vb[-1]) - np.repeat(vb[:-1], n)
-    nxt = np.where(k + 1 == np.repeat(n, n), 0, k + 1)
-    gx, gy = np.repeat(r.sx[ring], n), np.repeat(r.sy[ring], n)
+    ring = _group_of(vb)
+    k = np.arange(vb[-1]) - vb[:-1][ring]
+    nxt = np.where(k + 1 == n[ring], 0, k + 1)
+    gx, gy = r.sx[ring], r.sy[ring]
     term = (r.x[gx + k] * r.y[gy + nxt]) - (r.x[gx + nxt] * r.y[gy + k])
     b = vb.tolist()
-    for q, row in enumerate(one.tolist()):
-        s = np.sum(term[b[q]:b[q + 1]])
-        out[row] = 0.0 + (1.0 if s >= 0.0 else -1.0) * 0.5 * float(s)
-    for row in np.flatnonzero(nring > 1).tolist():
-        out[row] = polygon_area_evenodd(*(
-            c.values[c.offsets[row]:c.offsets[row + 1]] if c.valid[row]
-            else None for c in (xs, ys, ring_offsets)))
-    return out
+    out = [0.0] * len(xs.valid)
+    for q, row in enumerate(_group_of(r.first).tolist()):
+        s = np.add.reduce(term[b[q]:b[q + 1]])
+        sgn = flip[q] * (1.0 if s >= 0.0 else -1.0)
+        out[row] += sgn * 0.5 * float(s)
+    return np.array(out)
 
 
 def intersection_area(axs, ays, aro, bxs, bys, bro) -> float:

@@ -36,8 +36,9 @@ from typing import NamedTuple
 
 import numpy as np
 
-from .booleans import (Lists, one_polygon, pair_vertices, relate_pairs,
-                       row_boxes, ring_spans, shape_rings)
+from .booleans import (Rings, _group_of, _offsets,
+                       one_polygon, pair_vertices, relate_pairs, row_boxes,
+                       ring_spans, shape_rings)
 from .relation import CONTAINS, DISJOINT, WITHIN
 
 
@@ -101,15 +102,22 @@ def _probe_edges(px, py, ax, ay, bx, by):
 
 def points_in_polygons(px, py, poly, edges: Edges) -> np.ndarray:
     """Point k against polygon `poly[k]` of an edge table, even-odd over
-    all its rings, any ring boundary counting as inside.
+    all its rings, any ring boundary counting as inside. A polygon with
+    no edges covers nothing."""
+    parity, boundary = _parity_boundary(px, py, poly, edges)
+    return parity | boundary
+
+
+def _parity_boundary(px, py, poly, edges: Edges):
+    """(crossing parity, on boundary) of point k against polygon
+    `poly[k]` of an edge table.
 
     An edge can only cross or touch the points whose y lies in its own
     y-range. Sorting the points by (polygon, y) puts those points of
     each edge's polygon in one contiguous run, found by binary search,
     so the kernel probes only these (point, edge) pairs, all of them
     in a few vectorized passes. Its float operations are those of the
-    per-edge loop it replaced, so answers are bit-identical. A polygon
-    with no edges covers nothing."""
+    per-edge loop it replaced, so answers are bit-identical."""
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     poly = np.asarray(poly, dtype=np.int64)
@@ -160,9 +168,11 @@ def points_in_polygons(px, py, poly, edges: Edges) -> np.ndarray:
         crossings += np.bincount(pt[crosses], minlength=n)
         boundary[pt[on]] = True
         s = t
-    out = np.empty(n, dtype=bool)
-    out[order] = (crossings & 1).astype(bool) | boundary
-    return out
+    parity = np.empty(n, dtype=bool)
+    parity[order] = (crossings & 1).astype(bool)
+    on = np.empty(n, dtype=bool)
+    on[order] = boundary
+    return parity, on
 
 
 def _distinct_rows(lists, rows):
@@ -238,17 +248,171 @@ def points_in_row_polygons(px, py, xs, ys, ring_offsets, rows) -> np.ndarray:
     return out
 
 
-def ring_edges(rings) -> Edges:
-    """Edge table holding each (xs, ys) ring of `rings` as its own
-    polygon: polygon i is ring i."""
-    xs = [np.asarray(x, dtype=np.float64) for x, _ in rings]
-    ys = [np.asarray(y, dtype=np.float64) for _, y in rings]
-    off = np.r_[0, np.cumsum([len(x) for x in xs])]
-    valid = np.ones(len(rings), dtype=bool)
-    one_ring = Lists(np.zeros(0, dtype=np.int64),
-                     np.zeros(len(rings) + 1, dtype=np.int64), ~valid)
-    return polygon_edges(Lists(np.concatenate(xs), off, valid),
-                         Lists(np.concatenate(ys), off, valid), one_ring)
+# ring pairs per candidate pass of `ring_nesting`: bounds the pass's
+# memory when one set holds many rings
+_RING_PAIRS_PER_PASS = 1 << 20
+# edges probed per ring; each gives a probe per (offset, side)
+_PROBE_EDGES = 12
+_PROBE_EPS = np.array([1e-6, 1e-6, 1e-3, 1e-3])
+_PROBE_SIDE = np.array([1.0, -1.0, 1.0, -1.0])
+
+
+def ring_nesting(rings: Rings):
+    """(depth, parent) of every ring of a batch of ring sets, each set
+    nested on its own: depth[i] counts the rings of i's set that
+    contain ring i; parent[i] is the first of those (in ring order) at
+    depth depth[i] - 1, or -1. Even depth is a shell, odd a hole: the
+    reference's reading of a flat ring list
+    (NtsWKTReaderShapeParser.cs:30-37).
+
+    The rings of a set must not properly cross; they may touch at
+    nodes (figure-eights) and share seam arcs, as the overlay's output
+    rings do. Ring R lies in ring O when
+    - |area R| < |area O| (of two rings that do not cross, the
+      container is the larger; a smaller O nested in R can cover the
+      probes along R's boundary), and R's bbox lies in O's;
+    - the first trusted probe of R lands in O by crossing parity. The
+      probes sit beside the midpoints of the (up to) 12 longest edges
+      of R, longest first, at 1e-6 then 1e-3 of the edge's length,
+      right side first. A probe is trusted when it lies strictly
+      inside R and clears O's edges by half its offset. Without a
+      trusted probe, R's first vertex decides.
+
+    A ring without vertices and every ring of a one-ring set get depth
+    0 without a probe. The point tests are one `_parity_boundary` pass
+    per round over every pair of the batch; a round tries both sides
+    of one (edge, offset) of R, and only the pairs whose probes all
+    failed go on to the next."""
+    depth = np.zeros(len(rings.size), dtype=np.int64)
+    parent = np.full(len(rings.size), -1, dtype=np.int64)
+    nring = np.diff(rings.first)
+    sel = np.flatnonzero(np.repeat(nring > 1, nring) & (rings.size > 0))
+    if len(sel) < 2:
+        return depth, parent
+    # edge k of ring i runs from its vertex k to vertex k + 1 (the last
+    # back to vertex 0); polygon i of the edge table is ring sel[i]
+    n = rings.size[sel]
+    vb = _offsets(n)
+    ring = _group_of(vb)
+    k = np.arange(vb[-1]) - vb[:-1][ring]
+    nxt = np.where(k + 1 == n[ring], 0, k + 1)
+    gx, gy = rings.sx[sel][ring], rings.sy[sel][ring]
+    ax, ay = rings.x[gx + k], rings.y[gy + k]
+    bx, by = rings.x[gx + nxt], rings.y[gy + nxt]
+    edges = Edges(ax, ay, bx, by, vb)
+    term = ax * by - bx * ay
+    b = vb.tolist()
+    area = np.array([abs(float(np.add.reduce(term[s:t])))
+                     for s, t in zip(b[:-1], b[1:])])
+    lo = np.minimum.reduceat(np.stack((ax, ay)), vb[:-1], axis=1)
+    hi = np.maximum.reduceat(np.stack((ax, ay)), vb[:-1], axis=1)
+    ri, ro = _nesting_candidates(_group_of(rings.first)[sel], area, lo, hi)
+    if not len(ri):
+        return depth, parent
+    # the probes of every ring that may lie in another, in trial order:
+    # ring after ring, four per edge
+    ex, ey = bx - ax, by - ay
+    elen = np.hypot(ex, ey)
+    cand = np.zeros(len(sel), dtype=bool)
+    cand[ri] = True
+    e = np.flatnonzero(cand[ring])
+    e = e[np.lexsort((-elen[e], ring[e]))]
+    rank = np.arange(len(e)) - np.searchsorted(ring[e], ring[e])
+    e = e[(rank < _PROBE_EDGES) & (elen[e] != 0.0)]
+    eps = elen[e][:, None] * _PROBE_EPS
+    qx = ((ax[e] + ex[e] / 2.0)[:, None]
+          + _PROBE_SIDE * eps * (ey[e] / elen[e])[:, None]).ravel()
+    qy = ((ay[e] + ey[e] / 2.0)[:, None]
+          + _PROBE_SIDE * eps * (-ex[e] / elen[e])[:, None]).ravel()
+    eps, qring = eps.ravel(), np.repeat(ring[e], 4)
+    qfirst = np.searchsorted(qring, np.arange(len(sel) + 1))
+    # each round: every live pair tries both sides of its next (edge,
+    # offset), in R and in O in one parity pass, and takes the first
+    # probe that lies strictly inside R and clears O's edges by eps / 2.
+    # The first round also tests R's first vertex in O, the answer of
+    # a pair whose probes all fail.
+    inside = np.zeros(len(ri), dtype=bool)
+    at = qfirst[ri]
+    live = np.flatnonzero(at < qfirst[ri + 1])
+    fall = np.arange(len(ri))
+    while len(live) or len(fall):
+        q = (at[live][:, None] + [0, 1]).ravel()
+        o = np.repeat(ro[live], 2)
+        m = len(q)
+        par, on = _parity_boundary(
+            np.concatenate((qx[q], qx[q], ax[vb[ri[fall]]])),
+            np.concatenate((qy[q], qy[q], ay[vb[ri[fall]]])),
+            np.concatenate((qring[q], o, ro[fall])), edges)
+        inside[fall] = par[2 * m:]
+        fall = fall[:0]
+        clear = _edge_dist2(qx[q], qy[q], o, edges) > (eps[q] * 0.5) ** 2
+        good = (par[:m] & ~on[:m] & clear).reshape(-1, 2)
+        done = good.any(axis=1)
+        pick = np.argmax(good[done], axis=1)
+        inside[live[done]] = par[m:2 * m].reshape(-1, 2)[done, pick]
+        live = live[~done]
+        at[live] += 2
+        live = live[at[live] < qfirst[ri[live] + 1]]
+    ri, ro = ri[inside], ro[inside]
+    d = np.bincount(ri, minlength=len(sel))
+    up = d[ro] == d[ri] - 1
+    first = np.full(len(sel), len(sel))
+    np.minimum.at(first, ri[up], ro[up])
+    depth[sel] = d
+    has = first < len(sel)
+    parent[sel[has]] = sel[first[has]]
+    return depth, parent
+
+
+def _passes(counts, limit):
+    """Bounds cutting consecutive groups of `counts` items into passes
+    of at most about `limit` items (a larger group is a pass alone)."""
+    ends = np.cumsum(counts)
+    if ends[-1] <= limit:
+        return [0, len(counts)]
+    return np.unique(np.concatenate(([0, len(counts)], np.searchsorted(
+        ends, np.arange(limit, ends[-1], limit), side="right")))).tolist()
+
+
+def _nesting_candidates(set_of, area, lo, hi):
+    """(ri, ro): the ordered ring pairs of one set (`set_of`, ascending,
+    gives each ring's set) where ring ri has the smaller area and its
+    bbox (`lo`, `hi`: rows x, y) lies in ring ro's; ri ascending."""
+    start = np.searchsorted(set_of, set_of)
+    cnt = np.searchsorted(set_of, set_of, side="right") - start
+    bounds = _passes(cnt, _RING_PAIRS_PER_PASS)
+    out_i, out_o = [], []
+    for s, t in zip(bounds[:-1], bounds[1:]):
+        c = cnt[s:t]
+        i = np.repeat(np.arange(s, t), c)
+        o = np.repeat(start[s:t] - _offsets(c)[:-1], c) + np.arange(c.sum())
+        keep = ((area[i] < area[o]) & (lo[:, i] >= lo[:, o]).all(axis=0)
+                & (hi[:, i] <= hi[:, o]).all(axis=0))
+        out_i.append(i[keep])
+        out_o.append(o[keep])
+    return np.concatenate(out_i), np.concatenate(out_o)
+
+
+def _edge_dist2(px, py, poly, edges: Edges) -> np.ndarray:
+    """Squared distance from point k to the nearest edge of polygon
+    `poly[k]` (of at least one edge), in passes of ~`_PAIRS_PER_PASS`
+    (point, edge) pairs."""
+    cnt = np.diff(edges.offsets)[poly]
+    out = np.empty(len(px))
+    bounds = _passes(cnt, _PAIRS_PER_PASS) if len(px) else [0]
+    for s, t in zip(bounds[:-1], bounds[1:]):
+        c = cnt[s:t]
+        e = (np.repeat(edges.offsets[poly[s:t]] - _offsets(c)[:-1], c)
+             + np.arange(c.sum()))
+        x, y = np.repeat(px[s:t], c), np.repeat(py[s:t], c)
+        ax, ay = edges.ax[e], edges.ay[e]
+        dx, dy = edges.bx[e] - ax, edges.by[e] - ay
+        L2 = dx * dx + dy * dy
+        L2s = np.where(L2 == 0.0, 1.0, L2)
+        f = np.clip(((x - ax) * dx + (y - ay) * dy) / L2s, 0.0, 1.0)
+        d2 = (x - (ax + f * dx)) ** 2 + (y - (ay + f * dy)) ** 2
+        out[s:t] = np.minimum.reduceat(d2, _offsets(c)[:-1])
+    return out
 
 
 def points_in_polygon(px, py, xs, ys, ring_offsets=None) -> np.ndarray:

@@ -108,8 +108,3 @@ def relate_rect_rect(minx, maxx, miny, maxy, ext_minx, ext_maxx, ext_miny, ext_m
     return out
 
 
-def rect_bbox_intersects(minx, maxx, miny, maxy, ext_minx, ext_maxx, ext_miny, ext_maxy,
-                         geo: bool = True):
-    """Cheap boolean bbox-overlap gate (not DISJOINT)."""
-    return relate_rect_rect(minx, maxx, miny, maxy,
-                            ext_minx, ext_maxx, ext_miny, ext_maxy, geo=geo) != DISJOINT

@@ -35,7 +35,7 @@ from typing import Optional
 
 import numpy as np
 
-from .circle_box import geo_circle_bbox
+from .circle_box import cartesian_circle_bbox, geo_circle_bbox
 from .normalize import norm_lon_deg
 
 KIND_EMPTY = 0
@@ -181,7 +181,8 @@ def _mk_circle(x, y, radius, geo=True) -> dict:
     if geo:
         bminx, bmaxx, bminy, bmaxy = (float(a[0]) for a in geo_circle_bbox(x, y, radius))
     else:
-        bminx, bmaxx, bminy, bmaxy = x - radius, x + radius, y - radius, y + radius
+        bminx, bmaxx, bminy, bmaxy = (
+            float(a) for a in cartesian_circle_bbox(x, y, radius))
     d.update(x=float(x), y=float(y), radius=float(radius),
              minx=bminx, maxx=bmaxx, miny=bminy, maxy=bmaxy)
     return d
@@ -1204,7 +1205,7 @@ def _buffer_point_fast(strs, rows, out, geo=True, snap=None):
         r = np.minimum(r, 180.0)
         minx, maxx, miny, maxy = geo_circle_bbox(x, y, r)
     else:
-        minx, maxx, miny, maxy = x - r, x + r, y - r, y + r
+        minx, maxx, miny, maxy = cartesian_circle_bbox(x, y, r)
     out.put(rows[ok], KIND_CIRCLE, x=x, y=y, radius=r,
             minx=minx, maxx=maxx, miny=miny, maxy=maxy)
     return ok

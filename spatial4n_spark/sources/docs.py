@@ -75,17 +75,6 @@ def generate_docs(spark: SparkSession, n_docs: int, n_partitions: int | None = N
     )
 
 
-def write_docs(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write the docs table. Parquet dir layout (Iceberg-shaped: swap the
-    writer for `df.writeTo(table)` on a cluster with an Iceberg catalog;
-    nothing else changes)."""
-    df.write.mode(mode).parquet(path)
-
-
-def read_docs(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 GEO_WKT_RE = ("^ *(POINT|ENVELOPE|BUFFER|POLYGON|MULTIPOLYGON|"
               "LINESTRING|MULTILINESTRING|MULTIPOINT|GEOMETRYCOLLECTION)")
 

@@ -148,3 +148,30 @@ def test_wkt_writer_collection_row_writes_null():
     wkt = SF.make_st_to_wkt().func(shapes).to_pylist()
     assert wkt[:2] == ["POINT (1 2)", None]
     assert wkt[2].startswith("MULTIPOLYGON")
+
+
+def test_writers_nest_a_hole_touching_its_shell_at_its_first_vertex():
+    """A hole whose first vertex lies on its shell's boundary is still
+    that shell's hole in both writers: two members, the first holed,
+    and the re-parsed row keeps the hole's area out (100 - 10 + 1)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from spatial4n_spark import functions as SF
+    from spatial4n_spark.kernels.overlay import polygon_area_evenodd
+    shapes = SF._st_from_wkt_default.func(pa.array([
+        "MULTIPOLYGON(((0 0,10 0,10 10,0 10,0 0),(10 5,5 3,5 7,10 5)),"
+        "((20 20,21 20,21 21,20 21,20 20)))"]))
+    wkt = SF.make_st_to_wkt().func(shapes)
+    assert wkt.to_pylist() == [
+        "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0),"
+        " (10 5, 5 3, 5 7, 10 5)), ((20 20, 21 20, 21 21, 20 21, 20 20)))"]
+    blob = SF.st_to_binary.func(shapes).to_pylist()[0]
+    assert struct.unpack_from("<I", blob, 6)[0] == 2      # two parts
+    assert struct.unpack_from("<I", blob, 15)[0] == 2     # shell + hole
+    for back in (SF._st_from_wkt_default.func(wkt),
+                 SF.st_from_binary.func(pa.array([blob]))):
+        rec = back.to_pylist()[0]
+        assert rec["kind"] == 8 and rec["error"] is None
+        assert polygon_area_evenodd(np.array(rec["xs"]), np.array(rec["ys"]),
+                                    rec["ring_offsets"]) == 91.0

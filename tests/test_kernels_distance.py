@@ -177,3 +177,29 @@ def test_haversine_clamp_keeps_values_bit_identical():
     got = dist.geo_distance_deg(x1, y1, x2, y2, "haversine")[ok]
     assert ok[:3].all() and ok.sum() > 9_990
     assert np.array_equal(got, want)
+
+
+def test_st_dwithin_is_reference_within(spark):
+    """AbstractDistanceCalculator.Within (AbstractDistanceCalculator.cs
+    :30-33): Distance(from, to) <= distance, the bound inclusive. A row
+    whose bound is its own distance is within; the bound times 1 - 1e-9
+    is not; every row agrees with the NumPy kernel's distance."""
+    from pyspark.sql import functions as F
+
+    from spatial4n_spark.functions import st_distance_deg, st_dwithin
+
+    rows = [(0.0, 0.0, 3.0, 4.0, 5.0), (10.0, 20.0, -170.0, -20.0, 90.0),
+            (-179.5, 10.0, 179.5, 10.0, 1.0), (5.0, 5.0, 5.0, 5.0, 0.0),
+            (30.0, 60.0, 31.0, 60.5, 0.3)]
+    df = spark.createDataFrame(rows, ["x1", "y1", "x2", "y2", "d"])
+    pts = [F.col(c) for c in ("x1", "y1", "x2", "y2")]
+    own = st_distance_deg(*pts)
+    got = df.select(st_dwithin(*pts, F.col("d")).alias("w"),
+                    st_dwithin(*pts, own).alias("at"),
+                    st_dwithin(*pts, own * (1 - 1e-9)).alias("below"),
+                    own.alias("dist")).collect()
+    x1, y1, x2, y2, d = (np.array(c) for c in zip(*rows))
+    want = dist.geo_distance_deg(x1, y1, x2, y2) <= d
+    assert [r["w"] for r in got] == want.tolist()
+    assert all(r["at"] for r in got)
+    assert [r["below"] for r in got] == [r["dist"] == 0.0 for r in got]

@@ -95,3 +95,29 @@ def test_circle_circle_relate():
     assert int(relate_circle_circle(0, 0, 3, 0, 0, 10, geo=True)) == R.WITHIN
     assert int(relate_circle_circle(0, 0, 3, 50, 0, 3, geo=True)) == R.DISJOINT
     assert int(relate_circle_circle(0, 0, 5, 8, 0, 5, geo=True)) == R.INTERSECTS
+
+
+def test_cartesian_circle_bbox_reference():
+    """CartesianDistCalc.CalcBoxByDistFromPt (CartesianDistCalc.cs
+    :93-108): the box is (x - d, x + d, y - d, y + d), vectorized, and
+    is the bbox a planar BUFFER(POINT) carries through both parse
+    paths."""
+    import pyarrow as pa
+
+    from spatial4n_spark.kernels.circle_box import cartesian_circle_bbox
+    from spatial4n_spark.kernels.wkt import parse_shape, parse_wkt_columns
+
+    x = np.array([0.0, 107.0, -50.5, 1e-3])
+    y = np.array([0.0, -81.0, 20.25, 2e-3])
+    d = np.array([1.0, 147.0, 0.0, 0.1])
+    got = cartesian_circle_bbox(x, y, d)
+    for g, w in zip(got, (x - d, x + d, y - d, y + d)):
+        assert (g == w).all()
+    texts = [f"BUFFER(POINT({a} {b}), {r})" for a, b, r in zip(x, y, d)]
+    cols = parse_wkt_columns(pa.array(texts), geo=False)
+    for i, t in enumerate(texts):
+        rec = parse_shape(t, geo=False)
+        want = tuple(float(v[i]) for v in got)
+        assert (rec["minx"], rec["maxx"], rec["miny"], rec["maxy"]) == want
+        assert tuple(float(cols[f][i]) for f in
+                     ("minx", "maxx", "miny", "maxy")) == want

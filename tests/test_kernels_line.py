@@ -62,3 +62,29 @@ def test_linestring_multiseg():
     py = np.array([0.5, 5.0, 20.0])
     got = linestring_contains_point(xs, ys, 1.0, px, py)
     assert got.tolist() == [True, True, False]
+
+
+def test_expand_buf_for_longitude_skew_reference():
+    """BufferedLine.ExpandBufForLongitudeSkew (BufferedLine.cs:170-182):
+    CalcLonDegreesAtLat(max(|A.Y|, |B.Y|), buf), never below buf. That
+    is the longitude reached by walking `buf` degrees due east from the
+    higher-latitude end, which geo_point_on_bearing_deg checks
+    independently."""
+    from spatial4n_spark.kernels.bearing import geo_point_on_bearing_deg
+    from spatial4n_spark.kernels.relate_line import \
+        expand_buf_for_longitude_skew
+
+    ay = np.array([0.0, 10.0, -60.0, 45.0, 80.0, -30.0])
+    by = np.array([0.0, -20.0, 30.0, 45.0, 10.0, 30.0])
+    buf = np.array([1.0, 0.5, 2.0, 3.0, 0.25, 5.0])
+    got = expand_buf_for_longitude_skew(ay, by, buf)
+    assert got[0] == buf[0]                                  # equator
+    assert (got >= buf).all()
+    assert (got == expand_buf_for_longitude_skew(by, ay, buf)).all()
+    assert (got == expand_buf_for_longitude_skew(-ay, by, buf)).all()
+    lat = np.maximum(np.abs(ay), np.abs(by))
+    east_x, _ = geo_point_on_bearing_deg(np.zeros(6), lat, buf,
+                                         np.full(6, 90.0))
+    assert got == pytest.approx(east_x, rel=1e-12, abs=1e-12)
+    # at 60 degrees a degree of longitude is half as long: ~2x the buffer
+    assert float(got[2]) == pytest.approx(4.0, rel=2e-3)

@@ -268,3 +268,233 @@ def test_relate_shape_point_on_distinct_polygons_from_parquet(spark,
                        cols["ys"][row.id], cols["ring_offsets"][row.id])[0]
         assert row.rel == (R.CONTAINS if want else R.DISJOINT), row
     assert {row.rel for row in got} == {R.CONTAINS, R.DISJOINT}
+
+
+# --- ring nesting -----------------------------------------------------------
+#
+# `pip.ring_nesting` against the pairwise containment probe it replaced
+# (one Python call per ordered ring pair), kept here as the oracle.
+
+
+def _oracle_contained_in(rx, ry, ox, oy) -> bool:
+    """Ring (rx, ry) lies inside ring (ox, oy): the area gate, then the
+    first probe beside one of R's 12 longest edges that lies strictly
+    inside R and clears O's edges by half its offset, else R's first
+    vertex."""
+    roll = lambda a: np.roll(a, -1)  # noqa: E731
+    a_r = abs(float(np.sum(rx * roll(ry) - roll(rx) * ry)))
+    a_o = abs(float(np.sum(ox * roll(oy) - roll(ox) * oy)))
+    if a_r >= a_o:
+        return False
+    ex, ey = roll(rx) - rx, roll(ry) - ry
+    elen = np.hypot(ex, ey)
+    dx, dy = roll(ox) - ox, roll(oy) - oy
+    L2 = dx * dx + dy * dy
+    L2s = np.where(L2 == 0.0, 1.0, L2)
+    for k in np.argsort(-elen)[:min(12, len(rx))]:
+        if elen[k] == 0.0:
+            continue
+        mx, my = rx[k] + ex[k] / 2.0, ry[k] + ey[k] / 2.0
+        nx, ny = ey[k] / elen[k], -ex[k] / elen[k]
+        for eps in (elen[k] * 1e-6, elen[k] * 1e-3):
+            for s in (1.0, -1.0):
+                qx, qy = mx + s * eps * nx, my + s * eps * ny
+                par, bnd = _oracle_ring(np.array([qx]), np.array([qy]),
+                                        rx, ry)
+                if not par[0] or bnd[0]:
+                    continue
+                t = np.clip(((qx - ox) * dx + (qy - oy) * dy) / L2s,
+                            0.0, 1.0)
+                d2 = (qx - (ox + t * dx)) ** 2 + (qy - (oy + t * dy)) ** 2
+                if float(d2.min()) <= (eps * 0.5) ** 2:
+                    continue
+                return bool(_oracle_ring(np.array([qx]), np.array([qy]),
+                                         ox, oy)[0][0])
+    return bool(_oracle_ring(rx[:1], ry[:1], ox, oy)[0][0])
+
+
+def _oracle_nesting(rings):
+    n = len(rings)
+    inside = [[i != j and _oracle_contained_in(*rings[i], *rings[j])
+               for j in range(n)] for i in range(n)]
+    depth = [sum(row) for row in inside]
+    parent = [next((j for j in range(n)
+                    if inside[i][j] and depth[j] == depth[i] - 1), -1)
+              for i in range(n)]
+    return depth, parent
+
+
+def _square(x0, y0, w, closed=False):
+    xs, ys = [x0, x0 + w, x0 + w, x0], [y0, y0, y0 + w, y0 + w]
+    if closed:
+        xs, ys = xs + xs[:1], ys + ys[:1]
+    return np.array(xs, dtype=float), np.array(ys, dtype=float)
+
+
+def _nesting_cases():
+    """Ring lists of every class the kernel must read like the oracle."""
+    sq = _square
+    tri = lambda pts: tuple(np.array(c, dtype=float)  # noqa: E731
+                            for c in zip(*pts))
+    return {
+        # nested three deep, beside a sibling island and its hole
+        "three_deep": [sq(0, 0, 20), sq(2, 2, 14), sq(4, 4, 10),
+                       sq(6, 6, 6), sq(8, 8, 2), sq(30, 0, 5), sq(31, 1, 2)],
+        # figure-eights: rings touching at one node
+        "figure_eight": [sq(0, 0, 2), sq(2, 2, 2)],
+        "holes_touching": [sq(0, 0, 10), sq(2, 2, 3), sq(5, 5, 3)],
+        "hole_touches_shell": [sq(0, 0, 10),
+                               tri([(10, 5), (5, 3), (5, 7)])],
+        "hole_touches_at_second": [sq(0, 0, 10),
+                                   tri([(5, 3), (10, 5), (5, 7)])],
+        # seam-hugging siblings: holes and islands sharing edges
+        "seam_holes": [sq(0, 0, 10), sq(2, 2, 3), sq(5, 2, 3)],
+        "seam_shells": [sq(0, 0, 3), sq(3, 0, 3), sq(0, 3, 6)],
+        "hole_on_shell_edge": [sq(0, 0, 10), sq(0, 2, 3)],
+        "island_in_hole_seam": [sq(0, 0, 10), sq(2, 2, 6), sq(2, 2, 3)],
+        # duplicate rings: as is, rotated, reversed, closed
+        "duplicate": [sq(0, 0, 4), sq(0, 0, 4)],
+        "duplicate_rotated": [sq(0, 0, 4), tuple(np.roll(c, 1)
+                                                 for c in sq(0, 0, 4))],
+        "duplicate_reversed": [sq(0, 0, 4), tuple(c[::-1]
+                                                  for c in sq(0, 0, 4))],
+        "closed_rings": [sq(0, 0, 10, True), sq(1, 1, 2, True),
+                         sq(4, 4, 2, True)],
+        "zero_area": [sq(0, 0, 10), tri([(1, 1), (3, 3), (5, 5)])],
+        "one_ring": [sq(0, 0, 1)],
+        "empty": [],
+    }
+
+
+def _multipolygon_cases():
+    from spatial4n_spark.kernels.centroid import record_rings
+    from spatial4n_spark.kernels.wkt import parse_shape
+    texts = [
+        "MULTIPOLYGON(((0 0,10 0,10 10,0 10,0 0),(10 5,5 3,5 7,10 5)),"
+        "((20 20,21 20,21 21,20 21,20 20)))",
+        "MULTIPOLYGON(((0 0,10 0,10 10,0 10,0 0),(2 2,8 2,8 8,2 8,2 2)),"
+        "((4 4,6 4,6 6,4 6,4 4)),((20 0,30 0,30 10,20 10,20 0)))",
+        "MULTIPOLYGON(((0 0,4 0,4 4,0 4,0 0),(1 1,1 3,3 3,3 1,1 1)),"
+        "((4 4,8 4,8 8,4 8,4 4)))",
+    ]
+    return [record_rings(r["xs"], r["ys"], r["ring_offsets"])
+            for r in map(parse_shape, texts)]
+
+
+def _overlay_outputs():
+    """Boolean and union outputs of the overlay fuzz (a slice of its
+    star pairs and union cases at each scale) and the dissolve groups of
+    test_dissolve, as the overlay kernel hands them to the nesting."""
+    from test_overlay_fuzz import _pairs, _union_cases
+
+    from spatial4n_spark.kernels.booleans import robust_boolean, union_members
+    out = []
+    for scale in (1.0, 0.1, 1e-3):
+        for a, b in _pairs(int(scale * 1000) + 5, scale)[:40]:
+            out += [robust_boolean([a], [b], op)
+                    for op in ("and", "or", "sub", "xor")]
+        out += [union_members(m)
+                for m in _union_cases(int(scale * 1000) + 11, scale)[:25]]
+    sq = _square
+    rng = np.random.default_rng(9)
+    groups = [
+        [sq(0, 0, 2), sq(1, 1, 2)], [sq(10, 10, 4), sq(11, 11, 1)],
+        [sq(20, 0, 1), sq(25, 0, 2)],
+        [sq(0, 0, 4), sq(3, 1, 4), sq(2, 3, 3), sq(9, 9, 2)],
+        [sq(0, 0, 2), sq(1, 0, 2)], [sq(0, 0, 2), sq(2, 0, 2)],
+        [sq(i, j, 1) for i in range(3) for j in range(3)],
+        [sq(i, j, 1) for i in range(3) for j in range(3) if (i, j) != (1, 1)],
+        [sq(*np.round(rng.uniform(-20, 20, 2), 3),
+            round(rng.uniform(1, 10), 3)) for _ in range(12)],
+    ]
+    out += [union_members([[r] for r in g]) for g in groups]
+    assert all(r is not None for r in out)
+    return [r for r in out if len(r) > 1]
+
+
+def _ring_corpus():
+    return (list(_nesting_cases().values()) + _multipolygon_cases()
+            + _overlay_outputs())
+
+
+def test_ring_nesting_matches_pairwise_oracle():
+    from spatial4n_spark.kernels.booleans import list_rings
+    from spatial4n_spark.kernels.pip import ring_nesting
+    corpus = _ring_corpus()
+    depth, parent = ring_nesting(list_rings(corpus))
+    base = 0
+    deep = 0
+    for rings in corpus:
+        want_d, want_p = _oracle_nesting(rings)
+        got_d = depth[base:base + len(rings)].tolist()
+        got_p = [p - base if p >= 0 else -1
+                 for p in parent[base:base + len(rings)].tolist()]
+        assert (got_d, got_p) == (want_d, want_p), rings
+        # each list alone reads as inside the batch
+        one_d, one_p = ring_nesting(list_rings([rings]))
+        assert (one_d.tolist(), one_p.tolist()) == (want_d, want_p)
+        deep = max([deep] + want_d)
+        base += len(rings)
+    assert deep >= 4
+    assert sum(len(r) > 2 for r in corpus) > 20
+
+
+def test_ring_nesting_reads_named_cases():
+    from spatial4n_spark.kernels.booleans import list_rings
+    from spatial4n_spark.kernels.pip import ring_nesting
+    cases = _nesting_cases()
+    want = {"three_deep": ([0, 1, 2, 3, 4, 0, 1], [-1, 0, 1, 2, 3, -1, 5]),
+            "figure_eight": ([0, 0], [-1, -1]),
+            "holes_touching": ([0, 1, 1], [-1, 0, 0]),
+            "hole_touches_shell": ([0, 1], [-1, 0]),
+            "seam_holes": ([0, 1, 1], [-1, 0, 0]),
+            "duplicate": ([0, 0], [-1, -1]),
+            "one_ring": ([0], [-1])}
+    for name, (d, p) in want.items():
+        got = ring_nesting(list_rings([cases[name]]))
+        assert (got[0].tolist(), got[1].tolist()) == (d, p), name
+
+
+def _bits(a):
+    return np.asarray(a, dtype=np.float64).tobytes()
+
+
+def test_evenodd_measures_match_oracle_signs_bit_for_bit():
+    """The own area of the overlay measure, the planar area and the
+    centroid of every corpus row equal, bit for bit, the per-row
+    arithmetic with the signs of the pairwise oracle."""
+    from spatial4n_spark.kernels.area import polygon_area_euclid
+    from spatial4n_spark.kernels.centroid import _centroid, polygon_centroids
+    from spatial4n_spark.kernels.overlay import (polygon_area_evenodd,
+                                                 polygon_areas_evenodd)
+    roll = lambda a: np.roll(a, -1)  # noqa: E731
+    corpus = [r for r in _ring_corpus() if r]
+    recs = []
+    for rings in corpus:
+        closed = [(np.r_[x, x[:1]], np.r_[y, y[:1]]) for x, y in rings]
+        for form in (rings, closed):
+            xs = np.concatenate([x for x, _ in form])
+            ys = np.concatenate([y for _, y in form])
+            recs.append((xs, ys, np.cumsum([0] + [len(x) for x, _ in form])))
+    areas = polygon_areas_evenodd(*_lists(recs))
+    centroids = polygon_centroids(*zip(*recs))
+    for (xs, ys, ro), area, centroid in zip(recs, areas, centroids):
+        stored = [(xs[a:b], ys[a:b]) for a, b in zip(ro[:-1], ro[1:])]
+        opened = [(x[:-1], y[:-1]) if x[0] == x[-1] and y[0] == y[-1]
+                  else (x, y) for x, y in stored]
+        # own area: open rings, stored orientation times depth sign
+        total = 0.0
+        for (rx, ry), d in zip(opened, _oracle_nesting(opened)[0]):
+            s = np.sum(rx * roll(ry) - roll(rx) * ry)
+            sgn = (1.0 if d % 2 == 0 else -1.0) * (1.0 if s >= 0.0 else -1.0)
+            total += sgn * 0.5 * float(s)
+        assert _bits(area) == _bits(total)
+        assert _bits(polygon_area_evenodd(xs, ys, ro)) == _bits(total)
+        # planar area and centroid: rings as stored, |area| times sign
+        signs = np.where(np.array(_oracle_nesting(stored)[0]) % 2 == 1,
+                         -1.0, 1.0)
+        euclid = 0.0
+        for (rx, ry), sg in zip(stored, signs):
+            euclid += sg * abs(0.5 * (rx * roll(ry) - roll(rx) * ry).sum())
+        assert _bits(polygon_area_euclid(xs, ys, ro)) == _bits(euclid)
+        assert _bits(centroid) == _bits(_centroid(xs, ys, stored, signs))
